@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level profiler for the optimization rounds: runs the named registry
   * queries (noop-sink forced, the Bench methodology) with a listener that
@@ -18,16 +17,7 @@ object ProfileQ {
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Main.session()
     val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
     val runMs = new java.util.concurrent.atomic.AtomicLong(0L)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{charCount, cleanThinking, exactAvg, exactStddevPop, exactSum,
   r4, squeezeWhitespace, tokenCount, truncateTokens}
+import graft.Scratch.{drain, withScratch}
 import graft.operators.{CorpusOps, Dedup, Multimodal, Similarity, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -440,19 +441,17 @@ object SparkEntry {
     * fidelity.
     */
   private def s1TextdirScan(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_s1_")
-    try {
+    withScratch("graft_s1_") { out =>
       operators.Sinks.writeSummaryFiles(
         tbl(spark, dir, "documents").filter(col("doc_id") < 200),
         out.toString, idCol = "doc_id", textCol = "text")
       java.nio.file.Files.write(out.resolve("decoy.json"),
         "{\"not\":\"a doc\"}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // materialize distributedly so the scratch dir can be reclaimed
       graft.operators.Materialize(
         CorpusOps.docsFromTextDir(spark, out.toString)
           .select(col("doc_name").cast("long").as("doc_id"), col("text")))
         .orderBy(col("doc_id"))
-    } finally deleteRecursively(out)
+    }
   }
 
   /** S1 (JSONL variant): the dominant training-data interchange format,
@@ -464,15 +463,14 @@ object SparkEntry {
     * lost rows, type drift) breaks the hash.
     */
   private def s1bJsonlScan(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_s1b_")
-    try {
+    withScratch("graft_s1b_") { out =>
       tbl(spark, dir, "documents").filter(col("doc_id") < 200)
         .select(col("doc_id"), col("text"))
         .write.mode("overwrite").json(s"$out/corpus")
       graft.operators.Materialize(
         CorpusOps.docsFromJsonl(spark, s"$out/corpus"))
         .orderBy(col("doc_id"))
-    } finally deleteRecursively(out)
+    }
   }
 
   // ----------------------------------------------------------------- dedup
@@ -904,8 +902,7 @@ object SparkEntry {
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val (cells, cs) = Similarity.buildIvfIndex(emb, 16, 2, trainSampleMod = 4)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_ivf_")
-    try {
+    withScratch("graft_ivf_") { idxDir =>
       Similarity.saveIvfIndex(cells, cs, idxDir.toString)
       val (cells2, cs2) = Similarity.loadIvfIndex(spark, idxDir.toString)
       val fresh = Similarity.ivfSearch(cells, cs, queries, 5, 6)
@@ -920,7 +917,7 @@ object SparkEntry {
         .select(col("has_rows").cast("int").as("has_rows"),
           col("n_diff").cast("long").as("n_diff"),
           col("pass").cast("int").as("pass"))
-    } finally deleteRecursively(idxDir)
+    }
   }
 
   /** SS8: IVF-PQ (IVFADC) approximate top-5 — the two quantizers composed
@@ -2120,34 +2117,17 @@ object SparkEntry {
       .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
       .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
-    val out = java.nio.file.Files.createTempDirectory("graft_sdq_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sdqc_")
-    // sink + checkpoint are per-invocation scratch: materialize the sink
-    // rows (aggregate-scale — quarantined ids + tags) and delete both
-    // trees even on failure (the streamStateGate discipline; bench/verify
-    // loops were leaking a scratch pair per run)
-    try {
-      val q = docs.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (_, bad) = TableQuality.quarantine(batch, rules)
-          bad.select(col("doc_id"), col("failed_rules"))
-            .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
-      // materialize DISTRIBUTED (executor blocks, lineage truncated) so
-      // the scratch dirs can be reclaimed without collecting a
-      // quarantine-scale set to the driver
+    withScratch("graft_sdq_") { root =>
+      val out = s"$root/out"
+      drain(docs, s"$root/ckpt") { (batch, batchId) =>
+        val (_, bad) = TableQuality.quarantine(batch, rules)
+        bad.select(col("doc_id"), col("failed_rules"))
+          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+      }
       graft.operators.Materialize(
-        spark.read.option("basePath", out.toString).parquet(out.toString)
+        spark.read.option("basePath", out).parquet(out)
           .select(col("doc_id").cast("long"), col("failed_rules")))
         .orderBy(col("doc_id"))
-    } finally {
-      deleteRecursively(out)
-      deleteRecursively(ckpt)
     }
   }
 
@@ -2173,21 +2153,14 @@ object SparkEntry {
       .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
       .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
-    val out = java.nio.file.Files.createTempDirectory("graft_sst_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sstc_")
-    try {
-      val q = docs.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          TableQuality.columnSketches(batch, cols)
-            .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
-      val parts = spark.read.option("basePath", out.toString)
-        .parquet(out.toString).drop("batch_id")
+    withScratch("graft_sst_") { root =>
+      val out = s"$root/out"
+      drain(docs, s"$root/ckpt") { (batch, batchId) =>
+        TableQuality.columnSketches(batch, cols)
+          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+      }
+      val parts = spark.read.option("basePath", out)
+        .parquet(out).drop("batch_id")
       val exact = TableQuality
         .tableStats(tbl(spark, dir, "documents"), cols)
         .select(col("column_name"), col("ndv").as("__e_ndv"))
@@ -2215,9 +2188,6 @@ object SparkEntry {
           org.apache.spark.sql.types.StructField("ndv_ok",
             org.apache.spark.sql.types.IntegerType))))
         .orderBy(col("column_name"))
-    } finally {
-      deleteRecursively(out)
-      deleteRecursively(ckpt)
     }
   }
 
@@ -2249,8 +2219,7 @@ object SparkEntry {
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("graft_ssi_")
-    try {
+    withScratch("graft_ssi_") { root =>
       val feed = s"$root/feed"
       docs.repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(feed)
@@ -2260,18 +2229,12 @@ object SparkEntry {
           "*.parquet")
       val snapRoot = s"$root/snap"
       val committed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.streaming.SnapshotIngest
-            .commitBatch(b, id, snapRoot, s"$root/scratch",
-              keyCol = "doc_id", statCols = statCols)
-            .foreach(v => committed.add(v))
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      drain(stream, s"$root/ckpt") { (b, id) =>
+        graft.streaming.SnapshotIngest
+          .commitBatch(b, id, snapRoot, s"$root/scratch",
+            keyCol = "doc_id", statCols = statCols)
+          .foreach(v => committed.add(v))
+      }
       val versions = committed.size
       val cur = Sinks.currentVersion(snapRoot).getOrElse(
         sys.error("stream committed no snapshot version"))
@@ -2317,7 +2280,7 @@ object SparkEntry {
         if (statsOk) 1 else 0))
         .toDF("n_rows", "row_xor", "multi_batch", "exactly_once_replay",
           "pinned_isolated", "stats_current")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S16: per-column table statistics in one aggregate pass — the
@@ -2445,8 +2408,7 @@ object SparkEntry {
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     val (a1, a2) = (aLo + (aHi - aLo) / 4, aLo + (aHi - aLo) / 2)
     val (b1, b2) = (bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
-    val root = java.nio.file.Files.createTempDirectory("graft_s13d_")
-    try {
+    withScratch("graft_s13d_") { root =>
       graft.operators.ZOrder.writeHilbert(li, "l_orderkey", "l_partkey",
         aLo, aHi, bLo, bHi, s"$root/clustered", numFiles = 16)
       li.repartition(16).write.mode("overwrite").parquet(s"$root/plain")
@@ -2484,7 +2446,7 @@ object SparkEntry {
         if (fClustered * 2 <= fPlain) 1 else 0))
         .toDF("n_rows", "key_xor", "rows_identical",
           "clustered_reads_fewer", "clustered_le_half")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S13e: stats-table-driven PRUNED SCAN — the manifest-based skipping
@@ -2512,8 +2474,7 @@ object SparkEntry {
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     val (a1, a2) = (aLo + (aHi - aLo) / 4, aLo + (aHi - aLo) / 2)
     val (b1, b2) = (bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
-    val root = java.nio.file.Files.createTempDirectory("graft_s13e_")
-    try {
+    withScratch("graft_s13e_") { root =>
       graft.operators.ZOrder.writeHilbert(li, "l_orderkey", "l_partkey",
         aLo, aHi, bLo, bHi, s"$root/clustered", numFiles = 16)
       val table = spark.read.parquet(s"$root/clustered")
@@ -2556,7 +2517,7 @@ object SparkEntry {
         if (opened == footerChosen) 1 else 0))
         .toDF("n_rows", "key_xor", "rows_identical", "opened_fewer",
           "stats_match_footers")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S13f: incremental RE-CLUSTER (OPTIMIZE) — the layout maintenance
@@ -2588,8 +2549,7 @@ object SparkEntry {
     val (a1, a2) = (aLo + (aHi - aLo) / 4, aLo + (aHi - aLo) / 2)
     val (b1, b2) = (bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
     val planeArea = (aHi - aLo + 1).toDouble * (bHi - bLo + 1).toDouble
-    val root = java.nio.file.Files.createTempDirectory("graft_s13f_")
-    try {
+    withScratch("graft_s13f_") { root =>
       val base = li.filter(pmod(col("l_orderkey"), lit(4L)) =!= 0L)
       val appendRows = li.filter(pmod(col("l_orderkey"), lit(4L)) === 0L)
       graft.operators.ZOrder.writeHilbert(base, "l_orderkey", "l_partkey",
@@ -2643,7 +2603,7 @@ object SparkEntry {
         if (hitsOptimized < hitsDegraded) 1 else 0))
         .toDF("n_rows", "key_xor", "detected_only_appends",
           "skipping_restored")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S18: snapshot-committed PRUNED READ — the full lakehouse loop in
@@ -2674,8 +2634,7 @@ object SparkEntry {
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     val (a1, a2) = (aLo + (aHi - aLo) / 4, aLo + (aHi - aLo) / 2)
     val (b1, b2) = (bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
-    val root = java.nio.file.Files.createTempDirectory("graft_s18_")
-    try {
+    withScratch("graft_s18_") { root =>
       graft.operators.ZOrder.writeHilbert(li, "l_orderkey", "l_partkey",
         aLo, aHi, bLo, bHi, s"$root/stage_data", numFiles = 16)
       // per-file stats keyed by FILENAME (stable across the commit move;
@@ -2730,7 +2689,7 @@ object SparkEntry {
         if (opened == footerChosen) 1 else 0))
         .toDF("n_rows", "key_xor", "version", "rows_identical",
           "opened_fewer", "stats_match_footers")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S13h: BLOOM-FILTER file skipping — equality pruning where min/max
@@ -2758,8 +2717,7 @@ object SparkEntry {
       .withColumn("tag", concat(lit("u"), col("doc_id").cast("string")))
     val m = docs.agg(max(col("doc_id"))).head().getLong(0)
     val target = s"u${m / 2}"
-    val root = java.nio.file.Files.createTempDirectory("graft_s13h_")
-    try {
+    withScratch("graft_s13h_") { root =>
       docs.repartition(32).write.mode("overwrite").parquet(s"$root/t")
       val table = spark.read.parquet(s"$root/t")
       // min/max rows and bloom words, one stats table keyed by __file
@@ -2792,7 +2750,7 @@ object SparkEntry {
         if (minmaxChosen == total) 1 else 0))
         .toDF("n_rows", "key_xor", "rows_identical", "opened_fewer",
           "opened_le_quarter", "minmax_keeps_all")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S19: MAINTENANCE UNDER VERSIONING — the production OPTIMIZE loop
@@ -2844,10 +2802,9 @@ object SparkEntry {
     val (b1, b2) = (bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
     val planeArea = (aHi - aLo + 1).toDouble * (bHi - bLo + 1).toDouble
     val statCols = Seq("l_orderkey", "l_partkey")
-    val root = java.nio.file.Files.createTempDirectory("graft_s19_")
     def pathOf(u: String): String = new java.net.URI(u).getPath
     def nameOf(u: String): String = pathOf(u).replaceAll(".*/", "")
-    try {
+    withScratch("graft_s19_") { root =>
       val snapRoot = s"$root/snap"
       // per-file mergeable stats rows keyed by FILENAME (stable across
       // the commit moves), computed over exactly the given files
@@ -2986,7 +2943,7 @@ object SparkEntry {
         .toDF("n_rows", "key_xor", "v0", "v1", "v2", "rows_identical",
           "stats_files_match", "merge_matches_recompute",
           "pinned_v1_isolated", "race_loser_loud", "skipping_restored")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S20: CDC-APPLY UNDER VERSIONED STATS — row-level mutation flowing
@@ -3027,10 +2984,9 @@ object SparkEntry {
       .select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("n_chars"))
     val statCols = Seq("doc_id", "n_chars")
     val m = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val root = java.nio.file.Files.createTempDirectory("graft_s20_")
     def pathOf(u: String): String = new java.net.URI(u).getPath
     def nameOf(u: String): String = pathOf(u).replaceAll(".*/", "")
-    try {
+    withScratch("graft_s20_") { root =>
       val snapRoot = s"$root/snap"
       def statsFor(paths: Seq[String]): DataFrame =
         FileSkipping.fileStats(
@@ -3142,7 +3098,7 @@ object SparkEntry {
       }
       // the report is 2 driver-local rows already collected above —
       // return them as literals so the frame holds no reference to the
-      // scratch root the finally reclaims (the r13 stream_dq lesson)
+      // scratch root, which is deleted on return
       statCols.sorted.map { c =>
         val (n, nn, _, mn, mx) = merged(c)
         (c, n, nn, mn, mx, xGot,
@@ -3155,7 +3111,7 @@ object SparkEntry {
         "table_xor", "ndv_ok", "rows_match_apply",
         "untouched_stats_identical", "files_rewritten_subset")
         .orderBy(col("column_name"))
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S21: SCHEMA EVOLUTION ACCEPTED ACROSS VERSIONS — the other half of
@@ -3187,9 +3143,8 @@ object SparkEntry {
     val c0 = Seq("doc_id" -> "bigint", "lang" -> "string",
       "n_chars" -> "bigint")
     val c1 = c0 :+ ("quality" -> "bigint")
-    val root = java.nio.file.Files.createTempDirectory("graft_s21_")
     def pathOf(u: String): String = new java.net.URI(u).getPath
-    try {
+    withScratch("graft_s21_") { root =>
       val snapRoot = s"$root/snap"
       // ---- v0: the pre-evolution slice under C0
       val oldBatch = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
@@ -3265,7 +3220,7 @@ object SparkEntry {
         .toDF("n_rows", "key_xor", "n_quality_nulls", "quality_sum",
           "version", "contract_pass", "evolution_accepted",
           "bad_evolution_rejected", "stats_lazy_ok")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S22: TIME-TRAVEL CDC — the changelog BETWEEN two committed versions
@@ -3294,10 +3249,9 @@ object SparkEntry {
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("n_chars"))
     val m = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val root = java.nio.file.Files.createTempDirectory("graft_s22_")
     def pathOf(u: String): String = new java.net.URI(u).getPath
     def nameOf(u: String): String = pathOf(u).replaceAll(".*/", "")
-    try {
+    withScratch("graft_s22_") { root =>
       val snapRoot = s"$root/snap"
       docs.repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
@@ -3385,7 +3339,7 @@ object SparkEntry {
       }.toDF("op", "n_rows", "payload_xor", "roundtrip_ok",
         "delta_files_skipped", "self_diff_empty")
         .orderBy(col("op"))
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S26: VERSIONED COMPACTION WITH ZERO RE-SKETCH
@@ -3415,8 +3369,7 @@ object SparkEntry {
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"))
     val total = docs.count()
-    val root = java.nio.file.Files.createTempDirectory("graft_s26_")
-    try {
+    withScratch("graft_s26_") { root =>
       val snapRoot = s"$root/snap"
       val slices = Seq(
         pmod(col("doc_id"), lit(5L)) <= 2L,
@@ -3512,7 +3465,7 @@ object SparkEntry {
         .toDF("n_rows", "row_xor", "files_5_to_2", "rows_identical",
           "merged_row_matches_resketch", "carried_stats_identical",
           "pinned_intact", "second_compact_noop")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S25: STREAMING CDC INGEST — MERGE INTO as a micro-batch stream
@@ -3541,8 +3494,7 @@ object SparkEntry {
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"))
     val m = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val root = java.nio.file.Files.createTempDirectory("graft_s25_")
-    try {
+    withScratch("graft_s25_") { root =>
       val snapRoot = s"$root/snap"
       // b0 bootstraps the %4≠3 slice (8 range-partitioned files); b1
       // updates a LOW-quarter band; b2 deletes a TOP-quarter band; b3
@@ -3635,7 +3587,7 @@ object SparkEntry {
         if (statsOk) 1 else 0))
         .toDF("n_rows", "row_xor", "four_versions", "matches_seq_apply",
           "untouched_stats_identical", "replay_noop", "stats_current")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S24: OPTIMISTIC CONCURRENT MERGE — the multi-writer commit
@@ -3665,8 +3617,7 @@ object SparkEntry {
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"))
     val m = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val root = java.nio.file.Files.createTempDirectory("graft_s24_")
-    try {
+    withScratch("graft_s24_") { root =>
       val snapRoot = s"$root/snap"
       val v0 = Sinks.publishSnapshot(Map("data" -> ((docs, "doc_id"))),
         snapRoot)
@@ -3720,7 +3671,7 @@ object SparkEntry {
           Sinks.currentVersion(snapRoot).contains(v2)) 1 else 0))
         .toDF("n_rows", "row_xor", "rebase_merged_both", "conflict_aborts",
           "version_chain_exact")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S23: RETENTION — [[graft.operators.Sinks.expireVersions]] closes
@@ -3743,9 +3694,8 @@ object SparkEntry {
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"))
     val m = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val root = java.nio.file.Files.createTempDirectory("graft_s23_")
     def pathOf(u: String): String = new java.net.URI(u).getPath
-    try {
+    withScratch("graft_s23_") { root =>
       val snapRoot = s"$root/snap"
       def commitBand(lo: Long, hi: Long, carryFrom: Option[Long],
           stage: String): Long = {
@@ -3812,7 +3762,7 @@ object SparkEntry {
         .toDF("n_rows", "key_xor", "expired_exact", "expired_read_loud",
           "expired_dir_reclaimed", "pinned_survivor_intact",
           "pointer_never_expired")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S17: STATS-DRIVEN compaction — the first consumer of the s16c
@@ -3837,8 +3787,7 @@ object SparkEntry {
     val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("n_chars"))
     val tagged = docs.withColumn("batch",
       least(pmod(col("doc_id"), lit(32L)), lit(7L)))
-    val root = java.nio.file.Files.createTempDirectory("graft_s17_")
-    try {
+    withScratch("graft_s17_") { root =>
       tagged.repartition(col("batch"))
         .write.partitionBy("batch").mode("overwrite")
         .parquet(s"$root/batches")
@@ -3874,7 +3823,7 @@ object SparkEntry {
         if (filesAfter < filesBefore) 1 else 0))
         .toDF("n_rows", "key_xor", "n_small_batches", "rows_identical",
           "files_reduced")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S13g: TYPED pruning — string equality and null-aware file skipping
@@ -3903,8 +3852,7 @@ object SparkEntry {
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     val target = docs.agg(min(col("lang"))).head().getString(0)
-    val root = java.nio.file.Files.createTempDirectory("graft_s13g_")
-    try {
+    withScratch("graft_s13g_") { root =>
       docs.withColumn("tag",
           when(col("lang") === target, lit(null).cast("string"))
             .otherwise(col("lang")))
@@ -3951,7 +3899,7 @@ object SparkEntry {
         .toDF("n_rows", "key_xor", "rows_identical", "opened_fewer",
           "stats_match_footers", "null_rows_identical", "null_opened_fewer",
           "null_stats_match_footers")
-    } finally deleteRecursively(root)
+    }
   }
 
   private def ta18NbClassifier(spark: SparkSession, dir: String): DataFrame =
@@ -4068,8 +4016,7 @@ object SparkEntry {
     * partition layout → read-back roundtrip is hash-verified.
     */
   private def s9ShardedExport(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_s9_")
-    try {
+    withScratch("graft_s9_") { out =>
       val back = operators.Sinks.exportShards(
         tbl(spark, dir, "documents").select(col("doc_id")),
         s"$out/shards", 64L)
@@ -4078,7 +4025,7 @@ object SparkEntry {
         back.groupBy(col("shard").cast("long").as("shard"))
           .agg(count(lit(1)).as("n_rows"), sum(col("doc_id")).as("id_sum")))
         .orderBy(col("shard"))
-    } finally deleteRecursively(out)
+    }
   }
 
   /** S10: Hive-partitioned export gate — write documents partitioned by
@@ -4088,8 +4035,7 @@ object SparkEntry {
     * partitioned layout).
     */
   private def s10PartitionedExport(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_s10_")
-    try {
+    withScratch("graft_s10_") { out =>
       val docs = graft.operators.Sampling.assignSplits(
         tbl(spark, dir, "documents").select(col("doc_id"))
           .withColumn("domain", syntheticDomain),
@@ -4100,7 +4046,7 @@ object SparkEntry {
         back.groupBy(col("domain"), col("split"))
           .agg(count(lit(1)).as("n_rows"), sum(col("doc_id")).as("id_sum")))
         .orderBy(col("domain"), col("split"))
-    } finally deleteRecursively(out)
+    }
   }
 
   /** Planted boilerplate banner (shared by dd10 and pipe_training_mix):
@@ -5093,8 +5039,7 @@ object SparkEntry {
     * the fingerprint is bit_xor of the md5-prefix long, replayed exactly.
     */
   private def s12ManifestPublish(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_s12_")
-    try {
+    withScratch("graft_s12_") { root =>
       val out = root.resolve("published").toString
       operators.Sinks.publishWithManifest(
         tbl(spark, dir, "documents").select(col("doc_id")), out)
@@ -5104,7 +5049,7 @@ object SparkEntry {
             expr(s"bit_xor(${operators.Sinks.keyFingerprintSql("doc_id")})")
               .as("key_xor"))
           .withColumn("manifest_ok", lit(1)))
-    } finally deleteRecursively(root)
+    }
   }
 
   /** S14: multi-table snapshot commit end to end — publish v0 (the even-id
@@ -5119,9 +5064,8 @@ object SparkEntry {
     */
   private def s14SnapshotPublish(spark: SparkSession, dir: String)
       : DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_s14_")
-    try s14SnapshotPublishCore(spark, dir, tmp.resolve("snap").toString)
-    finally deleteRecursively(tmp)
+    withScratch("graft_s14_")(tmp =>
+      s14SnapshotPublishCore(spark, dir, tmp.resolve("snap").toString))
   }
 
   private def s14SnapshotPublishCore(spark: SparkSession, dir: String,
@@ -5173,8 +5117,7 @@ object SparkEntry {
   }
 
   private def s4SinkRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_s4_")
-    try {
+    withScratch("graft_s4_") { out =>
       val summaries = tbl(spark, dir, "documents")
         .select(col("doc_id"),
           truncateTokens(col("text"), 15).as("summary"),
@@ -5194,7 +5137,7 @@ object SparkEntry {
           .select(col("doc_id"), col("summary"), col("n_tokens"),
             col("file_summary")))
         .orderBy(col("doc_id"))
-    } finally deleteRecursively(out)
+    }
   }
 
   /** S5: nested JSON evaluation report sink, round-tripped — stats +
@@ -5205,9 +5148,7 @@ object SparkEntry {
     * independently by the oracle from `documents`.
     */
   private def s5ReportSink(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_s5_")
-    try s5ReportSinkCore(spark, dir, out.toString)
-    finally deleteRecursively(out)
+    withScratch("graft_s5_")(out => s5ReportSinkCore(spark, dir, out.toString))
   }
 
   private def s5ReportSinkCore(spark: SparkSession, dir: String,
@@ -5268,16 +5209,10 @@ object SparkEntry {
         timestamp_micros(lit(1700000000000000L) + col("doc_id").cast("long")))
     val curated = graft.streaming.CorpusStreams.curateStream(docs)
     val acc = spark.sparkContext.longAccumulator("graft.streamCuration")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sc_")
-    try {
-      val q = curated.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) => acc.add(batch.count()) }
-        .start()
-      q.awaitTermination()
+    withScratch("graft_sc_") { ckpt =>
+      drain(curated, ckpt.toString) { (batch, _) => acc.add(batch.count()) }
       Seq(acc.value).toDF("n_curated")
-    } finally deleteRecursively(ckpt)
+    }
   }
 
   /** Streaming CommonCrawl-shaped ingest, driver-checked end to end: the
@@ -5294,16 +5229,8 @@ object SparkEntry {
     * continuous query.
     */
   private def streamCcIngest(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val shardsRoot =
-      java.nio.file.Files.createTempDirectory("graft_cci_shards_")
-    val ckptRoot = java.nio.file.Files.createTempDirectory("graft_cci_ck_")
-    try streamCcIngestCore(spark, dir, s"$shardsRoot/shards",
-      ckptRoot.toString)
-    finally {
-      deleteRecursively(shardsRoot)
-      deleteRecursively(ckptRoot)
-    }
+    withScratch("graft_cci_")(root =>
+      streamCcIngestCore(spark, dir, s"$root/shards", s"$root/ckpt"))
   }
 
   private def streamCcIngestCore(spark: SparkSession, dir: String,
@@ -5333,12 +5260,7 @@ object SparkEntry {
         timestamp_micros(lit(1700000000000000L) + col("doc_id").cast("long")))
     val curated = graft.streaming.CorpusStreams.curateStream(docs)
     val acc = spark.sparkContext.longAccumulator("graft.streamCcIngest")
-    val q = curated.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) => acc.add(batch.count()) }
-      .start()
-    q.awaitTermination()
+    drain(curated, ckpt) { (batch, _) => acc.add(batch.count()) }
     Seq(acc.value).toDF("n_curated")
   }
 
@@ -5363,16 +5285,10 @@ object SparkEntry {
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("fp")
     val acc = spark.sparkContext.longAccumulator("graft.streamDedup")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sd_")
-    try {
-      val q = deduped.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) => acc.add(batch.count()) }
-        .start()
-      q.awaitTermination()
+    withScratch("graft_sd_") { ckpt =>
+      drain(deduped, ckpt.toString) { (batch, _) => acc.add(batch.count()) }
       Seq(acc.value).toDF("n_unique")
-    } finally deleteRecursively(ckpt)
+    }
   }
 
   /** Streaming near-dup ingest dedup, driver-checked: documents replay as
@@ -5392,27 +5308,16 @@ object SparkEntry {
       .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
       .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
-    val store = java.nio.file.Files.createTempDirectory("graft_snd_store_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_snd_out_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_snd_ck_")
-    try {
-      val dedup = graft.streaming.CorpusStreams.nearDupDeduper(store.toString)
-      val q = docs.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.streaming.CorpusStreams
-            .writeSummaryBatch(dedup(batch, batchId), outDir.toString, batchId)
-        }
-        .start()
-      q.awaitTermination()
+    withScratch("graft_snd_") { root =>
+      val outDir = s"$root/out"
+      val dedup = graft.streaming.CorpusStreams.nearDupDeduper(s"$root/store")
+      drain(docs, s"$root/ckpt") { (batch, batchId) =>
+        graft.streaming.CorpusStreams
+          .writeSummaryBatch(dedup(batch, batchId), outDir, batchId)
+      }
       graft.operators.Materialize(
-        spark.read.parquet(outDir.toString).select(col("doc_id")))
+        spark.read.parquet(outDir).select(col("doc_id")))
         .orderBy(col("doc_id"))
-    } finally {
-      deleteRecursively(store)
-      deleteRecursively(outDir)
-      deleteRecursively(ckpt)
     }
   }
 
@@ -5437,18 +5342,12 @@ object SparkEntry {
     val decontam = graft.streaming.CorpusStreams.decontaminator(
       bench, "text", ngramSize = 5)
     val acc = spark.sparkContext.longAccumulator("graft.streamDecontam")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sx_")
-    try {
-      val q = docs.filter(col("doc_id") % 10 =!= 0).writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          acc.add(decontam(batch).count()) }
-        .start()
-      q.awaitTermination()
+    withScratch("graft_sx_") { ckpt =>
+      drain(docs.filter(col("doc_id") % 10 =!= 0), ckpt.toString) {
+        (batch, _) => acc.add(decontam(batch).count()) }
       decontam.close()
       Seq(acc.value).toDF("n_clean")
-    } finally deleteRecursively(ckpt)
+    }
   }
 
   /** STREAM-STATE gate (literal oracle): the
@@ -5490,7 +5389,6 @@ object SparkEntry {
       .withColumn("fp", md5(substring(col("text"), 1, 100)))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("fp")
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ssg_")
     // the gate reads recentProgress, a ring buffer of the LAST
     // numRecentProgressUpdates (default 100) triggers — a corpus needing
     // more triggers than that would silently drop early batches and
@@ -5499,25 +5397,15 @@ object SparkEntry {
     val progKey = "spark.sql.streaming.numRecentProgressUpdates"
     val prevProg = spark.conf.getOption(progKey)
     spark.conf.set(progKey, "100000")
-    // the checkpoint is per-invocation scratch — delete it even on
-    // failure (bench/verify loops would otherwise leak a state-store
-    // tree per run)
-    val m = try {
-      val q = deduped.writeStream
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) => batch.count(); () }
-        .start()
-      q.awaitTermination()
+    val m = try withScratch("graft_ssg_") { ckpt =>
+      val q = drain(deduped, ckpt.toString) { (batch, _) => batch.count() }
       // recentProgress is populated synchronously by the (terminated)
       // execution thread — the deterministic source for the gate; the
       // listener-based ProgressRecorder (async bus) is spec territory
       graft.streaming.StreamObservability.stateMetrics(spark, q)
         .orderBy(col("batch_id")).collect()
-    } finally {
-      deleteRecursively(ckptDir)
+    } finally
       prevProg.fold(spark.conf.unset(progKey))(spark.conf.set(progKey, _))
-    }
     val nRows = corpus.count()
     val nDistinct = corpus
       .select(md5(substring(col("text"), 1, 100))).distinct().count()
@@ -5551,16 +5439,10 @@ object SparkEntry {
       .tableStreamPath(spark, dir, "embeddings.parquet")
     val stream = graft.streaming.CorpusStreams
       .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
-    val root = java.nio.file.Files.createTempDirectory("graft_sia_")
-    val store = s"$root/idx"
-    val appender = new graft.streaming.IndexStreams.IvfAppender(cs, store)
-    try {
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) => appender(b, id) }
-        .start()
-      q.awaitTermination()
+    withScratch("graft_sia_") { root =>
+      val store = s"$root/idx"
+      val appender = new graft.streaming.IndexStreams.IvfAppender(cs, store)
+      drain(stream, s"$root/ckpt") { (b, id) => appender(b, id) }
       // Materialized: each side feeds a count AND both exceptAll legs.
       // exceptAll = MULTISET difference — a duplicated row compensating a
       // dropped one (the exactly-once defect class this gate exists for)
@@ -5578,7 +5460,7 @@ object SparkEntry {
         if (nS == nB && nB > 0) 1 else 0,
         if (nDiff == 0L) 1 else 0))
         .toDF("rows_match", "assign_match")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** STREAM-DRIFT gate (literal oracle): the centroid-drift monitor
@@ -5603,8 +5485,7 @@ object SparkEntry {
       .select(col("vec_id"), col("embedding"))
     val (assigned, cs) = Similarity.buildIvfIndex(emb, 16, 2)
     val prof = graft.streaming.IndexDrift.profile(assigned, cs)
-    val root = java.nio.file.Files.createTempDirectory("graft_sdg_")
-    try {
+    withScratch("graft_sdg_") { root =>
       val inDir = s"$root/in"
       emb.repartition(3).write.mode("overwrite").parquet(inDir)
       val ood = graft.streaming.IndexDrift.uncoveredDirection(cs)
@@ -5619,12 +5500,7 @@ object SparkEntry {
       val driftDir = s"$root/drift"
       val appender = new graft.streaming.IndexDrift.DriftingIvfAppender(
         cs, store, driftDir, prof)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) => appender(b, id) }
-        .start()
-      q.awaitTermination()
+      drain(stream, s"$root/ckpt") { (b, id) => appender(b, id) }
       val drift = graft.streaming.IndexDrift.readDrift(spark, driftDir)
       // which batch carries the planted rows, from the index store itself
       val planted = spark.read.option("basePath", store).parquet(store)
@@ -5640,7 +5516,7 @@ object SparkEntry {
         if (nPlanted == 1) 1 else 0,
         if (flagMatch) 1 else 0))
         .toDF("has_batches", "planted_ok", "flag_match")
-    } finally deleteRecursively(root)
+    }
   }
 
   /** STREAM-INDEX-REBUILD gate (literal oracle): the drift→rebuild→swap
@@ -5676,8 +5552,7 @@ object SparkEntry {
     val (cells0raw, cs0) = Similarity.buildIvfIndex(emb, 16, 2)
     val cells0 = graft.operators.Materialize(cells0raw)
     val prof0 = IndexDrift.profile(cells0, cs0)
-    val root = java.nio.file.Files.createTempDirectory("graft_sir_")
-    try {
+    withScratch("graft_sir_") { root =>
       val snapRoot = s"$root/snap"
       val store = s"$root/store"
       val driftDir = s"$root/drift"
@@ -5698,12 +5573,7 @@ object SparkEntry {
           glob = "*.parquet")
       val appender = new IndexRebuild.RebuildingIvfAppender(
         snapRoot, store, driftDir, nCells = 16, iterations = 2)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) => appender(b, id) }
-        .start()
-      q.awaitTermination()
+      drain(stream, s"$root/ckpt") { (b, id) => appender(b, id) }
       val storeAll = spark.read.option("basePath", store).parquet(store)
       val vLatest = graft.operators.Sinks.currentVersion(snapRoot)
         .getOrElse(-99L)
@@ -5756,32 +5626,6 @@ object SparkEntry {
         if (top1 >= 0.99) 1 else 0))
         .toDF("has_batches", "planted_ok", "flag_match", "rebuilt_once",
           "rebuilt_identical", "preswap_ok", "served_complete", "served_ok")
-    } finally deleteRecursively(root)
-  }
-
-  /** Recursive temp-scratch delete (walk stream closed; deepest-first).
-    * Retried: a just-stopped stream's state-store maintenance thread can
-    * recreate files between the walk snapshot and the deletes
-    * (DirectoryNotEmptyException); the scratch is /tmp-local, so the last
-    * attempt is best-effort rather than failing the query it cleans up
-    * after.
-    */
-  private def deleteRecursively(root: java.nio.file.Path): Unit = {
-    def sweep(): Unit = {
-      val s = java.nio.file.Files.walk(root)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally s.close()
-    }
-    var attempts = 3
-    while (attempts > 0 && java.nio.file.Files.exists(root)) {
-      attempts -= 1
-      try sweep()
-      catch {
-        case _: java.io.IOException | _: java.io.UncheckedIOException
-            if attempts > 0 => Thread.sleep(50L)
-        case _: java.io.IOException | _: java.io.UncheckedIOException => ()
-      }
     }
   }
 
@@ -5810,21 +5654,13 @@ object SparkEntry {
         scoreUdf(col("text")).as("s"))
       .select(col("doc_id"), col("source"),
         col("s._1").as("pred_source"), col("s._2").as("score"))
-    val out = java.nio.file.Files.createTempDirectory("graft_cls_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_clsc_")
-    try {
-      val q = scored.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("parquet").option("path", out.toString)
-        .start()
-      q.awaitTermination()
+    withScratch("graft_cls_") { root =>
+      val out = s"$root/out"
+      drain(scored, s"$root/ckpt") { (batch, _) =>
+        batch.write.mode("append").parquet(out) }
       graft.operators.Materialize(
-        spark.read.schema(scored.schema).parquet(out.toString))
+        spark.read.schema(scored.schema).parquet(out))
         .orderBy(col("doc_id"))
-    } finally {
-      deleteRecursively(out)
-      deleteRecursively(ckpt)
     }
   }
 
@@ -5861,21 +5697,13 @@ object SparkEntry {
       .withColumn("__s", scoreUdf(col("text")))
       .select(col("doc_id"), round(col("__s"), 6).as("score"),
         (col("__s") >= 0.0).cast("int").as("pred"), col("label"))
-    val out = java.nio.file.Files.createTempDirectory("graft_clr_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_clrc_")
-    try {
-      val q = scored.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("parquet").option("path", out.toString)
-        .start()
-      q.awaitTermination()
+    withScratch("graft_clr_") { root =>
+      val out = s"$root/out"
+      drain(scored, s"$root/ckpt") { (batch, _) =>
+        batch.write.mode("append").parquet(out) }
       graft.operators.Materialize(
-        spark.read.schema(scored.schema).parquet(out.toString))
+        spark.read.schema(scored.schema).parquet(out))
         .orderBy(col("doc_id"))
-    } finally {
-      deleteRecursively(out)
-      deleteRecursively(ckpt)
     }
   }
 
@@ -5910,27 +5738,16 @@ object SparkEntry {
       sideStream("click", "click_id", "c_user", "c_ts"))
       .select(col("purchase_id"), col("click_id"), col("user_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-    val out = java.nio.file.Files.createTempDirectory("graft_ssj_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssjc_")
-    // sink + state-store checkpoint are per-invocation scratch — the
-    // stream_dq discipline: materialize the (aggregate-scale) joined
-    // rows, reclaim both trees even on failure
-    try {
-      val q = joined.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("parquet").option("path", out.toString)
-        .start()
-      q.awaitTermination()
-      // materialize DISTRIBUTED before reclaiming the scratch dirs: the
+    withScratch("graft_ssj_") { root =>
+      val out = s"$root/out"
+      drain(joined, s"$root/ckpt") { (batch, _) =>
+        batch.write.mode("append").parquet(out) }
+      // materialize DISTRIBUTED before the scratch is deleted: the
       // joined set is corpus-scale on dense corpora (116M rows on the
       // replicated 100x events), so a driver collect is not an option
       graft.operators.Materialize(
-        spark.read.schema(joined.schema).parquet(out.toString))
+        spark.read.schema(joined.schema).parquet(out))
         .orderBy(col("purchase_id"), col("click_id"))
-    } finally {
-      deleteRecursively(out)
-      deleteRecursively(ckpt)
     }
   }
 
@@ -6121,8 +5938,7 @@ object SparkEntry {
     import graft.operators.FileSkipping.LongRange
     val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("text"))
     val m = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val root = java.nio.file.Files.createTempDirectory("graft_psnap_")
-    try {
+    withScratch("graft_psnap_") { root =>
       docs.repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
         .write.mode("overwrite").parquet(s"$root/stage_data")
@@ -6146,12 +5962,12 @@ object SparkEntry {
             tableDir = Some(dataDir))
           .filter(col("doc_id").between(lo, hi))
       // lazy plans reference the scratch snapshot — materialize before
-      // the finally reclaims it (the r13 stream_dq discipline)
+      // the scratch is deleted
       graft.operators.Materialize(
         graft.operators.Curation.curateIncremental(
           bandRead(m / 2 + 1, m), bandRead(0L, m / 2), lshPrefilter = lsh)
           .orderBy(col("doc_id")))
-    } finally deleteRecursively(root)
+    }
   }
 
   /** Curation flagship: the composed training-data pass (TA2 language gate
@@ -6187,8 +6003,7 @@ object SparkEntry {
     * the oracle pins it to the size-derived expectation (1 at test SF).
     */
   private def s8CompactRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_s8_")
-    try {
+    withScratch("graft_s8_") { out =>
       tbl(spark, dir, "documents").select(col("doc_id"), col("n_chars"))
         .repartition(20)
         .write.mode("overwrite").parquet(s"$out/frag")
@@ -6197,7 +6012,7 @@ object SparkEntry {
       graft.operators.Materialize(
         compacted.withColumn("n_files_after", lit(compacted.inputFiles.length)))
         .orderBy(col("doc_id"))
-    } finally deleteRecursively(out)
+    }
   }
 
   /** CL4: the SemDeDup-deduplicated corpus itself (pairs → components →

@@ -1,20 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json and queries.json (every name run), for the
+  * DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Main.session()
     new java.io.File(outDir).mkdirs()
     // Dev-loop subset (same contract as Bench): the driver never sets it,
     // so per-round artifacts always cover the full registry.
@@ -53,6 +45,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // every selected name, so the checker can fail an entry that threw
+    // (and so wrote nothing) even when it has no oracle SQL
+    Files.writeString(Paths.get(s"$outDir/queries.json"),
+      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.app
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftExtensions
+import graft.{GraftExtensions, Scratch}
 import graft.core.PipelineConfig
 import graft.eval.Metrics
 import graft.llm.ExtractiveSummarizer
@@ -94,8 +94,7 @@ object Main {
     * exits nonzero on a data/manifest mismatch — usable as a CI gate.
     */
   private def runPublish(opts: Map[String, String]): Unit = {
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       opts.get("check") match {
         case Some(dir) =>
           val n = graft.operators.Sinks.readPublished(spark, dir).count()
@@ -106,7 +105,7 @@ object Main {
           graft.operators.Sinks.publishWithManifest(df, opts("out"), key)
           println(s"[graft] published ${opts("out")} (manifest keyed on $key)")
       }
-    } finally if (owned) spark.stop()
+    }
   }
 
   /** `dq`: run a rulebook over a parquet table — rules given as
@@ -120,8 +119,7 @@ object Main {
     * produced — a retyped column must not reach the row rulebook.
     */
   private def runDq(opts: Map[String, String]): Unit = {
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       import graft.operators.TableQuality
       val df = spark.read.parquet(opts("in"))
       val rules = opts.getOrElse("rules", "")
@@ -159,7 +157,7 @@ object Main {
           // a PREVIOUS run's clean/ into the same dir must not survive a
           // drifted drop — downstream consumers of $dir/clean would
           // silently read the old release (r13 advice)
-          deleteTreeIfExists(java.nio.file.Paths.get(dir, "clean"))
+          Scratch.deleteTree(java.nio.file.Paths.get(dir, "clean"))
           df.write.mode("overwrite").parquet(s"$dir/quarantined")
           println(s"[graft] SCHEMA DRIFT: whole drop routed to " +
             s"$dir/quarantined (no clean side; stale clean/ removed)")
@@ -171,7 +169,7 @@ object Main {
           println(s"[graft] quarantine split written under $dir")
         }
       }
-    } finally if (owned) spark.stop()
+    }
   }
 
   /** `analyze`: per-column table statistics (the ANALYZE primitive).
@@ -181,8 +179,7 @@ object Main {
     * vs 3.9 s at a 60M-row probe) — the oracle anchor, not the default.
     */
   private def runAnalyze(opts: Map[String, String]): Unit = {
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       import graft.operators.TableQuality
       val df = spark.read.parquet(opts("in"))
       val cols = opts.get("columns")
@@ -192,7 +189,7 @@ object Main {
         if (opts.contains("exact")) TableQuality.tableStats(df, cols)
         else TableQuality.tableStatsApprox(df, cols)
       stats.show(cols.length + 1, truncate = false)
-    } finally if (owned) spark.stop()
+    }
   }
 
   /** `optimize`: table maintenance. `--compact-small ROWS` is the
@@ -206,8 +203,7 @@ object Main {
     * (FileSkipping.fileStats + ZOrder.writeHilbert over detected paths).
     */
   private def runOptimize(opts: Map[String, String]): Unit = {
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       val in = opts("in")
       val out = opts("out")
       require(in != out, "optimize: --out must differ from --in")
@@ -272,7 +268,7 @@ object Main {
               if (p.getFileName.toString.endsWith(".parquet"))
                 java.nio.file.Files.move(p, outP.resolve(p.getFileName))
             } finally s.close()
-            deleteTreeIfExists(tmp)
+            Scratch.deleteTree(tmp)
           }
           println(s"[graft] incremental re-cluster: ${detected.size} " +
             s"degraded files rewritten (${keep.size} byte-copied) -> $out")
@@ -304,7 +300,7 @@ object Main {
           println(s"[graft] compacted ${smalls.size} small files " +
             s"(${bigs.size} copied untouched) -> $out")
       }
-    } finally if (owned) spark.stop()
+    }
   }
 
   /** The flat-copy optimize passes drop directory structure
@@ -336,8 +332,7 @@ object Main {
     * pointer.
     */
   private def runSnapshot(opts: Map[String, String]): Unit = {
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       import graft.operators.Sinks
       val root = opts("root")
       if (opts.contains("publish")) {
@@ -409,18 +404,12 @@ object Main {
         val scratch = s"$root/.ingest-scratch"
         val before = Sinks.currentVersion(root)
         val committed = new java.util.concurrent.atomic.AtomicLong(0)
-        val q = stream.writeStream
-          .option("checkpointLocation", s"$root/_ingest_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            graft.streaming.SnapshotIngest
-              .commitBatch(b, id, root, scratch, key, statCols)
-              .foreach(_ => committed.incrementAndGet())
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        deleteTreeIfExists(java.nio.file.Paths.get(scratch))
+        Scratch.drain(stream, s"$root/_ingest_checkpoint") { (b, id) =>
+          graft.streaming.SnapshotIngest
+            .commitBatch(b, id, root, scratch, key, statCols)
+            .foreach(_ => committed.incrementAndGet())
+        }
+        Scratch.deleteTree(java.nio.file.Paths.get(scratch))
         println(s"[graft] ingested ${committed.get()} batch version(s) " +
           s"from $feed; version ${before.getOrElse("-")} -> " +
           s"${Sinks.currentVersion(root).getOrElse("-")}")
@@ -530,7 +519,7 @@ object Main {
             println(s"[graft] snapshot optimize: ${detectedPaths.size} " +
               s"degraded file(s) re-clustered (${carryPaths.size} " +
               s"carried) -> version $v")
-          } finally deleteTreeIfExists(scratch)
+          } finally Scratch.deleteTree(scratch)
         }
       } else if (opts.contains("compact")) {
         // versioned small-file compaction with ZERO re-sketch: decision
@@ -558,19 +547,8 @@ object Main {
       } else sys.error(
         "snapshot: need --publish, --read, --diff, --expire, --ingest, " +
         "--optimize, --compact, --vacuum or --current")
-    } finally if (owned) spark.stop()
-  }
-
-  /** Recursive delete, no-op when absent — the stale-clean/ sweep the
-    * drifted-quarantine route needs (deepest first, like Sinks').
-    */
-  private def deleteTreeIfExists(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      val s = java.nio.file.Files.walk(root)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally s.close()
     }
+  }
 
   private def parseOpts(args: List[String]): Map[String, String] = {
     def loop(rest: List[String], acc: Map[String, String]): Map[String, String] =
@@ -592,8 +570,7 @@ object Main {
     * deltas against the frozen model (Similarity.ivfAppend).
     */
   private def runIndexBuild(opts: Map[String, String]): Unit = {
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       val emb = spark.read.parquet(opts("embeddings"))
         .select(col("vec_id").cast("long"), col("embedding"))
       val out = opts("out")
@@ -616,7 +593,7 @@ object Main {
         graft.operators.Similarity.saveIvfIndex(idx, cs, out)
       }
       println(s"[graft] index -> $out")
-    } finally if (owned) spark.stop()
+    }
   }
 
   /** ANN index lifecycle, serve half: load a persisted index (the
@@ -626,8 +603,7 @@ object Main {
     * index was built over).
     */
   private def runIndexSearch(opts: Map[String, String]): Unit = {
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       val dir = opts("index")
       val qRaw = spark.read.parquet(opts("queries"))
       val queries = (if (qRaw.columns.contains("query_id")) qRaw
@@ -656,7 +632,7 @@ object Main {
         }
       result.write.mode("overwrite").parquet(opts("out"))
       println(s"[graft] top-$k -> ${opts("out")}")
-    } finally if (owned) spark.stop()
+    }
   }
 
   /** Domain-bearing flags re-read the corpus as parquet (loadDocs
@@ -677,12 +653,13 @@ object Main {
         s"$src is a text directory")
   }
 
-  /** getOrCreate, remembering whether the session was ours to stop — a
-    * pre-existing host session (tests, notebooks) is left running.
+  /** The one session setting of every graft main: `SPARK_MASTER`, else
+    * `local[N]` with N = `SPARK_GRAFT_CPUS` or max(2, nproc); shuffle
+    * partitions = N, AQE on, UTC, no UI, WARN logs, graft SQL functions
+    * registered. getOrCreate: a live host session (tests, notebooks) is
+    * reused as is.
     */
-  private def session(): (SparkSession, Boolean) = {
-    val preexisting = SparkSession.getDefaultSession
-      .exists(s => !s.sparkContext.isStopped)
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.max(2, Runtime.getRuntime.availableProcessors()).toString)
     val spark = SparkSession.builder()
@@ -695,13 +672,25 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(spark)
-    (spark, !preexisting)
+    spark
+  }
+
+  /** Run `f` on [[session]]; stop the session afterwards only if this
+    * call created it — a pre-existing host session is left running.
+    */
+  def withSession[T](f: SparkSession => T): T = {
+    val preexisting = SparkSession.getDefaultSession
+      .exists(s => !s.sparkContext.isStopped)
+    val spark = session()
+    try f(spark)
+    finally if (!preexisting) spark.stop()
   }
 
   /** Per-stage wall-clock log line — the reference's timestamped stage
     * timing (run_full_evaluation_pipeline.py:137-163, 572-585) as one
-    * stderr line per stage. Wraps the eager stages (strategy loops, sink
-    * writes); plan construction is lazy and not worth timing.
+    * stderr line per stage. A stage must end with the action that forces
+    * it: a lazy plan's jobs run at its first action, so timing only its
+    * construction would charge them to the next line.
     */
   private def timed[T](stage: String)(f: => T): T = {
     val t0 = System.nanoTime()
@@ -752,8 +741,7 @@ object Main {
     // select output directories). Single-model runs keep the flat layout.
     val models = opts.get("models").map(_.split(",").toSeq.filter(_.nonEmpty))
     val ollamaUrl = opts.get("ollama-url")
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       val docs = loadDocs(spark, opts.getOrElse("docs", sys.error("--docs required")))
       def runOne(model: Option[String]): Unit = {
         // --summarizer picks the in-process scalar (textrank = the
@@ -771,8 +759,14 @@ object Main {
         }
         val strategies = new Strategies(summarizer, cfg = cfg)
         val tag = model.map(m => s" [$m]").getOrElse("")
-        val summaries = timed(s"$approach$tag summarize") {
-          approach match {
+        val dest = model match {
+          case Some(m) => s"$out/${graft.core.Text.safeName(m)}"
+          case None => out
+        }
+        // one line for strategy + write: the collapse and level loops run
+        // jobs while the plan is built, the rest runs inside the write
+        timed(s"$approach$tag summarize + write summaries") {
+          val summaries = approach match {
             case "truncated" => strategies.truncated(docs)
             case "mapreduce" => strategies.mapReduce(docs)
             case "critique" => strategies.mapReduceCritique(docs)
@@ -781,13 +775,8 @@ object Main {
               new Hierarchical(summarizer, cfg).summarize(TreeOps.synthesize(docs))
             case other => sys.error(s"unknown approach: $other")
           }
+          Sinks.writeSummaryTable(summaries, s"$dest/summaries")
         }
-        val dest = model match {
-          case Some(m) => s"$out/${graft.core.Text.safeName(m)}"
-          case None => out
-        }
-        timed(s"write summaries$tag")(
-          Sinks.writeSummaryTable(summaries, s"$dest/summaries"))
         if (opts.contains("write-files"))
           timed(s"write per-doc files$tag")(Sinks.writeSummaryFiles(
             spark.read.parquet(s"$dest/summaries"), s"$dest/files"))
@@ -797,7 +786,7 @@ object Main {
         case Some(ms) => ms.foreach(m => runOne(Some(m)))
         case None => runOne(None)
       }
-    } finally if (owned) spark.stop()
+    }
   }
 
   /** §3.3 demo entry point: run all five strategies on ONE document and
@@ -805,8 +794,7 @@ object Main {
     * streamlit_demo.py:241-287, minus the UI).
     */
   private[app] def runDemo(opts: Map[String, String]): Unit = {
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       val all = loadDocs(spark, opts.getOrElse("docs", sys.error("--docs required")))
       val one = opts.get("doc-id") match {
         case Some(id) => all.filter(col("doc_id") === id.toLong)
@@ -830,7 +818,7 @@ object Main {
       }.reduce(_ unionByName _)
         .select("approach", "semantic_similarity", "rouge1_f", "rouge2_f", "rougeL_f")
       table.show(truncate = false)
-    } finally if (owned) spark.stop()
+    }
   }
 
   /** Corpus-curation entry point: the composed training-data pass
@@ -840,8 +828,7 @@ object Main {
     */
   private[app] def runCurate(opts: Map[String, String]): Unit = {
     val out = opts.getOrElse("out", sys.error("--out required"))
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       val docs = loadDocs(spark, opts.getOrElse("docs", sys.error("--docs required")))
       val langs = opts.get("langs").map(_.split(",").toSeq).getOrElse(Seq("en"))
       val minStop = opts.get("min-stopword-ratio").map(_.toDouble).getOrElse(0.01)
@@ -909,7 +896,7 @@ object Main {
         println(s"[graft] funnel: curated=${kept.count()} (incremental run; " +
           "full funnel applies to the batch form)")
       println(s"[graft] curated stats -> $out/curated")
-    } finally if (owned) spark.stop()
+    }
   }
 
   /** Data-prep pass: optional NFC normalization, benchmark decontamination,
@@ -918,8 +905,7 @@ object Main {
     */
   private[app] def runPrep(opts: Map[String, String]): Unit = {
     val out = opts.getOrElse("out", sys.error("--out required"))
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       var docs = loadDocs(spark, opts.getOrElse("docs", sys.error("--docs required")))
       if (opts.contains("normalize"))
         docs = graft.operators.TextAnalysis.normalizeText(docs)
@@ -1065,7 +1051,7 @@ object Main {
             s"$out/partitioned", pcols))
       }
       println(s"[graft] prepared corpus -> $out/prepared")
-    } finally if (owned) spark.stop()
+    }
   }
 
   private val MetricCols =
@@ -1073,8 +1059,7 @@ object Main {
 
   private[app] def runEvaluate(opts: Map[String, String]): Unit = {
     val report = opts.getOrElse("report", sys.error("--report required"))
-    val (spark, owned) = session()
-    try {
+    withSession { spark =>
       def summariesOf(path: String, alias: String): DataFrame = {
         val df = spark.read.parquet(path)
         val textCol = Seq("summary", "text").find(df.columns.contains)
@@ -1139,6 +1124,6 @@ object Main {
             Sinks.writeJsonReport(stats, hist, metrics.orderBy("doc_id"), report))
           println(s"[graft] evaluation report -> $report")
       }
-    } finally if (owned) spark.stop()
+    }
   }
 }

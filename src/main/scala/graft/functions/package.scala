@@ -136,6 +136,17 @@ package object functions {
     sqrt(greatest((ssq - s * s / n) / n, lit(0.0)))
   }
 
+  /** Ordered concat: the group's `text` values sorted by `keys` (then by
+    * text) and joined with `sep`. Partial aggregation applies — the
+    * (keys, text) structs are collected map-side and sorted after the
+    * shuffle, so each group's payload crosses the wire once.
+    */
+  def orderedConcat(text: String, sep: String, keys: String*): Column =
+    array_join(
+      transform(array_sort(collect_list(struct((keys :+ text).map(col): _*))),
+        s => s.getField(text)),
+      sep)
+
   /** Round for oracle-stable output. */
   def r4(c: Column): Column = round(c, 4)
   def r6(c: Column): Column = round(c, 6)

@@ -772,15 +772,7 @@ object TxTrain {
     val cfg = Config(
       steps = if (args.length > 2) args(2).toInt else Config().steps,
       batch = if (args.length > 3) args(3).toInt else Config().batch)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${cfg.threads}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-txtrain").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs =
-      try loadCorpus(spark, sfDir, maxDocs)
-      finally spark.stop()
+    val docs = graft.app.Main.withSession(loadCorpus(_, sfDir, maxDocs))
     println(s"[txtrain] ${docs.length} docs from $sfDir (cap $maxDocs)")
     val trainer = new Trainer(cfg)
     val seeded = TinyTransformer()
@@ -807,12 +799,7 @@ object TxTrain {
     // float path the registry gate measures): args(4) = comma-separated
     // sibling corpus dirs
     if (args.length > 4) args(4).split(",").filter(_.nonEmpty).foreach { d =>
-      val spark2 = org.apache.spark.sql.SparkSession.builder()
-        .master("local[8]").config("spark.ui.enabled", "false")
-        .getOrCreate()
-      val evalDocs =
-        try loadCorpus(spark2, d, maxDocs)
-        finally spark2.stop()
+      val evalDocs = graft.app.Main.withSession(loadCorpus(_, d, maxDocs))
       val sS = separation(evalDocs,
         t => seeded.embed(t.mkString(" ")).map(_.toDouble))
       val sT = separation(evalDocs,

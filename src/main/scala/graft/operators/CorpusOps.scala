@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{BinPack, BinnedChunk, Chunk, PipelineConfig}
-import graft.functions.udfs
+import graft.functions.{orderedConcat, udfs}
 
 /** Corpus-level relational operators (SURVEY.md §2.1, §2.4, §2.5).
   *
@@ -174,17 +174,12 @@ object CorpusOps {
 
   /** G1+G4: collapse each (doc_id, bin) group to one text blob, pieces
     * joined in chunk order with "\n\n" (reference:
-    * runners/run_summarization_ollama_mapreduce.py:121). Partial aggregation
-    * (map-side combine) applies: collect_list of (idx, text) structs, sorted
-    * after the shuffle, so each group's payload crosses the wire once.
+    * runners/run_summarization_ollama_mapreduce.py:121).
     */
   def concatBins(binned: DataFrame, sep: String = "\n\n"): DataFrame =
     binned.groupBy(col("doc_id"), col("bin"))
       .agg(
-        array_join(
-          transform(array_sort(collect_list(struct(col("chunk_idx"), col("text")))),
-            s => s.getField("text")),
-          sep).as("text"),
+        orderedConcat("text", sep, "chunk_idx").as("text"),
         sum(col("n_tokens")).as("n_tokens_in"),
         min(col("chunk_idx")).as("first_chunk_idx"))
 
@@ -205,19 +200,13 @@ object CorpusOps {
     val phase1 = binned
       .groupBy(col("doc_id"), col("bin"), seg.as("seg"))
       .agg(
-        array_join(
-          transform(array_sort(collect_list(struct(col("chunk_idx"), col("text")))),
-            s => s.getField("text")),
-          sep).as("seg_text"),
+        orderedConcat("text", sep, "chunk_idx").as("seg_text"),
         sum(col("n_tokens")).as("seg_tokens"),
         min(col("chunk_idx")).as("seg_first_idx"))
     phase1
       .groupBy(col("doc_id"), col("bin"))
       .agg(
-        array_join(
-          transform(array_sort(collect_list(struct(col("seg"), col("seg_text")))),
-            s => s.getField("seg_text")),
-          sep).as("text"),
+        orderedConcat("seg_text", sep, "seg").as("text"),
         sum(col("seg_tokens")).as("n_tokens_in"),
         min(col("seg_first_idx")).as("first_chunk_idx"))
   }

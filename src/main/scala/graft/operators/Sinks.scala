@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
+
 /** Output sinks (SURVEY.md §2.1 S4/S5).
   *
   * The reference writes one `<fname>.txt` per summary immediately after
@@ -198,7 +200,7 @@ object Sinks {
       val s = java.nio.file.Files.list(parent)
       try s.iterator().forEachRemaining { p =>
         if (p.getFileName.toString.startsWith(prefix))
-          try deleteTree(p) catch { case _: java.io.IOException => () }
+          try Scratch.deleteTree(p) catch { case _: java.io.IOException => () }
       } finally s.close()
     }
   }
@@ -492,12 +494,7 @@ object Sinks {
         statsTable -> ((s"$scratch/stats", "__file", None))), root, spark))
     } finally {
       // reclaim whatever the publish did not consume
-      if (java.nio.file.Files.exists(scratch)) {
-        val s = java.nio.file.Files.walk(scratch)
-        try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally s.close()
-      }
+      Scratch.deleteTree(scratch)
     }
   }
 
@@ -925,23 +922,13 @@ object Sinks {
           val rel = s"$tn/${k.getFileName}"
           if (k.getFileName.toString.startsWith("v=") &&
               !referenced.contains(rel)) {
-            deleteTree(k)
+            Scratch.deleteTree(k)
             deleted += rel
           }
         } finally kids.close()
       }
     } finally tops.close()
     deleted.result()
-  }
-
-  /** Recursive delete for orphaned uncommitted snapshot dirs (deepest
-    * first; missing entries tolerated).
-    */
-  private def deleteTree(root: java.nio.file.Path): Unit = {
-    val s = java.nio.file.Files.walk(root)
-    try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally s.close()
   }
 
   /** Latest committed version per the pointer file, None before the first

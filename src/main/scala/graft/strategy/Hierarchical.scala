@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.PipelineConfig
+import graft.functions.orderedConcat
 import graft.llm.Summarizer
 
 /** Q5 Hierarchical strategy (SURVEY.md §2.3; reference:
@@ -40,9 +41,7 @@ final class Hierarchical(
     // have no children, so grouping by parent covers exactly the sections
     val sections = nodes.filter(col("depth") === d + 1)
       .groupBy(col("doc_id"), col("parent_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("ord"), col("node_id"), col("text")))),
-          s => s.getField("text")), "\n\n").as("section_text"))
+      .agg(orderedConcat("text", "\n\n", "ord", "node_id").as("section_text"))
     val newParas = parents
       .join(sections.withColumnRenamed("parent_id", "node_id"),
         Seq("doc_id", "node_id"), "left") // left: empty-body headers survive
@@ -78,9 +77,7 @@ final class Hierarchical(
     // pass (reference :296-313; polish = one more scalar transform)
     val out = nodes.filter(col("depth") === 1)
       .groupBy(col("doc_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("ord"), col("node_id"), col("text")))),
-          s => s.getField("text")), "\n\n").as("text"))
+      .agg(orderedConcat("text", "\n\n", "ord", "node_id").as("text"))
       .select(col("doc_id"),
         graft.functions.squeezeWhitespace(
           summarizeUdf(graft.functions.truncateTokens(col("text"), capTokens)))

@@ -1,11 +1,12 @@
 package graft.strategy
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.{PipelineConfig, Text}
-import graft.functions.{tokenCount => tokenCountCol}
+import graft.functions.{orderedConcat, tokenCount => tokenCountCol}
 import graft.llm.{CoverageJudge, Judge, Summarizer}
 import graft.operators.CorpusOps
 
@@ -56,25 +57,20 @@ final class Strategies(
       .select("doc_id", "chunk_idx", "text", "n_tokens")
 
   /** One collapse round over the given chunk set: greedy bin-pack to the
-    * token budget, concat each bin in chunk order, summarize each bin
+    * token budget, concat each bin in chunk order, `reduce` each bin
     * (reference: runners/run_summarization_ollama_mapreduce.py:130-144).
     * Pack+concat run fused (one shuffle per round — see
     * [[CorpusOps.binPackConcat]]).
     */
-  private def collapseOnce(chunks: DataFrame): DataFrame =
+  private def collapseOnce(reduce: UserDefinedFunction)(chunks: DataFrame): DataFrame =
     CorpusOps.binPackConcat(chunks, cfg.tokenMax)
       .select(
         col("doc_id"),
         col("bin").cast("int").as("chunk_idx"),
-        summarizeUdf(col("text")).as("text"))
+        reduce(col("text")).as("text"))
       .withColumn("n_tokens", tokenCountCol(col("text")))
       .select("doc_id", "chunk_idx", "text", "n_tokens")
 
-  /** Fixed-point collapse: while any doc's summaries exceed tokenMax,
-    * re-pack and re-summarize that doc's summaries (only over-budget docs
-    * re-enter; reference predicate `should_collapse`,
-    * runners/run_summarization_ollama_mapreduce.py:147-154, recursion_limit 10).
-    */
   /** Over-budget doc ids of a chunk set (the loop predicate's input). */
   private def overBudgetDocs(chunks: DataFrame, budget: Long): DataFrame =
     chunks.groupBy("doc_id")
@@ -82,10 +78,14 @@ final class Strategies(
       .filter(col("doc_tokens") > budget)
       .select("doc_id")
 
-  /** Shared fixed-point collapse skeleton: ONE driver action per round —
-    * counting the over-budget docs of the freshly-built round also
-    * materializes its persist (the aggregate consumes every partition), so
-    * there is no separate `next.count()` before dropping the parent.
+  /** Fixed-point collapse: while any doc's summaries exceed `budget`,
+    * re-pack and re-summarize that doc's summaries (only over-budget docs
+    * re-enter; reference predicate `should_collapse`,
+    * runners/run_summarization_ollama_mapreduce.py:147-154, recursion_limit 10).
+    * ONE Spark action per round — counting the over-budget docs of the
+    * freshly-built round also materializes its persist (the aggregate
+    * consumes every partition), so there is no separate `next.count()`
+    * before dropping the parent.
     */
   private def fixedPointCollapse(mapped0: DataFrame, budget: Long,
       collapse: DataFrame => DataFrame): DataFrame = {
@@ -110,26 +110,22 @@ final class Strategies(
     cur
   }
 
-  private def collapseLoop(mapped0: DataFrame): DataFrame =
-    fixedPointCollapse(mapped0, cfg.tokenMax, collapseOnce)
-
   /** Final reduce: concat all of a doc's (collapsed) summaries in order,
-    * one last summarize (reference: :157-164).
+    * one last `reduce` (reference: :157-164).
     */
-  private def finalReduce(chunks: DataFrame): DataFrame =
+  private def finalReduce(reduce: UserDefinedFunction)(chunks: DataFrame): DataFrame =
     chunks.groupBy(col("doc_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("chunk_idx"), col("text")))),
-          s => s.getField("text")), "\n\n").as("text"))
-      .select(col("doc_id"), summarizeUdf(col("text")).as("summary"))
+      .agg(orderedConcat("text", "\n\n", "chunk_idx").as("text"))
+      .select(col("doc_id"), reduce(col("text")).as("summary"))
 
   /** Q2 Map-Reduce: split -> parallel map-summarize -> fixed-point collapse
     * -> final reduce (reference graph:
     * runners/run_summarization_ollama_mapreduce.py:75-180).
     */
   def mapReduce(docs: DataFrame): DataFrame = {
-    val chunks = CorpusOps.chunkDocs(docs, cfg)
-    finalReduce(collapseLoop(mapSummarize(chunks)))
+    val mapped = mapSummarize(CorpusOps.chunkDocs(docs, cfg))
+    finalReduce(summarizeUdf)(
+      fixedPointCollapse(mapped, cfg.tokenMax, collapseOnce(summarizeUdf)))
   }
 
   /** Q3 Map-Reduce + Critique: every reduce becomes
@@ -162,26 +158,13 @@ final class Strategies(
     }
   }
 
-  private def collapseOnceCritique(chunks: DataFrame): DataFrame =
-    CorpusOps.binPackConcat(chunks, cfg.tokenMax)
-      .select(
-        col("doc_id"),
-        col("bin").cast("int").as("chunk_idx"),
-        reduceWithCritiqueUdf(col("text")).as("text"))
-      .withColumn("n_tokens", tokenCountCol(col("text")))
-      .select("doc_id", "chunk_idx", "text", "n_tokens")
-
   def mapReduceCritique(docs: DataFrame): DataFrame = {
     val mapped = mapSummarize(CorpusOps.chunkDocs(docs, cfg))
     // collapse loop with critique on every reduce; final gets the
     // half-budget headroom check of the reference (:315) via tokenMax/2
     val halfBudget = math.max(cfg.tokenMax / 2, 1).toLong
-    val cur = fixedPointCollapse(mapped, halfBudget, collapseOnceCritique)
-    cur.groupBy(col("doc_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("chunk_idx"), col("text")))),
-          s => s.getField("text")), "\n\n").as("text"))
-      .select(col("doc_id"), reduceWithCritiqueUdf(col("text")).as("summary"))
+    finalReduce(reduceWithCritiqueUdf)(fixedPointCollapse(mapped, halfBudget,
+      collapseOnce(reduceWithCritiqueUdf)))
   }
 
   /** Q4 Iterative refinement: summary_0 = summarize(chunk_0);

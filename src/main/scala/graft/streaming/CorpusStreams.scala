@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.strategy.Strategies
@@ -279,18 +279,15 @@ object CorpusStreams {
       maxBucketSize)
 
   /** Full map-reduce summarization per micro-batch, written to `outPath`
-    * keyed by batch id (exactly-once; see [[writeSummaryBatch]]).
-    * The collapse loop's driver actions run inside foreachBatch on the
+    * keyed by batch id (exactly-once; see [[writeSummaryBatch]]), run to
+    * termination over every file present at start.
+    * The collapse loop's actions run inside foreachBatch on the
     * batch's (bounded) new-arrivals set, so stream progress is unaffected
     * by corpus size — only by per-trigger file volume.
     */
   def mapReducePerBatch(docs: DataFrame, strategies: Strategies,
       outPath: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeSummaryBatch(strategies.mapReduce(batch), outPath, batchId)
-      }
-      .start()
+    graft.Scratch.drain(docs, checkpoint) { (batch, batchId) =>
+      writeSummaryBatch(strategies.mapReduce(batch), outPath, batchId)
+    }
 }

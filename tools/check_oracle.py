@@ -55,7 +55,17 @@ def main(sf_dir: str, out_dir: str) -> int:
         files = glob.glob(f"{d}/*.parquet")
         n = con.execute(f"SELECT count(*) FROM read_parquet({files!r})").fetchone()[0] if files else 0
         print(f"{'OK  ' if n > 0 else 'WARN'} {name} rows-only ({n} rows)")
-    print(f"\n{fails} failures / {len(oracle)} oracled queries")
+    # every name Verify ran must have output: a query that throws writes
+    # nothing, and a rows-only one would otherwise just be absent
+    # (oracled names without output already failed above)
+    listed = json.load(open(f"{out_dir}/queries.json"))
+    missing = [n for n in listed if not glob.glob(f"{out_dir}/{n}/*.parquet")]
+    for name in missing:
+        if name not in oracle:
+            print(f"FAIL {name}: no spark output (rows-only)")
+            fails += 1
+    print(f"\n{len(listed) - len(missing)} / {len(listed)} listed queries have output")
+    print(f"{fails} failures / {len(oracle)} oracled queries")
     return 1 if fails else 0
 
 if __name__ == "__main__":
