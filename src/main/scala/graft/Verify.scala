@@ -42,7 +42,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // oracle SQL for the selected names only, so a subset run's checker
+    // reports on what ran
+    val json = SparkEntry.oracleSql.filter(kv => selected.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // every selected name, so the checker can fail an entry that threw

@@ -118,44 +118,6 @@ object CorpusOps {
       }
   }
 
-  /** Fused G3+G4: greedy bin-pack AND in-order bin concat in ONE per-doc
-    * pass. Output rows and ordering are identical to
-    * `concatBins(binPack(chunks, budget))` (chunk indices are distinct per
-    * doc in the collapse loop, so both orderings coincide), but the fused
-    * form costs ONE shuffle on doc_id where the unfused pair costs two —
-    * and the collapse loop pays that saving every round. Per-group state is
-    * one doc's chunk list, the same bound [[binPack]] already has.
-    */
-  def binPackConcat(chunks: DataFrame, budget: Long,
-      sep: String = "\n\n"): DataFrame = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    chunks.select(col("doc_id").cast("long"), col("chunk_idx").cast("int"),
-        col("text"), col("n_tokens").cast("long"))
-      .as[Chunk]
-      .groupByKey(_.doc_id)
-      .flatMapGroups { (docId: Long, it: Iterator[Chunk]) =>
-        val sorted = it.toVector.sortBy(c => (c.chunk_idx, c.n_tokens))
-        val packed = BinPack.pack[Chunk](sorted, _.n_tokens, budget)
-        val bins = scala.collection.mutable.ArrayBuffer.empty[BinAcc]
-        packed.foreach { case (c, bin) =>
-          if (bins.isEmpty || bins.last.bin != bin)
-            bins += BinAcc(bin, new StringBuilder(c.text), c.n_tokens, c.chunk_idx)
-          else {
-            val acc = bins.last
-            acc.text.append(sep).append(c.text)
-            acc.tokens += c.n_tokens
-          }
-        }
-        bins.iterator.map(a =>
-          (docId, a.bin, a.text.toString, a.tokens, a.firstIdx))
-      }
-      .toDF("doc_id", "bin", "text", "n_tokens_in", "first_chunk_idx")
-  }
-
-  private final case class BinAcc(bin: Int, text: StringBuilder,
-      var tokens: Long, firstIdx: Int)
-
   /** G3 (approximate, SQL-oracle-able): window cumulative-sum bin assignment
     * bin = floor((cumsum - n_tokens) / budget). Kept alongside the exact
     * greedy version because it needs no per-group fold (pure window — stays

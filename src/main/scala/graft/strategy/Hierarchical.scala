@@ -62,9 +62,11 @@ final class Hierarchical(
 
   /** Run the full bottom-up collapse; returns (doc_id, summary). */
   def summarize(nodes0: DataFrame): DataFrame = {
-    // depth probe (reference :281-285)
-    val maxDepth = nodes0.agg(max(col("depth"))).head().getInt(0)
+    // persist first: the depth probe (reference :281-285) then fills the
+    // cache, so the tree is built once, not once for the probe and again
+    // for the first level
     var nodes = nodes0.persist(StorageLevel.MEMORY_AND_DISK)
+    val maxDepth = nodes.agg(max(col("depth"))).head().getInt(0)
     var d = maxDepth - 1
     while (d >= 1) {
       val next = collapseLevel(nodes, d).persist(StorageLevel.MEMORY_AND_DISK)

@@ -1,12 +1,11 @@
 package graft.strategy
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{PipelineConfig, Text}
-import graft.functions.{orderedConcat, tokenCount => tokenCountCol}
+import graft.core.{BinPack, PipelineConfig}
+import graft.functions.{tokenCount => tokenCountCol}
 import graft.llm.{CoverageJudge, Judge, Summarizer}
 import graft.operators.CorpusOps
 
@@ -19,20 +18,25 @@ import graft.operators.CorpusOps
   * Scale notes:
   *  - Parallelism is per-chunk for map stages and per-doc for folds; no
   *    stage ever materializes a whole corpus on one node.
-  *  - The collapse fixed-point (Q2/Q3) is a driver loop over a persisted
-  *    DataFrame (the standard Spark iterative-algorithm shape, like ALS);
-  *    each round re-persists and unpersists the previous round to keep
-  *    lineage bounded.
-  *  - Only over-budget docs re-enter the loop (semi/anti split), so late
-  *    rounds touch a shrinking fraction of the data.
+  *  - After the map stage, Q2/Q3 hold ONE row per document: its summaries
+  *    in chunk order and their token counts (a few summaries of at most
+  *    `maxSummaryTokens` each). Building it is the strategy's only
+  *    shuffle; every collapse round and the final reduce are narrow
+  *    projections over it.
+  *  - The collapse fixed-point is a driver loop over that persisted state
+  *    (the standard Spark iterative-algorithm shape, like ALS); each round
+  *    persists the new state and unpersists the previous one to keep
+  *    lineage bounded. Under-budget docs pass through a round untouched.
   */
 final class Strategies(
     summarizer: Summarizer,
     judge: Judge = CoverageJudge(),
     cfg: PipelineConfig = PipelineConfig()) extends Serializable {
 
-  private val summarizeUdf =
-    udf((t: String) => if (t == null) "" else summarizer.summarize(t, cfg.maxSummaryTokens))
+  private def summarizeText(t: String): String =
+    if (t == null) "" else summarizer.summarize(t, cfg.maxSummaryTokens)
+
+  private val summarizeUdf = udf(summarizeText _)
 
   /** Q1 Truncated: token-truncate the doc to the context budget, one
     * summarize call (reference: runners/run_summarization_ollama.py:8-37).
@@ -47,97 +51,90 @@ final class Strategies(
         graft.functions.cleanThinking(col("text")), contextBudget)).as("summary"))
   }
 
-  /** One map round: summarize every chunk in parallel (the reference's
-    * `Send` fan-out, runners/run_summarization_ollama_mapreduce.py:109-112).
+  /** Map stage, then the per-doc state: summarize every chunk in parallel
+    * (the reference's `Send` fan-out,
+    * runners/run_summarization_ollama_mapreduce.py:109-112), then gather
+    * each doc's summaries in chunk order into (doc_id, parts).
     */
-  private def mapSummarize(chunks: DataFrame): DataFrame =
-    chunks
-      .withColumn("text", summarizeUdf(col("text")))
-      .withColumn("n_tokens", tokenCountCol(col("text")))
-      .select("doc_id", "chunk_idx", "text", "n_tokens")
+  private def mapToDocs(docs: DataFrame): DataFrame =
+    withTokens(CorpusOps.chunkDocs(docs, cfg)
+      .select(col("doc_id"), col("chunk_idx"), summarizeUdf(col("text")).as("text"))
+      .groupBy("doc_id")
+      .agg(transform(array_sort(collect_list(struct("chunk_idx", "text"))),
+        s => s.getField("text")).as("parts")))
 
-  /** One collapse round over the given chunk set: greedy bin-pack to the
-    * token budget, concat each bin in chunk order, `reduce` each bin
-    * (reference: runners/run_summarization_ollama_mapreduce.py:130-144).
-    * Pack+concat run fused (one shuffle per round — see
-    * [[CorpusOps.binPackConcat]]).
+  /** Adds `toks` (each part's token count) and `tok` (their sum) over the
+    * projection that produces `parts`, never fused into it: Catalyst does
+    * not inline an expensive expression (a round's collapse call) that two
+    * columns reference, so each part is summarized once.
     */
-  private def collapseOnce(reduce: UserDefinedFunction)(chunks: DataFrame): DataFrame =
-    CorpusOps.binPackConcat(chunks, cfg.tokenMax)
-      .select(
-        col("doc_id"),
-        col("bin").cast("int").as("chunk_idx"),
-        reduce(col("text")).as("text"))
-      .withColumn("n_tokens", tokenCountCol(col("text")))
-      .select("doc_id", "chunk_idx", "text", "n_tokens")
+  private def withTokens(state: DataFrame): DataFrame =
+    state.withColumn("toks", transform(col("parts"), tokenCountCol(_)))
+      .withColumn("tok", aggregate(col("toks"), lit(0L), _ + _))
 
-  /** Over-budget doc ids of a chunk set (the loop predicate's input). */
-  private def overBudgetDocs(chunks: DataFrame, budget: Long): DataFrame =
-    chunks.groupBy("doc_id")
-      .agg(sum("n_tokens").as("doc_tokens"))
-      .filter(col("doc_tokens") > budget)
-      .select("doc_id")
+  /** One doc's collapse step: greedy-pack its parts to the token budget,
+    * join each bin in order, `reduce` each bin (reference:
+    * runners/run_summarization_ollama_mapreduce.py:130-144).
+    */
+  private def collapse(reduce: String => String)(parts: Column, toks: Column): Column =
+    udf { (ps: Seq[String], ts: Seq[Long]) =>
+      ps.zip(BinPack.greedyBins(ts, cfg.tokenMax))
+        .groupMap(_._2)(_._1).toSeq.sortBy(_._1)
+        .map { case (_, bin) => reduce(bin.mkString("\n\n")) }
+    }.apply(parts, toks)
 
   /** Fixed-point collapse: while any doc's summaries exceed `budget`,
-    * re-pack and re-summarize that doc's summaries (only over-budget docs
-    * re-enter; reference predicate `should_collapse`,
-    * runners/run_summarization_ollama_mapreduce.py:147-154, recursion_limit 10).
-    * ONE Spark action per round — counting the over-budget docs of the
-    * freshly-built round also materializes its persist (the aggregate
-    * consumes every partition), so there is no separate `next.count()`
-    * before dropping the parent.
+    * re-pack and re-summarize that doc's summaries (reference predicate
+    * `should_collapse`, runners/run_summarization_ollama_mapreduce.py:147-154,
+    * recursion_limit 10). A round is one projection over the per-doc state
+    * — `collapse` runs only where `tok > budget` — plus ONE Spark action,
+    * the count of docs still over budget, which also materializes the
+    * round's persist before the previous round is dropped. The initial
+    * state gets the same count, so a call runs rounds + 1 counts.
+    *
+    * The loop stops after `maxCollapseRounds` rounds even if some doc is
+    * still over budget. Such a doc is neither failed nor flagged: it keeps
+    * its last parts, and the final reduce summarizes their join once.
     */
-  private def fixedPointCollapse(mapped0: DataFrame, budget: Long,
-      collapse: DataFrame => DataFrame): DataFrame = {
-    var cur = mapped0.persist(StorageLevel.MEMORY_AND_DISK)
-    var overDocs = overBudgetDocs(cur, budget).persist(StorageLevel.MEMORY_AND_DISK)
-    var overCount = overDocs.count() // materializes cur too
+  private def fixedPointCollapse(state: DataFrame, budget: Long,
+      reduce: String => String): DataFrame = {
+    var cur = state.persist(StorageLevel.MEMORY_AND_DISK)
+    var overCount = cur.filter(col("tok") > budget).count()
     var round = 0
     while (round < cfg.maxCollapseRounds && overCount > 0) {
-      val over = cur.join(overDocs, Seq("doc_id"), "left_semi")
-      val under = cur.join(overDocs, Seq("doc_id"), "left_anti")
-      val next = under.unionByName(collapse(over))
+      val next = withTokens(cur.select(col("doc_id"),
+          when(col("tok") > budget, collapse(reduce)(col("parts"), col("toks")))
+            .otherwise(col("parts")).as("parts")))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val nextOverDocs = overBudgetDocs(next, budget).persist(StorageLevel.MEMORY_AND_DISK)
-      overCount = nextOverDocs.count() // materializes next before parent drop
+      overCount = next.filter(col("tok") > budget).count()
       cur.unpersist()
-      overDocs.unpersist()
       cur = next
-      overDocs = nextOverDocs
       round += 1
     }
-    overDocs.unpersist()
     cur
   }
 
-  /** Final reduce: concat all of a doc's (collapsed) summaries in order,
-    * one last `reduce` (reference: :157-164).
+  /** Map -> fixed-point collapse -> final reduce: concat a doc's
+    * (collapsed) summaries in order, one last `reduce` (reference: :157-164).
     */
-  private def finalReduce(reduce: UserDefinedFunction)(chunks: DataFrame): DataFrame =
-    chunks.groupBy(col("doc_id"))
-      .agg(orderedConcat("text", "\n\n", "chunk_idx").as("text"))
-      .select(col("doc_id"), reduce(col("text")).as("summary"))
+  private def reduceDocs(docs: DataFrame, budget: Long,
+      reduce: String => String): DataFrame =
+    fixedPointCollapse(mapToDocs(docs), budget, reduce)
+      .select(col("doc_id"), udf(reduce).apply(array_join(col("parts"), "\n\n")).as("summary"))
 
   /** Q2 Map-Reduce: split -> parallel map-summarize -> fixed-point collapse
     * -> final reduce (reference graph:
     * runners/run_summarization_ollama_mapreduce.py:75-180).
     */
-  def mapReduce(docs: DataFrame): DataFrame = {
-    val mapped = mapSummarize(CorpusOps.chunkDocs(docs, cfg))
-    finalReduce(summarizeUdf)(
-      fixedPointCollapse(mapped, cfg.tokenMax, collapseOnce(summarizeUdf)))
-  }
+  def mapReduce(docs: DataFrame): DataFrame =
+    reduceDocs(docs, cfg.tokenMax, summarizeText)
 
-  /** Q3 Map-Reduce + Critique: every reduce becomes
-    * reduce -> critique -> conditional refine, bounded by
-    * maxCritiqueIterations (reference `_reduce_with_critique`,
+  /** One reduce with critique: reduce -> critique -> conditional refine,
+    * bounded by maxCritiqueIterations (reference `_reduce_with_critique`,
     * runners/run_summarization_ollama_mapreduce_critique.py:224-265; verdict
-    * gate :253-255). The critique/refine loop is per-row local logic, so it
-    * runs inside one scalar (single projection, no extra shuffles); were the
-    * scalar remote-LLM-backed, the same gate would become a
-    * filter + union to batch only failing rows.
+    * gate :253-255).
     */
-  private val reduceWithCritiqueUdf = udf { (source: String) =>
+  private def reduceWithCritique(source: String): String =
     if (source == null) ""
     else {
       // prepared scalars: the source is analyzed (sentence-scored /
@@ -156,16 +153,17 @@ final class Strategies(
       }
       s
     }
-  }
 
-  def mapReduceCritique(docs: DataFrame): DataFrame = {
-    val mapped = mapSummarize(CorpusOps.chunkDocs(docs, cfg))
-    // collapse loop with critique on every reduce; final gets the
-    // half-budget headroom check of the reference (:315) via tokenMax/2
-    val halfBudget = math.max(cfg.tokenMax / 2, 1).toLong
-    finalReduce(reduceWithCritiqueUdf)(fixedPointCollapse(mapped, halfBudget,
-      collapseOnce(reduceWithCritiqueUdf)))
-  }
+  /** Q3 Map-Reduce + Critique: Q2 with every reduce replaced by
+    * [[reduceWithCritique]]. The critique/refine loop is per-row local
+    * logic, so it runs inside one scalar (single projection, no extra
+    * shuffles); were the scalar remote-LLM-backed, the same gate would
+    * become a filter + union to batch only failing rows. The collapse
+    * predicate gets the reference's half-budget headroom check (:315) via
+    * tokenMax/2.
+    */
+  def mapReduceCritique(docs: DataFrame): DataFrame =
+    reduceDocs(docs, math.max(cfg.tokenMax / 2, 1).toLong, reduceWithCritique)
 
   /** Q4 Iterative refinement: summary_0 = summarize(chunk_0);
     * summary_i = summarize(summary_{i-1} ++ chunk_i) — an inherently

@@ -41,18 +41,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got(2L) == "x\n\ny")
   }
 
-  test("G3+G4 fused binPackConcat equals concatBins(binPack) on every column") {
-    for (budget <- Seq(4L, 6L, 100L)) {
-      val unfused = CorpusOps.concatBins(CorpusOps.binPack(chunksDf, budget).toDF)
-        .select("doc_id", "bin", "text", "n_tokens_in", "first_chunk_idx")
-        .as[(Long, Int, String, Long, Int)].collect().toSet
-      val fused = CorpusOps.binPackConcat(chunksDf, budget)
-        .select("doc_id", "bin", "text", "n_tokens_in", "first_chunk_idx")
-        .as[(Long, Int, String, Long, Int)].collect().toSet
-      assert(fused == unfused, s"budget=$budget")
-    }
-  }
-
   test("C1/C2 chunkDocs: contiguous chunk_idx from 0, token counts attached") {
     val docs = Seq((1L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10")).toDF("doc_id", "text")
     val cfg = PipelineConfig(chunkSize = 4, chunkOverlap = 0, byTokens = true)

@@ -1,13 +1,17 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{PipelineConfig, Text}
+import graft.core.{BinPack, PipelineConfig, Text}
 import graft.eval.Metrics
-import graft.llm.{ExtractiveSummarizer, IdentitySummarizer}
-import graft.operators.TreeOps
+import graft.llm.{ExtractiveSummarizer, IdentitySummarizer, Summarizer}
+import graft.operators.{CorpusOps, TreeOps}
 import graft.strategy.{Hierarchical, Strategies}
 
 class StrategiesSpec extends AnyFunSuite {
@@ -84,6 +88,90 @@ class StrategiesSpec extends AnyFunSuite {
     val out = strategies().mapReduce(long).collect()
     assert(out.length == 1)
     assert(out.head.getAs[String]("summary").nonEmpty)
+  }
+
+  // 6-token chunks, 4-token summaries, budget 10: a doc of n tokens has
+  // n/6 chunks; every word is distinct, so every chunk text is distinct
+  private val collapseCfg = PipelineConfig(
+    chunkSize = 6, chunkOverlap = 0, tokenMax = 10,
+    maxSummaryTokens = 4, maxCollapseRounds = 10,
+    maxCritiqueIterations = 2, byTokens = true, chunker = "token_window")
+
+  private def wordDocs(lengths: (Long, Int)*): DataFrame =
+    lengths.map { case (id, n) => (id, (0 until n).map(i => s"d${id}w$i").mkString(" ")) }
+      .toDF("doc_id", "text")
+
+  private def chunkTexts(docs: DataFrame): Map[Long, Seq[String]] =
+    CorpusOps.chunkDocs(docs, collapseCfg)
+      .select("doc_id", "chunk_idx", "text").as[(Long, Int, String)].collect().toSeq
+      .groupMap(_._1)(c => (c._2, c._3)).map { case (d, cs) => d -> cs.sortBy(_._1).map(_._2) }
+
+  /** Plain-Scala map -> collapse -> final reduce of one doc's chunks:
+    * (summary, bins reduced per round, parts the final reduce joined).
+    */
+  private def replayMapReduce(chunks: Seq[String], s: Summarizer,
+      c: PipelineConfig): (String, Seq[Int], Seq[String]) = {
+    def toks(ps: Seq[String]) = ps.map(Text.tokenCount(_).toLong)
+    var parts = chunks.map(s.summarize(_, c.maxSummaryTokens))
+    var bins = Vector.empty[Int]
+    while (bins.size < c.maxCollapseRounds && toks(parts).sum > c.tokenMax) {
+      parts = parts.zip(BinPack.greedyBins(toks(parts), c.tokenMax))
+        .groupMap(_._2)(_._1).toSeq.sortBy(_._1)
+        .map { case (_, bin) => s.summarize(bin.mkString("\n\n"), c.maxSummaryTokens) }
+      bins :+= parts.size
+    }
+    (s.summarize(parts.mkString("\n\n"), c.maxSummaryTokens), bins, parts)
+  }
+
+  /** Runs one strategy with a fresh counting scalar: (doc -> summary, calls). */
+  private def counted(inner: Summarizer, c: PipelineConfig)(
+      f: Strategies => DataFrame): (Map[Long, String], Seq[(String, Int)]) = {
+    val s = new CountingSummarizer(inner)
+    val out = f(new Strategies(s, cfg = c)).as[(Long, String)].collect()
+    assert(out.map(_._1).distinct.length == out.length, "one summary per doc")
+    (out.toMap, s.calls)
+  }
+
+  test("call-count contract: no (input, budget) pair is summarized twice; " +
+      "mapreduce calls = chunks + collapse bins + docs") {
+    // 36 tokens collapse twice, 60 three times (the last round with doc 1
+    // already under budget), 12 and 4 never
+    val docs = wordDocs(1L -> 36, 2L -> 60, 3L -> 12, 4L -> 4)
+    val chunks = chunkTexts(docs)
+    val replay = chunks.map { case (d, cs) => d -> replayMapReduce(cs, TaggingSummarizer, collapseCfg) }
+    assert(replay.map { case (d, r) => d -> r._2.size } == Map(1L -> 2, 2L -> 3, 3L -> 0, 4L -> 0))
+    val strategies = Seq[(String, Strategies => DataFrame)](
+      "truncated" -> (_.truncated(docs)), "mapreduce" -> (_.mapReduce(docs)),
+      "critique" -> (_.mapReduceCritique(docs)), "iterative" -> (_.iterative(docs)))
+    for ((name, f) <- strategies) {
+      val (out, calls) = counted(TaggingSummarizer, collapseCfg)(f)
+      assert(out.keySet == Set(1L, 2L, 3L, 4L), name)
+      val twice = calls.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
+      assert(twice.isEmpty, s"$name summarized twice: $twice")
+    }
+    val (out, calls) = counted(TaggingSummarizer, collapseCfg)(_.mapReduce(docs))
+    assert(out == replay.map { case (d, r) => d -> r._1 })
+    assert(calls.size == chunks.values.map(_.size).sum + replay.values.map(_._2.sum).sum + chunks.size)
+  }
+
+  test("collapse cap: maxCollapseRounds = 1 stops after one round, then one final reduce") {
+    val docs = wordDocs(1L -> 36, 3L -> 12)
+    val chunks = chunkTexts(docs)
+    def check(c: PipelineConfig): Seq[(String, Seq[Int], Seq[String])] = {
+      val expect = new CountingSummarizer(IdentitySummarizer)
+      val replay = chunks.toSeq.sortBy(_._1).map { case (_, cs) => replayMapReduce(cs, expect, c) }
+      val (out, calls) = counted(IdentitySummarizer, c)(_.mapReduce(docs))
+      assert(out == chunks.keys.toSeq.sorted.zip(replay.map(_._1)).toMap)
+      // the same inputs were summarized, final reduce included
+      assert(calls.sorted == expect.calls.sorted)
+      replay
+    }
+    // doc 1 needs two rounds at the default cap
+    assert(check(collapseCfg).head._2 == Seq(3, 2))
+    val capped = check(collapseCfg.copy(maxCollapseRounds = 1)).head
+    assert(capped._2 == Seq(3))
+    // still over budget after the cap: the final reduce joins those parts
+    assert(capped._3.map(Text.tokenCount).sum > collapseCfg.tokenMax)
   }
 
   test("golden pin: strategy outputs are byte-stable across versions") {
@@ -204,4 +292,35 @@ class StrategiesSpec extends AnyFunSuite {
     assert(got("rouge1") == "model_b")
     assert(got("rouge2") == "model_b") // tie -> lexicographically larger model
   }
+}
+
+/** Records every summarize call in a JVM-global log keyed per instance; a
+  * local[n] session runs its tasks in this JVM, and a task's deserialized
+  * copy keeps the key. `prepared` is not forwarded, so critique retries
+  * are recorded too.
+  */
+final class CountingSummarizer(inner: Summarizer) extends Summarizer {
+  private val key = java.util.UUID.randomUUID().toString
+
+  override def summarize(text: String, maxTokens: Int): String = {
+    CountingSummarizer.log.computeIfAbsent(key, _ => new ConcurrentLinkedQueue[(String, Int)]())
+      .add((text, maxTokens))
+    inner.summarize(text, maxTokens)
+  }
+
+  def calls: Seq[(String, Int)] =
+    Option(CountingSummarizer.log.get(key)).map(_.asScala.toSeq).getOrElse(Nil)
+}
+
+object CountingSummarizer {
+  private val log = new ConcurrentHashMap[String, ConcurrentLinkedQueue[(String, Int)]]()
+}
+
+/** Keeps maxTokens - 1 leading tokens plus a tag hashed from the whole
+  * input, so a summary never equals its input and a part re-summarized
+  * in a later round is a new (input, budget) pair.
+  */
+object TaggingSummarizer extends Summarizer {
+  override def summarize(text: String, maxTokens: Int): String =
+    (Text.wsTokens(text).take(maxTokens - 1) :+ f"h${text.hashCode}%08x").mkString(" ")
 }
