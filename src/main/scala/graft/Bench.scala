@@ -82,17 +82,7 @@ object Bench {
     // session state measurably degrades the tail (see warm-up note).
     // Dev loop: SPARK_GRAFT_ONLY=name1,name2 times just those queries
     // (the driver never sets it — full registry remains the default).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // fail fast on typos — a misspelled name would otherwise silently
-    // select nothing and "succeed"
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown SPARK_GRAFT_ONLY names: ${unknown.toSeq.sorted.mkString(",")}")
-    }
-    val selected = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (n, _) => names(n) })
+    val selected = SparkEntry.selectedQueries()
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       def once(): Double = {
         val t0 = System.nanoTime()

@@ -1063,17 +1063,17 @@ $recallTail"""
 
   // ------------------------------------- cls1 (trained linear classifier)
 
-  /** LinearModel.trainCgRidge replayed whole: the planted quality corpus,
-    * hashed binary presence features (md5 60-bit buckets), b = Xᵀy/n, and
-    * `iters` UNROLLED conjugate-gradient steps on (XᵀX/n + λI)w = b.
-    * Every distributed sum is the decimal(38,10) fixed-point grid
-    * (order-free, exact — the exactSum contract), the CG scalars replay
-    * the driver's dotDec through the same grid, and α/β guard their zero
-    * denominators with the trainer's exact CASE. No transcendentals
-    * anywhere, so the TRAINING itself — not just the served scores — is
-    * hash-checkable. Emits `w$iters` (j, v): 64 bucket weights + bias at
-    * j=64, plus `fx` (features over ALL docs) and `pl` for the downstream
-    * scoring/eval queries.
+  /** LinearModel.trainCgRidgeArrays replayed whole: the planted quality
+    * corpus, hashed binary presence features (md5 60-bit buckets),
+    * b = Xᵀy/n, and `iters` UNROLLED conjugate-gradient steps on
+    * (XᵀX/n + λI)w = b. Every distributed sum is the decimal(38,10)
+    * fixed-point grid (order-free, exact — the exactSum contract), the CG
+    * scalars replay the driver's dotDec through the same grid, and α/β
+    * guard their zero denominators with the trainer's exact CASE. No
+    * transcendentals anywhere, so the TRAINING itself — not just the
+    * served scores — is hash-checkable. Emits `w$iters` (j, v): 64 bucket
+    * weights + bias at j=64, plus `fx` (features over ALL docs) and `pl`
+    * for the downstream scoring/eval queries.
     */
   private def clsCtes(k: Int = 64, iters: Int = 8,
       lambda: Double = 0.01): String = {

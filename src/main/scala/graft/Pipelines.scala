@@ -29,7 +29,7 @@ object Pipelines {
   val TestCfg: PipelineConfig = PipelineConfig(
     chunkSize = 16, chunkOverlap = 2, tokenMax = 24,
     maxSummaryTokens = 8, maxCollapseRounds = 10,
-    maxCritiqueIterations = 2, byTokens = true, chunker = "token_window")
+    maxCritiqueIterations = 2, chunker = "token_window")
 
   def strategies(cfg: PipelineConfig = TestCfg): Strategies =
     new Strategies(ExtractiveSummarizer, cfg = cfg)

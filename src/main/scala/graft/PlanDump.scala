@@ -13,9 +13,7 @@ object PlanDump {
     require(args.length == 4,
       "usage: PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>")
     val Array(sfDir, outDir, suffix, namesCsv) = args
-    val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val names = SparkEntry.namedQueries(namesCsv, "unknown queries")
     val spark = graft.app.Main.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

@@ -14,9 +14,7 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: ProfileQ <sfDir> <q1,q2,...>")
     val Array(sfDir, namesCsv) = args
-    val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val names = SparkEntry.namedQueries(namesCsv, "unknown queries")
     val spark = graft.app.Main.session()
     val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
     val runMs = new java.util.concurrent.atomic.AtomicLong(0L)

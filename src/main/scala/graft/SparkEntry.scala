@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.{charCount, cleanThinking, exactAvg, exactStddevPop, exactSum,
   r4, squeezeWhitespace, tokenCount, truncateTokens}
 import graft.Scratch.{drain, withScratch}
-import graft.operators.{CorpusOps, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{CorpusOps, Dedup, FileSkipping, Multimodal, Similarity,
+  Sinks, TableQuality, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -1997,6 +1998,18 @@ object SparkEntry {
       .orderBy(col("shard"))
   }
 
+  /** Whole-row content keys of the storage gates, fingerprinted through
+    * [[graft.operators.Sinks.contentFingerprint]] and replayed verbatim
+    * by their oracle SQL: lineitem's four key columns (its
+    * (l_orderkey, l_linenumber) pairs repeat in the test data) and the
+    * (doc_id, lang, n_chars) documents slice the CDC gates mutate.
+    */
+  private val LineitemRowKey = "concat_ws(':', cast(l_orderkey as string), " +
+    "cast(l_linenumber as string), cast(l_partkey as string), " +
+    "cast(l_suppkey as string))"
+  private val DocRowKey =
+    "concat_ws(':', cast(doc_id as string), lang, cast(n_chars as string))"
+
   /** S13: z-order layout decision as oracle-checkable bucket stats —
     * lineitem z-keyed on (l_orderkey, l_partkey) over the measured key
     * ranges (one metadata-scale min/max agg at construction), bucketed by
@@ -2008,10 +2021,10 @@ object SparkEntry {
     */
   private def s13ZorderStats(spark: SparkSession, dir: String): DataFrame = {
     val li = tbl(spark, dir, "lineitem")
-    val r = li.agg(min(col("l_orderkey")), max(col("l_orderkey")),
-      min(col("l_partkey")), max(col("l_partkey"))).head()
+    val (aLo, aHi, bLo, bHi) = FileSkipping.keyRange(li, "l_orderkey",
+      "l_partkey")
     graft.operators.ZOrder.zBucketStats(li, "l_orderkey", "l_partkey",
-        r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+        aLo, aHi, bLo, bHi)
       .orderBy(col("bucket"))
   }
 
@@ -2039,10 +2052,10 @@ object SparkEntry {
     */
   private def s13cHilbertStats(spark: SparkSession, dir: String): DataFrame = {
     val li = tbl(spark, dir, "lineitem")
-    val r = li.agg(min(col("l_orderkey")), max(col("l_orderkey")),
-      min(col("l_partkey")), max(col("l_partkey"))).head()
+    val (aLo, aHi, bLo, bHi) = FileSkipping.keyRange(li, "l_orderkey",
+      "l_partkey")
     graft.operators.ZOrder.hilbertBucketStats(li, "l_orderkey", "l_partkey",
-        r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+        aLo, aHi, bLo, bHi)
       .orderBy(col("bucket"))
   }
 
@@ -2055,7 +2068,6 @@ object SparkEntry {
     * that green rules stay green. FULL oracle.
     */
   private def dq1Expectations(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TableQuality
     val li = tbl(spark, dir, "lineitem")
     val rowRules = TableQuality.expectations(li, Seq(
       TableQuality.Rule("li_quantity_range",
@@ -2079,7 +2091,6 @@ object SparkEntry {
     * overlaps), exercising multi-rule tags. FULL oracle.
     */
   private def dq2Quarantine(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TableQuality
     val li = tbl(spark, dir, "lineitem")
     val rules = Seq(
       TableQuality.Rule("q25", col("l_quantity") <= 25.0),
@@ -2108,7 +2119,6 @@ object SparkEntry {
     * pass does. FULL oracle.
     */
   private def streamDq(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TableQuality
     val rules = Seq(
       TableQuality.Rule("len200", col("n_chars") >= 200L),
       TableQuality.Rule("west", col("lang").isin("en", "de", "es", "fr")))
@@ -2146,7 +2156,6 @@ object SparkEntry {
     * ever rescanning: per-batch sketch cost, metadata-scale refresh.
     */
   private def streamStats(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TableQuality
     val cols = Seq("n_chars", "lang")
     val schema = spark.read.parquet(s"$dir/documents.parquet").schema
     val (base, glob) = graft.streaming.CorpusStreams
@@ -2214,7 +2223,6 @@ object SparkEntry {
   private def streamSnapshotIngest(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.{Sinks, TableQuality}
     val statCols = Seq("doc_id", "n_chars")
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"),
@@ -2239,14 +2247,7 @@ object SparkEntry {
       val cur = Sinks.currentVersion(snapRoot).getOrElse(
         sys.error("stream committed no snapshot version"))
       val snap = Sinks.readSnapshot(spark, snapRoot, Some(cur))
-      def fp(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-            "cast(doc_id as string), lang, cast(n_chars as string))), " +
-            "1, 15), 16, 10) as bigint)), 0)").as("x")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (n, x) = fp(snap("data"))
+      val (n, x) = Sinks.contentFingerprint(snap("data"), DocRowKey)
       // exactly-once: replay the LAST committed batch id — no new
       // version, pointer untouched
       val lastId = snap("meta").agg(max(col("batch_id"))).head().getLong(0)
@@ -2256,23 +2257,12 @@ object SparkEntry {
         Sinks.currentVersion(snapRoot).contains(cur)
       // pinned first version: validates, strictly fewer rows
       val v0 = cur - (versions - 1)
-      val (n0, _) = fp(Sinks.readSnapshot(spark, snapRoot, Some(v0))("data"))
+      val (n0, _) = Sinks.contentFingerprint(
+        Sinks.readSnapshot(spark, snapRoot, Some(v0))("data"), DocRowKey)
       val pinnedOk = n0 > 0 && n0 < n
       // incrementally-built stats ≡ from-scratch ANALYZE of the final data
-      val merged = TableQuality.mergeSketches(snap("file_stats"), statCols)
-        .collect().map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getString(4), r.getString(5)))).toMap
-      val recomputed = TableQuality.tableStats(snap("data"), statCols)
-        .collect().map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getString(4), r.getString(5)))).toMap
-      val statsOk = statCols.forall { c =>
-        val (mn, mnn, mndv, mmin, mmax) = merged(c)
-        val (rn, rnn, rndv, rmin, rmax) = recomputed(c)
-        mn == rn && mnn == rnn && mmin == rmin && mmax == rmax &&
-          math.abs(mndv - rndv).toDouble <= 0.1 * rndv
-      }
+      val statsOk = TableQuality.statsCurrent(snap("file_stats"), snap("data"),
+        statCols)
       Seq((n, x,
         if (versions == 4) 1 else 0,
         if (replayNoop) 1 else 0,
@@ -2300,7 +2290,6 @@ object SparkEntry {
     */
   private def s16bTableStatsApprox(spark: SparkSession, dir: String)
       : DataFrame = {
-    import graft.operators.TableQuality
     val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag",
       "l_shipdate")
     val li = tbl(spark, dir, "lineitem")
@@ -2336,7 +2325,6 @@ object SparkEntry {
     */
   private def s16cStatsIncremental(spark: SparkSession, dir: String)
       : DataFrame = {
-    import graft.operators.TableQuality
     val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag",
       "l_shipdate")
     val li = tbl(spark, dir, "lineitem")
@@ -2402,44 +2390,29 @@ object SparkEntry {
       : DataFrame = {
     import spark.implicits._
     val li = tbl(spark, dir, "lineitem")
-    val r = li.agg(min(col("l_orderkey")), max(col("l_orderkey")),
-      min(col("l_partkey")), max(col("l_partkey"))).head()
-    val (aLo, aHi, bLo, bHi) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    val (aLo, aHi, bLo, bHi) = FileSkipping.keyRange(li, "l_orderkey",
+      "l_partkey")
     val (a1, a2) = (aLo + (aHi - aLo) / 4, aLo + (aHi - aLo) / 2)
     val (b1, b2) = (bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
     withScratch("graft_s13d_") { root =>
       graft.operators.ZOrder.writeHilbert(li, "l_orderkey", "l_partkey",
         aLo, aHi, bLo, bHi, s"$root/clustered", numFiles = 16)
       li.repartition(16).write.mode("overwrite").parquet(s"$root/plain")
+      val clustered = spark.read.parquet(s"$root/clustered")
+      val plain = spark.read.parquet(s"$root/plain")
       // files a min/max-pruning scan must read = files whose footer box
       // intersects the predicate box (recomputed from the files)
-      def filesRead(path: String): Long =
-        spark.read.parquet(path)
-          .groupBy(input_file_name().as("f"))
-          .agg(min(col("l_orderkey")).as("mina"),
-            max(col("l_orderkey")).as("maxa"),
-            min(col("l_partkey")).as("minb"),
-            max(col("l_partkey")).as("maxb"))
-          .filter(col("maxa") >= a1 && col("mina") <= a2 &&
-            col("maxb") >= b1 && col("minb") <= b2)
-          .count()
-      def scanFp(path: String): (Long, Long) = {
-        val m = spark.read.parquet(path)
-          .filter(col("l_orderkey").between(a1, a2) &&
-            col("l_partkey").between(b1, b2))
-          .agg(count(lit(1)).as("n"),
-            expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-              "cast(l_orderkey as string), cast(l_linenumber as string), " +
-              "cast(l_partkey as string), cast(l_suppkey as string))), " +
-              "1, 15), 16, 10) as bigint)), 0)").as("x"))
-          .head()
-        (m.getLong(0), m.getLong(1))
-      }
-      val fClustered = filesRead(s"$root/clustered")
-      val fPlain = filesRead(s"$root/plain")
-      val (nC, xC) = scanFp(s"$root/clustered")
-      val (nP, xP) = scanFp(s"$root/plain")
+      val box = (a1, a2, b1, b2)
+      val fClustered = FileSkipping.footerBoxFiles(clustered, "l_orderkey",
+        "l_partkey", box)
+      val fPlain = FileSkipping.footerBoxFiles(plain, "l_orderkey",
+        "l_partkey", box)
+      val pred = col("l_orderkey").between(a1, a2) &&
+        col("l_partkey").between(b1, b2)
+      val (nC, xC) = Sinks.contentFingerprint(clustered.filter(pred),
+        LineitemRowKey)
+      val (nP, xP) = Sinks.contentFingerprint(plain.filter(pred),
+        LineitemRowKey)
       Seq((nC, xC,
         if (nC == nP && xC == xP) 1 else 0,
         if (fClustered < fPlain) 1 else 0,
@@ -2466,12 +2439,9 @@ object SparkEntry {
   private def s13eStatsPrunedScan(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.FileSkipping
     val li = tbl(spark, dir, "lineitem")
-    val r = li.agg(min(col("l_orderkey")), max(col("l_orderkey")),
-      min(col("l_partkey")), max(col("l_partkey"))).head()
-    val (aLo, aHi, bLo, bHi) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    val (aLo, aHi, bLo, bHi) = FileSkipping.keyRange(li, "l_orderkey",
+      "l_partkey")
     val (a1, a2) = (aLo + (aHi - aLo) / 4, aLo + (aHi - aLo) / 2)
     val (b1, b2) = (bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
     withScratch("graft_s13e_") { root =>
@@ -2484,33 +2454,18 @@ object SparkEntry {
         col("l_partkey").between(b1, b2)
       val pruned = FileSkipping.prunedParquet(spark, stats,
         Seq(("l_orderkey", a1, a2), ("l_partkey", b1, b2)), table.schema)
-      def fp(df: DataFrame): (Long, Long) = {
-        val m = df.filter(pred)
-          .agg(count(lit(1)).as("n"),
-            expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-              "cast(l_orderkey as string), cast(l_linenumber as string), " +
-              "cast(l_partkey as string), cast(l_suppkey as string))), " +
-              "1, 15), 16, 10) as bigint)), 0)").as("x"))
-          .head()
-        (m.getLong(0), m.getLong(1))
-      }
-      val (nP, xP) = fp(pruned)
-      val (nF, xF) = fp(table)
+      val (nP, xP) = Sinks.contentFingerprint(pruned.filter(pred),
+        LineitemRowKey)
+      val (nF, xF) = Sinks.contentFingerprint(table.filter(pred),
+        LineitemRowKey)
       val opened = pruned.inputFiles.length.toLong
       val total = table.inputFiles.length.toLong
       // the footer-planner's decision, recomputed INDEPENDENTLY of the
       // stats table — a fresh per-file min/max scan (the s13d rule), so
       // a stats-maintenance bug (stale/truncated rows) fails this gate
       // rather than silently agreeing with itself
-      val footerChosen = table
-        .groupBy(input_file_name().as("f"))
-        .agg(min(col("l_orderkey")).as("mina"),
-          max(col("l_orderkey")).as("maxa"),
-          min(col("l_partkey")).as("minb"),
-          max(col("l_partkey")).as("maxb"))
-        .filter(col("maxa") >= a1 && col("mina") <= a2 &&
-          col("maxb") >= b1 && col("minb") <= b2)
-        .count()
+      val footerChosen = FileSkipping.footerBoxFiles(table, "l_orderkey",
+        "l_partkey", (a1, a2, b1, b2))
       Seq((nP, xP,
         if (nP == nF && xP == xF) 1 else 0,
         if (opened < total) 1 else 0,
@@ -2539,16 +2494,12 @@ object SparkEntry {
   private def s13fOptimizeRecluster(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.FileSkipping
     def pathOf(u: String): String = new java.net.URI(u).getPath
     val li = tbl(spark, dir, "lineitem")
-    val r = li.agg(min(col("l_orderkey")), max(col("l_orderkey")),
-      min(col("l_partkey")), max(col("l_partkey"))).head()
-    val (aLo, aHi, bLo, bHi) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    val range = FileSkipping.keyRange(li, "l_orderkey", "l_partkey")
+    val (aLo, aHi, bLo, bHi) = range
     val (a1, a2) = (aLo + (aHi - aLo) / 4, aLo + (aHi - aLo) / 2)
     val (b1, b2) = (bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
-    val planeArea = (aHi - aLo + 1).toDouble * (bHi - bLo + 1).toDouble
     withScratch("graft_s13f_") { root =>
       val base = li.filter(pmod(col("l_orderkey"), lit(4L)) =!= 0L)
       val appendRows = li.filter(pmod(col("l_orderkey"), lit(4L)) === 0L)
@@ -2566,38 +2517,18 @@ object SparkEntry {
       // tile whose segment box blows up ~4× at numFiles ≤ 16)
       val stats = graft.operators.Materialize(
         FileSkipping.fileStats(degraded, Seq("l_orderkey", "l_partkey")))
-      val detected = FileSkipping.detectUnclustered(stats,
-          "l_orderkey", "l_partkey", planeArea)
-        .select(col("__file").cast("string"))
-        .collect().map(u => pathOf(u.getString(0))).toSet
       // OPTIMIZE: re-cluster ONLY the detected files; base bytes untouched
-      graft.operators.ZOrder.writeHilbert(
-        spark.read.schema(degraded.schema)
-          .parquet(detected.toSeq.sorted: _*),
-        "l_orderkey", "l_partkey", aLo, aHi, bLo, bHi,
-        s"$root/opt", numFiles = 4)
+      val detected = FileSkipping.reclusterDegraded(spark, stats,
+        degraded.inputFiles.map(pathOf).toSeq, degraded.schema,
+        "l_orderkey", "l_partkey", range, s"$root/opt", numFiles = 4).toSet
       val optimized = spark.read.schema(degraded.schema)
         .parquet(((baseFiles -- detected).toSeq.sorted :+ s"$root/opt"): _*)
-      def footerHits(df: DataFrame): Long = df
-        .groupBy(input_file_name().as("f"))
-        .agg(min(col("l_orderkey")).as("mina"),
-          max(col("l_orderkey")).as("maxa"),
-          min(col("l_partkey")).as("minb"),
-          max(col("l_partkey")).as("maxb"))
-        .filter(col("maxa") >= a1 && col("mina") <= a2 &&
-          col("maxb") >= b1 && col("minb") <= b2)
-        .count()
-      def fp(df: DataFrame): (Long, Long) = {
-        val m = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-            "cast(l_orderkey as string), cast(l_linenumber as string), " +
-            "cast(l_partkey as string), cast(l_suppkey as string))), " +
-            "1, 15), 16, 10) as bigint)), 0)").as("x")).head()
-        (m.getLong(0), m.getLong(1))
-      }
-      val (nO, xO) = fp(optimized)
-      val hitsDegraded = footerHits(degraded)
-      val hitsOptimized = footerHits(optimized)
+      val (nO, xO) = Sinks.contentFingerprint(optimized, LineitemRowKey)
+      val box = (a1, a2, b1, b2)
+      val hitsDegraded = FileSkipping.footerBoxFiles(degraded, "l_orderkey",
+        "l_partkey", box)
+      val hitsOptimized = FileSkipping.footerBoxFiles(optimized, "l_orderkey",
+        "l_partkey", box)
       Seq((nO, xO,
         if (detected == appendFiles) 1 else 0,
         if (hitsOptimized < hitsDegraded) 1 else 0))
@@ -2626,12 +2557,9 @@ object SparkEntry {
   private def s18SnapshotPrunedRead(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.{FileSkipping, Sinks}
     val li = tbl(spark, dir, "lineitem")
-    val r = li.agg(min(col("l_orderkey")), max(col("l_orderkey")),
-      min(col("l_partkey")), max(col("l_partkey"))).head()
-    val (aLo, aHi, bLo, bHi) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    val (aLo, aHi, bLo, bHi) = FileSkipping.keyRange(li, "l_orderkey",
+      "l_partkey")
     val (a1, a2) = (aLo + (aHi - aLo) / 4, aLo + (aHi - aLo) / 2)
     val (b1, b2) = (bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
     withScratch("graft_s18_") { root =>
@@ -2660,29 +2588,14 @@ object SparkEntry {
         snap("data").schema)
       val pred = col("l_orderkey").between(a1, a2) &&
         col("l_partkey").between(b1, b2)
-      def fp(df: DataFrame): (Long, Long) = {
-        val m = df.filter(pred)
-          .agg(count(lit(1)).as("n"),
-            expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-              "cast(l_orderkey as string), cast(l_linenumber as string), " +
-              "cast(l_partkey as string), cast(l_suppkey as string))), " +
-              "1, 15), 16, 10) as bigint)), 0)").as("x"))
-          .head()
-        (m.getLong(0), m.getLong(1))
-      }
-      val (nP, xP) = fp(pruned)
-      val (nF, xF) = fp(snap("data"))
+      val (nP, xP) = Sinks.contentFingerprint(pruned.filter(pred),
+        LineitemRowKey)
+      val (nF, xF) = Sinks.contentFingerprint(snap("data").filter(pred),
+        LineitemRowKey)
       val opened = pruned.inputFiles.length.toLong
       val total = snap("data").inputFiles.length.toLong
-      val footerChosen = snap("data")
-        .groupBy(input_file_name().as("f"))
-        .agg(min(col("l_orderkey")).as("mina"),
-          max(col("l_orderkey")).as("maxa"),
-          min(col("l_partkey")).as("minb"),
-          max(col("l_partkey")).as("maxb"))
-        .filter(col("maxa") >= a1 && col("mina") <= a2 &&
-          col("maxb") >= b1 && col("minb") <= b2)
-        .count()
+      val footerChosen = FileSkipping.footerBoxFiles(snap("data"),
+        "l_orderkey", "l_partkey", (a1, a2, b1, b2))
       Seq((nP, xP, v,
         if (nP == nF && xP == xF) 1 else 0,
         if (opened < total) 1 else 0,
@@ -2710,7 +2623,6 @@ object SparkEntry {
   private def s13hBloomPruning(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.FileSkipping
     import graft.operators.FileSkipping.{BloomEq, StringIn}
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"))
@@ -2732,19 +2644,12 @@ object SparkEntry {
       val pruned = FileSkipping.prunedParquetTyped(spark, stats,
         Seq(BloomEq("tag", Seq(target))), table.schema)
       val opened = pruned.inputFiles.length.toLong
-      val hit = pruned.filter(col("tag") === target)
-        .agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(" +
-            graft.operators.Sinks.keyFingerprintSql("doc_id") + "), 0)")
-            .as("x")).head()
-      val full = table.filter(col("tag") === target)
-        .agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(" +
-            graft.operators.Sinks.keyFingerprintSql("doc_id") + "), 0)")
-            .as("x")).head()
-      Seq((hit.getLong(0), hit.getLong(1),
-        if (hit.getLong(0) == full.getLong(0) &&
-          hit.getLong(1) == full.getLong(1)) 1 else 0,
+      val hit = Sinks.contentFingerprint(pruned.filter(col("tag") === target),
+        "doc_id")
+      val full = Sinks.contentFingerprint(table.filter(col("tag") === target),
+        "doc_id")
+      Seq((hit._1, hit._2,
+        if (hit == full) 1 else 0,
         if (opened < total) 1 else 0,
         if (opened * 4 <= total) 1 else 0,
         if (minmaxChosen == total) 1 else 0))
@@ -2769,12 +2674,14 @@ object SparkEntry {
     *       files land next to them, and the stats table is v0's rows
     *       UNIONED with sketch rows computed over ONLY the new files
     *       (the s16c discipline: new bytes sketch once, old rows carry).
-    *   v2  OPTIMIZE as a commit: degradation is detected from v1's
-    *       COMMITTED stats ([[graft.operators.FileSkipping.detectUnclustered]],
-    *       file-count-adaptive cutoff), only the detected files are
-    *       re-clustered, untouched files hard-link forward, and the
-    *       stats rows for rewritten files are REPLACED (fresh sketches
-    *       over the new files only) while untouched rows carry.
+    *   v2  OPTIMIZE as a commit
+    *       ([[graft.operators.Sinks.optimizeSnapshotVersion]], the
+    *       `graft snapshot --optimize` path): degradation is detected
+    *       from v1's COMMITTED stats (file-count-adaptive cutoff), only
+    *       the detected files are re-clustered, untouched files
+    *       hard-link forward, and the stats rows for rewritten files are
+    *       REPLACED (fresh sketches over the new files only) while
+    *       untouched rows carry.
     *
     * Gates: (a) v2 is row-identical to v1 — count + 4-column key
     * fingerprint, and v1 is the whole logical lineitem, so the DuckDB
@@ -2792,15 +2699,11 @@ object SparkEntry {
   private def s19OptimizeVersioned(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.{FileSkipping, Sinks, TableQuality}
     val li = tbl(spark, dir, "lineitem")
-    val r = li.agg(min(col("l_orderkey")), max(col("l_orderkey")),
-      min(col("l_partkey")), max(col("l_partkey"))).head()
-    val (aLo, aHi, bLo, bHi) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    val (aLo, aHi, bLo, bHi) = FileSkipping.keyRange(li, "l_orderkey",
+      "l_partkey")
     val (a1, a2) = (aLo + (aHi - aLo) / 4, aLo + (aHi - aLo) / 2)
     val (b1, b2) = (bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
-    val planeArea = (aHi - aLo + 1).toDouble * (bHi - bLo + 1).toDouble
     val statCols = Seq("l_orderkey", "l_partkey")
     def pathOf(u: String): String = new java.net.URI(u).getPath
     def nameOf(u: String): String = pathOf(u).replaceAll(".*/", "")
@@ -2812,31 +2715,8 @@ object SparkEntry {
         FileSkipping.fileStats(
           spark.read.schema(li.schema).parquet(paths.sorted: _*), statCols)
           .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
-      def linkInto(stage: String, paths: Seq[String]): Unit = {
-        val st = java.nio.file.Paths.get(stage)
-        java.nio.file.Files.createDirectories(st)
-        paths.foreach { f =>
-          java.nio.file.Files.createLink(
-            st.resolve(f.replaceAll(".*/", "")), java.nio.file.Paths.get(f))
-        }
-      }
-      def fp(df: DataFrame): (Long, Long) = {
-        val m = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-            "cast(l_orderkey as string), cast(l_linenumber as string), " +
-            "cast(l_partkey as string), cast(l_suppkey as string))), " +
-            "1, 15), 16, 10) as bigint)), 0)").as("x")).head()
-        (m.getLong(0), m.getLong(1))
-      }
-      def footerHits(df: DataFrame): Long = df
-        .groupBy(input_file_name().as("f"))
-        .agg(min(col("l_orderkey")).as("mina"),
-          max(col("l_orderkey")).as("maxa"),
-          min(col("l_partkey")).as("minb"),
-          max(col("l_partkey")).as("maxb"))
-        .filter(col("maxa") >= a1 && col("mina") <= a2 &&
-          col("maxb") >= b1 && col("minb") <= b2)
-        .count()
+      def footerHits(df: DataFrame): Long = FileSkipping.footerBoxFiles(df,
+        "l_orderkey", "l_partkey", (a1, a2, b1, b2))
       // ---- v0: clustered base + pinned stats, one atomic commit
       val base = li.filter(pmod(col("l_orderkey"), lit(4L)) =!= 0L)
       val appendRows = li.filter(pmod(col("l_orderkey"), lit(4L)) === 0L)
@@ -2852,7 +2732,8 @@ object SparkEntry {
       // sketch once, stats rows union
       val snap0 = Sinks.readSnapshot(spark, snapRoot, Some(v0))
       val v0paths = snap0("data").inputFiles.map(pathOf).toSeq
-      linkInto(s"$root/stage1_data", v0paths)
+      Sinks.linkForward(java.nio.file.Paths.get(s"$root/stage1_data"),
+        v0paths)
       appendRows.repartition(4).write.mode("append")
         .parquet(s"$root/stage1_data")
       val v0names = v0paths.map(_.replaceAll(".*/", "")).toSet
@@ -2864,32 +2745,14 @@ object SparkEntry {
         "data" -> ((s"$root/stage1_data", "l_orderkey")),
         "file_stats" -> ((s"$root/stage1_stats", "__file"))), snapRoot, spark)
       val snap1 = Sinks.readSnapshot(spark, snapRoot, Some(v1))
-      val (n1, x1) = fp(snap1("data"))
-      val v1paths = snap1("data").inputFiles.map(pathOf).toSeq
-      val v1names = v1paths.map(_.replaceAll(".*/", "")).toSet
+      val (n1, x1) = Sinks.contentFingerprint(snap1("data"), LineitemRowKey)
+      val v1names = snap1("data").inputFiles.map(nameOf).toSet
       val hitsV1 = footerHits(snap1("data"))
       // ---- OPTIMIZE -> v2: decide from v1's COMMITTED stats, rewrite
       // only the detected files, replace only their stats rows
-      val detectedNames = FileSkipping.detectUnclustered(snap1("file_stats"),
-          "l_orderkey", "l_partkey", planeArea)
-        .select(col("__file").cast("string")).collect()
-        .map(_.getString(0)).toSet
-      val detectedPaths = v1paths.filter(p => detectedNames(nameOf(p)))
-      graft.operators.ZOrder.writeHilbert(
-        spark.read.schema(li.schema).parquet(detectedPaths.sorted: _*),
-        "l_orderkey", "l_partkey", aLo, aHi, bLo, bHi,
-        s"$root/opt", numFiles = 4)
-      val optPaths = spark.read.parquet(s"$root/opt")
-        .inputFiles.map(pathOf).toSeq
-      val carryPaths = v1paths.filterNot(p => detectedNames(nameOf(p)))
-      linkInto(s"$root/stage2_data", carryPaths ++ optPaths)
-      snap1("file_stats")
-        .filter(!col("__file").isin(detectedNames.toSeq: _*))
-        .unionByName(statsFor(optPaths))
-        .coalesce(1).write.parquet(s"$root/stage2_stats")
-      val v2 = Sinks.publishSnapshotStaged(Map(
-        "data" -> ((s"$root/stage2_data", "l_orderkey")),
-        "file_stats" -> ((s"$root/stage2_stats", "__file"))), snapRoot, spark)
+      val (v2, _, _) = Sinks.optimizeSnapshotVersion(spark, snapRoot,
+          "l_orderkey", "l_partkey", numFiles = 4)
+        .getOrElse(sys.error(s"s19: no degraded file detected at v$v1"))
       // ---- race: a publisher that computed version v2 concurrently
       // must lose LOUDLY at the create-exclusive commit link (the
       // OperatorsSpec race replay), leaving the winner's pointer intact
@@ -2908,28 +2771,17 @@ object SparkEntry {
         } catch { case _: java.nio.file.FileAlreadyExistsException => true }
       // ---- gates
       val snap2 = Sinks.readSnapshot(spark, snapRoot, Some(v2))
-      val (n2, x2) = fp(snap2("data"))
+      val (n2, x2) = Sinks.contentFingerprint(snap2("data"), LineitemRowKey)
       val v2names = snap2("data").inputFiles.map(nameOf).toSet
       val stats2names = snap2("file_stats")
         .select(col("__file").cast("string")).collect()
         .map(_.getString(0)).toSet
-      val merged = TableQuality.mergeSketches(snap2("file_stats"), statCols)
-        .collect().map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getString(4), r.getString(5)))).toMap
-      val recomputed = TableQuality.tableStats(snap2("data"), statCols)
-        .collect().map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getString(4), r.getString(5)))).toMap
-      val mergeOk = statCols.forall { c =>
-        val (mn, mnn, mndv, mmin, mmax) = merged(c)
-        val (rn, rnn, rndv, rmin, rmax) = recomputed(c)
-        mn == rn && mnn == rnn && mmin == rmin && mmax == rmax &&
-          math.abs(mndv - rndv).toDouble <= 0.1 * rndv
-      }
+      val mergeOk = TableQuality.statsCurrent(snap2("file_stats"),
+        snap2("data"), statCols)
       // pinned v1 read AFTER the v2 commit: exact rows AND exact files
       val snap1again = Sinks.readSnapshot(spark, snapRoot, Some(v1))
-      val (n1b, x1b) = fp(snap1again("data"))
+      val (n1b, x1b) = Sinks.contentFingerprint(snap1again("data"),
+        LineitemRowKey)
       val pinnedOk = n1b == n1 && x1b == x1 &&
         snap1again("data").inputFiles.map(nameOf).toSet == v1names
       val hitsV2 = footerHits(snap2("data"))
@@ -2976,7 +2828,6 @@ object SparkEntry {
   private def s20CdcVersionedStats(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.{FileSkipping, Sinks, TableQuality}
     // n_chars normalized to long: the changelog widens it (+1000L), and a
     // corpus drop carrying int32 would otherwise make the rewritten
     // files' physical type diverge from the carried files'
@@ -2992,23 +2843,6 @@ object SparkEntry {
         FileSkipping.fileStats(
           spark.read.schema(docs.schema).parquet(paths.sorted: _*), statCols)
           .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
-      def linkInto(stage: String, paths: Seq[String]): Unit = {
-        val st = java.nio.file.Paths.get(stage)
-        java.nio.file.Files.createDirectories(st)
-        paths.foreach { f =>
-          java.nio.file.Files.createLink(
-            st.resolve(f.replaceAll(".*/", "")), java.nio.file.Paths.get(f))
-        }
-      }
-      // whole-row content fingerprint (doc_id:lang:n_chars) — the CDC
-      // result anchor, replayed verbatim by the oracle
-      def fp(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-            "cast(doc_id as string), lang, cast(n_chars as string))), " +
-            "1, 15), 16, 10) as bigint)), 0)").as("x")).head()
-        (r.getLong(0), r.getLong(1))
-      }
       // ---- v0: clustered base + per-file stats, one commit
       docs.repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
@@ -3056,7 +2890,8 @@ object SparkEntry {
         .write.mode("overwrite").parquet(s"$root/rw")
       val rwPaths = spark.read.parquet(s"$root/rw")
         .inputFiles.map(pathOf).toSeq
-      linkInto(s"$root/stage1_data", carryPaths ++ rwPaths)
+      Sinks.linkForward(java.nio.file.Paths.get(s"$root/stage1_data"),
+        carryPaths ++ rwPaths)
       snap0("file_stats")
         .filter(!col("__file").isin(touchedNames.toSeq: _*))
         .unionByName(statsFor(rwPaths))
@@ -3066,9 +2901,10 @@ object SparkEntry {
         "file_stats" -> ((s"$root/stage1_stats", "__file"))), snapRoot, spark)
       // ---- gates
       val snap1 = Sinks.readSnapshot(spark, snapRoot, Some(v1))
-      val (nGot, xGot) = fp(snap1("data"))
-      val (nExp, xExp) = fp(Sinks.applyChangelog(snap0("data"), changes,
-        "doc_id"))
+      // whole-row content fingerprint — the CDC result anchor
+      val (nGot, xGot) = Sinks.contentFingerprint(snap1("data"), DocRowKey)
+      val (nExp, xExp) = Sinks.contentFingerprint(
+        Sinks.applyChangelog(snap0("data"), changes, "doc_id"), DocRowKey)
       // untouched stats rows byte-identical (sketch bytes via md5)
       val carryNames = carryPaths.map(nameOf)
       def statsProj(df: DataFrame): DataFrame = df
@@ -3081,26 +2917,19 @@ object SparkEntry {
       val b = statsProj(snap0("file_stats"))
       val untouchedIdentical =
         a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-      // merged report over v1's stats vs a from-scratch ANALYZE of v1
-      val mergedDf = TableQuality.mergeSketches(snap1("file_stats"), statCols)
-      val merged = mergedDf.collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getString(4), r.getString(5)))).toMap
-      val recomputed = TableQuality.tableStats(snap1("data"), statCols)
+      // merged report over v1's stats, checked against a from-scratch
+      // ANALYZE of v1
+      val merged = TableQuality.mergeSketches(snap1("file_stats"), statCols)
         .collect().map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getString(4), r.getString(5)))).toMap
-      val mergeOk = statCols.forall { c =>
-        val (mn, mnn, mndv, mmin, mmax) = merged(c)
-        val (rn, rnn, rndv, rmin, rmax) = recomputed(c)
-        mn == rn && mnn == rnn && mmin == rmin && mmax == rmax &&
-          math.abs(mndv - rndv).toDouble <= 0.1 * rndv
-      }
+          ((r.getLong(1), r.getLong(2), r.getString(4), r.getString(5))))
+        .toMap
+      val mergeOk = TableQuality.statsCurrent(snap1("file_stats"),
+        snap1("data"), statCols)
       // the report is 2 driver-local rows already collected above —
       // return them as literals so the frame holds no reference to the
       // scratch root, which is deleted on return
       statCols.sorted.map { c =>
-        val (n, nn, _, mn, mx) = merged(c)
+        val (n, nn, mn, mx) = merged(c)
         (c, n, nn, mn, mx, xGot,
           if (mergeOk) 1 else 0,
           if (nGot == nExp && xGot == xExp) 1 else 0,
@@ -3136,7 +2965,6 @@ object SparkEntry {
   private def s21SchemaEvolution(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.{FileSkipping, Sinks, TableQuality}
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"))
@@ -3169,10 +2997,8 @@ object SparkEntry {
           "n_chars" -> "bigint")) // dropped column
       // ---- v1: old files link forward, the new batch lands WIDER
       val v0paths = snap0("data").inputFiles.map(pathOf).toSeq
-      val st = java.nio.file.Paths.get(s"$root/stage1_data")
-      java.nio.file.Files.createDirectories(st)
-      v0paths.foreach(f => java.nio.file.Files.createLink(
-        st.resolve(f.replaceAll(".*/", "")), java.nio.file.Paths.get(f)))
+      Sinks.linkForward(java.nio.file.Paths.get(s"$root/stage1_data"),
+        v0paths)
       docs.filter(pmod(col("doc_id"), lit(5L)) === 0L)
         .withColumn("quality", pmod(col("n_chars"), lit(100L)))
         .repartitionByRange(2, col("doc_id"))
@@ -3199,10 +3025,8 @@ object SparkEntry {
       val unified = Sinks.readSnapshotTableAs(spark, snapRoot, "data",
         evolvedSchema, Some(v1))
       val contractV1Ok = TableQuality.schemaContractPass(unified, c1)
-      val m = unified.agg(count(lit(1)).as("n"),
-        expr("coalesce(bit_xor(" +
-          graft.operators.Sinks.keyFingerprintSql("doc_id") + "), 0)")
-          .as("x"),
+      val (n, x) = Sinks.contentFingerprint(unified, "doc_id")
+      val q = unified.agg(
         sum(when(col("quality").isNull, 1L).otherwise(0L)).as("nulls"),
         sum(col("quality")).as("qsum")).head()
       // lazy-stats gate: every file has a doc_id row; ONLY new files
@@ -3212,7 +3036,7 @@ object SparkEntry {
       val qualityRows = stats1.filter(col("__sk_quality").isNotNull).count()
       val statsLazyOk = totalStatsRows == v0paths.size + newPaths.size &&
         qualityRows == newPaths.size
-      Seq((m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3), v1,
+      Seq((n, x, q.getLong(0), q.getLong(1), v1,
         if (contractV0Ok && contractV1Ok) 1 else 0,
         if (accepted) 1 else 0,
         if (badRejected) 1 else 0,
@@ -3245,7 +3069,6 @@ object SparkEntry {
     */
   private def s22VersionDiff(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Sinks
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("n_chars"))
     val m = docs.agg(max(col("doc_id"))).head().getLong(0)
@@ -3291,28 +3114,17 @@ object SparkEntry {
         .sortWithinPartitions(col("doc_id"))
         .write.mode("overwrite").parquet(s"$root/rw")
       val stage1 = java.nio.file.Paths.get(s"$root/stage1")
-      java.nio.file.Files.createDirectories(stage1)
-      (carryPaths ++ spark.read.parquet(s"$root/rw")
-          .inputFiles.map(pathOf)).foreach { f =>
-        java.nio.file.Files.createLink(
-          stage1.resolve(f.replaceAll(".*/", "")), java.nio.file.Paths.get(f))
-      }
+      Sinks.linkForward(stage1, carryPaths ++ spark.read.parquet(s"$root/rw")
+        .inputFiles.map(pathOf))
       val v1 = Sinks.publishSnapshotStaged(Map(
         "data" -> ((stage1.toString, "doc_id"))), snapRoot, spark)
       // ---- the operator under test
       val diff = Sinks.versionDiff(spark, snapRoot, "data", v0, v1, "doc_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val snap1 = Sinks.readSnapshot(spark, snapRoot, Some(v1))("data")
-      def fp(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-            "cast(doc_id as string), lang, cast(n_chars as string))), " +
-            "1, 15), 16, 10) as bigint)), 0)").as("x")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (nGot, xGot) = fp(Sinks.applyChangelog(snap0, diff, "doc_id"))
-      val (nExp, xExp) = fp(snap1)
-      val roundtripOk = nGot == nExp && xGot == xExp
+      val roundtripOk = Sinks.contentFingerprint(
+        Sinks.applyChangelog(snap0, diff, "doc_id"), DocRowKey) ==
+        Sinks.contentFingerprint(snap1, DocRowKey)
       // file-granular skip: both deltas are strict subsets (carried
       // inodes excluded), measured from the diff's own path logic —
       // recomputed here independently via name sets
@@ -3326,9 +3138,8 @@ object SparkEntry {
       val perOp = diff
         .groupBy(col("op"))
         .agg(count(lit(1)).cast("long").as("n_rows"),
-          expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-            "cast(doc_id as string), lang, cast(n_chars as string))), " +
-            "1, 15), 16, 10) as bigint)), 0)").as("payload_xor"))
+          expr(s"coalesce(bit_xor(${Sinks.keyFingerprintSql(DocRowKey)}), 0)")
+            .as("payload_xor"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       diff.unpersist()
       perOp.sortBy(_._1).toSeq.map { case (op, n, x) =>
@@ -3354,15 +3165,15 @@ object SparkEntry {
     * merged (only the sliver bytes scanned at publish — and the
     * validating read proves the merged manifest against the whole
     * table). Gates: rows ≡ documents (FULL oracle), file count 5 → 2,
-    * merged row ≡ a fresh re-sketch of the compacted file (exact
-    * fields verbatim, union-sketch ndv ≤ 10%), carried row
+    * merged row ≡ a from-scratch ANALYZE of the compacted file (exact
+    * fields verbatim, union-sketch ndv within 10%, folded keyxor ≡ the
+    * file's own key fingerprint), carried row
     * byte-identical, pinned pre-compaction version intact, and a
     * second compaction is a no-op (nothing left under the threshold).
     */
   private def s26CompactVersioned(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.{FileSkipping, Sinks, TableQuality}
     import graft.streaming.SnapshotIngest
     val statCols = Seq("doc_id", "n_chars")
     val docs = tbl(spark, dir, "documents")
@@ -3387,54 +3198,27 @@ object SparkEntry {
       }
       val vPre = Sinks.currentVersion(snapRoot).get
       val filesPre = Sinks.committedFilePaths(snapRoot, "data", Some(vPre))
-      def fp(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-            "cast(doc_id as string), lang, cast(n_chars as string))), " +
-            "1, 15), 16, 10) as bigint)), 0)").as("x")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (nPre, xPre) = fp(Sinks.readSnapshot(spark, snapRoot,
-        Some(vPre))("data"))
+      val (nPre, xPre) = Sinks.contentFingerprint(
+        Sinks.readSnapshot(spark, snapRoot, Some(vPre))("data"), DocRowKey)
       // ---- compact: threshold 30% of corpus catches the four slivers
       val v = Sinks.compactSnapshotVersion(spark, snapRoot,
         maxRows = math.max(2L, (total * 3) / 10)).getOrElse(
         sys.error("compaction found nothing to do"))
       val snap = Sinks.readSnapshot(spark, snapRoot, Some(v))
-      val (n, x) = fp(snap("data"))
+      val (n, x) = Sinks.contentFingerprint(snap("data"), DocRowKey)
       val filesPost = Sinks.committedFilePaths(snapRoot, "data", Some(v))
       val compactedName = filesPost.map(_.replaceAll(".*/", ""))
         .filterNot(filesPre.map(_.replaceAll(".*/", "")).toSet).head
-      // merged stats row vs a FRESH re-sketch of the compacted file
-      val compactedPath = filesPost
-        .find(_.endsWith(compactedName)).get
-      val fresh = FileSkipping.fileStatsKeyed(
-          spark.read.schema(docs.schema).parquet(compactedPath),
-          statCols, "doc_id")
-        .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+      // merged stats row vs a from-scratch ANALYZE of the compacted
+      // file, and its folded key fingerprint vs the file's own
+      val compacted = spark.read.schema(docs.schema)
+        .parquet(filesPost.find(_.endsWith(compactedName)).get)
       val mergedRow = snap("file_stats")
         .filter(col("__file").cast("string") === compactedName)
-      def proj(df: DataFrame): Map[String, (Long, String, String, Long)] = {
-        val r = df.head()
-        statCols.map(c => c -> ((
-          r.getAs[Long](s"__nulls_$c"),
-          String.valueOf(r.getAs[Any](s"__min_$c")),
-          String.valueOf(r.getAs[Any](s"__max_$c")),
-          r.getAs[Long]("__n")))).toMap
-      }
-      val (pm, pf) = (proj(mergedRow), proj(fresh))
-      def ndvOf(df: DataFrame, c: String): Double = df
-        .agg(expr(s"cast(hll_sketch_estimate(" +
-          s"hll_union_agg(__sk_$c, true)) as double)"))
-        .head().getDouble(0)
       val keyxorOk = mergedRow.head().getAs[Long]("__keyxor") ==
-        fresh.head().getAs[Long]("__keyxor")
-      val mergeOk = keyxorOk && statCols.forall { c =>
-        pm(c)._1 == pf(c)._1 && pm(c)._2 == pf(c)._2 &&
-          pm(c)._3 == pf(c)._3 && pm(c)._4 == pf(c)._4 &&
-          math.abs(ndvOf(mergedRow, c) - ndvOf(fresh, c)) <=
-            0.1 * ndvOf(fresh, c)
-      }
+        Sinks.contentFingerprint(compacted, "doc_id")._2
+      val mergeOk = keyxorOk &&
+        TableQuality.statsCurrent(mergedRow, compacted, statCols)
       // carried big file's stats row byte-identical across the commit
       val bigName = filesPre.map(_.replaceAll(".*/", ""))
         .filter(filesPost.map(_.replaceAll(".*/", "")).toSet).toSeq
@@ -3451,8 +3235,8 @@ object SparkEntry {
       val carriedIdentical = bigName.nonEmpty &&
         a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
       // pinned pre-compaction version intact
-      val (nP2, xP2) = fp(Sinks.readSnapshot(spark, snapRoot,
-        Some(vPre))("data"))
+      val (nP2, xP2) = Sinks.contentFingerprint(
+        Sinks.readSnapshot(spark, snapRoot, Some(vPre))("data"), DocRowKey)
       val secondNoop = Sinks.compactSnapshotVersion(spark, snapRoot,
         maxRows = math.max(2L, (total * 3) / 10)).isEmpty
       Seq((n, x,
@@ -3487,7 +3271,6 @@ object SparkEntry {
     */
   private def s25CdcIngest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Sinks, TableQuality}
     import graft.streaming.SnapshotIngest
     val statCols = Seq("doc_id", "n_chars")
     val docs = tbl(spark, dir, "documents")
@@ -3528,20 +3311,13 @@ object SparkEntry {
       val replayNoop = SnapshotIngest.commitChangelogBatch(b2, 2L,
         snapRoot, s"$root/sc2", "doc_id", statCols).isEmpty &&
         Sinks.currentVersion(snapRoot).contains(vCur)
-      def fp(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-            "cast(doc_id as string), lang, cast(n_chars as string))), " +
-            "1, 15), 16, 10) as bigint)), 0)").as("x")).head()
-        (r.getLong(0), r.getLong(1))
-      }
       val snap = Sinks.readSnapshot(spark, snapRoot, Some(vCur))
-      val (n, x) = fp(snap("data"))
+      val (n, x) = Sinks.contentFingerprint(snap("data"), DocRowKey)
       // independent sequential whole-table apply
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], docs.schema)
-      val (nSeq, xSeq) = fp(batches.foldLeft(empty)(
-        (acc, b) => Sinks.applyChangelog(acc, b, "doc_id")))
+      val (nSeq, xSeq) = Sinks.contentFingerprint(batches.foldLeft(empty)(
+        (acc, b) => Sinks.applyChangelog(acc, b, "doc_id")), DocRowKey)
       // untouched-by-b1 stats rows byte-identical v0 -> v1 (the
       // band-local update must leave every other file's row verbatim)
       val v1 = versions(0); val v2 = versions(1)
@@ -3565,20 +3341,8 @@ object SparkEntry {
       val untouchedIdentical = sharedNames.nonEmpty &&
         a.exceptAll(bb).isEmpty && bb.exceptAll(a).isEmpty
       // merged stats of the final version == from-scratch ANALYZE
-      val merged = TableQuality.mergeSketches(snap("file_stats"), statCols)
-        .collect().map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getString(4), r.getString(5)))).toMap
-      val recomputed = TableQuality.tableStats(snap("data"), statCols)
-        .collect().map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getString(4), r.getString(5)))).toMap
-      val statsOk = statCols.forall { c =>
-        val (mn, mnn, mndv, mmin, mmax) = merged(c)
-        val (rn, rnn, rndv, rmin, rmax) = recomputed(c)
-        mn == rn && mnn == rnn && mmin == rmin && mmax == rmax &&
-          math.abs(mndv - rndv).toDouble <= 0.1 * rndv
-      }
+      val statsOk = TableQuality.statsCurrent(snap("file_stats"), snap("data"),
+        statCols)
       Seq((n, x,
         if (versions.size == 4) 1 else 0,
         if (n == nSeq && x == xSeq) 1 else 0,
@@ -3612,7 +3376,6 @@ object SparkEntry {
   private def s24OptimisticMerge(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.Sinks
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("n_chars"))
@@ -3654,16 +3417,10 @@ object SparkEntry {
                 e.getMessage.contains("conflicting concurrent commit") =>
             true
         }
-      def fp(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(cast(conv(substring(md5(concat_ws(':', " +
-            "cast(doc_id as string), lang, cast(n_chars as string))), " +
-            "1, 15), 16, 10) as bigint)), 0)").as("x")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (n, x) = fp(Sinks.readSnapshot(spark, snapRoot, Some(v2))("data"))
-      val (nSeq, xSeq) = fp(Sinks.applyChangelog(
-        Sinks.applyChangelog(docs, chA, "doc_id"), chB, "doc_id"))
+      val (n, x) = Sinks.contentFingerprint(
+        Sinks.readSnapshot(spark, snapRoot, Some(v2))("data"), DocRowKey)
+      val (nSeq, xSeq) = Sinks.contentFingerprint(Sinks.applyChangelog(
+        Sinks.applyChangelog(docs, chA, "doc_id"), chB, "doc_id"), DocRowKey)
       Seq((n, x,
         if (n == nSeq && x == xSeq) 1 else 0,
         if (conflictAborts) 1 else 0,
@@ -3690,7 +3447,6 @@ object SparkEntry {
     */
   private def s23Retention(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Sinks
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"))
     val m = docs.agg(max(col("doc_id"))).head().getLong(0)
@@ -3699,16 +3455,10 @@ object SparkEntry {
       val snapRoot = s"$root/snap"
       def commitBand(lo: Long, hi: Long, carryFrom: Option[Long],
           stage: String): Long = {
-        val st = java.nio.file.Paths.get(stage)
-        java.nio.file.Files.createDirectories(st)
-        carryFrom.foreach { v =>
-          Sinks.readSnapshot(spark, snapRoot, Some(v))("data")
-            .inputFiles.map(pathOf).foreach { f =>
-              java.nio.file.Files.createLink(
-                st.resolve(f.replaceAll(".*/", "")),
-                java.nio.file.Paths.get(f))
-            }
-        }
+        Sinks.linkForward(java.nio.file.Paths.get(stage),
+          carryFrom.toSeq.flatMap(v =>
+            Sinks.readSnapshot(spark, snapRoot, Some(v))("data")
+              .inputFiles.map(pathOf)))
         docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
           .repartition(2)
           .write.mode("append").parquet(stage)
@@ -3718,15 +3468,8 @@ object SparkEntry {
       val v0 = commitBand(-1L, m / 3, None, s"$root/st0")
       val v1 = commitBand(m / 3, 2 * m / 3, Some(v0), s"$root/st1")
       val v2 = commitBand(2 * m / 3, m, Some(v1), s"$root/st2")
-      def fp(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(cast(conv(substring(md5(" +
-            "cast(doc_id as string)), 1, 15), 16, 10) as bigint)), 0)")
-            .as("x")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (n1Before, x1Before) = fp(Sinks.readSnapshot(spark, snapRoot,
-        Some(v1))("data"))
+      val (n1Before, x1Before) = Sinks.contentFingerprint(
+        Sinks.readSnapshot(spark, snapRoot, Some(v1))("data"), "doc_id")
       val expired = Sinks.expireVersions(snapRoot, keepLast = 2)
       val expiredRight = expired == Seq(v0)
       val expiredLoud =
@@ -3745,14 +3488,14 @@ object SparkEntry {
       }
       // surviving versions read + validate byte-identically
       val snap1 = Sinks.readSnapshot(spark, snapRoot, Some(v1))("data")
-      val (n1After, x1After) = fp(snap1)
+      val (n1After, x1After) = Sinks.contentFingerprint(snap1, "doc_id")
       val pinnedSurvives = n1After == n1Before && x1After == x1Before
       // asking to keep fewer than remain never expires the pointer
       val expired2 = Sinks.expireVersions(snapRoot, keepLast = 1)
       val currentSafe = Sinks.currentVersion(snapRoot).contains(v2) &&
         expired2 == Seq(v1)
       val cur = Sinks.readSnapshot(spark, snapRoot)("data")
-      val (nCur, xCur) = fp(cur)
+      val (nCur, xCur) = Sinks.contentFingerprint(cur, "doc_id")
       Seq((nCur, xCur,
         if (expiredRight) 1 else 0,
         if (expiredLoud) 1 else 0,
@@ -3783,7 +3526,6 @@ object SparkEntry {
   private def s17StatsCompaction(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.TableQuality
     val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("n_chars"))
     val tagged = docs.withColumn("batch",
       least(pmod(col("doc_id"), lit(32L)), lit(7L)))
@@ -3807,15 +3549,8 @@ object SparkEntry {
       val keepPaths = (0L to 7L).filterNot(smalls.contains)
         .map(b => s"$root/batches/batch=$b") :+ s"$root/compacted"
       val after = spark.read.parquet(keepPaths: _*)
-      def fp(df: DataFrame): (Long, Long) = {
-        val m = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(" +
-            graft.operators.Sinks.keyFingerprintSql("doc_id") + "), 0)")
-            .as("x")).head()
-        (m.getLong(0), m.getLong(1))
-      }
-      val (nB, xB) = fp(before)
-      val (nA, xA) = fp(after)
+      val (nB, xB) = Sinks.contentFingerprint(before, "doc_id")
+      val (nA, xA) = Sinks.contentFingerprint(after, "doc_id")
       val filesBefore = before.inputFiles.length
       val filesAfter = after.inputFiles.length
       Seq((nA, xA, smalls.length.toLong,
@@ -3847,7 +3582,6 @@ object SparkEntry {
   private def s13gTypedPruning(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    import graft.operators.FileSkipping
     import graft.operators.FileSkipping.{NullOnly, StringIn}
     val docs = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -3862,18 +3596,13 @@ object SparkEntry {
       val table = spark.read.parquet(s"$root/t")
       val stats = graft.operators.Materialize(
         FileSkipping.fileStats(table, Seq("doc_id", "lang", "tag")))
-      def fp(df: DataFrame): (Long, Long) = {
-        val m = df.agg(count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(" +
-            graft.operators.Sinks.keyFingerprintSql("doc_id") + "), 0)")
-            .as("x")).head()
-        (m.getLong(0), m.getLong(1))
-      }
       // --- string-IN path
       val prunedS = FileSkipping.prunedParquetTyped(spark, stats,
         Seq(StringIn("lang", Seq(target))), table.schema)
-      val (nS, xS) = fp(prunedS.filter(col("lang") === target))
-      val (nFull, xFull) = fp(table.filter(col("lang") === target))
+      val (nS, xS) = Sinks.contentFingerprint(
+        prunedS.filter(col("lang") === target), "doc_id")
+      val (nFull, xFull) = Sinks.contentFingerprint(
+        table.filter(col("lang") === target), "doc_id")
       val openedS = prunedS.inputFiles.length.toLong
       val total = table.inputFiles.length.toLong
       // independent footer-rule recompute: the string min/max bracket
@@ -3884,7 +3613,8 @@ object SparkEntry {
       // --- IS NULL path
       val prunedN = FileSkipping.prunedParquetTyped(spark, stats,
         Seq(NullOnly("tag")), table.schema)
-      val (nN, xN) = fp(prunedN.filter(col("tag").isNull))
+      val (nN, xN) = Sinks.contentFingerprint(
+        prunedN.filter(col("tag").isNull), "doc_id")
       val openedN = prunedN.inputFiles.length.toLong
       val footerN = table.groupBy(input_file_name().as("f"))
         .agg(sum(when(col("tag").isNull, 1L).otherwise(0L)).as("nn"))
@@ -5934,7 +5664,6 @@ object SparkEntry {
     */
   private def pipeCurationSnap(spark: SparkSession, dir: String,
       lsh: Boolean = false): DataFrame = {
-    import graft.operators.{FileSkipping, Sinks}
     import graft.operators.FileSkipping.LongRange
     val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("text"))
     val m = docs.agg(max(col("doc_id"))).head().getLong(0)
@@ -6422,6 +6151,30 @@ FROM m ORDER BY doc_id, summarizer""")
   }
 
   // -------------------------------------------------------------- registry
+
+  /** Registry names from a comma-separated list, in list order. Fails
+    * fast on any unregistered name — a typo would otherwise select
+    * nothing, write no artifact and exit 0; the error is `what` followed
+    * by the unknown names.
+    */
+  def namedQueries(csv: String, what: String): Seq[String] = {
+    val registry = queries
+    val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = names.filterNot(registry.contains).distinct.sorted
+    require(unknown.isEmpty, s"$what: ${unknown.mkString(",")}")
+    names
+  }
+
+  /** The dev-loop subset `SPARK_GRAFT_ONLY=name1,name2` selects for
+    * Verify and Bench; unset (as the driver runs them), the full
+    * registry.
+    */
+  def selectedQueries(): Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY").fold(queries) { csv =>
+      val names =
+        namedQueries(csv, "unknown SPARK_GRAFT_ONLY names").toSet
+      queries.filter { case (n, _) => names(n) }
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_agg" -> (q1Agg(_, _)),

@@ -10,19 +10,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Dev-loop subset (same contract as Bench): the driver never sets it,
     // so per-round artifacts always cover the full registry.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // fail fast on typos — a misspelled name would otherwise silently
-    // select nothing, write no artifact, and exit 0
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown SPARK_GRAFT_ONLY names: ${unknown.toSeq.sorted.mkString(",")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.selectedQueries()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -7,7 +7,7 @@ import graft.{GraftExtensions, Scratch}
 import graft.core.PipelineConfig
 import graft.eval.Metrics
 import graft.llm.ExtractiveSummarizer
-import graft.operators.{CorpusOps, Sinks, TreeOps}
+import graft.operators.{CorpusOps, FileSkipping, Sinks, TreeOps}
 import graft.strategy.{Hierarchical, Strategies}
 
 /** CLI mirroring the reference's three entry points (SURVEY.md §3):
@@ -200,7 +200,7 @@ object Main {
     * full Hilbert re-cluster (OPTIMIZE FULL) on two long-keyed columns;
     * the incremental re-cluster (only degraded files, detected from
     * per-file stats) is the s13f library composition
-    * (FileSkipping.fileStats + ZOrder.writeHilbert over detected paths).
+    * (FileSkipping.fileStats + FileSkipping.reclusterDegraded).
     */
   private def runOptimize(opts: Map[String, String]): Unit = {
     withSession { spark =>
@@ -208,24 +208,16 @@ object Main {
       val out = opts("out")
       require(in != out, "optimize: --out must differ from --in")
       def twoLongCols(spec: String, what: String)
-          : (Seq[String], DataFrame, Long, Long, Long, Long) = {
+          : (Seq[String], DataFrame, FileSkipping.KeyBox) = {
         val cols = spec.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
         require(cols.length == 2, s"$what needs exactly two columns: $spec")
         val df = spark.read.parquet(in)
-        val r = df.agg(min(col(cols(0))).cast("long"),
-          max(col(cols(0))).cast("long"),
-          min(col(cols(1))).cast("long"),
-          max(col(cols(1))).cast("long")).head()
-        // an empty table yields null min/max — fail with a real message
-        // instead of getLong's opaque NPE (r13 advice)
-        require(!r.isNullAt(0) && !r.isNullAt(2),
-          s"optimize $what: $in is empty (or ${cols.mkString("/")} " +
-            "all-null) — nothing to cluster")
-        (cols, df, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+        (cols, df, FileSkipping.keyRange(df, cols(0), cols(1),
+          s"optimize $what: $in"))
       }
       (opts.get("cluster"), opts.get("recluster")) match {
         case (Some(spec), _) =>
-          val (cols, df, aLo, aHi, bLo, bHi) = twoLongCols(spec, "--cluster")
+          val (cols, df, (aLo, aHi, bLo, bHi)) = twoLongCols(spec, "--cluster")
           val k = opts.get("files").map(_.toInt).getOrElse(16)
           graft.operators.ZOrder.writeHilbert(df, cols(0), cols(1),
             aLo, aHi, bLo, bHi, out, k)
@@ -236,42 +228,34 @@ object Main {
           // a command): degraded files detected from ONE per-file stats
           // scan, only they rewrite, the rest byte-copy untouched
           rejectPartitionedInput(in, "--recluster")
-          val (cols, df, aLo, aHi, bLo, bHi) =
-            twoLongCols(spec, "--recluster")
-          val planeArea =
-            (aHi - aLo + 1).toDouble * (bHi - bLo + 1).toDouble
-          val stats = graft.operators.FileSkipping.fileStats(df, cols)
-          val detected = graft.operators.FileSkipping
-            .detectUnclustered(stats, cols(0), cols(1), planeArea)
-            .select(col("__file").cast("string")).collect()
-            .map(r => new java.net.URI(r.getString(0)).getPath).toSet
-          val keep = df.inputFiles
-            .map(u => new java.net.URI(u).getPath).toSet -- detected
+          val (cols, df, range) = twoLongCols(spec, "--recluster")
+          val files = df.inputFiles.map(u => new java.net.URI(u).getPath).toSeq
           val outP = java.nio.file.Paths.get(out)
           java.nio.file.Files.createDirectories(outP)
-          keep.toSeq.sorted.foreach { f =>
-            val p = java.nio.file.Paths.get(f)
-            java.nio.file.Files.copy(p, outP.resolve(p.getFileName),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          }
-          if (detected.nonEmpty) {
-            val k = opts.get("files").map(_.toInt).getOrElse(4)
-            val tmp = java.nio.file.Files.createTempDirectory(
-              outP.toAbsolutePath.getParent, ".reclust-")
-            graft.operators.ZOrder.writeHilbert(
-              spark.read.schema(df.schema)
-                .parquet(detected.toSeq.sorted: _*),
-              cols(0), cols(1), aLo, aHi, bLo, bHi, s"$tmp/d", k)
-            val s = java.nio.file.Files.list(
-              java.nio.file.Paths.get(s"$tmp/d"))
-            try s.iterator().forEachRemaining { p =>
-              if (p.getFileName.toString.endsWith(".parquet"))
-                java.nio.file.Files.move(p, outP.resolve(p.getFileName))
-            } finally s.close()
-            Scratch.deleteTree(tmp)
-          }
-          println(s"[graft] incremental re-cluster: ${detected.size} " +
-            s"degraded files rewritten (${keep.size} byte-copied) -> $out")
+          val tmp = java.nio.file.Files.createTempDirectory(
+            outP.toAbsolutePath.getParent, ".reclust-")
+          try {
+            val detected = FileSkipping.reclusterDegraded(spark,
+              FileSkipping.fileStats(df, cols), files, df.schema,
+              cols(0), cols(1), range, s"$tmp/d",
+              opts.get("files").map(_.toInt).getOrElse(4)).toSet
+            val keep = files.filterNot(detected)
+            keep.sorted.foreach { f =>
+              val p = java.nio.file.Paths.get(f)
+              java.nio.file.Files.copy(p, outP.resolve(p.getFileName),
+                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+            }
+            if (detected.nonEmpty) {
+              val s = java.nio.file.Files.list(
+                java.nio.file.Paths.get(s"$tmp/d"))
+              try s.iterator().forEachRemaining { p =>
+                if (p.getFileName.toString.endsWith(".parquet"))
+                  java.nio.file.Files.move(p, outP.resolve(p.getFileName))
+              } finally s.close()
+            }
+            println(s"[graft] incremental re-cluster: ${detected.size} " +
+              s"degraded files rewritten (${keep.size} byte-copied) -> $out")
+          } finally Scratch.deleteTree(tmp)
         case (None, None) =>
           val threshold = opts.get("compact-small").map(_.toLong).getOrElse(
             sys.error("optimize: need --cluster a,b, --recluster a,b " +
@@ -415,111 +399,20 @@ object Main {
           s"${Sinks.currentVersion(root).getOrElse("-")}")
       } else if (opts.contains("optimize")) {
         // nightly OPTIMIZE on a LIVE snapshot root (the s19 loop as a
-        // command): degraded files detected from the CURRENT version's
-        // committed file_stats, only they rewrite Hilbert-clustered,
-        // carried files hard-link, their stats rows carry verbatim and
-        // the rewritten files' rows are replaced — committed as the
-        // next version. Other tables of the commit (e.g. an ingest's
-        // batch-id meta) carry forward at ZERO scan cost via the
-        // append-manifest publish. Readers pinned at the old version
-        // are untouched; the data table revalidates by full scan at
-        // publish (maintenance validates what it rewrote).
+        // command): only the files degraded per the committed stats
+        // rewrite, committed as the next version
         val cols = opts("optimize").split(",").toSeq.map(_.trim)
           .filter(_.nonEmpty)
         require(cols.length == 2,
           s"--optimize needs exactly two long columns: ${opts("optimize")}")
-        import graft.operators.FileSkipping
-        val cur = Sinks.currentVersion(root).getOrElse(
-          sys.error(s"no committed snapshot under $root"))
-        val info = Sinks.commitTableInfo(root, Some(cur))
-        val dataKey = info.find(_._1 == "data").map(_._4).getOrElse(
-          sys.error(s"snapshot $cur has no 'data' table"))
-        require(info.exists(_._1 == "file_stats"),
-          s"snapshot $cur has no 'file_stats' table — " +
-            "OPTIMIZE decides from committed stats")
-        val data = Sinks.readSnapshotTable(spark, root, "data", Some(cur))
-        val stats = Sinks.readSnapshotTable(spark, root, "file_stats",
-          Some(cur))
-        val r = data.agg(min(col(cols(0))).cast("long"),
-          max(col(cols(0))).cast("long"),
-          min(col(cols(1))).cast("long"),
-          max(col(cols(1))).cast("long")).head()
-        require(!r.isNullAt(0) && !r.isNullAt(2),
-          s"snapshot optimize: data is empty or ${cols.mkString("/")} " +
-            "all-null — nothing to cluster")
-        val (aLo, aHi, bLo, bHi) =
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-        val planeArea = (aHi - aLo + 1).toDouble * (bHi - bLo + 1).toDouble
-        val detected = FileSkipping
-          .detectUnclustered(stats, cols(0), cols(1), planeArea)
-          .select(col("__file").cast("string")).collect()
-          .map(_.getString(0)).toSet
-        if (detected.isEmpty)
-          println(s"[graft] snapshot optimize: no degraded files at " +
-            s"version $cur — nothing to do")
-        else {
-          def nameOf(p: String): String = p.replaceAll(".*/", "")
-          val paths = Sinks.committedFilePaths(root, "data", Some(cur))
-          val detectedPaths = paths.filter(p => detected(nameOf(p)))
-          val carryPaths = paths.filterNot(p => detected(nameOf(p)))
-          val nonce = java.util.UUID.randomUUID().toString.take(8)
-          val scratch = java.nio.file.Paths.get(s"$root/.opt-$nonce")
-          java.nio.file.Files.createDirectories(scratch)
-          try {
-            val k = opts.get("files").map(_.toInt).getOrElse(4)
-            graft.operators.ZOrder.writeHilbert(
-              spark.read.schema(data.schema)
-                .parquet(detectedPaths.sorted: _*),
-              cols(0), cols(1), aLo, aHi, bLo, bHi, s"$scratch/opt", k)
-            val optPaths = spark.read.parquet(s"$scratch/opt")
-              .inputFiles.map(u => new java.net.URI(u).getPath).toSeq
-            val stage = scratch.resolve("data")
-            java.nio.file.Files.createDirectories(stage)
-            (carryPaths ++ optPaths).foreach { f =>
-              java.nio.file.Files.createLink(stage.resolve(nameOf(f)),
-                java.nio.file.Paths.get(f))
-            }
-            // stat columns self-describe from the committed stats schema;
-            // a table whose rows carry the per-file key fingerprint
-            // (__keyxor) keeps it on the rewritten files too — the CDC
-            // ingest's flat-manifest commits depend on it
-            val statCols = stats.columns.toSeq.collect {
-              case c if c.startsWith("__min_") => c.stripPrefix("__min_")
-            }
-            val optRead = spark.read.schema(data.schema)
-              .parquet(optPaths.sorted: _*)
-            val optStats =
-              (if (stats.columns.contains("__keyxor"))
-                FileSkipping.fileStatsKeyed(optRead, statCols, dataKey)
-              else FileSkipping.fileStats(optRead, statCols))
-                .withColumn("__file",
-                  regexp_extract(col("__file"), "[^/]+$", 0))
-            stats.filter(!col("__file").isin(detected.toSeq: _*))
-              .unionByName(optStats, allowMissingColumns = true)
-              .coalesce(1).write.parquet(s"$scratch/stats")
-            // other tables (ingest meta, ...) carry forward at zero
-            // scan cost: full-carry append manifest
-            val others = info.filterNot(t =>
-              t._1 == "data" || t._1 == "file_stats").map {
-              case (name, n, x, kc) =>
-                val tPaths = Sinks.committedFilePaths(root, name, Some(cur))
-                val tStage = scratch.resolve(name)
-                java.nio.file.Files.createDirectories(tStage)
-                tPaths.foreach { f =>
-                  java.nio.file.Files.createLink(tStage.resolve(nameOf(f)),
-                    java.nio.file.Paths.get(f))
-                }
-                name -> ((tStage.toString, kc,
-                  Some((n, x, tPaths.map(nameOf).toSet))))
-            }.toMap
-            val v = Sinks.publishSnapshotStagedAppend(others ++ Map(
-              "data" -> ((stage.toString, dataKey, None)),
-              "file_stats" -> ((s"$scratch/stats", "__file", None))),
-              root, spark)
-            println(s"[graft] snapshot optimize: ${detectedPaths.size} " +
-              s"degraded file(s) re-clustered (${carryPaths.size} " +
-              s"carried) -> version $v")
-          } finally Scratch.deleteTree(scratch)
+        val k = opts.get("files").map(_.toInt).getOrElse(4)
+        Sinks.optimizeSnapshotVersion(spark, root, cols(0), cols(1), k) match {
+          case Some((v, rewritten, carried)) => println(
+            s"[graft] snapshot optimize: $rewritten degraded file(s) " +
+              s"re-clustered ($carried carried) -> version $v")
+          case None => println(
+            s"[graft] snapshot optimize: no degraded files at version " +
+              s"${Sinks.currentVersion(root).getOrElse("-")} — nothing to do")
         }
       } else if (opts.contains("compact")) {
         // versioned small-file compaction with ZERO re-sketch: decision

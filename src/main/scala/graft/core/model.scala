@@ -43,7 +43,6 @@ final case class PipelineConfig(
     maxSummaryTokens: Int = 2048,
     maxCollapseRounds: Int = 10, // reference recursion_limit=10
     maxCritiqueIterations: Int = 2,
-    byTokens: Boolean = true,
     // "recursive" (the reference's splitter semantics, library default),
     // "token_window" (fixed-stride token windows — identical coverage
     // semantics, exactly SQL-expressible, used by the oracled pipelines),

@@ -18,7 +18,7 @@ package graft.llm
   * mirroring the reference's per-case failure isolation.
   *
   * Executor lifecycle matches [[HttpSummarizer]]: serializable config, one
-  * connection-pooled client per executor JVM via `@transient lazy val`.
+  * connection-pooled client per executor JVM ([[HttpGenerate]]).
   * NOT deterministic unless the backing model is — keep it out of oracle
   * paths; oracle/test runs use [[CoverageJudge]].
   */
@@ -32,36 +32,14 @@ final case class HttpJudge(
     maxRetries: Int = 3,
     backoffMillis: Long = 500L) extends Judge {
 
-  @transient private lazy val client: java.net.http.HttpClient =
-    java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofMillis(math.min(timeoutMillis, 30000L)))
-      .build()
+  @transient private lazy val call =
+    HttpGenerate(endpoint, model, timeoutMillis, maxRetries, backoffMillis)
 
-  @transient private lazy val mapper =
-    new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** One generate call, retried per [[HttpRetry]]; None once retries are
-    * exhausted or the status is non-retryable.
+  /** One generate call ([[HttpGenerate]]); None once retries are
+    * exhausted, the status is non-retryable, or the response is empty.
     */
   private def generate(prompt: String): Option[String] =
-    HttpRetry.run(maxRetries, backoffMillis) { () =>
-      val body = mapper.createObjectNode()
-      body.put("model", model)
-      body.put("prompt", prompt)
-      body.put("stream", false)
-      body.put("think", false)
-      body.putObject("options").put("num_predict", maxCritiqueTokens)
-      val req = java.net.http.HttpRequest.newBuilder()
-        .uri(java.net.URI.create(endpoint))
-        .timeout(java.time.Duration.ofMillis(timeoutMillis))
-        .header("Content-Type", "application/json")
-        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body.toString))
-        .build()
-      val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200) Left(resp.statusCode())
-      else Right(Option(mapper.readTree(resp.body()).get("response"))
-        .map(_.asText).getOrElse(""))
-    }.filter(_.nonEmpty)
+    call(prompt, maxCritiqueTokens).filter(_.nonEmpty)
 
   override def critique(summary: String, source: String): String =
     generate(critiqueTemplate.fill(

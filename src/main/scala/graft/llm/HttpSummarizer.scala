@@ -8,10 +8,11 @@ import graft.core.Text
   * implementation speaks that same generate-endpoint shape.
   *
   * Executor lifecycle: the class is shipped as a small serializable config
-  * and the HTTP client is a `@transient lazy val`, so each executor JVM
-  * builds exactly one connection-pooled client (the per-partition client
-  * reuse SURVEY.md §7.3 calls for — no client per row, no client on the
-  * driver shipped over the wire).
+  * and the request goes through [[HttpGenerate]], whose HTTP client is a
+  * `@transient lazy val`, so each executor JVM builds exactly one
+  * connection-pooled client (the per-partition client reuse SURVEY.md
+  * §7.3 calls for — no client per row, no client on the driver shipped
+  * over the wire).
   *
   * Failure isolation: a failed/timeout call yields "" instead of throwing,
   * mirroring the reference's per-case isolation (null-on-error, M4
@@ -32,34 +33,11 @@ final case class HttpSummarizer(
     maxRetries: Int = 3,
     backoffMillis: Long = 500L) extends Summarizer {
 
-  @transient private lazy val client: java.net.http.HttpClient =
-    java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofMillis(math.min(timeoutMillis, 30000L)))
-      .build()
-
-  @transient private lazy val mapper =
-    new com.fasterxml.jackson.databind.ObjectMapper()
+  @transient private lazy val generate =
+    HttpGenerate(endpoint, model, timeoutMillis, maxRetries, backoffMillis)
 
   override def summarize(text: String, maxTokens: Int): String =
-    HttpRetry.run(maxRetries, backoffMillis) { () =>
-      val body = mapper.createObjectNode()
-      body.put("model", model)
-      body.put("prompt", template.fill("content" -> text, "docs" -> text))
-      body.put("stream", false)
-      body.put("think", false)
-      body.putObject("options").put("num_predict", maxTokens)
-      val req = java.net.http.HttpRequest.newBuilder()
-        .uri(java.net.URI.create(endpoint))
-        .timeout(java.time.Duration.ofMillis(timeoutMillis))
-        .header("Content-Type", "application/json")
-        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body.toString))
-        .build()
-      val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() != 200) Left(resp.statusCode())
-      else {
-        val node = mapper.readTree(resp.body())
-        val out = Option(node.get("response")).map(_.asText).getOrElse("")
-        Right(if (cleanOutput) Text.cleanThinking(out) else out)
-      }
-    }.getOrElse("") // per-case failure isolation after retries
+    generate(template.fill("content" -> text, "docs" -> text), maxTokens)
+      .map(out => if (cleanOutput) Text.cleanThinking(out) else out)
+      .getOrElse("") // per-case failure isolation after retries
 }

@@ -83,7 +83,7 @@ object CorpusOps {
       case "token_window" => udfs.tokenWindowUdf(cfg.chunkSize, cfg.chunkOverlap)
       case "recursive_bpe" =>
         udfs.recursiveSplitBpeUdf(cfg.chunkSize, cfg.chunkOverlap, bpe.get)
-      case _ => udfs.recursiveSplitUdf(cfg.chunkSize, cfg.chunkOverlap, cfg.byTokens)
+      case _ => udfs.recursiveSplitUdf(cfg.chunkSize, cfg.chunkOverlap)
     }
     // n_tokens is measured in the chunker's own unit so downstream budget
     // packing (binPack tokenMax) agrees with the chunk boundaries

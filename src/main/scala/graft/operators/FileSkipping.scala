@@ -271,4 +271,60 @@ object FileSkipping {
     val cutoff = math.min(0.5, marginFactor * med)
     covd.filter(col("__cov") > cutoff)
   }
+
+  /** A box over two long key columns: (aLo, aHi, bLo, bHi), inclusive. */
+  type KeyBox = (Long, Long, Long, Long)
+
+  /** The (min, max) of two clustering columns in one aggregate — the key
+    * plane a Hilbert layout and [[detectUnclustered]]'s coverage are
+    * measured against. An empty table (or an all-null column) has no
+    * plane: fail with `what` named instead of getLong's opaque NPE.
+    */
+  def keyRange(df: DataFrame, aCol: String, bCol: String,
+      what: String = "table"): KeyBox = {
+    val r = df.agg(min(col(aCol)).cast("long"), max(col(aCol)).cast("long"),
+      min(col(bCol)).cast("long"), max(col(bCol)).cast("long")).head()
+    require(!r.isNullAt(0) && !r.isNullAt(2),
+      s"$what is empty (or $aCol/$bCol all-null) — nothing to cluster")
+    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+  }
+
+  /** Files a min/max-pruning scan of `df` must open for `box`: the
+    * files whose footer box over (`aCol`, `bCol`) — recomputed from the
+    * rows, one grouped pass — intersects it. The independent measure the
+    * layout gates hold a stats-table decision against.
+    */
+  def footerBoxFiles(df: DataFrame, aCol: String, bCol: String,
+      box: KeyBox): Long = {
+    val (a1, a2, b1, b2) = box
+    df.groupBy(input_file_name().as("f"))
+      .agg(min(col(aCol)).as("mina"), max(col(aCol)).as("maxa"),
+        min(col(bCol)).as("minb"), max(col(bCol)).as("maxb"))
+      .filter(col("maxa") >= a1 && col("mina") <= a2 &&
+        col("maxb") >= b1 && col("minb") <= b2)
+      .count()
+  }
+
+  /** OPTIMIZE's decide-and-rewrite half: the files of `files` whose
+    * per-file stats row in `stats` [[detectUnclustered]] flags over the
+    * `range` plane (stats `__file` values and `files` are matched by file
+    * name, so full paths and bare committed names both work) are
+    * Hilbert-rewritten into `out` as `numFiles` files under `schema`.
+    * Returns the rewritten input paths; empty means nothing was degraded
+    * and nothing was written.
+    */
+  def reclusterDegraded(spark: SparkSession, stats: DataFrame,
+      files: Seq[String], schema: StructType, aCol: String, bCol: String,
+      range: KeyBox, out: String, numFiles: Int): Seq[String] = {
+    val (aLo, aHi, bLo, bHi) = range
+    val planeArea = (aHi - aLo + 1).toDouble * (bHi - bLo + 1).toDouble
+    val flagged = detectUnclustered(stats, aCol, bCol, planeArea)
+      .select(col("__file").cast("string")).collect()
+      .map(r => Sinks.fileName(r.getString(0))).toSet
+    val detected = files.filter(p => flagged(Sinks.fileName(p)))
+    if (detected.nonEmpty)
+      ZOrder.writeHilbert(spark.read.schema(schema).parquet(detected.sorted: _*),
+        aCol, bCol, aLo, aHi, bLo, bHi, out, numFiles)
+    detected
+  }
 }

@@ -16,10 +16,11 @@ import graft.functions.exactSum
   *    bit-identical in Spark and DuckDB, and the fixed bucket count `k`
   *    makes every model object metadata-scale.
   *  - TRAINING is conjugate gradient on (XᵀX/n + λI)w = Xᵀy/n. Each CG
-  *    iteration is TWO aggregation passes over the feature table (q = Xp
-  *    grouped by doc, s = Xᵀq grouped by bucket) — the one-scan-per-step
-  *    shape distributed linear solvers actually use (LSQR/CG, e.g. Spark
-  *    MLlib's normal-equation ridge) — and converges in ~√κ iterations,
+  *    iteration is ONE aggregation pass over the feature table (q = Xp
+  *    folded per doc row, s = Xᵀq grouped by bucket) — the
+  *    one-scan-per-step shape distributed linear solvers actually use
+  *    (LSQR/CG, e.g. Spark MLlib's normal-equation ridge) — and converges
+  *    in ~√κ iterations,
   *    measured exact on the registered corpus by iteration 6. Gradient
   *    descent at the same operating point needs hundreds of passes
   *    (measured; the tf-feature conditioning is that poor), which is the
@@ -40,34 +41,15 @@ object LinearModel {
   // compiled once — localScorer runs per row in the stream_classify_lr UDF
   private val wsSplitRe = java.util.regex.Pattern.compile("\\s+")
 
-  /** Hashed binary presence features: one (doc_id, bucket) row per DISTINCT
-    * bucket present in the doc's whitespace-lowercased token stream.
-    * bucket = first 60 bits of md5("b:" ++ token) mod k — positive, so the
-    * modulus agrees across engines. Binary presence (not tf) is the
-    * measured conditioning fix: tf scales each signal token by 1/|doc|,
-    * which pushes the ridge optimum toward the prior and needs hundreds of
-    * GD passes to escape; presence features put every token vote at unit
-    * scale.
-    */
-  def hashedPresence(docs: DataFrame, k: Int, textCol: String = "text")
-      : DataFrame = {
-    require(k >= 2 && k <= (1 << 20), s"bucket count out of range: $k")
-    docs
-      .select(col("doc_id"),
-        explode(split(lower(trim(col(textCol))), "\\s+")).as("tok"))
-      .select(col("doc_id"),
-        (conv(substring(md5(concat(lit("b:"), col("tok"))), 1, 15), 16, 10)
-          .cast("long") % k).as("bucket"))
-      .distinct()
-  }
-
-  /** [[hashedPresence]] as one per-doc DISTINCT bucket ARRAY — the same
-    * bucket values from the same token stream, but map-only: the
-    * explode + corpus-wide distinct shuffle becomes array_distinct over
-    * each row's own tokens. Every per-doc consumer (training's q pass,
-    * serving's weight sum) is an exact decimal fold over the array, so
-    * the row form and the array form are value-identical; the array form
-    * removes one full-corpus shuffle per pass (guide §2.4).
+  /** Hashed binary presence features as one per-doc DISTINCT bucket
+    * ARRAY `bs`: the buckets present in the doc's whitespace-lowercased
+    * token stream, bucket = first 60 bits of md5("b:" ++ token) mod k —
+    * positive, so the modulus agrees across engines. Binary presence
+    * (not tf) is the measured conditioning fix: tf scales each signal
+    * token by 1/|doc|, which pushes the ridge optimum toward the prior
+    * and needs hundreds of GD passes to escape; presence features put
+    * every token vote at unit scale. Map-only: array_distinct over each
+    * row's own tokens, no corpus-wide shuffle (guide §2.4).
     */
   def hashedPresenceArrays(docs: DataFrame, k: Int, textCol: String = "text")
       : DataFrame = {
@@ -79,45 +61,46 @@ object LinearModel {
           .cast("long") % k).cast("int"))).as("bs"))
   }
 
-  /** The decimal(38,10)-grid weight sum over a per-doc bucket array, as a
-    * single codegen expression with no Exchange — bit-identical to
-    * exactSum over the exploded rows. The grid ride is INTEGER: each
-    * weight is pre-rounded on the driver to its decimal(38,10) UNSCALED
-    * long (HALF_UP — the exact cast exactSum applies per input row, the
-    * dotDec convention), the fold adds longs (exact, and immune to
-    * Spark's decimal-Add precision-loss rescale, which would quietly move
-    * (38,10)+(38,10) onto a (38,9) grid), and the final unscaled→double
-    * division is correctly rounded — identical bits to
-    * decimal(38,10).cast(double) while |sum| < 2^53, which the magnitude
-    * guard enforces. The bias is added after in double, matching the row
-    * form's `+ p(k)`; a null `bs` (null text) folds as the empty bucket
-    * set — the row form's missing-doc left-join fill (score = bias).
+  /** The k bucket weights on the decimal(38,10) grid as UNSCALED longs
+    * (HALF_UP) — the one rounding both scorers ride. `valueOf`, NOT
+    * `new BigDecimal(v)`: Spark's double->decimal cast goes through the
+    * SHORTEST string representation (BigDecimal.valueOf), while the
+    * exact binary expansion can land on the other side of a .5 rounding
+    * boundary (1.5e-10 rounds to 2e-10 one way, 1e-10 the other).
+    * Deliberately a LOUD guard (r14 advice weighed a silent fallback): a
+    * CG run whose weights overflow the exact-long fold bound has
+    * diverged — failing here names the defect instead of serving an
+    * extreme-but-plausible score.
     */
-  private def foldWeights(bs: Column, weights: Array[Double]): Column = {
+  private def gridWeights(weights: Array[Double]): Array[Long] = {
     val k = weights.length - 1
-    // valueOf, NOT new BigDecimal(v): Spark's double->decimal cast (the
-    // grid the row form's exactSum rides) goes through the SHORTEST
-    // string representation (BigDecimal.valueOf), while the exact binary
-    // expansion (new BigDecimal) can land on the other side of a .5
-    // rounding boundary for rare doubles — matching the cast convention
-    // keeps the documented row/array bit-identity on every weight
-    // (r14 advice).
-    val unscaled: Array[Long] = weights.take(k).map(v =>
+    val unscaled = weights.take(k).map(v =>
       java.math.BigDecimal.valueOf(v)
         .setScale(10, java.math.RoundingMode.HALF_UP)
         .unscaledValue().longValueExact())
-    // Deliberately a LOUD construction-time guard (r14 advice weighed a
-    // silent fallback to the row-form exactSum): a CG run whose weights
-    // overflow this bound has diverged — failing here names the defect
-    // instead of serving an extreme-but-plausible score.
     val bound = (1L << 52) / math.max(1, k)
     require(unscaled.forall(u => math.abs(u) <= bound),
       s"foldWeights: weight magnitude exceeds the exact-long fold bound " +
         s"(max |w| ~ ${bound / 1e10} at k=$k)")
-    val wArr: Column = array(unscaled.map(lit(_)): _*)
+    unscaled
+  }
+
+  /** The decimal(38,10)-grid weight sum over a per-doc bucket array, as a
+    * single codegen expression with no Exchange. The grid ride is
+    * INTEGER: each weight is pre-rounded on the driver to its unscaled
+    * long ([[gridWeights]]), the fold adds longs (exact, and immune to
+    * Spark's decimal-Add precision-loss rescale, which would quietly move
+    * (38,10)+(38,10) onto a (38,9) grid), and the final unscaled→double
+    * division is correctly rounded — identical bits to
+    * decimal(38,10).cast(double) while |sum| < 2^53, which the magnitude
+    * guard enforces. The bias is added after in double; a null `bs`
+    * (null text) folds as the empty bucket set (score = bias).
+    */
+  private def foldWeights(bs: Column, weights: Array[Double]): Column = {
+    val wArr: Column = array(gridWeights(weights).map(lit(_)): _*)
     (aggregate(coalesce(bs, array().cast("array<int>")), lit(0L),
       (acc, b) => acc + element_at(wArr, b + 1))
-      .cast("double") / lit(1.0e10)) + weights(k)
+      .cast("double") / lit(1.0e10)) + weights(weights.length - 1)
   }
 
   /** Driver-side dot product on the decimal(38,10) grid — each elementwise
@@ -137,101 +120,27 @@ object LinearModel {
     acc.doubleValue
   }
 
-  /** Ridge weights by `iterations` CG steps from w=0. Returns k bucket
-    * weights plus the bias at index k. `labels` must be (doc_id, y) with
-    * y ∈ {−1, +1} (the ±1 coding makes the intercept the class prior and
-    * the decision threshold exactly 0).
-    *
-    * Per iteration: q = Xp (one exactSum grouped by doc_id, bias added as
-    * a scalar), s = Xᵀq/n + λp (one exactSum grouped by bucket; the k+1
-    * collected cells are the only driver traffic). α/β guard their zero
-    * denominators to 0, so an exactly-converged (or degenerate) system
-    * idles instead of dividing by zero — the oracle replays the same
-    * CASE. Fixed iteration count, no data-dependent control flow: the
-    * whole trainer unrolls into static SQL.
-    */
-  def trainCgRidge(feats: DataFrame, labels: DataFrame, k: Int,
-      iterations: Int = 8, lambda: Double = 0.01): Array[Double] = {
-    require(iterations >= 1 && iterations <= 64, s"iterations: $iterations")
-    require(lambda >= 0.0, s"lambda: $lambda")
-    val spark = feats.sparkSession
-    import spark.implicits._
-    val f = Materialize(feats.select(col("doc_id"), col("bucket"))
-      .join(labels.select(col("doc_id"), col("y").cast("double").as("y")),
-        Seq("doc_id")))
-    val n = labels.count().toDouble
-    require(n > 0, "trainCgRidge: empty label set")
-
-    // b = Xᵀy/n (bucket cells) + bias cell Σy/n
-    val bBuckets = f.groupBy(col("bucket"))
-      .agg((exactSum(col("y")) / n).as("v"))
-      .as[(Long, Double)].collect().toMap
-    val bBias = labels.agg((exactSum(col("y").cast("double")) / n).as("v"))
-      .as[Double].head()
-    val b = Array.tabulate(k + 1)(j =>
-      if (j == k) bBias else bBuckets.getOrElse(j.toLong, 0.0))
-
-    val w = new Array[Double](k + 1)
-    val r = b.clone()
-    val p = b.clone()
-    var rr = dotDec(r, r)
-    for (_ <- 0 until iterations) {
-      // q_d = Σ_{j∈d} p_j + p_bias — decimal sum, bias added after (the
-      // oracle's + ORDER is the same: sum-then-add)
-      val pArr: Column = array(p.take(k).map(lit(_)): _*)
-      val q = f.groupBy(col("doc_id"))
-        .agg((exactSum(element_at(pArr, col("bucket").cast("int") + 1))
-          + p(k)).as("q"))
-      // s = Xᵀq/n + λp; bias cell gets Σ_d q_d — EVERY labeled doc's q,
-      // including docs with no feature rows (empty text): those have
-      // q = p_bias exactly, so the bias column joins through `labels`
-      val qAll = labels.select(col("doc_id"))
-        .join(q, Seq("doc_id"), "left")
-        .na.fill(p(k), Seq("q"))
-      val sBuckets = f.select(col("doc_id"), col("bucket"))
-        .join(qAll, Seq("doc_id"))
-        .groupBy(col("bucket"))
-        .agg((exactSum(col("q")) / n).as("v"))
-        .as[(Long, Double)].collect().toMap
-      val sBias = qAll.agg((exactSum(col("q")) / n).as("v")).as[Double].head()
-      val s = Array.tabulate(k + 1) { j =>
-        val base = if (j == k) sBias else sBuckets.getOrElse(j.toLong, 0.0)
-        base + lambda * p(j)
-      }
-      val ps = dotDec(p, s)
-      val alpha = if (ps == 0.0) 0.0 else rr / ps
-      var j = 0
-      while (j <= k) {
-        w(j) = w(j) + alpha * p(j)
-        r(j) = r(j) - alpha * s(j)
-        j += 1
-      }
-      val rr2 = dotDec(r, r)
-      val beta = if (rr == 0.0) 0.0 else rr2 / rr
-      rr = rr2
-      j = 0
-      while (j <= k) { p(j) = r(j) + beta * p(j); j += 1 }
-    }
-    w
-  }
-
-  /** [[trainCgRidge]] on the [[hashedPresenceArrays]] form — the SAME CG
-    * recurrence on the SAME decimal(38,10) grid (weights come out
-    * bit-identical; LinearModelSpec pins it), restructured so each
-    * iteration is ONE map-side-aggregated job instead of two actions over
-    * shuffled joins (guide §1.2/§2.4):
+  /** Ridge weights by `iterations` CG steps from w=0 over
+    * [[hashedPresenceArrays]] features. Returns k bucket weights plus the
+    * bias at index k. `labels` must be (doc_id, y) with y ∈ {−1, +1} (the
+    * ±1 coding makes the intercept the class prior and the decision
+    * threshold exactly 0). α/β guard their zero denominators to 0, so an
+    * exactly-converged (or degenerate) system idles instead of dividing
+    * by zero — the oracle replays the same CASE. Fixed iteration count,
+    * no data-dependent control flow: the whole trainer unrolls into
+    * static SQL. Each iteration is ONE map-side-aggregated job
+    * (guide §1.2/§2.4):
     *
     *  - the training table materializes ONCE as one row per labeled doc
     *    (bucket array + y) — no corpus-wide explode+distinct, no per-
     *    iteration re-join of features with labels;
     *  - q_d = Σ_{j∈d} p_j + bias is a per-row decimal fold (map-only);
-    *  - the k bucket cells AND the bias cell of s = Xᵀq/n come from one
-    *    groupBy over the exploded cells — partial aggregation reduces
+    *  - the k bucket cells AND the bias cell of s = Xᵀq/n + λp come from
+    *    one groupBy over the exploded cells — partial aggregation reduces
     *    each partition to ≤ k+1 rows before the only Exchange, so the
     *    shuffle is metadata-scale at any corpus size;
     *  - b = Xᵀy/n and n ride the same one-pass shape (sum + count per
-    *    cell, divided on the driver by the identical IEEE division the
-    *    row form applies inside the agg).
+    *    cell, divided on the driver).
     */
   def trainCgRidgeArrays(featsArr: DataFrame, labels: DataFrame, k: Int,
       iterations: Int = 8, lambda: Double = 0.01): Array[Double] = {
@@ -240,7 +149,7 @@ object LinearModel {
     val spark = featsArr.sparkSession
     import spark.implicits._
     // one row per LABELED doc; a label with no feature row trains as an
-    // empty bucket set (q = p_bias), the row form's left-join fill
+    // empty bucket set (q = p_bias)
     val f = Materialize(labels
       .select(col("doc_id"), col("y").cast("double").as("y"))
       .join(featsArr.select(col("doc_id"), col("bs")), Seq("doc_id"), "left")
@@ -306,15 +215,16 @@ object LinearModel {
   /** Executor-local per-doc scorer — the stateless-projection serving
     * form for STREAMS: tokenization (trim/lowercase/whitespace split),
     * the md5-60-bit bucket hash, per-bucket DISTINCT, and the
-    * decimal(38,10)-grid weight sum with the bias added after all
-    * replicate the batch pipeline's column expressions term for term, so
-    * a stream scored row-by-row is hash-identical to the batch aggregate
-    * (the stream_classify train-batch/score-stream invisibility
-    * contract). Weights ride the closure — metadata-scale (k+1 doubles).
+    * decimal(38,10)-grid weight sum ([[gridWeights]], bias added after)
+    * replicate [[scoreArrays]]'s column expressions term for term, so a
+    * stream scored row-by-row is hash-identical to the batch scores (the
+    * stream_classify train-batch/score-stream invisibility contract).
+    * Weights ride the closure — metadata-scale (k+1 numbers).
     */
   def localScorer(w: Array[Double]): String => Double = {
     val k = w.length - 1
-    val weights = w.clone()
+    val unscaled = gridWeights(w)
+    val bias = w(k)
     (text: String) => {
       val toks = wsSplitRe.split(text.trim.toLowerCase(java.util.Locale.ROOT))
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -325,43 +235,22 @@ object LinearModel {
           .map("%02x".format(_)).mkString
         buckets += (java.lang.Long.parseLong(hex.take(15), 16) % k).toInt
       }
-      var acc = java.math.BigDecimal.ZERO
-      buckets.foreach { b =>
-        acc = acc.add(new java.math.BigDecimal(weights(b))
-          .setScale(10, java.math.RoundingMode.HALF_UP))
-      }
-      acc.doubleValue + weights(k)
+      var acc = 0L
+      buckets.foreach(b => acc += unscaled(b))
+      acc.toDouble / 1.0e10 + bias
     }
   }
 
-  /** [[score]] on the [[hashedPresenceArrays]] form: (doc_id, score, pred)
-    * with the identical decimal-grid sum, but MAP-ONLY — the per-doc
-    * groupBy Exchange and the docIds join disappear because the doc's
-    * buckets already sit on its own row (guide §2.4). Callers filter
-    * `featsArr` to the doc set they want scored.
+  /** Score docs with a trained weight vector over [[hashedPresenceArrays]]
+    * features: (doc_id, score, pred) where score = Σ_{j∈d} w_j + bias on
+    * the decimal(38,10) grid and pred = 1 iff score ≥ 0. MAP-ONLY — the
+    * doc's buckets already sit on its own row and the weights ride a
+    * literal column, so serving is one scan, never a shuffle. Callers
+    * filter `featsArr` to the doc set they want scored.
     */
   def scoreArrays(featsArr: DataFrame, w: Array[Double]): DataFrame =
     featsArr
       .select(col("doc_id"), foldWeights(col("bs"), w).as("score"))
       .select(col("doc_id"), col("score"),
         (col("score") >= 0.0).cast("int").as("pred"))
-
-  /** Score docs with a trained weight vector: (doc_id, score, pred) where
-    * score = Σ_{j∈d} w_j + bias (the training pass' exact decimal sum) and
-    * pred = 1 iff score ≥ 0. Map-only + one per-doc aggregate: the serving
-    * shape — weights ride a literal column, never a shuffle.
-    */
-  def score(feats: DataFrame, docIds: DataFrame, w: Array[Double])
-      : DataFrame = {
-    val k = w.length - 1
-    val wArr: Column = array(w.take(k).map(lit(_)): _*)
-    val perDoc = feats.groupBy(col("doc_id"))
-      .agg((exactSum(element_at(wArr, col("bucket").cast("int") + 1))
-        + w(k)).as("score"))
-    docIds.select(col("doc_id"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .na.fill(w(k), Seq("score"))
-      .select(col("doc_id"), col("score"),
-        (col("score") >= 0.0).cast("int").as("pred"))
-  }
 }

@@ -169,13 +169,9 @@ object Sinks {
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val staging = java.nio.file.Paths.get(s"$destDir.staging-$nonce")
     df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    // bit_xor over ZERO rows is NULL — coalesce so an empty publish gets
-    // a valid {n_rows:0, key_xor:0} manifest instead of an opaque NPE
-    val m = spark.read.parquet(staging.toString)
-      .agg(count(lit(1)).cast("long").as("n"),
-        expr(s"coalesce(bit_xor(${keyFingerprintSql(keyCol)}), 0)").as("x"))
-      .head()
-    val json = s"""{"n_rows":${m.getLong(0)},"key_xor":${m.getLong(1)},""" +
+    val (n, x) = contentFingerprint(spark.read.parquet(staging.toString),
+      keyCol)
+    val json = s"""{"n_rows":$n,"key_xor":$x,""" +
       s""""key_col":"$keyCol"}"""
     java.nio.file.Files.write(staging.resolve("_manifest.json"),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -218,15 +214,11 @@ object Sinks {
     def field(k: String): String =
       s""""$k":("?)([^,"}]*)\\1""".r.findFirstMatchIn(mTxt)
         .getOrElse(sys.error(s"manifest missing $k: $mTxt")).group(2)
-    val keyCol = field("key_col")
     val df = spark.read.parquet(dir)
-    val got = df.agg(count(lit(1)).cast("long").as("n"),
-      expr(s"coalesce(bit_xor(${keyFingerprintSql(keyCol)}), 0)").as("x")).head()
-    require(got.getLong(0) == field("n_rows").toLong &&
-      got.getLong(1) == field("key_xor").toLong,
+    val (n, x) = contentFingerprint(df, field("key_col"))
+    require(n == field("n_rows").toLong && x == field("key_xor").toLong,
       s"published data does not match its manifest at $dir: " +
-        s"rows ${got.getLong(0)} vs ${field("n_rows")}, " +
-        s"xor ${got.getLong(1)} vs ${field("key_xor")}")
+        s"rows $n vs ${field("n_rows")}, xor $x vs ${field("key_xor")}")
     df
   }
 
@@ -236,6 +228,54 @@ object Sinks {
     */
   private[graft] def keyFingerprintSql(keyCol: String): String =
     s"cast(conv(substring(md5(cast($keyCol as string)), 1, 15), 16, 10) as bigint)"
+
+  /** The content fingerprint every manifest, commit and storage gate
+    * compares: (row count, `bit_xor` of [[keyFingerprintSql]] over
+    * `keySql`). `keySql` is a column name or any SQL expression (a
+    * whole-row key is a `concat_ws` of the columns). `bit_xor` over zero
+    * rows is NULL, so it is coalesced: an empty frame fingerprints as
+    * (0, 0) instead of an opaque NPE.
+    */
+  def contentFingerprint(df: DataFrame, keySql: String): (Long, Long) = {
+    val r = df.agg(count(lit(1)).cast("long").as("n"),
+      expr(s"coalesce(bit_xor(${keyFingerprintSql(keySql)}), 0)").as("x"))
+      .head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Hard-link `paths` by file name into `stage` (created if missing) —
+    * how a commit carries committed files forward: a new directory entry
+    * to the same immutable inode, never a copy or a rewrite.
+    */
+  def linkForward(stage: java.nio.file.Path, paths: Seq[String]): Unit = {
+    java.nio.file.Files.createDirectories(stage)
+    paths.foreach { f =>
+      java.nio.file.Files.createLink(stage.resolve(fileName(f)),
+        java.nio.file.Paths.get(f))
+    }
+  }
+
+  /** The last path segment — the name a committed file keeps across the
+    * commit's directory moves and hard links.
+    */
+  private[graft] def fileName(p: String): String = p.replaceAll(".*/", "")
+
+  /** The manifest contribution of the files named `names`, read from
+    * their per-file stats rows: (Σ`__n`, ⊕`__keyxor`). None when the
+    * stats predate the `__keyxor` column or any of those rows carries a
+    * null one — the caller then validates by a full scan, never a guess.
+    */
+  private[graft] def statsManifest(stats: DataFrame, names: Seq[String])
+      : Option[(Long, Long)] =
+    if (!stats.columns.contains("__keyxor")) None
+    else {
+      val rows = stats.filter(col("__file").cast("string").isin(names: _*))
+        .select(col("__n"), col("__keyxor")).collect()
+      if (rows.exists(_.isNullAt(1))) None
+      else Some(rows.foldLeft((0L, 0L)) { case ((n, x), r) =>
+        (n + r.getLong(0), x ^ r.getLong(1))
+      })
+    }
 
   // ------------------------------------------------- S14: snapshot commit
 
@@ -420,83 +460,145 @@ object Sinks {
       root: String, maxRows: Long, table: String = "data",
       statsTable: String = "file_stats"): Option[Long] = {
     require(maxRows >= 1, s"maxRows must be >= 1: $maxRows")
+    rewriteSnapshotVersion(spark, root, table, statsTable, "compaction",
+        "compact", mergeManifest = true) { (_, _, stats, paths, scratch) =>
+      val smallNames = stats.filter(col("__n") < maxRows)
+        .select(col("__file").cast("string")).collect()
+        .map(_.getString(0)).toSet
+      if (smallNames.size < 2) None
+      else {
+        val smallPaths = paths.filter(p => smallNames(fileName(p)))
+        spark.read.parquet(smallPaths.sorted: _*)
+          .coalesce(1).write.parquet(s"$scratch/c")
+        val newPath = spark.read.parquet(s"$scratch/c")
+          .inputFiles.map(u => new java.net.URI(u).getPath).head
+        val mergedRow = TableQuality.mergeStatRows(
+            stats.filter(col("__file").cast("string")
+              .isin(smallNames.toSeq: _*)),
+            statColsOf(stats))
+          .withColumn("__file", lit(fileName(newPath)))
+        Some((smallPaths, Seq(newPath), mergedRow))
+      }
+    }.map(_._1)
+  }
+
+  /** VERSIONED OPTIMIZE — the nightly re-cluster committed under the
+    * snapshot discipline (the s19 loop, and `graft snapshot --optimize`):
+    * degraded files are detected from the CURRENT version's committed
+    * stats and only they are Hilbert-rewritten on (`aCol`, `bCol`) into
+    * `numFiles` files ([[FileSkipping.reclusterDegraded]], over the key
+    * range of the committed data). Untouched files hard-link forward with
+    * their stats rows verbatim; the rewritten files' rows are replaced by
+    * fresh sketches over the new files only (keeping the per-file
+    * `__keyxor` when the committed stats carry it — the CDC ingest's
+    * flat-manifest commits depend on it); every other table of the
+    * commit (an ingest's batch-id `meta`) carries at zero scan cost. The
+    * data table revalidates by full scan at publish: maintenance
+    * validates what it rewrote. Readers pinned at the old version are
+    * untouched. Returns (version, files rewritten, files carried), or
+    * None when no file is degraded. Same stop-the-writers rule as every
+    * maintenance pass.
+    */
+  def optimizeSnapshotVersion(spark: org.apache.spark.sql.SparkSession,
+      root: String, aCol: String, bCol: String, numFiles: Int,
+      table: String = "data", statsTable: String = "file_stats")
+      : Option[(Long, Int, Int)] =
+    rewriteSnapshotVersion(spark, root, table, statsTable, "OPTIMIZE", "opt",
+        mergeManifest = false) { (cur, keyCol, stats, paths, scratch) =>
+      val data = readSnapshotTable(spark, root, table, Some(cur))
+      val range = FileSkipping.keyRange(data, aCol, bCol,
+        s"snapshot optimize: $table")
+      val detected = FileSkipping.reclusterDegraded(spark, stats, paths,
+        data.schema, aCol, bCol, range, s"$scratch/opt", numFiles)
+      if (detected.isEmpty) None
+      else {
+        val optPaths = spark.read.parquet(s"$scratch/opt")
+          .inputFiles.map(u => new java.net.URI(u).getPath).toSeq
+        val optRead = spark.read.schema(data.schema)
+          .parquet(optPaths.sorted: _*)
+        val statCols = statColsOf(stats)
+        val optStats =
+          (if (stats.columns.contains("__keyxor"))
+            FileSkipping.fileStatsKeyed(optRead, statCols, keyCol)
+          else FileSkipping.fileStats(optRead, statCols))
+            .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+        Some((detected, optPaths, optStats))
+      }
+    }
+
+  /** The maintenance commit [[compactSnapshotVersion]] and
+    * [[optimizeSnapshotVersion]] share. `rewrite` gets (current version,
+    * data key column, committed stats, committed data paths, a scratch
+    * dir on `root`'s filesystem) and either declines (None) or rewrites
+    * some of the paths into new files, returning (the rewritten input
+    * paths, the new files, the new files' stats rows keyed by file
+    * name). The commit hard-links the untouched and the new files
+    * forward, replaces the rewritten files' stats rows, carries every
+    * other table of the version at zero scan cost and publishes the next
+    * version. With `mergeManifest` the carried files contribute their
+    * stats rows' manifest ([[statsManifest]]), so the publish scans only
+    * the new files; otherwise the data table validates by a full scan.
+    * Returns (version, files rewritten, files carried).
+    */
+  private def rewriteSnapshotVersion(spark: org.apache.spark.sql.SparkSession,
+      root: String, table: String, statsTable: String, what: String,
+      tag: String, mergeManifest: Boolean)(
+      rewrite: (Long, String, DataFrame, Seq[String], java.nio.file.Path) =>
+        Option[(Seq[String], Seq[String], DataFrame)])
+      : Option[(Long, Int, Int)] = {
     val cur = currentVersion(root).getOrElse(
       sys.error(s"no committed snapshot under $root"))
     val info = commitTableInfo(root, Some(cur))
     val keyCol = info.find(_._1 == table).map(_._4).getOrElse(
       sys.error(s"snapshot $cur has no '$table' table"))
     require(info.exists(_._1 == statsTable),
-      s"snapshot $cur has no '$statsTable' table — compaction decides " +
+      s"snapshot $cur has no '$statsTable' table — $what decides " +
         "from committed stats")
     val stats = readSnapshotTable(spark, root, statsTable, Some(cur))
-    val statCols = stats.columns.toSeq.collect {
-      case c if c.startsWith("__min_") => c.stripPrefix("__min_")
-    }
-    val smallNames = stats.filter(col("__n") < maxRows)
-      .select(col("__file").cast("string")).collect()
-      .map(_.getString(0)).toSet
-    if (smallNames.size < 2) return None
-    def nameOf(p: String): String = p.replaceAll(".*/", "")
     val paths = committedFilePaths(root, table, Some(cur))
-    val smallPaths = paths.filter(p => smallNames(nameOf(p)))
-    val carryPaths = paths.filterNot(p => smallNames(nameOf(p)))
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val scratch = java.nio.file.Paths.get(s"$root/.compact-$nonce")
+    val scratch = java.nio.file.Paths.get(s"$root/.$tag-$nonce")
     java.nio.file.Files.createDirectories(scratch)
-    try {
-      spark.read.parquet(smallPaths.sorted: _*)
-        .coalesce(1).write.parquet(s"$scratch/c")
-      val newPath = spark.read.parquet(s"$scratch/c")
-        .inputFiles.map(u => new java.net.URI(u).getPath).head
-      val stage = scratch.resolve(table)
-      java.nio.file.Files.createDirectories(stage)
-      (carryPaths :+ newPath).foreach { f =>
-        java.nio.file.Files.createLink(stage.resolve(nameOf(f)),
-          java.nio.file.Paths.get(f))
-      }
-      val smallSeq = smallNames.toSeq
-      val mergedRow = graft.operators.TableQuality.mergeStatRows(
-          stats.filter(col("__file").cast("string").isin(smallSeq: _*)),
-          statCols)
-        .withColumn("__file", lit(nameOf(newPath)))
-      stats.filter(!col("__file").cast("string").isin(smallSeq: _*))
-        .unionByName(mergedRow, allowMissingColumns = true)
-        .coalesce(1).write.parquet(s"$scratch/stats")
-      // carried-manifest contribution from the stats rows (metadata) —
-      // the compacted sliver is the only thing the publish scans
-      val carriedManifest =
-        if (!stats.columns.contains("__keyxor")) None
-        else {
-          val carryNameSeq = carryPaths.map(nameOf)
-          val rows = stats
-            .filter(col("__file").cast("string").isin(carryNameSeq: _*))
-            .select(col("__n"), col("__keyxor")).collect()
-          if (rows.exists(_.isNullAt(1))) None
-          else Some(rows.foldLeft((0L, 0L)) { case ((n, x), r) =>
-            (n + r.getLong(0), x ^ r.getLong(1))
-          } match { case (n, x) => (n, x, carryPaths.map(nameOf).toSet) })
-        }
-      val others = info.filterNot(t =>
-        t._1 == table || t._1 == statsTable).map {
-        case (name, n, x, kc) =>
-          val tPaths = committedFilePaths(root, name, Some(cur))
-          val tStage = scratch.resolve(name)
-          java.nio.file.Files.createDirectories(tStage)
-          tPaths.foreach { f =>
-            java.nio.file.Files.createLink(tStage.resolve(nameOf(f)),
-              java.nio.file.Paths.get(f))
-          }
-          name -> ((tStage.toString, kc,
-            Some((n, x, tPaths.map(nameOf).toSet))))
-      }.toMap
-      Some(publishSnapshotStagedAppend(others ++ Map(
-        table -> ((stage.toString, keyCol, carriedManifest)),
-        statsTable -> ((s"$scratch/stats", "__file", None))), root, spark))
+    try rewrite(cur, keyCol, stats, paths, scratch).map {
+      case (rewritten, newPaths, newStats) =>
+        val gone = rewritten.map(fileName)
+        val carry = paths.filterNot(p => gone.contains(fileName(p)))
+        val carryNames = carry.map(fileName)
+        val stage = scratch.resolve(table)
+        linkForward(stage, carry ++ newPaths)
+        stats.filter(!col("__file").cast("string").isin(gone: _*))
+          .unionByName(newStats, allowMissingColumns = true)
+          .coalesce(1).write.parquet(s"$scratch/stats")
+        val carried =
+          if (!mergeManifest) None
+          else statsManifest(stats, carryNames)
+            .map { case (n, x) => (n, x, carryNames.toSet) }
+        val others = info.filterNot(t =>
+          t._1 == table || t._1 == statsTable).map {
+          case (name, n, x, kc) =>
+            val tPaths = committedFilePaths(root, name, Some(cur))
+            val tStage = scratch.resolve(name)
+            linkForward(tStage, tPaths)
+            name -> ((tStage.toString, kc,
+              Some((n, x, tPaths.map(fileName).toSet))))
+        }.toMap
+        val v = publishSnapshotStagedAppend(others ++ Map(
+          table -> ((stage.toString, keyCol, carried)),
+          statsTable -> ((s"$scratch/stats", "__file", None))), root, spark)
+        (v, rewritten.size, carry.size)
     } finally {
       // reclaim whatever the publish did not consume
       Scratch.deleteTree(scratch)
     }
   }
+
+  /** The stat columns a per-file stats table carries, read off its
+    * `__min_` columns.
+    */
+  private def statColsOf(stats: DataFrame): Seq[String] =
+    stats.columns.toSeq.collect {
+      case c if c.startsWith("__min_") => c.stripPrefix("__min_")
+    }
 
   /** Every table entry of a commit as (name, n_rows, key_xor, key_col) —
     * the metadata a maintenance command needs to rewrite SOME tables of
@@ -555,13 +657,7 @@ object Sinks {
         stage(staging)
         def scanManifest(paths: Seq[String]): (Long, Long) =
           if (paths.isEmpty) (0L, 0L)
-          else {
-            val r = spark.read.parquet(paths.sorted: _*)
-              .agg(count(lit(1)).cast("long").as("n"),
-                expr(s"coalesce(bit_xor(${keyFingerprintSql(keyCol)}), 0)")
-                  .as("x")).head()
-            (r.getLong(0), r.getLong(1))
-          }
+          else contentFingerprint(spark.read.parquet(paths.sorted: _*), keyCol)
         val (n, x) = carried match {
           case None => scanManifest(Seq(staging.toString))
           case Some((nPrev, xPrev, carriedNames)) =>
@@ -1007,12 +1103,10 @@ object Sinks {
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
     val reader = spark.read
     val df = schema.fold(reader)(reader.schema).parquet(s"$root/$path")
-    val got = df.agg(count(lit(1)).cast("long").as("n"),
-      expr(s"coalesce(bit_xor(${keyFingerprintSql(keyCol)}), 0)").as("x"))
-      .head()
-    require(got.getLong(0) == n && got.getLong(1) == x,
+    val (gotN, gotX) = contentFingerprint(df, keyCol)
+    require(gotN == n && gotX == x,
       s"snapshot $v table $name does not match its commit: " +
-        s"rows ${got.getLong(0)} vs $n, xor ${got.getLong(1)} vs $x")
+        s"rows $gotN vs $n, xor $gotX vs $x")
     df
   }
 }

@@ -332,14 +332,6 @@ object TableQuality {
     df.groupBy(col(partCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Merge per-partition sketch rows ([[columnSketches]] /
-    * [[partitionStats]] output, any extra tag columns ignored) into the
-    * [[tableStats]] report shape: counts/nulls SUM, min/max MIN/MAX
-    * (both EXACTLY equal to a from-scratch recompute — merge ≡ recompute
-    * is the s16c oracle), NDV from the unioned HLL sketch (bounded
-    * relative error, gated like s16b). The merge itself touches only the
-    * stats rows — metadata scale — never the data.
-    */
   /** Merge several per-partition stats ROWS into ONE wide row with the
     * sketch kept AS a sketch (`hll_union_agg` binary, still union-able
     * downstream) — the compaction maintenance unit: the stats row of a
@@ -368,6 +360,14 @@ object TableQuality {
     parts.agg(aggs.head, aggs.tail: _*)
   }
 
+  /** Merge per-partition sketch rows ([[columnSketches]] /
+    * [[partitionStats]] output, any extra tag columns ignored) into the
+    * [[tableStats]] report shape: counts/nulls SUM, min/max MIN/MAX
+    * (both EXACTLY equal to a from-scratch recompute — merge ≡ recompute
+    * is the s16c oracle), NDV from the unioned HLL sketch (bounded
+    * relative error, gated like s16b). The merge itself touches only the
+    * stats rows — metadata scale — never the data.
+    */
   def mergeSketches(parts: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "mergeSketches: no columns")
     cols.foreach(validName(_, "column name"))
@@ -380,5 +380,28 @@ object TableQuality {
         max(col(s"__max_$c")).cast("string").as(s"__max_$c"))
     }
     stackStats(parts.agg(aggs.head, aggs.tail: _*), cols)
+  }
+
+  /** Stats currency: does the [[mergeSketches]] report over a per-file
+    * stats table still describe `data`? Row count, null count, min and
+    * max must equal a from-scratch [[tableStats]] recompute exactly (the
+    * mergeable fields), and the union-sketch NDV must lie within 10% of
+    * the exact one. The check a maintenance or ingest commit owes its
+    * readers: a stale `__n` or sketch would silently mis-drive every
+    * stats-driven decision downstream.
+    */
+  def statsCurrent(stats: DataFrame, data: DataFrame, cols: Seq[String])
+      : Boolean = {
+    def report(df: DataFrame) = df.collect().map(r => r.getString(0) ->
+      ((r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getString(4), r.getString(5)))).toMap
+    val merged = report(mergeSketches(stats, cols))
+    val recomputed = report(tableStats(data, cols))
+    cols.forall { c =>
+      val (mn, mnn, mndv, mmin, mmax) = merged(c)
+      val (rn, rnn, rndv, rmin, rmax) = recomputed(c)
+      mn == rn && mnn == rnn && mmin == rmin && mmax == rmax &&
+        math.abs(mndv - rndv).toDouble <= 0.1 * rndv
+    }
   }
 }

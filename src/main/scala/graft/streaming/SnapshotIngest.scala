@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{FileSkipping, Sinks}
 
@@ -57,37 +58,16 @@ object SnapshotIngest {
       scratch: String, keyCol: String = "doc_id",
       statCols: Seq[String] = Seq("doc_id")): Option[Long] = {
     val spark = batch.sparkSession
-    import spark.implicits._
     val cur = Sinks.currentVersion(root)
-    // replay guard: tolerate a root whose current version predates the
-    // ingest (no meta table yet) but NEVER swallow a validation failure
-    // — a tampered meta must stop the stream, not re-ingest
-    val last = cur.flatMap { _ =>
-      try Some(Sinks.readSnapshotTable(spark, root, "meta")
-        .agg(max(col("batch_id"))).head().getLong(0))
-      catch {
-        case e: RuntimeException
-            if e.getMessage != null &&
-              e.getMessage.contains("has no table 'meta'") => None
-      }
-    }
-    if (last.exists(_ >= batchId)) return None
-    def pathOf(u: String): String = new java.net.URI(u).getPath
-    def nameOf(p: String): String = p.replaceAll(".*/", "")
+    if (alreadyCommitted(spark, root, cur, batchId)) return None
     val stage = java.nio.file.Paths.get(s"$scratch/b$batchId/data")
-    java.nio.file.Files.createDirectories(stage)
     val carried = cur.toSeq.flatMap(v =>
       Sinks.committedFilePaths(root, "data", Some(v)))
-    carried.foreach(f => java.nio.file.Files.createLink(
-      stage.resolve(nameOf(f)), java.nio.file.Paths.get(f)))
+    Sinks.linkForward(stage, carried)
     batch.write.mode("append").parquet(stage.toString)
-    val carriedNames = carried.map(nameOf).toSet
-    val newPaths = spark.read.parquet(stage.toString)
-      .inputFiles.map(pathOf).filterNot(p => carriedNames(nameOf(p))).toSeq
-    val newStats = FileSkipping.fileStatsKeyed(
-        spark.read.schema(batch.schema).parquet(newPaths.sorted: _*),
-        statCols, keyCol)
-      .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+    val carriedNames = carried.map(Sinks.fileName).toSet
+    val newStats = newFileStats(spark, stage, carriedNames, batch.schema,
+      statCols, keyCol)
     // allowMissingColumns: a root whose earlier versions predate the
     // per-file __keyxor column keeps working (their rows carry null —
     // the CDC manifest merge detects that and falls back to a scan)
@@ -95,9 +75,6 @@ object SnapshotIngest {
       .map(v => Sinks.readSnapshotTable(spark, root, "file_stats", Some(v))
         .unionByName(newStats, allowMissingColumns = true))
       .getOrElse(newStats)
-    stats.coalesce(1).write.parquet(s"$scratch/b$batchId/stats")
-    Seq(batchId).toDF("batch_id").coalesce(1)
-      .write.parquet(s"$scratch/b$batchId/meta")
     // append-manifest publish: the carried files' (n, xor) comes from
     // their own committed manifest (bit_xor merges file-wise), so the
     // commit scans ONLY this batch's bytes — per-batch cost stays flat
@@ -107,11 +84,8 @@ object SnapshotIngest {
       val (nPrev, xPrev) = Sinks.commitManifest(root, "data", Some(v))
       (nPrev, xPrev, carriedNames)
     }
-    Some(Sinks.publishSnapshotStagedAppend(Map(
-      "data" -> ((stage.toString, keyCol, carriedManifest)),
-      "file_stats" -> ((s"$scratch/b$batchId/stats", "__file", None)),
-      "meta" -> ((s"$scratch/b$batchId/meta", "batch_id", None))),
-      root, spark))
+    Some(publish(root, scratch, batchId, stage, keyCol, carriedManifest,
+      stats))
   }
 
   /** The CDC twin of [[commitBatch]] — STREAMING MERGE INTO: one
@@ -147,29 +121,15 @@ object SnapshotIngest {
       s"statCols must include $keyCol — the touched-file decision reads " +
         s"its per-file range")
     val spark = changes.sparkSession
-    import spark.implicits._
     val cur = Sinks.currentVersion(root)
-    val last = cur.flatMap { _ =>
-      try Some(Sinks.readSnapshotTable(spark, root, "meta")
-        .agg(max(col("batch_id"))).head().getLong(0))
-      catch {
-        case e: RuntimeException
-            if e.getMessage != null &&
-              e.getMessage.contains("has no table 'meta'") => None
-      }
-    }
-    if (last.exists(_ >= batchId)) return None
+    if (alreadyCommitted(spark, root, cur, batchId)) return None
     // an empty micro-batch (heartbeat tick) commits nothing — rewriting
     // touched files under a no-op changelog would be pure churn
     if (changes.isEmpty) return None
-    def pathOf(u: String): String = new java.net.URI(u).getPath
-    def nameOf(p: String): String = p.replaceAll(".*/", "")
     val payload = changes.drop("op", "seq")
     val stage = java.nio.file.Paths.get(s"$scratch/b$batchId/data")
-    java.nio.file.Files.createDirectories(stage)
     // carried manifest contribution: Σ__n ⊕ ⊕__keyxor over the carried
-    // files' stats rows — None when any carried row predates the
-    // __keyxor column (degrade to a full-scan manifest, never guess)
+    // files' stats rows (Sinks.statsManifest)
     val (carryPaths, touchedPaths, carriedManifest) = cur match {
       case None => (Seq.empty[String], Seq.empty[String],
         Option.empty[(Long, Long)])
@@ -183,23 +143,11 @@ object SnapshotIngest {
           .select(col("__file").cast("string")).collect()
           .map(_.getString(0)).toSet
         val paths = Sinks.committedFilePaths(root, "data", Some(v))
-        val carried = paths.filterNot(p => touchedNames(nameOf(p)))
-        val manifest =
-          if (!stats.columns.contains("__keyxor")) None
-          else {
-            val rows = stats
-              .filter(col("__file").cast("string")
-                .isin(carried.map(nameOf): _*))
-              .select(col("__n"), col("__keyxor")).collect()
-            if (rows.exists(_.isNullAt(1))) None
-            else Some(rows.foldLeft((0L, 0L)) { case ((n, x), r) =>
-              (n + r.getLong(0), x ^ r.getLong(1))
-            })
-          }
-        (carried, paths.filter(p => touchedNames(nameOf(p))), manifest)
+        val carried = paths.filterNot(p => touchedNames(Sinks.fileName(p)))
+        (carried, paths.filter(p => touchedNames(Sinks.fileName(p))),
+          Sinks.statsManifest(stats, carried.map(Sinks.fileName)))
     }
-    carryPaths.foreach(f => java.nio.file.Files.createLink(
-      stage.resolve(nameOf(f)), java.nio.file.Paths.get(f)))
+    Sinks.linkForward(stage, carryPaths)
     val base =
       if (touchedPaths.isEmpty)
         spark.createDataFrame(
@@ -217,34 +165,75 @@ object SnapshotIngest {
       .repartitionByRange(parts, col(keyCol))
       .sortWithinPartitions(col(keyCol))
       .write.mode("append").parquet(stage.toString)
-    val carriedNames = carryPaths.map(nameOf).toSet
-    val rwPaths = spark.read.parquet(stage.toString)
-      .inputFiles.map(pathOf).filterNot(p => carriedNames(nameOf(p))).toSeq
-    val newStats = FileSkipping.fileStatsKeyed(
-        spark.read.schema(payload.schema).parquet(rwPaths.sorted: _*),
-        statCols, keyCol)
-      .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+    val carriedNames = carryPaths.map(Sinks.fileName).toSet
+    val newStats = newFileStats(spark, stage, carriedNames, payload.schema,
+      statCols, keyCol)
     val stats = cur
       .map { v =>
-        val touchedNameSet = touchedPaths.map(nameOf).toSet
+        val touchedNameSet = touchedPaths.map(Sinks.fileName).toSet
         Sinks.readSnapshotTable(spark, root, "file_stats", Some(v))
           .filter(!col("__file").cast("string")
             .isin(touchedNameSet.toSeq: _*))
           .unionByName(newStats, allowMissingColumns = true)
       }
       .getOrElse(newStats)
-    stats.coalesce(1).write.parquet(s"$scratch/b$batchId/stats")
-    Seq(batchId).toDF("batch_id").coalesce(1)
-      .write.parquet(s"$scratch/b$batchId/meta")
     // with per-file fingerprints the mutation commit's data manifest
     // MERGES too (carried Σn/⊕xor + scan of the rewritten files only) —
     // O(changed bytes), the same flat cost as the append path; a root
     // whose carried rows predate __keyxor degrades to a full scan
-    Some(Sinks.publishSnapshotStagedAppend(Map(
-      "data" -> ((stage.toString, keyCol,
-        carriedManifest.map { case (n, x) => (n, x, carriedNames) })),
+    Some(publish(root, scratch, batchId, stage, keyCol,
+      carriedManifest.map { case (n, x) => (n, x, carriedNames) }, stats))
+  }
+
+  /** Replay guard: true when `batchId` is at or below the batch id the
+    * current version's `meta` holds. A root whose current version
+    * predates the ingest (no meta table yet) has committed no batch, but
+    * a validation failure is NEVER swallowed — a tampered meta must stop
+    * the stream, not re-ingest.
+    */
+  private def alreadyCommitted(spark: SparkSession, root: String,
+      cur: Option[Long], batchId: Long): Boolean =
+    cur.flatMap { _ =>
+      try Some(Sinks.readSnapshotTable(spark, root, "meta")
+        .agg(max(col("batch_id"))).head().getLong(0))
+      catch {
+        case e: RuntimeException
+            if e.getMessage != null &&
+              e.getMessage.contains("has no table 'meta'") => None
+      }
+    }.exists(_ >= batchId)
+
+  /** Keyed per-file stats rows (keyed by file NAME, stable across the
+    * commit move) over the files of `stage` that are not carried — the
+    * batch's new or rewritten files only.
+    */
+  private def newFileStats(spark: SparkSession, stage: java.nio.file.Path,
+      carriedNames: Set[String], schema: StructType, statCols: Seq[String],
+      keyCol: String): DataFrame = {
+    val newPaths = spark.read.parquet(stage.toString).inputFiles
+      .map(u => new java.net.URI(u).getPath)
+      .filterNot(p => carriedNames(Sinks.fileName(p))).toSeq
+    FileSkipping.fileStatsKeyed(
+        spark.read.schema(schema).parquet(newPaths.sorted: _*),
+        statCols, keyCol)
+      .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+  }
+
+  /** Write the batch's stats table and one-row `meta`, then publish
+    * data + stats + meta as ONE snapshot version.
+    */
+  private def publish(root: String, scratch: String, batchId: Long,
+      stage: java.nio.file.Path, keyCol: String,
+      carried: Option[Sinks.CarriedManifest], stats: DataFrame): Long = {
+    val spark = stats.sparkSession
+    import spark.implicits._
+    stats.coalesce(1).write.parquet(s"$scratch/b$batchId/stats")
+    Seq(batchId).toDF("batch_id").coalesce(1)
+      .write.parquet(s"$scratch/b$batchId/meta")
+    Sinks.publishSnapshotStagedAppend(Map(
+      "data" -> ((stage.toString, keyCol, carried)),
       "file_stats" -> ((s"$scratch/b$batchId/stats", "__file", None)),
       "meta" -> ((s"$scratch/b$batchId/meta", "batch_id", None))),
-      root, spark))
+      root, spark)
   }
 }

@@ -515,17 +515,15 @@ class HostileCorpusSpec extends AnyFunSuite {
     // finite, every labeled doc scored
     val labeled = safe.withColumn("y",
       when(col("doc_id") % 2 === 0, -1.0).otherwise(1.0))
-    val feats = LinearModel.hashedPresence(labeled, 64)
-    val w = LinearModel.trainCgRidge(feats,
+    val feats = LinearModel.hashedPresenceArrays(labeled, 64)
+    val w = LinearModel.trainCgRidgeArrays(feats,
       labeled.select(col("doc_id"), col("y")), 64, iterations = 4)
     assert(w.forall(v => !v.isNaN && !v.isInfinite))
-    val scored = LinearModel.score(feats, labeled.select(col("doc_id")), w)
-      .select("score").as[Double].collect()
-    assert(scored.length == 7 && scored.forall(s => !s.isNaN))
+    val batch = LinearModel.scoreArrays(feats, w)
+      .select("doc_id", "score").as[(Long, Double)].collect().toMap
+    assert(batch.size == 7 && batch.values.forall(s => !s.isNaN))
     // local scorer agrees on hostile text too (unicode, giant token)
     val scorer = LinearModel.localScorer(w)
-    val batch = LinearModel.score(feats, labeled.select(col("doc_id")), w)
-      .select("doc_id", "score").as[(Long, Double)].collect().toMap
     safe.select("doc_id", "text").as[(Long, String)].collect()
       .foreach { case (id, t) => assert(scorer(t) == batch(id), s"doc $id") }
     // z-order: extreme / identical keys scale-clamp, never crash

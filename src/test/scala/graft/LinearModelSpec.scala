@@ -9,7 +9,8 @@ import graft.operators.LinearModel
   * the CG trainer (the exactSum/dotDec contract), actual CG convergence
   * (the normal-equation residual after 8 steps must be ~0, not just
   * "weights exist"), separation on a planted lexical corpus, the
-  * feature-less-doc bias path, and the zero-denominator idle guard.
+  * feature-less-doc bias path, the zero-denominator idle guard, and the
+  * stream scorer's bit-identity with the batch scorer.
   */
 class LinearModelSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -34,9 +35,9 @@ class LinearModelSpec extends AnyFunSuite {
     val docs = corpus
     val labels = docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("y"))
-    val f1 = LinearModel.hashedPresence(docs, K)
-    val w1 = LinearModel.trainCgRidge(f1, labels, K)
-    val w2 = LinearModel.trainCgRidge(f1.repartition(7, col("bucket")),
+    val f1 = LinearModel.hashedPresenceArrays(docs, K)
+    val w1 = LinearModel.trainCgRidgeArrays(f1, labels, K)
+    val w2 = LinearModel.trainCgRidgeArrays(f1.repartition(7),
       labels.repartition(3), K)
     assert(w1.toSeq == w2.toSeq) // bit-identical, not approximately
   }
@@ -45,18 +46,18 @@ class LinearModelSpec extends AnyFunSuite {
     val docs = corpus
     val labels = docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("y"))
-    val feats = LinearModel.hashedPresence(docs, K)
-    val w = LinearModel.trainCgRidge(feats, labels, K, iterations = 8,
+    val feats = LinearModel.hashedPresenceArrays(docs, K)
+    val w = LinearModel.trainCgRidgeArrays(feats, labels, K, iterations = 8,
       lambda = 0.01)
     // rebuild the dense system locally and check ||(X'X/n + λI)w − X'y/n||∞
     val rows = feats.join(labels, Seq("doc_id"))
-      .select(col("doc_id"), col("bucket"), col("y"))
-      .as[(Long, Long, Double)].collect()
+      .select(col("doc_id"), explode(col("bs")).as("bucket"), col("y"))
+      .as[(Long, Int, Double)].collect()
     val docsIdx = rows.map(_._1).distinct.sorted
     val yMap = rows.map(r => r._1 -> r._3).toMap
     val x = docsIdx.map { d =>
       val v = new Array[Double](K + 1)
-      rows.filter(_._1 == d).foreach(r => v(r._2.toInt) = 1.0)
+      rows.filter(_._1 == d).foreach(r => v(r._2) = 1.0)
       v(K) = 1.0
       v
     }
@@ -81,10 +82,10 @@ class LinearModelSpec extends AnyFunSuite {
     val docs = corpus
     val labels = docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("y"))
-    val feats = LinearModel.hashedPresence(docs, K)
-    val w = LinearModel.trainCgRidge(feats, labels, K)
+    val feats = LinearModel.hashedPresenceArrays(docs, K)
+    val w = LinearModel.trainCgRidgeArrays(feats, labels, K)
     val tst = docs.filter(col("doc_id") % 2 === 1)
-    val scored = LinearModel.score(feats, tst.select(col("doc_id")), w)
+    val scored = LinearModel.scoreArrays(feats, w)
       .join(tst.select(col("doc_id"), col("y")), Seq("doc_id"))
       .select(col("pred"), (col("y") > 0).cast("int").as("truth"))
       .as[(Int, Int)].collect()
@@ -97,12 +98,16 @@ class LinearModelSpec extends AnyFunSuite {
   test("feature-less docs score exactly the bias") {
     val docs = Seq((0L, "alpha beta", 1.0), (1L, "", -1.0),
       (2L, "alpha gamma", 1.0), (3L, "", -1.0)).toDF("doc_id", "text", "y")
-    val feats = LinearModel.hashedPresence(docs, K)
+    // docs 1 and 3 have no feature row: they train as the empty bucket
+    // set, and a null bucket array scores as the bias alone
+    val feats = LinearModel.hashedPresenceArrays(docs, K)
       .filter(col("doc_id") =!= 1L && col("doc_id") =!= 3L)
     val labels = docs.select(col("doc_id"), col("y"))
-    val w = LinearModel.trainCgRidge(feats, labels, K, iterations = 4)
-    val s = LinearModel.score(feats, docs.select(col("doc_id")), w)
-      .filter(col("doc_id") === 1L).select(col("score")).as[Double].head()
+    val w = LinearModel.trainCgRidgeArrays(feats, labels, K, iterations = 4)
+    val s = LinearModel.scoreArrays(
+        Seq(1L).toDF("doc_id").withColumn("bs", lit(null).cast("array<int>")),
+        w)
+      .select(col("score")).as[Double].head()
     assert(s == w(K))
   }
 
@@ -111,7 +116,8 @@ class LinearModelSpec extends AnyFunSuite {
     // X'y is 0 and so is the bias cell -> r0 = p0 = 0, ps = rr = 0
     val docs = Seq((0L, "same text here", 1.0), (1L, "same text here", -1.0))
       .toDF("doc_id", "text", "y")
-    val w = LinearModel.trainCgRidge(LinearModel.hashedPresence(docs, K),
+    val w = LinearModel.trainCgRidgeArrays(
+      LinearModel.hashedPresenceArrays(docs, K),
       docs.select(col("doc_id"), col("y")), K)
     assert(w.forall(_ == 0.0))
   }
@@ -120,9 +126,9 @@ class LinearModelSpec extends AnyFunSuite {
     val docs = corpus
     val labels = docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("y"))
-    val feats = LinearModel.hashedPresence(docs, K)
-    val w = LinearModel.trainCgRidge(feats, labels, K, iterations = 4)
-    val batch = LinearModel.score(feats, docs.select(col("doc_id")), w)
+    val feats = LinearModel.hashedPresenceArrays(docs, K)
+    val w = LinearModel.trainCgRidgeArrays(feats, labels, K, iterations = 4)
+    val batch = LinearModel.scoreArrays(feats, w)
       .select(col("doc_id"), col("score")).as[(Long, Double)].collect().toMap
     val scorer = LinearModel.localScorer(w)
     planted.foreach { case (id, text, _) =>
@@ -130,32 +136,19 @@ class LinearModelSpec extends AnyFunSuite {
     }
   }
 
-  test("array-form trainer and scorer are bit-identical to the row form") {
-    // hostile shapes on purpose: empty text (one "" token), repeated
-    // tokens (array_distinct vs corpus distinct), multi-space runs,
-    // unicode, a labeled doc with NULL text (bs = null -> bias exactly)
-    val docs = (planted ++ Seq(
-      (100L, "", -1.0), (101L, "dup dup dup   dup", 1.0),
-      (102L, "  pad  ded  ", -1.0), (103L, "émoji 🚀 émoji", 1.0),
-      (104L, null.asInstanceOf[String], -1.0)))
-      .toDF("doc_id", "text", "y")
-    val labels = docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("y"))
-    val rowsW = LinearModel.trainCgRidge(
-      LinearModel.hashedPresence(docs, K), labels, K)
-    val arrF = LinearModel.hashedPresenceArrays(docs, K)
-    val arrW = LinearModel.trainCgRidgeArrays(arrF, labels, K)
-    assert(rowsW.toSeq == arrW.toSeq) // bit-identical, not approximately
-
-    val rowsScore = LinearModel
-      .score(LinearModel.hashedPresence(docs, K),
-        docs.select(col("doc_id")), rowsW)
-      .select(col("doc_id"), col("score"), col("pred"))
-      .as[(Long, Double, Int)].collect().sortBy(_._1)
-    val arrScore = LinearModel.scoreArrays(arrF, arrW)
-      .select(col("doc_id"), col("score"), col("pred"))
-      .as[(Long, Double, Int)].collect().sortBy(_._1)
-    assert(rowsScore.toSeq == arrScore.toSeq)
+  test("localScorer rounds a .5 grid-boundary weight like scoreArrays") {
+    // the double nearest 1.5e-10 sits just below it: its exact binary
+    // expansion rounds HALF_UP to 1e-10 at scale 10, its shortest decimal
+    // form (what Spark's double->decimal cast and the batch fold use)
+    // to 2e-10
+    val w = Array.fill(K)(1.5e-10) :+ 0.0
+    val batch = LinearModel.scoreArrays(
+        LinearModel.hashedPresenceArrays(corpus, K), w)
+      .select(col("doc_id"), col("score")).as[(Long, Double)].collect().toMap
+    val scorer = LinearModel.localScorer(w)
+    planted.foreach { case (id, text, _) =>
+      assert(scorer(text) == batch(id), s"doc $id") // ==, not approx
+    }
   }
 
   test("dotDec quantizes to the decimal(38,10) grid") {

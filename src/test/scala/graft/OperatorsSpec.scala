@@ -43,7 +43,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("C1/C2 chunkDocs: contiguous chunk_idx from 0, token counts attached") {
     val docs = Seq((1L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10")).toDF("doc_id", "text")
-    val cfg = PipelineConfig(chunkSize = 4, chunkOverlap = 0, byTokens = true)
+    val cfg = PipelineConfig(chunkSize = 4, chunkOverlap = 0)
     val rows = CorpusOps.chunkDocs(docs, cfg)
       .select("chunk_idx", "n_tokens").as[(Int, Long)].collect().sortBy(_._1)
     assert(rows.map(_._1).toSeq == rows.indices.toSeq)

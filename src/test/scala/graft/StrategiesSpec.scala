@@ -21,7 +21,7 @@ class StrategiesSpec extends AnyFunSuite {
   private val cfg = PipelineConfig(
     chunkSize = 6, chunkOverlap = 0, tokenMax = 10,
     maxSummaryTokens = 4, maxCollapseRounds = 10,
-    maxCritiqueIterations = 2, byTokens = true)
+    maxCritiqueIterations = 2)
 
   private def docs: DataFrame = Seq(
     (1L, "alpha beta gamma. delta epsilon zeta. eta theta iota. kappa lambda mu."),
@@ -95,7 +95,7 @@ class StrategiesSpec extends AnyFunSuite {
   private val collapseCfg = PipelineConfig(
     chunkSize = 6, chunkOverlap = 0, tokenMax = 10,
     maxSummaryTokens = 4, maxCollapseRounds = 10,
-    maxCritiqueIterations = 2, byTokens = true, chunker = "token_window")
+    maxCritiqueIterations = 2, chunker = "token_window")
 
   private def wordDocs(lengths: (Long, Int)*): DataFrame =
     lengths.map { case (id, n) => (id, (0 until n).map(i => s"d${id}w$i").mkString(" ")) }
