@@ -48,19 +48,7 @@ private[graft] object OracleSqlGen {
     * original-order ' ' concat; final token truncation).
     */
   private[graft] def extractive(p: String, inRel: String, budget: Int): String =
-    s"""${p}_pieces AS (
-  SELECT doc_id, uid,
-    string_split(regexp_replace(regexp_replace(txt, '([.!?;])\\s+', '\\1' || chr(1), 'g'), '\\n+', chr(1), 'g'), chr(1)) AS parts
-  FROM $inRel),
-${p}_sents AS (
-  SELECT doc_id, uid, ROW_NUMBER() OVER (PARTITION BY doc_id, uid ORDER BY k) - 1 AS s_idx, trim(parts[k]) AS sent
-  FROM ${p}_pieces, LATERAL UNNEST(generate_series(1, len(parts))) AS u(k)
-  WHERE trim(parts[k]) <> ''),
-${p}_swl AS (
-  SELECT doc_id, uid, s_idx, sent,
-    len(string_split_regex(sent, '\\s+')) AS wslen,
-    ${mtok("sent")} AS mt
-  FROM ${p}_sents),
+    s"""${sentenceCtes(p, inRel)},
 ${p}_stoks AS (
   SELECT doc_id, uid, s_idx, mt[k] AS tok
   FROM ${p}_swl, LATERAL UNNEST(generate_series(1, len(mt))) AS u(k)),
@@ -74,6 +62,26 @@ ${p}_ranked AS (
       ORDER BY coalesce(sc.raw * 1.0 / sqrt(sc.mlen), 0.0) DESC, w.s_idx) AS rn
   FROM ${p}_swl w LEFT JOIN ${p}_sscore sc USING (doc_id, uid, s_idx)),
 ${budgetWalk(p, inRel, budget)}"""
+
+  /** The sentence split both extractive scalars share, over rel `$inRel`
+    * (doc_id, uid, txt): `${p}_pieces` breaks after [.!?;] and on newline
+    * runs, `${p}_sents` numbers the non-blank sentences, `${p}_swl` adds
+    * each sentence's whitespace length and metric tokens.
+    */
+  private def sentenceCtes(p: String, inRel: String): String =
+    s"""${p}_pieces AS (
+  SELECT doc_id, uid,
+    string_split(regexp_replace(regexp_replace(txt, '([.!?;])\\s+', '\\1' || chr(1), 'g'), '\\n+', chr(1), 'g'), chr(1)) AS parts
+  FROM $inRel),
+${p}_sents AS (
+  SELECT doc_id, uid, ROW_NUMBER() OVER (PARTITION BY doc_id, uid ORDER BY k) - 1 AS s_idx, trim(parts[k]) AS sent
+  FROM ${p}_pieces, LATERAL UNNEST(generate_series(1, len(parts))) AS u(k)
+  WHERE trim(parts[k]) <> ''),
+${p}_swl AS (
+  SELECT doc_id, uid, s_idx, sent,
+    len(string_split_regex(sent, '\\s+')) AS wslen,
+    ${mtok("sent")} AS mt
+  FROM ${p}_sents)"""
 
   /** The greedy budget walk + original-order emission shared by BOTH
     * extractive scalars (ExtractiveSummarizer and TextRankSummarizer
@@ -148,19 +156,7 @@ SELECT doc_id, summary FROM tr_out ORDER BY doc_id""")
     GROUP BY 1, 2, 3) c
     ON c.doc_id = b.doc_id AND c.uid = b.uid AND c.s_idx = b.s_idx)"""
     }.mkString(",\n")
-    s"""${p}_pieces AS (
-  SELECT doc_id, uid,
-    string_split(regexp_replace(regexp_replace(txt, '([.!?;])\\s+', '\\1' || chr(1), 'g'), '\\n+', chr(1), 'g'), chr(1)) AS parts
-  FROM $inRel),
-${p}_sents AS (
-  SELECT doc_id, uid, ROW_NUMBER() OVER (PARTITION BY doc_id, uid ORDER BY k) - 1 AS s_idx, trim(parts[k]) AS sent
-  FROM ${p}_pieces, LATERAL UNNEST(generate_series(1, len(parts))) AS u(k)
-  WHERE trim(parts[k]) <> ''),
-${p}_swl AS (
-  SELECT doc_id, uid, s_idx, sent,
-    len(string_split_regex(sent, '\\s+')) AS wslen,
-    ${mtok("sent")} AS mt
-  FROM ${p}_sents),
+    s"""${sentenceCtes(p, inRel)},
 ${p}_stoksd AS (
   SELECT DISTINCT doc_id, uid, s_idx, mt[k] AS tok
   FROM ${p}_swl, LATERAL UNNEST(generate_series(1, len(mt))) AS u(k)),
@@ -510,7 +506,8 @@ pm AS (
   def evalPairMetricsSql: String = materialize(
     s"WITH RECURSIVE $pairsBody,\n${pairMetricCtes()}\nSELECT * FROM pm ORDER BY doc_id")
 
-  private def exactSumSql(e: String) =
+  /** Order-free exact sum: every value cast onto the decimal(38,10) grid. */
+  private[graft] def exactSumSql(e: String) =
     s"CAST(SUM(CAST($e AS DECIMAL(38,10))) AS DOUBLE)"
 
   /** Long-format mean/std/min/max per metric (Metrics.summaryStats). */
@@ -591,20 +588,37 @@ FROM js""")
              / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
                 * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) END)"""
 
-  /** The exact-top-5 side + recall@5 tail shared by the ss2/ss3 recall
-    * oracles (the qz3/qz6 recall template, lifted verbatim): `ap` must be
-    * a CTE of (query_id, vec_id) approximate hits.
+  /** The retrieval query set every ANN/top-k oracle shares: CTE `$name`
+    * (query_id, eq) = the vec_id < 5 rows of `src` (vec_id, embedding).
     */
-  private def recallTail: String =
-    s"""fq2 AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
+  private[graft] def queryCte(name: String, src: String = "embeddings"): String =
+    s"$name AS (SELECT vec_id AS query_id, embedding AS eq FROM $src WHERE vec_id < 5)"
+
+  /** FROM-clause body: rel (query_id, vec_id, cosine) ranked per query by
+    * (cosine DESC, vec_id ASC) into `rank`, the first `k` kept — the
+    * top-k order of Similarity.bruteForceTopK and every rerank.
+    */
+  private[graft] def cosineTopk(rel: String, k: Int = 5): String =
+    s"""(
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+      ORDER BY cosine DESC, vec_id ASC) AS rank FROM $rel)
+  WHERE rank <= $k"""
+
+  /** `ap` = the top-5 of rel (query_id, vec_id, cosine) — the approximate
+    * side [[recallTail]] scores.
+    */
+  private[graft] def apCte(rel: String): String =
+    s"ap AS (SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk(rel)})"
+
+  /** The exact-top-5 side + recall@5 tail shared by every recall oracle:
+    * `ap` must be a CTE of (query_id, vec_id) approximate hits.
+    */
+  private[graft] def recallTail: String =
+    s"""${queryCte("fq2")},
 fscored AS (
   SELECT fq2.query_id, c.vec_id, round(${cosD("fq2.eq", "c.embedding")}, 4) AS cosine
   FROM embeddings c, fq2 WHERE c.vec_id <> fq2.query_id),
-ex AS (
-  SELECT query_id, vec_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, vec_id ASC) AS rank FROM fscored)
-  WHERE rank <= 5),
+ex AS (SELECT query_id, vec_id FROM ${cosineTopk("fscored")}),
 j AS (
   SELECT ex.query_id,
     CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END AS hit
@@ -656,17 +670,8 @@ cand AS (
   SELECT DISTINCT q.query_id, c.vec_id
   FROM cb c JOIN qb q ON c.tbl = q.tbl AND c.bkt = q.bkt
   WHERE c.vec_id <> q.query_id),
-fq AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-rr AS (
-  SELECT cand.query_id, cand.vec_id,
-    round(${cosD("fq.eq", "c.embedding")}, 4) AS cosine
-  FROM cand JOIN embeddings c ON cand.vec_id = c.vec_id
-  JOIN fq ON cand.query_id = fq.query_id),
-ap AS (
-  SELECT query_id, vec_id, cosine, rank FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, vec_id ASC) AS rank FROM rr)
-  WHERE rank <= 5)"""
+${queryCte("fq")},
+${rerankCtes("cand")}"""
 
   private[graft] def ss2TopkSql: String =
     s"""WITH $ss2Ctes
@@ -730,18 +735,14 @@ pq AS (
       ROW_NUMBER() OVER (PARTITION BY e.vec_id
         ORDER BY ${cosD("e.embedding", "c.c")} DESC, c.cell ASC) AS rn
     FROM embeddings e CROSS JOIN c2 c WHERE e.vec_id < 5) WHERE rn <= 6),
-fq AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
+${queryCte("fq")},
 rr AS (
   SELECT fq.query_id, cl.vec_id,
     round(${cosD("fq.eq", "cl.embedding")}, 4) AS cosine
   FROM cells cl JOIN pq ON cl.cell = pq.cell
   JOIN fq ON pq.query_id = fq.query_id
   WHERE cl.vec_id <> fq.query_id),
-ap AS (
-  SELECT query_id, vec_id, cosine, rank FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, vec_id ASC) AS rank FROM rr)
-  WHERE rank <= 5)"""
+${apCte("rr")}"""
 
   private[graft] def ss3TopkSql: String =
     s"""WITH $ss3Ctes
@@ -819,7 +820,7 @@ topm AS (
 edges AS (
   SELECT DISTINCT src, dst FROM (
     SELECT src, dst FROM topm UNION ALL SELECT dst AS src, src AS dst FROM topm)),
-fq AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
+${queryCte("fq")},
 sd AS (
   SELECT vec_id FROM embeddings
   WHERE vec_id % (SELECT GREATEST(1, COUNT(*) // $RegEntry) FROM embeddings) = 0),
@@ -829,11 +830,7 @@ b0 AS (
   FROM sd CROSS JOIN fq JOIN embeddings c ON sd.vec_id = c.vec_id
   WHERE sd.vec_id <> fq.query_id),
 ${(1 to RegRounds).map(round).mkString(",\n")},
-ap AS (
-  SELECT query_id, vec_id, cosine, rank FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, vec_id ASC) AS rank FROM b$RegRounds)
-  WHERE rank <= 5)"""
+${apCte(s"b$RegRounds")}"""
   }
 
   private[graft] def ss13TopkSql: String =
@@ -909,6 +906,31 @@ ${p}alls AS (
 ${assign(s"${p}alls", s"${p}c2", s"${p}codes")}"""
   }
 
+  /** Exact 4dp rerank of shortlist rel `$short` (query_id, vec_id)
+    * against the `fq` queries -> `rr`, and its top-5 `ap`.
+    */
+  private def rerankCtes(short: String): String =
+    s"""rr AS (
+  SELECT $short.query_id, $short.vec_id,
+    round(${cosD("fq.eq", "c.embedding")}, 4) AS cosine
+  FROM $short JOIN embeddings c ON $short.vec_id = c.vec_id
+  JOIN fq ON $short.query_id = fq.query_id),
+${apCte("rr")}"""
+
+  /** The ADC scans' query tables over `fq`: `qsub` = each query cut into
+    * the 8 subspaces of 8 dims, `qn` = its double L2 norm.
+    */
+  private val qsubCte: String =
+    """qsub AS (
+  SELECT query_id, u.s, list_slice(eq, u.s * 8 + 1, (u.s + 1) * 8) AS sub
+  FROM fq, LATERAL UNNEST(generate_series(0, 7)) AS u(s))"""
+
+  private val qnCte: String =
+    """qn AS (
+  SELECT query_id,
+    sqrt(list_sum(list_transform(eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS qnorm
+  FROM fq)"""
+
   /** qz4: Pq.pqTopK replayed at the registered operating point (m=8,
     * ksub=16, iterations=2, trainMod=1, shortlist=150, k=5, queries
     * vec_id<5). Per-query subspace dot tables (`qd`) and the
@@ -920,10 +942,8 @@ ${assign(s"${p}alls", s"${p}c2", s"${p}codes")}"""
     */
   private def qz4Ctes: String =
     s"""${pqTrainCtes("p", "embeddings", 8, 8, 16, 1)},
-fq AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-qsub AS (
-  SELECT query_id, u.s, list_slice(eq, u.s * 8 + 1, (u.s + 1) * 8) AS sub
-  FROM fq, LATERAL UNNEST(generate_series(0, 7)) AS u(s)),
+${queryCte("fq")},
+$qsubCte,
 qd AS (
   SELECT q.query_id, c.s, c.cell,
     list_sum(list_transform(list_zip(q.sub, c.cent),
@@ -933,10 +953,7 @@ pnt AS (
   SELECT s, cell,
     list_sum(list_transform(cent, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nn
   FROM pc2),
-qn AS (
-  SELECT query_id,
-    sqrt(list_sum(list_transform(eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS qnorm
-  FROM fq),
+$qnCte,
 adcrow AS (
   SELECT f.query_id, k.vec_id, k.s, qd.d, pnt.nn
   FROM pcodes k CROSS JOIN (SELECT query_id FROM fq) f
@@ -956,16 +973,7 @@ sl AS (
               ELSE a.dotv / (q.qnorm * sqrt(a.cn)) END) DESC,
         a.vec_id ASC) AS rk
     FROM adcv a JOIN qn q USING (query_id)) WHERE rk <= 150),
-rr AS (
-  SELECT sl.query_id, sl.vec_id,
-    round(${cosD("fq.eq", "c.embedding")}, 4) AS cosine
-  FROM sl JOIN embeddings c ON sl.vec_id = c.vec_id
-  JOIN fq ON sl.query_id = fq.query_id),
-ap AS (
-  SELECT query_id, vec_id, cosine, rank FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, vec_id ASC) AS rank FROM rr)
-  WHERE rank <= 5)"""
+${rerankCtes("sl")}"""
 
   private[graft] def qz4TopkSql: String =
     s"""WITH $qz4Ctes
@@ -996,7 +1004,7 @@ rsd AS (
       z -> CAST(CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE) AS FLOAT)) AS residual
   FROM cells cl JOIN c2 c USING (cell)),
 ${pqTrainCtes("rp", "(SELECT vec_id, residual AS embedding FROM rsd)", 8, 8, 64, 4)},
-fq AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
+${queryCte("fq")},
 pq8 AS (
   SELECT query_id, cell FROM (
     SELECT fq.query_id, c.cell,
@@ -1008,18 +1016,13 @@ cd AS (
     list_sum(list_transform(list_zip(fq.eq, c.c),
       z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) AS cdot
   FROM pq8 p JOIN fq USING (query_id) JOIN c2 c USING (cell)),
-qsub AS (
-  SELECT query_id, u.s, list_slice(eq, u.s * 8 + 1, (u.s + 1) * 8) AS sub
-  FROM fq, LATERAL UNNEST(generate_series(0, 7)) AS u(s)),
+$qsubCte,
 qd AS (
   SELECT q.query_id, c.s, c.cell,
     list_sum(list_transform(list_zip(q.sub, c.cent),
       z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) AS d
   FROM qsub q JOIN rpc2 c USING (s)),
-qn AS (
-  SELECT query_id,
-    sqrt(list_sum(list_transform(eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS qnorm
-  FROM fq),
+$qnCte,
 adcrow AS (
   SELECT p.query_id, k.vec_id, k.s, qd.d
   FROM rpcodes k
@@ -1042,16 +1045,7 @@ sl AS (
               ELSE a.dotv / (q.qnorm * a.norm_c) END) DESC,
         a.vec_id ASC) AS rk
     FROM adcv a JOIN qn q USING (query_id)) WHERE rk <= 250),
-rr AS (
-  SELECT sl.query_id, sl.vec_id,
-    round(${cosD("fq.eq", "c.embedding")}, 4) AS cosine
-  FROM sl JOIN embeddings c ON sl.vec_id = c.vec_id
-  JOIN fq ON sl.query_id = fq.query_id),
-ap AS (
-  SELECT query_id, vec_id, cosine, rank FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, vec_id ASC) AS rank FROM rr)
-  WHERE rank <= 5)"""
+${rerankCtes("sl")}"""
 
   private[graft] def ss8TopkSql: String =
     s"""WITH $ss8Ctes
@@ -1217,4 +1211,401 @@ FROM sc""")
     s"""WITH ${kmeansCtes(8, 1)}
 SELECT CAST(cell AS INT) AS cluster, CAST(COUNT(*) AS BIGINT) AS n_vectors
 FROM cells GROUP BY 1 ORDER BY cluster"""
+
+  // ============================================ shared oracle fragments
+  // SparkEntry.oracleSql's mirrored decisions, one SQL text each: every
+  // oracle that replays the decision interpolates the fragment, so a
+  // change to the decision is one edit here.
+
+  /** The 4dp split cosine of two float-list SQL exprs, without the
+    * zero-norm guard of [[cosD]] — the raw fixture vectors never have a
+    * zero norm.
+    */
+  private[graft] def cos4(a: String, b: String): String =
+    s"""round(
+  list_sum(list_transform(list_zip($a, $b),
+    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+  / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+     * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
+  4)"""
+
+  /** ss1's exact scoring over `src` (vec_id, embedding): `q` = its
+    * [[queryCte]] queries, `$scored` (query_id, vec_id, cosine) = the
+    * [[cos4]] of every query against every other row.
+    */
+  private[graft] def exactCosineCtes(src: String = "embeddings",
+      scored: String = "scored"): String =
+    s"""${queryCte("q", src)},
+$scored AS (
+  SELECT q.query_id, c.vec_id,
+    ${cos4("q.eq", "c.embedding")} AS cosine
+  FROM $src c, q WHERE c.vec_id <> q.query_id)"""
+
+  /** Integer HALF-UP mean on the 4dp grid: sign-aware (2|s| + d) // (2d),
+    * all BIGINT, then one exact double division by 10^4.
+    */
+  private[graft] val lmAvgExpr: String =
+    "(CASE WHEN s >= 0 THEN (2*s + d) // (2*d) " +
+      "ELSE -((-2*s + d) // (2*d)) END) / 10000.0"
+
+  /** `lm2` (doc_id, n_bigrams, avg_logprob): [[bigramLmCtes]]' 4dp mean. */
+  private[graft] val lmMeanCte: String =
+    s"""lm2 AS (
+  SELECT doc_id, n_bigrams, $lmAvgExpr AS avg_logprob FROM lm)"""
+
+  /** ta16's interpolated bigram LM trained and scored over `src`
+    * (doc_id, text): `tok`/`uni`/`tot` = the metric-token unigram counts,
+    * `arr`/`big`/`c12`/`c1` = the adjacent-pair counts (DuckDB lists are
+    * 1-based, toks[i] and toks[i+1] for i in 1..len-1, where Spark's
+    * sequence is 0-based — the same pairs), `lp` = each bigram's
+    * ln(0.75 * c12/c1 + 0.25 * cu/total) on the 6dp grid, written
+    * operation for operation as the Spark side so the IEEE results agree
+    * bit for bit before the grid, and `lm` (doc_id, n_bigrams, s, d) =
+    * each doc's EXACT micro-unit sum of its lp values. The 4dp mean then
+    * comes from [[lmAvgExpr]]'s integer HALF-UP division — round(double)
+    * is NOT cross-engine stable when the true mean lands on a 4dp half
+    * (Spark rounds the exact binary value; DuckDB's float multiply can
+    * land exactly on the half — observed at sf0.001 doc 180, mean exactly
+    * -3.36275).
+    */
+  private[graft] def bigramLmCtes(src: String): String =
+    raw"""tok AS (
+  SELECT doc_id,
+    UNNEST(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
+  FROM $src),
+uni AS (SELECT tok, COUNT(*) AS cu FROM tok GROUP BY 1),
+tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM tok),
+arr AS (
+  SELECT doc_id, regexp_extract_all(lower(text), '[\p{L}\p{N}]+') AS toks
+  FROM $src),
+big AS (
+  SELECT doc_id, toks[CAST(g.i AS INT)] AS w1,
+    toks[CAST(g.i AS INT) + 1] AS w2
+  FROM arr, LATERAL UNNEST(generate_series(1, len(toks) - 1)) AS g(i)),
+c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
+c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
+lp AS (
+  SELECT big.doc_id,
+    round(ln(0.75 * (CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE))
+      + 0.25 * (CAST(uni.cu AS DOUBLE) / tot.total)), 6) AS lp
+  FROM big
+  JOIN c12 ON big.w1 = c12.w1 AND big.w2 = c12.w2
+  JOIN c1 ON big.w1 = c1.w1
+  JOIN uni ON big.w2 = uni.tok, tot),
+lm AS (
+  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+    SUM(CAST(round(lp * 1000000) AS BIGINT)) AS s,
+    CAST(COUNT(*) AS BIGINT) * 100 AS d
+  FROM lp GROUP BY 1)"""
+
+  /** dd4's word-shingle head over `src` (doc_id, text): `toks` = the
+    * lowercased whitespace tokens, `sh` = each doc's DISTINCT `n`-token
+    * shingles as column `$col` (a doc under `n` tokens is one shingle).
+    */
+  private[graft] def wordShingleCtes(n: Int, col: String,
+      src: String = "documents"): String =
+    raw"""toks AS (
+  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM $src),
+sh AS (
+  SELECT DISTINCT doc_id, array_to_string(t[k:k+${n - 1}], ' ') AS $col
+  FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-${n - 1}, 1))) AS u(k))"""
+
+  /** dd4's exact 3-shingle Jaccard counts over documents:
+    * [[wordShingleCtes]], `sizes` = shingles per doc, `inter` = shingles
+    * shared per doc pair (doc_a < doc_b).
+    */
+  private[graft] def jaccardCountCtes: String =
+    s"""${wordShingleCtes(3, "shingle")},
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+inter AS (
+  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
+  FROM sh x JOIN sh y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2)"""
+
+  /** FROM-clause body over [[jaccardCountCtes]]: the near-dup pairs
+    * (doc_a, doc_b, jaccard) with jaccard = |A∩B| / (|A| + |B| - |A∩B|)
+    * on the 4dp grid, at least 0.5.
+    */
+  private[graft] val jaccardNearDupSql: String =
+    """(
+  SELECT doc_a, doc_b,
+    round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
+  FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id)
+WHERE jaccard >= 0.5"""
+
+  /** dd7's near-dup components (needs WITH RECURSIVE): the
+    * [[jaccardNearDupSql]] pairs `jp` as undirected `edges`, `reach` =
+    * their transitive closure, `comp` (doc_id, component) = the least
+    * reachable id — min-label propagation's fixed point exactly.
+    */
+  private[graft] def jaccardComponentCtes: String =
+    s"""$jaccardCountCtes,
+jp AS (SELECT doc_a, doc_b FROM $jaccardNearDupSql),
+edges AS (
+  SELECT doc_a AS a, doc_b AS b FROM jp
+  UNION SELECT doc_b, doc_a FROM jp),
+reach AS (
+  SELECT DISTINCT a AS src, a AS dst FROM edges
+  UNION
+  SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
+comp AS (SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src)"""
+
+  /** dc1's benchmark-decontamination head over `src` (doc_id, text):
+    * 5-token [[wordShingleCtes]] as column `g`, `bench` = the shingles
+    * of the benchmark slice (doc_id % 10 = 0).
+    */
+  private[graft] def benchShingleCtes(src: String = "documents"): String =
+    s"""${wordShingleCtes(5, "g", src)},
+bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 10 = 0)"""
+
+  /** `flagged` = the corpus docs (doc_id % 10 <> 0) sharing a shingle
+    * with [[benchShingleCtes]]'s `bench`.
+    */
+  private[graft] val flaggedCte: String =
+    """flagged AS (
+  SELECT DISTINCT doc_id FROM sh JOIN bench USING (g)
+  WHERE doc_id % 10 <> 0)"""
+
+  /** dc4's positional 5-token spans over documents: `toks` = the q7
+    * wsTokens split (on \s+ with empty fields dropped — DuckDB's trim
+    * strips SPACES only and string_split_regex keeps leading/trailing
+    * empty fields, so without the filter a tabs/newlines-only doc would
+    * tokenize differently from the JVM's split), `g` (doc_id, k, g) =
+    * the lowercased gram at 0-based token k (none for a 0-token doc).
+    */
+  private[graft] val spanGramCtes: String =
+    raw"""toks AS (
+  SELECT doc_id,
+    list_filter(string_split_regex(coalesce(text, ''), '\s+'),
+      x -> x <> '') AS t
+  FROM documents),
+g AS (
+  SELECT doc_id, k - 1 AS k,
+    lower(array_to_string(t[k:k+4], ' ')) AS g
+  FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-4, 1))) u(k)
+  WHERE len(t) >= 1)"""
+
+  /** dc4's rewrite after a `hits` (doc_id, k) CTE over [[spanGramCtes]]:
+    * every token a hit span covers (`cov`, capped at the doc length) is
+    * dropped, the rest rejoined with single spaces in token order; one
+    * row per doc the `docFilter` WHERE clause keeps ("" keeps all).
+    */
+  private[graft] def spanRewriteSql(docFilter: String): String =
+    s"""cov AS (
+  SELECT DISTINCT h.doc_id, u.i
+  FROM hits h JOIN toks t ON h.doc_id = t.doc_id,
+    LATERAL UNNEST(generate_series(h.k, least(h.k + 4, len(t.t) - 1))) u(i)),
+idx AS (
+  SELECT doc_id, t, u.i AS i
+  FROM toks, LATERAL UNNEST(generate_series(0, len(t) - 1)) u(i)
+  $docFilter),
+kept AS (
+  SELECT x.doc_id, x.i, x.t[CAST(x.i AS INT) + 1] AS tok
+  FROM idx x LEFT JOIN cov c ON x.doc_id = c.doc_id AND x.i = c.i
+  WHERE c.i IS NULL),
+agg AS (
+  SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS clean_text,
+    CAST(COUNT(*) AS BIGINT) AS n_kept
+  FROM kept GROUP BY 1),
+tot AS (
+  SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks
+  $docFilter)
+SELECT t.doc_id, COALESCE(a.clean_text, '') AS clean_text,
+  t.n_tokens, t.n_tokens - COALESCE(a.n_kept, 0) AS n_removed
+FROM tot t LEFT JOIN agg a USING (doc_id)
+ORDER BY t.doc_id"""
+
+  /** dd11's content-defined chunking over documents: `d` = lowercased
+    * whitespace tokens ([] for a blank doc), `c` = cut after token i iff
+    * the md5 of the gram (i, i+1) hits the 1-in-16 grid, `s` = each
+    * chunk's start/end token, `x` (doc_id, chunk_idx, chunk) = the
+    * chunk texts.
+    */
+  private[graft] val cdcChunkCtes: String =
+    raw"""d AS (
+  SELECT doc_id,
+    CASE WHEN length(trim(text)) = 0 THEN []
+      ELSE string_split_regex(lower(trim(text)), '\s+') END AS t
+  FROM documents),
+c AS (
+  SELECT doc_id, t, len(t) AS n,
+    CASE WHEN len(t) >= 2 THEN list_filter(range(1, len(t)), i ->
+      CAST(('0x' || substr(md5(t[i] || ' ' || t[i+1]), 1, 15))
+        AS BIGINT) % 16 = 0)
+    ELSE [] END AS cuts
+  FROM d),
+s AS (
+  SELECT doc_id, t,
+    list_concat([1], list_transform(cuts, b -> b + 1)) AS starts,
+    list_concat(cuts, [n]) AS ends
+  FROM c),
+x AS (
+  SELECT doc_id, k - 1 AS chunk_idx,
+    array_to_string(t[starts[k]:ends[k]], ' ') AS chunk
+  FROM s, LATERAL UNNEST(generate_series(1, len(starts))) AS u(k))"""
+
+  /** dd10's planted boilerplate `planted` (doc_id, t): one newsletter
+    * line before every third doc and after every fifth.
+    */
+  private[graft] val plantedBoilerCte: String =
+    """planted AS (
+  SELECT doc_id,
+    CASE WHEN doc_id % 3 = 0
+      THEN 'subscribe to our newsletter for updates' || chr(10)
+      ELSE '' END
+    || text ||
+    CASE WHEN doc_id % 5 = 0
+      THEN chr(10) || 'subscribe to our newsletter for updates'
+      ELSE '' END AS t
+  FROM documents)"""
+
+  /** dd10's hot-paragraph removal ahead of the composed corpus pipelines:
+    * `pp` = the planted docs' newline paragraphs, `hot` = the md5 of any
+    * paragraph seen at least 10 times, `cleaned` (doc_id, text) = each
+    * doc without its hot paragraphs.
+    */
+  private[graft] def boilerCleanCtes: String =
+    s"""$plantedBoilerCte,
+pp AS (
+  SELECT doc_id, ps[k] AS para, k AS pos
+  FROM (SELECT doc_id, string_split(t, chr(10)) AS ps FROM planted),
+    LATERAL UNNEST(generate_series(1, len(ps))) AS u(k)),
+hot AS (
+  SELECT md5(para) AS ph FROM pp GROUP BY 1 HAVING COUNT(*) >= 10),
+cleaned AS (
+  SELECT doc_id,
+    COALESCE(string_agg(para, chr(10) ORDER BY pos)
+      FILTER (WHERE md5(para) NOT IN (SELECT ph FROM hot)), '') AS text
+  FROM pp GROUP BY doc_id)"""
+
+  /** The mixing family's derived domain of a doc: 11/16 web, 3/16 books,
+    * 1/16 code, 1/16 wiki by doc_id.
+    */
+  private[graft] val domainSql: String =
+    """CASE WHEN doc_id % 16 < 11 THEN 'web'
+     WHEN doc_id % 16 < 14 THEN 'books'
+     WHEN doc_id % 16 < 15 THEN 'code'
+     ELSE 'wiki' END"""
+
+  /** The keyed-hash unit draw of the sampling family: the first 60 md5
+    * bits of "<seed>:<id>" over 2^60 (the ta4/o4 md5-prefix-long idiom).
+    */
+  private[graft] def md5UnitSql(seed: String, id: String = "doc_id"): String =
+    s"""CAST(('0x' || substr(md5('$seed:' || CAST($id AS VARCHAR)), 1, 15))
+    AS BIGINT) / 1152921504606846976.0"""
+
+  /** sp1's 75/12.5/12.5 train/val/test split of the unit draw `u`. */
+  private[graft] val splitCaseSql: String =
+    """CASE WHEN u < 0.75 THEN 'train' WHEN u < 0.875 THEN 'val'
+     ELSE 'test' END"""
+
+  /** ss5's BM25 over documents (k1 = 1.2, b = 0.75, the idf
+    * ln((N - df + 0.5) / (df + 0.5) + 1) on the 6dp grid): metric tokens
+    * `t`, `tf`, doc `lens`, `d` = df, corpus `stats`, `qt` = the doc_id < 5
+    * queries' distinct tokens, `$scored` (query_id, doc_id, score) = the
+    * decimal-exact per-pair sum on the 4dp grid. Literals are emitted
+    * from the Scala doubles (shortest round-trip repr), so both engines
+    * compute on identical bit patterns, and the parenthesization mirrors
+    * the Column expression exactly.
+    */
+  private[graft] def bm25Ctes(scored: String = "scored"): String =
+    raw"""t AS (
+  SELECT doc_id,
+    UNNEST(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
+  FROM documents),
+tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS DOUBLE) AS tf
+       FROM t GROUP BY 1, 2),
+lens AS (SELECT doc_id, CAST(COUNT(*) AS DOUBLE) AS len
+         FROM t GROUP BY 1),
+d AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
+stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total_toks,
+            CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM t),
+qt AS (
+  SELECT DISTINCT doc_id AS query_id, tok FROM t WHERE doc_id < 5),
+$scored AS (
+  SELECT query_id, tf.doc_id,
+    round(CAST(SUM(CAST(round(
+      round(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0), 6)
+        * (tf * ${1.2 + 1}) /
+        (tf + 1.2 * (1.0 - 0.75 + 0.75 * len /
+          (total_toks / n_docs))), 6)
+      AS DECIMAL(38,10))) AS DOUBLE), 4) AS score
+  FROM qt JOIN tf USING (tok) JOIN d USING (tok)
+       JOIN lens ON tf.doc_id = lens.doc_id, stats
+  WHERE df <= 1.0 * n_docs
+  GROUP BY 1, 2)"""
+
+  /** The storage oracles' key fingerprint — DuckDB's side of
+    * Sinks.contentFingerprint: bit_xor of the first 60 md5 bits of `key`,
+    * 0 over no rows.
+    */
+  private[graft] def md5XorSql(key: String): String =
+    s"""CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
+    $key), 1, 15)) AS BIGINT)), 0) AS BIGINT)"""
+
+  /** lineitem's 4-column row key. */
+  private[graft] val LineitemKeySql: String =
+    """CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)
+    || ':' || CAST(l_partkey AS VARCHAR) || ':'
+    || CAST(l_suppkey AS VARCHAR)"""
+
+  /** The documents snapshot row key (doc_id, lang, n_chars). */
+  private[graft] val DocRowKeySql: String =
+    """CAST(doc_id AS VARCHAR) || ':' || lang || ':' ||
+    CAST(n_chars AS VARCHAR)"""
+
+  private[graft] val DocIdKeySql: String = "CAST(doc_id AS VARCHAR)"
+
+  /** A one-row storage check of `rel`: `n_rows`, the [[md5XorSql]] of
+    * `key` as `$xorCol`, then the gate literal columns `gates`.
+    */
+  private[graft] def countXorSql(rel: String, key: String, xorCol: String,
+      gates: String): String =
+    s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+  ${md5XorSql(key)}
+    AS $xorCol,
+  $gates
+FROM $rel"""
+
+  /** lineitem's key ranges `rg` (alo/ahi = l_orderkey, blo/bhi =
+    * l_partkey) — the layout keys' scaling domain.
+    */
+  private[graft] val keyRangeCte: String =
+    """rg AS (
+  SELECT MIN(l_orderkey) AS alo, MAX(l_orderkey) AS ahi,
+    MIN(l_partkey) AS blo, MAX(l_partkey) AS bhi
+  FROM lineitem)"""
+
+  /** ZOrder's affine 16-bit scaling of `key` over its `rg` range: long
+    * floor division, clamped to [lo, hi], as column `out`.
+    */
+  private[graft] def zScaleSql(key: String, lo: String, hi: String,
+      out: String): String =
+    s"((GREATEST((SELECT $lo FROM rg), LEAST((SELECT $hi FROM rg), " +
+      s"$key)) - (SELECT $lo FROM rg)) * 65535) " +
+      s"// ((SELECT $hi FROM rg) - (SELECT $lo FROM rg)) AS $out"
+
+  /** ZOrder's Morton interleave of the scaled 16-bit keys `cols` as a
+    * flat shift/mask sum: bit i of the j-th of n keys lands at bit
+    * n*i + (n-1-j) of the key (a->2i+1, b->2i for two keys).
+    */
+  private[graft] def mortonSql(cols: Seq[String]): String = {
+    val n = cols.size
+    (0 until 16).flatMap(i => cols.zipWithIndex.map { case (c, j) =>
+      s"(($c >> $i) & 1) * ${1L << (n * i + n - 1 - j)}"
+    }).mkString(" + ")
+  }
+
+  /** The skipping gates' lineitem probe: [[keyRangeCte]], `bounds` = the
+    * second quarter of each key range (pure long floor arithmetic), `hit`
+    * = the rows inside that box.
+    */
+  private[graft] def quarterBoxCtes: String =
+    s"""$keyRangeCte,
+bounds AS (
+  SELECT alo + (ahi - alo) // 4 AS a1, alo + (ahi - alo) // 2 AS a2,
+    blo + (bhi - blo) // 4 AS b1, blo + (bhi - blo) // 2 AS b2
+  FROM rg),
+hit AS (
+  SELECT l.* FROM lineitem l, bounds
+  WHERE l.l_orderkey BETWEEN a1 AND a2 AND l.l_partkey BETWEEN b1 AND b2)"""
 }

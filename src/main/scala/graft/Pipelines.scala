@@ -126,11 +126,18 @@ object Pipelines {
     * same overlapping-token-slice pairing as eval_rouge_ngram, so the
     * score is non-degenerate without running a strategy first).
     */
-  def bertScores(spark: SparkSession, dir: String): DataFrame = {
+  def bertScores(spark: SparkSession, dir: String): DataFrame =
+    Metrics.bertScore(tokenSlicePairs(docs(spark, dir))).orderBy(col("doc_id"))
+
+  /** The SQL-constructible eval pairing over a docs frame: gen =
+    * whitespace tokens 1-20, ref = tokens 11-40 (partial overlap, so
+    * precision and recall are non-degenerate). The ngram eval oracles
+    * rebuild it as the list slices `[1:20]` and `[11:40]`.
+    */
+  def tokenSlicePairs(docs: DataFrame): DataFrame = {
     val toks = split(trim(col("text")), "\\s+")
-    val pairs = docs(spark, dir).select(col("doc_id"),
+    docs.select(col("doc_id"),
       array_join(slice(toks, 1, 20), " ").as("gen"),
       array_join(slice(toks, 11, 30), " ").as("ref"))
-    Metrics.bertScore(pairs).orderBy(col("doc_id"))
   }
 }

@@ -7,6 +7,13 @@ import org.apache.spark.sql.functions._
 import graft.functions.{charCount, cleanThinking, exactAvg, exactStddevPop, exactSum,
   r4, squeezeWhitespace, tokenCount, truncateTokens}
 import graft.Scratch.{drain, withScratch}
+import graft.OracleSqlGen.{DocIdKeySql, DocRowKeySql, LineitemKeySql, apCte,
+  benchShingleCtes, bigramLmCtes, bm25Ctes, boilerCleanCtes, cdcChunkCtes, cos4,
+  cosineTopk, countXorSql, domainSql, exactCosineCtes, exactSumSql, flaggedCte,
+  jaccardComponentCtes, jaccardCountCtes, jaccardNearDupSql, keyRangeCte,
+  lmAvgExpr, lmMeanCte, md5UnitSql, md5XorSql, mortonSql, plantedBoilerCte,
+  quarterBoxCtes, queryCte, recallTail, spanGramCtes, spanRewriteSql,
+  splitCaseSql, wordShingleCtes, zScaleSql}
 import graft.operators.{CorpusOps, Dedup, FileSkipping, Multimodal, Similarity,
   Sinks, TableQuality, TextAnalysis}
 
@@ -2122,11 +2129,8 @@ object SparkEntry {
     val rules = Seq(
       TableQuality.Rule("len200", col("n_chars") >= 200L),
       TableQuality.Rule("west", col("lang").isin("en", "de", "es", "fr")))
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val (base, glob) = graft.streaming.CorpusStreams
-      .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
-      .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
+      .tableStream(spark, dir, "documents.parquet", maxFilesPerTrigger = 4096)
     withScratch("graft_sdq_") { root =>
       val out = s"$root/out"
       drain(docs, s"$root/ckpt") { (batch, batchId) =>
@@ -2157,11 +2161,8 @@ object SparkEntry {
     */
   private def streamStats(spark: SparkSession, dir: String): DataFrame = {
     val cols = Seq("n_chars", "lang")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val (base, glob) = graft.streaming.CorpusStreams
-      .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
-      .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
+      .tableStream(spark, dir, "documents.parquet", maxFilesPerTrigger = 4096)
     withScratch("graft_sst_") { root =>
       val out = s"$root/out"
       drain(docs, s"$root/ckpt") { (batch, batchId) =>
@@ -2569,8 +2570,7 @@ object SparkEntry {
       // the committed dir path is only known after the commit)
       val staged = spark.read.parquet(s"$root/stage_data")
       FileSkipping.fileStats(staged, Seq("l_orderkey", "l_partkey"))
-        .withColumn("__file",
-          regexp_extract(col("__file"), "[^/]+$", 0))
+        .withColumn("__file", Sinks.fileNameCol)
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$root/stage_stats")
       val snapRoot = s"$root/snap"
@@ -2714,7 +2714,7 @@ object SparkEntry {
       def statsFor(paths: Seq[String]): DataFrame =
         FileSkipping.fileStats(
           spark.read.schema(li.schema).parquet(paths.sorted: _*), statCols)
-          .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+          .withColumn("__file", Sinks.fileNameCol)
       def footerHits(df: DataFrame): Long = FileSkipping.footerBoxFiles(df,
         "l_orderkey", "l_partkey", (a1, a2, b1, b2))
       // ---- v0: clustered base + pinned stats, one atomic commit
@@ -2842,7 +2842,7 @@ object SparkEntry {
       def statsFor(paths: Seq[String]): DataFrame =
         FileSkipping.fileStats(
           spark.read.schema(docs.schema).parquet(paths.sorted: _*), statCols)
-          .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+          .withColumn("__file", Sinks.fileNameCol)
       // ---- v0: clustered base + per-file stats, one commit
       docs.repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
@@ -2981,7 +2981,7 @@ object SparkEntry {
         .write.mode("overwrite").parquet(s"$root/stage0_data")
       FileSkipping.fileStats(spark.read.parquet(s"$root/stage0_data"),
           Seq("doc_id"))
-        .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+        .withColumn("__file", Sinks.fileNameCol)
         .coalesce(1).write.parquet(s"$root/stage0_stats")
       val v0 = Sinks.publishSnapshotStaged(Map(
         "data" -> ((s"$root/stage0_data", "doc_id")),
@@ -3015,7 +3015,7 @@ object SparkEntry {
           FileSkipping.fileStats(
             spark.read.schema(evolvedSchema).parquet(newPaths.sorted: _*),
             Seq("doc_id", "quality"))
-            .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0)),
+            .withColumn("__file", Sinks.fileNameCol),
           allowMissingColumns = true)
         .coalesce(1).write.parquet(s"$root/stage1_stats")
       val v1 = Sinks.publishSnapshotStaged(Map(
@@ -3985,11 +3985,7 @@ object SparkEntry {
     * (LCS) stays spec-checked (a DP is not reasonably SQL-expressible).
     */
   private def evalRougeNgram(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    val pairs = tbl(spark, dir, "documents").select(
-      col("doc_id"),
-      array_join(slice(toks, 1, 20), " ").as("gen"),
-      array_join(slice(toks, 11, 30), " ").as("ref"))
+    val pairs = Pipelines.tokenSlicePairs(tbl(spark, dir, "documents"))
     val rouge = graft.functions.udfs.rougeStruct(col("gen"), col("ref"))
     pairs.withColumn("rouge", rouge)
       .select(col("doc_id"),
@@ -4018,11 +4014,7 @@ object SparkEntry {
     * model-dependent by design).
     */
   private def evalBertNgram(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    val pairs = tbl(spark, dir, "documents").select(
-      col("doc_id"),
-      array_join(slice(toks, 1, 20), " ").as("gen"),
-      array_join(slice(toks, 11, 30), " ").as("ref"))
+    val pairs = Pipelines.tokenSlicePairs(tbl(spark, dir, "documents"))
     graft.eval.Metrics.bertScore(pairs, graft.llm.Md5TfEmbedder(64))
       .orderBy(col("doc_id"))
   }
@@ -4036,11 +4028,7 @@ object SparkEntry {
     * agree on verbatim, `bleu` its 4dp exp.
     */
   private def evalBleuNgram(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    val pairs = tbl(spark, dir, "documents").select(
-      col("doc_id"),
-      array_join(slice(toks, 1, 20), " ").as("gen"),
-      array_join(slice(toks, 11, 30), " ").as("ref"))
+    val pairs = Pipelines.tokenSlicePairs(tbl(spark, dir, "documents"))
     graft.eval.Metrics.bleuScores(pairs).orderBy(col("doc_id"))
   }
 
@@ -4051,11 +4039,7 @@ object SparkEntry {
     * integer averages, and the β=2 F.
     */
   private def evalChrf(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    val pairs = tbl(spark, dir, "documents").select(
-      col("doc_id"),
-      array_join(slice(toks, 1, 20), " ").as("gen"),
-      array_join(slice(toks, 11, 30), " ").as("ref"))
+    val pairs = Pipelines.tokenSlicePairs(tbl(spark, dir, "documents"))
     graft.eval.Metrics.chrfScores(pairs).orderBy(col("doc_id"))
   }
 
@@ -4074,13 +4058,7 @@ object SparkEntry {
     * pinned by the fully-oracled `tx_gate`.
     */
   private def evalBertscoreTx(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    // small parquet = one input split; spread the forward passes (the
-    // mm6b discipline — the repartition ships short strings, not work)
-    val pairs = tbl(spark, dir, "documents").select(
-      col("doc_id"),
-      array_join(slice(toks, 1, 20), " ").as("gen"),
-      array_join(slice(toks, 11, 30), " ").as("ref"))
+    val pairs = Pipelines.tokenSlicePairs(tbl(spark, dir, "documents"))
     graft.eval.Metrics.bertScoreContextual(pairs, txModel)
       .orderBy(col("doc_id"))
   }
@@ -4440,11 +4418,7 @@ object SparkEntry {
     * excluded; the boolean and both scores are exact.
     */
   private def evalJudgeNgram(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    val pairs = tbl(spark, dir, "documents").select(
-      col("doc_id"),
-      array_join(slice(toks, 1, 20), " ").as("gen"),
-      array_join(slice(toks, 11, 30), " ").as("ref"))
+    val pairs = Pipelines.tokenSlicePairs(tbl(spark, dir, "documents"))
     graft.eval.Metrics.judgeMetrics(pairs)
       .select(col("doc_id"), col("passed"), col("correctness"), col("coherence"))
       .orderBy(col("doc_id"))
@@ -4927,14 +4901,11 @@ object SparkEntry {
     */
   private def streamCuration(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
     // one micro-batch for the whole table: this entry proves batch parity,
     // not trigger pacing (StreamingSpec covers multi-batch semantics), and
     // per-batch state-store commit overhead would otherwise dominate
-    val (base, glob) = graft.streaming.CorpusStreams
-      .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
-      .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
+      .tableStream(spark, dir, "documents.parquet", maxFilesPerTrigger = 4096)
       .withColumn("ts",
         timestamp_micros(lit(1700000000000000L) + col("doc_id").cast("long")))
     val curated = graft.streaming.CorpusStreams.curateStream(docs)
@@ -5003,11 +4974,8 @@ object SparkEntry {
     */
   private def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val (base, glob) = graft.streaming.CorpusStreams
-      .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
-      .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
+      .tableStream(spark, dir, "documents.parquet", maxFilesPerTrigger = 4096)
       .withColumn("ts",
         timestamp_micros(lit(1700000000000000L) + col("doc_id").cast("long")))
     val deduped = docs
@@ -5033,11 +5001,8 @@ object SparkEntry {
     * count.
     */
   private def streamNeardup(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val (base, glob) = graft.streaming.CorpusStreams
-      .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
-      .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
+      .tableStream(spark, dir, "documents.parquet", maxFilesPerTrigger = 4096)
     withScratch("graft_snd_") { root =>
       val outDir = s"$root/out"
       val dedup = graft.streaming.CorpusStreams.nearDupDeduper(s"$root/store")
@@ -5062,11 +5027,8 @@ object SparkEntry {
     */
   private def streamDecontam(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val (base, glob) = graft.streaming.CorpusStreams
-      .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
-      .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
+      .tableStream(spark, dir, "documents.parquet", maxFilesPerTrigger = 4096)
     val bench = tbl(spark, dir, "documents")
       .select(col("doc_id"), col("text")).filter(col("doc_id") % 10 === 0)
     val decontam = graft.streaming.CorpusStreams.decontaminator(
@@ -5164,11 +5126,8 @@ object SparkEntry {
     val emb = tbl(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val (batchIdx, cs) = Similarity.buildIvfIndex(emb, 16, 2)
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val (base, glob) = graft.streaming.CorpusStreams
-      .tableStreamPath(spark, dir, "embeddings.parquet")
     val stream = graft.streaming.CorpusStreams
-      .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
+      .tableStream(spark, dir, "embeddings.parquet", maxFilesPerTrigger = 4096)
     withScratch("graft_sia_") { root =>
       val store = s"$root/idx"
       val appender = new graft.streaming.IndexStreams.IvfAppender(cs, store)
@@ -5369,11 +5328,8 @@ object SparkEntry {
     * aggregate's micro-nat argmax exactly.
     */
   private def streamClassify(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val (base, glob) = graft.streaming.CorpusStreams
-      .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
-      .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
+      .tableStream(spark, dir, "documents.parquet", maxFilesPerTrigger = 4096)
     val model = TextAnalysis.nbTrainCollect(
       tbl(spark, dir, "documents"), col("source"))
     val scoreUdf = udf { (t: String) =>
@@ -5405,11 +5361,8 @@ object SparkEntry {
     * hash-match the all-docs batch replay.
     */
   private def streamClassifyLr(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val (base, glob) = graft.streaming.CorpusStreams
-      .tableStreamPath(spark, dir, "documents.parquet")
     val docs = graft.streaming.CorpusStreams
-      .readDocStream(spark, base, schema, maxFilesPerTrigger = 4096, glob)
+      .tableStream(spark, dir, "documents.parquet", maxFilesPerTrigger = 4096)
     val pl = plantedQualityDocs(tbl(spark, dir, "documents"))
     val w = graft.operators.LinearModel.trainCgRidgeArrays(
       graft.operators.LinearModel.hashedPresenceArrays(pl, ClsK),
@@ -5673,7 +5626,7 @@ object SparkEntry {
         .write.mode("overwrite").parquet(s"$root/stage_data")
       FileSkipping.fileStats(spark.read.parquet(s"$root/stage_data"),
           Seq("doc_id"))
-        .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+        .withColumn("__file", Sinks.fileNameCol)
         .coalesce(1).write.parquet(s"$root/stage_stats")
       val v = Sinks.publishSnapshotStaged(Map(
         "data" -> ((s"$root/stage_data", "doc_id")),
@@ -6461,9 +6414,6 @@ FROM m ORDER BY doc_id, summarizer""")
   private val tokSql =
     "CASE WHEN trim(text) = '' THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END"
 
-  private def exactSumSql(e: String) =
-    s"CAST(SUM(CAST($e AS DECIMAL(38,10))) AS DOUBLE)"
-
   /** gr1 oracle: `iters` PageRank power iterations over the trade graph,
     * unrolled as CTE pairs (dangling mass d{i}, contributions c{i}, next
     * ranks r{i}) — arithmetic, rounding grid, and literals (emitted from
@@ -6687,35 +6637,9 @@ ORDER BY token_id"""
     * sp1 keyed-hash split thresholds — the full five-stage replay.
     */
   private def trainingMixSql: String =
-    s"""WITH planted AS (
-       SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0
-           THEN 'subscribe to our newsletter for updates' || chr(10)
-           ELSE '' END
-         || text ||
-         CASE WHEN doc_id % 5 = 0
-           THEN chr(10) || 'subscribe to our newsletter for updates'
-           ELSE '' END AS t
-       FROM documents),
-     pp AS (
-       SELECT doc_id, ps[k] AS para, k AS pos
-       FROM (SELECT doc_id, string_split(t, chr(10)) AS ps FROM planted),
-         LATERAL UNNEST(generate_series(1, len(ps))) AS u(k)),
-     hot AS (
-       SELECT md5(para) AS ph FROM pp GROUP BY 1 HAVING COUNT(*) >= 10),
-     cleaned AS (
-       SELECT doc_id,
-         COALESCE(string_agg(para, chr(10) ORDER BY pos)
-           FILTER (WHERE md5(para) NOT IN (SELECT ph FROM hot)), '') AS text
-       FROM pp GROUP BY doc_id),
+    s"""WITH $boilerCleanCtes,
      ${gateCtes("cleaned")},
-     dom AS (
-       SELECT doc_id,
-         CASE WHEN doc_id % 16 < 11 THEN 'web'
-              WHEN doc_id % 16 < 14 THEN 'books'
-              WHEN doc_id % 16 < 15 THEN 'code'
-              ELSE 'wiki' END AS domain
-       FROM cgated),
+     dom AS (SELECT doc_id, $domainSql AS domain FROM cgated),
      dc AS (SELECT domain, COUNT(*) AS nd FROM dom GROUP BY domain),
      dt AS (
        SELECT CAST(SUM(nd) AS DOUBLE) AS ntot,
@@ -6729,17 +6653,10 @@ ORDER BY token_id"""
        FROM dc, dt),
      samp AS (
        SELECT d.doc_id, d.domain FROM dom d JOIN dr USING (domain)
-       WHERE CAST(('0x' || substr(md5('temp:' || CAST(d.doc_id AS VARCHAR)), 1, 15))
-         AS BIGINT) / 1152921504606846976.0 < dr.rate),
+       WHERE ${md5UnitSql("temp", "d.doc_id")} < dr.rate),
      spl AS (
-       SELECT doc_id, domain,
-         CASE WHEN u < 0.75 THEN 'train' WHEN u < 0.875 THEN 'val'
-              ELSE 'test' END AS split
-       FROM (
-         SELECT doc_id, domain,
-           CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 15))
-             AS BIGINT) / 1152921504606846976.0 AS u
-         FROM samp))
+       SELECT doc_id, domain, $splitCaseSql AS split
+       FROM (SELECT doc_id, domain, ${md5UnitSql("split")} AS u FROM samp))
      SELECT domain, split, CAST(COUNT(*) AS BIGINT) AS n_docs
      FROM spl GROUP BY 1, 2 ORDER BY 1, 2"""
 
@@ -6749,58 +6666,14 @@ ORDER BY token_id"""
     * language → drop the tail tercile.
     */
   private def ccnetSql: String =
-    s"""WITH planted AS (
-       SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0
-           THEN 'subscribe to our newsletter for updates' || chr(10)
-           ELSE '' END
-         || text ||
-         CASE WHEN doc_id % 5 = 0
-           THEN chr(10) || 'subscribe to our newsletter for updates'
-           ELSE '' END AS t
-       FROM documents),
-     pp AS (
-       SELECT doc_id, ps[k] AS para, k AS pos
-       FROM (SELECT doc_id, string_split(t, chr(10)) AS ps FROM planted),
-         LATERAL UNNEST(generate_series(1, len(ps))) AS u(k)),
-     hot AS (
-       SELECT md5(para) AS ph FROM pp GROUP BY 1 HAVING COUNT(*) >= 10),
-     cleaned AS (
-       SELECT doc_id,
-         COALESCE(string_agg(para, chr(10) ORDER BY pos)
-           FILTER (WHERE md5(para) NOT IN (SELECT ph FROM hot)), '') AS text
-       FROM pp GROUP BY doc_id),
+    s"""WITH $boilerCleanCtes,
      lang AS (${langIdSqlOn("cleaned")}),
      gated AS (
        SELECT c.doc_id, c.text, l.lang_pred
        FROM cleaned c JOIN lang l USING (doc_id)
        WHERE l.lang_pred <> 'und'),
-     tok AS (
-       SELECT doc_id,
-         UNNEST(regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+')) AS tok
-       FROM gated),
-     uni AS (SELECT tok, COUNT(*) AS cu FROM tok GROUP BY 1),
-     tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM tok),
-     arr AS (
-       SELECT doc_id, regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+') AS toks
-       FROM gated),
-     big AS (
-       SELECT doc_id, toks[CAST(g.i AS INT)] AS w1,
-         toks[CAST(g.i AS INT) + 1] AS w2
-       FROM arr, LATERAL UNNEST(generate_series(1, len(toks) - 1)) AS g(i)),
-     c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
-     c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
-     lp AS (
-       SELECT big.doc_id,
-         round(ln(0.75 * (CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE))
-           + 0.25 * (CAST(uni.cu AS DOUBLE) / tot.total)), 6) AS lp
-       FROM big
-       JOIN c12 ON big.w1 = c12.w1 AND big.w2 = c12.w2
-       JOIN c1 ON big.w1 = c1.w1
-       JOIN uni ON big.w2 = uni.tok, tot),
-     $lmMicroCte,
-     lm2 AS (
-       SELECT doc_id, n_bigrams, $lmAvgExpr AS avg_logprob FROM lm),
+     ${bigramLmCtes("gated")},
+     $lmMeanCte,
      ranked AS (
        SELECT lm2.doc_id, g.lang_pred AS lang, lm2.n_bigrams,
          lm2.avg_logprob,
@@ -7051,38 +6924,11 @@ ORDER BY token_id"""
            FROM lp GROUP BY 1)
          SELECT doc_id, n_tokens, $lmAvgExpr AS avg_logprob
          FROM lm ORDER BY doc_id""",
-    // ta16: both count tables re-trained in SQL; interpolation arithmetic
-    // written operation-for-operation as the Spark side (0.75*(c12/c1) +
-    // 0.25*(cu/total)) so IEEE results agree bit-for-bit before the 6dp
-    // ln grid; DuckDB lists are 1-based (toks[i], toks[i+1], i in
-    // 1..len-1) where Spark's sequence is 0-based — same pairs. The 4dp
+    // ta16: both count tables re-trained in SQL (bigramLmCtes); the 4dp
     // mean is integer HALF-UP on micro-units (lp is on the 6dp grid) —
     // round(double) diverges between engines on exact 4dp halves.
     "ta16_bigram_logprob" ->
-      s"""WITH tok AS (
-           SELECT doc_id,
-             UNNEST(regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+')) AS tok
-           FROM documents),
-         uni AS (SELECT tok, COUNT(*) AS cu FROM tok GROUP BY 1),
-         tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM tok),
-         arr AS (
-           SELECT doc_id, regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+') AS toks
-           FROM documents),
-         big AS (
-           SELECT doc_id, toks[CAST(g.i AS INT)] AS w1,
-             toks[CAST(g.i AS INT) + 1] AS w2
-           FROM arr, LATERAL UNNEST(generate_series(1, len(toks) - 1)) AS g(i)),
-         c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
-         c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
-         lp AS (
-           SELECT big.doc_id,
-             round(ln(0.75 * (CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE))
-               + 0.25 * (CAST(uni.cu AS DOUBLE) / tot.total)), 6) AS lp
-           FROM big
-           JOIN c12 ON big.w1 = c12.w1 AND big.w2 = c12.w2
-           JOIN c1 ON big.w1 = c1.w1
-           JOIN uni ON big.w2 = uni.tok, tot),
-         $lmMicroCte
+      s"""WITH ${bigramLmCtes("documents")}
          SELECT doc_id, n_bigrams, $lmAvgExpr AS avg_logprob
          FROM lm ORDER BY doc_id""",
     // ta18: the whole NB training + scoring replayed — vocabulary by the
@@ -7214,21 +7060,14 @@ SELECT CAST(1 AS BIGINT) AS v_latest,
     // s13: the z-order layout key replayed — affine long-math bucket
     // scaling (floor division, clamped) and the 16-bit Morton interleave
     // as a flat shift/mask sum; pure integer arithmetic end to end.
-    "s13_zorder_stats" -> """
-WITH rg AS (
-  SELECT MIN(l_orderkey) AS alo, MAX(l_orderkey) AS ahi,
-    MIN(l_partkey) AS blo, MAX(l_partkey) AS bhi
-  FROM lineitem),
+    "s13_zorder_stats" -> s"""
+WITH $keyRangeCte,
 sk AS (
   SELECT l_orderkey AS a, l_partkey AS b,
-    ((GREATEST((SELECT alo FROM rg), LEAST((SELECT ahi FROM rg), l_orderkey))
-      - (SELECT alo FROM rg)) * 65535)
-      // ((SELECT ahi FROM rg) - (SELECT alo FROM rg)) AS sa,
-    ((GREATEST((SELECT blo FROM rg), LEAST((SELECT bhi FROM rg), l_partkey))
-      - (SELECT blo FROM rg)) * 65535)
-      // ((SELECT bhi FROM rg) - (SELECT blo FROM rg)) AS sb
+    ${zScaleSql("l_orderkey", "alo", "ahi", "sa")},
+    ${zScaleSql("l_partkey", "blo", "bhi", "sb")}
   FROM lineitem),
-zt AS (SELECT a, b, ((sa >> 0) & 1) * 2 + ((sb >> 0) & 1) * 1 + ((sa >> 1) & 1) * 8 + ((sb >> 1) & 1) * 4 + ((sa >> 2) & 1) * 32 + ((sb >> 2) & 1) * 16 + ((sa >> 3) & 1) * 128 + ((sb >> 3) & 1) * 64 + ((sa >> 4) & 1) * 512 + ((sb >> 4) & 1) * 256 + ((sa >> 5) & 1) * 2048 + ((sb >> 5) & 1) * 1024 + ((sa >> 6) & 1) * 8192 + ((sb >> 6) & 1) * 4096 + ((sa >> 7) & 1) * 32768 + ((sb >> 7) & 1) * 16384 + ((sa >> 8) & 1) * 131072 + ((sb >> 8) & 1) * 65536 + ((sa >> 9) & 1) * 524288 + ((sb >> 9) & 1) * 262144 + ((sa >> 10) & 1) * 2097152 + ((sb >> 10) & 1) * 1048576 + ((sa >> 11) & 1) * 8388608 + ((sb >> 11) & 1) * 4194304 + ((sa >> 12) & 1) * 33554432 + ((sb >> 12) & 1) * 16777216 + ((sa >> 13) & 1) * 134217728 + ((sb >> 13) & 1) * 67108864 + ((sa >> 14) & 1) * 536870912 + ((sb >> 14) & 1) * 268435456 + ((sa >> 15) & 1) * 2147483648 + ((sb >> 15) & 1) * 1073741824 AS z FROM sk)
+zt AS (SELECT a, b, ${mortonSql(Seq("sa", "sb"))} AS z FROM sk)
 SELECT z >> 26 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
   MIN(a) AS min_a, MAX(a) AS max_a, MIN(b) AS min_b, MAX(b) AS max_b
 FROM zt GROUP BY 1 ORDER BY bucket""",
@@ -7236,15 +7075,7 @@ FROM zt GROUP BY 1 ORDER BY bucket""",
     // terms at bits=16), exactly mirroring ZOrder.interleave3's bit
     // placement (a->3i+2, b->3i+1, c->3i); 64 buckets = top 6 bits of
     // the 48-bit key
-    "s13b_zorder3_stats" -> {
-      def sk(key: String, lo: String, hi: String, out: String) =
-        s"((GREATEST((SELECT $lo FROM rg), LEAST((SELECT $hi FROM rg), " +
-          s"$key)) - (SELECT $lo FROM rg)) * 65535) " +
-          s"// ((SELECT $hi FROM rg) - (SELECT $lo FROM rg)) AS $out"
-      val terms = (0 until 16).flatMap(i => Seq(
-        s"((sa >> $i) & 1) * ${1L << (3 * i + 2)}",
-        s"((sb >> $i) & 1) * ${1L << (3 * i + 1)}",
-        s"((sc >> $i) & 1) * ${1L << (3 * i)}")).mkString(" + ")
+    "s13b_zorder3_stats" ->
       s"""WITH rg AS (
   SELECT MIN(l_orderkey) AS alo, MAX(l_orderkey) AS ahi,
     MIN(l_partkey) AS blo, MAX(l_partkey) AS bhi,
@@ -7252,16 +7083,15 @@ FROM zt GROUP BY 1 ORDER BY bucket""",
   FROM lineitem),
 sk AS (
   SELECT l_orderkey AS a, l_partkey AS b, l_suppkey AS c,
-    ${sk("l_orderkey", "alo", "ahi", "sa")},
-    ${sk("l_partkey", "blo", "bhi", "sb")},
-    ${sk("l_suppkey", "clo", "chi", "sc")}
+    ${zScaleSql("l_orderkey", "alo", "ahi", "sa")},
+    ${zScaleSql("l_partkey", "blo", "bhi", "sb")},
+    ${zScaleSql("l_suppkey", "clo", "chi", "sc")}
   FROM lineitem),
-zt AS (SELECT a, b, c, $terms AS z FROM sk)
+zt AS (SELECT a, b, c, ${mortonSql(Seq("sa", "sb", "sc"))} AS z FROM sk)
 SELECT z >> 42 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
   MIN(a) AS min_a, MAX(a) AS max_a, MIN(b) AS min_b, MAX(b) AS max_b,
   MIN(c) AS min_c, MAX(c) AS max_c
-FROM zt GROUP BY 1 ORDER BY bucket"""
-    },
+FROM zt GROUP BY 1 ORDER BY bucket""",
     // dq1: each rule's violation count recomputed independently; the
     // Spark side treats a NULL predicate as a violation (coalesce false)
     // and the SQL mirrors it with NOT COALESCE(pred, FALSE)
@@ -7337,14 +7167,8 @@ ORDER BY doc_id""",
     // MERGED per-partition counts/nulls/min/max are held to a DuckDB
     // from-scratch recompute (any merge drift hash-fails); the unioned
     // HLL ndv is gated against the exact twin (literal 1)
-    "s16c_stats_incremental" -> Seq("l_orderkey", "l_partkey", "l_suppkey",
-      "l_returnflag", "l_shipdate").map(c =>
-      s"""SELECT '$c' AS column_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
-    CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-    CAST(MIN($c) AS VARCHAR) AS min_value,
-    CAST(MAX($c) AS VARCHAR) AS max_value,
-    1 AS ndv_ok
-  FROM lineitem""").mkString("", "\n  UNION ALL\n", "\n  ORDER BY column_name"),
+    "s16c_stats_incremental" ->
+      columnStatsSql("lineitem", StatsCols, _ => "1 AS ndv_ok"),
     // dq3: schema drift is pure metadata over a fixed testdata schema —
     // the planted three-axis drift (missing l_commitdate, uncontracted
     // l_tax, retyped l_quantity) replays as literals
@@ -7359,139 +7183,66 @@ ORDER BY rule""",
     // from the key ranges; the clustered scan's count + key fingerprint
     // are anchored to the logical table, the cross-layout identity and
     // the strictly-fewer-files (<= half) pruning wins are gate literals
-    "s13d_layout_skipping" -> """
-WITH rg AS (
-  SELECT MIN(l_orderkey) AS alo, MAX(l_orderkey) AS ahi,
-    MIN(l_partkey) AS blo, MAX(l_partkey) AS bhi
-  FROM lineitem),
-bounds AS (
-  SELECT alo + (ahi - alo) // 4 AS a1, alo + (ahi - alo) // 2 AS a2,
-    blo + (bhi - blo) // 4 AS b1, blo + (bhi - blo) // 2 AS b2
-  FROM rg),
-hit AS (
-  SELECT l.* FROM lineitem l, bounds
-  WHERE l.l_orderkey BETWEEN a1 AND a2 AND l.l_partkey BETWEEN b1 AND b2)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)
-    || ':' || CAST(l_partkey AS VARCHAR) || ':'
-    || CAST(l_suppkey AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT)
-    AS key_xor,
-  1 AS rows_identical, 1 AS clustered_reads_fewer, 1 AS clustered_le_half
-FROM hit""",
+    "s13d_layout_skipping" -> s"""WITH $quarterBoxCtes
+${countXorSql("hit", LineitemKeySql, "key_xor",
+  "1 AS rows_identical, 1 AS clustered_reads_fewer, 1 AS clustered_le_half")}""",
     // s13e: the stats-planned pruned scan returns exactly the logical
     // predicate result (count + fingerprint anchored to the table); the
     // opened-fewer and stats≡footers wins are gate literals
-    "s13e_stats_pruned_scan" -> """
-WITH rg AS (
-  SELECT MIN(l_orderkey) AS alo, MAX(l_orderkey) AS ahi,
-    MIN(l_partkey) AS blo, MAX(l_partkey) AS bhi
-  FROM lineitem),
-bounds AS (
-  SELECT alo + (ahi - alo) // 4 AS a1, alo + (ahi - alo) // 2 AS a2,
-    blo + (bhi - blo) // 4 AS b1, blo + (bhi - blo) // 2 AS b2
-  FROM rg),
-hit AS (
-  SELECT l.* FROM lineitem l, bounds
-  WHERE l.l_orderkey BETWEEN a1 AND a2 AND l.l_partkey BETWEEN b1 AND b2)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)
-    || ':' || CAST(l_partkey AS VARCHAR) || ':'
-    || CAST(l_suppkey AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT)
-    AS key_xor,
-  1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers
-FROM hit""",
+    "s13e_stats_pruned_scan" -> s"""WITH $quarterBoxCtes
+${countXorSql("hit", LineitemKeySql, "key_xor",
+  "1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers")}""",
     // s13f: the optimized table is the whole logical table (count +
     // fingerprint anchored); detection-exactness and skipping-restored
     // are gate literals
-    "s13f_optimize_recluster" -> """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)
-    || ':' || CAST(l_partkey AS VARCHAR) || ':'
-    || CAST(l_suppkey AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT)
-    AS key_xor,
-  1 AS detected_only_appends, 1 AS skipping_restored
-FROM lineitem""",
+    "s13f_optimize_recluster" -> countXorSql("lineitem", LineitemKeySql,
+      "key_xor", "1 AS detected_only_appends, 1 AS skipping_restored"),
     // s13g: the string-equality and null-aware pruned reads both return
     // exactly the logical predicate result (count + doc_id fingerprint
     // anchored; target language data-derived as MIN(lang)); the
     // opened-fewer and stats ≡ footer-rule wins are gate literals
-    "s13g_typed_pruning" -> """
+    "s13g_typed_pruning" -> s"""
 WITH t AS (SELECT MIN(lang) AS tgt FROM documents),
 hit AS (SELECT d.* FROM documents d, t WHERE d.lang = tgt)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' ||
-    substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)), 0)
-    AS BIGINT) AS key_xor,
-  1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers,
+${countXorSql("hit", DocIdKeySql, "key_xor",
+  """1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers,
   1 AS null_rows_identical, 1 AS null_opened_fewer,
-  1 AS null_stats_match_footers
-FROM hit""",
+  1 AS null_stats_match_footers""")}""",
     // s13h: the bloom-pruned point lookup returns exactly the logical
     // equality result (count + doc_id fingerprint; the target key is
     // data-derived as 'u' || max(doc_id)//2); the structural wins —
     // opened-fewer/quarter-bound and min/max-keeps-all on the
     // round-robin layout — are gate literals
-    "s13h_bloom_pruning" -> """
+    "s13h_bloom_pruning" -> s"""
 WITH t AS (SELECT MAX(doc_id) // 2 AS h FROM documents),
 hit AS (SELECT d.* FROM documents d, t WHERE d.doc_id = h)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' ||
-    substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)), 0)
-    AS BIGINT) AS key_xor,
-  1 AS rows_identical, 1 AS opened_fewer, 1 AS opened_le_quarter,
-  1 AS minmax_keeps_all
-FROM hit""",
+${countXorSql("hit", DocIdKeySql, "key_xor",
+  """1 AS rows_identical, 1 AS opened_fewer, 1 AS opened_le_quarter,
+  1 AS minmax_keeps_all""")}""",
     // s18: the snapshot-committed pruned read returns exactly the
     // logical predicate result at version 0; the structural wins
     // (opened-fewer, committed-stats ≡ footers) are gate literals
-    "s18_snapshot_pruned_read" -> """
-WITH rg AS (
-  SELECT MIN(l_orderkey) AS alo, MAX(l_orderkey) AS ahi,
-    MIN(l_partkey) AS blo, MAX(l_partkey) AS bhi
-  FROM lineitem),
-bounds AS (
-  SELECT alo + (ahi - alo) // 4 AS a1, alo + (ahi - alo) // 2 AS a2,
-    blo + (bhi - blo) // 4 AS b1, blo + (bhi - blo) // 2 AS b2
-  FROM rg),
-hit AS (
-  SELECT l.* FROM lineitem l, bounds
-  WHERE l.l_orderkey BETWEEN a1 AND a2 AND l.l_partkey BETWEEN b1 AND b2)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)
-    || ':' || CAST(l_partkey AS VARCHAR) || ':'
-    || CAST(l_suppkey AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT)
-    AS key_xor,
-  CAST(0 AS BIGINT) AS version,
-  1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers
-FROM hit""",
+    "s18_snapshot_pruned_read" -> s"""WITH $quarterBoxCtes
+${countXorSql("hit", LineitemKeySql, "key_xor",
+  """CAST(0 AS BIGINT) AS version,
+  1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers""")}""",
     // s19: the optimized v2 table is the whole logical lineitem (count +
     // 4-column fingerprint anchored — v1 = base ∪ append = lineitem and
     // the gate pins v2 ≡ v1); version numbers are deterministic (fresh
     // root); the structural wins (stats replaced, merge ≡ recompute,
     // pinned-reader isolation, race-loser loud, skipping restored) are
     // gate literals
-    "s19_optimize_versioned" -> """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)
-    || ':' || CAST(l_partkey AS VARCHAR) || ':'
-    || CAST(l_suppkey AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT)
-    AS key_xor,
-  CAST(0 AS BIGINT) AS v0, CAST(1 AS BIGINT) AS v1, CAST(2 AS BIGINT) AS v2,
+    "s19_optimize_versioned" -> countXorSql("lineitem", LineitemKeySql, "key_xor",
+      """CAST(0 AS BIGINT) AS v0, CAST(1 AS BIGINT) AS v1, CAST(2 AS BIGINT) AS v2,
   1 AS rows_identical, 1 AS stats_files_match, 1 AS merge_matches_recompute,
-  1 AS pinned_v1_isolated, 1 AS race_loser_loud, 1 AS skipping_restored
-FROM lineitem""",
+  1 AS pinned_v1_isolated, 1 AS race_loser_loud, 1 AS skipping_restored"""),
     // s20: FULL oracle — DuckDB recomputes the post-CDC table from
     // scratch (base minus band deletes, band updates applied, 25 tail
     // inserts) and its per-column stats; the Spark side must land there
     // via the file-granular path (touched files only, stats rows
     // replaced). table_xor anchors whole-row content; structural wins
     // are gate literals
-    "s20_cdc_versioned_stats" -> """
+    "s20_cdc_versioned_stats" -> s"""
 WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
 final AS (
   SELECT doc_id, lang, n_chars FROM documents, mx
@@ -7503,11 +7254,7 @@ final AS (
   UNION ALL
   SELECT m + g.i AS doc_id, 'zz' AS lang, m + g.i AS n_chars
   FROM mx, generate_series(1, 25) g(i)),
-xor_all AS (
-  SELECT CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(doc_id AS VARCHAR) || ':' || lang || ':' ||
-    CAST(n_chars AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT) AS x
-  FROM final)
+xor_all AS (SELECT ${md5XorSql(DocRowKeySql)} AS x FROM final)
 SELECT s.column_name, s.n_rows, s.n_nulls, s.min_value, s.max_value,
   (SELECT x FROM xor_all) AS table_xor,
   1 AS ndv_ok, 1 AS rows_match_apply, 1 AS untouched_stats_identical,
@@ -7530,38 +7277,27 @@ ORDER BY s.column_name""",
     // exactly on the pre-evolution slice, its sum the replayed pure
     // function over the new slice; acceptance/rejection and lazy-stats
     // wins are gate literals
-    "s21_schema_evolution" -> """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' ||
-    substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)), 0)
-    AS BIGINT) AS key_xor,
-  CAST((SELECT COUNT(*) FROM documents WHERE doc_id % 5 <> 0) AS BIGINT)
+    "s21_schema_evolution" -> countXorSql("documents", DocIdKeySql, "key_xor",
+      """CAST((SELECT COUNT(*) FROM documents WHERE doc_id % 5 <> 0) AS BIGINT)
     AS n_quality_nulls,
   CAST((SELECT SUM(n_chars % 100) FROM documents WHERE doc_id % 5 = 0)
     AS BIGINT) AS quality_sum,
   CAST(1 AS BIGINT) AS version,
   1 AS contract_pass, 1 AS evolution_accepted,
-  1 AS bad_evolution_rejected, 1 AS stats_lazy_ok
-FROM documents""",
+  1 AS bad_evolution_rejected, 1 AS stats_lazy_ok"""),
     // stream_snapshot_ingest: the final streamed version is ALL of
     // documents, whole-row fingerprinted; the transactional wins
     // (4 versions, replay no-op, pinned isolation, stats ≡ recompute)
     // are gate literals
-    "stream_snapshot_ingest" -> """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(doc_id AS VARCHAR) || ':' || lang || ':' ||
-    CAST(n_chars AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT)
-    AS row_xor,
-  1 AS multi_batch, 1 AS exactly_once_replay,
-  1 AS pinned_isolated, 1 AS stats_current
-FROM documents""",
+    "stream_snapshot_ingest" -> countXorSql("documents", DocRowKeySql, "row_xor",
+      """1 AS multi_batch, 1 AS exactly_once_replay,
+  1 AS pinned_isolated, 1 AS stats_current"""),
     // s22: FULL oracle — the version diff's per-op rows are a pure
     // function of `documents` (deletes carry the original payload,
     // updates the new one, inserts the deterministic tail); the inverse
     // property (applyChangelog(v0, diff) ≡ v1), file-granular skip and
     // self-diff emptiness are gate literals
-    "s22_version_diff" -> """
+    "s22_version_diff" -> s"""
 WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
 ops AS (
   SELECT 'delete' AS op, doc_id, lang, n_chars
@@ -7574,30 +7310,22 @@ ops AS (
     m + g.i AS n_chars
   FROM mx, generate_series(1, 25) g(i))
 SELECT op, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(doc_id AS VARCHAR) || ':' || lang || ':' ||
-    CAST(n_chars AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT)
+  ${md5XorSql(DocRowKeySql)}
     AS payload_xor,
   1 AS roundtrip_ok, 1 AS delta_files_skipped, 1 AS self_diff_empty
 FROM ops GROUP BY op ORDER BY op""",
     // s26: the compacted current version is ALL of documents (count +
     // whole-row fingerprint); the zero-re-sketch and manifest-merge
     // wins are gate literals
-    "s26_compact_versioned" -> """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(doc_id AS VARCHAR) || ':' || lang || ':' ||
-    CAST(n_chars AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT)
-    AS row_xor,
-  1 AS files_5_to_2, 1 AS rows_identical,
+    "s26_compact_versioned" -> countXorSql("documents", DocRowKeySql, "row_xor",
+      """1 AS files_5_to_2, 1 AS rows_identical,
   1 AS merged_row_matches_resketch, 1 AS carried_stats_identical,
-  1 AS pinned_intact, 1 AS second_compact_noop
-FROM documents""",
+  1 AS pinned_intact, 1 AS second_compact_noop"""),
     // s25: FULL oracle — the four-batch changelog stream lands on a
     // pure function of documents: slices %4 in {0,1,2} inserted, the
     // low-quarter %7=3 band updated, the top-quarter %11=0 band
     // deleted; structural wins are gate literals
-    "s25_cdc_ingest" -> """
+    "s25_cdc_ingest" -> s"""
 WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
 final AS (
   SELECT doc_id,
@@ -7611,19 +7339,14 @@ final AS (
   UNION ALL
   SELECT m + g.i AS doc_id, 'zz' AS lang, m + g.i AS n_chars
   FROM mx, generate_series(1, 25) g(i))
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(doc_id AS VARCHAR) || ':' || lang || ':' ||
-    CAST(n_chars AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT)
-    AS row_xor,
-  1 AS four_versions, 1 AS matches_seq_apply,
-  1 AS untouched_stats_identical, 1 AS replay_noop, 1 AS stats_current
-FROM final""",
+${countXorSql("final", DocRowKeySql, "row_xor",
+  """1 AS four_versions, 1 AS matches_seq_apply,
+  1 AS untouched_stats_identical, 1 AS replay_noop, 1 AS stats_current""")}""",
     // s24: FULL oracle — the serializable two-writer outcome is
     // documents with A's band updates and B's band deletes, whatever
     // order the commits landed; rebase/abort/chain wins are gate
     // literals
-    "s24_optimistic_merge" -> """
+    "s24_optimistic_merge" -> s"""
 WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
 final AS (
   SELECT doc_id,
@@ -7633,69 +7356,42 @@ final AS (
          ELSE n_chars END AS n_chars
   FROM documents, mx
   WHERE NOT (doc_id % 11 = 0 AND doc_id * 4 > 3 * m))
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' || substr(md5(
-    CAST(doc_id AS VARCHAR) || ':' || lang || ':' ||
-    CAST(n_chars AS VARCHAR)), 1, 15)) AS BIGINT)), 0) AS BIGINT)
-    AS row_xor,
-  1 AS rebase_merged_both, 1 AS conflict_aborts, 1 AS version_chain_exact
-FROM final""",
+${countXorSql("final", DocRowKeySql, "row_xor",
+  "1 AS rebase_merged_both, 1 AS conflict_aborts, 1 AS version_chain_exact")}""",
     // s23: the post-expiry current read is the full three-band union =
     // all of documents (count + doc_id fingerprint); every lifecycle
     // win (exact expiry set, loud expired read, reclaimed dirs,
     // surviving hard-linked pins, protected pointer) is a gate literal
-    "s23_retention" -> """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COALESCE(bit_xor(CAST(('0x' ||
-    substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)), 0)
-    AS BIGINT) AS key_xor,
-  1 AS expired_exact, 1 AS expired_read_loud, 1 AS expired_dir_reclaimed,
-  1 AS pinned_survivor_intact, 1 AS pointer_never_expired
-FROM documents""",
+    "s23_retention" -> countXorSql("documents", DocIdKeySql, "key_xor",
+      """1 AS expired_exact, 1 AS expired_read_loud, 1 AS expired_dir_reclaimed,
+  1 AS pinned_survivor_intact, 1 AS pointer_never_expired"""),
     // stream_stats: the streamed sketch rows' MERGE held verbatim to the
     // batch ANALYZE recompute on the mergeable fields (any batching);
     // union-sketch ndv gated against the exact twin (literal 1)
-    "stream_stats" -> Seq("lang", "n_chars").map(c =>
-      s"""SELECT '$c' AS column_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
-    CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-    CAST(MIN($c) AS VARCHAR) AS min_value,
-    CAST(MAX($c) AS VARCHAR) AS max_value,
-    1 AS ndv_ok
-  FROM documents""").mkString("", "\n  UNION ALL\n", "\n  ORDER BY column_name"),
+    "stream_stats" ->
+      columnStatsSql("documents", Seq("lang", "n_chars"), _ => "1 AS ndv_ok"),
     // s17: the compaction decision replays — batch sizes are a pure
     // function of doc_id, small = under total//10; count + doc_id
     // fingerprint anchor the rewritten table to the source
-    "s17_stats_compaction" -> """
+    "s17_stats_compaction" -> s"""
 WITH t AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM documents),
 b AS (SELECT LEAST(doc_id % 32, 7) AS batch, CAST(COUNT(*) AS BIGINT) AS c
   FROM documents GROUP BY 1)
 SELECT
   (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_rows,
-  (SELECT CAST(COALESCE(bit_xor(CAST(('0x' ||
-      substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)), 0)
-    AS BIGINT) FROM documents) AS key_xor,
+  (SELECT ${md5XorSql(DocIdKeySql)} FROM documents) AS key_xor,
   (SELECT CAST(COUNT(*) AS BIGINT) FROM b, t WHERE c < total // 10)
     AS n_small_batches,
   1 AS rows_identical, 1 AS files_reduced""",
     // s16: per-column stats recomputed independently per column; SUM
     // cast (HUGEINT), min/max rendered as VARCHAR in both engines
-    "s16_table_stats" -> Seq("l_orderkey", "l_partkey", "l_suppkey",
-      "l_returnflag", "l_shipdate").map(c =>
-      s"""SELECT '$c' AS column_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
-    CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-    CAST(COUNT(DISTINCT $c) AS BIGINT) AS ndv,
-    CAST(MIN($c) AS VARCHAR) AS min_value,
-    CAST(MAX($c) AS VARCHAR) AS max_value
-  FROM lineitem""").mkString("", "\n  UNION ALL\n", "\n  ORDER BY column_name"),
+    "s16_table_stats" -> columnStatsSql("lineitem", StatsCols,
+      c => s"CAST(COUNT(DISTINCT $c) AS BIGINT) AS ndv"),
     // s13c: the Hilbert key's 16 rotation steps replay as GENERATED
     // chained CTEs — each step's (x, y, d) computed from the previous
     // step's row exactly as the Spark per-step projections do; the
     // quadrant digit (3*rx)^ry is the shared when-chain 0/1/3/2
     "s13c_hilbert_stats" -> {
-      def sk(key: String, lo: String, hi: String, out: String) =
-        s"((GREATEST((SELECT $lo FROM rg), LEAST((SELECT $hi FROM rg), " +
-          s"$key)) - (SELECT $lo FROM rg)) * 65535) " +
-          s"// ((SELECT $hi FROM rg) - (SELECT $lo FROM rg)) AS $out"
       val nm1 = (1L << 16) - 1
       val steps = (15 to 0 by -1).map { i =>
         val s = 1L << i
@@ -7711,14 +7407,11 @@ SELECT
                   WHEN $ry THEN 1 ELSE 0 END) AS d
  FROM h${i + 1})"""
       }.mkString(",\n")
-      s"""WITH rg AS (
-  SELECT MIN(l_orderkey) AS alo, MAX(l_orderkey) AS ahi,
-    MIN(l_partkey) AS blo, MAX(l_partkey) AS bhi
-  FROM lineitem),
+      s"""WITH $keyRangeCte,
 sk AS (
   SELECT l_orderkey AS a, l_partkey AS b,
-    ${sk("l_orderkey", "alo", "ahi", "sa")},
-    ${sk("l_partkey", "blo", "bhi", "sb")}
+    ${zScaleSql("l_orderkey", "alo", "ahi", "sa")},
+    ${zScaleSql("l_partkey", "blo", "bhi", "sb")}
   FROM lineitem),
 h16 AS (SELECT a, b, sa AS x, sb AS y, CAST(0 AS BIGINT) AS d FROM sk),
 $steps
@@ -7734,48 +7427,21 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     "cls1_cg_scores" -> OracleSqlGen.cls1ScoresSql(),
     "cls1_cg_eval" -> OracleSqlGen.cls1EvalSql(),
     "stream_classify" -> ta18NbSql,
-    // cur3: both self-trained LMs replayed (the ta11 unigram and ta16
-    // interpolated-bigram CTEs verbatim, u/b-prefixed), exact-integer
-    // 4dp means, excess = lp_bi - lp_uni, and the k-th-tuple threshold
+    // cur3: both self-trained LMs replayed (the ta16 bigram LM, and the
+    // ta11 unigram LM over its tok/uni/tot counts), exact-integer 4dp
+    // means, excess = lp_bi - lp_uni, and the k-th-tuple threshold
     // expressed as its equivalent (excess DESC, doc_id ASC) rank
     "cur3_excess_loss" ->
-      s"""WITH ut AS (
-           SELECT doc_id,
-             UNNEST(regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+')) AS tok
-           FROM documents),
-         uf AS (SELECT tok, COUNT(*) AS c FROM ut GROUP BY 1),
-         utot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM ut),
+      s"""WITH ${bigramLmCtes("documents")},
          ulp AS (
-           SELECT doc_id, round(ln(c / total), 6) AS lp
-           FROM ut JOIN uf USING (tok), utot),
+           SELECT doc_id, round(ln(cu / total), 6) AS lp
+           FROM tok JOIN uni USING (tok), tot),
          ulm AS (
            SELECT doc_id, SUM(CAST(round(lp * 1000000) AS BIGINT)) AS s,
              CAST(COUNT(*) AS BIGINT) * 100 AS d
            FROM ulp GROUP BY 1),
          uavg AS (SELECT doc_id, $lmAvgExpr AS lp_uni FROM ulm),
-         arr AS (
-           SELECT doc_id,
-             regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+') AS toks
-           FROM documents),
-         big AS (
-           SELECT doc_id, toks[CAST(g.i AS INT)] AS w1,
-             toks[CAST(g.i AS INT) + 1] AS w2
-           FROM arr, LATERAL UNNEST(generate_series(1, len(toks) - 1)) AS g(i)),
-         c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
-         c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
-         blp AS (
-           SELECT big.doc_id,
-             round(ln(0.75 * (CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE))
-               + 0.25 * (CAST(uf.c AS DOUBLE) / utot.total)), 6) AS lp
-           FROM big
-           JOIN c12 ON big.w1 = c12.w1 AND big.w2 = c12.w2
-           JOIN c1 ON big.w1 = c1.w1
-           JOIN uf ON big.w2 = uf.tok, utot),
-         blm AS (
-           SELECT doc_id, SUM(CAST(round(lp * 1000000) AS BIGINT)) AS s,
-             CAST(COUNT(*) AS BIGINT) * 100 AS d
-           FROM blp GROUP BY 1),
-         bavg AS (SELECT doc_id, $lmAvgExpr AS lp_bi FROM blm),
+         bavg AS (SELECT doc_id, $lmAvgExpr AS lp_bi FROM lm),
          x AS (
            SELECT u.doc_id, u.lp_uni, b.lp_bi,
              b.lp_bi - u.lp_uni AS excess
@@ -7847,32 +7513,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // (avg_logprob DESC, doc_id) total order — both engines implement
     // SQL-standard ntile (first n mod 3 buckets take the extra row)
     "ta17_ppl_buckets" ->
-      s"""WITH tok AS (
-           SELECT doc_id,
-             UNNEST(regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+')) AS tok
-           FROM documents),
-         uni AS (SELECT tok, COUNT(*) AS cu FROM tok GROUP BY 1),
-         tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM tok),
-         arr AS (
-           SELECT doc_id, regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+') AS toks
-           FROM documents),
-         big AS (
-           SELECT doc_id, toks[CAST(g.i AS INT)] AS w1,
-             toks[CAST(g.i AS INT) + 1] AS w2
-           FROM arr, LATERAL UNNEST(generate_series(1, len(toks) - 1)) AS g(i)),
-         c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
-         c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
-         lp AS (
-           SELECT big.doc_id,
-             round(ln(0.75 * (CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE))
-               + 0.25 * (CAST(uni.cu AS DOUBLE) / tot.total)), 6) AS lp
-           FROM big
-           JOIN c12 ON big.w1 = c12.w1 AND big.w2 = c12.w2
-           JOIN c1 ON big.w1 = c1.w1
-           JOIN uni ON big.w2 = uni.tok, tot),
-         $lmMicroCte,
-         lm2 AS (
-           SELECT doc_id, n_bigrams, $lmAvgExpr AS avg_logprob FROM lm),
+      s"""WITH ${bigramLmCtes("documents")},
+         $lmMeanCte,
          ranked AS (
            SELECT lm2.doc_id, d.source AS domain, lm2.n_bigrams,
              lm2.avg_logprob,
@@ -7888,32 +7530,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // threshold CASE — selection, cut learning, and bucketing all
     // re-derived
     "ta17b_ppl_buckets_sampled" ->
-      s"""WITH tok AS (
-           SELECT doc_id,
-             UNNEST(regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+')) AS tok
-           FROM documents),
-         uni AS (SELECT tok, COUNT(*) AS cu FROM tok GROUP BY 1),
-         tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM tok),
-         arr AS (
-           SELECT doc_id, regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+') AS toks
-           FROM documents),
-         big AS (
-           SELECT doc_id, toks[CAST(g.i AS INT)] AS w1,
-             toks[CAST(g.i AS INT) + 1] AS w2
-           FROM arr, LATERAL UNNEST(generate_series(1, len(toks) - 1)) AS g(i)),
-         c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
-         c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
-         lp AS (
-           SELECT big.doc_id,
-             round(ln(0.75 * (CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE))
-               + 0.25 * (CAST(uni.cu AS DOUBLE) / tot.total)), 6) AS lp
-           FROM big
-           JOIN c12 ON big.w1 = c12.w1 AND big.w2 = c12.w2
-           JOIN c1 ON big.w1 = c1.w1
-           JOIN uni ON big.w2 = uni.tok, tot),
-         $lmMicroCte,
-         lm2 AS (
-           SELECT doc_id, n_bigrams, $lmAvgExpr AS avg_logprob FROM lm),
+      s"""WITH ${bigramLmCtes("documents")},
+         $lmMeanCte,
          scored AS (
            SELECT lm2.doc_id, d.source AS domain, lm2.n_bigrams,
              lm2.avg_logprob
@@ -7923,8 +7541,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
              NTILE(3) OVER (PARTITION BY domain
                ORDER BY avg_logprob DESC, doc_id) AS t
            FROM scored
-           WHERE CAST(('0x' || substr(md5('cuts:' || CAST(doc_id AS VARCHAR)), 1, 15))
-             AS BIGINT) / 1152921504606846976.0 < 0.5),
+           WHERE ${md5UnitSql("cuts")} < 0.5),
          cuts AS (
            SELECT domain,
              MIN(CASE WHEN t = 1 THEN avg_logprob END) AS cut_head,
@@ -7992,20 +7609,14 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     "q8_gate" ->
       """SELECT 1 AS budget_pass, 1 AS det_pass, 1 AS nonempty_pass,
            1 AS selects_pass, 1 AS has_rows""",
-    // ta9: same NFC + control/zero-width strip as TextAnalysis.normalizeText;
-    // SQL string literals are raw, so the regex escapes reach RE2 verbatim
+    // ta9: normalizeTextSql over injected NFD, control and zero-width chars
     "ta9_normalize" ->
-      """WITH inj AS (
+      s"""WITH inj AS (
            SELECT doc_id,
              substr(text, 1, 40) || ' cafe' || chr(769) || chr(7) || chr(8203)
                || ' fin' AS text
            FROM documents),
-         n AS (
-           SELECT doc_id, text,
-             regexp_replace(regexp_replace(nfc_normalize(text),
-               '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-               '[\x{200B}\x{200C}\x{200D}\x{FEFF}]', '', 'g') AS norm_text
-           FROM inj)
+         n AS (SELECT doc_id, text, $normalizeTextSql AS norm_text FROM inj)
          SELECT doc_id, norm_text, norm_text <> text AS changed
          FROM n ORDER BY doc_id""",
     "ta8_repetition" ->
@@ -8061,24 +7672,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
       """SELECT doc_id, md5(text || chr(64) || chr(48)) AS resized_md5,
          CAST(16 AS BIGINT) AS n_bytes
          FROM documents ORDER BY doc_id""",
-    // every decoded dimension is a pure function of doc_id: the oracle can
-    // only match if the JDK codec actually parsed the rendered containers
-    "mm6_codec_roundtrip" ->
-      """SELECT doc_id, 'png' AS format,
-         CAST(16 + (doc_id % 13) * 4 AS INT) AS width,
-         CAST(16 + (doc_id % 7) * 4 AS INT) AS height,
-         CAST(1 AS INT) AS n_frames,
-         CAST(24 AS INT) AS r_width, CAST(18 AS INT) AS r_height
-         FROM documents ORDER BY doc_id""",
-    // mm6b: the fused one-pass plan must be invisible — mm6's oracle
-    // verbatim
-    "mm6b_codec_fused" ->
-      """SELECT doc_id, 'png' AS format,
-         CAST(16 + (doc_id % 13) * 4 AS INT) AS width,
-         CAST(16 + (doc_id % 7) * 4 AS INT) AS height,
-         CAST(1 AS INT) AS n_frames,
-         CAST(24 AS INT) AS r_width, CAST(18 AS INT) AS r_height
-         FROM documents ORDER BY doc_id""",
+    "mm6_codec_roundtrip" -> mm6CodecSql,
+    "mm6b_codec_fused" -> mm6CodecSql,
     // the invariants (rescale-invariant dHash per master, Hamming
     // separation between masters) are verified in-query; the oracle
     // derives the master count from the same doc_id arithmetic
@@ -8312,16 +7907,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
                       ORDER BY l_linenumber, CAST(floor(l_quantity) AS BIGINT)
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
          ORDER BY doc_id, chunk_idx""",
-    "g1_collect_ordered" ->
-      """SELECT l_orderkey, COUNT(*) AS n_lines,
-         string_agg(CAST(l_linenumber AS VARCHAR), ',' ORDER BY l_linenumber) AS line_numbers
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-    // the salted two-phase concat must be indistinguishable from the
-    // direct ordered collect — same oracle
-    "g1b_collect_salted" ->
-      """SELECT l_orderkey, COUNT(*) AS n_lines,
-         string_agg(CAST(l_linenumber AS VARCHAR), ',' ORDER BY l_linenumber) AS line_numbers
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
+    "g1_collect_ordered" -> g1CollectSql,
+    "g1b_collect_salted" -> g1CollectSql,
     // g1c: the hot-key corpus (doc 0 = every fifth order, ~20% of chunks)
     // still held to the direct ordered string_agg — the salted path must be
     // indistinguishable from the unsalted collect ON the skewed key
@@ -8408,16 +7995,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
          'doc_' || CAST(doc_id AS VARCHAR) || '.v2' AS fname_stem,
          trim(substr(text, 1, 40)) AS payload
          FROM documents ORDER BY doc_id""",
-    // s1 text-dir ingest: files written from documents (doc_id < 200) must
-    // read back byte-identical, keyed by stem; the non-txt decoy must not
-    // appear (P2)
-    "s1_textdir_scan" ->
-      """SELECT doc_id, text FROM documents WHERE doc_id < 200
-         ORDER BY doc_id""",
-    // s1b: JSONL round-trip held to the same recompute oracle
-    "s1b_jsonl_scan" ->
-      """SELECT doc_id, text FROM documents WHERE doc_id < 200
-         ORDER BY doc_id""",
+    "s1_textdir_scan" -> s1ScanSql,
+    "s1b_jsonl_scan" -> s1ScanSql,
     "c1_chunk_fixed" ->
       """SELECT doc_id, CAST(k AS INT) AS chunk_idx, substr(text, CAST(k*100+1 AS INT), 120) AS chunk
          FROM documents, LATERAL UNNEST(generate_series(0, CAST(floor((length(text)-1)/100.0) AS BIGINT))) AS t(k)
@@ -8738,111 +8317,35 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
          LATERAL UNNEST(generate_series(0, n_frames - 1, 10)) AS t(k)
          ORDER BY doc_id, frame_idx""",
     "dd6_embedding_pairs" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(
-             list_sum(list_transform(list_zip(a.embedding, b.embedding),
-               p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           4) AS cosine
+      s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           ${cos4("a.embedding", "b.embedding")} AS cosine
          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
          WHERE cosine >= 0.45 ORDER BY id_a, id_b""",
     "dd4_jaccard_pairs" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(t[k:k+2], ' ') AS shingle
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-2, 1))) AS u(k)),
-         sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-         inter AS (
-           SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
-           FROM sh x JOIN sh y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2)
-         SELECT doc_a, doc_b, jaccard FROM (
-           SELECT doc_a, doc_b,
-             round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-           FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id)
-         WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b""",
-    // dc1/dc2: benchmark decontamination — 5-token shingle collision between
-    // the corpus (doc_id % 10 <> 0) and the benchmark slice (% 10 = 0).
-    // Same toks/shingle derivation as dd4.
-    "dc1_decontam" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(t[k:k+4], ' ') AS g
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-4, 1))) AS u(k)),
-         bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 10 = 0),
-         corp AS (SELECT * FROM sh WHERE doc_id % 10 <> 0),
-         sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_ngrams FROM corp GROUP BY 1),
-         hits AS (
-           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits
-           FROM corp JOIN bench USING (g) GROUP BY 1)
-         SELECT doc_id, n_hits, n_ngrams,
-           round(n_hits * 1.0 / n_ngrams, 4) AS overlap
-         FROM hits JOIN sz USING (doc_id) ORDER BY doc_id""",
+      s"""WITH $jaccardCountCtes
+         SELECT doc_a, doc_b, jaccard FROM $jaccardNearDupSql
+         ORDER BY doc_a, doc_b""",
+    "dc1_decontam" -> dc1DecontamSql,
     // dc4: positional grams (k 0-based, gram k covers tokens k..k+4),
     // covered-index expansion capped at doc length, original-case tokens
     // rejoined with single spaces — the whole rewrite replayed per doc
-    // toks guard: the q7 wsTokens convention — split on \s+ and drop
-    // empty fields. DuckDB's trim strips SPACES only and
-    // string_split_regex keeps leading/trailing empty fields, so a
-    // tabs/newlines-only doc would otherwise tokenize differently from
-    // the JVM's split("\\s+"); list_filter makes both engines yield the
-    // same token list for every whitespace shape (and the gram CTE emits
-    // NOTHING for a 0-token doc, not a '' gram)
     "dc4_span_decontam" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(coalesce(text, ''), '\s+'),
-               x -> x <> '') AS t
-           FROM documents),
-         g AS (
-           SELECT doc_id, k - 1 AS k,
-             lower(array_to_string(t[k:k+4], ' ')) AS g
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-4, 1))) u(k)
-           WHERE len(t) >= 1),
+      s"""WITH $spanGramCtes,
          bench AS (SELECT DISTINCT g FROM g WHERE doc_id % 10 = 0),
          corp AS (SELECT * FROM g WHERE doc_id % 10 <> 0),
          hits AS (SELECT doc_id, k FROM corp JOIN bench USING (g)),
-         cov AS (
-           SELECT DISTINCT h.doc_id, u.i
-           FROM hits h JOIN toks t ON h.doc_id = t.doc_id,
-             LATERAL UNNEST(generate_series(h.k, least(h.k + 4, len(t.t) - 1))) u(i)),
-         idx AS (
-           SELECT doc_id, t, u.i AS i
-           FROM toks, LATERAL UNNEST(generate_series(0, len(t) - 1)) u(i)
-           WHERE doc_id % 10 <> 0),
-         kept AS (
-           SELECT x.doc_id, x.i, x.t[CAST(x.i AS INT) + 1] AS tok
-           FROM idx x LEFT JOIN cov c ON x.doc_id = c.doc_id AND x.i = c.i
-           WHERE c.i IS NULL),
-         agg AS (
-           SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS clean_text,
-             CAST(COUNT(*) AS BIGINT) AS n_kept
-           FROM kept GROUP BY 1),
-         tot AS (
-           SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks
-           WHERE doc_id % 10 <> 0)
-         SELECT t.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-           t.n_tokens, t.n_tokens - COALESCE(a.n_kept, 0) AS n_removed
-         FROM tot t LEFT JOIN agg a USING (doc_id)
-         ORDER BY t.doc_id""",
+         ${spanRewriteSql("WHERE doc_id % 10 <> 0")}""",
     // dc5: the dd6 split-cosine replay, corpus-vs-benchmark, argmax per
     // corpus vector over the snapped cosine with bench_id tie-break
     "dc5_semantic_decontam" ->
-      """WITH bench AS (
+      s"""WITH bench AS (
            SELECT vec_id AS bench_id, embedding FROM embeddings
            WHERE vec_id % 17 = 0),
          corp AS (
            SELECT vec_id, embedding FROM embeddings WHERE vec_id % 17 <> 0),
          p AS (
            SELECT c.vec_id, b.bench_id,
-             round(
-               list_sum(list_transform(list_zip(c.embedding, b.embedding),
-                 q -> CAST(q[1] AS DOUBLE) * CAST(q[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cos
+             ${cos4("c.embedding", "b.embedding")} AS cos
            FROM corp c CROSS JOIN bench b),
          best AS (
            SELECT vec_id, bench_id, cos,
@@ -8855,73 +8358,21 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // dd12: the dc4 gram/rewrite chains, corpus-vs-itself, with the
     // min-doc_id keeper rule replayed
     "dd12_span_self_dedup" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(coalesce(text, ''), '\s+'),
-               x -> x <> '') AS t
-           FROM documents),
-         g AS (
-           SELECT doc_id, k - 1 AS k,
-             lower(array_to_string(t[k:k+4], ' ')) AS g
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-4, 1))) u(k)
-           WHERE len(t) >= 1),
+      s"""WITH $spanGramCtes,
          dup AS (
            SELECT g, MIN(doc_id) AS keeper
            FROM g GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
          hits AS (
            SELECT x.doc_id, x.k FROM g x JOIN dup d USING (g)
            WHERE x.doc_id <> d.keeper),
-         cov AS (
-           SELECT DISTINCT h.doc_id, u.i
-           FROM hits h JOIN toks t ON h.doc_id = t.doc_id,
-             LATERAL UNNEST(generate_series(h.k, least(h.k + 4, len(t.t) - 1))) u(i)),
-         idx AS (
-           SELECT doc_id, t, u.i AS i
-           FROM toks, LATERAL UNNEST(generate_series(0, len(t) - 1)) u(i)),
-         kept AS (
-           SELECT x.doc_id, x.i, x.t[CAST(x.i AS INT) + 1] AS tok
-           FROM idx x LEFT JOIN cov c ON x.doc_id = c.doc_id AND x.i = c.i
-           WHERE c.i IS NULL),
-         agg AS (
-           SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS clean_text,
-             CAST(COUNT(*) AS BIGINT) AS n_kept
-           FROM kept GROUP BY 1),
-         tot AS (
-           SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks)
-         SELECT t.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-           t.n_tokens, t.n_tokens - COALESCE(a.n_kept, 0) AS n_removed
-         FROM tot t LEFT JOIN agg a USING (doc_id)
-         ORDER BY t.doc_id""",
+         ${spanRewriteSql("")}""",
     "dc2_decontam_corpus" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(t[k:k+4], ' ') AS g
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-4, 1))) AS u(k)),
-         bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 10 = 0),
-         flagged AS (
-           SELECT DISTINCT doc_id FROM sh JOIN bench USING (g)
-           WHERE doc_id % 10 <> 0)
+      s"""WITH ${benchShingleCtes()},
+         $flaggedCte
          SELECT doc_id FROM documents
          WHERE doc_id % 10 <> 0 AND doc_id NOT IN (SELECT doc_id FROM flagged)
          ORDER BY doc_id""",
-    // dc3: the Bloom-prefiltered plan is held to the exact report's oracle
-    // verbatim — no false negatives + exact verify => bit-identical output.
-    "dc3_decontam_bloom" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(t[k:k+4], ' ') AS g
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-4, 1))) AS u(k)),
-         bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 10 = 0),
-         corp AS (SELECT * FROM sh WHERE doc_id % 10 <> 0),
-         sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_ngrams FROM corp GROUP BY 1),
-         hits AS (
-           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits
-           FROM corp JOIN bench USING (g) GROUP BY 1)
-         SELECT doc_id, n_hits, n_ngrams,
-           round(n_hits * 1.0 / n_ngrams, 4) AS overlap
-         FROM hits JOIN sz USING (doc_id) ORDER BY doc_id""",
+    "dc3_decontam_bloom" -> dc1DecontamSql,
     // dd9: same toks derivation as dd4 but windows keep MULTIPLICITY (no
     // DISTINCT) — a span repeated inside one doc is duplicated text too.
     "dd9_span_coverage" ->
@@ -8940,58 +8391,24 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // md5("<seed>:<id>") / 2^60 — the ta4/o4 md5-prefix-long idiom; all
     // registered weights are binary-exact so thresholds match bit-for-bit.
     "sp1_split" ->
-      """WITH u AS (
-           SELECT doc_id,
-             CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) / 1152921504606846976.0 AS u
-           FROM documents)
-         SELECT doc_id,
-           CASE WHEN u < 0.75 THEN 'train' WHEN u < 0.875 THEN 'val'
-                ELSE 'test' END AS split
+      s"""WITH u AS (SELECT doc_id, ${md5UnitSql("split")} AS u FROM documents)
+         SELECT doc_id, $splitCaseSql AS split
          FROM u ORDER BY doc_id""",
     // sp4: the dd7 closure verbatim + sp1's split CASE keyed on the
     // component representative (singletons key on their own id)
     "sp4_component_split" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(t[k:k+2], ' ') AS shingle
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-2, 1))) AS u(k)),
-         sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-         inter AS (
-           SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
-           FROM sh x JOIN sh y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2),
-         jp AS (
-           SELECT doc_a, doc_b FROM (
-             SELECT doc_a, doc_b,
-               round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-             FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id)
-           WHERE jaccard >= 0.5),
-         edges AS (
-           SELECT doc_a AS a, doc_b AS b FROM jp
-           UNION SELECT doc_b, doc_a FROM jp),
-         reach AS (
-           SELECT DISTINCT a AS src, a AS dst FROM edges
-           UNION
-           SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
-         comp AS (SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src),
+      s"""WITH RECURSIVE $jaccardComponentCtes,
          k AS (
            SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS split_key
            FROM documents d LEFT JOIN comp c USING (doc_id)),
          uu AS (
-           SELECT doc_id, split_key,
-             CAST(('0x' || substr(md5('split:' || CAST(split_key AS VARCHAR)), 1, 15))
-               AS BIGINT) / 1152921504606846976.0 AS u
+           SELECT doc_id, split_key, ${md5UnitSql("split", "split_key")} AS u
            FROM k)
-         SELECT doc_id, split_key,
-           CASE WHEN u < 0.75 THEN 'train' WHEN u < 0.875 THEN 'val'
-                ELSE 'test' END AS split
+         SELECT doc_id, split_key, $splitCaseSql AS split
          FROM uu ORDER BY doc_id""",
     "sp2_stratified" ->
-      """SELECT doc_id FROM (
-           SELECT doc_id,
-             CAST(('0x' || substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) / 1152921504606846976.0 AS u
+      s"""SELECT doc_id FROM (
+           SELECT doc_id, ${md5UnitSql("strat")} AS u
            FROM documents)
          WHERE u < CASE WHEN doc_id % 2 = 0 THEN 0.75 ELSE 0.25 END
          ORDER BY doc_id""",
@@ -9006,12 +8423,11 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
            FROM documents)
          WHERE sample_rank <= 100 ORDER BY sample_rank""",
     "mx1_resample" ->
-      """WITH w AS (
+      s"""WITH w AS (
            SELECT doc_id,
              CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 2.5 WHEN 1 THEN 0.25
                WHEN 2 THEN 1.0 ELSE 0.0 END AS w,
-             CAST(('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) / 1152921504606846976.0 AS u
+             ${md5UnitSql("mix")} AS u
            FROM documents),
          c AS (
            SELECT doc_id,
@@ -9092,57 +8508,11 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // as dd4; component = min reachable id. Mirrors min-label propagation's
     // fixed point exactly.
     "dd7_components" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(t[k:k+2], ' ') AS shingle
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-2, 1))) AS u(k)),
-         sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-         inter AS (
-           SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
-           FROM sh x JOIN sh y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2),
-         jp AS (
-           SELECT doc_a, doc_b FROM (
-             SELECT doc_a, doc_b,
-               round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-             FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id)
-           WHERE jaccard >= 0.5),
-         edges AS (
-           SELECT doc_a AS a, doc_b AS b FROM jp
-           UNION SELECT doc_b, doc_a FROM jp),
-         reach AS (
-           SELECT DISTINCT a AS src, a AS dst FROM edges
-           UNION
-           SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst)
-         SELECT src AS doc_id, MIN(dst) AS component
-         FROM reach GROUP BY src ORDER BY doc_id""",
+      s"""WITH RECURSIVE $jaccardComponentCtes
+         SELECT doc_id, component FROM comp ORDER BY doc_id""",
     // dd8b: the dd7 closure + per-component argmax keeper (length, -id)
     "dd8b_dedup_best" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(t[k:k+2], ' ') AS shingle
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-2, 1))) AS u(k)),
-         sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-         inter AS (
-           SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
-           FROM sh x JOIN sh y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2),
-         jp AS (
-           SELECT doc_a, doc_b FROM (
-             SELECT doc_a, doc_b,
-               round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-             FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id)
-           WHERE jaccard >= 0.5),
-         edges AS (
-           SELECT doc_a AS a, doc_b AS b FROM jp
-           UNION SELECT doc_b, doc_a FROM jp),
-         reach AS (
-           SELECT DISTINCT a AS src, a AS dst FROM edges
-           UNION
-           SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst)
-         , comp AS (
-           SELECT src AS doc_id, MIN(dst) AS component
-           FROM reach GROUP BY src),
+      s"""WITH RECURSIVE $jaccardComponentCtes,
          scored AS (
            SELECT d.doc_id, length(d.text) AS n_chars, c.component
            FROM documents d LEFT JOIN comp c USING (doc_id)),
@@ -9199,9 +8569,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
       val unions = (1 to 5).map(i =>
         s"SELECT query_id, CAST($i AS INT) AS rank, vec_id FROM sel$i")
         .mkString(" UNION ALL ")
-      s"""WITH q AS (
-           SELECT vec_id AS query_id, embedding AS eq
-           FROM embeddings WHERE vec_id < 5),
+      s"""WITH ${queryCte("q")},
          scored AS (
            SELECT q.query_id, c.vec_id, c.embedding,
              ${cosExpr("q.eq", "c.embedding")} AS cosine
@@ -9267,24 +8635,13 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // the min measured across SFs - the recallGate convention)
     "ss13_gate" -> "SELECT 80 AS floor_x100, 1 AS has_rows, 1 AS pass",
     "ss1_cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-         scored AS (
-           SELECT q.query_id, c.vec_id,
-             round(
-               list_sum(list_transform(list_zip(q.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM embeddings c, q WHERE c.vec_id <> q.query_id)
-         SELECT query_id, vec_id, cosine, rank FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY cosine DESC, vec_id ASC) AS rank FROM scored)
-         WHERE rank <= 5 ORDER BY query_id, rank""",
+      s"""WITH ${exactCosineCtes()}
+         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("scored")}
+         ORDER BY query_id, rank""",
     // ss10: the centering transform + ss1's chain on the centered lists —
     // decimal-exact per-dim means, double-subtract, float re-round
     "ss10_centered_topk" ->
-      """WITH dm AS (
+      s"""WITH dm AS (
            SELECT u.i AS i,
              CAST(SUM(CAST(CAST(e.embedding[u.i] AS DOUBLE)
                AS DECIMAL(38, 10))) AS DOUBLE) / COUNT(*) AS mu
@@ -9297,8 +8654,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
              list_transform(list_zip(embedding, (SELECT m FROM mv)),
                p -> CAST(CAST(p[1] AS DOUBLE) - p[2] AS REAL)) AS embedding
            FROM embeddings),
-         q AS (SELECT vec_id AS query_id, embedding AS eq FROM cent
-               WHERE vec_id < 5),
+         ${queryCte("q", "cent")},
          scored AS (
            -- unlike the raw-fixture ss1 shape, CENTERING can produce an
            -- exact-zero vector (an embedding equal to the mean), so the
@@ -9314,10 +8670,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
                   * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
              4) END AS cosine
            FROM cent c, q WHERE c.vec_id <> q.query_id)
-         SELECT query_id, vec_id, cosine, rank FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY cosine DESC, vec_id ASC) AS rank FROM scored)
-         WHERE rank <= 5 ORDER BY query_id, rank""",
+         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("scored")}
+         ORDER BY query_id, rank""",
     // dd13_gate: lexical near-dups must all surface in the semantic set
     "dd13_gate" -> "SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass",
     "dd13b_gate" -> "SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass",
@@ -9328,227 +8682,56 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // ss9: ss1's cosine replay + label-mismatch filter + denoise cap +
     // per-query rank — the full mined-negative set
     "ss9_hard_negatives" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS eq, label AS ql
-                    FROM embeddings WHERE vec_id < 5),
-         scored AS (
-           SELECT q.query_id, c.vec_id,
-             round(
-               list_sum(list_transform(list_zip(q.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM embeddings c, q
-           WHERE c.vec_id <> q.query_id AND c.label <> q.ql)
+      s"""WITH ${exactCosineCtes()},
+         neg AS (
+           SELECT s.query_id, s.vec_id, s.cosine FROM scored s
+           JOIN embeddings qe ON qe.vec_id = s.query_id
+           JOIN embeddings ce ON ce.vec_id = s.vec_id
+           WHERE ce.label <> qe.label AND s.cosine < 0.45)
          SELECT query_id, neg_rank, vec_id, cosine FROM (
            SELECT query_id, vec_id, cosine,
              ROW_NUMBER() OVER (PARTITION BY query_id
                ORDER BY cosine DESC, vec_id ASC) AS neg_rank
-           FROM scored WHERE cosine < 0.45)
+           FROM neg)
          WHERE neg_rank <= 5 ORDER BY query_id, neg_rank""",
-    // qz5: ss1's cosine replay on the 32-dim list prefix (list_slice is
-    // Spark's slice(_, 1, 32) — both inclusive 1-based)
+    // qz5: ss1's cosine replay on the 32-dim list prefix
     "qz5_matryoshka_topk" ->
-      """WITH m AS (SELECT vec_id, list_slice(embedding, 1, 32) AS embedding
-                    FROM embeddings),
-         q AS (SELECT vec_id AS query_id, embedding AS eq FROM m WHERE vec_id < 5),
-         scored AS (
-           SELECT q.query_id, c.vec_id,
-             round(
-               list_sum(list_transform(list_zip(q.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM m c, q WHERE c.vec_id <> q.query_id)
-         SELECT query_id, vec_id, cosine, rank FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY cosine DESC, vec_id ASC) AS rank FROM scored)
-         WHERE rank <= 5 ORDER BY query_id, rank""",
+      s"""WITH $matryoshkaCte,
+         ${exactCosineCtes("m")}
+         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("scored")}
+         ORDER BY query_id, rank""",
     // qz5_recall: truncated top-5 vs full-dim top-5, both re-derived —
     // the qz3 recall-composition shape
     "qz5_recall" ->
-      """WITH m AS (SELECT vec_id, list_slice(embedding, 1, 32) AS embedding
-                    FROM embeddings),
-         tq AS (SELECT vec_id AS query_id, embedding AS eq FROM m WHERE vec_id < 5),
-         tscored AS (
-           SELECT tq.query_id, c.vec_id,
-             round(
-               list_sum(list_transform(list_zip(tq.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(tq.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM m c, tq WHERE c.vec_id <> tq.query_id),
-         ap AS (
-           SELECT query_id, vec_id FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS rank FROM tscored)
-           WHERE rank <= 5),
-         fq AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-         fscored AS (
-           SELECT fq.query_id, c.vec_id,
-             round(
-               list_sum(list_transform(list_zip(fq.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(fq.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM embeddings c, fq WHERE c.vec_id <> fq.query_id),
-         ex AS (
-           SELECT query_id, vec_id FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS rank FROM fscored)
-           WHERE rank <= 5),
-         j AS (
-           SELECT ex.query_id,
-             CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           FROM ex LEFT JOIN ap
-             ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id)
-         SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-           CAST(SUM(hit) AS BIGINT) AS n_hit,
-           round(SUM(hit) * 1.0 / COUNT(*), 4) AS recall
-         FROM j GROUP BY 1 ORDER BY query_id""",
+      s"""WITH $matryoshkaCte,
+         ${exactCosineCtes("m")},
+         ${apCte("scored")},
+         $recallTail""",
     // qz6: the sign packing replayed exactly — bit j of word w set iff
     // embedding[w*32 + j + 1] >= 0 (POWER(2, j) is double-exact to 2^31);
     // Hamming = popcount of per-word XOR. Integers end to end.
     "qz6_sign_topk" ->
-      s"""WITH $signSigCte,
-         q AS (SELECT vec_id AS query_id, sig AS sig_q FROM sig WHERE vec_id < 5),
-         scored AS (
-           SELECT q.query_id, c.vec_id,
-             CAST(list_sum(list_transform(list_zip(c.sig, q.sig_q),
-               p -> bit_count(xor(p[1], p[2])))) AS BIGINT) AS hamming
-           FROM sig c, q WHERE c.vec_id <> q.query_id)
-         SELECT query_id, vec_id, hamming, rank FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY hamming ASC, vec_id ASC) AS rank FROM scored)
-         WHERE rank <= 5 ORDER BY query_id, rank""",
+      s"""WITH $signHammingCtes
+         SELECT query_id, vec_id, hamming, rank FROM ${hammingTopk(5, "rank")}
+         ORDER BY query_id, rank""",
     // qz6b: the FULL two-stage replay — integer Hamming shortlist (<=100)
     // then the exact cosine rerank on shortlist rows only
     "qz6b_sign_rerank" ->
-      s"""WITH $signSigCte,
-         q AS (SELECT vec_id AS query_id, sig AS sig_q FROM sig WHERE vec_id < 5),
-         hscored AS (
-           SELECT q.query_id, c.vec_id,
-             CAST(list_sum(list_transform(list_zip(c.sig, q.sig_q),
-               p -> bit_count(xor(p[1], p[2])))) AS BIGINT) AS hamming
-           FROM sig c, q WHERE c.vec_id <> q.query_id),
-         sl AS (
-           SELECT query_id, vec_id FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY hamming ASC, vec_id ASC) AS srank FROM hscored)
-           WHERE srank <= 100),
-         fq AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-         rr AS (
-           SELECT sl.query_id, sl.vec_id,
-             round(
-               list_sum(list_transform(list_zip(fq.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(fq.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM sl
-           JOIN embeddings c ON sl.vec_id = c.vec_id
-           JOIN fq ON sl.query_id = fq.query_id)
-         SELECT query_id, vec_id, cosine, rank FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY cosine DESC, vec_id ASC) AS rank FROM rr)
-         WHERE rank <= 5 ORDER BY query_id, rank""",
+      s"""WITH $signRerankCtes
+         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("rr")}
+         ORDER BY query_id, rank""",
     // qz6b_recall: two-stage top-5 vs the float exact top-5 — every stage
     // of BOTH sides re-derived, so even the recall of a two-stage ANN is
     // a hash-checked number here
     "qz6b_recall" ->
-      s"""WITH $signSigCte,
-         q AS (SELECT vec_id AS query_id, sig AS sig_q FROM sig WHERE vec_id < 5),
-         hscored AS (
-           SELECT q.query_id, c.vec_id,
-             CAST(list_sum(list_transform(list_zip(c.sig, q.sig_q),
-               p -> bit_count(xor(p[1], p[2])))) AS BIGINT) AS hamming
-           FROM sig c, q WHERE c.vec_id <> q.query_id),
-         sl AS (
-           SELECT query_id, vec_id FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY hamming ASC, vec_id ASC) AS srank FROM hscored)
-           WHERE srank <= 100),
-         fq AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-         rr AS (
-           SELECT sl.query_id, sl.vec_id,
-             round(
-               list_sum(list_transform(list_zip(fq.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(fq.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM sl
-           JOIN embeddings c ON sl.vec_id = c.vec_id
-           JOIN fq ON sl.query_id = fq.query_id),
-         ap AS (
-           SELECT query_id, vec_id FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS rank FROM rr)
-           WHERE rank <= 5),
-         fscored AS (
-           SELECT fq.query_id, c.vec_id,
-             round(
-               list_sum(list_transform(list_zip(fq.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(fq.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM embeddings c, fq WHERE c.vec_id <> fq.query_id),
-         ex AS (
-           SELECT query_id, vec_id FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS rank FROM fscored)
-           WHERE rank <= 5),
-         j AS (
-           SELECT ex.query_id,
-             CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           FROM ex LEFT JOIN ap
-             ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id)
-         SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-           CAST(SUM(hit) AS BIGINT) AS n_hit,
-           round(SUM(hit) * 1.0 / COUNT(*), 4) AS recall
-         FROM j GROUP BY 1 ORDER BY query_id""",
+      s"""WITH $signRerankCtes,
+         ${apCte("rr")},
+         $recallTail""",
     // qz6_recall: sign top-5 vs the float exact top-5, both re-derived
     "qz6_recall" ->
-      s"""WITH $signSigCte,
-         q AS (SELECT vec_id AS query_id, sig AS sig_q FROM sig WHERE vec_id < 5),
-         hscored AS (
-           SELECT q.query_id, c.vec_id,
-             CAST(list_sum(list_transform(list_zip(c.sig, q.sig_q),
-               p -> bit_count(xor(p[1], p[2])))) AS BIGINT) AS hamming
-           FROM sig c, q WHERE c.vec_id <> q.query_id),
-         ap AS (
-           SELECT query_id, vec_id FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY hamming ASC, vec_id ASC) AS rank FROM hscored)
-           WHERE rank <= 5),
-         fq AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-         fscored AS (
-           SELECT fq.query_id, c.vec_id,
-             round(
-               list_sum(list_transform(list_zip(fq.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(fq.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM embeddings c, fq WHERE c.vec_id <> fq.query_id),
-         ex AS (
-           SELECT query_id, vec_id FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS rank FROM fscored)
-           WHERE rank <= 5),
-         j AS (
-           SELECT ex.query_id,
-             CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           FROM ex LEFT JOIN ap
-             ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id)
-         SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-           CAST(SUM(hit) AS BIGINT) AS n_hit,
-           round(SUM(hit) * 1.0 / COUNT(*), 4) AS recall
-         FROM j GROUP BY 1 ORDER BY query_id""",
+      s"""WITH $signHammingCtes,
+         ap AS (SELECT query_id, vec_id FROM ${hammingTopk(5, "rank")}),
+         $recallTail""",
     // gr1: PageRank's three power iterations unrolled as CTEs — same 9dp
     // grid, same decimal sums, same dangling/teleport arithmetic (all
     // literals emitted from the Scala doubles), so the match is bit-exact.
@@ -9605,35 +8788,9 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
                     JOIN nrm nb ON dot.id_b = nb.doc_id)
          SELECT id_a, id_b, cosine FROM cosed
          WHERE cosine >= 0.8 ORDER BY id_a, id_b""",
-    // ss5: BM25 top-5. All literals are emitted from the Scala doubles
-    // (shortest round-trip repr), so both engines compute on the identical
-    // bit patterns; parenthesization mirrors the Column expression exactly.
+    // ss5: BM25 top-5 (bm25Ctes)
     "ss5_bm25_topk" ->
-      s"""WITH t AS (
-           SELECT doc_id,
-             UNNEST(regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+')) AS tok
-           FROM documents),
-         tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS DOUBLE) AS tf
-                FROM t GROUP BY 1, 2),
-         lens AS (SELECT doc_id, CAST(COUNT(*) AS DOUBLE) AS len
-                  FROM t GROUP BY 1),
-         d AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
-         stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total_toks,
-                     CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM t),
-         qt AS (
-           SELECT DISTINCT doc_id AS query_id, tok FROM t WHERE doc_id < 5),
-         scored AS (
-           SELECT query_id, tf.doc_id,
-             round(CAST(SUM(CAST(round(
-               round(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0), 6)
-                 * (tf * ${1.2 + 1}) /
-                 (tf + 1.2 * (1.0 - 0.75 + 0.75 * len /
-                   (total_toks / n_docs))), 6)
-               AS DECIMAL(38,10))) AS DOUBLE), 4) AS score
-           FROM qt JOIN tf USING (tok) JOIN d USING (tok)
-                JOIN lens ON tf.doc_id = lens.doc_id, stats
-           WHERE df <= 1.0 * n_docs
-           GROUP BY 1, 2)
+      s"""WITH ${bm25Ctes()}
          SELECT query_id, doc_id, score, rank FROM (
            SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
              ORDER BY score DESC, doc_id ASC) AS INT) AS rank FROM scored)
@@ -9643,52 +8800,15 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // DuckDB would otherwise divide in DECIMAL) and one addition on a
     // full-outer join, so exactness is inherited from the two inputs.
     "ss6_hybrid_rrf" ->
-      s"""WITH t AS (
-           SELECT doc_id,
-             UNNEST(regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+')) AS tok
-           FROM documents),
-         tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS DOUBLE) AS tf
-                FROM t GROUP BY 1, 2),
-         lens AS (SELECT doc_id, CAST(COUNT(*) AS DOUBLE) AS len
-                  FROM t GROUP BY 1),
-         d AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
-         stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total_toks,
-                     CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM t),
-         qt AS (
-           SELECT DISTINCT doc_id AS query_id, tok FROM t WHERE doc_id < 5),
-         bmscored AS (
-           SELECT query_id, tf.doc_id,
-             round(CAST(SUM(CAST(round(
-               round(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0), 6)
-                 * (tf * ${1.2 + 1}) /
-                 (tf + 1.2 * (1.0 - 0.75 + 0.75 * len /
-                   (total_toks / n_docs))), 6)
-               AS DECIMAL(38,10))) AS DOUBLE), 4) AS score
-           FROM qt JOIN tf USING (tok) JOIN d USING (tok)
-                JOIN lens ON tf.doc_id = lens.doc_id, stats
-           WHERE df <= 1.0 * n_docs
-           GROUP BY 1, 2),
+      s"""WITH ${bm25Ctes("bmscored")},
          bm AS (
            SELECT query_id, doc_id, rank FROM (
              SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                ORDER BY score DESC, doc_id ASC) AS rank FROM bmscored)
            WHERE rank <= 10),
-         q AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings
-               WHERE vec_id < 5),
-         dnscored AS (
-           SELECT q.query_id, c.vec_id,
-             round(
-               list_sum(list_transform(list_zip(q.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM embeddings c, q WHERE c.vec_id <> q.query_id),
+         ${exactCosineCtes(scored = "dnscored")},
          dn AS (
-           SELECT query_id, vec_id AS doc_id, rank FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS rank FROM dnscored)
-           WHERE rank <= 10),
+           SELECT query_id, vec_id AS doc_id, rank FROM ${cosineTopk("dnscored", 10)}),
          fused AS (
            SELECT COALESCE(a.query_id, b.query_id) AS query_id,
              COALESCE(a.doc_id, b.doc_id) AS doc_id,
@@ -9714,22 +8834,9 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
              AS max_abs_err
          FROM qz ORDER BY vec_id""",
     "qz2_topk_quant" -> qz2TopkSql,
-    // cl2/dd6b containment: precision-1.0 as a hash-checked literal — the
-    // Spark side recomputes the violation counters from the two pair sets
-    // (anti-join + cosine equality); any false-positive pair or scoring
-    // drift lands a nonzero counter and breaks the hash. has_pairs guards
-    // vacuity (an empty approximation yields 0 rows, failing rows_match).
-    "cl2_containment" ->
-      """SELECT 1 AS has_pairs, CAST(0 AS BIGINT) AS n_missing,
-           CAST(0 AS BIGINT) AS n_cosine_mismatch""",
-    "dd6b_containment" ->
-      """SELECT 1 AS has_pairs, CAST(0 AS BIGINT) AS n_missing,
-           CAST(0 AS BIGINT) AS n_cosine_mismatch""",
-    // dd6c: the routed listing is exact-scored whichever branch the
-    // pair-mass probe picks — containment holds as a literal
-    "dd6c_containment" ->
-      """SELECT 1 AS has_pairs, CAST(0 AS BIGINT) AS n_missing,
-           CAST(0 AS BIGINT) AS n_cosine_mismatch""",
+    "cl2_containment" -> pairContainmentSql,
+    "dd6b_containment" -> pairContainmentSql,
+    "dd6c_containment" -> pairContainmentSql,
     // cl4 removal precision: every removed doc has an exactly-verified
     // near-dup partner (see cl4Containment scaladoc).
     "cl4_containment" ->
@@ -9759,22 +8866,11 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // bt1b: re-learn from the SAME keyed-hash half-sample (selection
     // predicate = the sp2/mx1 md5-unit draw, seed "bpe")
     "bt1b_bpe_train_sampled" -> bpeTrainSql(8,
-      corpus = """(SELECT * FROM documents
-        WHERE CAST(('0x' || substr(md5('bpe:' || CAST(doc_id AS VARCHAR)), 1, 15))
-          AS BIGINT) / 1152921504606846976.0 < 0.5)"""),
+      corpus = s"(SELECT * FROM documents WHERE ${md5UnitSql("bpe")} < 0.5)"),
     "bt2_bpe_encode" -> bpeEncodeSql(8),
     "bt3_bpe_vocab" -> bpeVocabSql(8),
     "dd10_paragraph_dedup" ->
-      """WITH planted AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 3 = 0
-               THEN 'subscribe to our newsletter for updates' || chr(10)
-               ELSE '' END
-             || text ||
-             CASE WHEN doc_id % 5 = 0
-               THEN chr(10) || 'subscribe to our newsletter for updates'
-               ELSE '' END AS t
-           FROM documents),
+      s"""WITH $plantedBoilerCte,
          p AS (
            SELECT doc_id, ps[k] AS para, k AS pos
            FROM (SELECT doc_id, string_split(t, chr(10)) AS ps FROM planted),
@@ -9796,13 +8892,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
          FROM tot t LEFT JOIN agg a USING (doc_id)
          ORDER BY t.doc_id""",
     "mx2_temperature" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 16 < 11 THEN 'web'
-                  WHEN doc_id % 16 < 14 THEN 'books'
-                  WHEN doc_id % 16 < 15 THEN 'code'
-                  ELSE 'wiki' END AS domain
-           FROM documents),
+      s"""WITH d AS (SELECT doc_id, $domainSql AS domain FROM documents),
          c AS (
            SELECT domain, COUNT(*) AS nd FROM d GROUP BY domain),
          t AS (
@@ -9817,21 +8907,14 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
            FROM c, t)
          SELECT d.doc_id, d.domain, round(r.rate, 4) AS keep_rate
          FROM d JOIN r USING (domain)
-         WHERE CAST(('0x' || substr(md5('temp:' || CAST(d.doc_id AS VARCHAR)), 1, 15))
-           AS BIGINT) / 1152921504606846976.0 < r.rate
+         WHERE ${md5UnitSql("temp", "d.doc_id")} < r.rate
          ORDER BY d.doc_id""",
     // mx3: the whole waterfall replayed — sorted-cap window with decimal
     // prefix sums, water level = share at the FIRST uncapped index
     // (arg-min by i, not min over shares), then mx1's floor+fraction
     // keyed-hash copies. Same derived skewed domain as mx2.
     "mx3_unimax" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 16 < 11 THEN 'web'
-                  WHEN doc_id % 16 < 14 THEN 'books'
-                  WHEN doc_id % 16 < 15 THEN 'code'
-                  ELSE 'wiki' END AS domain
-           FROM documents),
+      s"""WITH d AS (SELECT doc_id, $domainSql AS domain FROM documents),
          c AS (
            SELECT domain, COUNT(*) AS nd,
              round(CAST(COUNT(*) AS DOUBLE) * 2.0, 9) AS cap
@@ -9860,8 +8943,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
            FROM shares),
          base AS (
            SELECT d.doc_id, d.domain, r.w,
-             CAST(('0x' || substr(md5('unimax:' || CAST(d.doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) / 1152921504606846976.0 AS u
+             ${md5UnitSql("unimax", "d.doc_id")} AS u
            FROM d JOIN r USING (domain)),
          cp AS (
            SELECT doc_id, domain, w,
@@ -9874,35 +8956,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     "qz3_recall" ->
       s"""WITH $quantizeCte,
          $quantScoredCte,
-         ap AS (
-           SELECT query_id, vec_id FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS rank FROM qscored)
-           WHERE rank <= 5),
-         fq AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-         fscored AS (
-           SELECT fq.query_id, c.vec_id,
-             round(
-               list_sum(list_transform(list_zip(fq.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(fq.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) AS cosine
-           FROM embeddings c, fq WHERE c.vec_id <> fq.query_id),
-         ex AS (
-           SELECT query_id, vec_id FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS rank FROM fscored)
-           WHERE rank <= 5),
-         j AS (
-           SELECT ex.query_id,
-             CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           FROM ex LEFT JOIN ap
-             ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id)
-         SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-           CAST(SUM(hit) AS BIGINT) AS n_hit,
-           round(SUM(hit) * 1.0 / COUNT(*), 4) AS recall
-         FROM j GROUP BY 1 ORDER BY query_id""",
+         ${apCte("qscored")},
+         $recallTail""",
     "pipe_curation" -> curationSql,
     // the LSH-prefiltered chain must curate identically here (banding
     // recall 1.0 on this corpus) — same oracle verbatim
@@ -9921,32 +8976,14 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // pipe_prep: normalize -> decontaminate -> split, each stage the
     // standalone oracle's form, chained (normalized text feeds the shingles)
     "pipe_prep" ->
-      """WITH norm AS (
-           SELECT doc_id,
-             regexp_replace(regexp_replace(nfc_normalize(text),
-               '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-               '[\x{200B}\x{200C}\x{200D}\x{FEFF}]', '', 'g') AS text
-           FROM documents),
-         toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM norm),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(t[k:k+4], ' ') AS g
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-4, 1))) AS u(k)),
-         bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 10 = 0),
-         flagged AS (
-           SELECT DISTINCT doc_id FROM sh JOIN bench USING (g)
-           WHERE doc_id % 10 <> 0),
+      s"""WITH norm AS (SELECT doc_id, $normalizeTextSql AS text FROM documents),
+         ${benchShingleCtes("norm")},
+         $flaggedCte,
          clean AS (
            SELECT doc_id FROM norm
            WHERE doc_id % 10 <> 0 AND doc_id NOT IN (SELECT doc_id FROM flagged)),
-         u AS (
-           SELECT doc_id,
-             CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) / 1152921504606846976.0 AS u
-           FROM clean)
-         SELECT doc_id,
-           CASE WHEN u < 0.75 THEN 'train' WHEN u < 0.875 THEN 'val'
-                ELSE 'test' END AS split
+         u AS (SELECT doc_id, ${md5UnitSql("split")} AS u FROM clean)
+         SELECT doc_id, $splitCaseSql AS split
          FROM u ORDER BY doc_id""",
     "stream_curation" -> streamCurationSql,
     // stream_ccingest: template → extraction (the shared ta19 CTEs) →
@@ -9962,27 +8999,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     "pipe_ccnet" -> ccnetSql,
     // dd11: cut after token i iff md5-grid hit on gram (i, i+1)
     "dd11_cdc_chunks" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(text)) = 0 THEN []
-               ELSE string_split_regex(lower(trim(text)), '\s+') END AS t
-           FROM documents),
-         c AS (
-           SELECT doc_id, t, len(t) AS n,
-             CASE WHEN len(t) >= 2 THEN list_filter(range(1, len(t)), i ->
-               CAST(('0x' || substr(md5(t[i] || ' ' || t[i+1]), 1, 15))
-                 AS BIGINT) % 16 = 0)
-             ELSE [] END AS cuts
-           FROM d),
-         s AS (
-           SELECT doc_id, t,
-             list_concat([1], list_transform(cuts, b -> b + 1)) AS starts,
-             list_concat(cuts, [n]) AS ends
-           FROM c),
-         x AS (
-           SELECT doc_id, k - 1 AS chunk_idx,
-             array_to_string(t[starts[k]:ends[k]], ' ') AS chunk
-           FROM s, LATERAL UNNEST(generate_series(1, len(starts))) AS u(k))
+      s"""WITH $cdcChunkCtes
          SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
            CAST(CASE WHEN length(chunk) = 0 THEN 0
              ELSE len(string_split(chunk, ' ')) END AS BIGINT) AS n_toks,
@@ -9992,27 +9009,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // boilerplate cap -> shared-mass containment pairs -> component
     // closure -> min-id survivors
     "dd11b_cdc_dedup_corpus" ->
-      """WITH RECURSIVE d AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(text)) = 0 THEN []
-               ELSE string_split_regex(lower(trim(text)), '\s+') END AS t
-           FROM documents),
-         c AS (
-           SELECT doc_id, t, len(t) AS n,
-             CASE WHEN len(t) >= 2 THEN list_filter(range(1, len(t)), i ->
-               CAST(('0x' || substr(md5(t[i] || ' ' || t[i+1]), 1, 15))
-                 AS BIGINT) % 16 = 0)
-             ELSE [] END AS cuts
-           FROM d),
-         s AS (
-           SELECT doc_id, t,
-             list_concat([1], list_transform(cuts, b -> b + 1)) AS starts,
-             list_concat(cuts, [n]) AS ends
-           FROM c),
-         x AS (
-           SELECT doc_id,
-             array_to_string(t[starts[k]:ends[k]], ' ') AS chunk
-           FROM s, LATERAL UNNEST(generate_series(1, len(starts))) AS u(k)),
+      s"""WITH RECURSIVE $cdcChunkCtes,
          xt AS (
            SELECT doc_id, md5(chunk) AS h,
              CASE WHEN length(chunk) = 0 THEN 0
@@ -10061,18 +9058,11 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // s10: per-(domain, split) membership through the partitioned
     // write→read-back roundtrip — domain and split re-derived exactly
     "s10_partitioned_export" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 16 < 11 THEN 'web'
-                  WHEN doc_id % 16 < 14 THEN 'books'
-                  WHEN doc_id % 16 < 15 THEN 'code'
-                  ELSE 'wiki' END AS domain,
-             CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) / 1152921504606846976.0 AS u
+      s"""WITH d AS (
+           SELECT doc_id, $domainSql AS domain,
+             ${md5UnitSql("split")} AS u
            FROM documents)
-         SELECT domain,
-           CASE WHEN u < 0.75 THEN 'train' WHEN u < 0.875 THEN 'val'
-                ELSE 'test' END AS split,
+         SELECT domain, $splitCaseSql AS split,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(SUM(doc_id) AS BIGINT) AS id_sum
          FROM d GROUP BY 1, 2 ORDER BY 1, 2""",
@@ -10122,15 +9112,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
            AS n_unique FROM documents""",
     // stream_decontam: the dc2 composition as a survivor count
     "stream_decontam" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(t[k:k+4], ' ') AS g
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-4, 1))) AS u(k)),
-         bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 10 = 0),
-         flagged AS (
-           SELECT DISTINCT doc_id FROM sh JOIN bench USING (g)
-           WHERE doc_id % 10 <> 0)
+      s"""WITH ${benchShingleCtes()},
+         $flaggedCte
          SELECT CAST(COUNT(*) AS BIGINT) AS n_clean FROM documents
          WHERE doc_id % 10 <> 0
            AND doc_id NOT IN (SELECT doc_id FROM flagged)""",
@@ -10148,34 +9131,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
       s"""SELECT date_trunc('hour', ts) AS hour, event_type, COUNT(*) AS n,
          round(${exactSumSql("value")}, 4) AS total_value
          FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    // aj1: DuckDB's native ASOF LEFT JOIN is the oracle for the
-    // union+window implementation; both compare micro-precision ts
-    "aj1_asof_join" ->
-      """WITH p AS (
-           SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-           FROM events WHERE event_type = 'purchase'),
-         s AS (
-           SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-           FROM events WHERE event_type = 'signup')
-         SELECT p.event_id, p.user_id, p.ts_us, p.value,
-           s.event_id AS asof_event_id, s.value AS asof_value
-         FROM p ASOF LEFT JOIN s
-           ON p.user_id = s.user_id AND p.ts_us >= s.ts_us
-         ORDER BY p.event_id""",
-    // aj1b: the SALTED prefix-scan form must be invisible — held to the
-    // identical ASOF JOIN oracle as aj1 (the gr1b/g1b convention)
-    "aj1b_asof_salted" ->
-      """WITH p AS (
-           SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-           FROM events WHERE event_type = 'purchase'),
-         s AS (
-           SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-           FROM events WHERE event_type = 'signup')
-         SELECT p.event_id, p.user_id, p.ts_us, p.value,
-           s.event_id AS asof_event_id, s.value AS asof_value
-         FROM p ASOF LEFT JOIN s
-           ON p.user_id = s.user_id AND p.ts_us >= s.ts_us
-         ORDER BY p.event_id""",
+    "aj1_asof_join" -> aj1AsofSql,
+    "aj1b_asof_salted" -> aj1AsofSql,
     // aj2: the grid binning must be invisible — plain inequality join
     "aj2_interval_join" ->
       """WITH p AS (
@@ -10212,108 +9169,21 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // O(steps)-state live form) is held to this SAME SQL verbatim.
     "ev9_funnel" -> ev9FunnelSql,
     "stream_funnel" -> ev9FunnelSql,
-    "ev2_sessionize" ->
-      """WITH e AS (
-           SELECT user_id, event_id, ts,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events)
-         SELECT user_id, event_id,
-           CAST(SUM(CASE WHEN prev_us IS NULL OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
-             OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-         FROM e ORDER BY user_id, event_id""",
-    // ev7: the native session_window gap-merge re-derived — the split is
-    // ev2's `> gap` (an event at EXACTLY gap distance from the previous
-    // MERGES: session_window extends the window end inclusively, pinned
-    // by StreamingSpec's boundary case)
-    "ev7_session_window" ->
-      """WITH e AS (
-           SELECT user_id, event_id, ts, value,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events),
-         s AS (
-           SELECT user_id, event_id, ts, value,
-             SUM(CASE WHEN prev_us IS NULL OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM e)
-         SELECT user_id, MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           round(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE), 4) AS total_value
-         FROM s GROUP BY user_id, sid
-         ORDER BY user_id, session_start""",
-    // ev7b: the salted assignment + hash agg must be invisible — ev7's
-    // oracle verbatim (the aj1b/ev2b discipline)
-    "ev7b_session_window_salted" ->
-      """WITH e AS (
-           SELECT user_id, event_id, ts, value,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events),
-         s AS (
-           SELECT user_id, event_id, ts, value,
-             SUM(CASE WHEN prev_us IS NULL OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM e)
-         SELECT user_id, MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           round(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE), 4) AS total_value
-         FROM s GROUP BY user_id, sid
-         ORDER BY user_id, session_start""",
-    // ev7c: the router must be invisible too — ev7's oracle verbatim on
-    // whichever branch the measured key share picks
-    "ev7c_session_window_routed" ->
-      """WITH e AS (
-           SELECT user_id, event_id, ts, value,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events),
-         s AS (
-           SELECT user_id, event_id, ts, value,
-             SUM(CASE WHEN prev_us IS NULL OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM e)
-         SELECT user_id, MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           round(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE), 4) AS total_value
-         FROM s GROUP BY user_id, sid
-         ORDER BY user_id, session_start""",
-    // ev2b: the salted prefix-scan must be invisible — ev2's oracle verbatim
-    "ev2b_sessionize_salted" ->
-      """WITH e AS (
-           SELECT user_id, event_id, ts,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events)
-         SELECT user_id, event_id,
-           CAST(SUM(CASE WHEN prev_us IS NULL OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
-             OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-         FROM e ORDER BY user_id, event_id""",
-    "ev3_sessionize_state" ->
-      """WITH e AS (
-           SELECT user_id, event_id, ts,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events)
-         SELECT user_id, event_id,
-           CAST(SUM(CASE WHEN prev_us IS NULL OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
-             OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-         FROM e ORDER BY user_id, event_id""",
+    "ev2_sessionize" -> ev2SessionizeSql,
+    "ev2b_sessionize_salted" -> ev2SessionizeSql,
+    "ev3_sessionize_state" -> ev2SessionizeSql,
+    "ev7_session_window" -> ev7SessionWindowSql,
+    "ev7b_session_window_salted" -> ev7SessionWindowSql,
+    "ev7c_session_window_routed" -> ev7SessionWindowSql,
     // ev5: ev2's session-assignment CTE + per-session grouping — the
     // composed chain (assignment feeding aggregates) is what hashes
     "ev5_session_stats" ->
       s"""WITH e AS (
-           SELECT user_id, event_id, ts, event_type, value,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
+           SELECT user_id, event_id, ts, event_type, value, $sessionPrevSql
            FROM events),
          s AS (
            SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, value,
-             CAST(SUM(CASE WHEN prev_us IS NULL OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+             CAST($sessionIdSql AS BIGINT) AS session_id
            FROM e)
          SELECT user_id, session_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -10337,26 +9207,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
          WHERE p.event_type = 'purchase' AND c.event_type = 'click'
            AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
          ORDER BY purchase_id, click_id""",
-    // ev8: the left-outer form — unmatched purchases carry -1 sentinels
-    "ev8_attribution_outer" ->
-      """SELECT p.event_id AS purchase_id, p.user_id AS user_id,
-           COALESCE(c.event_id, -1) AS click_id,
-           COALESCE(epoch_us(p.ts) - epoch_us(c.ts), -1) AS gap_us
-         FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-         LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-           ON p.user_id = c.user_id
-           AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
-         ORDER BY purchase_id, click_id""",
-    // ev8b: the binning must be invisible — ev8's oracle verbatim
-    "ev8b_attribution_binned" ->
-      """SELECT p.event_id AS purchase_id, p.user_id AS user_id,
-           COALESCE(c.event_id, -1) AS click_id,
-           COALESCE(epoch_us(p.ts) - epoch_us(c.ts), -1) AS gap_us
-         FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-         LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-           ON p.user_id = c.user_id
-           AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
-         ORDER BY purchase_id, click_id""",
+    "ev8_attribution_outer" -> ev8AttributionSql,
+    "ev8b_attribution_binned" -> ev8AttributionSql,
     "mm2_decode_meta" ->
       """SELECT doc_id,
          ['jpeg','png','wav','mp4'][(CAST(('0x' || substr(md5(text), 1, 2)) AS INT) % 4) + 1] AS format,
@@ -10457,49 +9309,52 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
   private def qz2TopkSql: String =
     s"""WITH $quantizeCte,
        $quantScoredCte
-       SELECT query_id, vec_id, cosine, rank FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY cosine DESC, vec_id ASC) AS rank FROM qscored)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
+       SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("qscored")}
+       ORDER BY query_id, rank"""
 
-  /** Shared shingle CTE + minhash mins (md5-derived so bit-identical to the
-    * Spark UDF): h_i = min over distinct 3-gram shingles of
-    * (first 15 md5 hex chars of "s<i>:<shingle>" as int).
+  /** Minhash mins (md5-derived so bit-identical to the Spark UDF): h_i =
+    * min over a doc's distinct 3-gram shingles `sh` of (first 15 md5 hex
+    * chars of "s<i>:<shingle>" as int).
     */
-  private val shingleCte =
-    """toks AS (
-         SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-       sh AS (
-         SELECT DISTINCT doc_id, array_to_string(t[k:k+2], ' ') AS shingle
-         FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-2, 1))) AS u(k))"""
-
   private def minhashMinsN(numHashes: Int): String = (0 until numHashes).map { i =>
     s"MIN(CAST(('0x' || substr(md5('s$i:' || shingle), 1, 15)) AS BIGINT)) AS mh_$i"
   }.mkString(", ")
 
-  private def minhashMins: String = minhashMinsN(8)
-
   private def minhashSigSql: String =
-    s"WITH $shingleCte SELECT doc_id, $minhashMins FROM sh GROUP BY doc_id ORDER BY doc_id"
+    s"WITH ${wordShingleCtes(3, "shingle")} SELECT doc_id, ${minhashMinsN(8)} FROM sh GROUP BY doc_id ORDER BY doc_id"
+
+  /** `Dedup.minhashLshPairs`' banding at `nBands` x `rowsPerBand`: `sig`
+    * = the minhash mins per doc over `sh`, `bands` (doc_id, band,
+    * band_key) with band b's key = md5 of its rows' '_'-joined mins.
+    */
+  private def minhashBandCtes(nBands: Int, rowsPerBand: Int): String =
+    s"""sig AS (SELECT doc_id, ${minhashMinsN(nBands * rowsPerBand)} FROM sh GROUP BY doc_id),
+       bands AS (
+         SELECT doc_id, band, ${bandKeySql(nBands, rowsPerBand)} AS band_key
+         FROM sig, (VALUES ${bandValsSql(nBands)}) AS b(band))"""
+
+  private def bandKeySql(nBands: Int, rowsPerBand: Int): String =
+    (0 until nBands).map { b =>
+      val parts = (0 until rowsPerBand)
+        .map(r => s"CAST(mh_${rowsPerBand * b + r} AS VARCHAR)")
+        .mkString(" || '_' || ")
+      s"WHEN ${b} THEN md5($parts)"
+    }.mkString("CASE band ", " ", " END")
+
+  private def bandValsSql(nBands: Int): String =
+    (0 until nBands).map(b => s"($b)").mkString(",")
 
   /** dd3 oracle: band the signature exactly like `Dedup.minhashLshPairs`
     * (band b = md5 of '_'-joined (mh_{2b}, mh_{2b+1})), self-join on
     * (band, band_key), distinct ordered pairs.
     */
-  private def minhashLshSql: String = {
-    val bandKey = (0 until 4).map { b =>
-      s"WHEN ${b} THEN md5(CAST(mh_${2 * b} AS VARCHAR) || '_' || CAST(mh_${2 * b + 1} AS VARCHAR))"
-    }.mkString("CASE band ", " ", " END")
-    s"""WITH $shingleCte,
-       sig AS (SELECT doc_id, $minhashMins FROM sh GROUP BY doc_id),
-       bands AS (
-         SELECT doc_id, band, $bandKey AS band_key
-         FROM sig, (VALUES (0),(1),(2),(3)) AS b(band))
+  private def minhashLshSql: String =
+    s"""WITH ${wordShingleCtes(3, "shingle")},
+       ${minhashBandCtes(4, 2)}
        SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
        FROM bands x JOIN bands y USING (band, band_key)
        WHERE x.doc_id < y.doc_id
        ORDER BY doc_a, doc_b"""
-  }
 
   /** dd14/stream_neardup oracle: the shingle/minhash/band replay at the
     * sharp 6x4 geometry, then the greedy keeper rule — a doc survives iff
@@ -10509,20 +9364,13 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     * keeps DuckDB's ['']-token rows (its split of an empty string) out of
     * the band space.
     */
-  private def lshGreedyDedupSql(nBands: Int = 6, rowsPerBand: Int = 4): String = {
-    val bandKey = (0 until nBands).map { b =>
-      val parts = (0 until rowsPerBand)
-        .map(r => s"CAST(mh_${rowsPerBand * b + r} AS VARCHAR)")
-        .mkString(" || '_' || ")
-      s"WHEN ${b} THEN md5($parts)"
-    }.mkString("CASE band ", " ", " END")
-    val bandVals = (0 until nBands).map(b => s"($b)").mkString(",")
-    s"""WITH $shingleCte,
+  private def lshGreedyDedupSql(nBands: Int = 6, rowsPerBand: Int = 4): String =
+    s"""WITH ${wordShingleCtes(3, "shingle")},
        sig AS (SELECT doc_id, ${minhashMinsN(nBands * rowsPerBand)} FROM sh GROUP BY doc_id),
        bands AS (
-         SELECT s.doc_id, band, $bandKey AS band_key
+         SELECT s.doc_id, band, ${bandKeySql(nBands, rowsPerBand)} AS band_key
          FROM sig s JOIN documents d USING (doc_id),
-           (VALUES $bandVals) AS b(band)
+           (VALUES ${bandValsSql(nBands)}) AS b(band)
          WHERE trim(coalesce(d.text, '')) <> ''),
        dropped AS (
          SELECT DISTINCT b.doc_id
@@ -10534,7 +9382,6 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
        LEFT JOIN dropped x USING (doc_id)
        WHERE x.doc_id IS NULL
        ORDER BY d.doc_id"""
-  }
 
   /** dd4b/dd4c oracle: dd3's minhash/band replay produces the candidate
     * set; dd4's intersection/size arithmetic is evaluated on candidate
@@ -10543,19 +9390,9 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     * 100 TB operating point (SCALE.md §scale-probe-100x) is hash-checked
     * with the same generator as the (4 x 2) small-SF anchor.
     */
-  private def jaccardLshVerifiedSql(nBands: Int = 4, rowsPerBand: Int = 2): String = {
-    val bandKey = (0 until nBands).map { b =>
-      val parts = (0 until rowsPerBand)
-        .map(r => s"CAST(mh_${rowsPerBand * b + r} AS VARCHAR)")
-        .mkString(" || '_' || ")
-      s"WHEN ${b} THEN md5($parts)"
-    }.mkString("CASE band ", " ", " END")
-    val bandVals = (0 until nBands).map(b => s"($b)").mkString(",")
-    s"""WITH $shingleCte,
-       sig AS (SELECT doc_id, ${minhashMinsN(nBands * rowsPerBand)} FROM sh GROUP BY doc_id),
-       bands AS (
-         SELECT doc_id, band, $bandKey AS band_key
-         FROM sig, (VALUES $bandVals) AS b(band)),
+  private def jaccardLshVerifiedSql(nBands: Int = 4, rowsPerBand: Int = 2): String =
+    s"""WITH ${wordShingleCtes(3, "shingle")},
+       ${minhashBandCtes(nBands, rowsPerBand)},
        cand AS (
          SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
          FROM bands x JOIN bands y USING (band, band_key)
@@ -10573,7 +9410,6 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
          FROM inter JOIN sizes sa ON doc_a = sa.doc_id
                     JOIN sizes sb ON doc_b = sb.doc_id)
        WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b"""
-  }
 
   /** dd3b oracle: same shingle/minhash/band replay as dd3 but over the
     * boilerplate-skewed corpus, with the hot-bucket cap mirrored as a
@@ -10581,23 +9417,13 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     * are hot and which pairs the cap drops, so the cap semantics are
     * hash-checked end to end.
     */
-  private def minhashLshCappedSql(cap: Int): String = {
-    val bandKey = (0 until 4).map { b =>
-      s"WHEN ${b} THEN md5(CAST(mh_${2 * b} AS VARCHAR) || '_' || CAST(mh_${2 * b + 1} AS VARCHAR))"
-    }.mkString("CASE band ", " ", " END")
+  private def minhashLshCappedSql(cap: Int): String =
     s"""WITH sdocs AS (
          SELECT doc_id,
            CASE WHEN doc_id % 10 = 0 THEN '$BoilerText' ELSE text END AS text
          FROM documents),
-       toks AS (
-         SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM sdocs),
-       sh AS (
-         SELECT DISTINCT doc_id, array_to_string(t[k:k+2], ' ') AS shingle
-         FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-2, 1))) AS u(k)),
-       sig AS (SELECT doc_id, $minhashMins FROM sh GROUP BY doc_id),
-       bands AS (
-         SELECT doc_id, band, $bandKey AS band_key
-         FROM sig, (VALUES (0),(1),(2),(3)) AS b(band)),
+       ${wordShingleCtes(3, "shingle", "sdocs")},
+       ${minhashBandCtes(4, 2)},
        ok AS (
          SELECT band, band_key FROM bands GROUP BY 1, 2
          HAVING COUNT(*) > 1 AND COUNT(*) <= $cap)
@@ -10606,7 +9432,6 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
        JOIN ok USING (band, band_key)
        WHERE x.doc_id < y.doc_id
        ORDER BY doc_a, doc_b"""
-  }
 
   /** pipe_curation oracle: the gate expressions are the ta1/ta2 oracle
     * bodies as CTEs, the dedup stages are the dd1b keeper / dd7 closure
@@ -10651,6 +9476,162 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
        LEFT JOIN s2 ON s1.user_id = s2.user_id
        LEFT JOIN s3 ON s1.user_id = s3.user_id
        ORDER BY s1.user_id"""
+
+  /** The lineitem columns the stats oracles profile. */
+  private val StatsCols =
+    Seq("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag", "l_shipdate")
+
+  /** The per-column stats rows of ANALYZE over `rel`: row and null
+    * counts, min/max rendered as VARCHAR in both engines, then the
+    * `ndv(column)` column(s); one row per column, ordered by name.
+    */
+  private def columnStatsSql(rel: String, cols: Seq[String],
+      ndv: String => String): String =
+    cols.map(c =>
+      s"""SELECT '$c' AS column_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
+    CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
+    CAST(MIN($c) AS VARCHAR) AS min_value,
+    CAST(MAX($c) AS VARCHAR) AS max_value,
+    ${ndv(c)}
+  FROM $rel""").mkString("", "\n  UNION ALL\n", "\n  ORDER BY column_name")
+
+  /** TextAnalysis.normalizeText over `text`: NFC, then the control and
+    * zero-width characters stripped (SQL string literals are raw, so the
+    * regex escapes reach RE2 verbatim).
+    */
+  private val normalizeTextSql: String =
+    """regexp_replace(regexp_replace(nfc_normalize(text),
+         '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
+         '[\x{200B}\x{200C}\x{200D}\x{FEFF}]', '', 'g')"""
+
+  /** g1's direct ordered collect — g1b's salted two-phase concat must be
+    * indistinguishable from it, so both are held to this oracle.
+    */
+  private val g1CollectSql: String =
+    """SELECT l_orderkey, COUNT(*) AS n_lines,
+       string_agg(CAST(l_linenumber AS VARCHAR), ',' ORDER BY l_linenumber) AS line_numbers
+       FROM lineitem GROUP BY 1 ORDER BY 1"""
+
+  /** s1/s1b ingest round trip: the files written from documents
+    * (doc_id < 200) must read back byte-identical, keyed by stem, from
+    * the text dir (its non-txt decoy must not appear) and the JSONL file
+    * alike.
+    */
+  private val s1ScanSql: String =
+    """SELECT doc_id, text FROM documents WHERE doc_id < 200
+       ORDER BY doc_id"""
+
+  /** mm6's decoded dimensions, pure functions of doc_id (the oracle can
+    * only match if the JDK codec actually parsed the rendered
+    * containers); mm6b's fused one-pass plan must be invisible.
+    */
+  private val mm6CodecSql: String =
+    """SELECT doc_id, 'png' AS format,
+       CAST(16 + (doc_id % 13) * 4 AS INT) AS width,
+       CAST(16 + (doc_id % 7) * 4 AS INT) AS height,
+       CAST(1 AS INT) AS n_frames,
+       CAST(24 AS INT) AS r_width, CAST(18 AS INT) AS r_height
+       FROM documents ORDER BY doc_id"""
+
+  /** The near-dup pair listings' precision-1.0 literal (cl2, dd6b, dd6c):
+    * the Spark side recomputes the violation counters from the two pair
+    * sets (anti-join + cosine equality), so any false-positive pair or
+    * scoring drift lands a nonzero counter and breaks the hash; has_pairs
+    * guards vacuity (an empty approximation yields 0 rows). dd6c's routed
+    * listing is exact-scored whichever branch the pair-mass probe picks.
+    */
+  private val pairContainmentSql: String =
+    """SELECT 1 AS has_pairs, CAST(0 AS BIGINT) AS n_missing,
+         CAST(0 AS BIGINT) AS n_cosine_mismatch"""
+
+  /** dc1's benchmark-decontamination report: 5-token shingle collisions
+    * between the corpus (doc_id % 10 <> 0) and the benchmark slice
+    * (% 10 = 0). dc3's Bloom-prefiltered plan has no false negatives and
+    * an exact verify, so it is held to this oracle too.
+    */
+  private def dc1DecontamSql: String =
+    s"""WITH ${benchShingleCtes()},
+       corp AS (SELECT * FROM sh WHERE doc_id % 10 <> 0),
+       sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_ngrams FROM corp GROUP BY 1),
+       hits AS (
+         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits
+         FROM corp JOIN bench USING (g) GROUP BY 1)
+       SELECT doc_id, n_hits, n_ngrams,
+         round(n_hits * 1.0 / n_ngrams, 4) AS overlap
+       FROM hits JOIN sz USING (doc_id) ORDER BY doc_id"""
+
+  /** aj1's oracle: DuckDB's native ASOF LEFT JOIN over micro-precision ts
+    * — for the union+window form and aj1b's salted prefix scan alike.
+    */
+  private val aj1AsofSql: String =
+    """WITH p AS (
+         SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
+         FROM events WHERE event_type = 'purchase'),
+       s AS (
+         SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
+         FROM events WHERE event_type = 'signup')
+       SELECT p.event_id, p.user_id, p.ts_us, p.value,
+         s.event_id AS asof_event_id, s.value AS asof_value
+       FROM p ASOF LEFT JOIN s
+         ON p.user_id = s.user_id AND p.ts_us >= s.ts_us
+       ORDER BY p.event_id"""
+
+  /** The 30-minute session split ev2/ev5/ev7 share: `prev_us` = the
+    * user's previous event time, and the running count of gaps over 30
+    * minutes (an event EXACTLY 30 minutes after the previous one stays in
+    * the session: session_window extends the window end inclusively,
+    * pinned by StreamingSpec's boundary case).
+    */
+  private val sessionPrevSql: String =
+    "lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us"
+
+  private val sessionIdSql: String =
+    """SUM(CASE WHEN prev_us IS NULL OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
+             OVER (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"""
+
+  /** ev2's per-event session id — also ev2b's salted prefix scan and ev3's
+    * stateful form, which must both be invisible.
+    */
+  private val ev2SessionizeSql: String =
+    s"""WITH e AS (
+         SELECT user_id, event_id, ts, $sessionPrevSql
+         FROM events)
+       SELECT user_id, event_id,
+         CAST($sessionIdSql AS BIGINT) AS session_id
+       FROM e ORDER BY user_id, event_id"""
+
+  /** ev7: the native session_window gap-merge re-derived from ev2's split
+    * — also ev7b's salted assignment and ev7c's router on whichever
+    * branch the measured key share picks.
+    */
+  private val ev7SessionWindowSql: String =
+    s"""WITH e AS (
+         SELECT user_id, event_id, ts, value, $sessionPrevSql
+         FROM events),
+       s AS (
+         SELECT user_id, event_id, ts, value,
+           $sessionIdSql AS sid
+         FROM e)
+       SELECT user_id, MIN(ts) AS session_start,
+         MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+         CAST(COUNT(*) AS BIGINT) AS n_events,
+         round(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE), 4) AS total_value
+       FROM s GROUP BY user_id, sid
+       ORDER BY user_id, session_start"""
+
+  /** ev8's left-outer attribution (unmatched purchases carry -1
+    * sentinels); ev8b's binning must be invisible.
+    */
+  private val ev8AttributionSql: String =
+    """SELECT p.event_id AS purchase_id, p.user_id AS user_id,
+         COALESCE(c.event_id, -1) AS click_id,
+         COALESCE(epoch_us(p.ts) - epoch_us(c.ts), -1) AS gap_us
+       FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+       LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+         ON p.user_id = c.user_id
+         AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
+       ORDER BY purchase_id, click_id"""
 
   /** ta19's derived-page template + full extraction chain as CTEs ending
     * in `xs4(doc_id, h, t)` — h = the raw page, t = the extracted text.
@@ -10971,27 +9952,48 @@ SELECT
               THEN CAST(POWER(2, i) AS BIGINT) ELSE 0 END)) AS BIGINT)] AS sig
        FROM embeddings)"""
 
-  /** Shared bigram-LM aggregation tail (ta16/ta17/pipe_ccnet): per-doc
-    * EXACT micro-unit sum of the 6dp-grid lp values. The 4dp mean then
-    * comes from [[lmAvgExpr]]'s integer HALF-UP division — round(double)
-    * is NOT cross-engine stable when the true mean lands on a 4dp half
-    * (Spark rounds the exact binary value; DuckDB's float multiply can
-    * land exactly on the half — observed at sf0.001 doc 180, mean exactly
-    * -3.36275).
+  /** qz6's sign scan: [[signSigCte]], `q` = the vec_id < 5 query
+    * signatures, `hscored` (query_id, vec_id, hamming) = the popcount of
+    * the per-word XOR — integers end to end.
     */
-  private val lmMicroCte: String =
-    """lm AS (
-       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-         SUM(CAST(round(lp * 1000000) AS BIGINT)) AS s,
-         CAST(COUNT(*) AS BIGINT) * 100 AS d
-       FROM lp GROUP BY 1)"""
+  private def signHammingCtes: String =
+    s"""$signSigCte,
+       q AS (SELECT vec_id AS query_id, sig AS sig_q FROM sig WHERE vec_id < 5),
+       hscored AS (
+         SELECT q.query_id, c.vec_id,
+           CAST(list_sum(list_transform(list_zip(c.sig, q.sig_q),
+             p -> bit_count(xor(p[1], p[2])))) AS BIGINT) AS hamming
+         FROM sig c, q WHERE c.vec_id <> q.query_id)"""
 
-  /** Integer HALF-UP mean on the 4dp grid: sign-aware (2|s| + d) // (2d),
-    * all BIGINT, then one exact double division by 10^4.
+  /** FROM-clause body: `hscored`'s first `k` per query by (hamming ASC,
+    * vec_id ASC), numbered as `rank`.
     */
-  private val lmAvgExpr: String =
-    "(CASE WHEN s >= 0 THEN (2*s + d) // (2*d) " +
-      "ELSE -((-2*s + d) // (2*d)) END) / 10000.0"
+  private def hammingTopk(k: Int, rank: String): String =
+    s"""(
+         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+           ORDER BY hamming ASC, vec_id ASC) AS $rank FROM hscored)
+       WHERE $rank <= $k"""
+
+  /** qz6b's two-stage scan: the integer Hamming shortlist `sl` (<= 100)
+    * then the exact cosine rerank `rr` of the shortlist rows only.
+    */
+  private def signRerankCtes: String =
+    s"""$signHammingCtes,
+       sl AS (SELECT query_id, vec_id FROM ${hammingTopk(100, "srank")}),
+       ${queryCte("fq")},
+       rr AS (
+         SELECT sl.query_id, sl.vec_id,
+           ${cos4("fq.eq", "c.embedding")} AS cosine
+         FROM sl
+         JOIN embeddings c ON sl.vec_id = c.vec_id
+         JOIN fq ON sl.query_id = fq.query_id)"""
+
+  /** qz5's 32-dim Matryoshka prefix `m` (list_slice is Spark's
+    * slice(_, 1, 32) — both inclusive 1-based).
+    */
+  private val matryoshkaCte: String =
+    """m AS (SELECT vec_id, list_slice(embedding, 1, 32) AS embedding
+                    FROM embeddings)"""
 
   /** The ta2 lang-ID SELECT (no ORDER BY) parameterized on the source
     * relation — reused verbatim as a CTE inside the pipe_ccnet oracle.

@@ -88,14 +88,32 @@ final case class HttpEmbedder(
   }
 }
 
-/** [[HashingTfEmbedder]] with the bucket/sign derived from md5 (first 60
-  * digest bits, like the MinHash/SimHash family) instead of murmur: md5 is
-  * bit-identical in DuckDB, so metric formulas driven by this embedder
-  * have exact SQL oracles. For a SINGLE metric token the embedding is
-  * exactly ±e_bucket (one entry, unit norm), which reduces token-pair
-  * cosine to a bucket/sign comparison — what the eval_bert_ngram oracle
-  * exploits.
+/** The md5 hashing decision of the md5 embedders, which their SQL oracles
+  * replay: metric-token term frequencies, token -> bucket = first 60 md5
+  * digest bits mod `dim`, sign = bit 6 of those bits; `weight(tf)` is
+  * added into the bucket with that sign.
   */
+private object Md5Buckets {
+  def accumulate(text: String, dim: Int)(weight: Int => Float): Array[Float] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val v = new Array[Float](dim)
+    val counts = scala.collection.mutable.HashMap.empty[String, Int]
+    Text.metricTokens(text).foreach(t => counts.update(t, counts.getOrElse(t, 0) + 1))
+    counts.foreach { case (tok, tf) =>
+      md.reset()
+      val d = md.digest(tok.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      var h = 0L
+      var b = 0
+      while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
+      h = h >>> 4 // first 15 hex nibbles = 60 bits, nonnegative
+      val idx = (h % dim).toInt
+      val sign = if (((h >>> 6) & 1L) == 0L) 1f else -1f
+      v(idx) += sign * weight(tf)
+    }
+    v
+  }
+}
+
 /** [[Md5TfEmbedder]] with RAW term-frequency weights and NO normalization:
   * every vector component is an exact (small) integer, so dot products and
   * squared norms are exact integers and cosine = dot / (sqrt(na)*sqrt(nb))
@@ -106,43 +124,21 @@ final case class HttpEmbedder(
   * downstream of a cosine. The oracle-exact embedder for eval_pair_metrics.
   */
 final case class Md5TfCountEmbedder(dim: Int = 64) extends Embedder {
-  override def embed(text: String): Array[Float] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val v = new Array[Float](dim)
-    val counts = scala.collection.mutable.HashMap.empty[String, Int]
-    Text.metricTokens(text).foreach(t => counts.update(t, counts.getOrElse(t, 0) + 1))
-    counts.foreach { case (tok, tf) =>
-      md.reset()
-      val d = md.digest(tok.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      var h = 0L
-      var b = 0
-      while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-      h = h >>> 4 // first 15 hex nibbles = 60 bits, nonnegative
-      val idx = (h % dim).toInt
-      val sign = if (((h >>> 6) & 1L) == 0L) 1f else -1f
-      v(idx) += sign * tf.toFloat
-    }
-    v
-  }
+  override def embed(text: String): Array[Float] =
+    Md5Buckets.accumulate(text, dim)(_.toFloat)
 }
 
+/** [[HashingTfEmbedder]] with the bucket/sign derived from md5 (first 60
+  * digest bits, like the MinHash/SimHash family) instead of murmur: md5 is
+  * bit-identical in DuckDB, so metric formulas driven by this embedder
+  * have exact SQL oracles. For a SINGLE metric token the embedding is
+  * exactly ±e_bucket (one entry, unit norm), which reduces token-pair
+  * cosine to a bucket/sign comparison — what the eval_bert_ngram oracle
+  * exploits.
+  */
 final case class Md5TfEmbedder(dim: Int = 64) extends Embedder {
   override def embed(text: String): Array[Float] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val v = new Array[Float](dim)
-    val counts = scala.collection.mutable.HashMap.empty[String, Int]
-    Text.metricTokens(text).foreach(t => counts.update(t, counts.getOrElse(t, 0) + 1))
-    counts.foreach { case (tok, tf) =>
-      md.reset()
-      val d = md.digest(tok.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      var h = 0L
-      var b = 0
-      while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-      h = h >>> 4 // first 15 hex nibbles = 60 bits, nonnegative
-      val idx = (h % dim).toInt
-      val sign = if (((h >>> 6) & 1L) == 0L) 1f else -1f
-      v(idx) += sign * math.sqrt(tf.toDouble).toFloat
-    }
+    val v = Md5Buckets.accumulate(text, dim)(tf => math.sqrt(tf.toDouble).toFloat)
     val norm = math.sqrt(v.map(x => x.toDouble * x).sum)
     if (norm > 0) v.map(x => (x / norm).toFloat) else v
   }

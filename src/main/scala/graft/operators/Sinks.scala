@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -259,6 +259,10 @@ object Sinks {
     * commit's directory moves and hard links.
     */
   private[graft] def fileName(p: String): String = p.replaceAll(".*/", "")
+
+  /** [[fileName]]'s rule as a column over the per-file stats key `__file`. */
+  private[graft] def fileNameCol: Column =
+    regexp_replace(col("__file"), ".*/", "")
 
   /** The manifest contribution of the files named `names`, read from
     * their per-file stats rows: (Σ`__n`, ⊕`__keyxor`). None when the
@@ -521,7 +525,7 @@ object Sinks {
           (if (stats.columns.contains("__keyxor"))
             FileSkipping.fileStatsKeyed(optRead, statCols, keyCol)
           else FileSkipping.fileStats(optRead, statCols))
-            .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+            .withColumn("__file", fileNameCol)
         Some((detected, optPaths, optStats))
       }
     }

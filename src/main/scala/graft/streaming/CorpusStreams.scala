@@ -52,6 +52,17 @@ object CorpusStreams {
     else (dir, table)
   }
 
+  /** Table `table` of the testdata directory `dir` as a parquet file
+    * stream: its batch-read schema plus the [[tableStreamPath]] base and
+    * glob, opened with [[readDocStream]].
+    */
+  def tableStream(spark: SparkSession, dir: String, table: String,
+      maxFilesPerTrigger: Int): DataFrame = {
+    val schema = spark.read.parquet(s"$dir/$table").schema
+    val (base, glob) = tableStreamPath(spark, dir, table)
+    readDocStream(spark, base, schema, maxFilesPerTrigger, glob)
+  }
+
   /** Q1 over a stream: stateless per-row summarize — no watermark, no
     * state store; scales as a projection.
     */

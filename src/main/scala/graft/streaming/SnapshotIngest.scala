@@ -216,7 +216,7 @@ object SnapshotIngest {
     FileSkipping.fileStatsKeyed(
         spark.read.schema(schema).parquet(newPaths.sorted: _*),
         statCols, keyCol)
-      .withColumn("__file", regexp_extract(col("__file"), "[^/]+$", 0))
+      .withColumn("__file", Sinks.fileNameCol)
   }
 
   /** Write the batch's stats table and one-row `meta`, then publish
