@@ -33,7 +33,7 @@ package graft
 private[graft] object OracleSqlGen {
 
   /** Whitespace token count of a SQL string expression (Text.tokenCount). */
-  private def tok(x: String): String =
+  private[graft] def tok(x: String): String =
     s"(CASE WHEN trim($x) = '' THEN 0 ELSE len(string_split_regex(trim($x), '\\s+')) END)"
 
   /** Unicode-lowercase metric tokens of a SQL string expr (Text.metricTokens). */

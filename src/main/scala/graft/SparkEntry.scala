@@ -13,7 +13,7 @@ import graft.OracleSqlGen.{DocIdKeySql, DocRowKeySql, LineitemKeySql, apCte,
   jaccardComponentCtes, jaccardCountCtes, jaccardNearDupSql, keyRangeCte,
   lmAvgExpr, lmMeanCte, md5UnitSql, md5XorSql, mortonSql, plantedBoilerCte,
   quarterBoxCtes, queryCte, recallTail, spanGramCtes, spanRewriteSql,
-  splitCaseSql, wordShingleCtes, zScaleSql}
+  splitCaseSql, tok, wordShingleCtes, zScaleSql}
 import graft.operators.{CorpusOps, Dedup, FileSkipping, Multimodal, Similarity,
   Sinks, TableQuality, TextAnalysis}
 
@@ -6410,10 +6410,6 @@ FROM m ORDER BY doc_id, summarizer""")
 
   // --------------------------------------------------------------- oracles
 
-  /** DuckDB token-count expression matching [[graft.functions.tokenCount]]. */
-  private val tokSql =
-    "CASE WHEN trim(text) = '' THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END"
-
   /** gr1 oracle: `iters` PageRank power iterations over the trade graph,
     * unrolled as CTE pairs (dangling mass d{i}, contributions c{i}, next
     * ranks r{i}) — arithmetic, rounding grid, and literals (emitted from
@@ -6497,7 +6493,7 @@ agg AS (
   SELECT wc.doc_id, SUM(wc.c * wt.n) AS n_bpe
   FROM wcnt wc JOIN wtok wt ON wt.w = wc.w GROUP BY 1)
 SELECT d.doc_id, CAST(COALESCE(a.n_bpe, 0) AS BIGINT) AS n_bpe_tokens,
-  $tokSql AS n_ws_tokens
+  ${tok("text")} AS n_ws_tokens
 FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
 ORDER BY d.doc_id"""
   }
@@ -6890,7 +6886,7 @@ ORDER BY token_id"""
     // ta12: Spark exact percentile and DuckDB quantile_cont share the
     // (1-g)*a[k] + g*a[k+1] interpolation at rank p*(n-1)
     "ta12_length_stats" ->
-      s"""WITH d AS (SELECT CAST($tokSql AS BIGINT) AS n FROM documents)
+      s"""WITH d AS (SELECT CAST(${tok("text")} AS BIGINT) AS n FROM documents)
          SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
            round(CAST(SUM(CAST(CAST(n AS DOUBLE) AS DECIMAL(38,10))) AS DOUBLE)
              / COUNT(*), 4) AS mean_tokens,
@@ -7948,8 +7944,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
       """SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS clean_text
          FROM documents ORDER BY doc_id""",
     "f2_token_counts" ->
-      s"""SELECT doc_id, $tokSql AS n_tokens, length(text) AS n_chars,
-         greatest(1, CAST(floor($tokSql / 50.0) AS BIGINT)) AS est_chunks
+      s"""SELECT doc_id, ${tok("text")} AS n_tokens, length(text) AS n_chars,
+         greatest(1, CAST(floor(${tok("text")} / 50.0) AS BIGINT)) AS est_chunks
          FROM documents ORDER BY doc_id""",
     "c3_truncate" ->
       """SELECT doc_id, array_to_string(string_split_regex(trim(text), '\s+')[1:20], ' ') AS head20
@@ -7960,7 +7956,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     "s4_sink_roundtrip" ->
       s"""SELECT doc_id,
          array_to_string(string_split_regex(trim(text), '\\s+')[1:15], ' ') AS summary,
-         $tokSql AS n_tokens,
+         ${tok("text")} AS n_tokens,
          CASE WHEN doc_id < 200
            THEN array_to_string(string_split_regex(trim(text), '\\s+')[1:15], ' ')
          END AS file_summary
@@ -7969,7 +7965,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // recomputed independently (g6-style exact-decimal mean)
     "s5_report_sink" ->
       s"""WITH v AS (
-           SELECT 'n_tokens' AS metric, CAST($tokSql AS DOUBLE) AS v FROM documents
+           SELECT 'n_tokens' AS metric, CAST(${tok("text")} AS DOUBLE) AS v FROM documents
            UNION ALL
            SELECT 'n_chars' AS metric, CAST(length(text) AS DOUBLE) AS v FROM documents),
          st AS (
@@ -7979,8 +7975,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
              COUNT(*) AS n
            FROM v GROUP BY 1),
          hb AS (
-           SELECT CAST(COUNT(DISTINCT CASE WHEN $tokSql < 55 THEN 'short'
-                                           WHEN $tokSql < 65 THEN 'mid'
+           SELECT CAST(COUNT(DISTINCT CASE WHEN ${tok("text")} < 55 THEN 'short'
+                                           WHEN ${tok("text")} < 65 THEN 'mid'
                                            ELSE 'long' END) AS INT) AS hist_buckets
            FROM documents),
          dn AS (SELECT CAST(least(100, COUNT(*)) AS INT) AS details_n FROM documents)
@@ -8449,7 +8445,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // reset — the g3 recursive-CTE shape partitioned by shard.
     "pk1_pack" ->
       s"""WITH d AS (
-           SELECT doc_id, CAST($tokSql AS BIGINT) AS n_tokens FROM documents),
+           SELECT doc_id, CAST(${tok("text")} AS BIGINT) AS n_tokens FROM documents),
          c AS (
            SELECT doc_id, n_tokens,
              CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
@@ -8467,7 +8463,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // (span covers [max(start, base), min(start+n, base+budget)))
     "pk1b_packed_spans" ->
       s"""WITH d AS (
-           SELECT doc_id, CAST($tokSql AS BIGINT) AS n_tokens FROM documents),
+           SELECT doc_id, CAST(${tok("text")} AS BIGINT) AS n_tokens FROM documents),
          c AS (
            SELECT doc_id, n_tokens,
              CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
@@ -8488,7 +8484,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
          FROM p ORDER BY seq_id, doc_id""",
     "pk2_pack_greedy" ->
       s"""WITH RECURSIVE d AS (
-           SELECT doc_id, CAST($tokSql AS BIGINT) AS w,
+           SELECT doc_id, CAST(${tok("text")} AS BIGINT) AS w,
              CAST(doc_id % 8 AS BIGINT) AS shard
            FROM documents),
          sq AS (
@@ -9120,7 +9116,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     "ta1_quality" -> qualitySql,
     "ta2_lang_id" -> langIdSql,
     "ta3_token_stats" ->
-      s"""SELECT doc_id, $tokSql AS ws_tokens,
+      s"""SELECT doc_id, ${tok("text")} AS ws_tokens,
          len(regexp_extract_all(text, '[\\p{L}]+')) AS alpha_runs,
          len(regexp_extract_all(text, '[0-9]+')) AS digit_runs,
          len(regexp_extract_all(text, '[[:punct:]]')) AS punct_marks,
@@ -9696,9 +9692,9 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     val maxExpr = s"greatest(${langs.map(l => s"hits_$l").mkString(", ")})"
     val caseExpr = langs.map(l => s"WHEN hits_$l = m THEN '$l'").mkString(" ")
     s"""cq AS (
-  SELECT doc_id, $tokSql AS n_tokens, length(text) AS n_chars,
-    round(CASE WHEN $tokSql = 0 THEN 0.0
-      ELSE len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$en], x))) * 1.0 / $tokSql END, 4) AS stopword_ratio,
+  SELECT doc_id, ${tok("text")} AS n_tokens, length(text) AS n_chars,
+    round(CASE WHEN ${tok("text")} = 0 THEN 0.0
+      ELSE len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$en], x))) * 1.0 / ${tok("text")} END, 4) AS stopword_ratio,
     round(CASE WHEN length(text) = 0 THEN 0.0
       ELSE (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) * 1.0 / length(text) END, 4) AS punct_ratio
   FROM $src),
@@ -9834,14 +9830,14 @@ SELECT
   private def qualitySql: String = {
     val en = TextAnalysis.StopwordMarkers("en").map(s => s"'$s'").mkString(", ")
     s"""SELECT doc_id,
-       $tokSql AS n_tokens,
+       ${tok("text")} AS n_tokens,
        length(text) AS n_chars,
-       round(CASE WHEN $tokSql = 0 THEN 0.0
-         ELSE length(regexp_replace(text, '\\s', '', 'g')) * 1.0 / $tokSql END, 4) AS avg_word_len,
+       round(CASE WHEN ${tok("text")} = 0 THEN 0.0
+         ELSE length(regexp_replace(text, '\\s', '', 'g')) * 1.0 / ${tok("text")} END, 4) AS avg_word_len,
        round(CASE WHEN length(text) = 0 THEN 0.0
          ELSE (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) * 1.0 / length(text) END, 4) AS punct_ratio,
-       round(CASE WHEN $tokSql = 0 THEN 0.0
-         ELSE len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$en], x))) * 1.0 / $tokSql END, 4) AS stopword_ratio,
+       round(CASE WHEN ${tok("text")} = 0 THEN 0.0
+         ELSE len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$en], x))) * 1.0 / ${tok("text")} END, 4) AS stopword_ratio,
        round(CASE WHEN length(text) = 0 THEN 0.0
          ELSE (length(text) - length(regexp_replace(text, '[A-Z]', '', 'g'))) * 1.0 / length(text) END, 4) AS upper_ratio
        FROM documents ORDER BY doc_id"""
@@ -9859,7 +9855,7 @@ SELECT
        FROM documents),
      g AS (
        SELECT doc_id,
-         $tokSql AS n_words,
+         ${tok("text")} AS n_words,
          string_split_regex(trim(text), '\\s+') AS toks,
          string_split_regex(lower(trim(text)), '\\s+') AS lt,
          string_split(text, chr(10)) AS lines,

@@ -2,6 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.{GraftExtensions, Scratch}
 import graft.core.PipelineConfig
@@ -1011,10 +1012,14 @@ object Main {
                   .withColumnRenamed("bert_f", "tx_bert_f"),
                 Seq("doc_id"), "left")
             }
+          // the statistics, the histogram and the detail rows each read
+          // the per-pair metrics: compute them once
+          metrics.persist(StorageLevel.MEMORY_AND_DISK)
           val stats = Metrics.summaryStats(metrics, MetricCols)
           val hist = Metrics.similarityHistogram(metrics)
-          timed("evaluate + report")(
+          try timed("evaluate + report")(
             Sinks.writeJsonReport(stats, hist, metrics.orderBy("doc_id"), report))
+          finally metrics.unpersist()
           println(s"[graft] evaluation report -> $report")
       }
     }

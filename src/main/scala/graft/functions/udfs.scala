@@ -24,35 +24,9 @@ object udfs {
     (c: Column) => f(c)
   }
 
-  /** C2/F3: recursive split measured by an exact BPE tokenizer — the
-    * reference's chunk-by-HF-token-count behavior
-    * (run_full_evaluation_pipeline.py:347-361). The tokenizer rides the
-    * closure; executors share its merge table like a broadcast model.
-    */
-  def recursiveSplitBpeUdf(chunkSize: Int, overlap: Int, bpe: BpeTokenizer)
-      : Column => Column = {
-    val f = udf { (text: String) =>
-      if (text == null) Array.empty[String]
-      else Splitter.recursiveSplit(text, chunkSize, overlap,
-        Splitter.DefaultSeparators, bpe.lengthFn).toArray
-    }
-    (c: Column) => f(c)
-  }
-
   /** F3: exact BPE token count of a string column. */
   def bpeCountUdf(bpe: BpeTokenizer): Column => Column = {
     val f = udf { (text: String) => if (text == null) 0 else bpe.count(text) }
-    (c: Column) => f(c)
-  }
-
-  /** C1b: fixed-stride token windows => ARRAY<STRING> (the SQL-oracle-able
-    * token chunker — see [[Splitter.tokenWindows]]).
-    */
-  def tokenWindowUdf(chunkSize: Int, overlap: Int): Column => Column = {
-    val f = udf { (text: String) =>
-      if (text == null) Array.empty[String]
-      else Splitter.tokenWindows(text, chunkSize, overlap).toArray
-    }
     (c: Column) => f(c)
   }
 

@@ -3,16 +3,17 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{BinPack, BinnedChunk, Chunk, PipelineConfig}
+import graft.core.{BinPack, BinnedChunk, Bpe, BpeTokenizer, Chunk, PipelineConfig, Splitter}
 import graft.functions.{orderedConcat, udfs}
 
 /** Corpus-level relational operators (SURVEY.md §2.1, §2.4, §2.5).
   *
   * All transforms are DataFrame -> DataFrame so Catalyst sees one logical
-  * plan end to end (pushdown + pruning through every step). Parallelism is
-  * doc x chunk: `chunkDocs` explodes to one row per chunk, which is exactly
-  * the reference's `Send` fan-out (runners/run_summarization_ollama_mapreduce.py:109-112)
-  * expressed as partition parallelism.
+  * plan end to end (pushdown + pruning through every step). [[chunker]] is
+  * the one document splitter: the strategies call it inside their
+  * per-document operator, so a doc's chunks stay in the task that read the
+  * doc, and `chunkDocs` explodes the same split to one row per chunk for
+  * the chunk-level operators.
   */
 object CorpusOps {
 
@@ -68,23 +69,41 @@ object CorpusOps {
       .write.mode("overwrite").parquet(outPath)
   }
 
+  /** C1/C2: the document splitter `cfg.chunker` names — recursive,
+    * `token_window` or `recursive_bpe` — as one function from a doc's text
+    * to its chunks in order (empty for a null text). The BPE table is
+    * loaded here, once, where the plan is built; the function is
+    * serializable, so each task gets its own copy.
+    */
+  def chunker(cfg: PipelineConfig): String => Vector[String] =
+    splitter(cfg, bpeTable(cfg))
+
+  private def bpeTable(cfg: PipelineConfig): Option[BpeTokenizer] =
+    if (cfg.chunker != "recursive_bpe") None
+    else if (cfg.tokenizerJsonPath.isEmpty) Some(Bpe.demo)
+    else Some(Bpe.fromTokenizerJson(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(cfg.tokenizerJsonPath))))
+
+  private def splitter(cfg: PipelineConfig, bpe: Option[BpeTokenizer]): String => Vector[String] = {
+    val (size, overlap) = (cfg.chunkSize, cfg.chunkOverlap)
+    val split: String => Vector[String] = cfg.chunker match {
+      case "token_window" => Splitter.tokenWindows(_, size, overlap)
+      case "recursive_bpe" => Splitter.recursiveSplit(_, size, overlap,
+        Splitter.DefaultSeparators, bpe.get.lengthFn)
+      case _ => Splitter.recursiveSplit(_, size, overlap,
+        Splitter.DefaultSeparators, Splitter.TokenLen)
+    }
+    text => if (text == null) Vector.empty else split(text)
+  }
+
   /** C1/C2: explode documents into ordered chunks:
-    * (doc_id, chunk_idx, text, n_tokens). Chunk order is carried explicitly
-    * (SURVEY.md §1.3 — reduce prompts join summaries in chunk order).
+    * (doc_id, chunk_idx, text, n_tokens) — [[chunker]]'s output, one row
+    * per chunk. Chunk order is carried explicitly (SURVEY.md §1.3 — reduce
+    * prompts join summaries in chunk order).
     */
   def chunkDocs(docs: DataFrame, cfg: PipelineConfig): DataFrame = {
-    val bpe = if (cfg.chunker == "recursive_bpe") Some {
-      if (cfg.tokenizerJsonPath.nonEmpty)
-        graft.core.Bpe.fromTokenizerJson(java.nio.file.Files.readString(
-          java.nio.file.Paths.get(cfg.tokenizerJsonPath)))
-      else graft.core.Bpe.demo
-    } else None
-    val splitFn = cfg.chunker match {
-      case "token_window" => udfs.tokenWindowUdf(cfg.chunkSize, cfg.chunkOverlap)
-      case "recursive_bpe" =>
-        udfs.recursiveSplitBpeUdf(cfg.chunkSize, cfg.chunkOverlap, bpe.get)
-      case _ => udfs.recursiveSplitUdf(cfg.chunkSize, cfg.chunkOverlap)
-    }
+    val bpe = bpeTable(cfg)
+    val split = splitter(cfg, bpe)
     // n_tokens is measured in the chunker's own unit so downstream budget
     // packing (binPack tokenMax) agrees with the chunk boundaries
     val countFn: Column => Column = bpe match {
@@ -92,7 +111,7 @@ object CorpusOps {
       case None => graft.functions.tokenCount(_)
     }
     docs
-      .select(col("doc_id"), posexplode(splitFn(col("text"))).as(Seq("chunk_idx", "text")))
+      .select(col("doc_id"), posexplode(udf(split).apply(col("text"))).as(Seq("chunk_idx", "text")))
       .withColumn("n_tokens", countFn(col("text")))
   }
 

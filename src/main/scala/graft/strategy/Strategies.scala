@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.reflect.runtime.universe.TypeTag
+
 import graft.core.{BinPack, PipelineConfig}
 import graft.functions.{tokenCount => tokenCountCol}
 import graft.llm.{CoverageJudge, Judge, Summarizer}
@@ -12,17 +14,21 @@ import graft.operators.CorpusOps
 /** The five summarization strategies (SURVEY.md §2.3 Q1-Q5) as DataFrame
   * programs over a pluggable [[Summarizer]] scalar.
   *
-  * Input contract: `docs` has (doc_id: long, text: string). Output:
-  * (doc_id, summary).
+  * Input contract: `docs` has (doc_id: long, text: string), one row per
+  * `doc_id`; a repeated id yields one output row per input row. Output:
+  * (doc_id, summary). Q2-Q4 emit no row for a doc whose text splits into
+  * no chunks (null, empty or blank text).
   *
   * Scale notes:
-  *  - Parallelism is per-chunk for map stages and per-doc for folds; no
-  *    stage ever materializes a whole corpus on one node.
+  *  - Parallelism is per document: a doc is split, and its chunks are
+  *    summarized (or folded) in chunk order, inside the task that read
+  *    the doc. Q2-Q4 add no shuffle, so their output keeps the input's
+  *    partitioning, and no stage ever materializes a whole corpus on one
+  *    node.
   *  - After the map stage, Q2/Q3 hold ONE row per document: its summaries
   *    in chunk order and their token counts (a few summaries of at most
-  *    `maxSummaryTokens` each). Building it is the strategy's only
-  *    shuffle; every collapse round and the final reduce are narrow
-  *    projections over it.
+  *    `maxSummaryTokens` each). Every collapse round and the final reduce
+  *    are narrow projections over it.
   *  - The collapse fixed-point is a driver loop over that persisted state
   *    (the standard Spark iterative-algorithm shape, like ALS); each round
   *    persists the new state and unpersists the previous one to keep
@@ -51,17 +57,30 @@ final class Strategies(
         graft.functions.cleanThinking(col("text")), contextBudget)).as("summary"))
   }
 
-  /** Map stage, then the per-doc state: summarize every chunk in parallel
-    * (the reference's `Send` fan-out,
-    * runners/run_summarization_ollama_mapreduce.py:109-112), then gather
-    * each doc's summaries in chunk order into (doc_id, parts).
+  /** One typed `flatMap` over (doc_id, text): `f` gets a doc's id and its
+    * chunks in order (never empty) and yields its output row; a doc with
+    * no chunks yields none. The operator is opaque to Catalyst, so nothing
+    * is pushed below it and `f` runs once per doc.
+    */
+  private def perDoc[T <: Product : TypeTag](docs: DataFrame)(
+      f: (Long, Vector[String]) => T): DataFrame = {
+    import docs.sparkSession.implicits._
+    val split = CorpusOps.chunker(cfg)
+    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+      .flatMap { case (id, text) =>
+        val chunks = split(text)
+        if (chunks.isEmpty) None else Some(f(id, chunks))
+      }.toDF()
+  }
+
+  /** Map stage: split a doc and summarize each chunk in order, giving the
+    * per-doc state (doc_id, parts). The reference fans the chunks out with
+    * `Send` (runners/run_summarization_ollama_mapreduce.py:109-112); here
+    * the fan-out is across docs, and a doc's chunks run in its task.
     */
   private def mapToDocs(docs: DataFrame): DataFrame =
-    withTokens(CorpusOps.chunkDocs(docs, cfg)
-      .select(col("doc_id"), col("chunk_idx"), summarizeUdf(col("text")).as("text"))
-      .groupBy("doc_id")
-      .agg(transform(array_sort(collect_list(struct("chunk_idx", "text"))),
-        s => s.getField("text")).as("parts")))
+    withTokens(perDoc(docs)((id, chunks) => (id, chunks.map(summarizeText)))
+      .toDF("doc_id", "parts"))
 
   /** Adds `toks` (each part's token count) and `tok` (their sum) over the
     * projection that produces `parts`, never fused into it: Catalyst does
@@ -169,26 +188,18 @@ final class Strategies(
     * summary_i = summarize(summary_{i-1} ++ chunk_i) — an inherently
     * sequential per-doc fold (reference:
     * runners/run_summarization_ollama_iterative.py:102-187). Parallel across
-    * docs, serial within a doc (by design; SURVEY.md §7.4.1). State per
-    * group = one rolling summary (bounded).
+    * docs, serial within a doc (by design; SURVEY.md §7.4.1): the doc is
+    * split and folded in the task that read it. State per doc = one
+    * rolling summary (bounded).
     */
   def iterative(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val chunks = CorpusOps.chunkDocs(docs, cfg)
     val s = summarizer
     val budget = cfg.maxSummaryTokens
-    chunks.select(col("doc_id").cast("long"), col("chunk_idx").cast("int"), col("text"))
-      .as[(Long, Int, String)]
-      .groupByKey(_._1)
-      .mapGroups { (docId: Long, it: Iterator[(Long, Int, String)]) =>
-        val ordered = it.toVector.sortBy(_._2)
-        val summary = ordered.foldLeft("") { (acc, chunk) =>
-          if (acc.isEmpty) s.summarize(chunk._3, budget)
-          else s.summarize(acc + "\n\n" + chunk._3, budget)
-        }
-        (docId, summary)
-      }
-      .toDF("doc_id", "summary")
+    perDoc(docs) { (id, chunks) =>
+      (id, chunks.foldLeft("") { (acc, chunk) =>
+        if (acc.isEmpty) s.summarize(chunk, budget)
+        else s.summarize(acc + "\n\n" + chunk, budget)
+      })
+    }.toDF("doc_id", "summary")
   }
 }

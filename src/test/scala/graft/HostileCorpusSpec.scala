@@ -151,9 +151,14 @@ class HostileCorpusSpec extends AnyFunSuite {
     val chunks = graft.operators.CorpusOps.chunkDocs(hostile, cfg)
     assert(chunks.count() >= 5) // null/empty rows yield no chunks; rest do
     val strategies = new Strategies(ExtractiveSummarizer, cfg = cfg)
-    assert(strategies.truncated(hostile).count() == 8)
-    // map-reduce drops chunkless (null/empty) docs by construction
-    assert(strategies.mapReduce(hostile).count() >= 5)
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("doc_id").as[Long].collect().toSet
+    assert(ids(strategies.truncated(hostile)) == (1L to 8L).toSet)
+    // no chunks, no row: the null, empty and blank docs (1-3) are absent
+    for ((name, out) <- Seq("mapreduce" -> strategies.mapReduce(hostile),
+        "critique" -> strategies.mapReduceCritique(hostile),
+        "iterative" -> strategies.iterative(hostile)))
+      assert(ids(out) == (4L to 8L).toSet, name)
   }
 
   test("curation gates + full curate survive hostile rows") {

@@ -97,9 +97,11 @@ class StrategiesSpec extends AnyFunSuite {
     maxSummaryTokens = 4, maxCollapseRounds = 10,
     maxCritiqueIterations = 2, chunker = "token_window")
 
-  private def wordDocs(lengths: (Long, Int)*): DataFrame =
+  private def wordRows(lengths: (Long, Int)*): Seq[(Long, String)] =
     lengths.map { case (id, n) => (id, (0 until n).map(i => s"d${id}w$i").mkString(" ")) }
-      .toDF("doc_id", "text")
+
+  private def wordDocs(lengths: (Long, Int)*): DataFrame =
+    wordRows(lengths: _*).toDF("doc_id", "text")
 
   private def chunkTexts(docs: DataFrame): Map[Long, Seq[String]] =
     CorpusOps.chunkDocs(docs, collapseCfg)
@@ -172,6 +174,31 @@ class StrategiesSpec extends AnyFunSuite {
     assert(capped._2 == Seq(3))
     // still over budget after the cap: the final reduce joins those parts
     assert(capped._3.map(Text.tokenCount).sum > collapseCfg.tokenMax)
+  }
+
+  test("plan shape: iterative and map-reduce plan no shuffle and keep the docs' P partitions") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // every node, the plans behind adaptive wrappers and cached relations
+    // (the collapse loop's persisted state) included
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val p = 3 // not the session's 4 shuffle partitions
+    val rows = wordRows(1L -> 36, 2L -> 60, 3L -> 12, 4L -> 4, 5L -> 30)
+    val docs = spark.sparkContext.parallelize(rows, p).toDF("doc_id", "text")
+    val st = new Strategies(ExtractiveSummarizer, cfg = collapseCfg)
+    for ((name, out) <- Seq("iterative" -> st.iterative(docs), "mapreduce" -> st.mapReduce(docs))) {
+      val shuffles = nodes(out.queryExecution.executedPlan).collect { case x: ShuffleExchangeExec => x }
+      assert(shuffles.isEmpty, s"$name plans a shuffle:\n${out.queryExecution.executedPlan}")
+      assert(out.rdd.getNumPartitions == p, name)
+      assert(out.select("doc_id").as[Long].collect().sorted.toSeq == rows.map(_._1), name)
+    }
   }
 
   test("golden pin: strategy outputs are byte-stable across versions") {
