@@ -36,6 +36,20 @@ private[graft] object OracleSqlGen {
   private[graft] def tok(x: String): String =
     s"(CASE WHEN trim($x) = '' THEN 0 ELSE len(string_split_regex(trim($x), '\\s+')) END)"
 
+  /** The SQL side of [[Pipelines.tokenSlicePairs]]: `pairs` (doc_id, gen,
+    * ref) = whitespace tokens 1-20 and 11-40 of each document joined with
+    * `sep` (chrF joins with '' for whitespace-free strings). coalesce:
+    * DuckDB's array_to_string([]) is NULL, but a doc shorter than the
+    * slice start means an EMPTY gen/ref, as in Spark.
+    */
+  private[graft] def tokenSlicePairsCte(sep: String = " "): String = {
+    def slice(r: String) =
+      s"coalesce(array_to_string(string_split_regex(trim(text), '\\s+')[$r], '$sep'), '')"
+    s"""pairs AS (
+  SELECT doc_id, ${slice("1:20")} AS gen, ${slice("11:40")} AS ref
+  FROM documents)"""
+  }
+
   /** Unicode-lowercase metric tokens of a SQL string expr (Text.metricTokens). */
   private def mtok(x: String): String =
     s"regexp_extract_all(lower($x), '[\\p{L}\\p{N}]+')"
@@ -333,13 +347,12 @@ FROM nodes ORDER BY doc_id, node_id""")
 
   /** pipe_hierarchical: the Q5 bottom-up tree collapse on the synthesized
     * sentence tree (TreeOps.synthesize at 3 sentences/section; depth 2, so
-    * exactly one level-collapse round + the root gather —
+    * each section collapses once, then the root —
     * Hierarchical.summarize under Pipelines.TestCfg, capTokens =
     * max(24*3/4, 8) = 18). Per section: '\n\n'-joined sentences,
-    * UNCONDITIONAL 18-token space-rejoin truncation (the Column
-    * truncateTokens), extractive summary at 8, title prefix. Root: the
-    * same over the section paragraphs in section order, then whitespace
-    * squeeze. Docs whose text yields no sentences drop out (no depth-1
+    * UNCONDITIONAL 18-token space-rejoin truncation (Hierarchical.truncate),
+    * extractive summary at 8, title prefix. Root: the same over the section
+    * paragraphs in section order, then whitespace squeeze. Docs whose text yields no sentences drop out (no depth-1
     * rows), exactly like the Spark plan.
     */
   def pipeHierarchicalSql: String = {
@@ -1310,12 +1323,12 @@ sh AS (
   SELECT DISTINCT doc_id, array_to_string(t[k:k+${n - 1}], ' ') AS $col
   FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-${n - 1}, 1))) AS u(k))"""
 
-  /** dd4's exact 3-shingle Jaccard counts over documents:
+  /** dd4's exact 3-shingle Jaccard counts over `src` (doc_id, text):
     * [[wordShingleCtes]], `sizes` = shingles per doc, `inter` = shingles
     * shared per doc pair (doc_a < doc_b).
     */
-  private[graft] def jaccardCountCtes: String =
-    s"""${wordShingleCtes(3, "shingle")},
+  private[graft] def jaccardCountCtes(src: String = "documents"): String =
+    s"""${wordShingleCtes(3, "shingle", src)},
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
 inter AS (
   SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
@@ -1332,13 +1345,14 @@ inter AS (
   FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id)
 WHERE jaccard >= 0.5"""
 
-  /** dd7's near-dup components (needs WITH RECURSIVE): the
+  /** dd7's near-dup components over `src` (needs WITH RECURSIVE): the
     * [[jaccardNearDupSql]] pairs `jp` as undirected `edges`, `reach` =
     * their transitive closure, `comp` (doc_id, component) = the least
-    * reachable id — min-label propagation's fixed point exactly.
+    * reachable id — min-label propagation's fixed point exactly. The
+    * curation oracles run it over their exact-dedup survivors.
     */
-  private[graft] def jaccardComponentCtes: String =
-    s"""$jaccardCountCtes,
+  private[graft] def jaccardComponentCtes(src: String = "documents"): String =
+    s"""${jaccardCountCtes(src)},
 jp AS (SELECT doc_a, doc_b FROM $jaccardNearDupSql),
 edges AS (
   SELECT doc_a AS a, doc_b AS b FROM jp

@@ -13,7 +13,7 @@ import graft.OracleSqlGen.{DocIdKeySql, DocRowKeySql, LineitemKeySql, apCte,
   jaccardComponentCtes, jaccardCountCtes, jaccardNearDupSql, keyRangeCte,
   lmAvgExpr, lmMeanCte, md5UnitSql, md5XorSql, mortonSql, plantedBoilerCte,
   quarterBoxCtes, queryCte, recallTail, spanGramCtes, spanRewriteSql,
-  splitCaseSql, tok, wordShingleCtes, zScaleSql}
+  splitCaseSql, tok, tokenSlicePairsCte, wordShingleCtes, zScaleSql}
 import graft.operators.{CorpusOps, Dedup, FileSkipping, Multimodal, Similarity,
   Sinks, TableQuality, TextAnalysis}
 
@@ -6755,12 +6755,7 @@ ORDER BY token_id"""
          FROM best WHERE rn = 1 ORDER BY doc_id"""
 
   private val rougeNgramCtes: String =
-    """pairs AS (
-           SELECT doc_id,
-             array_to_string(string_split_regex(trim(text), '\s+')[1:20], ' ') AS gen,
-             array_to_string(string_split_regex(trim(text), '\s+')[11:40], ' ') AS ref
-           FROM documents),
-         """ + rougeChainCtes
+    s"${tokenSlicePairsCte()},\n$rougeChainCtes"
 
   private val rougeNgramSelect: String =
     """         SELECT l.doc_id,
@@ -7709,11 +7704,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // the greedy best-match max, the P/R means and the harmonic F1 follow
     // in plain SQL with bit-identical doubles.
     "eval_bert_ngram" ->
-      """WITH pairs AS (
-           SELECT doc_id,
-             coalesce(array_to_string(string_split_regex(trim(text), '\s+')[1:20], ' '), '') AS gen,
-             coalesce(array_to_string(string_split_regex(trim(text), '\s+')[11:40], ' '), '') AS ref
-           FROM documents),
+      raw"""WITH ${tokenSlicePairsCte()},
          tok AS (
            SELECT doc_id,
              regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS gt,
@@ -7759,13 +7750,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // |distinct(ref toks) ∩ distinct(gen toks)| / |distinct(ref toks)|,
     // coherence = distinct/total over gen toks, pass = coverage >= 0.25
     "eval_judge_ngram" ->
-      """WITH pairs AS (
-           -- coalesce: DuckDB's array_to_string([]) is NULL, but a doc
-           -- shorter than the slice start means an EMPTY gen/ref, not NULL
-           SELECT doc_id,
-             coalesce(array_to_string(string_split_regex(trim(text), '\s+')[1:20], ' '), '') AS gen,
-             coalesce(array_to_string(string_split_regex(trim(text), '\s+')[11:40], ' '), '') AS ref
-           FROM documents),
+      raw"""WITH ${tokenSlicePairsCte()},
          tok AS (
            SELECT doc_id, gen,
              regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS gt,
@@ -8154,21 +8139,17 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // tokens carry no whitespace), per-order P/R micro-snapped before the
     // exact integer averages (the Bleu micro6 convention)
     "eval_chrf" ->
-      """WITH pairs AS (
-           SELECT doc_id,
-             array_to_string(string_split_regex(trim(text), '\s+')[1:20], '') AS g,
-             array_to_string(string_split_regex(trim(text), '\s+')[11:40], '') AS r
-           FROM documents),
+      raw"""WITH ${tokenSlicePairsCte("")},
          ns AS (SELECT UNNEST([1, 2, 3, 4]) AS n),
          cg AS (
            SELECT p.doc_id, ns.n,
-             UNNEST(list_transform(range(1, length(p.g) - ns.n + 2),
-               i -> substr(p.g, CAST(i AS INT), CAST(ns.n AS INT)))) AS gram
+             UNNEST(list_transform(range(1, length(p.gen) - ns.n + 2),
+               i -> substr(p.gen, CAST(i AS INT), CAST(ns.n AS INT)))) AS gram
            FROM pairs p CROSS JOIN ns),
          rgr AS (
            SELECT p.doc_id, ns.n,
-             UNNEST(list_transform(range(1, length(p.r) - ns.n + 2),
-               i -> substr(p.r, CAST(i AS INT), CAST(ns.n AS INT)))) AS gram
+             UNNEST(list_transform(range(1, length(p.ref) - ns.n + 2),
+               i -> substr(p.ref, CAST(i AS INT), CAST(ns.n AS INT)))) AS gram
            FROM pairs p CROSS JOIN ns),
          cc AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM cg GROUP BY 1, 2, 3),
          rcn AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM rgr GROUP BY 1, 2, 3),
@@ -8179,8 +8160,8 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
            GROUP BY 1, 2),
          grid AS (
            SELECT p.doc_id, ns.n,
-             greatest(length(p.g) - ns.n + 1, 0) AS ct,
-             greatest(length(p.r) - ns.n + 1, 0) AS rt
+             greatest(length(p.gen) - ns.n + 1, 0) AS ct,
+             greatest(length(p.ref) - ns.n + 1, 0) AS rt
            FROM pairs p CROSS JOIN ns),
          pn AS (
            SELECT g.doc_id, g.n, g.ct, g.rt, COALESCE(x.m, 0) AS m
@@ -8208,11 +8189,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
              ELSE ((2*b*10000 + bb) // (2*bb)) / 10000.0 END AS chrf_r
          FROM fin ORDER BY doc_id""",
     "eval_bleu_ngram" ->
-      """WITH pairs AS (
-           SELECT doc_id,
-             array_to_string(string_split_regex(trim(text), '\s+')[1:20], ' ') AS gen,
-             array_to_string(string_split_regex(trim(text), '\s+')[11:40], ' ') AS ref
-           FROM documents),
+      raw"""WITH ${tokenSlicePairsCte()},
          mt AS (
            SELECT doc_id,
              regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS ct,
@@ -8318,7 +8295,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
          WHERE cosine >= 0.45 ORDER BY id_a, id_b""",
     "dd4_jaccard_pairs" ->
-      s"""WITH $jaccardCountCtes
+      s"""WITH ${jaccardCountCtes()}
          SELECT doc_a, doc_b, jaccard FROM $jaccardNearDupSql
          ORDER BY doc_a, doc_b""",
     "dc1_decontam" -> dc1DecontamSql,
@@ -8393,7 +8370,7 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // sp4: the dd7 closure verbatim + sp1's split CASE keyed on the
     // component representative (singletons key on their own id)
     "sp4_component_split" ->
-      s"""WITH RECURSIVE $jaccardComponentCtes,
+      s"""WITH RECURSIVE ${jaccardComponentCtes()},
          k AS (
            SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS split_key
            FROM documents d LEFT JOIN comp c USING (doc_id)),
@@ -8504,11 +8481,11 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // as dd4; component = min reachable id. Mirrors min-label propagation's
     // fixed point exactly.
     "dd7_components" ->
-      s"""WITH RECURSIVE $jaccardComponentCtes
+      s"""WITH RECURSIVE ${jaccardComponentCtes()}
          SELECT doc_id, component FROM comp ORDER BY doc_id""",
     // dd8b: the dd7 closure + per-component argmax keeper (length, -id)
     "dd8b_dedup_best" ->
-      s"""WITH RECURSIVE $jaccardComponentCtes,
+      s"""WITH RECURSIVE ${jaccardComponentCtes()},
          scored AS (
            SELECT d.doc_id, length(d.text) AS n_chars, c.component
            FROM documents d LEFT JOIN comp c USING (doc_id)),
@@ -9745,30 +9722,12 @@ nkeep2 AS (
   WHERE fp NOT IN (SELECT md5(substr(text, 1, 100)) FROM exist)),
 nexact AS (SELECT g.* FROM ngated g JOIN nkeep2 USING (doc_id)),
 uni AS (SELECT doc_id, text FROM nexact UNION ALL SELECT doc_id, text FROM exist),
-utoks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM uni),
-ush AS (
-  SELECT DISTINCT doc_id, array_to_string(t[k:k+2], ' ') AS shingle
-  FROM utoks, LATERAL UNNEST(generate_series(1, greatest(len(t)-2, 1))) AS u(k)),
-usz AS (SELECT doc_id, COUNT(*) AS n FROM ush GROUP BY 1),
-uinter AS (
-  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
-  FROM ush x JOIN ush y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2),
-ujp AS (
-  SELECT doc_a, doc_b FROM (
-    SELECT doc_a, doc_b, round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-    FROM uinter JOIN usz sa ON doc_a = sa.doc_id JOIN usz sb ON doc_b = sb.doc_id)
-  WHERE jaccard >= 0.5),
-uedges AS (SELECT doc_a AS a, doc_b AS b FROM ujp UNION SELECT doc_b, doc_a FROM ujp),
-ureach AS (
-  SELECT DISTINCT a AS src, a AS dst FROM uedges
-  UNION
-  SELECT r.src, e.b FROM ureach r JOIN uedges e ON r.dst = e.a),
-ulabel AS (SELECT src AS doc_id, MIN(dst) AS component FROM ureach GROUP BY 1),
-contam AS (SELECT DISTINCT component FROM ulabel WHERE $existPred),
+${jaccardComponentCtes("uni")},
+contam AS (SELECT DISTINCT component FROM comp WHERE $existPred),
 ulosers AS (
-  SELECT doc_id FROM ulabel WHERE component IN (SELECT component FROM contam)
+  SELECT doc_id FROM comp WHERE component IN (SELECT component FROM contam)
   UNION
-  SELECT doc_id FROM ulabel WHERE component <> doc_id)
+  SELECT doc_id FROM comp WHERE component <> doc_id)
 SELECT doc_id, lang_pred, n_tokens, n_chars, stopword_ratio
 FROM nexact WHERE doc_id NOT IN (SELECT doc_id FROM ulosers)
 ORDER BY doc_id"""
@@ -9779,29 +9738,11 @@ ORDER BY doc_id"""
     * future composed-curation oracles.
     */
   private def curationChainCtes: String =
-    """ckeep AS (
+    s"""ckeep AS (
   SELECT MIN(doc_id) AS doc_id FROM cgated GROUP BY md5(substr(text, 1, 100))),
 cexact AS (SELECT g.* FROM cgated g JOIN ckeep USING (doc_id)),
-ctoks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM cexact),
-csh AS (
-  SELECT DISTINCT doc_id, array_to_string(t[k:k+2], ' ') AS shingle
-  FROM ctoks, LATERAL UNNEST(generate_series(1, greatest(len(t)-2, 1))) AS u(k)),
-csizes AS (SELECT doc_id, COUNT(*) AS n FROM csh GROUP BY 1),
-cinter AS (
-  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
-  FROM csh x JOIN csh y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2),
-cjp AS (
-  SELECT doc_a, doc_b FROM (
-    SELECT doc_a, doc_b, round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-    FROM cinter JOIN csizes sa ON doc_a = sa.doc_id JOIN csizes sb ON doc_b = sb.doc_id)
-  WHERE jaccard >= 0.5),
-cedges AS (SELECT doc_a AS a, doc_b AS b FROM cjp UNION SELECT doc_b, doc_a FROM cjp),
-creach AS (
-  SELECT DISTINCT a AS src, a AS dst FROM cedges
-  UNION
-  SELECT r.src, e.b FROM creach r JOIN cedges e ON r.dst = e.a),
-closers AS (
-  SELECT src AS doc_id FROM creach GROUP BY src HAVING MIN(dst) <> src)"""
+${jaccardComponentCtes("cexact")},
+closers AS (SELECT doc_id FROM comp WHERE component <> doc_id)"""
 
   private def curationSql: String = {
     s"""WITH RECURSIVE ${gateCtes()},

@@ -657,8 +657,9 @@ object Main {
           case Some(m) => s"$out/${graft.core.Text.safeName(m)}"
           case None => out
         }
-        // one line for strategy + write: the collapse and level loops run
-        // jobs while the plan is built, the rest runs inside the write
+        // one line for strategy + write: the map-reduce and critique
+        // collapse loops run jobs while the plan is built, the rest runs
+        // inside the write
         timed(s"$approach$tag summarize + write summaries") {
           val summaries = approach match {
             case "truncated" => strategies.truncated(docs)

@@ -11,8 +11,8 @@ import graft.core.{Splitter, Text, TreeNode}
   * (runners/run_summarization_ollama_mapreduce_hierarchical.py:202-239,
   * data_1/document_tree.json). Spark has no recursive datatype, so trees
   * live as adjacency-list rows (doc_id, node_id, parent_id, depth,
-  * node_type, text, ord) and recursion becomes bounded driver loops over
-  * the depth column.
+  * node_type, text, ord); a consumer that recurses (Q5) regroups one
+  * doc's rows and walks them in plain Scala.
   */
 object TreeOps {
 
@@ -99,7 +99,8 @@ object TreeOps {
 
   /** Deterministic synthetic tree for corpora without structure metadata:
     * Document -> Header per group of `sentencesPerSection` sentences ->
-    * one Paragraph per sentence. Lets Q5 run on any (doc_id, text) corpus.
+    * one Paragraph per sentence. Lets Q5 run on any (doc_id, text) corpus;
+    * a doc with no sentences (null, empty or blank text) is a lone root.
     */
   def synthesize(docs: DataFrame, sentencesPerSection: Int = 3): DataFrame = {
     val spark = docs.sparkSession
@@ -107,7 +108,7 @@ object TreeOps {
     docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (docId, text) =>
-        val sents = Text.sentences(text)
+        val sents = if (text == null) Vector.empty else Text.sentences(text)
         val b = Vector.newBuilder[TreeNode]
         b += TreeNode(docId, 0L, -1L, 0, "Document", s"doc_$docId", 0)
         var nid = 1L

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.PipelineConfig
 import graft.llm.ExtractiveSummarizer
-import graft.operators.{Curation, Dedup, TextAnalysis}
-import graft.strategy.Strategies
+import graft.operators.{Curation, Dedup, TextAnalysis, TreeOps}
+import graft.strategy.{Hierarchical, Strategies}
 
 /** Adversarial-input sweep: every operator family over a corpus of the
   * rows a 100 TB crawl actually contains — null text, empty, blank, a
@@ -154,10 +154,13 @@ class HostileCorpusSpec extends AnyFunSuite {
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("doc_id").as[Long].collect().toSet
     assert(ids(strategies.truncated(hostile)) == (1L to 8L).toSet)
-    // no chunks, no row: the null, empty and blank docs (1-3) are absent
+    // no chunks (for hierarchical: no sentences), no row: the null, empty
+    // and blank docs (1-3) are absent
     for ((name, out) <- Seq("mapreduce" -> strategies.mapReduce(hostile),
         "critique" -> strategies.mapReduceCritique(hostile),
-        "iterative" -> strategies.iterative(hostile)))
+        "iterative" -> strategies.iterative(hostile),
+        "hierarchical" -> new Hierarchical(ExtractiveSummarizer, cfg)
+          .summarize(TreeOps.synthesize(hostile))))
       assert(ids(out) == (4L to 8L).toSet, name)
   }
 

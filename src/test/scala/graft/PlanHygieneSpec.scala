@@ -68,8 +68,7 @@ class PlanHygieneSpec extends AnyFunSuite {
     // checkpointed bruteForceTopK subtree (the ss1 shape, spec-pinned)
     "ss11_mmr_topk", "ev9_funnel", "ev10_retention",
     "sh1_shuffle",
-    "pipe_mapreduce", "pipe_critique", "pipe_iterative", "pipe_hierarchical",
-    "pipe_truncated", "s3_tree_ingest", "ss3_ivf_topk", "ss3_recall",
+    "pipe_mapreduce", "pipe_critique", "s3_tree_ingest", "ss3_ivf_topk", "ss3_recall",
     "ss2_recall", "dd6b_recall", "eval_pair_metrics", "eval_summary_stats",
     "eval_judge_scores", "eval_judge_stats", "eval_bertscore",
     // k-means trains (collects centroids) at construction; plan shape

@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{BinPack, PipelineConfig, Text}
+import graft.core.{BinPack, PipelineConfig, Text, TreeNode}
 import graft.eval.Metrics
 import graft.llm.{ExtractiveSummarizer, IdentitySummarizer, Summarizer}
 import graft.operators.{CorpusOps, TreeOps}
@@ -80,6 +80,44 @@ class StrategiesSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toMap
     assert(out.keySet == Set(1L, 2L, 3L))
     assert(out.values.forall(_.nonEmpty))
+  }
+
+  // doc `id`, three levels deep: Part > Chapter > Paragraph
+  private def deepTree(id: Long): Seq[TreeNode] = Seq(
+    TreeNode(id, 0L, -1L, 0, "Document", s"doc_$id", 0),
+    TreeNode(id, 1L, 0L, 1, "Header", "Part", 0),
+    TreeNode(id, 2L, 1L, 2, "Header", "Chapter", 0),
+    TreeNode(id, 3L, 2L, 3, "Paragraph", "q two three", 0))
+
+  test("Q5 hierarchical: a doc collapses by its own height, whatever its neighbours' depth") {
+    // doc 1 is one level deep and ends in a childless Header
+    val shallow = Seq(
+      TreeNode(1L, 0L, -1L, 0, "Document", "doc_1", 0),
+      TreeNode(1L, 1L, 0L, 1, "Paragraph", "p one", 0),
+      TreeNode(1L, 2L, 0L, 1, "Header", "Appendix", 1))
+    def run(ns: Seq[TreeNode]): Map[Long, String] =
+      new Hierarchical(TaggingSummarizer, cfg).summarize(ns.toDF())
+        .as[(Long, String)].collect().toMap
+    val cap = math.max(cfg.tokenMax * 3 / 4, cfg.maxSummaryTokens)
+    def sum(t: String) = TaggingSummarizer.summarize(Hierarchical.truncate(t, cap), cfg.maxSummaryTokens)
+    val both = run(shallow ++ deepTree(2L))
+    // the deepest level keeps its text, a Header there included
+    assert(both(1L) == Hierarchical.squeeze(sum("p one\n\nAppendix")))
+    assert(both(1L) == run(shallow)(1L))
+    val chapter = "Chapter\n\n" + sum("q two three")
+    assert(both(2L) == Hierarchical.squeeze(sum("Part\n\n" + sum(chapter))))
+  }
+
+  test("Q5 fold helpers equal the Column truncate and squeeze on hostile text") {
+    val texts = Seq("\nleading newline", "trailing newline\n", "tabs\tbetween\t\twords",
+      "nbsp\u00a0inside a token", "", "  spaced  out  ", null,
+      (1 to 12).map(i => s"t$i").mkString(" "))
+    val k = 5
+    val got = texts.toDF("t").select(
+      graft.functions.truncateTokens(col("t"), k),
+      graft.functions.squeezeWhitespace(col("t")))
+      .as[(String, String)].collect().toSeq
+    assert(got == texts.map(t => (Hierarchical.truncate(t, k), Hierarchical.squeeze(t))))
   }
 
   test("collapse loop terminates and respects the token budget shape") {
@@ -156,6 +194,21 @@ class StrategiesSpec extends AnyFunSuite {
     assert(calls.size == chunks.values.map(_.size).sum + replay.values.map(_._2.sum).sum + chunks.size)
   }
 
+  test("call-count contract: hierarchical calls = non-Paragraph nodes above each doc's " +
+      "deepest level + docs, none twice") {
+    val nodes = TreeOps.synthesize(docs).as[TreeNode].collect().toSeq ++ deepTree(7L)
+    val s = new CountingSummarizer(TaggingSummarizer)
+    val out = new Hierarchical(s, cfg).summarize(nodes.toDF()).as[(Long, String)].collect()
+    assert(out.map(_._1).sorted.toSeq == Seq(1L, 2L, 3L, 7L))
+    val twice = s.calls.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
+    assert(twice.isEmpty, s"summarized twice: $twice")
+    val expected = nodes.groupBy(_.doc_id).values.map { ns =>
+      val h = ns.map(_.depth).max
+      ns.count(n => n.depth >= 1 && n.depth < h && n.node_type != "Paragraph") + 1
+    }.sum
+    assert(s.calls.size == expected)
+  }
+
   test("collapse cap: maxCollapseRounds = 1 stops after one round, then one final reduce") {
     val docs = wordDocs(1L -> 36, 3L -> 12)
     val chunks = chunkTexts(docs)
@@ -176,28 +229,61 @@ class StrategiesSpec extends AnyFunSuite {
     assert(capped._3.map(Text.tokenCount).sum > collapseCfg.tokenMax)
   }
 
-  test("plan shape: iterative and map-reduce plan no shuffle and keep the docs' P partitions") {
+  /** The shuffles of `df`'s plan, those behind adaptive wrappers and cached
+    * relations (a collapse loop's persisted state) included.
+    */
+  private def shuffles(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    // every node, the plans behind adaptive wrappers and cached relations
-    // (the collapse loop's persisted state) included
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => nodes(q.plan)
       case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
       case _ => p.children.flatMap(nodes)
     })
+    nodes(df.queryExecution.executedPlan).collect { case x: ShuffleExchangeExec => x }
+  }
+
+  test("plan shape: iterative and map-reduce plan no shuffle and keep the docs' P partitions") {
     val p = 3 // not the session's 4 shuffle partitions
     val rows = wordRows(1L -> 36, 2L -> 60, 3L -> 12, 4L -> 4, 5L -> 30)
     val docs = spark.sparkContext.parallelize(rows, p).toDF("doc_id", "text")
     val st = new Strategies(ExtractiveSummarizer, cfg = collapseCfg)
     for ((name, out) <- Seq("iterative" -> st.iterative(docs), "mapreduce" -> st.mapReduce(docs))) {
-      val shuffles = nodes(out.queryExecution.executedPlan).collect { case x: ShuffleExchangeExec => x }
-      assert(shuffles.isEmpty, s"$name plans a shuffle:\n${out.queryExecution.executedPlan}")
+      assert(shuffles(out).isEmpty, s"$name plans a shuffle:\n${out.queryExecution.executedPlan}")
       assert(out.rdd.getNumPartitions == p, name)
       assert(out.select("doc_id").as[Long].collect().sorted.toSeq == rows.map(_._1), name)
+    }
+  }
+
+  test("plan shape: hierarchical plans one shuffle and runs no job while it is built") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("hierarchical-build", "build")
+      val out = new Hierarchical(ExtractiveSummarizer, cfg).summarize(TreeOps.synthesize(docs))
+      // events arrive in order: once a later sentinel job is seen, every
+      // job the build started has been seen too
+      sc.setJobGroup("sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("sentinel"))
+      assert(!groups.contains("hierarchical-build"), "building the frame ran a job")
+      assert(shuffles(out).size == 1, out.queryExecution.executedPlan)
+      assert(out.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
     }
   }
 
