@@ -42,13 +42,18 @@ private[graft] object OracleSqlGen {
     * DuckDB's array_to_string([]) is NULL, but a doc shorter than the
     * slice start means an EMPTY gen/ref, as in Spark.
     */
-  private[graft] def tokenSlicePairsCte(sep: String = " "): String = {
-    def slice(r: String) =
-      s"coalesce(array_to_string(string_split_regex(trim(text), '\\s+')[$r], '$sep'), '')"
+  private[graft] def tokenSlicePairsCte(sep: String = " "): String =
     s"""pairs AS (
-  SELECT doc_id, ${slice("1:20")} AS gen, ${slice("11:40")} AS ref
+  SELECT doc_id, ${tokenSlice("1:20", sep)} AS gen, ${refSlice(sep)} AS ref
   FROM documents)"""
-  }
+
+  /** The ref side of [[tokenSlicePairsCte]] alone (`text` tokens 11-40),
+    * for an oracle that pairs the ref with other summaries.
+    */
+  private[graft] def refSlice(sep: String = " "): String = tokenSlice("11:40", sep)
+
+  private def tokenSlice(r: String, sep: String): String =
+    s"coalesce(array_to_string(string_split_regex(trim(text), '\\s+')[$r], '$sep'), '')"
 
   /** Unicode-lowercase metric tokens of a SQL string expr (Text.metricTokens). */
   private def mtok(x: String): String =

@@ -12,7 +12,7 @@ import graft.OracleSqlGen.{DocIdKeySql, DocRowKeySql, LineitemKeySql, apCte,
   cosineTopk, countXorSql, domainSql, exactCosineCtes, exactSumSql, flaggedCte,
   jaccardComponentCtes, jaccardCountCtes, jaccardNearDupSql, keyRangeCte,
   lmAvgExpr, lmMeanCte, md5UnitSql, md5XorSql, mortonSql, plantedBoilerCte,
-  quarterBoxCtes, queryCte, recallTail, spanGramCtes, spanRewriteSql,
+  quarterBoxCtes, queryCte, recallTail, refSlice, spanGramCtes, spanRewriteSql,
   splitCaseSql, tok, tokenSlicePairsCte, wordShingleCtes, zScaleSql}
 import graft.operators.{CorpusOps, Dedup, FileSkipping, Multimodal, Similarity,
   Sinks, TableQuality, TextAnalysis}
@@ -6054,7 +6054,7 @@ q7_lead AS (
   SELECT doc_id, coalesce(array_to_string(string_split_regex(trim(txt), '\\s+')[1:$b], ' '), '') AS summary
   FROM q7_in),
 q7_ref AS (
-  SELECT doc_id, coalesce(array_to_string(string_split_regex(trim(text), '\\s+')[11:40], ' '), '') AS ref
+  SELECT doc_id, ${refSlice()} AS ref
   FROM documents),
 pairs AS (
   SELECT e.doc_id * 4 + 0 AS doc_id, e.summary AS gen, r.ref

@@ -21,19 +21,31 @@ object Rouge {
     Score(p, r, f)
   }
 
-  private def ngramCounts(tokens: Array[String], n: Int): Map[Seq[String], Int] =
-    if (tokens.length < n) Map.empty
-    else tokens.sliding(n).map(_.toSeq).toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+  /** n-gram multiset; a gram is its tokens joined by ' ', which no metric
+    * token contains.
+    */
+  private def ngramCounts(tokens: Array[String], n: Int): collection.Map[String, Int] = {
+    val m = collection.mutable.HashMap.empty[String, Int]
+    tokens.iterator.sliding(n).withPartial(false).foreach { g =>
+      val k = g.mkString(" ")
+      m.update(k, m.getOrElse(k, 0) + 1)
+    }
+    m
+  }
 
-  /** ROUGE-N: n-gram multiset overlap F-measure. */
-  def rougeN(candidate: String, reference: String, n: Int): Score = {
-    val c = Text.metricTokens(candidate)
-    val r = Text.metricTokens(reference)
+  private def rougeN(c: Array[String], r: Array[String], n: Int): Score = {
     val cc = ngramCounts(c, n)
     val rc = ngramCounts(r, n)
     val overlap = cc.iterator.map { case (g, k) => math.min(k, rc.getOrElse(g, 0)) }.sum
     f1(overlap, math.max(0, c.length - n + 1), math.max(0, r.length - n + 1))
   }
+
+  private def rougeL(c: Array[String], r: Array[String]): Score =
+    f1(lcsLength(c, r), c.length, r.length)
+
+  /** ROUGE-N: n-gram multiset overlap F-measure. */
+  def rougeN(candidate: String, reference: String, n: Int): Score =
+    rougeN(Text.metricTokens(candidate), Text.metricTokens(reference), n)
 
   def rouge1(c: String, r: String): Score = rougeN(c, r, 1)
   def rouge2(c: String, r: String): Score = rougeN(c, r, 2)
@@ -41,17 +53,18 @@ object Rouge {
   /** ROUGE-L: LCS-based F-measure over whole-text token sequences
     * (sentence-level variant, matching `rouge_scorer`'s `rougeL`).
     */
-  def rougeL(candidate: String, reference: String): Score = {
-    val c = Text.metricTokens(candidate)
-    val r = Text.metricTokens(reference)
-    f1(lcsLength(c, r), c.length, r.length)
-  }
+  def rougeL(candidate: String, reference: String): Score =
+    rougeL(Text.metricTokens(candidate), Text.metricTokens(reference))
 
   /** Classic O(n*m) LCS with a rolling row (summaries are short — hundreds
     * of tokens — so quadratic is fine; bounded memory).
     */
   private[core] def lcsLength(a: Array[String], b: Array[String]): Int = {
     if (a.isEmpty || b.isEmpty) return 0
+    // the quadratic loop compares token ids, not strings
+    val ids = collection.mutable.HashMap.empty[String, Int]
+    val x = a.map(ids.getOrElseUpdate(_, ids.size))
+    val y = b.map(ids.getOrElseUpdate(_, ids.size))
     var prev = new Array[Int](b.length + 1)
     var curr = new Array[Int](b.length + 1)
     var i = 0
@@ -59,7 +72,7 @@ object Rouge {
       var j = 0
       while (j < b.length) {
         curr(j + 1) =
-          if (a(i) == b(j)) prev(j) + 1
+          if (x(i) == y(j)) prev(j) + 1
           else math.max(prev(j + 1), curr(j))
         j += 1
       }
@@ -70,7 +83,12 @@ object Rouge {
     prev(b.length)
   }
 
-  /** All three F1s at once (the per-pair metric row M5). */
-  def all(candidate: String, reference: String): (Double, Double, Double) =
-    (rouge1(candidate, reference).f, rouge2(candidate, reference).f, rougeL(candidate, reference).f)
+  /** All three F1s at once (the per-pair metric row M5), each side
+    * tokenized once.
+    */
+  def all(candidate: String, reference: String): (Double, Double, Double) = {
+    val c = Text.metricTokens(candidate)
+    val r = Text.metricTokens(reference)
+    (rougeN(c, r, 1).f, rougeN(c, r, 2).f, rougeL(c, r).f)
+  }
 }

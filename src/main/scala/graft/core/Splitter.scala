@@ -118,9 +118,10 @@ object Splitter {
       lengthFn: LengthFn): Vector[String] = {
     val sepLen = lengthFn(separator)
     val docs = Vector.newBuilder[String]
-    val cur = scala.collection.mutable.Queue.empty[String]
+    // queued pieces with their lengths, so a dequeue needs no re-count
+    val cur = scala.collection.mutable.Queue.empty[(String, Int)]
     var total = 0
-    def joined: String = cur.mkString(separator).trim
+    def joined: String = cur.iterator.map(_._1).mkString(separator).trim
     splits.foreach { d =>
       val dLen = lengthFn(d)
       if (total + dLen + (if (cur.nonEmpty) sepLen else 0) > chunkSize && cur.nonEmpty) {
@@ -130,11 +131,11 @@ object Splitter {
         while (cur.nonEmpty &&
                (total > overlap ||
                 (total + dLen + (if (cur.nonEmpty) sepLen else 0) > chunkSize && total > 0))) {
-          total -= lengthFn(cur.head) + (if (cur.size > 1) sepLen else 0)
+          total -= cur.head._2 + (if (cur.size > 1) sepLen else 0)
           cur.dequeue()
         }
       }
-      cur += d
+      cur += d -> dLen
       total += dLen + (if (cur.size > 1) sepLen else 0)
     }
     val last = joined

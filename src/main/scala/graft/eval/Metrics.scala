@@ -133,8 +133,7 @@ object Metrics {
       judge: graft.llm.Judge = graft.llm.CoverageJudge()): DataFrame = {
     val judgeUdf = udf { (gen: String, ref: String) =>
       try {
-        val verdict = judge.critique(gen, ref)
-        val (corr, coh) = judge.scores(gen, ref)
+        val (verdict, corr, coh) = judge.assess(gen, ref)
         Option((verdict, verdict.contains(graft.llm.Judge.NoIssues), corr, coh))
       } catch { case _: Exception => None }
     }

@@ -127,6 +127,16 @@ trait Judge extends Serializable {
     val pass = if (critique(summary, source).contains(Judge.NoIssues)) 1.0 else 0.0
     (pass, pass)
   }
+
+  /** One pair's verdict and rubric scores: [[critique]], then [[scores]].
+    * Judges that analyze both texts should override to do it once. Must
+    * agree exactly with the two.
+    */
+  def assess(summary: String, source: String): (String, Double, Double) = {
+    val verdict = critique(summary, source)
+    val (correctness, coherence) = scores(summary, source)
+    (verdict, correctness, coherence)
+  }
 }
 
 object Judge {
@@ -134,15 +144,6 @@ object Judge {
 }
 
 final case class CoverageJudge(minCoverage: Double = 0.25) extends Judge {
-  private def coverageOf(srcToks: Set[String], summary: String): Double = {
-    val sumToks = Text.metricTokens(summary).toSet
-    if (srcToks.isEmpty || summary.trim.isEmpty) 0.0
-    else srcToks.count(sumToks.contains).toDouble / srcToks.size
-  }
-
-  private def coverage(summary: String, source: String): Double =
-    coverageOf(Text.metricTokens(source).toSet, summary)
-
   override def critique(summary: String, source: String): String =
     preparedCritique(source)(summary)
 
@@ -156,16 +157,16 @@ final case class CoverageJudge(minCoverage: Double = 0.25) extends Judge {
     */
   override def preparedCritique(source: String): String => String = {
     val srcToks = Text.metricTokens(source).toSet
-    (summary: String) => {
-      if (summary.trim.isEmpty) "empty summary"
-      else {
-        val hits = srcToks.count(Text.metricTokens(summary).toSet.contains)
-        if (srcToks.nonEmpty && hits.toDouble / srcToks.size >= minCoverage)
-          Judge.NoIssues
-        else s"low source coverage: $hits/${srcToks.size} < $minCoverage"
-      }
-    }
+    summary => verdict(summary, srcToks, hits(srcToks, Text.metricTokens(summary)))
   }
+
+  private def hits(srcToks: Set[String], sumToks: Array[String]): Int =
+    srcToks.count(sumToks.toSet.contains)
+
+  private def verdict(summary: String, srcToks: Set[String], n: Int): String =
+    if (summary.trim.isEmpty) "empty summary"
+    else if (srcToks.nonEmpty && n.toDouble / srcToks.size >= minCoverage) Judge.NoIssues
+    else s"low source coverage: $n/${srcToks.size} < $minCoverage"
 
   /** Correctness = source-vocabulary coverage fraction; coherence =
     * lexical-diversity proxy (distinct / total tokens — a repetitive
@@ -173,8 +174,18 @@ final case class CoverageJudge(minCoverage: Double = 0.25) extends Judge {
     * reference rubrics' shape and range.
     */
   override def scores(summary: String, source: String): (Double, Double) = {
+    val (_, correctness, coherence) = assess(summary, source)
+    (correctness, coherence)
+  }
+
+  /** Each text tokenized once for the verdict and both scores. */
+  override def assess(summary: String, source: String): (String, Double, Double) = {
+    val srcToks = Text.metricTokens(source).toSet
     val toks = Text.metricTokens(summary)
+    val n = hits(srcToks, toks)
+    val correctness =
+      if (srcToks.isEmpty || summary.trim.isEmpty) 0.0 else n.toDouble / srcToks.size
     val coherence = if (toks.isEmpty) 0.0 else toks.distinct.length.toDouble / toks.length
-    (coverage(summary, source), coherence)
+    (verdict(summary, srcToks, n), correctness, coherence)
   }
 }

@@ -118,18 +118,29 @@ object Sinks {
   /** S5: nested JSON evaluation report — summary statistics (long-format
     * stats rows) + similarity histogram + per-pair details, one UTF-8 JSON
     * document. Aggregate inputs are tiny by construction (stats rows =
-    * metrics x 4, histogram = 3 buckets); `details` streams through
-    * toJSON without materializing the corpus on the driver beyond the
-    * document itself (cap with `maxDetails`).
+    * metrics x 4, histogram = 3 buckets); `details` is capped at
+    * `maxDetails` rows, in its own order.
+    *
+    * The three sections are collected as ONE query: a union of their rows,
+    * each rendered by `to_json(struct(all columns))` (toJSON's generator,
+    * so null fields are dropped alike) and tagged with (section, position).
+    * One plan lets AQE run the branches' independent stages together and
+    * reuse their identical exchanges, where three collects planned and
+    * computed the shared inputs three times.
     */
   def writeJsonReport(stats: DataFrame, histogram: DataFrame, details: DataFrame,
       path: String, maxDetails: Int = 10000): Unit = {
-    def rowsJson(df: DataFrame): String =
-      df.toJSON.collect().mkString("[", ",", "]")
+    val sections = Seq(stats, histogram, details.limit(maxDetails))
+    val rows = sections.zipWithIndex.map { case (df, i) =>
+      df.select(lit(i).as("section"), monotonically_increasing_id().as("pos"),
+        to_json(struct(df.columns.toIndexedSeq.map(c => df.col(s"`$c`")): _*)).as("json"))
+    }.reduce(_ union _).collect().sortBy(r => (r.getInt(0), r.getLong(1)))
+    def rowsJson(i: Int): String =
+      rows.iterator.filter(_.getInt(0) == i).map(_.getString(2)).mkString("[", ",", "]")
     val json =
-      s"""{"summary_statistics":${rowsJson(stats)},""" +
-        s""""similarity_distribution":${rowsJson(histogram)},""" +
-        s""""detailed_results":${rowsJson(details.limit(maxDetails))}}"""
+      s"""{"summary_statistics":${rowsJson(0)},""" +
+        s""""similarity_distribution":${rowsJson(1)},""" +
+        s""""detailed_results":${rowsJson(2)}}"""
     val p = java.nio.file.Paths.get(path)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.write(p, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -2,7 +2,8 @@ package graft.strategy
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.functions.{col, collect_list, struct}
 
 import graft.core.{PipelineConfig, TreeNode}
 import graft.llm.Summarizer
@@ -10,11 +11,17 @@ import graft.llm.Summarizer
 /** Q5 Hierarchical strategy (SURVEY.md §2.3; reference:
   * runners/run_summarization_ollama_mapreduce_hierarchical.py:277-315).
   *
-  * Like the reference, one document's tree is collapsed at a time: one
-  * `groupByKey(doc_id)` brings a doc's adjacency-list nodes together and a
-  * plain-Scala walk collapses them bottom-up. With h the doc's deepest
-  * depth, every non-Paragraph node at depth 1..h-1 becomes `title + "\n\n"
-  * + summarize(truncate(children))`, its collapsed children joined by
+  * Like the reference, one document's tree is collapsed at a time. One
+  * shuffle spreads the adjacency-list nodes over `defaultParallelism` hash
+  * partitions of `doc_id`, so every core folds its own docs: the count is
+  * explicit because AQE never coalesces a `REPARTITION_BY_NUM` exchange,
+  * and would fold the tree's small shuffle into one task otherwise. A
+  * `groupBy(doc_id)`, which that hash partitioning already satisfies,
+  * gathers each doc's nodes in a hash aggregate: no second shuffle, and
+  * no per-task sort buffer. A plain-Scala walk collapses each doc's nodes
+  * bottom-up. With h the doc's deepest depth, every non-Paragraph node at
+  * depth 1..h-1 becomes `title + "\n\n" + summarize(truncate(children))`,
+  * its collapsed children joined by
   * "\n\n" in (ord, node_id) order (subtree replacement :232-239, title
   * preservation :250-271, empty bodies :255-258); Paragraphs and depth-h
   * nodes keep their text. The summary is the squeezed summarize of the
@@ -60,9 +67,13 @@ final class Hierarchical(
 
   /** Run the full bottom-up collapse; returns (doc_id, summary). */
   def summarize(nodes: DataFrame): DataFrame = {
-    import nodes.sparkSession.implicits._
-    nodes.as[TreeNode].groupByKey(_.doc_id)
-      .flatMapGroups((id, it) => collapse(it.toVector).map(id -> _))
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    val fields = Encoders.product[TreeNode].schema.fieldNames.toIndexedSeq.map(col)
+    nodes.repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+      .groupBy("doc_id").agg(collect_list(struct(fields: _*)))
+      .as[(Long, Seq[TreeNode])]
+      .flatMap { case (id, doc) => collapse(doc).map(id -> _) }
       .toDF("doc_id", "summary")
   }
 }

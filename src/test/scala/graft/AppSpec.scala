@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -644,6 +646,61 @@ class AppSpec extends AnyFunSuite {
     assert(parsed.get("summary_statistics").get(0).get("metric").asText == "m")
     assert(parsed.get("similarity_distribution").get(0).get("bucket").asText == "high")
     assert(parsed.get("detailed_results").size() == 1)
+  }
+
+  test("Sinks.writeJsonReport collects one query, byte-identical to three toJSON collects") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val notes = Seq("Tiếng Việt", "quote \" and \\ backslash", "emoji 😀", null, "tab\there")
+    val metrics = (1L to 30L).reverse.map { i =>
+      (i, if (i % 7 == 0) None else Some(((i * 37) % 100) / 100.0),
+        if (i % 5 == 0) None else Some(i / 31.0), notes((i % notes.size).toInt))
+    }.toDF("doc_id", "semantic_similarity", "rouge1_f", "note").repartition(3)
+    val stats = graft.eval.Metrics.summaryStats(metrics, Seq("semantic_similarity", "rouge1_f"))
+    val hist = graft.eval.Metrics.similarityHistogram(metrics)
+    val details = metrics.orderBy("doc_id")
+    val maxDetails = 12
+    def threeCollects: String = {
+      def rowsJson(df: org.apache.spark.sql.DataFrame): String =
+        df.toJSON.collect().mkString("[", ",", "]")
+      s"""{"summary_statistics":${rowsJson(stats)},""" +
+        s""""similarity_distribution":${rowsJson(hist)},""" +
+        s""""detailed_results":${rowsJson(details.limit(maxDetails))}}"""
+    }
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
+          started.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val path = tmpDir("graft_rep1") + "/r.json"
+    spark.sparkContext.addSparkListener(listener)
+    val expected = try {
+      val legacy = threeCollects
+      // listener events arrive in order, so the executions seen between
+      // the two sentinels are the report's
+      Seq(1).toDF("report_start").collect()
+      Sinks.writeJsonReport(stats, hist, details, path, maxDetails)
+      Seq(1).toDF("report_end").collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.asScala.exists(_.contains("report_end")) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val report = started.asScala.toSeq.dropWhile(!_.contains("report_start")).drop(1)
+        .takeWhile(!_.contains("report_end"))
+      assert(report.size == 1, s"the report ran ${report.size} SQL executions")
+      legacy
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val got = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
+    assert(got == expected)
+    assert(got.contains("Tiếng Việt") && got.contains("😀"))
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(got)
+    val ids = (0 until maxDetails).map(i => parsed.get("detailed_results").get(i).get("doc_id").asLong)
+    assert(ids == (1L to maxDetails.toLong))
+    // null fields are dropped, as toJSON drops them
+    assert(!parsed.get("detailed_results").get(6).has("semantic_similarity"))
   }
 
   test("CLI publish: atomic manifest publish + --check validation gate") {

@@ -5,6 +5,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -232,11 +233,10 @@ class StrategiesSpec extends AnyFunSuite {
   /** The shuffles of `df`'s plan, those behind adaptive wrappers and cached
     * relations (a collapse loop's persisted state) included.
     */
-  private def shuffles(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => nodes(q.plan)
@@ -280,11 +280,26 @@ class StrategiesSpec extends AnyFunSuite {
       assert(groups.contains("sentinel"))
       assert(!groups.contains("hierarchical-build"), "building the frame ran a job")
       assert(shuffles(out).size == 1, out.queryExecution.executedPlan)
+      // an explicit-count repartition, which AQE leaves uncoalesced
+      val exchange = shuffles(out).head
+      assert(exchange.shuffleOrigin == REPARTITION_BY_NUM, exchange)
+      assert(exchange.outputPartitioning.numPartitions == sc.defaultParallelism, exchange)
       assert(out.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("plan shape: hierarchical folds its docs on defaultParallelism partitions under AQE") {
+    // AQE would coalesce the tree's small shuffle into one task
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val rows = (1L to 6L).map(id => id -> (0 until 12 + 5 * id.toInt)
+      .map(i => s"d${id}w$i" + (if (i % 6 == 5) "." else "")).mkString(" "))
+    val out = new Hierarchical(ExtractiveSummarizer, cfg)
+      .summarize(TreeOps.synthesize(rows.toDF("doc_id", "text")))
+    assert(out.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    assert(out.select("doc_id").as[Long].collect().sorted.toSeq == rows.map(_._1))
   }
 
   test("golden pin: strategy outputs are byte-stable across versions") {

@@ -134,4 +134,103 @@ class CoreProps extends AnyFunSuite {
       assert(!cleaned.toLowerCase.contains("<think>"))
     }
   }
+
+  // ---- the scanning tokenizers equal their regex forms exactly
+
+  private val wsRe = java.util.regex.Pattern.compile("\\s+")
+  private val metricRe = java.util.regex.Pattern.compile("[^\\p{L}\\p{N}]+")
+  private def regexWsTokens(s: String): Array[String] = {
+    val t = s.trim
+    if (t.isEmpty) Array.empty else wsRe.split(t)
+  }
+  private def regexTruncate(s: String, k: Int): String = {
+    val toks = regexWsTokens(s)
+    if (toks.length <= k) s.trim else toks.take(k).mkString(" ")
+  }
+  private def regexMetricTokens(s: String): Array[String] =
+    metricRe.split(s.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
+
+  private val vietnamese = Seq("Tiếng", "Việt", "được", "nghiêng", "Đà", "Nẵng", "quyết định", "Hà Nội")
+  /** Controls <= U+0020 (the ones `\s` splits on and the ones it does
+    * not), NBSP, U+2028, U+3000, NEL, surrogate pairs and unpaired
+    * surrogates, 'İ' (lower-cases to two chars), I + combining dot, the
+    * Kelvin sign, number letters, and NFC and NFD Vietnamese (NFD's tone
+    * marks are combining, so they split metric tokens).
+    */
+  private val hostilePiece: Gen[String] = Gen.frequency(
+    3 -> Gen.oneOf(" ", "\t", "\n", "\r", "\f", "\u000b", "\u0000", "\u0001", "\u001c", "\u001f"),
+    2 -> Gen.oneOf("\u00a0", "\u2028", "\u3000", "\u0085"),
+    2 -> Gen.oneOf("𝐀", "𝟎", "😀", "\uD835", "\uDC00",
+      "İ", "I\u0307", "\u212A", "Ⅷ", "½", "٣", "\u0301"),
+    3 -> Gen.oneOf(vietnamese),
+    2 -> Gen.oneOf(vietnamese).map(java.text.Normalizer.normalize(_, java.text.Normalizer.Form.NFD)),
+    3 -> word.map(_.capitalize),
+    2 -> Gen.oneOf(".", ",", "-", "'", "42"))
+  private val hostile: Gen[String] =
+    Gen.chooseNum(0, 40).flatMap(Gen.listOfN(_, hostilePiece)).map(_.mkString)
+
+  test("tokenCount and truncateTokens equal the trim-and-split forms on hostile text") {
+    forAll(Gen.zip(hostile, Gen.chooseNum(-1, 12)), 2000) { case (t, k) =>
+      assert(Text.tokenCount(t) == regexWsTokens(t).length, t)
+      assert(Text.wsTokens(t).sameElements(regexWsTokens(t)), t)
+      assert(Text.truncateTokens(t, k) == regexTruncate(t, k), s"k=$k: $t")
+    }
+  }
+
+  test("metricTokens equals the regex split on hostile text") {
+    forAll(hostile, 2000) { (t: String) =>
+      assert(Text.metricTokens(t).sameElements(regexMetricTokens(t)), t)
+    }
+  }
+
+  test("Rouge.all equals the separate F1s and the Seq-keyed n-gram count") {
+    def seqKeyed(c: Array[String], r: Array[String], n: Int): Double = {
+      def counts(t: Array[String]) =
+        if (t.length < n) Map.empty[Seq[String], Int]
+        else t.sliding(n).map(_.toSeq).toSeq.groupBy(identity).map { case (g, v) => g -> v.size }
+      val (cc, rc) = (counts(c), counts(r))
+      val overlap = cc.iterator.map { case (g, k) => math.min(k, rc.getOrElse(g, 0)) }.sum
+      val (cn, rn) = (math.max(0, c.length - n + 1), math.max(0, r.length - n + 1))
+      if (cn == 0 || rn == 0 || overlap == 0) 0.0
+      else { val p = overlap.toDouble / cn; val q = overlap.toDouble / rn; 2 * p * q / (p + q) }
+    }
+    forAll(Gen.oneOf(text, hostile), Gen.oneOf(text, hostile)) { (a: String, b: String) =>
+      val (r1, r2, rl) = Rouge.all(a, b)
+      assert((r1, r2, rl) == ((Rouge.rouge1(a, b).f, Rouge.rouge2(a, b).f, Rouge.rougeL(a, b).f)))
+      val (c, r) = (regexMetricTokens(a), regexMetricTokens(b))
+      assert(r1 == seqKeyed(c, r, 1) && r2 == seqKeyed(c, r, 2))
+    }
+  }
+
+  test("recursive token split is unchanged on bench-shaped Vietnamese docs") {
+    // ds1-shaped docs: toned syllables, 8-20-word sentences, 3-8-sentence
+    // paragraphs joined by "\n\n", 27k-81.5k tokens
+    val rng = new java.util.SplittableRandom(31L)
+    val onsets = Vector("", "b", "c", "d", "đ", "g", "h", "kh", "l", "m", "n", "ng", "nh", "ph", "qu", "s", "t", "th", "tr", "v", "x")
+    val nuclei = Vector("a", "á", "à", "ả", "ã", "ạ", "ă", "ắ", "â", "ấ", "e", "é", "ê", "ế", "ề", "i", "í", "o", "ó", "ô", "ố", "ơ", "ớ", "u", "ú", "ư", "ứ", "y", "ý")
+    val codas = Vector("", "", "c", "ch", "m", "n", "ng", "nh", "p", "t")
+    val vocab = Vector.fill(600)(onsets(rng.nextInt(onsets.size)) + nuclei(rng.nextInt(nuclei.size)) +
+      codas(rng.nextInt(codas.size)))
+    def doc(tokens: Int): String = {
+      val paras = Vector.newBuilder[String]
+      var n = 0
+      while (n < tokens) {
+        paras += Vector.fill(3 + rng.nextInt(6)) {
+          val len = 8 + rng.nextInt(13)
+          n += len
+          // squared uniform: a Zipf-like skew toward the vocabulary's head
+          Vector.fill(len) { val u = rng.nextDouble(); vocab((u * u * vocab.size).toInt) }
+            .mkString(" ").capitalize + "."
+        }.mkString(" ")
+      }
+      paras.result().mkString("\n\n")
+    }
+    val cfg = PipelineConfig()
+    val chunks = Seq(27000, 54250, 81500).map(doc).map(d =>
+      Splitter.recursiveSplit(d, cfg.chunkSize, cfg.chunkOverlap, Splitter.DefaultSeparators, Splitter.TokenLen))
+    assert(chunks.map(_.size) == Seq(3, 5, 7))
+    val md = java.security.MessageDigest.getInstance("MD5")
+    chunks.flatten.foreach(c => md.update((c + "\u0000").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    assert(md.digest().map("%02x".format(_)).mkString == "a0442c6a10477f1674e33dd80f2a2107")
+  }
 }

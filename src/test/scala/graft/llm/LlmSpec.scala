@@ -43,6 +43,39 @@ class LlmSpec extends AnyFunSuite {
     assert(!CoverageJudge().critique("", doc).contains(Judge.NoIssues))
   }
 
+  test("coverage judge: one assess equals critique and scores, values unchanged") {
+    // the judge as it was with critique and scores each tokenizing
+    def legacy(summary: String, source: String, min: Double): (String, Double, Double) = {
+      val srcToks = Text.metricTokens(source).toSet
+      val sumToks = Text.metricTokens(summary)
+      val hits = srcToks.count(sumToks.toSet.contains)
+      val verdict =
+        if (summary.trim.isEmpty) "empty summary"
+        else if (srcToks.nonEmpty && hits.toDouble / srcToks.size >= min) Judge.NoIssues
+        else s"low source coverage: $hits/${srcToks.size} < $min"
+      val corr =
+        if (srcToks.isEmpty || summary.trim.isEmpty) 0.0 else hits.toDouble / srcToks.size
+      val coh = if (sumToks.isEmpty) 0.0 else sumToks.distinct.length.toDouble / sumToks.length
+      (verdict, corr, coh)
+    }
+    val texts = Seq(doc, "", "   ", "zzz yyy", "Spark spark SPARK shuffles", "Catalyst optimizes.",
+      "Tiếng Việt được dùng", "Tiếng Việt", "!!! ...")
+    for (min <- Seq(0.25, 0.0, 1.0); summary <- texts; source <- texts) {
+      val j = CoverageJudge(min)
+      val want = legacy(summary, source, min)
+      assert(j.assess(summary, source) == want, s"($summary, $source, $min)")
+      assert(j.critique(summary, source) == want._1)
+      assert(j.scores(summary, source) == ((want._2, want._3)))
+      assert(j.preparedCritique(source)(summary) == want._1)
+    }
+    assert(CoverageJudge().assess("zzz yyy", doc) == (("low source coverage: 0/24 < 0.25", 0.0, 1.0)))
+    assert(CoverageJudge().assess("Spark spark shuffles", doc) ==
+      (("low source coverage: 2/24 < 0.25", 2.0 / 24, 2.0 / 3)))
+    // a null side still throws, which judgeMetrics isolates as a failure
+    assertThrows[NullPointerException](CoverageJudge().assess(null, doc))
+    assertThrows[NullPointerException](CoverageJudge().assess(doc, null))
+  }
+
   test("hashing TF embedder: deterministic, unit L2 norm, fixed dim") {
     val e = HashingTfEmbedder(32)
     val v1 = e.embed(doc)
