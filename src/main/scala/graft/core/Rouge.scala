@@ -91,4 +91,13 @@ object Rouge {
     val r = Text.metricTokens(reference)
     (rougeN(c, r, 1).f, rougeN(c, r, 2).f, rougeL(c, r).f)
   }
+
+  /** The ROUGE-1 and ROUGE-2 F1s of [[all]] without the LCS, each side
+    * tokenized once.
+    */
+  def f12(candidate: String, reference: String): (Double, Double) = {
+    val c = Text.metricTokens(candidate)
+    val r = Text.metricTokens(reference)
+    (rougeN(c, r, 1).f, rougeN(c, r, 2).f)
+  }
 }

@@ -66,7 +66,7 @@ object udfs {
     */
   private val rouge12 = udf { (cand: String, ref: String) =>
     if (cand == null || ref == null) (0.0, 0.0)
-    else (Rouge.rouge1(cand, ref).f, Rouge.rouge2(cand, ref).f)
+    else Rouge.f12(cand, ref)
   }
 
   def rouge12Struct(cand: Column, ref: Column): Column =

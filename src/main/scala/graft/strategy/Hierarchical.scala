@@ -21,12 +21,11 @@ import graft.llm.Summarizer
   * no per-task sort buffer. A plain-Scala walk collapses each doc's nodes
   * bottom-up. With h the doc's deepest depth, every non-Paragraph node at
   * depth 1..h-1 becomes `title + "\n\n" + summarize(truncate(children))`,
-  * its collapsed children joined by
-  * "\n\n" in (ord, node_id) order (subtree replacement :232-239, title
-  * preservation :250-271, empty bodies :255-258); Paragraphs and depth-h
-  * nodes keep their text. The summary is the squeezed summarize of the
-  * depth-1 values joined the same way (:296-313); a doc without depth-1
-  * nodes yields no row. Nulls follow Spark's `concat` / `array_join`: a
+  * its collapsed children joined by "\n\n" in (ord, node_id) order
+  * (subtree replacement :232-239, title preservation :250-271, empty
+  * bodies :255-258); Paragraphs and depth-h nodes keep their text. The
+  * summary is the squeezed summarize of the depth-1 values joined the same
+  * way (:296-313); a doc without depth-1 nodes yields no row. Nulls follow Spark's `concat` / `array_join`: a
   * null title nulls its node, a null child is skipped, and a node of null
   * type below depth h is dropped.
   */

@@ -197,6 +197,7 @@ class CoreProps extends AnyFunSuite {
     forAll(Gen.oneOf(text, hostile), Gen.oneOf(text, hostile)) { (a: String, b: String) =>
       val (r1, r2, rl) = Rouge.all(a, b)
       assert((r1, r2, rl) == ((Rouge.rouge1(a, b).f, Rouge.rouge2(a, b).f, Rouge.rougeL(a, b).f)))
+      assert(Rouge.f12(a, b) == ((Rouge.rouge1(a, b).f, Rouge.rouge2(a, b).f)))
       val (c, r) = (regexMetricTokens(a), regexMetricTokens(b))
       assert(r1 == seqKeyed(c, r, 1) && r2 == seqKeyed(c, r, 2))
     }
