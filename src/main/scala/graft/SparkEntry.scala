@@ -17,11 +17,15 @@ import graft.OracleSqlGen.{DocIdKeySql, DocRowKeySql, LineitemKeySql, apCte,
 import graft.operators.{CorpusOps, Dedup, FileSkipping, Multimodal, Similarity,
   Sinks, TableQuality, TextAnalysis}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7): `entry`, plus one registry table whose
+  * two views, `queries` and `oracleSql`, Verify, Bench and the specs read.
   *
-  * Every operator family of SURVEY.md §2 has at least one `queries` entry;
-  * entries whose semantics are ANSI-SQL-expressible carry a DuckDB oracle
-  * in `oracleSql` (column names and value rounding are kept bit-compatible
+  * Each section below ends with its own `Seq` of named [[Entry]]s, so a
+  * name, its builder and its DuckDB oracle SQL (if any) are written once,
+  * side by side; `registry` concatenates the sections and rejects a
+  * repeated name. Every operator family of SURVEY.md §2 has at least one
+  * entry; entries whose semantics are ANSI-SQL-expressible carry an
+  * oracle (column names and value rounding are kept bit-compatible
   * between the Spark plan and the SQL). Summarization pipelines run the
   * deterministic extractive scalar and are checked rows-only plus by
   * ScalaTest golden fixtures.
@@ -304,6 +308,103 @@ object SparkEntry {
       .orderBy(col("c_mktsegment"))
   }
 
+  /** g1's direct ordered collect — g1b's salted two-phase concat must be
+    * indistinguishable from it, so both are held to this oracle.
+    */
+  private val g1CollectSql: String =
+    """SELECT l_orderkey, COUNT(*) AS n_lines,
+       string_agg(CAST(l_linenumber AS VARCHAR), ',' ORDER BY l_linenumber) AS line_numbers
+       FROM lineitem GROUP BY 1 ORDER BY 1"""
+
+  private def relationalEntries: Seq[(String, Entry)] = Seq(
+    // g11: one-pass grouping-sets rollup; sentinel 'ALL' for the
+    // subtotal/grand-total rows (grouping columns non-null here)
+    "g11_rollup" -> Entry(g11Rollup(_, _), Some("""
+SELECT COALESCE(l_returnflag, 'ALL') AS flag,
+  COALESCE(l_linestatus, 'ALL') AS status,
+  round(CAST(SUM(CAST(l_quantity AS DECIMAL(38, 10))) AS DOUBLE), 4) AS sum_qty,
+  CAST(COUNT(*) AS BIGINT) AS n
+FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
+ORDER BY flag, status""")),
+    "q1_agg" -> Entry(q1Agg(_, _), Some(
+      s"""SELECT l_returnflag, l_linestatus,
+         round(${exactSumSql("l_quantity")}, 4) AS sum_qty,
+         round(${exactSumSql("l_extendedprice")}, 4) AS sum_base_price,
+         round(${exactSumSql("l_extendedprice * (1 - l_discount)")}, 4) AS sum_disc_price,
+         round(${exactSumSql("l_quantity")} / COUNT(*), 4) AS avg_qty,
+         COUNT(*) AS n
+         FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""")),
+    "j1_join_revenue" -> Entry(j1Revenue(_, _), Some(
+      s"""SELECT r_name AS region_name, n_name AS nation_name,
+         round(${exactSumSql("o_totalprice")}, 4) AS revenue, COUNT(*) AS n_orders
+         FROM orders JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         GROUP BY 1, 2 ORDER BY 1, 2""")),
+    "j2_semi_join" -> Entry(j2Semi(_, _), Some(
+      """SELECT c_mktsegment, COUNT(*) AS n_customers FROM customer
+         WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+         GROUP BY 1 ORDER BY 1""")),
+    "j3_anti_join" -> Entry(j3Anti(_, _), Some(
+      """SELECT c_custkey, c_name, round(c_acctbal, 4) AS acctbal FROM customer
+         WHERE NOT EXISTS (SELECT 1 FROM orders
+                           WHERE o_custkey = c_custkey AND o_totalprice >= 150000.0)
+         ORDER BY c_custkey""")),
+    "p5_top_orders" -> Entry(p5Top(_, _), Some(
+      """SELECT o_orderkey, round(o_totalprice, 4) AS total_price FROM orders
+         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""")),
+    "o3_window_running" -> Entry(o3Window(_, _), Some(
+      """SELECT l_suppkey, l_orderkey, l_linenumber,
+         ROW_NUMBER() OVER w AS rn,
+         round(CAST(SUM(CAST(l_quantity AS DECIMAL(38,10))) OVER w AS DOUBLE), 4) AS running_qty
+         FROM lineitem
+         WINDOW w AS (PARTITION BY l_suppkey
+                      ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         ORDER BY l_suppkey, rn""")),
+    "o4_random_pick" -> Entry(o4RandomPick(_, _), Some(
+      """SELECT doc_id, text, md5('seed42_' || CAST(doc_id AS VARCHAR)) AS pick_key
+         FROM documents ORDER BY pick_key LIMIT 1""")),
+    "g3_binpack_cumsum" -> Entry(g3BinpackCumsum(_, _), Some(
+      """SELECT l_orderkey AS doc_id, l_linenumber AS chunk_idx,
+         CAST(floor(l_quantity) AS BIGINT) AS n_tokens,
+         CAST(floor((SUM(CAST(floor(l_quantity) AS BIGINT)) OVER w - CAST(floor(l_quantity) AS BIGINT)) / 50.0) AS INT) AS bin
+         FROM lineitem
+         WINDOW w AS (PARTITION BY l_orderkey
+                      ORDER BY l_linenumber, CAST(floor(l_quantity) AS BIGINT)
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         ORDER BY doc_id, chunk_idx""")),
+    "g1_collect_ordered" -> Entry(g1Collect(_, _), Some(g1CollectSql)),
+    "g1b_collect_salted" -> Entry(g1bCollectSalted(_, _), Some(g1CollectSql)),
+    "g1c_collect_hotkey" -> Entry(g1cCollectHotkey(_, _), Some(
+      """SELECT CASE WHEN l_orderkey % 5 = 0 THEN 0 ELSE l_orderkey END AS doc_id,
+         COUNT(*) AS n_lines,
+         string_agg(CAST(l_orderkey * 10 + l_linenumber AS VARCHAR), ','
+                    ORDER BY l_orderkey * 10 + l_linenumber) AS line_numbers
+         FROM lineitem GROUP BY 1 ORDER BY 1""")),
+    "g6_metric_stats" -> Entry(g6Stats(_, _), Some(
+      s"""SELECT l_returnflag,
+         round(${exactSumSql("l_extendedprice")} / COUNT(*), 4) AS mean_price,
+         round(sqrt(greatest(
+           (${exactSumSql("l_extendedprice * l_extendedprice")}
+            - ${exactSumSql("l_extendedprice")} * ${exactSumSql("l_extendedprice")} / CAST(COUNT(*) AS DOUBLE))
+           / CAST(COUNT(*) AS DOUBLE), 0.0)), 4) AS std_price,
+         round(MIN(l_extendedprice), 4) AS min_price,
+         round(MAX(l_extendedprice), 4) AS max_price,
+         COUNT(*) AS n
+         FROM lineitem GROUP BY 1 ORDER BY 1""")),
+    "g7_histogram" -> Entry(g7Histogram(_, _), Some(
+      """SELECT bucket, n, round(n * 100.0 / SUM(n) OVER (), 4) AS pct FROM (
+           SELECT CASE WHEN o_totalprice >= 300000.0 THEN 'high'
+                       WHEN o_totalprice >= 150000.0 THEN 'moderate'
+                       ELSE 'low' END AS bucket, COUNT(*) AS n
+           FROM orders GROUP BY 1) ORDER BY bucket""")),
+    "g8_argmax" -> Entry(g8Argmax(_, _), Some(
+      """SELECT c_mktsegment, c_custkey AS best_custkey, round(c_acctbal, 4) AS best_acctbal
+         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY c_mktsegment
+                 ORDER BY c_acctbal DESC, c_custkey DESC) AS rn FROM customer)
+         WHERE rn = 1 ORDER BY c_mktsegment""")))
+
   // ------------------------------------------------------------------ text
 
   /** F1: cleaner (thinking-tag strip + whitespace squeeze). */
@@ -480,6 +581,230 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }
   }
+
+  /** f3_bpe_count oracle: replay the greedy BPE merge loop rank-for-rank
+    * as a recursive CTE over DISTINCT pretokens, then weight by per-doc
+    * pretoken counts. The merge table is emitted from Bpe.DemoMerges, so
+    * Scala and SQL can never drift. Each step merges the LEFTMOST
+    * occurrence of the lowest-rank pair (rank*10^12 + position keeps the
+    * tie-break total — see the multiplier note at `bi` below); a word
+    * leaves the recursion when no adjacent pair is in the table.
+    */
+  private def f3BpeSql: String = {
+    val ranked = graft.core.Bpe.DemoMerges.zipWithIndex
+    val keys = ranked.map { case ((a, b), _) => s"'$a $b'" }.mkString(", ")
+    val vals = ranked.map(_._2).mkString(", ")
+    val mm = s"MAP([$keys], [$vals])"
+    def rank(pair: String) = s"element_at($mm, $pair)"
+    val pair = "toks[i] || ' ' || toks[i+1]"
+    // (rank, position) tie-break packed as rank*10^12 + i on BIGINT: rank is
+    // bounded by the merge-table size (~10^5) so the product stays < 10^18,
+    // and 10^12 is safely above any pretoken symbol count (a pretoken is one
+    // \p{L}+/\p{N}+/punct run — nowhere near 10^12 chars), so the position
+    // can never overflow into the next rank bucket.
+    val bi = "CAST(best % 1000000000000 AS INT)"
+    raw"""WITH RECURSIVE
+pts AS (
+  SELECT doc_id, unnest(regexp_extract_all(text, '\p{L}+|\p{N}+|[^\s\p{L}\p{N}]+')) AS w
+  FROM documents),
+wcnt AS (SELECT doc_id, w, COUNT(*) AS c FROM pts GROUP BY 1, 2),
+words0 AS (SELECT DISTINCT w FROM pts),
+bpe_walk AS (
+  SELECT w, regexp_extract_all(w, '.') AS toks, 0 AS step FROM words0
+  UNION ALL
+  SELECT w,
+    toks[1:$bi - 1] || [toks[$bi] || toks[$bi + 1]] || toks[$bi + 2:],
+    step + 1
+  FROM (
+    SELECT w, toks, step,
+      list_min([
+        CASE WHEN len(${rank(pair)}) > 0
+          THEN ${rank(pair)}[1] * 1000000000000 + i END
+        FOR i IN range(1, len(toks))]) AS best
+    FROM bpe_walk) s
+  WHERE best IS NOT NULL),
+wtok AS (SELECT w, len(arg_max(toks, step)) AS n FROM bpe_walk GROUP BY w),
+agg AS (
+  SELECT wc.doc_id, SUM(wc.c * wt.n) AS n_bpe
+  FROM wcnt wc JOIN wtok wt ON wt.w = wc.w GROUP BY 1)
+SELECT d.doc_id, CAST(COALESCE(a.n_bpe, 0) AS BIGINT) AS n_bpe_tokens,
+  ${tok("text")} AS n_ws_tokens
+FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
+ORDER BY d.doc_id"""
+  }
+
+  /** s1/s1b ingest round trip: the files written from documents
+    * (doc_id < 200) must read back byte-identical, keyed by stem, from
+    * the text dir (its non-txt decoy must not appear) and the JSONL file
+    * alike.
+    */
+  private val s1ScanSql: String =
+    """SELECT doc_id, text FROM documents WHERE doc_id < 200
+       ORDER BY doc_id"""
+
+  private def textEntries: Seq[(String, Entry)] = Seq(
+    "f1_clean_text" -> Entry(f1Clean(_, _), Some(
+      """SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS clean_text
+         FROM documents ORDER BY doc_id""")),
+    "f2_token_counts" -> Entry(f2TokenCounts(_, _), Some(
+      s"""SELECT doc_id, ${tok("text")} AS n_tokens, length(text) AS n_chars,
+         greatest(1, CAST(floor(${tok("text")} / 50.0) AS BIGINT)) AS est_chunks
+         FROM documents ORDER BY doc_id""")),
+    "f3_bpe_count" -> Entry(f3BpeCount(_, _), Some(f3BpeSql)),
+    "c3_truncate" -> Entry(c3Truncate(_, _), Some(
+      """SELECT doc_id, array_to_string(string_split_regex(trim(text), '\s+')[1:20], ' ') AS head20
+         FROM documents ORDER BY doc_id""")),
+    "c1_chunk_fixed" -> Entry(c1ChunkFixed(_, _), Some(
+      """SELECT doc_id, CAST(k AS INT) AS chunk_idx, substr(text, CAST(k*100+1 AS INT), 120) AS chunk
+         FROM documents, LATERAL UNNEST(generate_series(0, CAST(floor((length(text)-1)/100.0) AS BIGINT))) AS t(k)
+         WHERE length(text) > 0 ORDER BY doc_id, chunk_idx""")),
+    // c2: exact replay of Splitter.recursiveSplit(180, 40, CharLen) for a
+    // corpus whose first applicable separator is " ". The merge loop's
+    // queue state is (window start j); after a flush both pop conditions
+    // collapse to T(k,i-1) <= least(40, 180 - len_i - 1) with
+    // T(k,i-1) = pfx_i - pfx_k + (i-1-k), so j' = max(j, kmin_i) and the
+    // whole loop is a linear recursive CTE over piece indices.
+    "c2_chunk_recursive" -> Entry(c2ChunkRecursive(_, _), Some(
+      """WITH RECURSIVE
+         ws AS (
+           SELECT doc_id, string_split(text, ' ') AS parr FROM documents
+           WHERE trim(text) <> ''),
+         pieces AS (
+           SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY k) - 1 AS idx,
+                  parr[CAST(k AS INT)] AS piece, length(parr[CAST(k AS INT)]) AS len
+           FROM ws, LATERAL UNNEST(generate_series(1, len(parr))) AS u(k)
+           WHERE trim(parr[CAST(k AS INT)]) <> ''),
+         info0 AS (
+           SELECT doc_id, idx, len,
+                  SUM(len) OVER (PARTITION BY doc_id ORDER BY idx
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - len AS pfx,
+                  COUNT(*) OVER (PARTITION BY doc_id) AS n
+           FROM pieces),
+         info AS (
+           SELECT a.doc_id, a.idx, a.len, a.pfx, a.n,
+                  COALESCE((SELECT MIN(b.idx) FROM info0 b
+                            WHERE b.doc_id = a.doc_id AND b.idx < a.idx
+                              AND a.pfx - b.pfx + (a.idx - 1 - b.idx)
+                                  <= least(40, 180 - a.len - 1)), a.idx) AS kmin
+           FROM info0 a),
+         st AS (
+           SELECT doc_id, 0 AS i, 0 AS j,
+                  CAST(NULL AS BIGINT) AS ea, CAST(NULL AS BIGINT) AS eb, n
+           FROM info WHERE idx = 0
+           UNION ALL
+           SELECT s.doc_id, s.i + 1,
+                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) + p.len + 1 > 180
+                       THEN greatest(s.j, p.kmin) ELSE s.j END,
+                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) + p.len + 1 > 180
+                       THEN s.j END,
+                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) + p.len + 1 > 180
+                       THEN s.i - 1 END,
+                  s.n
+           FROM st s
+           JOIN info p ON p.doc_id = s.doc_id AND p.idx = s.i
+           JOIN info q ON q.doc_id = s.doc_id AND q.idx = s.j
+           WHERE s.i < s.n),
+         bounds AS (
+           SELECT doc_id, ea AS a, eb AS b FROM st WHERE ea IS NOT NULL
+           UNION ALL
+           SELECT doc_id, j, n - 1 FROM st WHERE i = n),
+         parr2 AS (SELECT doc_id, list(piece ORDER BY idx) AS ps FROM pieces GROUP BY 1)
+         SELECT b.doc_id,
+                CAST(ROW_NUMBER() OVER (PARTITION BY b.doc_id ORDER BY b.a) - 1 AS INT) AS chunk_idx,
+                trim(array_to_string(p.ps[CAST(b.a + 1 AS INT):CAST(b.b + 1 AS INT)], ' ')) AS chunk
+         FROM bounds b JOIN parr2 p USING (doc_id)
+         ORDER BY doc_id, chunk_idx""")),
+    // c2b: exact replay of the FULL recursion on the derived
+    // paragraph corpus — both separator levels ("\n\n" runs, sepLen 2;
+    // oversized paragraphs recursing to " ", sepLen 1) share one merge
+    // state machine keyed by (doc, anchor) with per-group sep_len; run
+    // segmentation = cumulative count of oversized pieces
+    "c2b_chunk_recursive_deep" -> Entry(c2bChunkRecursiveDeep(_, _), Some(
+      """WITH RECURSIVE
+         base AS (
+           SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
+           WHERE trim(text) <> ''),
+         paras AS (
+           SELECT doc_id, CAST(g AS INT) AS pidx,
+                  array_to_string(toks[CAST(g*32+1 AS INT):CAST(g*32+32 AS INT)], ' ') AS piece
+           FROM base, LATERAL UNNEST(generate_series(0, CAST(floor((len(toks)-1)/32.0) AS BIGINT))) AS u(g)),
+         marks AS (
+           SELECT doc_id, pidx, piece, length(piece) AS plen,
+                  CASE WHEN length(piece) >= 180 THEN 1 ELSE 0 END AS big,
+                  SUM(CASE WHEN length(piece) >= 180 THEN 1 ELSE 0 END)
+                    OVER (PARTITION BY doc_id ORDER BY pidx ROWS UNBOUNDED PRECEDING) AS rid
+           FROM paras),
+         runs AS (
+           SELECT doc_id, rid, MIN(pidx) AS anchor FROM marks WHERE big = 0 GROUP BY 1, 2),
+         lvl1 AS (
+           SELECT m.doc_id, r.anchor, 2 AS sep_len,
+                  ROW_NUMBER() OVER (PARTITION BY m.doc_id, m.rid ORDER BY m.pidx) - 1 AS idx,
+                  m.piece, m.plen AS len
+           FROM marks m JOIN runs r ON m.doc_id = r.doc_id AND m.rid = r.rid
+           WHERE m.big = 0),
+         lvl2 AS (
+           SELECT m.doc_id, m.pidx AS anchor, 1 AS sep_len,
+                  CAST(w.k - 1 AS BIGINT) AS idx,
+                  string_split(m.piece, ' ')[CAST(w.k AS INT)] AS piece,
+                  length(string_split(m.piece, ' ')[CAST(w.k AS INT)]) AS len
+           FROM marks m, LATERAL UNNEST(generate_series(1, len(string_split(m.piece, ' ')))) AS w(k)
+           WHERE m.big = 1),
+         upieces AS (
+           SELECT * FROM lvl1 UNION ALL SELECT * FROM lvl2),
+         info0 AS (
+           SELECT doc_id, anchor, sep_len, idx, piece, len,
+                  SUM(len) OVER (PARTITION BY doc_id, anchor ORDER BY idx
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - len AS pfx,
+                  COUNT(*) OVER (PARTITION BY doc_id, anchor) AS n
+           FROM upieces),
+         info AS (
+           SELECT a.doc_id, a.anchor, a.sep_len, a.idx, a.len, a.pfx, a.n,
+                  COALESCE((SELECT MIN(b.idx) FROM info0 b
+                            WHERE b.doc_id = a.doc_id AND b.anchor = a.anchor AND b.idx < a.idx
+                              AND a.pfx - b.pfx + (a.idx - 1 - b.idx) * a.sep_len
+                                  <= least(40, 180 - a.len - a.sep_len)), a.idx) AS kmin
+           FROM info0 a),
+         st AS (
+           SELECT doc_id, anchor, sep_len, 0 AS i, 0 AS j,
+                  CAST(NULL AS BIGINT) AS ea, CAST(NULL AS BIGINT) AS eb, n
+           FROM info WHERE idx = 0
+           UNION ALL
+           SELECT s.doc_id, s.anchor, s.sep_len, s.i + 1,
+                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) * s.sep_len + p.len + s.sep_len > 180
+                       THEN greatest(s.j, p.kmin) ELSE s.j END,
+                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) * s.sep_len + p.len + s.sep_len > 180
+                       THEN s.j END,
+                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) * s.sep_len + p.len + s.sep_len > 180
+                       THEN s.i - 1 END,
+                  s.n
+           FROM st s
+           JOIN info p ON p.doc_id = s.doc_id AND p.anchor = s.anchor AND p.idx = s.i
+           JOIN info q ON q.doc_id = s.doc_id AND q.anchor = s.anchor AND q.idx = s.j
+           WHERE s.i < s.n),
+         bounds AS (
+           SELECT doc_id, anchor, sep_len, ea AS a, eb AS b FROM st WHERE ea IS NOT NULL
+           UNION ALL
+           SELECT doc_id, anchor, sep_len, j, n - 1 FROM st WHERE i = n),
+         parr AS (
+           SELECT doc_id, anchor, list(piece ORDER BY idx) AS ps FROM upieces GROUP BY 1, 2)
+         SELECT b.doc_id AS doc_id,
+                CAST(ROW_NUMBER() OVER (PARTITION BY b.doc_id ORDER BY b.anchor, b.a) - 1 AS INT) AS chunk_idx,
+                CASE WHEN b.sep_len = 2
+                  THEN trim(array_to_string(p.ps[CAST(b.a + 1 AS INT):CAST(b.b + 1 AS INT)], e'\n\n'))
+                  ELSE trim(array_to_string(p.ps[CAST(b.a + 1 AS INT):CAST(b.b + 1 AS INT)], ' '))
+                END AS chunk
+         FROM bounds b JOIN parr p ON b.doc_id = p.doc_id AND b.anchor = p.anchor
+         ORDER BY b.doc_id, chunk_idx""")),
+    // f7/f8/f9: corpus text has no ':', '.', '/', or fences, so every
+    // expected value is constructible directly (see the query scaladoc)
+    "f7_name_scalars" -> Entry(f7NameScalars(_, _), Some(
+      """SELECT doc_id,
+         'model_' || substr(text, 1, 12) || '_q' AS safe_name,
+         'doc_' || CAST(doc_id AS VARCHAR) || '.v2' AS fname_stem,
+         trim(substr(text, 1, 40)) AS payload
+         FROM documents ORDER BY doc_id""")),
+    "s1_textdir_scan" -> Entry(s1TextdirScan(_, _), Some(s1ScanSql)),
+    "s1b_jsonl_scan" -> Entry(s1bJsonlScan(_, _), Some(s1ScanSql)))
 
   // ----------------------------------------------------------------- dedup
 
@@ -848,14 +1173,496 @@ object SparkEntry {
     Dedup.embeddingCosinePairs(tbl(spark, dir, "embeddings"), 0.45)
       .orderBy(col("id_a"), col("id_b"))
 
+  /** Minhash mins (md5-derived so bit-identical to the Spark UDF): h_i =
+    * min over a doc's distinct 3-gram shingles `sh` of (first 15 md5 hex
+    * chars of "s<i>:<shingle>" as int).
+    */
+  private def minhashMinsN(numHashes: Int): String = (0 until numHashes).map { i =>
+    s"MIN(CAST(('0x' || substr(md5('s$i:' || shingle), 1, 15)) AS BIGINT)) AS mh_$i"
+  }.mkString(", ")
+
+  private def minhashSigSql: String =
+    s"WITH ${wordShingleCtes(3, "shingle")} SELECT doc_id, ${minhashMinsN(8)} FROM sh GROUP BY doc_id ORDER BY doc_id"
+
+  /** `Dedup.minhashLshPairs`' banding at `nBands` x `rowsPerBand`: `sig`
+    * = the minhash mins per doc over `sh`, `bands` (doc_id, band,
+    * band_key) with band b's key = md5 of its rows' '_'-joined mins.
+    */
+  private def minhashBandCtes(nBands: Int, rowsPerBand: Int): String =
+    s"""sig AS (SELECT doc_id, ${minhashMinsN(nBands * rowsPerBand)} FROM sh GROUP BY doc_id),
+       bands AS (
+         SELECT doc_id, band, ${bandKeySql(nBands, rowsPerBand)} AS band_key
+         FROM sig, (VALUES ${bandValsSql(nBands)}) AS b(band))"""
+
+  private def bandKeySql(nBands: Int, rowsPerBand: Int): String =
+    (0 until nBands).map { b =>
+      val parts = (0 until rowsPerBand)
+        .map(r => s"CAST(mh_${rowsPerBand * b + r} AS VARCHAR)")
+        .mkString(" || '_' || ")
+      s"WHEN ${b} THEN md5($parts)"
+    }.mkString("CASE band ", " ", " END")
+
+  private def bandValsSql(nBands: Int): String =
+    (0 until nBands).map(b => s"($b)").mkString(",")
+
+  /** dd3 oracle: band the signature exactly like `Dedup.minhashLshPairs`
+    * (band b = md5 of '_'-joined (mh_{2b}, mh_{2b+1})), self-join on
+    * (band, band_key), distinct ordered pairs.
+    */
+  private def minhashLshSql: String =
+    s"""WITH ${wordShingleCtes(3, "shingle")},
+       ${minhashBandCtes(4, 2)}
+       SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+       FROM bands x JOIN bands y USING (band, band_key)
+       WHERE x.doc_id < y.doc_id
+       ORDER BY doc_a, doc_b"""
+
+  /** dd14/stream_neardup oracle: the shingle/minhash/band replay at the
+    * sharp 6x4 geometry, then the greedy keeper rule — a doc survives iff
+    * it is the MIN doc_id of every (band, band_key) bucket it occupies.
+    * Docs with no signature are always kept: the `trim(text) <> ''` guard
+    * both mirrors the Spark side's null-signature ban from banding and
+    * keeps DuckDB's ['']-token rows (its split of an empty string) out of
+    * the band space.
+    */
+  private def lshGreedyDedupSql(nBands: Int = 6, rowsPerBand: Int = 4): String =
+    s"""WITH ${wordShingleCtes(3, "shingle")},
+       sig AS (SELECT doc_id, ${minhashMinsN(nBands * rowsPerBand)} FROM sh GROUP BY doc_id),
+       bands AS (
+         SELECT s.doc_id, band, ${bandKeySql(nBands, rowsPerBand)} AS band_key
+         FROM sig s JOIN documents d USING (doc_id),
+           (VALUES ${bandValsSql(nBands)}) AS b(band)
+         WHERE trim(coalesce(d.text, '')) <> ''),
+       dropped AS (
+         SELECT DISTINCT b.doc_id
+         FROM bands b JOIN (
+           SELECT band, band_key, MIN(doc_id) AS keeper
+           FROM bands GROUP BY 1, 2) m USING (band, band_key)
+         WHERE b.doc_id <> m.keeper)
+       SELECT d.doc_id FROM documents d
+       LEFT JOIN dropped x USING (doc_id)
+       WHERE x.doc_id IS NULL
+       ORDER BY d.doc_id"""
+
+  /** dd4b/dd4c oracle: dd3's minhash/band replay produces the candidate
+    * set; dd4's intersection/size arithmetic is evaluated on candidate
+    * pairs only. Both stages reuse SQL proven on their standalone queries.
+    * Parameterized on the banding geometry so the sharp (6 bands x 4 rows)
+    * 100 TB operating point (SCALE.md §scale-probe-100x) is hash-checked
+    * with the same generator as the (4 x 2) small-SF anchor.
+    */
+  private def jaccardLshVerifiedSql(nBands: Int = 4, rowsPerBand: Int = 2): String =
+    s"""WITH ${wordShingleCtes(3, "shingle")},
+       ${minhashBandCtes(nBands, rowsPerBand)},
+       cand AS (
+         SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+         FROM bands x JOIN bands y USING (band, band_key)
+         WHERE x.doc_id < y.doc_id),
+       sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+       inter AS (
+         SELECT c.doc_a, c.doc_b, COUNT(*) AS cnt
+         FROM cand c
+         JOIN sh x ON x.doc_id = c.doc_a
+         JOIN sh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
+         GROUP BY 1, 2)
+       SELECT doc_a, doc_b, jaccard FROM (
+         SELECT doc_a, doc_b,
+           round(cnt * 1.0 / (sa.n + sb.n - cnt), 4) AS jaccard
+         FROM inter JOIN sizes sa ON doc_a = sa.doc_id
+                    JOIN sizes sb ON doc_b = sb.doc_id)
+       WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b"""
+
+  /** dd3b oracle: same shingle/minhash/band replay as dd3 but over the
+    * boilerplate-skewed corpus, with the hot-bucket cap mirrored as a
+    * HAVING on bucket size — DuckDB independently decides which buckets
+    * are hot and which pairs the cap drops, so the cap semantics are
+    * hash-checked end to end.
+    */
+  private def minhashLshCappedSql(cap: Int): String =
+    s"""WITH sdocs AS (
+         SELECT doc_id,
+           CASE WHEN doc_id % 10 = 0 THEN '$BoilerText' ELSE text END AS text
+         FROM documents),
+       ${wordShingleCtes(3, "shingle", "sdocs")},
+       ${minhashBandCtes(4, 2)},
+       ok AS (
+         SELECT band, band_key FROM bands GROUP BY 1, 2
+         HAVING COUNT(*) > 1 AND COUNT(*) <= $cap)
+       SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+       FROM bands x JOIN bands y USING (band, band_key)
+       JOIN ok USING (band, band_key)
+       WHERE x.doc_id < y.doc_id
+       ORDER BY doc_a, doc_b"""
+
+  /** dc1's benchmark-decontamination report: 5-token shingle collisions
+    * between the corpus (doc_id % 10 <> 0) and the benchmark slice
+    * (% 10 = 0). dc3's Bloom-prefiltered plan has no false negatives and
+    * an exact verify, so it is held to this oracle too.
+    */
+  private def dc1DecontamSql: String =
+    s"""WITH ${benchShingleCtes()},
+       corp AS (SELECT * FROM sh WHERE doc_id % 10 <> 0),
+       sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_ngrams FROM corp GROUP BY 1),
+       hits AS (
+         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits
+         FROM corp JOIN bench USING (g) GROUP BY 1)
+       SELECT doc_id, n_hits, n_ngrams,
+         round(n_hits * 1.0 / n_ngrams, 4) AS overlap
+       FROM hits JOIN sz USING (doc_id) ORDER BY doc_id"""
+
+  private def dedupEntries: Seq[(String, Entry)] = Seq(
+    "dd1_exact_dups" -> Entry(dd1ExactDups(_, _), Some(
+      """SELECT md5(text) AS text_md5, MIN(doc_id) AS canonical_doc_id,
+         COUNT(*) AS dup_count,
+         string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS member_ids
+         FROM documents GROUP BY 1 HAVING COUNT(*) > 1 ORDER BY text_md5""")),
+    "dd1b_prefix_dups" -> Entry(dd1bPrefixDups(_, _), Some(
+      """SELECT md5(substr(text, 1, 100)) AS text_md5, MIN(doc_id) AS canonical_doc_id,
+         COUNT(*) AS dup_count,
+         string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS member_ids
+         FROM documents GROUP BY 1 HAVING COUNT(*) > 1 ORDER BY text_md5""")),
+    "dd2_minhash_sig" -> Entry(dd2MinhashSig(_, _), Some(minhashSigSql)),
+    "dd3_minhash_lsh" -> Entry(dd3MinhashLsh(_, _), Some(minhashLshSql)),
+    "dd14_lsh_dedup_greedy" -> Entry(dd14LshDedupGreedy(_, _), Some(lshGreedyDedupSql())),
+    "dd3b_minhash_lsh_capped" -> Entry(dd3bMinhashLshCapped(_, _),
+      Some(minhashLshCappedSql(4))),
+    "dd4_jaccard_pairs" -> Entry(dd4Jaccard(_, _), Some(
+      s"""WITH ${jaccardCountCtes()}
+         SELECT doc_a, doc_b, jaccard FROM $jaccardNearDupSql
+         ORDER BY doc_a, doc_b""")),
+    "dd4b_jaccard_lsh" -> Entry(dd4bJaccardLsh(_, _), Some(jaccardLshVerifiedSql())),
+    "dd4c_jaccard_sharp" -> Entry(dd4cJaccardSharp(_, _),
+      Some(jaccardLshVerifiedSql(nBands = 6, rowsPerBand = 4))),
+    "dc1_decontam" -> Entry(dc1Decontam(_, _), Some(dc1DecontamSql)),
+    // dc4: positional grams (k 0-based, gram k covers tokens k..k+4),
+    // covered-index expansion capped at doc length, original-case tokens
+    // rejoined with single spaces — the whole rewrite replayed per doc
+    "dc4_span_decontam" -> Entry(dc4SpanDecontam(_, _), Some(
+      s"""WITH $spanGramCtes,
+         bench AS (SELECT DISTINCT g FROM g WHERE doc_id % 10 = 0),
+         corp AS (SELECT * FROM g WHERE doc_id % 10 <> 0),
+         hits AS (SELECT doc_id, k FROM corp JOIN bench USING (g)),
+         ${spanRewriteSql("WHERE doc_id % 10 <> 0")}""")),
+    // dc5: the dd6 split-cosine replay, corpus-vs-benchmark, argmax per
+    // corpus vector over the snapped cosine with bench_id tie-break
+    "dc5_semantic_decontam" -> Entry(dc5SemanticDecontam(_, _), Some(
+      s"""WITH bench AS (
+           SELECT vec_id AS bench_id, embedding FROM embeddings
+           WHERE vec_id % 17 = 0),
+         corp AS (
+           SELECT vec_id, embedding FROM embeddings WHERE vec_id % 17 <> 0),
+         p AS (
+           SELECT c.vec_id, b.bench_id,
+             ${cos4("c.embedding", "b.embedding")} AS cos
+           FROM corp c CROSS JOIN bench b),
+         best AS (
+           SELECT vec_id, bench_id, cos,
+             ROW_NUMBER() OVER (PARTITION BY vec_id
+               ORDER BY cos DESC, bench_id) AS rn
+           FROM p)
+         SELECT vec_id, bench_id, cos AS max_cosine,
+           CAST(cos >= 0.45 AS INT) AS contaminated
+         FROM best WHERE rn = 1 ORDER BY vec_id""")),
+    // dd12: the dc4 gram/rewrite chains, corpus-vs-itself, with the
+    // min-doc_id keeper rule replayed
+    "dd12_span_self_dedup" -> Entry(dd12SpanSelfDedup(_, _), Some(
+      s"""WITH $spanGramCtes,
+         dup AS (
+           SELECT g, MIN(doc_id) AS keeper
+           FROM g GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
+         hits AS (
+           SELECT x.doc_id, x.k FROM g x JOIN dup d USING (g)
+           WHERE x.doc_id <> d.keeper),
+         ${spanRewriteSql("")}""")),
+    "dc2_decontam_corpus" -> Entry(dc2DecontamCorpus(_, _), Some(
+      s"""WITH ${benchShingleCtes()},
+         $flaggedCte
+         SELECT doc_id FROM documents
+         WHERE doc_id % 10 <> 0 AND doc_id NOT IN (SELECT doc_id FROM flagged)
+         ORDER BY doc_id""")),
+    "dc3_decontam_bloom" -> Entry(dc3DecontamBloom(_, _), Some(dc1DecontamSql)),
+    // dd9: same toks derivation as dd4 but windows keep MULTIPLICITY (no
+    // DISTINCT) — a span repeated inside one doc is duplicated text too.
+    "dd9_span_coverage" -> Entry(dd9SpanCoverage(_, _), Some(
+      """WITH toks AS (
+           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
+         win AS (
+           SELECT doc_id, array_to_string(t[k:k+4], ' ') AS g
+           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-4, 1))) AS u(k)),
+         occ AS (SELECT g, COUNT(*) AS c FROM win GROUP BY 1)
+         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
+           CAST(SUM(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans,
+           round(SUM(CASE WHEN c >= 2 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 4)
+             AS dup_fraction
+         FROM win JOIN occ USING (g) GROUP BY doc_id ORDER BY doc_id""")),
+    // sp1/sp2/mx1: keyed-hash sampling family. u = first 60 bits of
+    // md5("<seed>:<id>") / 2^60 — the ta4/o4 md5-prefix-long idiom; all
+    // registered weights are binary-exact so thresholds match bit-for-bit.
+    "sp1_split" -> Entry(sp1Split(_, _), Some(
+      s"""WITH u AS (SELECT doc_id, ${md5UnitSql("split")} AS u FROM documents)
+         SELECT doc_id, $splitCaseSql AS split
+         FROM u ORDER BY doc_id""")),
+    // sp4: the dd7 closure verbatim + sp1's split CASE keyed on the
+    // component representative (singletons key on their own id)
+    "sp4_component_split" -> Entry(sp4ComponentSplit(_, _), Some(
+      s"""WITH RECURSIVE ${jaccardComponentCtes()},
+         k AS (
+           SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS split_key
+           FROM documents d LEFT JOIN comp c USING (doc_id)),
+         uu AS (
+           SELECT doc_id, split_key, ${md5UnitSql("split", "split_key")} AS u
+           FROM k)
+         SELECT doc_id, split_key, $splitCaseSql AS split
+         FROM uu ORDER BY doc_id""")),
+    "sp2_stratified" -> Entry(sp2Stratified(_, _), Some(
+      s"""SELECT doc_id FROM (
+           SELECT doc_id, ${md5UnitSql("strat")} AS u
+           FROM documents)
+         WHERE u < CASE WHEN doc_id % 2 = 0 THEN 0.75 ELSE 0.25 END
+         ORDER BY doc_id""")),
+    // sp3: exact-size sample = first n rows in keyed-md5 order (the sh1
+    // collation argument: lowercase hex == identical order both engines)
+    "sp3_fixed_sample" -> Entry(sp3FixedSample(_, _), Some(
+      """SELECT doc_id, sample_rank FROM (
+           SELECT doc_id,
+             CAST(row_number() OVER (
+               ORDER BY md5('sample:' || CAST(doc_id AS VARCHAR)), doc_id)
+             AS INT) AS sample_rank
+           FROM documents)
+         WHERE sample_rank <= 100 ORDER BY sample_rank""")),
+    "mx1_resample" -> Entry(mx1Resample(_, _), Some(
+      s"""WITH w AS (
+           SELECT doc_id,
+             CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 2.5 WHEN 1 THEN 0.25
+               WHEN 2 THEN 1.0 ELSE 0.0 END AS w,
+             ${md5UnitSql("mix")} AS u
+           FROM documents),
+         c AS (
+           SELECT doc_id,
+             CAST(floor(w) + CASE WHEN u < w - floor(w) THEN 1 ELSE 0 END AS INT) AS n
+           FROM w)
+         SELECT doc_id, CAST(g.k AS INT) AS copy
+         FROM c, LATERAL UNNEST(generate_series(1, n)) AS g(k)
+         ORDER BY doc_id, copy""")),
+    // sh1: rank in keyed-md5 order; hex is lowercase ASCII, so DuckDB
+    // string order == Spark UTF8String binary order
+    "sh1_shuffle" -> Entry(sh1Shuffle(_, _), Some(
+      """SELECT doc_id,
+           ROW_NUMBER() OVER (
+             ORDER BY md5('epoch0:' || CAST(doc_id AS VARCHAR)), doc_id) - 1
+             AS shuffle_pos
+         FROM documents ORDER BY doc_id""")),
+    // pk1: concat-and-cut layout = exclusive prefix sum over doc_id order;
+    // integer // division mirrors Spark's `div`. pk2: per-shard greedy
+    // reset — the g3 recursive-CTE shape partitioned by shard.
+    "pk1_pack" -> Entry(pk1Pack(_, _), Some(
+      s"""WITH d AS (
+           SELECT doc_id, CAST(${tok("text")} AS BIGINT) AS n_tokens FROM documents),
+         c AS (
+           SELECT doc_id, n_tokens,
+             CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+               AS start_offset
+           FROM d)
+         SELECT doc_id, n_tokens, start_offset,
+           start_offset // 256 AS seq_id,
+           (start_offset + greatest(n_tokens, 1) - 1) // 256 AS seq_last,
+           ((start_offset + greatest(n_tokens, 1) - 1) // 256)
+             > (start_offset // 256) AS crosses_boundary
+         FROM c ORDER BY doc_id""")),
+    // pk1b: pk1's prefix-sum CTE + generate_series over each doc's
+    // spanned sequences; within-sequence span arithmetic is end-exclusive
+    // (span covers [max(start, base), min(start+n, base+budget)))
+    "pk1b_packed_spans" -> Entry(pk1bPackedSpans(_, _), Some(
+      s"""WITH d AS (
+           SELECT doc_id, CAST(${tok("text")} AS BIGINT) AS n_tokens FROM documents),
+         c AS (
+           SELECT doc_id, n_tokens,
+             CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+               AS start_offset
+           FROM d),
+         p AS (
+           SELECT doc_id, n_tokens, start_offset,
+             UNNEST(generate_series(start_offset // 256,
+               (start_offset + n_tokens - 1) // 256)) AS seq_id
+           FROM c WHERE n_tokens > 0)
+         SELECT seq_id, doc_id,
+           greatest(start_offset, seq_id * 256) - seq_id * 256 AS span_start,
+           least(start_offset + n_tokens, seq_id * 256 + 256)
+             - greatest(start_offset, seq_id * 256) AS span_len,
+           start_offset >= seq_id * 256 AS is_doc_start,
+           start_offset + n_tokens <= seq_id * 256 + 256 AS is_doc_end
+         FROM p ORDER BY seq_id, doc_id""")),
+    "pk2_pack_greedy" -> Entry(pk2PackGreedy(_, _), Some(
+      s"""WITH RECURSIVE d AS (
+           SELECT doc_id, CAST(${tok("text")} AS BIGINT) AS w,
+             CAST(doc_id % 8 AS BIGINT) AS shard
+           FROM documents),
+         sq AS (
+           SELECT doc_id, w, shard,
+             ROW_NUMBER() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
+           FROM d),
+         rec AS (
+           SELECT shard, rn, doc_id, w, 0 AS seq, w AS cur
+           FROM sq WHERE rn = 1
+           UNION ALL
+           SELECT s.shard, s.rn, s.doc_id, s.w,
+             CASE WHEN r.cur + s.w > 1000 THEN r.seq + 1 ELSE r.seq END,
+             CASE WHEN r.cur + s.w > 1000 THEN s.w ELSE r.cur + s.w END
+           FROM rec r JOIN sq s ON s.shard = r.shard AND s.rn = r.rn + 1)
+         SELECT doc_id, w AS n_tokens, shard, seq FROM rec ORDER BY doc_id""")),
+    // s11: record framing + byte offsets replayed in SQL (strlen = UTF-8
+    // octets = Spark's octet_length); the injected fake record is part of
+    // the expected payload — length-driven parsing returns it intact
+    "s11_warc_roundtrip" -> Entry(s11WarcRoundtrip(_, _), Some {
+      val crlf = "chr(13) || chr(10)"
+      val inj = s"$crlf || $crlf || 'WARC/1.0' || $crlf || " +
+        s"'WARC-Record-ID: 999999' || $crlf || 'Content-Length: 0' || " +
+        s"$crlf || $crlf || $crlf || $crlf"
+      s"""WITH d AS (
+           SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard,
+             CASE WHEN doc_id % 7 = 0 THEN coalesce(text, '') || $inj
+                  ELSE coalesce(text, '') END AS payload
+           FROM documents),
+         r AS (
+           SELECT doc_id, shard, payload,
+             'WARC/1.0' || $crlf ||
+             'WARC-Record-ID: ' || CAST(doc_id AS VARCHAR) || $crlf ||
+             'Content-Length: ' || CAST(strlen(payload) AS VARCHAR) ||
+             $crlf || $crlf || payload || $crlf || $crlf AS rec
+           FROM d)
+         SELECT shard,
+           CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY doc_id) - 1
+             AS BIGINT) AS rec_idx,
+           CAST(COALESCE(SUM(strlen(rec)) OVER (PARTITION BY shard
+             ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND
+             1 PRECEDING), 0) AS BIGINT) AS byte_offset,
+           doc_id, payload AS text
+         FROM r ORDER BY shard, rec_idx"""
+    }),
+    // dd7: transitive closure (recursive CTE) over the SAME pair derivation
+    // as dd4; component = min reachable id. Mirrors min-label propagation's
+    // fixed point exactly.
+    "dd7_components" -> Entry(dd7Components(_, _), Some(
+      s"""WITH RECURSIVE ${jaccardComponentCtes()}
+         SELECT doc_id, component FROM comp ORDER BY doc_id""")),
+    // dd8: keep the min doc_id per distinct text
+    "dd8_dedup_corpus" -> Entry(dd8DedupCorpus(_, _), Some(
+      """SELECT doc_id, length(text) AS n_chars FROM (
+           SELECT doc_id, text,
+             ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+           FROM documents)
+         WHERE rn = 1 ORDER BY doc_id""")),
+    // dd8b: the dd7 closure + per-component argmax keeper (length, -id)
+    "dd8b_dedup_best" -> Entry(dd8bDedupBest(_, _), Some(
+      s"""WITH RECURSIVE ${jaccardComponentCtes()},
+         scored AS (
+           SELECT d.doc_id, length(d.text) AS n_chars, c.component
+           FROM documents d LEFT JOIN comp c USING (doc_id)),
+         keepers AS (
+           SELECT doc_id FROM (
+             SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY component
+               ORDER BY n_chars DESC, doc_id ASC) AS rn
+             FROM scored WHERE component IS NOT NULL)
+           WHERE rn = 1)
+         SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars FROM scored
+         WHERE component IS NULL
+            OR doc_id IN (SELECT doc_id FROM keepers)
+         ORDER BY doc_id""")),
+    // dd11: cut after token i iff md5-grid hit on gram (i, i+1)
+    "dd11_cdc_chunks" -> Entry(dd11CdcChunks(_, _), Some(
+      s"""WITH $cdcChunkCtes
+         SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
+           CAST(CASE WHEN length(chunk) = 0 THEN 0
+             ELSE len(string_split(chunk, ' ')) END AS BIGINT) AS n_toks,
+           md5(chunk) AS chunk_md5
+         FROM x ORDER BY doc_id, chunk_idx""")),
+    // dd11b: dd11's chunk derivation -> per-doc distinct chunk weights ->
+    // boilerplate cap -> shared-mass containment pairs -> component
+    // closure -> min-id survivors
+    "dd11b_cdc_dedup_corpus" -> Entry(dd11bCdcDedup(_, _), Some(
+      s"""WITH RECURSIVE $cdcChunkCtes,
+         xt AS (
+           SELECT doc_id, md5(chunk) AS h,
+             CASE WHEN length(chunk) = 0 THEN 0
+               ELSE len(string_split(chunk, ' ')) END AS nt
+           FROM x),
+         ch AS (
+           SELECT doc_id, h, MAX(nt) AS w FROM xt WHERE nt >= 4 GROUP BY 1, 2),
+         tot AS (SELECT doc_id, SUM(w) AS tot FROM ch GROUP BY 1),
+         hot AS (SELECT h FROM ch GROUP BY h HAVING COUNT(*) > 256),
+         pr AS (
+           SELECT ch.doc_id, ch.h, ch.w, tot.tot
+           FROM ch JOIN tot USING (doc_id)
+           WHERE ch.h NOT IN (SELECT h FROM hot)),
+         pairs AS (
+           SELECT doc_a, doc_b FROM (
+             SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               round(SUM(a.w) * 1.0 / LEAST(a.tot, b.tot), 4) AS containment
+             FROM pr a JOIN pr b ON a.h = b.h AND a.doc_id < b.doc_id
+             GROUP BY a.doc_id, a.tot, b.doc_id, b.tot)
+           WHERE containment >= 0.5),
+         edges AS (
+           SELECT doc_a AS a, doc_b AS b FROM pairs
+           UNION SELECT doc_b, doc_a FROM pairs),
+         reach AS (
+           SELECT DISTINCT a AS src, a AS dst FROM edges
+           UNION
+           SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
+         comp AS (SELECT src AS doc_id, MIN(dst) AS component
+           FROM reach GROUP BY src)
+         SELECT dd.doc_id, CAST(length(dd.text) AS INT) AS n_chars
+         FROM documents dd LEFT JOIN comp ON dd.doc_id = comp.doc_id
+         WHERE comp.component IS NULL OR comp.component = dd.doc_id
+         ORDER BY dd.doc_id""")),
+    // SimHash is md5-derived (60-bit token hashes), so the weighted bit-sum
+    // signature, the 4x15-bit pigeonhole blocking AND the Hamming verify
+    // all reproduce exactly in SQL.
+    "dd5_simhash_pairs" -> Entry(dd5Simhash(_, _), Some(
+      """WITH tok AS (
+           SELECT doc_id, unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS t
+           FROM documents),
+         cnt AS (
+           SELECT doc_id, t, COUNT(*) AS w,
+             CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT) AS h
+           FROM tok GROUP BY 1, 2),
+         bits AS (
+           SELECT doc_id, b, SUM(CASE WHEN (h >> b) & 1 = 1 THEN w ELSE -w END) AS s
+           FROM cnt, LATERAL UNNEST(generate_series(0, 59)) AS g(b) GROUP BY 1, 2),
+         sig0 AS (
+           SELECT doc_id, SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS simhash
+           FROM bits GROUP BY 1),
+         sig AS (
+           SELECT d.doc_id, COALESCE(sig0.simhash, 0) AS simhash
+           FROM documents d LEFT JOIN sig0 ON d.doc_id = sig0.doc_id),
+         blocks AS (
+           SELECT doc_id, simhash, blk, (simhash >> (blk * 15)) & 32767 AS key
+           FROM sig, LATERAL UNNEST([0, 1, 2, 3]) AS u(blk))
+         SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
+           bit_count(xor(x.simhash, y.simhash)) AS hamming
+         FROM blocks x JOIN blocks y USING (blk, key)
+         WHERE x.doc_id < y.doc_id AND bit_count(xor(x.simhash, y.simhash)) <= 3
+         ORDER BY doc_a, doc_b""")),
+    "dd6_embedding_pairs" -> Entry(dd6EmbeddingPairs(_, _), Some(
+      s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           ${cos4("a.embedding", "b.embedding")} AS cosine
+         FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+         WHERE cosine >= 0.45 ORDER BY id_a, id_b""")))
+
   // ------------------------------------------------------------ similarity
+
+  /** The top-k query set: vectors 0–4 as (query_id, embedding) — the
+    * Scala twin of `OracleSqlGen.queryCte`.
+    */
+  private def topkQueries(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding"))
 
   /** SS1: brute-force cosine top-5 for query vectors (vec_id < 5). */
   private def ss1CosineTopk(spark: SparkSession, dir: String): DataFrame = {
     val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    Similarity.bruteForceTopK(emb, queries, 5)
+    Similarity.bruteForceTopK(emb, topkQueries(emb), 5)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -866,9 +1673,7 @@ object SparkEntry {
     */
   private def ss11MmrTopk(spark: SparkSession, dir: String): DataFrame = {
     val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    Similarity.mmrTopK(emb, queries, k = 5, shortlist = 20)
+    Similarity.mmrTopK(emb, topkQueries(emb), k = 5, shortlist = 20)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -877,9 +1682,7 @@ object SparkEntry {
     */
   private def ss2LshTopk(spark: SparkSession, dir: String): DataFrame = {
     val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    Similarity.lshTopK(emb, queries, 5, 64)
+    Similarity.lshTopK(emb, topkQueries(emb), 5, 64)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -890,9 +1693,7 @@ object SparkEntry {
     */
   private def ss3IvfTopk(spark: SparkSession, dir: String): DataFrame = {
     val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    Similarity.ivfTopK(emb, queries, 5, 64, trainSampleMod = 4)
+    Similarity.ivfTopK(emb, topkQueries(emb), 5, 64, trainSampleMod = 4)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -907,8 +1708,7 @@ object SparkEntry {
     */
   private def ss7IndexRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
+    val queries = topkQueries(emb)
     val (cells, cs) = Similarity.buildIvfIndex(emb, 16, 2, trainSampleMod = 4)
     withScratch("graft_ivf_") { idxDir =>
       Similarity.saveIvfIndex(cells, cs, idxDir.toString)
@@ -976,8 +1776,7 @@ object SparkEntry {
     */
   private def ss7bIndexAppend(spark: SparkSession, dir: String): DataFrame = {
     val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
+    val queries = topkQueries(emb)
     val even = emb.filter(col("vec_id") % 2 === 0)
     val odd = emb.filter(col("vec_id") % 2 === 1)
     val (evenCells, cs) = Similarity.buildIvfIndex(even, 16, 2,
@@ -1015,9 +1814,7 @@ object SparkEntry {
     */
   private def qz2TopkQuant(spark: SparkSession, dir: String): DataFrame = {
     val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    graft.operators.Quantize.quantizedTopK(emb, queries, 5)
+    graft.operators.Quantize.quantizedTopK(emb, topkQueries(emb), 5)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -1027,8 +1824,7 @@ object SparkEntry {
     */
   private def qz3Recall(spark: SparkSession, dir: String): DataFrame = {
     val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
+    val queries = topkQueries(emb)
     Similarity.recallAtK(
       Similarity.bruteForceTopK(emb, queries, 5),
       graft.operators.Quantize.quantizedTopK(emb, queries, 5))
@@ -1043,9 +1839,7 @@ object SparkEntry {
   private def qz5MatryoshkaTopk(spark: SparkSession, dir: String): DataFrame = {
     val t = graft.operators.Quantize.matryoshkaTruncate(
       tbl(spark, dir, "embeddings"), 32)
-    val queries = t.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    Similarity.bruteForceTopK(t, queries, 5)
+    Similarity.bruteForceTopK(t, topkQueries(t), 5)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -1057,14 +1851,10 @@ object SparkEntry {
     */
   private def qz5Recall(spark: SparkSession, dir: String): DataFrame = {
     val emb = tbl(spark, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
     val t = graft.operators.Quantize.matryoshkaTruncate(emb, 32)
-    val qT = t.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
     Similarity.recallAtK(
-      Similarity.bruteForceTopK(emb, queries, 5),
-      Similarity.bruteForceTopK(t, qT, 5))
+      Similarity.bruteForceTopK(emb, topkQueries(emb), 5),
+      Similarity.bruteForceTopK(t, topkQueries(t), 5))
       .orderBy(col("query_id"))
   }
 
@@ -1188,11 +1978,262 @@ object SparkEntry {
         nearDupEmbeddings(tbl(spark, dir, "embeddings")), 0.85, 64)
       .orderBy(col("id_a"), col("id_b"))
 
-  // ------------------------------------------------------------ ANN recall
+  /** Shared int8-quantization CTE mirroring [[graft.operators.Quantize]]:
+    * scale = max|x|/127 per vector, q = clamp(round(x/scale), ±127). All
+    * double arithmetic — bit-identical to the Spark Column expressions.
+    */
+  private val quantizeCte =
+    """qs0 AS (
+         SELECT vec_id, embedding,
+           list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0
+             AS scale
+         FROM embeddings),
+       qz AS (
+         SELECT vec_id, embedding, scale,
+           CASE WHEN scale > 0 THEN
+             list_transform(embedding, x ->
+               CAST(greatest(least(round(CAST(x AS DOUBLE) / scale), 127.0), -127.0)
+                 AS TINYINT))
+           ELSE list_transform(embedding, x -> CAST(0 AS TINYINT)) END AS qvec
+         FROM qs0)"""
 
-  private def topkQueries(emb: DataFrame): DataFrame =
-    emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
+  /** Quantized-search scoring CTE (needs [[quantizeCte]]): scales cancel
+    * out of the cosine, so score = int dot / sqrt(int norm product).
+    */
+  private val quantScoredCte =
+    """qn AS (
+         SELECT vec_id, qvec,
+           list_sum(list_transform(qvec, x -> CAST(x AS BIGINT) * CAST(x AS BIGINT)))
+             AS inorm
+         FROM qz),
+       qnq AS (
+         SELECT vec_id AS query_id, qvec AS q_q, inorm AS in_q
+         FROM qn WHERE vec_id < 5 AND inorm > 0),
+       qscored AS (
+         SELECT qnq.query_id, c.vec_id,
+           round(list_sum(list_transform(list_zip(qnq.q_q, c.qvec),
+             p -> CAST(p[1] AS BIGINT) * CAST(p[2] AS BIGINT)))
+             / sqrt(CAST(qnq.in_q AS DOUBLE) * CAST(c.inorm AS DOUBLE)), 4) AS cosine
+         FROM qn c, qnq WHERE c.vec_id <> qnq.query_id AND c.inorm > 0)"""
+
+  private def qz2TopkSql: String =
+    s"""WITH $quantizeCte,
+       $quantScoredCte
+       SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("qscored")}
+       ORDER BY query_id, rank"""
+
+  /** Shared qz6 signature CTE: the 32-bit-word sign packing of the 64-dim
+    * embeddings, exactly [[graft.operators.Quantize.signBits]].
+    */
+  private val signSigCte: String =
+    """sig AS (
+       SELECT vec_id,
+         [CAST(list_sum(list_transform(range(0, 32),
+            i -> CASE WHEN embedding[CAST(i + 1 AS INT)] >= 0
+              THEN CAST(POWER(2, i) AS BIGINT) ELSE 0 END)) AS BIGINT),
+          CAST(list_sum(list_transform(range(0, 32),
+            i -> CASE WHEN embedding[CAST(i + 33 AS INT)] >= 0
+              THEN CAST(POWER(2, i) AS BIGINT) ELSE 0 END)) AS BIGINT)] AS sig
+       FROM embeddings)"""
+
+  /** qz6's sign scan: [[signSigCte]], `q` = the vec_id < 5 query
+    * signatures, `hscored` (query_id, vec_id, hamming) = the popcount of
+    * the per-word XOR — integers end to end.
+    */
+  private def signHammingCtes: String =
+    s"""$signSigCte,
+       q AS (SELECT vec_id AS query_id, sig AS sig_q FROM sig WHERE vec_id < 5),
+       hscored AS (
+         SELECT q.query_id, c.vec_id,
+           CAST(list_sum(list_transform(list_zip(c.sig, q.sig_q),
+             p -> bit_count(xor(p[1], p[2])))) AS BIGINT) AS hamming
+         FROM sig c, q WHERE c.vec_id <> q.query_id)"""
+
+  /** FROM-clause body: `hscored`'s first `k` per query by (hamming ASC,
+    * vec_id ASC), numbered as `rank`.
+    */
+  private def hammingTopk(k: Int, rank: String): String =
+    s"""(
+         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+           ORDER BY hamming ASC, vec_id ASC) AS $rank FROM hscored)
+       WHERE $rank <= $k"""
+
+  /** qz6b's two-stage scan: the integer Hamming shortlist `sl` (<= 100)
+    * then the exact cosine rerank `rr` of the shortlist rows only.
+    */
+  private def signRerankCtes: String =
+    s"""$signHammingCtes,
+       sl AS (SELECT query_id, vec_id FROM ${hammingTopk(100, "srank")}),
+       ${queryCte("fq")},
+       rr AS (
+         SELECT sl.query_id, sl.vec_id,
+           ${cos4("fq.eq", "c.embedding")} AS cosine
+         FROM sl
+         JOIN embeddings c ON sl.vec_id = c.vec_id
+         JOIN fq ON sl.query_id = fq.query_id)"""
+
+  /** qz5's 32-dim Matryoshka prefix `m` (list_slice is Spark's
+    * slice(_, 1, 32) — both inclusive 1-based).
+    */
+  private val matryoshkaCte: String =
+    """m AS (SELECT vec_id, list_slice(embedding, 1, 32) AS embedding
+                    FROM embeddings)"""
+
+  private def similarityEntries: Seq[(String, Entry)] = Seq(
+    "ss1_cosine_topk" -> Entry(ss1CosineTopk(_, _), Some(
+      s"""WITH ${exactCosineCtes()}
+         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("scored")}
+         ORDER BY query_id, rank""")),
+    // ss11: the 5 greedy MMR rounds unrolled as generated CTEs over the
+    // r4-snapped cosine tables; λ / (1−λ) are the exact double literals
+    // the Scala walk uses (1−0.7 interpolated, never a DECIMAL literal)
+    "ss11_mmr_topk" -> Entry(ss11MmrTopk(_, _), Some {
+      val lam = "0.7e0"
+      val olam = s"${1.0 - 0.7}e0"
+      // zero-norm guard mirrors the Scala when(denom === 0.0, 0.0)
+      def cosExpr(x: String, y: String) = {
+        def nrm(v: String) =
+          s"sqrt(list_sum(list_transform($v, w -> CAST(w AS DOUBLE) * CAST(w AS DOUBLE))))"
+        s"""CASE WHEN ${nrm(x)} * ${nrm(y)} = 0 THEN 0.0 ELSE round(
+             list_sum(list_transform(list_zip($x, $y),
+               p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+             / (${nrm(x)} * ${nrm(y)}),
+           4) END"""
+      }
+      val rounds = (2 to 5).map { i =>
+        val joins = (1 until i).map(j =>
+          s"JOIN sel$j s$j ON c.query_id = s$j.query_id " +
+            s"LEFT JOIN prs p$j ON p$j.query_id = c.query_id " +
+            s"AND p$j.a = c.vec_id AND p$j.b = s$j.vec_id").mkString(" ")
+        val reds = (1 until i).map(j => s"COALESCE(p$j.cs, 0.0e0)").mkString(", ")
+        val notPicked = (1 until i).map(j => s"c.vec_id <> s$j.vec_id").mkString(" AND ")
+        s"""red$i AS (
+           SELECT c.query_id, c.vec_id, c.cosine, greatest($reds) AS red
+           FROM cand c $joins
+           WHERE $notPicked),
+         sel$i AS (
+           SELECT query_id, vec_id FROM (
+             SELECT query_id, vec_id, ROW_NUMBER() OVER (PARTITION BY query_id
+               ORDER BY $lam * cosine - $olam * red DESC, vec_id ASC) AS rn
+             FROM red$i) WHERE rn = 1)"""
+      }.mkString(",\n         ")
+      val unions = (1 to 5).map(i =>
+        s"SELECT query_id, CAST($i AS INT) AS rank, vec_id FROM sel$i")
+        .mkString(" UNION ALL ")
+      s"""WITH ${queryCte("q")},
+         scored AS (
+           SELECT q.query_id, c.vec_id, c.embedding,
+             ${cosExpr("q.eq", "c.embedding")} AS cosine
+           FROM embeddings c, q WHERE c.vec_id <> q.query_id),
+         cand AS (
+           SELECT query_id, vec_id, embedding, cosine FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+               ORDER BY cosine DESC, vec_id ASC) AS rnk
+             FROM scored) WHERE rnk <= 20),
+         prs AS (
+           SELECT x.query_id, x.vec_id AS a, y.vec_id AS b,
+             ${cosExpr("x.embedding", "y.embedding")} AS cs
+           FROM cand x JOIN cand y
+             ON x.query_id = y.query_id AND x.vec_id <> y.vec_id),
+         sel1 AS (
+           SELECT query_id, vec_id FROM (
+             SELECT query_id, vec_id, ROW_NUMBER() OVER (PARTITION BY query_id
+               ORDER BY cosine DESC, vec_id ASC) AS rn
+             FROM cand) WHERE rn = 1),
+         $rounds
+         SELECT query_id, rank, vec_id FROM ($unions)
+         ORDER BY query_id, rank"""
+    }),
+    // ss2: the sign-LSH top-5 REPLAYED end to end — hyperplanes are
+    // corpus-independent seeded constants interpolated as literals;
+    // bucket keys, the Hamming-1 multiprobe shell, candidate dedup and
+    // the 4dp rerank are all re-derived in SQL (OracleSqlGen.ss2TopkSql).
+    // The former "approximate by construction => rows-only" stance was
+    // too weak: approximate vs the EXACT scan, yes — but deterministic
+    // given the corpus, so fully oracle-able.
+    "ss2_lsh_topk" -> Entry(ss2LshTopk(_, _), Some(OracleSqlGen.ss2TopkSql)),
+    // ss3: the IVF top-5 with the coarse quantizer RE-TRAINED in SQL
+    // (lowest-vec_id seeds, two Lloyd rounds with double-cosine
+    // assignment and decimal-exact float means, empty cells keeping
+    // their centroid), then probe + rerank (OracleSqlGen.ss3TopkSql).
+    "ss3_ivf_topk" -> Entry(ss3IvfTopk(_, _), Some(OracleSqlGen.ss3TopkSql)),
+    // ss7: the persisted IVF index serves bit-identical results to the
+    // freshly built one (floats round-trip parquet exactly)
+    "ss7_index_roundtrip" -> Entry(ss7IndexRoundtrip(_, _), Some(
+      "SELECT 1 AS has_rows, CAST(0 AS BIGINT) AS n_diff, 1 AS pass")),
+    // ss8: IVFADC composed — the ss3 coarse-quantizer replay + float-
+    // exact residuals + the qz4 PQ trainer on residual space + the
+    // (centroid-dot-first) ADC accumulation, shortlist 250, 4dp rerank.
+    "ss8_ivfpq_topk" -> Entry(ss8IvfPqTopk(_, _), Some(OracleSqlGen.ss8TopkSql)),
+    "ss8_recall" -> Entry(ss8Recall(_, _), Some(OracleSqlGen.ss8RecallSql)),
+    // ss7b: appended index ≡ one-shot index under the same frozen model
+    "ss7b_index_append" -> Entry(ss7bIndexAppend(_, _), Some(
+      "SELECT 1 AS has_rows, CAST(0 AS BIGINT) AS n_diff, 1 AS pass")),
+    "qz1_quantize" -> Entry(qz1Quantize(_, _), Some(
+      s"""WITH $quantizeCte
+         SELECT vec_id, round(scale, 6) AS scale,
+           array_to_string(list_transform(qvec, x -> CAST(x AS VARCHAR)), ',')
+             AS qvec_csv,
+           round(list_max(list_transform(list_zip(qvec, embedding),
+             p -> abs(CAST(p[1] AS DOUBLE) * scale - CAST(p[2] AS DOUBLE)))), 6)
+             AS max_abs_err
+         FROM qz ORDER BY vec_id""")),
+    "qz2_topk_quant" -> Entry(qz2TopkQuant(_, _), Some(qz2TopkSql)),
+    "qz3_recall" -> Entry(qz3Recall(_, _), Some(
+      s"""WITH $quantizeCte,
+         $quantScoredCte,
+         ${apCte("qscored")},
+         $recallTail""")),
+    // qz5: ss1's cosine replay on the 32-dim list prefix
+    "qz5_matryoshka_topk" -> Entry(qz5MatryoshkaTopk(_, _), Some(
+      s"""WITH $matryoshkaCte,
+         ${exactCosineCtes("m")}
+         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("scored")}
+         ORDER BY query_id, rank""")),
+    // qz5_recall: truncated top-5 vs full-dim top-5, both re-derived —
+    // the qz3 recall-composition shape
+    "qz5_recall" -> Entry(qz5Recall(_, _), Some(
+      s"""WITH $matryoshkaCte,
+         ${exactCosineCtes("m")},
+         ${apCte("scored")},
+         $recallTail""")),
+    // qz6: the sign packing replayed exactly — bit j of word w set iff
+    // embedding[w*32 + j + 1] >= 0 (POWER(2, j) is double-exact to 2^31);
+    // Hamming = popcount of per-word XOR. Integers end to end.
+    "qz6_sign_topk" -> Entry(qz6SignTopk(_, _), Some(
+      s"""WITH $signHammingCtes
+         SELECT query_id, vec_id, hamming, rank FROM ${hammingTopk(5, "rank")}
+         ORDER BY query_id, rank""")),
+    // qz6_recall: sign top-5 vs the float exact top-5, both re-derived
+    "qz6_recall" -> Entry(qz6Recall(_, _), Some(
+      s"""WITH $signHammingCtes,
+         ap AS (SELECT query_id, vec_id FROM ${hammingTopk(5, "rank")}),
+         $recallTail""")),
+    // qz6b: the FULL two-stage replay — integer Hamming shortlist (<=100)
+    // then the exact cosine rerank on shortlist rows only
+    "qz6b_sign_rerank" -> Entry(qz6bSignRerank(_, _), Some(
+      s"""WITH $signRerankCtes
+         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("rr")}
+         ORDER BY query_id, rank""")),
+    // qz6b_recall: two-stage top-5 vs the float exact top-5 — every stage
+    // of BOTH sides re-derived, so even the recall of a two-stage ANN is
+    // a hash-checked number here
+    "qz6b_recall" -> Entry(qz6bRecall(_, _), Some(
+      s"""WITH $signRerankCtes,
+         ${apCte("rr")},
+         $recallTail""")),
+    // qz4: the PQ shortlist+rerank REPLAYED end to end — per-subspace
+    // codebooks re-trained in SQL (lowest-vec_id seeds, two L2 Lloyd
+    // rounds, decimal-exact means), every row re-encoded, the ADC score
+    // accumulated in the UDF's exact order via order-pinned list sums,
+    // shortlist 150 and the 4dp rerank re-derived (OracleSqlGen.qz4*).
+    // Deterministic given the corpus, so fully oracle-able — the ss2/ss3
+    // conversion argument, extended to the compressed-scan family.
+    "qz4_pq_topk" -> Entry(qz4PqTopk(_, _), Some(OracleSqlGen.qz4TopkSql)),
+    "qz4_recall" -> Entry(qz4Recall(_, _), Some(OracleSqlGen.qz4RecallSql)),
+    "dd6b_embedding_pairs_lsh" -> Entry(dd6bEmbeddingPairsLsh(_, _)))
+
+  // ------------------------------------------------------------ ANN recall
 
   /** SS10: exact top-5 over the mean-CENTERED embeddings table
     * (All-but-the-top step 1) — FULL oracle: the SQL re-computes the
@@ -1440,9 +2481,7 @@ object SparkEntry {
     val emb = tbl(spark, dir, "embeddings")
     val qText = docs.filter(col("doc_id") < 5)
       .select(col("doc_id").as("query_id"), col("text"))
-    val qVec = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val dense = Similarity.bruteForceTopK(emb, qVec, 10)
+    val dense = Similarity.bruteForceTopK(emb, topkQueries(emb), 10)
       .select(col("query_id"), col("vec_id").as("doc_id"), col("rank"))
     // cap 1.0 — same testdata-vocabulary rationale as ss5; with the
     // default cap the BM25 leg was empty and "hybrid" degenerated to the
@@ -1452,6 +2491,156 @@ object SparkEntry {
     Similarity.rrfFuse(dense, lexical, 5)
       .orderBy(col("query_id"), col("rank"))
   }
+
+  private def annRecallEntries: Seq[(String, Entry)] = Seq(
+    // ss10: the centering transform + ss1's chain on the centered lists —
+    // decimal-exact per-dim means, double-subtract, float re-round
+    "ss10_centered_topk" -> Entry(ss10CenteredTopk(_, _), Some(
+      s"""WITH dm AS (
+           SELECT u.i AS i,
+             CAST(SUM(CAST(CAST(e.embedding[u.i] AS DOUBLE)
+               AS DECIMAL(38, 10))) AS DOUBLE) / COUNT(*) AS mu
+           FROM embeddings e
+           CROSS JOIN (SELECT UNNEST(range(1, 65)) AS i) u
+           GROUP BY 1),
+         mv AS (SELECT list(mu ORDER BY i) AS m FROM dm),
+         cent AS (
+           SELECT vec_id,
+             list_transform(list_zip(embedding, (SELECT m FROM mv)),
+               p -> CAST(CAST(p[1] AS DOUBLE) - p[2] AS REAL)) AS embedding
+           FROM embeddings),
+         ${queryCte("q", "cent")},
+         scored AS (
+           -- unlike the raw-fixture ss1 shape, CENTERING can produce an
+           -- exact-zero vector (an embedding equal to the mean), so the
+           -- Scala path's zero-denominator guard is replayed here
+           SELECT q.query_id, c.vec_id,
+             CASE WHEN
+               (sqrt(list_sum(list_transform(q.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+                * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) = 0
+             THEN 0.0 ELSE round(
+               list_sum(list_transform(list_zip(q.eq, c.embedding),
+                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+               / (sqrt(list_sum(list_transform(q.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
+             4) END AS cosine
+           FROM cent c, q WHERE c.vec_id <> q.query_id)
+         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("scored")}
+         ORDER BY query_id, rank""")),
+    "dd13_text_semantic_pairs" -> Entry(dd13TextSemanticPairs(_, _)),
+    // dd13_gate: lexical near-dups must all surface in the semantic set
+    "dd13_gate" -> Entry(dd13Gate(_, _),
+      Some("SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    "dd13b_text_semdedup" -> Entry(dd13bTextSemdedupClustered(_, _)),
+    "dd13b_gate" -> Entry(dd13bGate(_, _),
+      Some("SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    "dd13c_text_semdedup_ann" -> Entry(dd13cTextSemdedupAnn(_, _)),
+    // dd13c/dd13r: the ANN-assigned clustered form and the measured
+    // router both hold the identical lexical-recall contract
+    "dd13c_gate" -> Entry(dd13cGate(_, _),
+      Some("SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    "dd13r_text_semdedup_routed" -> Entry(dd13rTextSemdedupRouted(_, _)),
+    "dd13r_gate" -> Entry(dd13rGate(_, _),
+      Some("SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    // ss9: ss1's cosine replay + label-mismatch filter + denoise cap +
+    // per-query rank — the full mined-negative set
+    "ss9_hard_negatives" -> Entry(ss9HardNegatives(_, _), Some(
+      s"""WITH ${exactCosineCtes()},
+         neg AS (
+           SELECT s.query_id, s.vec_id, s.cosine FROM scored s
+           JOIN embeddings qe ON qe.vec_id = s.query_id
+           JOIN embeddings ce ON ce.vec_id = s.vec_id
+           WHERE ce.label <> qe.label AND s.cosine < 0.45)
+         SELECT query_id, neg_rank, vec_id, cosine FROM (
+           SELECT query_id, vec_id, cosine,
+             ROW_NUMBER() OVER (PARTITION BY query_id
+               ORDER BY cosine DESC, vec_id ASC) AS neg_rank
+           FROM neg)
+         WHERE neg_rank <= 5 ORDER BY query_id, neg_rank""")),
+    "ss2_recall" -> Entry(ss2Recall(_, _), Some(OracleSqlGen.ss2RecallSql)),
+    "ss3_recall" -> Entry(ss3Recall(_, _), Some(OracleSqlGen.ss3RecallSql)),
+    // ss13: the graph-ANN chain — LSH-pair graph build, per-node top-m
+    // window, symmetrize, three unrolled beam rounds — replayed whole
+    // (hyperplane literals; the ss2 machinery one level up)
+    "ss13_graph_topk" -> Entry(ss13GraphTopk(_, _), Some(OracleSqlGen.ss13TopkSql)),
+    "ss13_recall" -> Entry(ss13Recall(_, _), Some(OracleSqlGen.ss13RecallSql)),
+    // ss13_gate: recall floor for the graph index (floor set ~0.15 under
+    // the min measured across SFs - the recallGate convention)
+    "ss13_gate" -> Entry((s: SparkSession, d: String) =>
+      recallGate(ss13Recall(s, d), 80),
+      Some("SELECT 80 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    // ss4: TF-IDF cosine pairs. The idf is rounded to the 6dp grid before
+    // weighting (ta11 rule: 1-ulp ln differences cannot reach the result);
+    // dot products and norm-squares go through round-then-decimal-sum, so
+    // summation order cannot move the cosine in either engine.
+    "ss4_tfidf_pairs" -> Entry(ss4TfidfPairs(_, _), Some(
+      """WITH t AS (
+           SELECT doc_id,
+             UNNEST(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
+           FROM documents WHERE doc_id < 200),
+         tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS DOUBLE) AS tf
+                FROM t GROUP BY 1, 2),
+         d AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
+         n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM tf),
+         w AS (
+           SELECT doc_id, tok, tf * round(ln(n_docs / df), 6) AS w
+           FROM tf JOIN d USING (tok), n
+           WHERE df <= 1.0 * n_docs),
+         nrm AS (
+           SELECT doc_id,
+             sqrt(CAST(SUM(CAST(round(w * w, 6) AS DECIMAL(38,10))) AS DOUBLE))
+               AS nrm
+           FROM w GROUP BY 1),
+         dot AS (
+           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+             CAST(SUM(CAST(round(a.w * b.w, 6) AS DECIMAL(38,10))) AS DOUBLE)
+               AS dot
+           FROM w a JOIN w b USING (tok)
+           WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
+         cosed AS (
+           SELECT id_a, id_b,
+             round(CASE WHEN na.nrm * nb.nrm = 0 THEN 0.0
+               ELSE dot / (na.nrm * nb.nrm) END, 4) AS cosine
+           FROM dot JOIN nrm na ON dot.id_a = na.doc_id
+                    JOIN nrm nb ON dot.id_b = nb.doc_id)
+         SELECT id_a, id_b, cosine FROM cosed
+         WHERE cosine >= 0.8 ORDER BY id_a, id_b""")),
+    // ss5: BM25 top-5 (bm25Ctes)
+    "ss5_bm25_topk" -> Entry(ss5Bm25Topk(_, _), Some(
+      s"""WITH ${bm25Ctes()}
+         SELECT query_id, doc_id, score, rank FROM (
+           SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+             ORDER BY score DESC, doc_id ASC) AS INT) AS rank FROM scored)
+         WHERE rank <= 5 ORDER BY query_id, rank""")),
+    // ss6: the ss1 (dense, k=10) and ss5 (BM25, k=10) oracles composed as
+    // CTEs, fused by RRF — one IEEE division per list (CAST AS DOUBLE:
+    // DuckDB would otherwise divide in DECIMAL) and one addition on a
+    // full-outer join, so exactness is inherited from the two inputs.
+    "ss6_hybrid_rrf" -> Entry(ss6HybridRrf(_, _), Some(
+      s"""WITH ${bm25Ctes("bmscored")},
+         bm AS (
+           SELECT query_id, doc_id, rank FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+               ORDER BY score DESC, doc_id ASC) AS rank FROM bmscored)
+           WHERE rank <= 10),
+         ${exactCosineCtes(scored = "dnscored")},
+         dn AS (
+           SELECT query_id, vec_id AS doc_id, rank FROM ${cosineTopk("dnscored", 10)}),
+         fused AS (
+           SELECT COALESCE(a.query_id, b.query_id) AS query_id,
+             COALESCE(a.doc_id, b.doc_id) AS doc_id,
+             CAST(COALESCE(a.rank, 0) AS INT) AS rank_a,
+             CAST(COALESCE(b.rank, 0) AS INT) AS rank_b,
+             round(COALESCE(CAST(1.0 AS DOUBLE) / (60 + a.rank), 0.0)
+                 + COALESCE(CAST(1.0 AS DOUBLE) / (60 + b.rank), 0.0), 9)
+               AS score
+           FROM dn a FULL OUTER JOIN bm b
+             ON a.query_id = b.query_id AND a.doc_id = b.doc_id)
+         SELECT query_id, doc_id, rank_a, rank_b, score,
+           CAST(rn AS INT) AS rank FROM (
+           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+             ORDER BY score DESC, doc_id ASC) AS rn FROM fused)
+         WHERE rn <= 5 ORDER BY query_id, rank""")))
 
   // --------------------------------------------------------------- graph
 
@@ -1533,6 +2722,81 @@ object SparkEntry {
       Dedup.embeddingCosinePairs(emb, 0.85),
       graft.operators.Clustering.semDedupPairsRouted(emb, 0.85, 64))
   }
+
+  /** gr1 oracle: `iters` PageRank power iterations over the trade graph,
+    * unrolled as CTE pairs (dangling mass d{i}, contributions c{i}, next
+    * ranks r{i}) — arithmetic, rounding grid, and literals (emitted from
+    * the Scala doubles, so both engines parse identical bit patterns)
+    * mirror Graph.pageRank exactly.
+    */
+  private def gr1PagerankSql(iters: Int, damping: Double): String = {
+    val setup =
+      """e AS (
+           SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
+           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+         nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+         nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
+         outdeg AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS outdeg
+                    FROM e GROUP BY 1),
+         r0 AS (SELECT node, round(1.0 / n, 9) AS rank FROM nodes, nn)"""
+    val rounds = (1 to iters).map { i =>
+      s"""d$i AS (
+           SELECT COALESCE(${exactSumSql("rank")}, 0.0) AS dm
+           FROM r${i - 1} r LEFT JOIN outdeg o ON r.node = o.src
+           WHERE o.src IS NULL),
+         c$i AS (
+           SELECT e.dst AS node, ${exactSumSql("round(r.rank / o.outdeg, 9)")} AS s
+           FROM e JOIN r${i - 1} r ON e.src = r.node
+                JOIN outdeg o ON e.src = o.src
+           GROUP BY 1),
+         r$i AS (
+           SELECT nd.node,
+             round(${1.0 - damping} / nn.n + $damping *
+               (COALESCE(c.s, 0.0) + d$i.dm / nn.n), 9) AS rank
+           FROM nodes nd LEFT JOIN c$i c ON nd.node = c.node, nn, d$i)"""
+    }.mkString(",\n         ")
+    s"""WITH $setup,
+         $rounds
+         SELECT node, rank FROM r$iters ORDER BY node"""
+  }
+
+  /** The near-dup pair listings' precision-1.0 literal (cl2, dd6b, dd6c):
+    * the Spark side recomputes the violation counters from the two pair
+    * sets (anti-join + cosine equality), so any false-positive pair or
+    * scoring drift lands a nonzero counter and breaks the hash; has_pairs
+    * guards vacuity (an empty approximation yields 0 rows). dd6c's routed
+    * listing is exact-scored whichever branch the pair-mass probe picks.
+    */
+  private val pairContainmentSql: String =
+    """SELECT 1 AS has_pairs, CAST(0 AS BIGINT) AS n_missing,
+         CAST(0 AS BIGINT) AS n_cosine_mismatch"""
+
+  private def graphEntries: Seq[(String, Entry)] = Seq(
+    // gr1: PageRank's three power iterations unrolled as CTEs — same 9dp
+    // grid, same decimal sums, same dangling/teleport arithmetic (all
+    // literals emitted from the Scala doubles), so the match is bit-exact.
+    "gr1_pagerank" -> Entry(gr1Pagerank(_, _), Some(gr1PagerankSql(3, 0.85))),
+    // gr1b: the salted two-phase variant must produce bit-identical ranks,
+    // so it is held to gr1's oracle VERBATIM — any divergence introduced by
+    // the salt partials is a hash mismatch.
+    "gr1b_pagerank_salted" -> Entry(gr1bPagerankSalted(_, _),
+      Some(gr1PagerankSql(3, 0.85))),
+    "gr2_degrees" -> Entry(gr2Degrees(_, _), Some(
+      """WITH e AS (
+           SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
+           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+         o AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS out_deg
+               FROM e GROUP BY 1),
+         i AS (SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS in_deg
+               FROM e GROUP BY 1)
+         SELECT COALESCE(o.node, i.node) AS node,
+           COALESCE(out_deg, CAST(0 AS BIGINT)) AS out_deg,
+           COALESCE(in_deg, CAST(0 AS BIGINT)) AS in_deg
+         FROM o FULL OUTER JOIN i ON o.node = i.node ORDER BY node""")),
+    "dd6b_recall" -> Entry(dd6bRecall(_, _)),
+    "dd6c_embedding_pairs_routed" -> Entry(dd6cEmbeddingPairsRouted(_, _)),
+    "dd6c_containment" -> Entry(dd6cContainment(_, _), Some(pairContainmentSql)),
+    "dd6c_recall" -> Entry(dd6cRecall(_, _)))
 
   // ------------------------------------------------------------ clustering
 
@@ -1718,6 +2982,39 @@ object SparkEntry {
       .select((col("n_removed") > 0).cast("int").as("has_removed"),
         col("n_removed_unpaired"))
   }
+
+  private def clusteringEntries: Seq[(String, Entry)] = Seq(
+    // cl1: the k-means cluster-size profile with the model RE-TRAINED in
+    // SQL (the ss3 replay at nCells=8, trainMod=1) — the "centroid values
+    // ride a non-SQL model" stance fell with ss3's conversion.
+    "cl1_cluster_sizes" -> Entry(cl1ClusterSizes(_, _), Some(OracleSqlGen.cl1SizesSql)),
+    // cl1 partition invariant: 8 non-empty cells covering every vector
+    "cl1_gate" -> Entry(cl1Gate(_, _), Some("SELECT 8 AS n_cells, 1 AS coverage_ok")),
+    "cl2_semdedup_pairs" -> Entry(cl2SemdedupPairs(_, _)),
+    "cl3_semdedup_recall" -> Entry(cl3SemdedupRecall(_, _)),
+    "cl2_containment" -> Entry(cl2Containment(_, _), Some(pairContainmentSql)),
+    "dd6b_containment" -> Entry(dd6bContainment(_, _), Some(pairContainmentSql)),
+    // Recall-floor gates (recallGate): pass/fail is deterministic (seeded
+    // approximate paths), so the driver hash-checks it even though the
+    // recall VALUE rides non-SQL models (planes / centroids / codebooks).
+    "ss2_gate" -> Entry(ss2Gate(_, _),
+      Some("SELECT 70 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    "ss3_gate" -> Entry(ss3Gate(_, _),
+      Some("SELECT 60 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    "qz4_gate" -> Entry(qz4Gate(_, _),
+      Some("SELECT 70 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    "ss8_gate" -> Entry(ss8Gate(_, _),
+      Some("SELECT 65 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    "dd6b_gate" -> Entry(dd6bGate(_, _),
+      Some("SELECT 95 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    "dd6c_gate" -> Entry(dd6cGate(_, _),
+      Some("SELECT 95 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    "cl3_gate" -> Entry(cl3Gate(_, _),
+      Some("SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    // cl4 removal precision: every removed doc has an exactly-verified
+    // near-dup partner (see cl4Containment scaladoc).
+    "cl4_containment" -> Entry(cl4Containment(_, _), Some(
+      """SELECT 1 AS has_removed, CAST(0 AS BIGINT) AS n_removed_unpaired""")))
 
   // --------------------------------------------------------- text analysis
 
@@ -4424,6 +5721,1562 @@ object SparkEntry {
       .orderBy(col("doc_id"))
   }
 
+  /** bt1_bpe_train oracle: re-LEARN the merge table in DuckDB — `n`
+    * unrolled rounds, each being (1) weighted adjacent-pair counts over
+    * the current word-state table, (2) argmax with the (count DESC, a, b)
+    * tie-break and the min-pair-count-2 stop, (3) a recursive
+    * leftmost-merge walk applying the winner (iterated leftmost-occurrence
+    * merging ≡ the single-pass skip-after-merge scan, since a merge can
+    * never create an earlier occurrence of the same pair). Rounds where
+    * b{r} is empty (training exhausted) contribute no output row and leave
+    * the state unchanged, matching trainMerges' early stop.
+    */
+  private def bpeTrainSql(numMerges: Int,
+      corpus: String = "documents"): String = {
+    val rounds = (1 to numMerges).map { r =>
+      val prev = s"w${r - 1}"
+      // MATERIALIZED: w{r-1} is referenced by both p$r and m$r — without
+      // the hint DuckDB inlines the whole prior-round chain into each
+      // reference and the plan doubles per round (2^rounds).
+      s"""p$r AS MATERIALIZED (
+       SELECT toks[i] AS a, toks[i + 1] AS b, CAST(SUM(c) AS BIGINT) AS cnt
+       FROM (SELECT c, toks, unnest(range(1, len(toks))) AS i FROM $prev)
+       GROUP BY 1, 2),
+     b$r AS MATERIALIZED (SELECT a, b, cnt FROM p$r WHERE cnt >= 2
+       ORDER BY cnt DESC, a, b LIMIT 1),
+     m$r AS (
+       SELECT w, c, toks, 0 AS step FROM $prev
+       UNION ALL
+       SELECT w, c,
+         toks[1:pos - 1] || [mab] || toks[pos + 2:],
+         step + 1
+       FROM (
+         SELECT w, c, toks, step, bb.a || bb.b AS mab,
+           list_position(list_transform(range(1, len(toks)),
+             i -> CASE WHEN toks[i] = bb.a AND toks[i + 1] = bb.b
+               THEN 1 ELSE 0 END), 1) AS pos
+         FROM m$r, b$r bb) s
+       WHERE pos > 0),
+     w$r AS MATERIALIZED (
+       SELECT w, c, arg_max(toks, step) AS toks FROM m$r GROUP BY w, c)"""
+    }.mkString(",\n")
+    val sel = (1 to numMerges)
+      .map(r => s"SELECT $r AS rank, a AS lhs, b AS rhs, cnt AS pair_count FROM b$r")
+      .mkString("\n UNION ALL ")
+    raw"""WITH RECURSIVE
+w0 AS MATERIALIZED (
+  SELECT w, CAST(COUNT(*) AS BIGINT) AS c,
+    list_transform(range(1, length(w) + 1), i -> w[i]) AS toks
+  FROM (SELECT unnest(regexp_extract_all(text, '[\p{L}\p{N}]+')) AS w
+        FROM $corpus)
+  GROUP BY w),
+$rounds
+$sel ORDER BY rank"""
+  }
+
+  /** bt2_bpe_encode oracle: DuckDB re-LEARNS the merge table (the
+    * bpeTrainSql rounds verbatim), builds the rank map from its own b{r}
+    * outputs, and re-ENCODES every pretoken with the f3-style
+    * lowest-rank-leftmost recursive walk — the full tokenizer lifecycle
+    * (train → encode) independently re-derived end to end.
+    */
+  private def bpeEncodeSql(numMerges: Int): String = {
+    val trainSql = bpeTrainSql(numMerges)
+    val ctes = trainSql
+      .stripPrefix("WITH RECURSIVE\n")
+      .split("\n(?=SELECT 1 AS rank)").head.trim.stripSuffix(",")
+    val mtUnion = (1 to numMerges)
+      .map(r => s"SELECT $r AS rnk, a, b FROM b$r").mkString(" UNION ALL ")
+    val pair = "toks[i] || ' ' || toks[i + 1]"
+    val bi = "CAST(best % 1000000000000 AS INT)"
+    raw"""WITH RECURSIVE
+$ctes,
+mt AS MATERIALIZED (
+  SELECT MAP(list(a || ' ' || b ORDER BY rnk), list(rnk ORDER BY rnk)) AS mm
+  FROM ($mtUnion)),
+pts AS (
+  SELECT doc_id, unnest(regexp_extract_all(text, '[\p{L}\p{N}]+')) AS w
+  FROM documents),
+wcnt AS (SELECT doc_id, w, COUNT(*) AS c FROM pts GROUP BY 1, 2),
+wenc AS (SELECT DISTINCT w FROM pts),
+enc_walk AS (
+  SELECT w, list_transform(range(1, length(w) + 1), i -> w[i]) AS toks,
+    0 AS step
+  FROM wenc
+  UNION ALL
+  SELECT w,
+    toks[1:$bi - 1] || [toks[$bi] || toks[$bi + 1]] || toks[$bi + 2:],
+    step + 1
+  FROM (
+    SELECT w, toks, step,
+      list_min([
+        CASE WHEN len(element_at(mm, $pair)) > 0
+          THEN element_at(mm, $pair)[1] * 1000000000000 + i END
+        FOR i IN range(1, len(toks))]) AS best
+    FROM enc_walk, mt) s
+  WHERE best IS NOT NULL),
+wtok AS (SELECT w, len(arg_max(toks, step)) AS n FROM enc_walk GROUP BY w),
+agg AS (
+  SELECT wc.doc_id, SUM(wc.c * wt.n) AS n
+  FROM wcnt wc JOIN wtok wt ON wt.w = wc.w GROUP BY 1)
+SELECT d.doc_id, CAST(COALESCE(a.n, 0) AS BIGINT) AS n_bpe_tokens
+FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
+ORDER BY d.doc_id"""
+  }
+
+  /** bt3_bpe_vocab oracle: re-learn (bpeTrainSql rounds), then base ids
+    * from the ranked distinct corpus symbols, merge ids appended in rank
+    * order.
+    */
+  private def bpeVocabSql(numMerges: Int): String = {
+    val trainSql = bpeTrainSql(numMerges)
+    val ctes = trainSql
+      .stripPrefix("WITH RECURSIVE\n")
+      .split("\n(?=SELECT 1 AS rank)").head.trim.stripSuffix(",")
+    val mtUnion = (1 to numMerges)
+      .map(r => s"SELECT $r AS rnk, a, b FROM b$r").mkString(" UNION ALL ")
+    raw"""WITH RECURSIVE
+$ctes,
+vbase AS (
+  SELECT DISTINCT tok AS token FROM (SELECT unnest(toks) AS tok FROM w0)),
+vbi AS (
+  SELECT token, ROW_NUMBER() OVER (ORDER BY token) - 1 AS token_id
+  FROM vbase),
+vm AS (SELECT rnk, a || b AS token FROM ($mtUnion))
+SELECT CAST(token_id AS BIGINT) AS token_id, token, 'base' AS kind FROM vbi
+UNION ALL
+SELECT (SELECT COUNT(*) FROM vbase) + rnk - 1, token, 'merge' FROM vm
+ORDER BY token_id"""
+  }
+
+  /** Shared CTE list + per-doc select of the rouge-ngram oracle (used by
+    * eval_rouge_ngram and the stats wrapper eval_stats_ngram).
+    */
+  /** The ROUGE-1/2 chain from a rel named `pairs` (doc_id, gen, ref) —
+    * shared by eval_rouge_ngram (token-slice pairing) and q7 (real
+    * summarizer outputs on a composite doc key).
+    */
+  private val rougeChainCtes: String =
+    """tok AS (
+           SELECT doc_id,
+             regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS gt,
+             regexp_extract_all(lower(ref), '[\p{L}\p{N}]+') AS rt
+           FROM pairs),
+         grams AS (
+           SELECT doc_id, gt, rt,
+             CASE WHEN len(gt) >= 2 THEN list_transform(generate_series(1, len(gt)-1),
+               k -> gt[k] || ' ' || gt[k+1]) ELSE [] END AS g2,
+             CASE WHEN len(rt) >= 2 THEN list_transform(generate_series(1, len(rt)-1),
+               k -> rt[k] || ' ' || rt[k+1]) ELSE [] END AS r2
+           FROM tok),
+         u1 AS (SELECT doc_id, tok, COUNT(*) AS c FROM (SELECT doc_id, unnest(gt) AS tok FROM grams) GROUP BY 1, 2),
+         v1 AS (SELECT doc_id, tok, COUNT(*) AS c FROM (SELECT doc_id, unnest(rt) AS tok FROM grams) GROUP BY 1, 2),
+         o1 AS (SELECT doc_id, SUM(least(u1.c, v1.c)) AS ov FROM u1 JOIN v1 USING (doc_id, tok) GROUP BY 1),
+         u2 AS (SELECT doc_id, tok, COUNT(*) AS c FROM (SELECT doc_id, unnest(g2) AS tok FROM grams) GROUP BY 1, 2),
+         v2 AS (SELECT doc_id, tok, COUNT(*) AS c FROM (SELECT doc_id, unnest(r2) AS tok FROM grams) GROUP BY 1, 2),
+         o2 AS (SELECT doc_id, SUM(least(u2.c, v2.c)) AS ov FROM u2 JOIN v2 USING (doc_id, tok) GROUP BY 1),
+         lens AS (SELECT doc_id, len(gt) AS gc1, len(rt) AS rc1, len(g2) AS gc2, len(r2) AS rc2 FROM grams)"""
+
+  /** ta18's full NB replay — shared verbatim by `ta18_nb_classifier`
+    * (batch aggregate) and `stream_classify` (collected-model per-row
+    * scorer): both must reproduce this SQL exactly.
+    */
+  private val ta18NbSql: String =
+    """WITH tok AS (
+           SELECT doc_id, source AS cls,
+             UNNEST(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
+           FROM documents),
+         vocab AS (
+           SELECT tok FROM (
+             SELECT tok, COUNT(*) AS c FROM tok GROUP BY 1
+             ORDER BY c DESC, tok LIMIT 512)),
+         vt AS (SELECT t.doc_id, t.cls, t.tok FROM tok t JOIN vocab USING (tok)),
+         cls AS (SELECT source AS cls, COUNT(*) AS dc FROM documents GROUP BY 1),
+         nd AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents),
+         v AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM vocab),
+         ctok AS (SELECT cls, tok, COUNT(*) AS n FROM vt GROUP BY 1, 2),
+         tc AS (SELECT cls, SUM(n) AS tc FROM ctok GROUP BY 1),
+         model AS (
+           SELECT g.cls, g.tok,
+             CAST(round(round(ln((COALESCE(ct.n, 0) + 1)
+               / CAST(t.tc + v.v AS DOUBLE)), 6) * 1000000) AS BIGINT) AS lpm
+           FROM (SELECT c.cls, vb.tok FROM cls c CROSS JOIN vocab vb) g
+           LEFT JOIN ctok ct ON g.cls = ct.cls AND g.tok = ct.tok
+           JOIN tc t ON g.cls = t.cls, v),
+         prior AS (
+           SELECT cls,
+             CAST(round(round(ln(dc / n), 6) * 1000000) AS BIGINT) AS pm
+           FROM cls, nd),
+         dtok AS (SELECT doc_id, tok, COUNT(*) AS dn FROM vt GROUP BY 1, 2),
+         contrib AS (
+           SELECT dt.doc_id, m.cls, SUM(dt.dn * m.lpm) AS s
+           FROM dtok dt JOIN model m USING (tok) GROUP BY 1, 2),
+         scored AS (
+           SELECT d.doc_id, d.source, p.cls, p.pm + COALESCE(c.s, 0) AS sm
+           FROM documents d CROSS JOIN prior p
+           LEFT JOIN contrib c ON c.doc_id = d.doc_id AND c.cls = p.cls),
+         best AS (
+           SELECT doc_id, source, cls, sm,
+             ROW_NUMBER() OVER (PARTITION BY doc_id
+               ORDER BY sm DESC, cls) AS rn
+           FROM scored)
+         SELECT doc_id, source, cls AS pred_source, sm / 1e6 AS score
+         FROM best WHERE rn = 1 ORDER BY doc_id"""
+
+  private val rougeNgramCtes: String =
+    s"${tokenSlicePairsCte()},\n$rougeChainCtes"
+
+  private val rougeNgramSelect: String =
+    """         SELECT l.doc_id,
+           round(CASE WHEN gc1 = 0 OR rc1 = 0 OR coalesce(o1.ov, 0) = 0 THEN 0.0
+             ELSE 2.0 * (o1.ov * 1.0 / gc1) * (o1.ov * 1.0 / rc1)
+                  / ((o1.ov * 1.0 / gc1) + (o1.ov * 1.0 / rc1)) END, 4) AS rouge1_f,
+           round(CASE WHEN gc2 = 0 OR rc2 = 0 OR coalesce(o2.ov, 0) = 0 THEN 0.0
+             ELSE 2.0 * (o2.ov * 1.0 / gc2) * (o2.ov * 1.0 / rc2)
+                  / ((o2.ov * 1.0 / gc2) + (o2.ov * 1.0 / rc2)) END, 4) AS rouge2_f
+         FROM lens l LEFT JOIN o1 ON l.doc_id = o1.doc_id
+                     LEFT JOIN o2 ON l.doc_id = o2.doc_id"""
+
+  /** G6/G9 stats formulas over the rouge-ngram rows (mirrors
+    * Metrics.summaryStats: decimal-exact mean, population std via
+    * sum/sumSq, r4 everywhere).
+    */
+  private def rougeStatsSql: String = {
+    def block(c: String) =
+      s"""SELECT '$c' AS metric,
+         round(${exactSumSql(c)} / COUNT(*), 4) AS mean,
+         round(sqrt(greatest(
+           (${exactSumSql(s"$c * $c")}
+            - ${exactSumSql(c)} * ${exactSumSql(c)} / CAST(COUNT(*) AS DOUBLE))
+           / CAST(COUNT(*) AS DOUBLE), 0.0)), 4) AS std,
+         round(MIN($c), 4) AS min, round(MAX($c), 4) AS max
+         FROM m"""
+    s"""WITH $rougeNgramCtes,
+       m AS ($rougeNgramSelect)
+       ${block("rouge1_f")}
+       UNION ALL
+       ${block("rouge2_f")}
+       ORDER BY metric"""
+  }
+
+  /** The lineitem columns the stats oracles profile. */
+  private val StatsCols =
+    Seq("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag", "l_shipdate")
+
+  /** The per-column stats rows of ANALYZE over `rel`: row and null
+    * counts, min/max rendered as VARCHAR in both engines, then the
+    * `ndv(column)` column(s); one row per column, ordered by name.
+    */
+  private def columnStatsSql(rel: String, cols: Seq[String],
+      ndv: String => String): String =
+    cols.map(c =>
+      s"""SELECT '$c' AS column_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
+    CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
+    CAST(MIN($c) AS VARCHAR) AS min_value,
+    CAST(MAX($c) AS VARCHAR) AS max_value,
+    ${ndv(c)}
+  FROM $rel""").mkString("", "\n  UNION ALL\n", "\n  ORDER BY column_name")
+
+  /** TextAnalysis.normalizeText over `text`: NFC, then the control and
+    * zero-width characters stripped (SQL string literals are raw, so the
+    * regex escapes reach RE2 verbatim).
+    */
+  private val normalizeTextSql: String =
+    """regexp_replace(regexp_replace(nfc_normalize(text),
+         '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
+         '[\x{200B}\x{200C}\x{200D}\x{FEFF}]', '', 'g')"""
+
+  /** ta19's derived-page template + full extraction chain as CTEs ending
+    * in `xs4(doc_id, h, t)` — h = the raw page, t = the extracted text.
+    * Shared verbatim by the ta19 oracle and the stream_ccingest oracle
+    * (patterns interpolated from the TextAnalysis constants).
+    */
+  private def htmlExtractCtes(src: String = "documents"): String = {
+    import graft.operators.TextAnalysis.{HtmlBlockCloseRe, HtmlCommentRe,
+      HtmlNlRunRe, HtmlNlSpaceRe, HtmlOuterWsRe, HtmlScriptRe,
+      HtmlSpaceRunRe, HtmlStyleRe, HtmlTagRe, HtmlTitleRe}
+    s"""xhtml AS (
+       SELECT doc_id,
+         '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
+         '</title><style type="text/css">body { color: #fff; }' ||
+         '</style><script type="text/javascript">var x = 1; ' ||
+         'if (x < 2) { x = "a&b"; }</script></head><body><!-- nav ' ||
+         CAST(doc_id AS VARCHAR) ||
+         ' --><div id="nav"><ul><li><a href="/home">Home</a></li>' ||
+         '<li><a href="/about">About&nbsp;Us</a></li></ul></div>' ||
+         '<h1>Corpus</h1><p>' || coalesce(text, '') ||
+         '</p><p>Fish &amp; Chips say &quot;hi&quot; to ' ||
+         '&lt;b&gt;bold&lt;/b&gt;</p><br/></body></html>' AS h
+       FROM $src),
+     xs1 AS (
+       SELECT doc_id, h,
+         regexp_replace(regexp_replace(regexp_replace(regexp_replace(h,
+           '$HtmlCommentRe', '', 'g'),
+           '$HtmlScriptRe', '', 'g'),
+           '$HtmlStyleRe', '', 'g'),
+           '$HtmlTitleRe', '', 'g') AS t
+       FROM xhtml),
+     xs2 AS (
+       SELECT doc_id, h,
+         regexp_replace(regexp_replace(t,
+           '$HtmlBlockCloseRe', chr(10), 'g'),
+           '$HtmlTagRe', '', 'g') AS t
+       FROM xs1),
+     xs3 AS (
+       SELECT doc_id, h,
+         replace(replace(replace(replace(replace(t,
+           '&nbsp;', ' '), '&quot;', '"'), '&lt;', '<'), '&gt;', '>'),
+           '&amp;', '&') AS t
+       FROM xs2),
+     xs4 AS (
+       SELECT doc_id, h,
+         regexp_replace(regexp_replace(regexp_replace(regexp_replace(t,
+           '$HtmlSpaceRunRe', ' ', 'g'),
+           '$HtmlNlSpaceRe', chr(10), 'g'),
+           '$HtmlNlRunRe', chr(10) || chr(10), 'g'),
+           '$HtmlOuterWsRe', '', 'g') AS t
+       FROM xs3)"""
+  }
+
+  private def qualitySql: String = {
+    val en = TextAnalysis.StopwordMarkers("en").map(s => s"'$s'").mkString(", ")
+    s"""SELECT doc_id,
+       ${tok("text")} AS n_tokens,
+       length(text) AS n_chars,
+       round(CASE WHEN ${tok("text")} = 0 THEN 0.0
+         ELSE length(regexp_replace(text, '\\s', '', 'g')) * 1.0 / ${tok("text")} END, 4) AS avg_word_len,
+       round(CASE WHEN length(text) = 0 THEN 0.0
+         ELSE (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) * 1.0 / length(text) END, 4) AS punct_ratio,
+       round(CASE WHEN ${tok("text")} = 0 THEN 0.0
+         ELSE len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$en], x))) * 1.0 / ${tok("text")} END, 4) AS stopword_ratio,
+       round(CASE WHEN length(text) = 0 THEN 0.0
+         ELSE (length(text) - length(regexp_replace(text, '[A-Z]', '', 'g'))) * 1.0 / length(text) END, 4) AS upper_ratio
+       FROM documents ORDER BY doc_id"""
+  }
+
+  /** DuckDB mirror of [[TextAnalysis.gopherRules]] — same token/line
+    * derivations, ratios on the same grid, same thresholds.
+    */
+  private def gopherSql: String = {
+    val stops = TextAnalysis.GopherStopwords
+      .map(w => s"CAST(list_contains(lt, '$w') AS INT)").mkString(" + ")
+    s"""WITH pl AS (
+       SELECT doc_id, text || CASE WHEN doc_id % 2 = 0
+           THEN ' the be to of and that have with' ELSE '' END AS text
+       FROM documents),
+     g AS (
+       SELECT doc_id,
+         ${tok("text")} AS n_words,
+         string_split_regex(trim(text), '\\s+') AS toks,
+         string_split_regex(lower(trim(text)), '\\s+') AS lt,
+         string_split(text, chr(10)) AS lines,
+         length(regexp_replace(text, '\\s', '', 'g')) AS nonspace,
+         (length(text) - length(regexp_replace(text, '#', '', 'g')))
+           + (length(text) - length(regexp_replace(text, '…', '', 'g')))
+           + CAST((length(text)
+               - length(regexp_replace(text, '\\.\\.\\.', '', 'g'))) / 3
+             AS BIGINT) AS nsym
+       FROM pl),
+     s AS (
+       SELECT doc_id, n_words,
+         CASE WHEN n_words = 0 THEN 0.0 ELSE nonspace * 1.0 / n_words END AS mean_word_len,
+         CASE WHEN n_words = 0 THEN 0.0 ELSE nsym * 1.0 / n_words END AS symbol_ratio,
+         CASE WHEN len(lines) = 0 THEN 0.0 ELSE
+           len(list_filter(lines, l -> ends_with(rtrim(l), '...')
+             OR ends_with(rtrim(l), '…'))) * 1.0 / len(lines) END AS ellipsis_line_ratio,
+         CASE WHEN len(lines) = 0 THEN 0.0 ELSE
+           len(list_filter(lines, l -> starts_with(ltrim(l), '-')
+             OR starts_with(ltrim(l), '*') OR starts_with(ltrim(l), '•')
+             OR starts_with(ltrim(l), '‣') OR starts_with(ltrim(l), '▪')))
+           * 1.0 / len(lines) END AS bullet_line_ratio,
+         CASE WHEN n_words = 0 THEN 0.0 ELSE
+           len(list_filter(toks, w -> regexp_matches(w, '[\\p{L}]')))
+           * 1.0 / n_words END AS alpha_word_ratio,
+         CAST($stops AS INT) AS stop_hits
+       FROM g)
+     SELECT doc_id, n_words,
+       round(mean_word_len, 4) AS mean_word_len,
+       round(symbol_ratio, 4) AS symbol_ratio,
+       round(ellipsis_line_ratio, 4) AS ellipsis_line_ratio,
+       round(bullet_line_ratio, 4) AS bullet_line_ratio,
+       round(alpha_word_ratio, 4) AS alpha_word_ratio,
+       stop_hits,
+       CAST(n_words >= 50 AND n_words <= 100000 AS INT) AS pass_words,
+       CAST(mean_word_len >= 3.0 AND mean_word_len <= 10.0 AS INT) AS pass_word_len,
+       CAST(symbol_ratio <= 0.1 AS INT) AS pass_symbol,
+       CAST(ellipsis_line_ratio <= 0.3 AS INT) AS pass_ellipsis,
+       CAST(bullet_line_ratio <= 0.9 AS INT) AS pass_bullet,
+       CAST(alpha_word_ratio >= 0.8 AS INT) AS pass_alpha,
+       CAST(stop_hits >= 2 AS INT) AS pass_stopwords,
+       CAST(n_words >= 50 AND n_words <= 100000
+         AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+         AND symbol_ratio <= 0.1 AND ellipsis_line_ratio <= 0.3
+         AND bullet_line_ratio <= 0.9 AND alpha_word_ratio >= 0.8
+         AND stop_hits >= 2 AS INT) AS gopher_pass
+     FROM s ORDER BY doc_id"""
+  }
+
+  /** DuckDB mirror of the ta14 planted-URL corpus + [[TextAnalysis
+    * .urlSignals]] extraction + blocklist gate.
+    */
+  private def urlFilterSql: String =
+    s"""WITH p AS (
+       SELECT doc_id, lower(text || ' see https://' || source || '.example.'
+           || (['com','org','net'])[CAST(doc_id % 3 AS INT) + 1]
+           || '/p/' || CAST(doc_id AS VARCHAR)
+           || CASE WHEN doc_id % 7 = 0
+                THEN ' http://tracker.spam.bad/x' || CAST(doc_id AS VARCHAR)
+                ELSE '' END) AS t
+       FROM documents),
+     u AS (
+       SELECT doc_id,
+         regexp_extract_all(t, 'https?://[a-z0-9.-]+[a-z0-9](/[^\\s]*)?', 0) AS urls
+       FROM p),
+     h AS (
+       SELECT doc_id, CAST(len(urls) AS BIGINT) AS n_urls,
+         list_sort(list_distinct(list_transform(urls,
+           x -> regexp_extract(x, 'https?://([a-z0-9.-]+[a-z0-9])', 1)))) AS hosts
+       FROM u)
+     SELECT doc_id, n_urls,
+       array_to_string(hosts, ',') AS hosts_csv,
+       CAST(len(list_filter(hosts, x -> x = 'spam.bad'
+         OR ends_with(x, '.spam.bad'))) > 0 AS INT) AS blocked
+     FROM h ORDER BY doc_id"""
+
+  private def langIdSql: String = s"${langIdSqlOn("documents")} ORDER BY doc_id"
+
+  /** The ta2 lang-ID SELECT (no ORDER BY) parameterized on the source
+    * relation — reused verbatim as a CTE inside the pipe_ccnet oracle.
+    */
+  private def langIdSqlOn(rel: String): String = {
+    val langs = TextAnalysis.StopwordMarkers.keys.toSeq.sorted
+    def hits(l: String) = {
+      val words = TextAnalysis.StopwordMarkers(l).map(s => s"'$s'").mkString(", ")
+      s"len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$words], x)))"
+    }
+    val hitCols = langs.map(l => s"${hits(l)} AS hits_$l").mkString(", ")
+    val maxExpr = s"greatest(${langs.map(l => s"hits_$l").mkString(", ")})"
+    val caseExpr = langs.map(l => s"WHEN hits_$l = m THEN '$l'").mkString(" ")
+    s"""SELECT doc_id,
+       CASE WHEN m <= 0 THEN 'und' $caseExpr END AS lang_pred,
+       ${langs.map(l => s"hits_$l").mkString(", ")}
+       FROM (SELECT doc_id, $hitCols, $maxExpr AS m FROM $rel)"""
+  }
+
+  private def textAnalysisEntries: Seq[(String, Entry)] = Seq(
+    "ta1_quality" -> Entry(ta1Quality(_, _), Some(qualitySql)),
+    "ta2_lang_id" -> Entry(ta2LangId(_, _), Some(langIdSql)),
+    "ta3_token_stats" -> Entry(ta3TokenStats(_, _), Some(
+      s"""SELECT doc_id, ${tok("text")} AS ws_tokens,
+         len(regexp_extract_all(text, '[\\p{L}]+')) AS alpha_runs,
+         len(regexp_extract_all(text, '[0-9]+')) AS digit_runs,
+         len(regexp_extract_all(text, '[[:punct:]]')) AS punct_marks,
+         len(regexp_extract_all(text, '[\\p{L}]+')) + len(regexp_extract_all(text, '[0-9]+'))
+           + len(regexp_extract_all(text, '[[:punct:]]')) AS bpe_estimate
+         FROM documents ORDER BY doc_id""")),
+    // 60-bit md5 content hash of the normalized token stream — same
+    // tokenization as eval_rouge_ngram's, same hex-parse as the minhash
+    // family
+    "ta4_fingerprint" -> Entry(ta4Fingerprint(_, _), Some(
+      """SELECT doc_id,
+         CAST(('0x' || substr(md5(array_to_string(
+           regexp_extract_all(lower(text), '[\p{L}\p{N}]+'), ' ')), 1, 15)) AS BIGINT)
+           AS fingerprint
+         FROM documents ORDER BY doc_id""")),
+    // corpus vocabulary: same tokenization as the fingerprint family
+    "ta5_vocab" -> Entry(ta5Vocab(_, _), Some(
+      """WITH t AS (
+           SELECT unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
+           FROM documents)
+         SELECT COUNT(DISTINCT tok) AS vocab_size, COUNT(*) AS n_tokens,
+           round(COUNT(DISTINCT tok) * 1.0 / COUNT(*), 4) AS type_token_ratio
+         FROM t""")),
+    // ta5b: the exact stats reproduce in SQL; the HLL bound is asserted as
+    // a constant because a correct sketch at rsd=2% sits far inside the 5%
+    // tolerance — a broken estimator flips the flag and fails the hash
+    "ta5b_vocab_hll" -> Entry(ta5bVocabHll(_, _), Some(
+      """WITH t AS (
+           SELECT unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
+           FROM documents)
+         SELECT COUNT(DISTINCT tok) AS vocab_size, COUNT(*) AS n_tokens,
+           TRUE AS hll_ok
+         FROM t""")),
+    // ta15: exact heavy hitters — the SQL replay recomputes every token
+    // with count > n/50; a Misra-Gries candidate pass that dropped a true
+    // heavy would leave the Spark output short a row and break the hash
+    "ta15_heavy_hitters" -> Entry(ta15HeavyHitters(_, _), Some(
+      """WITH t AS (
+           SELECT unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
+           FROM documents),
+         n AS (SELECT COUNT(*) AS n_total FROM t),
+         c AS (SELECT tok, COUNT(*) AS cnt FROM t GROUP BY 1)
+         SELECT tok AS token, cnt, round(cnt * 1.0 / n_total, 4) AS freq
+         FROM c, n WHERE cnt * 50 > n_total ORDER BY cnt DESC, token""")),
+    // ta7: the same RE2-compatible regex constants drive both engines (no
+    // drift possible); counts on the original text, replacement order
+    // email -> phone -> ip
+    "ta7_pii_redact" -> Entry(ta7PiiRedact(_, _), Some {
+      import graft.operators.TextAnalysis.{EmailRe, Ipv4Re, PhoneRe}
+      s"""WITH pii AS (
+           SELECT doc_id,
+             text || ' contact user' || CAST(doc_id AS VARCHAR) ||
+             '@example.com or +84 90 123 45' || CAST(doc_id AS VARCHAR) ||
+             ' at 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7 now' AS t
+           FROM documents)
+         SELECT doc_id,
+           regexp_replace(regexp_replace(regexp_replace(t,
+             '$EmailRe', '<EMAIL>', 'g'),
+             '$PhoneRe', '<PHONE>', 'g'),
+             '$Ipv4Re', '<IP>', 'g') AS text_redacted,
+           CAST(len(regexp_extract_all(t, '$EmailRe')) AS INT) AS n_emails,
+           CAST(len(regexp_extract_all(t, '$PhoneRe')) AS INT) AS n_phones,
+           CAST(len(regexp_extract_all(t, '$Ipv4Re')) AS INT) AS n_ips
+         FROM pii ORDER BY doc_id"""
+    }),
+    // ta19: the HTML template and every regex/replace stage replayed
+    // verbatim (the shared htmlExtractCtes fragment — also composed into
+    // the stream_ccingest oracle)
+    "ta19_html_extract" -> Entry(ta19HtmlExtract(_, _), Some {
+      import graft.operators.TextAnalysis.{HtmlLinkRe, HtmlTagRe}
+      s"""WITH ${htmlExtractCtes()}
+         SELECT doc_id, t AS clean_text,
+           CAST(len(regexp_extract_all(h, '$HtmlTagRe')) AS INT) AS n_tags,
+           CAST(len(regexp_extract_all(h, '$HtmlLinkRe')) AS INT) AS n_links,
+           CASE WHEN length(h) = 0 THEN 0.0
+             ELSE round(length(t) * 1.0 / length(h), 4) END AS text_ratio
+         FROM xs4 ORDER BY doc_id"""
+    }),
+    // ta9: normalizeTextSql over injected NFD, control and zero-width chars
+    "ta9_normalize" -> Entry(ta9Normalize(_, _), Some(
+      s"""WITH inj AS (
+           SELECT doc_id,
+             substr(text, 1, 40) || ' cafe' || chr(769) || chr(7) || chr(8203)
+               || ' fin' AS text
+           FROM documents),
+         n AS (SELECT doc_id, text, $normalizeTextSql AS norm_text FROM inj)
+         SELECT doc_id, norm_text, norm_text <> text AS changed
+         FROM n ORDER BY doc_id""")),
+    // ta12: Spark exact percentile and DuckDB quantile_cont share the
+    // (1-g)*a[k] + g*a[k+1] interpolation at rank p*(n-1)
+    "ta12_length_stats" -> Entry(ta12LengthStats(_, _), Some(
+      s"""WITH d AS (SELECT CAST(${tok("text")} AS BIGINT) AS n FROM documents)
+         SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+           round(CAST(SUM(CAST(CAST(n AS DOUBLE) AS DECIMAL(38,10))) AS DOUBLE)
+             / COUNT(*), 4) AS mean_tokens,
+           round(quantile_cont(n, 0.5), 4) AS p50,
+           round(quantile_cont(n, 0.9), 4) AS p90,
+           round(quantile_cont(n, 0.99), 4) AS p99,
+           MAX(n) AS max_tokens
+         FROM d""")),
+    // ta12b: the GK sketch's rank-error contract holds under any merge
+    // order — the flags are layout-independent even though the estimate
+    // itself is not
+    "ta12b_length_approx" -> Entry(ta12bLengthApprox(_, _), Some(
+      "SELECT 1 AS p50_ok, 1 AS p90_ok, 1 AS p99_ok")),
+    // ta16: both count tables re-trained in SQL (bigramLmCtes); the 4dp
+    // mean is integer HALF-UP on micro-units (lp is on the 6dp grid) —
+    // round(double) diverges between engines on exact 4dp halves.
+    "ta16_bigram_logprob" -> Entry(ta16BigramLogprob(_, _), Some(
+      s"""WITH ${bigramLmCtes("documents")}
+         SELECT doc_id, n_bigrams, $lmAvgExpr AS avg_logprob
+         FROM lm ORDER BY doc_id""")),
+    // ta17: the ta16 LM replay + NTILE(3) per source over the identical
+    // (avg_logprob DESC, doc_id) total order — both engines implement
+    // SQL-standard ntile (first n mod 3 buckets take the extra row)
+    "ta17_ppl_buckets" -> Entry(ta17PplBuckets(_, _), Some(
+      s"""WITH ${bigramLmCtes("documents")},
+         $lmMeanCte,
+         ranked AS (
+           SELECT lm2.doc_id, d.source AS domain, lm2.n_bigrams,
+             lm2.avg_logprob,
+             NTILE(3) OVER (PARTITION BY d.source
+               ORDER BY lm2.avg_logprob DESC, lm2.doc_id) AS tercile
+           FROM lm2 JOIN documents d ON lm2.doc_id = d.doc_id)
+         SELECT doc_id, domain, n_bigrams, avg_logprob, tercile,
+           CASE tercile WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
+             ELSE 'tail' END AS bucket
+         FROM ranked ORDER BY doc_id""")),
+    "cls1_cg_weights" -> Entry(cls1CgWeights(_, _), Some(OracleSqlGen.cls1WeightsSql())),
+    "cls1_cg_scores" -> Entry(cls1CgScores(_, _), Some(OracleSqlGen.cls1ScoresSql())),
+    "cls1_cg_eval" -> Entry(cls1CgEval(_, _), Some(OracleSqlGen.cls1EvalSql())),
+    "pipe_curation_trained" -> Entry(pipeCurationTrained(_, _),
+      Some(OracleSqlGen.pipeCurationTrainedSql())),
+    // cls1: the trained linear quality classifier with its TRAINING
+    // replayed — hashed-presence features, b = X'y/n, and eight unrolled
+    // conjugate-gradient steps on the decimal(38,10) grid (the exactSum
+    // contract makes every distributed sum order-free, and CG has no
+    // transcendentals, so the optimization loop itself hash-checks).
+    // ta15b: sketch build + probe replayed — salted md5 cells, integer
+    // counters, min over depth rows; est >= exact is visible per row.
+    "ta15b_heavy_hitters_cms" -> Entry(ta15bHeavyHittersCms(_, _), Some("""
+WITH tk AS (
+  SELECT unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
+  FROM documents),
+pairs AS (
+  SELECT u.r,
+    CAST(('0x' || substr(md5('cms' || u.r || ':' || tok), 1, 15)) AS BIGINT)
+      % 256 AS cell
+  FROM tk, LATERAL UNNEST(generate_series(0, 3)) AS u(r)),
+sk AS (SELECT r, cell, CAST(COUNT(*) AS BIGINT) AS c FROM pairs GROUP BY 1, 2),
+ex AS (
+  SELECT tok, CAST(COUNT(*) AS BIGINT) AS exact FROM tk GROUP BY 1
+  HAVING COUNT(*) >= 100),
+pr AS (
+  SELECT ex.tok, ex.exact, u.r,
+    CAST(('0x' || substr(md5('cms' || u.r || ':' || ex.tok), 1, 15)) AS BIGINT)
+      % 256 AS cell
+  FROM ex, LATERAL UNNEST(generate_series(0, 3)) AS u(r)),
+est AS (
+  SELECT pr.tok, pr.exact, MIN(sk.c) AS est
+  FROM pr JOIN sk USING (r, cell) GROUP BY 1, 2)
+SELECT tok AS token, est, exact, est - exact AS overcount
+FROM est ORDER BY exact DESC, token""")),
+    // ta20: the JS/TV shard-drift monitor replayed — md5 buckets,
+    // micro-nat-snapped logs, decimal-exact sums (all established
+    // parity conventions), so the whole report hash-checks.
+    "ta20_shard_drift" -> Entry(ta20ShardDrift(_, _), Some("""
+WITH pl AS (
+  SELECT doc_id, source,
+    text || CASE WHEN source = 'src3'
+      THEN ' casino jackpot lotto winner bonus spins' ELSE '' END AS text
+  FROM documents),
+fx AS (
+  SELECT source AS shard,
+    CAST(('0x' || substr(md5('b:' || tok), 1, 15)) AS BIGINT) % 64 AS bucket
+  FROM (SELECT source,
+      unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
+    FROM pl)),
+sc AS (SELECT shard, bucket, CAST(COUNT(*) AS BIGINT) AS c FROM fx GROUP BY 1, 2),
+nd AS (SELECT source AS shard, CAST(COUNT(*) AS BIGINT) AS n_docs FROM pl GROUP BY 1),
+tt AS (SELECT shard, CAST(SUM(c) AS BIGINT) AS n_s FROM sc GROUP BY 1),
+cbk AS (SELECT bucket, CAST(SUM(c) AS BIGINT) AS cq FROM sc GROUP BY 1),
+nt AS (SELECT CAST(SUM(cq) AS BIGINT) AS n_t FROM cbk),
+grid AS (
+  SELECT t.shard, b.bucket, t.n_s, b.cq, (SELECT n_t FROM nt) AS n_t,
+    COALESCE(s.c, 0) AS c
+  FROM tt t CROSS JOIN cbk b
+  LEFT JOIN sc s ON s.shard = t.shard AND s.bucket = b.bucket),
+term AS (
+  SELECT shard, n_s, c, cq,
+    CAST(c AS DOUBLE) / CAST(n_s AS DOUBLE) AS p,
+    CAST(cq AS DOUBLE) / CAST(n_t AS DOUBLE) AS q
+  FROM grid),
+ctr AS (
+  SELECT shard, n_s,
+    (p * (CASE WHEN c > 0
+        THEN CAST(round(round(ln(p / ((p + q) / 2.0)), 6) * 1e6) AS BIGINT)
+        ELSE 0 END / 1e6)) * 0.5
+      + (q * (CAST(round(round(ln(q / ((p + q) / 2.0)), 6) * 1e6) AS BIGINT)
+        / 1e6)) * 0.5 AS contrib,
+    abs(p - q) * 0.5 AS tv
+  FROM term),
+agg AS (
+  SELECT shard, MIN(n_s) AS n_tokens,
+    round(CAST(SUM(CAST(contrib AS DECIMAL(38, 10))) AS DOUBLE), 6) AS js,
+    round(CAST(SUM(CAST(tv AS DECIMAL(38, 10))) AS DOUBLE), 6) AS tv
+  FROM ctr GROUP BY 1)
+SELECT nd.shard, nd.n_docs, COALESCE(a.n_tokens, 0) AS n_tokens, a.js, a.tv,
+  CAST(COALESCE(a.n_tokens, 0) = 0 OR a.js > 0.01 AS INT) AS drifted
+FROM nd LEFT JOIN agg a USING (shard) ORDER BY shard""")),
+    // s13: the z-order layout key replayed — affine long-math bucket
+    // scaling (floor division, clamped) and the 16-bit Morton interleave
+    // as a flat shift/mask sum; pure integer arithmetic end to end.
+    "s13_zorder_stats" -> Entry(s13ZorderStats(_, _), Some(s"""
+WITH $keyRangeCte,
+sk AS (
+  SELECT l_orderkey AS a, l_partkey AS b,
+    ${zScaleSql("l_orderkey", "alo", "ahi", "sa")},
+    ${zScaleSql("l_partkey", "blo", "bhi", "sb")}
+  FROM lineitem),
+zt AS (SELECT a, b, ${mortonSql(Seq("sa", "sb"))} AS z FROM sk)
+SELECT z >> 26 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
+  MIN(a) AS min_a, MAX(a) AS max_a, MIN(b) AS min_b, MAX(b) AS max_b
+FROM zt GROUP BY 1 ORDER BY bucket""")),
+    // s13b: the 3-way Morton key — the interleave sum is GENERATED (48
+    // terms at bits=16), exactly mirroring ZOrder.interleave3's bit
+    // placement (a->3i+2, b->3i+1, c->3i); 64 buckets = top 6 bits of
+    // the 48-bit key
+    "s13b_zorder3_stats" -> Entry(s13bZorder3Stats(_, _), Some(
+      s"""WITH rg AS (
+  SELECT MIN(l_orderkey) AS alo, MAX(l_orderkey) AS ahi,
+    MIN(l_partkey) AS blo, MAX(l_partkey) AS bhi,
+    MIN(l_suppkey) AS clo, MAX(l_suppkey) AS chi
+  FROM lineitem),
+sk AS (
+  SELECT l_orderkey AS a, l_partkey AS b, l_suppkey AS c,
+    ${zScaleSql("l_orderkey", "alo", "ahi", "sa")},
+    ${zScaleSql("l_partkey", "blo", "bhi", "sb")},
+    ${zScaleSql("l_suppkey", "clo", "chi", "sc")}
+  FROM lineitem),
+zt AS (SELECT a, b, c, ${mortonSql(Seq("sa", "sb", "sc"))} AS z FROM sk)
+SELECT z >> 42 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
+  MIN(a) AS min_a, MAX(a) AS max_a, MIN(b) AS min_b, MAX(b) AS max_b,
+  MIN(c) AS min_c, MAX(c) AS max_c
+FROM zt GROUP BY 1 ORDER BY bucket""")),
+    // s13c: the Hilbert key's 16 rotation steps replay as GENERATED
+    // chained CTEs — each step's (x, y, d) computed from the previous
+    // step's row exactly as the Spark per-step projections do; the
+    // quadrant digit (3*rx)^ry is the shared when-chain 0/1/3/2
+    "s13c_hilbert_stats" -> Entry(s13cHilbertStats(_, _), Some {
+      val nm1 = (1L << 16) - 1
+      val steps = (15 to 0 by -1).map { i =>
+        val s = 1L << i
+        val ss = s * s
+        val rx = s"((x & $s) > 0)"
+        val ry = s"((y & $s) > 0)"
+        s"""h$i AS (SELECT a, b,
+  CASE WHEN NOT $ry THEN (CASE WHEN $rx THEN $nm1 - y ELSE y END)
+       ELSE x END AS x,
+  CASE WHEN NOT $ry THEN (CASE WHEN $rx THEN $nm1 - x ELSE x END)
+       ELSE y END AS y,
+  d + CAST($ss AS BIGINT) * (CASE WHEN $rx AND $ry THEN 2 WHEN $rx THEN 3
+                  WHEN $ry THEN 1 ELSE 0 END) AS d
+ FROM h${i + 1})"""
+      }.mkString(",\n")
+      s"""WITH $keyRangeCte,
+sk AS (
+  SELECT l_orderkey AS a, l_partkey AS b,
+    ${zScaleSql("l_orderkey", "alo", "ahi", "sa")},
+    ${zScaleSql("l_partkey", "blo", "bhi", "sb")}
+  FROM lineitem),
+h16 AS (SELECT a, b, sa AS x, sb AS y, CAST(0 AS BIGINT) AS d FROM sk),
+$steps
+SELECT d >> 26 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
+  MIN(a) AS min_a, MAX(a) AS max_a, MIN(b) AS min_b, MAX(b) AS max_b
+FROM h0 GROUP BY 1 ORDER BY bucket"""
+    }),
+    // dq1: each rule's violation count recomputed independently; the
+    // Spark side treats a NULL predicate as a violation (coalesce false)
+    // and the SQL mirrors it with NOT COALESCE(pred, FALSE)
+    "dq1_expectations" -> Entry(dq1Expectations(_, _), Some("""
+WITH li AS (SELECT * FROM lineitem),
+rules AS (
+  SELECT 'li_quantity_range' AS rule, CAST(COUNT(*) AS BIGINT) AS n_checked,
+    CAST(SUM(CASE WHEN NOT COALESCE(l_quantity >= 1.0 AND l_quantity <= 50.0,
+      FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS n_violations FROM li
+  UNION ALL
+  SELECT 'li_price_positive', CAST(COUNT(*) AS BIGINT),
+    CAST(SUM(CASE WHEN NOT COALESCE(l_extendedprice > 0.0, FALSE)
+      THEN 1 ELSE 0 END) AS BIGINT) FROM li
+  UNION ALL
+  SELECT 'li_discount_range', CAST(COUNT(*) AS BIGINT),
+    CAST(SUM(CASE WHEN NOT COALESCE(l_discount >= 0.0 AND l_discount <= 1.0,
+      FALSE) THEN 1 ELSE 0 END) AS BIGINT) FROM li
+  UNION ALL
+  SELECT 'li_shipdate_not_null', CAST(COUNT(*) AS BIGINT),
+    CAST(SUM(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+  FROM li
+  UNION ALL
+  SELECT 'li_orderkey_ref', CAST(COUNT(*) AS BIGINT),
+    CAST(SUM(CASE WHEN NOT EXISTS (SELECT 1 FROM orders o
+      WHERE o.o_orderkey = li.l_orderkey) THEN 1 ELSE 0 END) AS BIGINT)
+  FROM li
+  UNION ALL
+  SELECT 'li_unique_line', CAST(SUM(c) AS BIGINT),
+    CAST(SUM(c - 1) AS BIGINT)
+  FROM (SELECT COUNT(*) AS c FROM li GROUP BY l_orderkey, l_linenumber))
+SELECT rule, n_checked, n_violations,
+  CAST(n_violations = 0 AS INT) AS pass
+FROM rules ORDER BY rule""")),
+    // dq2: the tag replays as the same filtered-array join; the
+    // __partition_total row pins clean + quarantined = table
+    "dq2_quarantine" -> Entry(dq2Quarantine(_, _), Some("""
+WITH tagged AS (
+  SELECT l_orderkey,
+    array_to_string(list_filter(
+      [CASE WHEN COALESCE(l_quantity <= 25.0, FALSE) THEN ''
+            ELSE 'q25' END,
+       CASE WHEN COALESCE(l_discount <= 0.05, FALSE) THEN ''
+            ELSE 'disc5' END], x -> x <> ''), ',') AS failed_rules
+  FROM lineitem),
+bad AS (
+  SELECT failed_rules, CAST(COUNT(*) AS BIGINT) AS n_rows,
+    MIN(l_orderkey) AS min_key, MAX(l_orderkey) AS max_key
+  FROM tagged WHERE failed_rules <> '' GROUP BY 1)
+SELECT * FROM bad
+UNION ALL
+SELECT '__partition_total', CAST(COUNT(*) AS BIGINT), -1, -1 FROM tagged
+ORDER BY failed_rules""")),
+    // stream_dq: streamed quarantine rows held VERBATIM to the batch
+    // rulebook replay (train-nothing, stateless — the strongest
+    // batch/stream parity: same rows, same tags, any batching)
+    "stream_dq" -> Entry(streamDq(_, _), Some("""
+SELECT doc_id,
+  array_to_string(list_filter(
+    [CASE WHEN COALESCE(n_chars >= 200, FALSE) THEN '' ELSE 'len200' END,
+     CASE WHEN COALESCE(lang IN ('en','de','es','fr'), FALSE) THEN ''
+          ELSE 'west' END], x -> x <> ''), ',') AS failed_rules
+FROM documents
+WHERE NOT COALESCE(n_chars >= 200, FALSE)
+   OR NOT COALESCE(lang IN ('en','de','es','fr'), FALSE)
+ORDER BY doc_id""")),
+    // stream_stats: the streamed sketch rows' MERGE held verbatim to the
+    // batch ANALYZE recompute on the mergeable fields (any batching);
+    // union-sketch ndv gated against the exact twin (literal 1)
+    "stream_stats" -> Entry(streamStats(_, _), Some(
+      columnStatsSql("documents", Seq("lang", "n_chars"), _ => "1 AS ndv_ok"))),
+    // stream_snapshot_ingest: the final streamed version is ALL of
+    // documents, whole-row fingerprinted; the transactional wins
+    // (4 versions, replay no-op, pinned isolation, stats ≡ recompute)
+    // are gate literals
+    "stream_snapshot_ingest" -> Entry(streamSnapshotIngest(_, _),
+      Some(countXorSql("documents", DocRowKeySql, "row_xor",
+      """1 AS multi_batch, 1 AS exactly_once_replay,
+  1 AS pinned_isolated, 1 AS stats_current"""))),
+    // s16: per-column stats recomputed independently per column; SUM
+    // cast (HUGEINT), min/max rendered as VARCHAR in both engines
+    "s16_table_stats" -> Entry(s16TableStats(_, _),
+      Some(columnStatsSql("lineitem", StatsCols,
+      c => s"CAST(COUNT(DISTINCT $c) AS BIGINT) AS ndv"))),
+    // s16b: the HLL-NDV ANALYZE path certified against the exact twin —
+    // per column: nulls/min/max verbatim-equal, ndv within 3*rsd
+    "s16b_stats_gate" -> Entry(s16bTableStatsApprox(_, _),
+      Some(("SELECT column_name, 1 AS nulls_ok, 1 AS ndv_ok," +
+      " 1 AS minmax_ok FROM (VALUES ('l_orderkey'), ('l_partkey')," +
+      " ('l_returnflag'), ('l_shipdate'), ('l_suppkey')) t(column_name)" +
+      " ORDER BY column_name"))),
+    // s16c: merge == recompute for the mergeable half of ANALYZE — the
+    // MERGED per-partition counts/nulls/min/max are held to a DuckDB
+    // from-scratch recompute (any merge drift hash-fails); the unioned
+    // HLL ndv is gated against the exact twin (literal 1)
+    "s16c_stats_incremental" -> Entry(s16cStatsIncremental(_, _), Some(
+      columnStatsSql("lineitem", StatsCols, _ => "1 AS ndv_ok"))),
+    // dq3: schema drift is pure metadata over a fixed testdata schema —
+    // the planted three-axis drift (missing l_commitdate, uncontracted
+    // l_tax, retyped l_quantity) replays as literals
+    "dq3_schema_drift" -> Entry(dq3SchemaDrift(_, _), Some("""
+SELECT * FROM (VALUES
+  ('schema_extra_cols',   CAST(11 AS BIGINT), CAST(1 AS BIGINT), 0),
+  ('schema_missing_cols', CAST(11 AS BIGINT), CAST(1 AS BIGINT), 0),
+  ('schema_retyped_cols', CAST(10 AS BIGINT), CAST(1 AS BIGINT), 0))
+  t(rule, n_checked, n_violations, pass)
+ORDER BY rule""")),
+    // s13d: the predicate bounds replay in pure long floor-arithmetic
+    // from the key ranges; the clustered scan's count + key fingerprint
+    // are anchored to the logical table, the cross-layout identity and
+    // the strictly-fewer-files (<= half) pruning wins are gate literals
+    "s13d_layout_skipping" -> Entry(s13dLayoutSkipping(_, _),
+      Some(s"""WITH $quarterBoxCtes
+${countXorSql("hit", LineitemKeySql, "key_xor",
+  "1 AS rows_identical, 1 AS clustered_reads_fewer, 1 AS clustered_le_half")}""")),
+    // s13e: the stats-planned pruned scan returns exactly the logical
+    // predicate result (count + fingerprint anchored to the table); the
+    // opened-fewer and stats≡footers wins are gate literals
+    "s13e_stats_pruned_scan" -> Entry(s13eStatsPrunedScan(_, _),
+      Some(s"""WITH $quarterBoxCtes
+${countXorSql("hit", LineitemKeySql, "key_xor",
+  "1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers")}""")),
+    // s13f: the optimized table is the whole logical table (count +
+    // fingerprint anchored); detection-exactness and skipping-restored
+    // are gate literals
+    "s13f_optimize_recluster" -> Entry(s13fOptimizeRecluster(_, _),
+      Some(countXorSql("lineitem", LineitemKeySql,
+      "key_xor", "1 AS detected_only_appends, 1 AS skipping_restored"))),
+    // s18: the snapshot-committed pruned read returns exactly the
+    // logical predicate result at version 0; the structural wins
+    // (opened-fewer, committed-stats ≡ footers) are gate literals
+    "s18_snapshot_pruned_read" -> Entry(s18SnapshotPrunedRead(_, _),
+      Some(s"""WITH $quarterBoxCtes
+${countXorSql("hit", LineitemKeySql, "key_xor",
+  """CAST(0 AS BIGINT) AS version,
+  1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers""")}""")),
+    // s13h: the bloom-pruned point lookup returns exactly the logical
+    // equality result (count + doc_id fingerprint; the target key is
+    // data-derived as 'u' || max(doc_id)//2); the structural wins —
+    // opened-fewer/quarter-bound and min/max-keeps-all on the
+    // round-robin layout — are gate literals
+    "s13h_bloom_pruning" -> Entry(s13hBloomPruning(_, _), Some(s"""
+WITH t AS (SELECT MAX(doc_id) // 2 AS h FROM documents),
+hit AS (SELECT d.* FROM documents d, t WHERE d.doc_id = h)
+${countXorSql("hit", DocIdKeySql, "key_xor",
+  """1 AS rows_identical, 1 AS opened_fewer, 1 AS opened_le_quarter,
+  1 AS minmax_keeps_all""")}""")),
+    // s19: the optimized v2 table is the whole logical lineitem (count +
+    // 4-column fingerprint anchored — v1 = base ∪ append = lineitem and
+    // the gate pins v2 ≡ v1); version numbers are deterministic (fresh
+    // root); the structural wins (stats replaced, merge ≡ recompute,
+    // pinned-reader isolation, race-loser loud, skipping restored) are
+    // gate literals
+    "s19_optimize_versioned" -> Entry(s19OptimizeVersioned(_, _),
+      Some(countXorSql("lineitem", LineitemKeySql, "key_xor",
+      """CAST(0 AS BIGINT) AS v0, CAST(1 AS BIGINT) AS v1, CAST(2 AS BIGINT) AS v2,
+  1 AS rows_identical, 1 AS stats_files_match, 1 AS merge_matches_recompute,
+  1 AS pinned_v1_isolated, 1 AS race_loser_loud, 1 AS skipping_restored"""))),
+    // s20: FULL oracle — DuckDB recomputes the post-CDC table from
+    // scratch (base minus band deletes, band updates applied, 25 tail
+    // inserts) and its per-column stats; the Spark side must land there
+    // via the file-granular path (touched files only, stats rows
+    // replaced). table_xor anchors whole-row content; structural wins
+    // are gate literals
+    "s20_cdc_versioned_stats" -> Entry(s20CdcVersionedStats(_, _), Some(s"""
+WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
+final AS (
+  SELECT doc_id, lang, n_chars FROM documents, mx
+  WHERE NOT (doc_id % 7 = 0 AND doc_id * 4 <= m)
+    AND NOT (doc_id % 7 = 3 AND doc_id * 4 <= m)
+  UNION ALL
+  SELECT doc_id, 'xx' AS lang, n_chars + 1000 AS n_chars
+  FROM documents, mx WHERE doc_id % 7 = 3 AND doc_id * 4 <= m
+  UNION ALL
+  SELECT m + g.i AS doc_id, 'zz' AS lang, m + g.i AS n_chars
+  FROM mx, generate_series(1, 25) g(i)),
+xor_all AS (SELECT ${md5XorSql(DocRowKeySql)} AS x FROM final)
+SELECT s.column_name, s.n_rows, s.n_nulls, s.min_value, s.max_value,
+  (SELECT x FROM xor_all) AS table_xor,
+  1 AS ndv_ok, 1 AS rows_match_apply, 1 AS untouched_stats_identical,
+  1 AS files_rewritten_subset
+FROM (
+  SELECT 'doc_id' AS column_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
+    CAST(SUM(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+      AS n_nulls,
+    CAST(MIN(doc_id) AS VARCHAR) AS min_value,
+    CAST(MAX(doc_id) AS VARCHAR) AS max_value
+  FROM final
+  UNION ALL
+  SELECT 'n_chars', CAST(COUNT(*) AS BIGINT),
+    CAST(SUM(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT),
+    CAST(MIN(n_chars) AS VARCHAR), CAST(MAX(n_chars) AS VARCHAR)
+  FROM final) s
+ORDER BY s.column_name""")),
+    // s21: the unified post-evolution read replays exactly — row count
+    // and doc_id fingerprint over ALL documents, the added column null
+    // exactly on the pre-evolution slice, its sum the replayed pure
+    // function over the new slice; acceptance/rejection and lazy-stats
+    // wins are gate literals
+    "s21_schema_evolution" -> Entry(s21SchemaEvolution(_, _),
+      Some(countXorSql("documents", DocIdKeySql, "key_xor",
+      """CAST((SELECT COUNT(*) FROM documents WHERE doc_id % 5 <> 0) AS BIGINT)
+    AS n_quality_nulls,
+  CAST((SELECT SUM(n_chars % 100) FROM documents WHERE doc_id % 5 = 0)
+    AS BIGINT) AS quality_sum,
+  CAST(1 AS BIGINT) AS version,
+  1 AS contract_pass, 1 AS evolution_accepted,
+  1 AS bad_evolution_rejected, 1 AS stats_lazy_ok"""))),
+    // s22: FULL oracle — the version diff's per-op rows are a pure
+    // function of `documents` (deletes carry the original payload,
+    // updates the new one, inserts the deterministic tail); the inverse
+    // property (applyChangelog(v0, diff) ≡ v1), file-granular skip and
+    // self-diff emptiness are gate literals
+    "s22_version_diff" -> Entry(s22VersionDiff(_, _), Some(s"""
+WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
+ops AS (
+  SELECT 'delete' AS op, doc_id, lang, n_chars
+  FROM documents, mx WHERE doc_id % 7 = 0 AND doc_id * 4 <= m
+  UNION ALL
+  SELECT 'update' AS op, doc_id, 'xx' AS lang, n_chars + 1000 AS n_chars
+  FROM documents, mx WHERE doc_id % 7 = 3 AND doc_id * 4 <= m
+  UNION ALL
+  SELECT 'insert' AS op, m + g.i AS doc_id, 'zz' AS lang,
+    m + g.i AS n_chars
+  FROM mx, generate_series(1, 25) g(i))
+SELECT op, CAST(COUNT(*) AS BIGINT) AS n_rows,
+  ${md5XorSql(DocRowKeySql)}
+    AS payload_xor,
+  1 AS roundtrip_ok, 1 AS delta_files_skipped, 1 AS self_diff_empty
+FROM ops GROUP BY op ORDER BY op""")),
+    // s26: the compacted current version is ALL of documents (count +
+    // whole-row fingerprint); the zero-re-sketch and manifest-merge
+    // wins are gate literals
+    "s26_compact_versioned" -> Entry(s26CompactVersioned(_, _),
+      Some(countXorSql("documents", DocRowKeySql, "row_xor",
+      """1 AS files_5_to_2, 1 AS rows_identical,
+  1 AS merged_row_matches_resketch, 1 AS carried_stats_identical,
+  1 AS pinned_intact, 1 AS second_compact_noop"""))),
+    // s25: FULL oracle — the four-batch changelog stream lands on a
+    // pure function of documents: slices %4 in {0,1,2} inserted, the
+    // low-quarter %7=3 band updated, the top-quarter %11=0 band
+    // deleted; structural wins are gate literals
+    "s25_cdc_ingest" -> Entry(s25CdcIngest(_, _), Some(s"""
+WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
+final AS (
+  SELECT doc_id,
+    CASE WHEN doc_id % 7 = 3 AND doc_id * 4 <= m THEN 'xx'
+         ELSE lang END AS lang,
+    CASE WHEN doc_id % 7 = 3 AND doc_id * 4 <= m THEN n_chars + 1000
+         ELSE n_chars END AS n_chars
+  FROM documents, mx
+  WHERE doc_id % 4 <> 3
+    AND NOT (doc_id % 11 = 0 AND doc_id * 4 > 3 * m)
+  UNION ALL
+  SELECT m + g.i AS doc_id, 'zz' AS lang, m + g.i AS n_chars
+  FROM mx, generate_series(1, 25) g(i))
+${countXorSql("final", DocRowKeySql, "row_xor",
+  """1 AS four_versions, 1 AS matches_seq_apply,
+  1 AS untouched_stats_identical, 1 AS replay_noop, 1 AS stats_current""")}""")),
+    // s24: FULL oracle — the serializable two-writer outcome is
+    // documents with A's band updates and B's band deletes, whatever
+    // order the commits landed; rebase/abort/chain wins are gate
+    // literals
+    "s24_optimistic_merge" -> Entry(s24OptimisticMerge(_, _), Some(s"""
+WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
+final AS (
+  SELECT doc_id,
+    CASE WHEN doc_id % 7 = 3 AND doc_id * 4 <= m THEN 'xx'
+         ELSE lang END AS lang,
+    CASE WHEN doc_id % 7 = 3 AND doc_id * 4 <= m THEN n_chars + 1000
+         ELSE n_chars END AS n_chars
+  FROM documents, mx
+  WHERE NOT (doc_id % 11 = 0 AND doc_id * 4 > 3 * m))
+${countXorSql("final", DocRowKeySql, "row_xor",
+  "1 AS rebase_merged_both, 1 AS conflict_aborts, 1 AS version_chain_exact")}""")),
+    // s23: the post-expiry current read is the full three-band union =
+    // all of documents (count + doc_id fingerprint); every lifecycle
+    // win (exact expiry set, loud expired read, reclaimed dirs,
+    // surviving hard-linked pins, protected pointer) is a gate literal
+    "s23_retention" -> Entry(s23Retention(_, _),
+      Some(countXorSql("documents", DocIdKeySql, "key_xor",
+      """1 AS expired_exact, 1 AS expired_read_loud, 1 AS expired_dir_reclaimed,
+  1 AS pinned_survivor_intact, 1 AS pointer_never_expired"""))),
+    // s17: the compaction decision replays — batch sizes are a pure
+    // function of doc_id, small = under total//10; count + doc_id
+    // fingerprint anchor the rewritten table to the source
+    "s17_stats_compaction" -> Entry(s17StatsCompaction(_, _), Some(s"""
+WITH t AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM documents),
+b AS (SELECT LEAST(doc_id % 32, 7) AS batch, CAST(COUNT(*) AS BIGINT) AS c
+  FROM documents GROUP BY 1)
+SELECT
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_rows,
+  (SELECT ${md5XorSql(DocIdKeySql)} FROM documents) AS key_xor,
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM b, t WHERE c < total // 10)
+    AS n_small_batches,
+  1 AS rows_identical, 1 AS files_reduced""")),
+    // s13g: the string-equality and null-aware pruned reads both return
+    // exactly the logical predicate result (count + doc_id fingerprint
+    // anchored; target language data-derived as MIN(lang)); the
+    // opened-fewer and stats ≡ footer-rule wins are gate literals
+    "s13g_typed_pruning" -> Entry(s13gTypedPruning(_, _), Some(s"""
+WITH t AS (SELECT MIN(lang) AS tgt FROM documents),
+hit AS (SELECT d.* FROM documents d, t WHERE d.lang = tgt)
+${countXorSql("hit", DocIdKeySql, "key_xor",
+  """1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers,
+  1 AS null_rows_identical, 1 AS null_opened_fewer,
+  1 AS null_stats_match_footers""")}""")),
+    // ta18: the whole NB training + scoring replayed — vocabulary by the
+    // (count desc, token asc) total order, Laplace-smoothed log-probs
+    // snapped to 6dp and micro-unit integers (the ta16 lmMicro
+    // convention), integer argmax with class-ascending tie-break.
+    // stream_classify holds the serving-side per-row scorer to
+    // this same SQL VERBATIM — train-batch/score-stream must be invisible
+    "ta18_nb_classifier" -> Entry(ta18NbClassifier(_, _), Some(ta18NbSql)),
+    // cur2: the full DSIR replay — both hashed-bigram bucket models
+    // re-learned (md5 60-bit buckets, Laplace-smoothed, 6dp micro-nat
+    // log-ratios), per-doc weight sum, keyed-hash Gumbel, and the
+    // (key desc, doc_id asc) k-th-tuple selection threshold
+    "cur2_dsir" -> Entry(cur2Dsir(_, _), Some(
+      """WITH rawd AS (SELECT doc_id, text FROM documents WHERE lang <> 'en'),
+         tgtd AS (SELECT doc_id, text FROM documents WHERE lang = 'en'),
+         rt AS (SELECT doc_id,
+           regexp_extract_all(lower(text), '[\p{L}\p{N}]+') AS t FROM rawd),
+         tt AS (SELECT doc_id,
+           regexp_extract_all(lower(text), '[\p{L}\p{N}]+') AS t FROM tgtd),
+         rb AS (
+           SELECT doc_id,
+             CAST(('0x' || substr(md5('b:' || gram), 1, 15)) AS BIGINT)
+               % 4096 AS bucket
+           FROM (SELECT doc_id, unnest(list_concat(t,
+             list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i + 1])))
+             AS gram FROM rt)),
+         tb AS (
+           SELECT doc_id,
+             CAST(('0x' || substr(md5('b:' || gram), 1, 15)) AS BIGINT)
+               % 4096 AS bucket
+           FROM (SELECT doc_id, unnest(list_concat(t,
+             list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i + 1])))
+             AS gram FROM tt)),
+         rc AS (SELECT bucket, COUNT(*) AS n FROM rb GROUP BY 1),
+         tc AS (SELECT bucket, COUNT(*) AS n FROM tb GROUP BY 1),
+         rtot AS (SELECT COUNT(*) AS tr FROM rb),
+         ttot AS (SELECT COUNT(*) AS tg FROM tb),
+         ratio AS (
+           SELECT COALESCE(tc.bucket, rc.bucket) AS bucket,
+             CAST(round(round(ln((COALESCE(tc.n, 0) + 1)
+               / CAST(tg + 4096 AS DOUBLE)), 6) * 1000000) AS BIGINT)
+             - CAST(round(round(ln((COALESCE(rc.n, 0) + 1)
+               / CAST(tr + 4096 AS DOUBLE)), 6) * 1000000) AS BIGINT) AS lrm
+           FROM tc FULL JOIN rc ON tc.bucket = rc.bucket, rtot, ttot),
+         dcnt AS (SELECT doc_id, bucket, COUNT(*) AS c FROM rb GROUP BY 1, 2),
+         dw AS (
+           SELECT d.doc_id, CAST(SUM(d.c * r.lrm) AS BIGINT) AS wm
+           FROM dcnt d JOIN ratio r USING (bucket) GROUP BY 1),
+         keyed AS (
+           SELECT rd.doc_id, COALESCE(dw.wm, 0) AS wm,
+             dw.doc_id IS NOT NULL AS hasf,
+             CAST(round(round(-ln(-ln(
+               (CAST(CAST(('0x' || substr(md5('dsir:'
+                  || CAST(rd.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+                 AS DOUBLE) + 0.5e0)
+               / 1152921504606846976.0e0)), 6) * 1000000) AS BIGINT) AS gm
+           FROM rawd rd LEFT JOIN dw ON dw.doc_id = rd.doc_id),
+         kth AS (
+           SELECT key, doc_id FROM (
+             SELECT wm + gm AS key, doc_id FROM keyed WHERE hasf
+             ORDER BY key DESC, doc_id ASC LIMIT 100)
+           ORDER BY key ASC, doc_id DESC LIMIT 1)
+         SELECT k.doc_id, k.wm / 1e6 AS log_weight, k.gm / 1e6 AS gumbel,
+           CAST(COALESCE(k.hasf AND ((k.wm + k.gm > kth.key)
+             OR (k.wm + k.gm = kth.key AND k.doc_id <= kth.doc_id)),
+             FALSE) AS INT) AS selected
+         FROM keyed k LEFT JOIN kth ON TRUE ORDER BY k.doc_id""")),
+    // cur3: both self-trained LMs replayed (the ta16 bigram LM, and the
+    // ta11 unigram LM over its tok/uni/tot counts), exact-integer 4dp
+    // means, excess = lp_bi - lp_uni, and the k-th-tuple threshold
+    // expressed as its equivalent (excess DESC, doc_id ASC) rank
+    "cur3_excess_loss" -> Entry(cur3ExcessLoss(_, _), Some(
+      s"""WITH ${bigramLmCtes("documents")},
+         ulp AS (
+           SELECT doc_id, round(ln(cu / total), 6) AS lp
+           FROM tok JOIN uni USING (tok), tot),
+         ulm AS (
+           SELECT doc_id, SUM(CAST(round(lp * 1000000) AS BIGINT)) AS s,
+             CAST(COUNT(*) AS BIGINT) * 100 AS d
+           FROM ulp GROUP BY 1),
+         uavg AS (SELECT doc_id, $lmAvgExpr AS lp_uni FROM ulm),
+         bavg AS (SELECT doc_id, $lmAvgExpr AS lp_bi FROM lm),
+         x AS (
+           SELECT u.doc_id, u.lp_uni, b.lp_bi,
+             b.lp_bi - u.lp_uni AS excess
+           FROM uavg u JOIN bavg b USING (doc_id))
+         SELECT doc_id, lp_uni, lp_bi, excess,
+           CASE WHEN ROW_NUMBER() OVER (ORDER BY excess DESC, doc_id ASC)
+             <= 150 THEN 1 ELSE 0 END AS selected
+         FROM x ORDER BY doc_id""")),
+    // ta17b: the ta16 LM replay + cut scores learned on the keyed-hash
+    // half-sample (the sp2/mx1 md5-unit draw, seed "cuts") + the
+    // threshold CASE — selection, cut learning, and bucketing all
+    // re-derived
+    "ta17b_ppl_buckets_sampled" -> Entry(ta17bPplBucketsSampled(_, _), Some(
+      s"""WITH ${bigramLmCtes("documents")},
+         $lmMeanCte,
+         scored AS (
+           SELECT lm2.doc_id, d.source AS domain, lm2.n_bigrams,
+             lm2.avg_logprob
+           FROM lm2 JOIN documents d ON lm2.doc_id = d.doc_id),
+         samp AS (
+           SELECT domain, avg_logprob,
+             NTILE(3) OVER (PARTITION BY domain
+               ORDER BY avg_logprob DESC, doc_id) AS t
+           FROM scored
+           WHERE ${md5UnitSql("cuts")} < 0.5),
+         cuts AS (
+           SELECT domain,
+             MIN(CASE WHEN t = 1 THEN avg_logprob END) AS cut_head,
+             MIN(CASE WHEN t = 2 THEN avg_logprob END) AS cut_mid
+           FROM samp GROUP BY 1)
+         SELECT s.doc_id, s.domain, s.n_bigrams, s.avg_logprob,
+           CASE WHEN c.cut_head IS NOT NULL AND s.avg_logprob >= c.cut_head
+                  THEN 'head'
+                WHEN c.cut_mid IS NOT NULL AND s.avg_logprob >= c.cut_mid
+                  THEN 'middle'
+                ELSE 'tail' END AS bucket
+         FROM scored s LEFT JOIN cuts c ON s.domain = c.domain
+         ORDER BY s.doc_id""")),
+    "ta17b_gate" -> Entry(ta17bGate(_, _),
+      Some("SELECT 75 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    "ta13_gopher" -> Entry(ta13Gopher(_, _), Some(gopherSql)),
+    "ta14_url_filter" -> Entry(ta14UrlFilter(_, _), Some(urlFilterSql)),
+    // s9: shard = rank-over-md5-order div 64; id_sum pins membership
+    "s9_sharded_export" -> Entry(s9ShardedExport(_, _), Some(
+      """WITH r AS (
+           SELECT doc_id,
+             ROW_NUMBER() OVER (
+               ORDER BY md5('shard:' || CAST(doc_id AS VARCHAR)), doc_id) - 1
+               AS pos
+           FROM documents)
+         SELECT CAST(pos // 64 AS BIGINT) AS shard,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(doc_id) AS BIGINT) AS id_sum
+         FROM r GROUP BY 1 ORDER BY 1""")),
+    // s10: per-(domain, split) membership through the partitioned
+    // write→read-back roundtrip — domain and split re-derived exactly
+    "s10_partitioned_export" -> Entry(s10PartitionedExport(_, _), Some(
+      s"""WITH d AS (
+           SELECT doc_id, $domainSql AS domain,
+             ${md5UnitSql("split")} AS u
+           FROM documents)
+         SELECT domain, $splitCaseSql AS split,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(doc_id) AS BIGINT) AS id_sum
+         FROM d GROUP BY 1, 2 ORDER BY 1, 2""")),
+    "dd10_paragraph_dedup" -> Entry(dd10ParagraphDedup(_, _), Some(
+      s"""WITH $plantedBoilerCte,
+         p AS (
+           SELECT doc_id, ps[k] AS para, k AS pos
+           FROM (SELECT doc_id, string_split(t, chr(10)) AS ps FROM planted),
+             LATERAL UNNEST(generate_series(1, len(ps))) AS u(k)),
+         hot AS (
+           SELECT md5(para) AS ph FROM p GROUP BY 1 HAVING COUNT(*) >= 10),
+         kept AS (
+           SELECT doc_id, para, pos FROM p
+           WHERE md5(para) NOT IN (SELECT ph FROM hot)),
+         agg AS (
+           SELECT doc_id, string_agg(para, chr(10) ORDER BY pos) AS clean_text,
+             CAST(COUNT(*) AS BIGINT) AS n_kept
+           FROM kept GROUP BY doc_id),
+         tot AS (
+           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_paras
+           FROM p GROUP BY doc_id)
+         SELECT t.doc_id, COALESCE(a.clean_text, '') AS clean_text,
+           t.n_paras, t.n_paras - COALESCE(a.n_kept, 0) AS n_removed
+         FROM tot t LEFT JOIN agg a USING (doc_id)
+         ORDER BY t.doc_id""")),
+    "bt1_bpe_train" -> Entry(bt1BpeTrain(_, _), Some(bpeTrainSql(8))),
+    // bt1b: re-learn from the SAME keyed-hash half-sample (selection
+    // predicate = the sp2/mx1 md5-unit draw, seed "bpe")
+    "bt1b_bpe_train_sampled" -> Entry(bt1bBpeTrainSampled(_, _), Some(bpeTrainSql(8,
+      corpus = s"(SELECT * FROM documents WHERE ${md5UnitSql("bpe")} < 0.5)"))),
+    "bt2_bpe_encode" -> Entry(bt2BpeEncode(_, _), Some(bpeEncodeSql(8))),
+    "bt3_bpe_vocab" -> Entry(bt3BpeVocab(_, _), Some(bpeVocabSql(8))),
+    "mx2_temperature" -> Entry(mx2Temperature(_, _), Some(
+      s"""WITH d AS (SELECT doc_id, $domainSql AS domain FROM documents),
+         c AS (
+           SELECT domain, COUNT(*) AS nd FROM d GROUP BY domain),
+         t AS (
+           SELECT CAST(SUM(nd) AS DOUBLE) AS ntot,
+             CAST(SUM(CAST(round(pow(CAST(nd AS DOUBLE), 0.5), 9)
+               AS DECIMAL(38,10))) AS DOUBLE) AS z
+           FROM c),
+         r AS (
+           SELECT domain,
+             least(1.0, round(pow(CAST(nd AS DOUBLE), 0.5), 9) / z
+               * (0.5 * ntot) / CAST(nd AS DOUBLE)) AS rate
+           FROM c, t)
+         SELECT d.doc_id, d.domain, round(r.rate, 4) AS keep_rate
+         FROM d JOIN r USING (domain)
+         WHERE ${md5UnitSql("temp", "d.doc_id")} < r.rate
+         ORDER BY d.doc_id""")),
+    // mx3: the whole waterfall replayed — sorted-cap window with decimal
+    // prefix sums, water level = share at the FIRST uncapped index
+    // (arg-min by i, not min over shares), then mx1's floor+fraction
+    // keyed-hash copies. Same derived skewed domain as mx2.
+    "mx3_unimax" -> Entry(mx3Unimax(_, _), Some(
+      s"""WITH d AS (SELECT doc_id, $domainSql AS domain FROM documents),
+         c AS (
+           SELECT domain, COUNT(*) AS nd,
+             round(CAST(COUNT(*) AS DOUBLE) * 2.0, 9) AS cap
+           FROM d GROUP BY domain),
+         t AS (SELECT CAST(COUNT(*) AS BIGINT) AS ndom FROM c),
+         ranked AS (
+           SELECT domain, nd, cap,
+             ROW_NUMBER() OVER (ORDER BY cap, domain NULLS FIRST) AS i,
+             COALESCE(SUM(CAST(cap AS DECIMAL(38,10))) OVER (
+               ORDER BY cap, domain NULLS FIRST
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+               CAST(0 AS DECIMAL(38,10))) AS cumprev
+           FROM c),
+         shares AS (
+           SELECT domain, nd, cap, i,
+             (400.0 - CAST(cumprev AS DOUBLE)) /
+               CAST(t.ndom - i + 1 AS DOUBLE) AS share
+           FROM ranked, t),
+         sstar AS (
+           SELECT share AS s FROM shares WHERE cap >= share
+           ORDER BY i LIMIT 1),
+         r AS (
+           SELECT domain,
+             least(cap, COALESCE((SELECT s FROM sstar), cap))
+               / CAST(nd AS DOUBLE) AS w
+           FROM shares),
+         base AS (
+           SELECT d.doc_id, d.domain, r.w,
+             ${md5UnitSql("unimax", "d.doc_id")} AS u
+           FROM d JOIN r USING (domain)),
+         cp AS (
+           SELECT doc_id, domain, w,
+             CAST(floor(w) + CASE WHEN u < w - floor(w) THEN 1 ELSE 0 END AS INT) AS n
+           FROM base)
+         SELECT doc_id, domain, CAST(g.k AS INT) AS copy,
+           round(w, 6) AS target_epochs
+         FROM cp, LATERAL UNNEST(generate_series(1, n)) AS g(k)
+         ORDER BY doc_id, copy""")),
+    // ta11: corpus-ML unigram logprob; ln rounded to 6dp on both engines
+    // BEFORE the order-independent decimal sum (1-ulp libm differences
+    // cannot survive the 6dp grid except exactly on a .0000005 boundary)
+    "ta11_logprob" -> Entry(ta11LogProb(_, _), Some(
+      s"""WITH t AS (
+           SELECT doc_id,
+             UNNEST(regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+')) AS tok
+           FROM documents),
+         f AS (SELECT tok, COUNT(*) AS c FROM t GROUP BY 1),
+         tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM t),
+         lp AS (
+           SELECT doc_id, round(ln(c / total), 6) AS lp
+           FROM t JOIN f USING (tok), tot),
+         lm AS (
+           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+             SUM(CAST(round(lp * 1000000) AS BIGINT)) AS s,
+             CAST(COUNT(*) AS BIGINT) * 100 AS d
+           FROM lp GROUP BY 1)
+         SELECT doc_id, n_tokens, $lmAvgExpr AS avg_logprob
+         FROM lm ORDER BY doc_id""")),
+    "ta10_compress" -> Entry(ta10Compress(_, _)),
+    // ta10_gate: deflate ratio separates planted repetition from prose
+    // and stays bounded over the corpus (SQL has no deflate, so the gate
+    // carries the registry-level check for the rows-only ta10)
+    "ta10_gate" -> Entry(ta10Gate(_, _),
+      Some("SELECT 1 AS has_rows, 1 AS ordered, 1 AS bounded")),
+    // ta8: dup-line fraction + top-bigram fraction on the derived
+    // multi-line corpus (first line repeated once per doc)
+    "ta8_repetition" -> Entry(ta8Repetition(_, _), Some(
+      """WITH base AS (
+           SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
+           WHERE trim(text) <> ''),
+         pl AS (
+           SELECT doc_id, g,
+                  array_to_string(toks[CAST(g*8+1 AS INT):CAST(g*8+8 AS INT)], ' ') AS piece
+           FROM base, LATERAL UNNEST(generate_series(0, CAST(floor((len(toks)-1)/8.0) AS BIGINT))) AS u(g)),
+         rep AS (
+           SELECT doc_id,
+                  string_agg(piece, chr(10) ORDER BY g) || chr(10) ||
+                    MAX(CASE WHEN g = 0 THEN piece END) AS t
+           FROM pl GROUP BY 1),
+         lns AS (
+           SELECT doc_id,
+                  list_filter(list_transform(string_split(t, chr(10)), x -> trim(x)),
+                              x -> x <> '') AS ls
+           FROM rep),
+         dupf AS (
+           SELECT doc_id,
+                  CASE WHEN len(ls) > 0
+                    THEN round(1.0 - len(list_distinct(ls)) * 1.0 / len(ls), 4)
+                    ELSE 0.0 END AS dup_line_frac
+           FROM lns),
+         tk AS (SELECT doc_id, string_split_regex(trim(t), '\s+') AS toks FROM rep),
+         bg AS (
+           SELECT doc_id, toks[CAST(k AS INT)] || ' ' || toks[CAST(k+1 AS INT)] AS gram
+           FROM tk, LATERAL UNNEST(generate_series(1, len(toks)-1)) AS u(k)
+           WHERE len(toks) >= 2),
+         cnt AS (SELECT doc_id, gram, COUNT(*) AS c FROM bg GROUP BY 1, 2),
+         agg AS (SELECT doc_id, round(MAX(c) * 1.0 / SUM(c), 4) AS top2gram_frac
+                 FROM cnt GROUP BY 1)
+         SELECT d.doc_id AS doc_id, d.dup_line_frac,
+                COALESCE(a.top2gram_frac, 0.0) AS top2gram_frac
+         FROM dupf d LEFT JOIN agg a ON d.doc_id = a.doc_id
+         ORDER BY doc_id""")),
+    // top-10 trigrams, deterministic (count desc, gram asc)
+    "ta6_top_ngrams" -> Entry(ta6TopNgrams(_, _), Some(
+      """WITH toks AS (
+           SELECT doc_id, regexp_extract_all(lower(text), '[\p{L}\p{N}]+') AS t
+           FROM documents),
+         grams AS (
+           SELECT t[k] || ' ' || t[k+1] || ' ' || t[k+2] AS gram
+           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS u(k))
+         SELECT gram, COUNT(*) AS n FROM grams GROUP BY gram
+         ORDER BY n DESC, gram ASC LIMIT 10""")),
+    "eval_rouge_ngram" -> Entry(evalRougeNgram(_, _), Some(
+      s"WITH $rougeNgramCtes\n$rougeNgramSelect\nORDER BY l.doc_id")),
+    // G9 mean-of-list stats over the SAME rouge-ngram metric rows:
+    // exactAvg / population-std formulas (decimal-exact sums, the g6
+    // pattern) held to DuckDB parity on a real metric distribution
+    "eval_stats_ngram" -> Entry(evalStatsNgram(_, _), Some(rougeStatsSql)),
+    // BERTScore greedy match with the md5-bucket embedder: a single-token
+    // embedding is exactly +/-e_(h % 64) (h = first 60 md5 bits, sign =
+    // bit 6), so cosine(tok_a, tok_b) = same bucket ? sign_a*sign_b : 0 —
+    // the greedy best-match max, the P/R means and the harmonic F1 follow
+    // in plain SQL with bit-identical doubles.
+    "eval_bert_ngram" -> Entry(evalBertNgram(_, _), Some(
+      raw"""WITH ${tokenSlicePairsCte()},
+         tok AS (
+           SELECT doc_id,
+             regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS gt,
+             regexp_extract_all(lower(ref), '[\p{L}\p{N}]+') AS rt
+           FROM pairs),
+         g AS (
+           SELECT doc_id, i,
+             CAST(('0x' || substr(md5(gt[i]), 1, 15)) AS BIGINT) AS h
+           FROM tok, LATERAL UNNEST(generate_series(1, len(gt))) AS u(i)),
+         r AS (
+           SELECT doc_id, j,
+             CAST(('0x' || substr(md5(rt[j]), 1, 15)) AS BIGINT) AS h
+           FROM tok, LATERAL UNNEST(generate_series(1, len(rt))) AS u(j)),
+         gb AS (
+           SELECT g.doc_id, g.i,
+             MAX(CASE WHEN (g.h % 64) = (r.h % 64)
+               THEN CASE WHEN ((g.h >> 6) & 1) = ((r.h >> 6) & 1)
+                 THEN 1.0 ELSE -1.0 END
+               ELSE 0.0 END) AS best
+           FROM g JOIN r USING (doc_id) GROUP BY 1, 2),
+         rb AS (
+           SELECT r.doc_id, r.j,
+             MAX(CASE WHEN (g.h % 64) = (r.h % 64)
+               THEN CASE WHEN ((g.h >> 6) & 1) = ((r.h >> 6) & 1)
+                 THEN 1.0 ELSE -1.0 END
+               ELSE 0.0 END) AS best
+           FROM r JOIN g USING (doc_id) GROUP BY 1, 2),
+         pq AS (SELECT doc_id, SUM(best) / COUNT(*) AS p FROM gb GROUP BY 1),
+         rq AS (SELECT doc_id, SUM(best) / COUNT(*) AS r FROM rb GROUP BY 1),
+         m AS (
+           SELECT d.doc_id, coalesce(pq.p, 0.0) AS p, coalesce(rq.r, 0.0) AS r,
+             (pq.doc_id IS NULL OR rq.doc_id IS NULL) AS degenerate
+           FROM documents d
+             LEFT JOIN pq ON d.doc_id = pq.doc_id
+             LEFT JOIN rq ON d.doc_id = rq.doc_id)
+         SELECT doc_id,
+           round(CASE WHEN degenerate THEN 0.0 ELSE p END, 4) AS bert_p,
+           round(CASE WHEN degenerate THEN 0.0 ELSE r END, 4) AS bert_r,
+           round(CASE WHEN degenerate OR p + r = 0.0 THEN 0.0
+             ELSE 2.0 * p * r / (p + r) END, 4) AS bert_f
+         FROM m ORDER BY doc_id""")),
+    "eval_bleu_ngram" -> Entry(evalBleuNgram(_, _), Some(
+      raw"""WITH ${tokenSlicePairsCte()},
+         mt AS (
+           SELECT doc_id,
+             regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS ct,
+             regexp_extract_all(lower(ref), '[\p{L}\p{N}]+') AS rt
+           FROM pairs),
+         ns AS (SELECT UNNEST([1, 2, 3, 4]) AS n),
+         cg AS (
+           SELECT m.doc_id, ns.n,
+             UNNEST(list_transform(range(1, len(m.ct) - ns.n + 2),
+               i -> array_to_string(m.ct[i:i+ns.n-1], ' '))) AS gram
+           FROM mt m CROSS JOIN ns),
+         rg AS (
+           SELECT m.doc_id, ns.n,
+             UNNEST(list_transform(range(1, len(m.rt) - ns.n + 2),
+               i -> array_to_string(m.rt[i:i+ns.n-1], ' '))) AS gram
+           FROM mt m CROSS JOIN ns),
+         cc AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM cg GROUP BY 1, 2, 3),
+         rcn AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM rg GROUP BY 1, 2, 3),
+         mtc AS (
+           SELECT cc.doc_id, cc.n,
+             SUM(LEAST(cc.c, COALESCE(rcn.c, 0))) AS m, SUM(cc.c) AS t
+           FROM cc LEFT JOIN rcn ON cc.doc_id = rcn.doc_id
+             AND cc.n = rcn.n AND cc.gram = rcn.gram
+           GROUP BY 1, 2),
+         grid AS (
+           SELECT m.doc_id, ns.n, len(m.ct) AS c, len(m.rt) AS r
+           FROM mt m CROSS JOIN ns),
+         lns AS (
+           SELECT g.doc_id, g.c, g.r,
+             CAST(round(round(ln((COALESCE(x.m, 0) + 1)
+               / CAST(COALESCE(x.t, 0) + 1 AS DOUBLE)), 6) * 1000000)
+               AS BIGINT) AS lnm
+           FROM grid g LEFT JOIN mtc x ON g.doc_id = x.doc_id AND g.n = x.n),
+         agg AS (
+           SELECT doc_id, MAX(c) AS c, MAX(r) AS r,
+             CAST(SUM(lnm) AS BIGINT) AS lnsum
+           FROM lns GROUP BY 1),
+         sc AS (
+           SELECT doc_id,
+             CASE WHEN c = 0 OR r = 0 THEN NULL
+               ELSE 4 * (CASE WHEN c >= r THEN 0
+                 ELSE CAST(round(round(1 - CAST(r AS DOUBLE) / c, 6)
+                   * 1000000) AS BIGINT) END) + lnsum
+             END AS q
+           FROM agg)
+         SELECT doc_id,
+           CASE WHEN q IS NULL THEN 0.0
+             ELSE round(exp(q / 4000000.0), 4) END AS bleu,
+           q AS log_bleu_qmicro
+         FROM sc ORDER BY doc_id""")),
+    // M6: BLEU replay — gram tables for n=1..4, clipped-match sums,
+    // 6dp micro ln-precisions, quarter-micro combined log, 4dp exp
+    // eval_chrf: char-gram chrF2 replay — whitespace removed by joining
+    // the token slices with '' (equivalent to the Scala \s+ strip: split
+    // tokens carry no whitespace), per-order P/R micro-snapped before the
+    // exact integer averages (the Bleu micro6 convention)
+    "eval_chrf" -> Entry(evalChrf(_, _), Some(
+      raw"""WITH ${tokenSlicePairsCte("")},
+         ns AS (SELECT UNNEST([1, 2, 3, 4]) AS n),
+         cg AS (
+           SELECT p.doc_id, ns.n,
+             UNNEST(list_transform(range(1, length(p.gen) - ns.n + 2),
+               i -> substr(p.gen, CAST(i AS INT), CAST(ns.n AS INT)))) AS gram
+           FROM pairs p CROSS JOIN ns),
+         rgr AS (
+           SELECT p.doc_id, ns.n,
+             UNNEST(list_transform(range(1, length(p.ref) - ns.n + 2),
+               i -> substr(p.ref, CAST(i AS INT), CAST(ns.n AS INT)))) AS gram
+           FROM pairs p CROSS JOIN ns),
+         cc AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM cg GROUP BY 1, 2, 3),
+         rcn AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM rgr GROUP BY 1, 2, 3),
+         mtc AS (
+           SELECT cc.doc_id, cc.n, SUM(LEAST(cc.c, COALESCE(rcn.c, 0))) AS m
+           FROM cc LEFT JOIN rcn ON cc.doc_id = rcn.doc_id
+             AND cc.n = rcn.n AND cc.gram = rcn.gram
+           GROUP BY 1, 2),
+         grid AS (
+           SELECT p.doc_id, ns.n,
+             greatest(length(p.gen) - ns.n + 1, 0) AS ct,
+             greatest(length(p.ref) - ns.n + 1, 0) AS rt
+           FROM pairs p CROSS JOIN ns),
+         pn AS (
+           SELECT g.doc_id, g.n, g.ct, g.rt, COALESCE(x.m, 0) AS m
+           FROM grid g LEFT JOIN mtc x ON g.doc_id = x.doc_id AND g.n = x.n),
+         mic AS (
+           SELECT doc_id,
+             SUM(CASE WHEN ct > 0 THEN CAST(round(round(
+               m / CAST(ct AS DOUBLE), 6) * 1000000) AS BIGINT) END) AS ps,
+             COUNT(*) FILTER (WHERE ct > 0) AS pk,
+             SUM(CASE WHEN rt > 0 THEN CAST(round(round(
+               m / CAST(rt AS DOUBLE), 6) * 1000000) AS BIGINT) END) AS rs,
+             COUNT(*) FILTER (WHERE rt > 0) AS rk
+           FROM pn GROUP BY 1),
+         fin AS (
+           SELECT doc_id, COALESCE(ps, 0) AS a, pk * 1000000 AS ba,
+             COALESCE(rs, 0) AS b, rk * 1000000 AS bb
+           FROM mic)
+         SELECT doc_id,
+           CASE WHEN ba = 0 OR bb = 0 OR (4*a*bb + b*ba) = 0 THEN 0.0
+             ELSE ((2*(5*a*b)*10000 + (4*a*bb + b*ba))
+               // (2*(4*a*bb + b*ba))) / 10000.0 END AS chrf,
+           CASE WHEN ba = 0 THEN 0.0
+             ELSE ((2*a*10000 + ba) // (2*ba)) / 10000.0 END AS chrf_p,
+           CASE WHEN bb = 0 THEN 0.0
+             ELSE ((2*b*10000 + bb) // (2*bb)) / 10000.0 END AS chrf_r
+         FROM fin ORDER BY doc_id""")),
+    "eval_bertscore_tx" -> Entry(evalBertscoreTx(_, _)),
+    "m3t_semantic_tx" -> Entry(m3tSemanticTx(_, _)),
+    "m3tb_semantic_tx_lsh" -> Entry(m3tbSemanticTxLsh(_, _)),
+    "m3tb_recall" -> Entry(m3tbRecall(_, _)),
+    // m3tb_gate: recall floor for the LSH-routed transformer retrieval
+    // (measured 1.0 at sf0.001/0.01/0.1 — ProbeTx notes the anisotropy
+    // that makes sign-LSH candidate-rich on pooled transformer vectors)
+    "m3tb_gate" -> Entry((s: SparkSession, d: String) =>
+      recallGate(m3tbRecall(s, d), 90),
+      Some("SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass")),
+    // tx_gate: the transformer-contract literal — self-BERTScore exact 1,
+    // order sensitivity, near-dup beats unrelated, bit-exact determinism
+    "tx_gate" -> Entry(txGate(_, _), Some(
+      """SELECT 1 AS self_pass, 1 AS order_pass, 1 AS neardup_pass,
+           1 AS det_pass, 1 AS has_rows""")),
+    // tx_trained_gate: the committed TRAINED checkpoint beats the seeded
+    // weights on the separation contract (margin lift >= 0.40, unrelated-
+    // doc cosine down >= 0.40, alignment held, bit-determinism) — the
+    // "quality proven" literal for the in-repo contrastive trainer
+    "tx_trained_gate" -> Entry(txTrainedGate(_, _), Some(
+      """SELECT 1 AS lift_pass, 1 AS aniso_pass, 1 AS align_pass,
+           1 AS det_pass, 1 AS has_rows""")),
+    "ss14_rerank_cross" -> Entry(ss14RerankCross(_, _)),
+    // ss14_gate: retrieve-then-rerank invariants — top-5 contained in the
+    // shortlist, rerank mean cross-F1 >= the bi-encoder top-5's, and
+    // bit-determinism of the cross scores across model instances
+    "ss14_gate" -> Entry(ss14Gate(_, _), Some(
+      """SELECT 1 AS has_rows, 1 AS contained_pass, 1 AS improve_pass,
+           1 AS det_pass""")),
+    // CoverageJudge rubric over the eval_rouge_ngram pairing: coverage =
+    // |distinct(ref toks) ∩ distinct(gen toks)| / |distinct(ref toks)|,
+    // coherence = distinct/total over gen toks, pass = coverage >= 0.25
+    "eval_judge_ngram" -> Entry(evalJudgeNgram(_, _), Some(
+      raw"""WITH ${tokenSlicePairsCte()},
+         tok AS (
+           SELECT doc_id, gen,
+             regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS gt,
+             list_distinct(regexp_extract_all(lower(gen), '[\p{L}\p{N}]+')) AS gset,
+             list_distinct(regexp_extract_all(lower(ref), '[\p{L}\p{N}]+')) AS rset
+           FROM pairs),
+         m AS (
+           SELECT doc_id,
+             CASE WHEN len(rset) = 0 OR trim(gen) = '' THEN 0.0
+               ELSE len(list_filter(rset, x -> list_contains(gset, x))) * 1.0 / len(rset)
+             END AS cov,
+             CASE WHEN len(gt) = 0 THEN 0.0
+               ELSE len(list_distinct(gt)) * 1.0 / len(gt) END AS coh,
+             trim(gen) = '' AS is_empty
+           FROM tok)
+         SELECT doc_id, (NOT is_empty AND cov >= 0.25) AS passed,
+           round(cov, 4) AS correctness, round(coh, 4) AS coherence
+         FROM m ORDER BY doc_id""")))
+
   // ---------------------------------------------------------------- events
 
   /** The events table is written with TIMESTAMP(NANOS) parquet timestamps,
@@ -4684,6 +7537,183 @@ object SparkEntry {
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), r4(col("total_value")).as("total_value"))
       .orderBy(col("user_id"), col("session_start"))
+
+  /** pipe_curation oracle: the gate expressions are the ta1/ta2 oracle
+    * bodies as CTEs, the dedup stages are the dd1b keeper / dd7 closure
+    * shapes over the GATED relation — every stage reuses SQL already
+    * proven on its standalone query.
+    */
+  /** The curation gate stage (language + quality predicates) as shared
+    * CTEs — the single definition behind both the batch `pipe_curation`
+    * oracle and the `stream_curation` count oracle, mirroring how
+    * `Curation.gate` is the single Scala definition behind both paths.
+    */
+  /** ev9's cascaded min-join funnel oracle — strict step ordering (>),
+    * inclusive horizon (<=), null timestamps dropped, prefix property by
+    * construction. Shared VERBATIM by ev9_funnel (batch) and
+    * stream_funnel (the O(steps)-state live form).
+    */
+  private val ev9FunnelSql: String =
+    """WITH s1 AS (
+         SELECT user_id, MIN(epoch_us(ts)) AS t1
+         FROM events WHERE event_type = 'view' AND ts IS NOT NULL
+         GROUP BY 1),
+       s2 AS (
+         SELECT e.user_id, MIN(epoch_us(e.ts)) AS t2
+         FROM events e JOIN s1 ON e.user_id = s1.user_id
+         WHERE e.event_type = 'click' AND e.ts IS NOT NULL
+           AND epoch_us(e.ts) > s1.t1
+           AND epoch_us(e.ts) <= s1.t1 + 3600000000
+         GROUP BY 1),
+       s3 AS (
+         SELECT e.user_id, MIN(epoch_us(e.ts)) AS t3
+         FROM events e JOIN s1 ON e.user_id = s1.user_id
+           JOIN s2 ON e.user_id = s2.user_id
+         WHERE e.event_type = 'purchase' AND e.ts IS NOT NULL
+           AND epoch_us(e.ts) > s2.t2
+           AND epoch_us(e.ts) <= s1.t1 + 3600000000
+         GROUP BY 1)
+       SELECT s1.user_id, s1.t1, s2.t2, s3.t3,
+         CAST(1 + CASE WHEN s2.t2 IS NULL THEN 0 ELSE 1 END
+                + CASE WHEN s3.t3 IS NULL THEN 0 ELSE 1 END AS INT)
+           AS steps_completed
+       FROM s1
+       LEFT JOIN s2 ON s1.user_id = s2.user_id
+       LEFT JOIN s3 ON s1.user_id = s3.user_id
+       ORDER BY s1.user_id"""
+
+  /** aj1's oracle: DuckDB's native ASOF LEFT JOIN over micro-precision ts
+    * — for the union+window form and aj1b's salted prefix scan alike.
+    */
+  private val aj1AsofSql: String =
+    """WITH p AS (
+         SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
+         FROM events WHERE event_type = 'purchase'),
+       s AS (
+         SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
+         FROM events WHERE event_type = 'signup')
+       SELECT p.event_id, p.user_id, p.ts_us, p.value,
+         s.event_id AS asof_event_id, s.value AS asof_value
+       FROM p ASOF LEFT JOIN s
+         ON p.user_id = s.user_id AND p.ts_us >= s.ts_us
+       ORDER BY p.event_id"""
+
+  /** The 30-minute session split ev2/ev5/ev7 share: `prev_us` = the
+    * user's previous event time, and the running count of gaps over 30
+    * minutes (an event EXACTLY 30 minutes after the previous one stays in
+    * the session: session_window extends the window end inclusively,
+    * pinned by StreamingSpec's boundary case).
+    */
+  private val sessionPrevSql: String =
+    "lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us"
+
+  private val sessionIdSql: String =
+    """SUM(CASE WHEN prev_us IS NULL OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
+             OVER (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"""
+
+  /** ev2's per-event session id — also ev2b's salted prefix scan and ev3's
+    * stateful form, which must both be invisible.
+    */
+  private val ev2SessionizeSql: String =
+    s"""WITH e AS (
+         SELECT user_id, event_id, ts, $sessionPrevSql
+         FROM events)
+       SELECT user_id, event_id,
+         CAST($sessionIdSql AS BIGINT) AS session_id
+       FROM e ORDER BY user_id, event_id"""
+
+  /** ev7: the native session_window gap-merge re-derived from ev2's split
+    * — also ev7b's salted assignment and ev7c's router on whichever
+    * branch the measured key share picks.
+    */
+  private val ev7SessionWindowSql: String =
+    s"""WITH e AS (
+         SELECT user_id, event_id, ts, value, $sessionPrevSql
+         FROM events),
+       s AS (
+         SELECT user_id, event_id, ts, value,
+           $sessionIdSql AS sid
+         FROM e)
+       SELECT user_id, MIN(ts) AS session_start,
+         MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+         CAST(COUNT(*) AS BIGINT) AS n_events,
+         round(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE), 4) AS total_value
+       FROM s GROUP BY user_id, sid
+       ORDER BY user_id, session_start"""
+
+  private def eventEntries: Seq[(String, Entry)] = Seq(
+    "aj1_asof_join" -> Entry(aj1Asof(_, _), Some(aj1AsofSql)),
+    // aj2: the grid binning must be invisible — plain inequality join
+    "aj2_interval_join" -> Entry(aj2IntervalJoin(_, _), Some(
+      """WITH p AS (
+           SELECT event_id, user_id, epoch_us(ts) AS ts_us
+           FROM events WHERE event_type = 'purchase'),
+         s AS (
+           SELECT event_id AS window_id, user_id, epoch_us(ts) AS w_start,
+             epoch_us(ts) + 1800000000 AS w_end
+           FROM events WHERE event_type = 'signup')
+         SELECT p.event_id, p.user_id, p.ts_us, s.window_id, s.w_start
+         FROM p JOIN s ON p.user_id = s.user_id
+           AND p.ts_us BETWEEN s.w_start AND s.w_end
+         ORDER BY p.event_id, s.window_id""")),
+    "ev1_event_window" -> Entry(ev1EventWindow(_, _), Some(
+      s"""SELECT date_trunc('hour', ts) AS hour, event_type, COUNT(*) AS n,
+         round(${exactSumSql("value")}, 4) AS total_value
+         FROM events GROUP BY 1, 2 ORDER BY 1, 2""")),
+    "aj1b_asof_salted" -> Entry(aj1bAsofSalted(_, _), Some(aj1AsofSql)),
+    // ev9: cascaded min-joins — strict step ordering (>), inclusive
+    // horizon (<=), prefix property by construction. stream_funnel (the
+    // O(steps)-state live form) is held to this SAME SQL verbatim.
+    "ev9_funnel" -> Entry(ev9Funnel(_, _), Some(ev9FunnelSql)),
+    // ev10: distinct (user, day) activity, min-day cohorts, count per
+    // (cohort, age) — activity rows are distinct and a user has one
+    // cohort, so COUNT(*) is the distinct-user count
+    "ev10_retention" -> Entry(ev10Retention(_, _), Some(
+      """WITH act AS (
+           SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS period
+           FROM events WHERE ts IS NOT NULL),
+         frst AS (SELECT user_id, MIN(period) AS cohort FROM act GROUP BY 1),
+         sizes AS (
+           SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_cohort
+           FROM frst GROUP BY 1),
+         aa AS (
+           SELECT f.cohort, a.period - f.cohort AS age,
+             CAST(COUNT(*) AS BIGINT) AS n_active
+           FROM act a JOIN frst f USING (user_id) GROUP BY 1, 2)
+         SELECT cohort, age, n_active, n_cohort,
+           round(n_active * 1.0 / n_cohort, 4) AS retention
+         FROM aa JOIN sizes USING (cohort) ORDER BY cohort, age""")),
+    "stream_funnel" -> Entry(streamFunnel(_, _), Some(ev9FunnelSql)),
+    "ev2_sessionize" -> Entry(ev2Sessionize(_, _), Some(ev2SessionizeSql)),
+    "ev2b_sessionize_salted" -> Entry(ev2bSessionizeSalted(_, _), Some(ev2SessionizeSql)),
+    // ev5: ev2's session-assignment CTE + per-session grouping — the
+    // composed chain (assignment feeding aggregates) is what hashes
+    "ev5_session_stats" -> Entry(ev5SessionStats(_, _), Some(
+      s"""WITH e AS (
+           SELECT user_id, event_id, ts, event_type, value, $sessionPrevSql
+           FROM events),
+         s AS (
+           SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, value,
+             CAST($sessionIdSql AS BIGINT) AS session_id
+           FROM e)
+         SELECT user_id, session_id,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           MIN(ts_us) AS start_us,
+           MAX(ts_us) - MIN(ts_us) AS span_us,
+           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchases,
+           round(${exactSumSql("CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END")}, 4) AS purchase_value
+         FROM s GROUP BY 1, 2 ORDER BY 1, 2""")),
+    "ev3_sessionize_state" -> Entry(ev3SessionizeState(_, _), Some(ev2SessionizeSql)),
+    "ev4_stream_window" -> Entry(ev4StreamWindow(_, _), Some(
+      s"""SELECT date_trunc('hour', ts) AS window_start, event_type, COUNT(*) AS n,
+         round(${exactSumSql("value")}, 4) AS total_value
+         FROM events GROUP BY 1, 2 ORDER BY 1, 2""")),
+    "ev7_session_window" -> Entry(ev7SessionWindow(_, _), Some(ev7SessionWindowSql)),
+    "ev7b_session_window_salted" -> Entry(ev7bSessionWindowSalted(_, _),
+      Some(ev7SessionWindowSql)),
+    "ev7c_session_window_routed" -> Entry(ev7cSessionWindowRouted(_, _),
+      Some(ev7SessionWindowSql)))
 
   // ------------------------------------------------------- joins on corpus
 
@@ -5724,6 +8754,380 @@ object SparkEntry {
       .orderBy(col("doc_id"), col("node_id"))
   }
 
+  /** pipe_training_mix oracle: the dd10 paragraph-removal CTEs feed the
+    * curation gate CTEs (gateCtes parameterized on the cleaned corpus),
+    * then the mx2 rate derivation over the GATED domain counts, then the
+    * sp1 keyed-hash split thresholds — the full five-stage replay.
+    */
+  private def trainingMixSql: String =
+    s"""WITH $boilerCleanCtes,
+     ${gateCtes("cleaned")},
+     dom AS (SELECT doc_id, $domainSql AS domain FROM cgated),
+     dc AS (SELECT domain, COUNT(*) AS nd FROM dom GROUP BY domain),
+     dt AS (
+       SELECT CAST(SUM(nd) AS DOUBLE) AS ntot,
+         CAST(SUM(CAST(round(pow(CAST(nd AS DOUBLE), 0.5), 9)
+           AS DECIMAL(38,10))) AS DOUBLE) AS z
+       FROM dc),
+     dr AS (
+       SELECT domain,
+         least(1.0, round(pow(CAST(nd AS DOUBLE), 0.5), 9) / z
+           * (0.5 * ntot) / CAST(nd AS DOUBLE)) AS rate
+       FROM dc, dt),
+     samp AS (
+       SELECT d.doc_id, d.domain FROM dom d JOIN dr USING (domain)
+       WHERE ${md5UnitSql("temp", "d.doc_id")} < dr.rate),
+     spl AS (
+       SELECT doc_id, domain, $splitCaseSql AS split
+       FROM (SELECT doc_id, domain, ${md5UnitSql("split")} AS u FROM samp))
+     SELECT domain, split, CAST(COUNT(*) AS BIGINT) AS n_docs
+     FROM spl GROUP BY 1, 2 ORDER BY 1, 2"""
+
+  /** pipe_ccnet oracle: dd10's hot-set removal CTEs → the ta2 lang-ID
+    * SELECT on the cleaned corpus (langIdSqlOn, reused verbatim) → the
+    * ta16 LM chain RE-TRAINED ON THE GATED SET → ta17's NTILE per
+    * language → drop the tail tercile.
+    */
+  private def ccnetSql: String =
+    s"""WITH $boilerCleanCtes,
+     lang AS (${langIdSqlOn("cleaned")}),
+     gated AS (
+       SELECT c.doc_id, c.text, l.lang_pred
+       FROM cleaned c JOIN lang l USING (doc_id)
+       WHERE l.lang_pred <> 'und'),
+     ${bigramLmCtes("gated")},
+     $lmMeanCte,
+     ranked AS (
+       SELECT lm2.doc_id, g.lang_pred AS lang, lm2.n_bigrams,
+         lm2.avg_logprob,
+         NTILE(3) OVER (PARTITION BY g.lang_pred
+           ORDER BY lm2.avg_logprob DESC, lm2.doc_id) AS tercile
+       FROM lm2 JOIN gated g ON lm2.doc_id = g.doc_id)
+     SELECT doc_id, lang, n_bigrams, avg_logprob,
+       CASE tercile WHEN 1 THEN 'head' ELSE 'middle' END AS bucket
+     FROM ranked WHERE tercile <> 3 ORDER BY doc_id"""
+
+  /** ev8's left-outer attribution (unmatched purchases carry -1
+    * sentinels); ev8b's binning must be invisible.
+    */
+  private val ev8AttributionSql: String =
+    """SELECT p.event_id AS purchase_id, p.user_id AS user_id,
+         COALESCE(c.event_id, -1) AS click_id,
+         COALESCE(epoch_us(p.ts) - epoch_us(c.ts), -1) AS gap_us
+       FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+       LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+         ON p.user_id = c.user_id
+         AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
+       ORDER BY purchase_id, click_id"""
+
+  private def gateCtes(src: String = "documents"): String = {
+    val en = TextAnalysis.StopwordMarkers("en").map(s => s"'$s'").mkString(", ")
+    val langs = TextAnalysis.StopwordMarkers.keys.toSeq.sorted
+    def hits(l: String) = {
+      val words = TextAnalysis.StopwordMarkers(l).map(s => s"'$s'").mkString(", ")
+      s"len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$words], x)))"
+    }
+    val hitCols = langs.map(l => s"${hits(l)} AS hits_$l").mkString(", ")
+    val maxExpr = s"greatest(${langs.map(l => s"hits_$l").mkString(", ")})"
+    val caseExpr = langs.map(l => s"WHEN hits_$l = m THEN '$l'").mkString(" ")
+    s"""cq AS (
+  SELECT doc_id, ${tok("text")} AS n_tokens, length(text) AS n_chars,
+    round(CASE WHEN ${tok("text")} = 0 THEN 0.0
+      ELSE len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$en], x))) * 1.0 / ${tok("text")} END, 4) AS stopword_ratio,
+    round(CASE WHEN length(text) = 0 THEN 0.0
+      ELSE (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) * 1.0 / length(text) END, 4) AS punct_ratio
+  FROM $src),
+cl AS (
+  SELECT doc_id, CASE WHEN m <= 0 THEN 'und' $caseExpr END AS lang_pred
+  FROM (SELECT doc_id, $hitCols, $maxExpr AS m FROM $src)),
+cgated AS (
+  SELECT d.doc_id, d.text, cl.lang_pred, cq.n_tokens, cq.n_chars, cq.stopword_ratio
+  FROM $src d JOIN cq USING (doc_id) JOIN cl USING (doc_id)
+  WHERE cl.lang_pred = 'en' AND cq.stopword_ratio >= 0.01
+    AND cq.n_tokens >= 5 AND cq.punct_ratio <= 0.30)"""
+  }
+
+  /** stream_curation oracle: exactly one survivor per distinct prefix
+    * fingerprint among gated docs — the count the streaming path must
+    * reproduce regardless of which group member arrived first.
+    */
+  private def streamCurationSql: String =
+    s"""WITH ${gateCtes()}
+SELECT CAST(COUNT(DISTINCT md5(substr(text, 1, 100))) AS BIGINT) AS n_curated
+FROM cgated"""
+
+  /** pipe_curation_incr oracle: odd ids = new batch, even ids = existing.
+    * Survivor rule (matching Curation.curateIncremental): gated, first
+    * in-batch per prefix fingerprint, fingerprint unseen in existing, and
+    * not in a near-dup component touching existing (else min-of-pure-new
+    * component). Same gate / shingle-jaccard / transitive-closure CTE
+    * fragments as the batch oracle.
+    */
+  private def curationIncrSql: String =
+    curationIncrSqlWith("doc_id % 2 = 1", "doc_id % 2 = 0")
+
+  /** The incremental-curation oracle parameterized on the new/existing
+    * split predicates — `pipe_curation_incr` splits on parity,
+    * `pipe_curation_snap` on the doc_id midpoint (the range-prunable
+    * form its snapshot reads skip files by).
+    */
+  private def curationIncrSqlWith(newPred: String, existPred: String)
+      : String = {
+    s"""WITH RECURSIVE ${gateCtes()},
+ngated AS (SELECT * FROM cgated WHERE $newPred),
+exist AS (SELECT doc_id, text FROM documents WHERE $existPred),
+nkeep AS (
+  SELECT md5(substr(text, 1, 100)) AS fp, MIN(doc_id) AS doc_id
+  FROM ngated GROUP BY 1),
+nkeep2 AS (
+  SELECT doc_id FROM nkeep
+  WHERE fp NOT IN (SELECT md5(substr(text, 1, 100)) FROM exist)),
+nexact AS (SELECT g.* FROM ngated g JOIN nkeep2 USING (doc_id)),
+uni AS (SELECT doc_id, text FROM nexact UNION ALL SELECT doc_id, text FROM exist),
+${jaccardComponentCtes("uni")},
+contam AS (SELECT DISTINCT component FROM comp WHERE $existPred),
+ulosers AS (
+  SELECT doc_id FROM comp WHERE component IN (SELECT component FROM contam)
+  UNION
+  SELECT doc_id FROM comp WHERE component <> doc_id)
+SELECT doc_id, lang_pred, n_tokens, n_chars, stopword_ratio
+FROM nexact WHERE doc_id NOT IN (SELECT doc_id FROM ulosers)
+ORDER BY doc_id"""
+  }
+
+  /** The exact-dedup + near-dup-closure CTE chain over `cgated` (needs
+    * [[gateCtes]]; recursive) — shared by the curation, funnel, and any
+    * future composed-curation oracles.
+    */
+  private def curationChainCtes: String =
+    s"""ckeep AS (
+  SELECT MIN(doc_id) AS doc_id FROM cgated GROUP BY md5(substr(text, 1, 100))),
+cexact AS (SELECT g.* FROM cgated g JOIN ckeep USING (doc_id)),
+${jaccardComponentCtes("cexact")},
+closers AS (SELECT doc_id FROM comp WHERE component <> doc_id)"""
+
+  private def curationSql: String = {
+    s"""WITH RECURSIVE ${gateCtes()},
+$curationChainCtes
+SELECT doc_id, lang_pred, n_tokens, n_chars, stopword_ratio
+FROM cexact WHERE doc_id NOT IN (SELECT doc_id FROM closers)
+ORDER BY doc_id"""
+  }
+
+  /** Funnel oracle: one row of per-stage survivor counts off the same CTE
+    * chain the curation oracle uses (a funnel that disagrees with the
+    * pipeline it describes is worse than none).
+    */
+  private def curationFunnelSql: String = {
+    s"""WITH RECURSIVE ${gateCtes()},
+$curationChainCtes
+SELECT
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_total,
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM cl WHERE lang_pred = 'en') AS n_lang_pass,
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM cgated) AS n_gate_pass,
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM cexact) AS n_exact_keep,
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM cexact
+     WHERE doc_id NOT IN (SELECT doc_id FROM closers)) AS n_curated"""
+  }
+
+  private def corpusJoinEntries: Seq[(String, Entry)] = Seq(
+    "s2_paired_scan" -> Entry(s2Paired(_, _), Some(
+      """SELECT d.doc_id, d.n_chars, e.label FROM documents d
+         JOIN embeddings e ON d.doc_id = e.vec_id ORDER BY d.doc_id""")),
+    "s6_incremental" -> Entry(s6Incremental(_, _), Some(
+      """SELECT doc_id FROM documents
+         WHERE NOT EXISTS (SELECT 1 FROM embeddings
+                           WHERE vec_id = doc_id AND vec_id % 3 != 0)
+         ORDER BY doc_id""")),
+    "s7_health" -> Entry(s7Health(_, _), Some(
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_text,
+         CAST(SUM(CASE WHEN text IS NOT NULL AND trim(text) = '' THEN 1 ELSE 0 END) AS BIGINT) AS n_empty_text,
+         CAST(COUNT(doc_id) - COUNT(DISTINCT doc_id) AS BIGINT) AS n_dup_ids,
+         MIN(doc_id) AS min_doc_id, MAX(doc_id) AS max_doc_id
+         FROM documents""")),
+    // s12: the manifest aggregates replayed — count + bit_xor of the
+    // md5-prefix-long key fingerprint (order/partitioning-independent);
+    // manifest_ok = 1 is meaningful because readPublished THROWS on any
+    // data/manifest mismatch before this row can exist
+    "s12_manifest_publish" -> Entry(s12ManifestPublish(_, _), Some(
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+           bit_xor(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
+             AS BIGINT)) AS key_xor,
+           1 AS manifest_ok
+         FROM documents""")),
+    // s14: the snapshot lifecycle's emitted counts are pure functions of
+    // the source tables; v_latest = 1 is the torn-publish invariant
+    "s14_snapshot_publish" -> Entry(s14SnapshotPublish(_, _), Some("""
+SELECT CAST(1 AS BIGINT) AS v_latest,
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS docs_latest,
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents WHERE doc_id % 2 = 0) AS docs_v0,
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings) AS emb_latest""")),
+    // s15: MERGE INTO replayed — the changelog's last-write-wins window
+    // (seq DESC, op DESC), the anti-join of base against changed keys,
+    // and the upsert union
+    "s15_cdc_apply" -> Entry(s15CdcApply(_, _), Some("""
+WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
+ch AS (
+  SELECT doc_id, 'updated ' || doc_id AS text, 'update' AS op, 1 AS seq
+  FROM documents WHERE doc_id % 10 = 0
+  UNION ALL
+  SELECT doc_id, '' AS text, 'delete' AS op, 2 AS seq
+  FROM documents WHERE doc_id % 14 = 0
+  UNION ALL
+  SELECT doc_id + 1000000 AS doc_id, 'inserted ' || doc_id AS text,
+    'insert' AS op, 1 AS seq
+  FROM documents WHERE doc_id % 2 = 1),
+lt AS (
+  SELECT doc_id, text, op FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+      ORDER BY seq DESC, op DESC) AS rn FROM ch) WHERE rn = 1),
+res AS (
+  SELECT b.doc_id, b.text FROM base b
+  LEFT JOIN lt ON b.doc_id = lt.doc_id WHERE lt.doc_id IS NULL
+  UNION ALL
+  SELECT doc_id, text FROM lt WHERE op <> 'delete')
+SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars
+FROM res ORDER BY doc_id""")),
+    // s4: the oracle recomputes the summary straight from documents — both
+    // read-back paths (parquet table, per-doc txt files for doc_id < 200)
+    // must reproduce it bit-for-bit or the hash check fails
+    "s4_sink_roundtrip" -> Entry(s4SinkRoundtrip(_, _), Some(
+      s"""SELECT doc_id,
+         array_to_string(string_split_regex(trim(text), '\\s+')[1:15], ' ') AS summary,
+         ${tok("text")} AS n_tokens,
+         CASE WHEN doc_id < 200
+           THEN array_to_string(string_split_regex(trim(text), '\\s+')[1:15], ' ')
+         END AS file_summary
+         FROM documents ORDER BY doc_id""")),
+    // s5: stats block + section cardinalities of the JSON report,
+    // recomputed independently (g6-style exact-decimal mean)
+    "s5_report_sink" -> Entry(s5ReportSink(_, _), Some(
+      s"""WITH v AS (
+           SELECT 'n_tokens' AS metric, CAST(${tok("text")} AS DOUBLE) AS v FROM documents
+           UNION ALL
+           SELECT 'n_chars' AS metric, CAST(length(text) AS DOUBLE) AS v FROM documents),
+         st AS (
+           SELECT metric,
+             round(${exactSumSql("v")} / COUNT(*), 4) AS mean_v,
+             round(MIN(v), 4) AS min_v, round(MAX(v), 4) AS max_v,
+             COUNT(*) AS n
+           FROM v GROUP BY 1),
+         hb AS (
+           SELECT CAST(COUNT(DISTINCT CASE WHEN ${tok("text")} < 55 THEN 'short'
+                                           WHEN ${tok("text")} < 65 THEN 'mid'
+                                           ELSE 'long' END) AS INT) AS hist_buckets
+           FROM documents),
+         dn AS (SELECT CAST(least(100, COUNT(*)) AS INT) AS details_n FROM documents)
+         SELECT metric, mean_v, min_v, max_v, n, hist_buckets, details_n
+         FROM st, hb, dn ORDER BY metric""")),
+    "stream_curation" -> Entry(streamCuration(_, _), Some(streamCurationSql)),
+    // stream_ccingest: template → extraction (the shared ta19 CTEs) →
+    // gate → one survivor per distinct gated prefix fingerprint
+    "stream_ccingest" -> Entry(streamCcIngest(_, _), Some(
+      s"""WITH ${htmlExtractCtes()},
+         xdocs AS (SELECT doc_id, t AS text FROM xs4),
+         ${gateCtes("xdocs")}
+         SELECT CAST(COUNT(DISTINCT md5(substr(text, 1, 100))) AS BIGINT)
+           AS n_curated
+         FROM cgated""")),
+    // stream_dedup: first-arrival-wins over one replay == distinct prefix
+    // fingerprints (the dd1b derivation)
+    "stream_dedup" -> Entry(streamDedup(_, _), Some(
+      """SELECT CAST(COUNT(DISTINCT md5(substr(text, 1, 100))) AS BIGINT)
+           AS n_unique FROM documents""")),
+    // stream_neardup: one AvailableNow batch == the batch greedy rule —
+    // held to dd14's oracle verbatim
+    "stream_neardup" -> Entry(streamNeardup(_, _), Some(lshGreedyDedupSql())),
+    // stream_decontam: the dc2 composition as a survivor count
+    "stream_decontam" -> Entry(streamDecontam(_, _), Some(
+      s"""WITH ${benchShingleCtes()},
+         $flaggedCte
+         SELECT CAST(COUNT(*) AS BIGINT) AS n_clean FROM documents
+         WHERE doc_id % 10 <> 0
+           AND doc_id NOT IN (SELECT doc_id FROM flagged)""")),
+    // stream_state_gate: the observability table's accounting equals
+    // exact ground truth (input rows == corpus count, final dedup state
+    // rows == distinct fingerprints)
+    "stream_state_gate" -> Entry(streamStateGate(_, _), Some(
+      "SELECT 1 AS has_batches, 1 AS input_match, 1 AS state_match")),
+    // stream_index_append: the streamed inverted file is row-identical
+    // to the batch build with the same frozen centroid model
+    "stream_index_append" -> Entry(streamIndexAppend(_, _), Some(
+      "SELECT 1 AS rows_match, 1 AS assign_match")),
+    // stream_drift_gate: the centroid-drift monitor flags the planted
+    // drifted batch and nothing else (exact per-batch flag parity)
+    "stream_drift_gate" -> Entry(streamDriftGate(_, _), Some(
+      "SELECT 1 AS has_batches, 1 AS planted_ok, 1 AS flag_match")),
+    // stream_index_rebuild: the drift-triggered rebuild + atomic swap —
+    // exactly one rebuild fired by the planted batch, the rebuilt index
+    // row/bit-identical to a from-scratch build over the covered
+    // corpus, v0 still served intact, and the post-swap base+delta
+    // index complete and able to retrieve the planted direction
+    "stream_index_rebuild" -> Entry(streamIndexRebuild(_, _), Some(
+      """SELECT 1 AS has_batches, 1 AS planted_ok, 1 AS flag_match,
+           1 AS rebuilt_once, 1 AS rebuilt_identical, 1 AS preswap_ok,
+           1 AS served_complete, 1 AS served_ok""")),
+    "stream_classify" -> Entry(streamClassify(_, _), Some(ta18NbSql)),
+    // stream_classify_lr: sink rows held VERBATIM to the all-docs batch
+    // replay of the trained scorer (train-batch/score-stream invisibility)
+    "stream_classify_lr" -> Entry(streamClassifyLr(_, _),
+      Some(OracleSqlGen.cls1ScoresStreamSql())),
+    // ev6: the stream-stream join's output set == the batch equi+range
+    // join (watermarks only bound state, never drop in-window rows here:
+    // the whole replay fits one micro-batch per side)
+    "ev6_stream_join" -> Entry(ev6StreamJoin(_, _), Some(
+      """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
+           p.user_id AS user_id,
+           epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
+         FROM events p JOIN events c ON p.user_id = c.user_id
+         WHERE p.event_type = 'purchase' AND c.event_type = 'click'
+           AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
+         ORDER BY purchase_id, click_id""")),
+    "ev8_attribution_outer" -> Entry(ev8AttributionOuter(_, _), Some(ev8AttributionSql)),
+    "ev8b_attribution_binned" -> Entry(ev8bAttributionBinned(_, _),
+      Some(ev8AttributionSql)),
+    "pipe_training_mix" -> Entry(pipeTrainingMix(_, _), Some(trainingMixSql)),
+    "pipe_ccnet" -> Entry(pipeCcnet(_, _), Some(ccnetSql)),
+    // pipe_prep: normalize -> decontaminate -> split, each stage the
+    // standalone oracle's form, chained (normalized text feeds the shingles)
+    "pipe_prep" -> Entry(pipePrep(_, _), Some(
+      s"""WITH norm AS (SELECT doc_id, $normalizeTextSql AS text FROM documents),
+         ${benchShingleCtes("norm")},
+         $flaggedCte,
+         clean AS (
+           SELECT doc_id FROM norm
+           WHERE doc_id % 10 <> 0 AND doc_id NOT IN (SELECT doc_id FROM flagged)),
+         u AS (SELECT doc_id, ${md5UnitSql("split")} AS u FROM clean)
+         SELECT doc_id, $splitCaseSql AS split
+         FROM u ORDER BY doc_id""")),
+    "pipe_curation_funnel" -> Entry(pipeCurationFunnel(_, _), Some(curationFunnelSql)),
+    "pipe_curation_incr" -> Entry(pipeCurationIncr(_, _), Some(curationIncrSql)),
+    // the shingle-hash-LSH incremental form must curate identically
+    // (8x2 banding recall 1.0 on this corpus) — same oracles verbatim
+    "pipe_curation_incr_lsh" -> Entry(pipeCurationIncr(_, _, lsh = true),
+      Some(curationIncrSql)),
+    "pipe_curation_snap" -> Entry(pipeCurationSnap(_, _), Some(curationIncrSqlWith(
+      "doc_id * 2 > (SELECT MAX(doc_id) FROM documents)",
+      "doc_id * 2 <= (SELECT MAX(doc_id) FROM documents)"))),
+    "pipe_curation_snap_lsh" -> Entry(pipeCurationSnap(_, _, lsh = true),
+      Some(curationIncrSqlWith(
+      "doc_id * 2 > (SELECT MAX(doc_id) FROM documents)",
+      "doc_id * 2 <= (SELECT MAX(doc_id) FROM documents)"))),
+    "pipe_curation" -> Entry(pipeCuration(_, _), Some(curationSql)),
+    // the LSH-prefiltered chain must curate identically here (banding
+    // recall 1.0 on this corpus) — same oracle verbatim
+    "pipe_curation_lsh" -> Entry(pipeCurationLsh(_, _), Some(curationSql)),
+    // g1c: the hot-key corpus (doc 0 = every fifth order, ~20% of chunks)
+    // still held to the direct ordered string_agg — the salted path must be
+    // indistinguishable from the unsalted collect ON the skewed key
+    // s8: roundtrip integrity + the size-derived file count (1 at test SF)
+    "s8_compact_roundtrip" -> Entry(s8CompactRoundtrip(_, _), Some(
+      """SELECT doc_id, n_chars, 1 AS n_files_after
+         FROM documents ORDER BY doc_id""")),
+    "cl4_semdedup_corpus" -> Entry(cl4SemdedupCorpus(_, _)),
+    "s3_tree_ingest" -> Entry(s3TreeIngest(_, _), Some(OracleSqlGen.s3TreeIngestSql)))
+
   // ------------------------------------------------------------ multimodal
 
   /** MM1: opaque binary column plumbing — payload bytes + checksum + a
@@ -6089,1598 +9493,70 @@ FROM m ORDER BY doc_id, summarizer""")
       .orderBy(col("doc_id"))
   }
 
-  // ------------------------------------------------------------- pipelines
-
-  /** Non-SQL-expressible ops (rows-only driver check + ScalaTest goldens). */
-  private def binpackGreedy(spark: SparkSession, dir: String): DataFrame = {
-    val chunks = tbl(spark, dir, "lineitem").select(
-      col("l_orderkey").as("doc_id"),
-      col("l_linenumber").as("chunk_idx"),
-      lit("x").as("text"),
-      floor(col("l_quantity")).cast("long").as("n_tokens"))
-    CorpusOps.binPack(chunks, 50L).toDF()
-      .select(col("doc_id"), col("chunk_idx"), col("bin"))
-      .orderBy(col("doc_id"), col("chunk_idx"))
-  }
-
-  // -------------------------------------------------------------- registry
-
-  /** Registry names from a comma-separated list, in list order. Fails
-    * fast on any unregistered name — a typo would otherwise select
-    * nothing, write no artifact and exit 0; the error is `what` followed
-    * by the unknown names.
+  /** mm6's decoded dimensions, pure functions of doc_id (the oracle can
+    * only match if the JDK codec actually parsed the rendered
+    * containers); mm6b's fused one-pass plan must be invisible.
     */
-  def namedQueries(csv: String, what: String): Seq[String] = {
-    val registry = queries
-    val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val unknown = names.filterNot(registry.contains).distinct.sorted
-    require(unknown.isEmpty, s"$what: ${unknown.mkString(",")}")
-    names
-  }
+  private val mm6CodecSql: String =
+    """SELECT doc_id, 'png' AS format,
+       CAST(16 + (doc_id % 13) * 4 AS INT) AS width,
+       CAST(16 + (doc_id % 7) * 4 AS INT) AS height,
+       CAST(1 AS INT) AS n_frames,
+       CAST(24 AS INT) AS r_width, CAST(18 AS INT) AS r_height
+       FROM documents ORDER BY doc_id"""
 
-  /** The dev-loop subset `SPARK_GRAFT_ONLY=name1,name2` selects for
-    * Verify and Bench; unset (as the driver runs them), the full
-    * registry.
-    */
-  def selectedQueries(): Map[String, (SparkSession, String) => DataFrame] =
-    sys.env.get("SPARK_GRAFT_ONLY").fold(queries) { csv =>
-      val names =
-        namedQueries(csv, "unknown SPARK_GRAFT_ONLY names").toSet
-      queries.filter { case (n, _) => names(n) }
-    }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg(_, _)),
-    "g11_rollup" -> (g11Rollup(_, _)),
-    "j1_join_revenue" -> (j1Revenue(_, _)),
-    "j2_semi_join" -> (j2Semi(_, _)),
-    "j3_anti_join" -> (j3Anti(_, _)),
-    "p5_top_orders" -> (p5Top(_, _)),
-    "o3_window_running" -> (o3Window(_, _)),
-    "o4_random_pick" -> (o4RandomPick(_, _)),
-    "g3_binpack_cumsum" -> (g3BinpackCumsum(_, _)),
-    "g1_collect_ordered" -> (g1Collect(_, _)),
-    "g1b_collect_salted" -> (g1bCollectSalted(_, _)),
-    "g1c_collect_hotkey" -> (g1cCollectHotkey(_, _)),
-    "g6_metric_stats" -> (g6Stats(_, _)),
-    "g7_histogram" -> (g7Histogram(_, _)),
-    "g8_argmax" -> (g8Argmax(_, _)),
-    "f1_clean_text" -> (f1Clean(_, _)),
-    "f2_token_counts" -> (f2TokenCounts(_, _)),
-    "f3_bpe_count" -> (f3BpeCount(_, _)),
-    "c3_truncate" -> (c3Truncate(_, _)),
-    "c1_chunk_fixed" -> (c1ChunkFixed(_, _)),
-    "c2_chunk_recursive" -> (c2ChunkRecursive(_, _)),
-    "c2b_chunk_recursive_deep" -> (c2bChunkRecursiveDeep(_, _)),
-    "f7_name_scalars" -> (f7NameScalars(_, _)),
-    "s1_textdir_scan" -> (s1TextdirScan(_, _)),
-    "s1b_jsonl_scan" -> (s1bJsonlScan(_, _)),
-    "dd1_exact_dups" -> (dd1ExactDups(_, _)),
-    "dd1b_prefix_dups" -> (dd1bPrefixDups(_, _)),
-    "dd2_minhash_sig" -> (dd2MinhashSig(_, _)),
-    "dd3_minhash_lsh" -> (dd3MinhashLsh(_, _)),
-    "dd3b_minhash_lsh_capped" -> (dd3bMinhashLshCapped(_, _)),
-    "dd14_lsh_dedup_greedy" -> (dd14LshDedupGreedy(_, _)),
-    "dd4_jaccard_pairs" -> (dd4Jaccard(_, _)),
-    "dd4b_jaccard_lsh" -> (dd4bJaccardLsh(_, _)),
-    "dd4c_jaccard_sharp" -> (dd4cJaccardSharp(_, _)),
-    "dc1_decontam" -> (dc1Decontam(_, _)),
-    "dc2_decontam_corpus" -> (dc2DecontamCorpus(_, _)),
-    "dc4_span_decontam" -> (dc4SpanDecontam(_, _)),
-    "dc5_semantic_decontam" -> (dc5SemanticDecontam(_, _)),
-    "dd12_span_self_dedup" -> (dd12SpanSelfDedup(_, _)),
-    "dc3_decontam_bloom" -> (dc3DecontamBloom(_, _)),
-    "dd9_span_coverage" -> (dd9SpanCoverage(_, _)),
-    "cl1_cluster_sizes" -> (cl1ClusterSizes(_, _)),
-    "cl2_semdedup_pairs" -> (cl2SemdedupPairs(_, _)),
-    "cl3_semdedup_recall" -> (cl3SemdedupRecall(_, _)),
-    "cl2_containment" -> (cl2Containment(_, _)),
-    "dd6b_containment" -> (dd6bContainment(_, _)),
-    "cl4_containment" -> (cl4Containment(_, _)),
-    "ss2_gate" -> (ss2Gate(_, _)),
-    "ss3_gate" -> (ss3Gate(_, _)),
-    "ss7_index_roundtrip" -> (ss7IndexRoundtrip(_, _)),
-    "ss7b_index_append" -> (ss7bIndexAppend(_, _)),
-    "qz4_gate" -> (qz4Gate(_, _)),
-    "dd6b_gate" -> (dd6bGate(_, _)),
-    "dd6c_embedding_pairs_routed" -> (dd6cEmbeddingPairsRouted(_, _)),
-    "dd6c_containment" -> (dd6cContainment(_, _)),
-    "dd6c_recall" -> (dd6cRecall(_, _)),
-    "dd6c_gate" -> (dd6cGate(_, _)),
-    "cl3_gate" -> (cl3Gate(_, _)),
-    "cl1_gate" -> (cl1Gate(_, _)),
-    "sp1_split" -> (sp1Split(_, _)),
-    "sp4_component_split" -> (sp4ComponentSplit(_, _)),
-    "sp2_stratified" -> (sp2Stratified(_, _)),
-    "sp3_fixed_sample" -> (sp3FixedSample(_, _)),
-    "mx1_resample" -> (mx1Resample(_, _)),
-    "mx3_unimax" -> (mx3Unimax(_, _)),
-    "pk1_pack" -> (pk1Pack(_, _)),
-    "pk1b_packed_spans" -> (pk1bPackedSpans(_, _)),
-    "pk2_pack_greedy" -> (pk2PackGreedy(_, _)),
-    "sh1_shuffle" -> (sh1Shuffle(_, _)),
-    "qz1_quantize" -> (qz1Quantize(_, _)),
-    "qz2_topk_quant" -> (qz2TopkQuant(_, _)),
-    "qz3_recall" -> (qz3Recall(_, _)),
-    "qz5_matryoshka_topk" -> (qz5MatryoshkaTopk(_, _)),
-    "qz5_recall" -> (qz5Recall(_, _)),
-    "qz6_sign_topk" -> (qz6SignTopk(_, _)),
-    "qz6_recall" -> (qz6Recall(_, _)),
-    "qz6b_sign_rerank" -> (qz6bSignRerank(_, _)),
-    "qz6b_recall" -> (qz6bRecall(_, _)),
-    "qz4_pq_topk" -> (qz4PqTopk(_, _)),
-    "qz4_recall" -> (qz4Recall(_, _)),
-    "ss8_ivfpq_topk" -> (ss8IvfPqTopk(_, _)),
-    "ss8_recall" -> (ss8Recall(_, _)),
-    "ss8_gate" -> (ss8Gate(_, _)),
-    "dd7_components" -> (dd7Components(_, _)),
-    "dd8_dedup_corpus" -> (dd8DedupCorpus(_, _)),
-    "dd8b_dedup_best" -> (dd8bDedupBest(_, _)),
-    "dd11_cdc_chunks" -> (dd11CdcChunks(_, _)),
-    "dd11b_cdc_dedup_corpus" -> (dd11bCdcDedup(_, _)),
-    "dd5_simhash_pairs" -> (dd5Simhash(_, _)),
-    "dd6_embedding_pairs" -> (dd6EmbeddingPairs(_, _)),
-    "ss1_cosine_topk" -> (ss1CosineTopk(_, _)),
-    "ss11_mmr_topk" -> (ss11MmrTopk(_, _)),
-    "ss9_hard_negatives" -> (ss9HardNegatives(_, _)),
-    "ss10_centered_topk" -> (ss10CenteredTopk(_, _)),
-    "dd13_text_semantic_pairs" -> (dd13TextSemanticPairs(_, _)),
-    "dd13_gate" -> (dd13Gate(_, _)),
-    "dd13b_text_semdedup" -> (dd13bTextSemdedupClustered(_, _)),
-    "dd13b_gate" -> (dd13bGate(_, _)),
-    "dd13c_text_semdedup_ann" -> (dd13cTextSemdedupAnn(_, _)),
-    "dd13c_gate" -> (dd13cGate(_, _)),
-    "dd13r_text_semdedup_routed" -> (dd13rTextSemdedupRouted(_, _)),
-    "dd13r_gate" -> (dd13rGate(_, _)),
-    "ss2_lsh_topk" -> (ss2LshTopk(_, _)),
-    "ss3_ivf_topk" -> (ss3IvfTopk(_, _)),
-    "ss13_graph_topk" -> (ss13GraphTopk(_, _)),
-    "ss13_recall" -> (ss13Recall(_, _)),
-    "ss13_gate" -> ((s: SparkSession, d: String) =>
-      recallGate(ss13Recall(s, d), 80)),
-    "ss2_recall" -> (ss2Recall(_, _)),
-    "ss3_recall" -> (ss3Recall(_, _)),
-    "ss4_tfidf_pairs" -> (ss4TfidfPairs(_, _)),
-    "ss5_bm25_topk" -> (ss5Bm25Topk(_, _)),
-    "ss6_hybrid_rrf" -> (ss6HybridRrf(_, _)),
-    "gr1_pagerank" -> (gr1Pagerank(_, _)),
-    "gr1b_pagerank_salted" -> (gr1bPagerankSalted(_, _)),
-    "gr2_degrees" -> (gr2Degrees(_, _)),
-    "dd6b_embedding_pairs_lsh" -> (dd6bEmbeddingPairsLsh(_, _)),
-    "dd6b_recall" -> (dd6bRecall(_, _)),
-    "ta1_quality" -> (ta1Quality(_, _)),
-    "ta2_lang_id" -> (ta2LangId(_, _)),
-    "ta3_token_stats" -> (ta3TokenStats(_, _)),
-    "ta4_fingerprint" -> (ta4Fingerprint(_, _)),
-    "ta5_vocab" -> (ta5Vocab(_, _)),
-    "ta5b_vocab_hll" -> (ta5bVocabHll(_, _)),
-    "ta7_pii_redact" -> (ta7PiiRedact(_, _)),
-    "ta19_html_extract" -> (ta19HtmlExtract(_, _)),
-    "ta8_repetition" -> (ta8Repetition(_, _)),
-    "ta9_normalize" -> (ta9Normalize(_, _)),
-    "ta10_compress" -> (ta10Compress(_, _)),
-    "ta10_gate" -> (ta10Gate(_, _)),
-    "ta11_logprob" -> (ta11LogProb(_, _)),
-    "ta12_length_stats" -> (ta12LengthStats(_, _)),
-    "ta12b_length_approx" -> (ta12bLengthApprox(_, _)),
-    "ta13_gopher" -> (ta13Gopher(_, _)),
-    "ta14_url_filter" -> (ta14UrlFilter(_, _)),
-    "ta15_heavy_hitters" -> (ta15HeavyHitters(_, _)),
-    "ta16_bigram_logprob" -> (ta16BigramLogprob(_, _)),
-    "ta17_ppl_buckets" -> (ta17PplBuckets(_, _)),
-    "ta18_nb_classifier" -> (ta18NbClassifier(_, _)),
-    "cls1_cg_weights" -> (cls1CgWeights(_, _)),
-    "ta15b_heavy_hitters_cms" -> (ta15bHeavyHittersCms(_, _)),
-    "ta20_shard_drift" -> (ta20ShardDrift(_, _)),
-    "s13_zorder_stats" -> (s13ZorderStats(_, _)),
-    "s13b_zorder3_stats" -> (s13bZorder3Stats(_, _)),
-    "s13c_hilbert_stats" -> (s13cHilbertStats(_, _)),
-    "s16_table_stats" -> (s16TableStats(_, _)),
-    "dq1_expectations" -> (dq1Expectations(_, _)),
-    "dq2_quarantine" -> (dq2Quarantine(_, _)),
-    "dq3_schema_drift" -> (dq3SchemaDrift(_, _)),
-    "s16b_stats_gate" -> (s16bTableStatsApprox(_, _)),
-    "s16c_stats_incremental" -> (s16cStatsIncremental(_, _)),
-    "s13d_layout_skipping" -> (s13dLayoutSkipping(_, _)),
-    "s13e_stats_pruned_scan" -> (s13eStatsPrunedScan(_, _)),
-    "s13f_optimize_recluster" -> (s13fOptimizeRecluster(_, _)),
-    "s13g_typed_pruning" -> (s13gTypedPruning(_, _)),
-    "s13h_bloom_pruning" -> (s13hBloomPruning(_, _)),
-    "s17_stats_compaction" -> (s17StatsCompaction(_, _)),
-    "s18_snapshot_pruned_read" -> (s18SnapshotPrunedRead(_, _)),
-    "s19_optimize_versioned" -> (s19OptimizeVersioned(_, _)),
-    "s20_cdc_versioned_stats" -> (s20CdcVersionedStats(_, _)),
-    "s21_schema_evolution" -> (s21SchemaEvolution(_, _)),
-    "s22_version_diff" -> (s22VersionDiff(_, _)),
-    "s23_retention" -> (s23Retention(_, _)),
-    "s24_optimistic_merge" -> (s24OptimisticMerge(_, _)),
-    "s25_cdc_ingest" -> (s25CdcIngest(_, _)),
-    "s26_compact_versioned" -> (s26CompactVersioned(_, _)),
-    "stream_dq" -> (streamDq(_, _)),
-    "stream_stats" -> (streamStats(_, _)),
-    "stream_snapshot_ingest" -> (streamSnapshotIngest(_, _)),
-    "s14_snapshot_publish" -> (s14SnapshotPublish(_, _)),
-    "s15_cdc_apply" -> (s15CdcApply(_, _)),
-    "cls1_cg_scores" -> (cls1CgScores(_, _)),
-    "cls1_cg_eval" -> (cls1CgEval(_, _)),
-    "pipe_curation_trained" -> (pipeCurationTrained(_, _)),
-    "cur2_dsir" -> (cur2Dsir(_, _)),
-    "cur3_excess_loss" -> (cur3ExcessLoss(_, _)),
-    "ta17b_ppl_buckets_sampled" -> (ta17bPplBucketsSampled(_, _)),
-    "ta17b_gate" -> (ta17bGate(_, _)),
-    "mx2_temperature" -> (mx2Temperature(_, _)),
-    "bt1_bpe_train" -> (bt1BpeTrain(_, _)),
-    "bt1b_bpe_train_sampled" -> (bt1bBpeTrainSampled(_, _)),
-    "bt2_bpe_encode" -> (bt2BpeEncode(_, _)),
-    "bt3_bpe_vocab" -> (bt3BpeVocab(_, _)),
-    "dd10_paragraph_dedup" -> (dd10ParagraphDedup(_, _)),
-    "s9_sharded_export" -> (s9ShardedExport(_, _)),
-    "s10_partitioned_export" -> (s10PartitionedExport(_, _)),
-    "s11_warc_roundtrip" -> (s11WarcRoundtrip(_, _)),
-    "ta6_top_ngrams" -> (ta6TopNgrams(_, _)),
-    "aj1_asof_join" -> (aj1Asof(_, _)),
-    "aj1b_asof_salted" -> (aj1bAsofSalted(_, _)),
-    "aj2_interval_join" -> (aj2IntervalJoin(_, _)),
-    "ev2b_sessionize_salted" -> (ev2bSessionizeSalted(_, _)),
-    "ev5_session_stats" -> (ev5SessionStats(_, _)),
-    "ev6_stream_join" -> (ev6StreamJoin(_, _)),
-    "ev8_attribution_outer" -> (ev8AttributionOuter(_, _)),
-    "ev8b_attribution_binned" -> (ev8bAttributionBinned(_, _)),
-    "ev1_event_window" -> (ev1EventWindow(_, _)),
-    "ev2_sessionize" -> (ev2Sessionize(_, _)),
-    "ev9_funnel" -> (ev9Funnel(_, _)),
-    "stream_funnel" -> (streamFunnel(_, _)),
-    "ev10_retention" -> (ev10Retention(_, _)),
-    "ev3_sessionize_state" -> (ev3SessionizeState(_, _)),
-    "ev4_stream_window" -> (ev4StreamWindow(_, _)),
-    "ev7_session_window" -> (ev7SessionWindow(_, _)),
-    "ev7b_session_window_salted" -> (ev7bSessionWindowSalted(_, _)),
-    "ev7c_session_window_routed" -> (ev7cSessionWindowRouted(_, _)),
-    "s2_paired_scan" -> (s2Paired(_, _)),
-    "s3_tree_ingest" -> (s3TreeIngest(_, _)),
-    "s7_health" -> (s7Health(_, _)),
-    "s6_incremental" -> (s6Incremental(_, _)),
-    "s4_sink_roundtrip" -> (s4SinkRoundtrip(_, _)),
-    "s12_manifest_publish" -> (s12ManifestPublish(_, _)),
-    "s8_compact_roundtrip" -> (s8CompactRoundtrip(_, _)),
-    "cl4_semdedup_corpus" -> (cl4SemdedupCorpus(_, _)),
-    "s5_report_sink" -> (s5ReportSink(_, _)),
-    "mm1_binary_meta" -> (mm1BinaryMeta(_, _)),
-    "mm2_decode_meta" -> (mm2DecodeMeta(_, _)),
-    "mm3_frame_sample" -> (mm3FrameSample(_, _)),
-    "mm4_feature_norm" -> (mm4FeatureNorm(_, _)),
-    "mm5_resize" -> (mm5Resize(_, _)),
-    "mm6_codec_roundtrip" -> (mm6CodecRoundtrip(_, _)),
-    "mm6b_codec_fused" -> (mm6bCodecFused(_, _)),
-    "mm7_wav_roundtrip" -> (mm7WavRoundtrip(_, _)),
-    "mm9_audio_features" -> (mm9AudioFeatures(_, _)),
-    "mm8_media_neardup" -> (mm8MediaNeardup(_, _)),
-    "g3_binpack_greedy" -> (binpackGreedy(_, _)),
-    "pipe_curation" -> (pipeCuration(_, _)),
-    "pipe_curation_lsh" -> (pipeCurationLsh(_, _)),
-    "pipe_curation_incr" -> (pipeCurationIncr(_, _)),
-    "pipe_curation_incr_lsh" -> (pipeCurationIncr(_, _, lsh = true)),
-    "pipe_curation_snap" -> (pipeCurationSnap(_, _)),
-    "pipe_curation_snap_lsh" -> (pipeCurationSnap(_, _, lsh = true)),
-    "pipe_curation_funnel" -> (pipeCurationFunnel(_, _)),
-    "pipe_prep" -> (pipePrep(_, _)),
-    "pipe_ccnet" -> (pipeCcnet(_, _)),
-    "pipe_training_mix" -> (pipeTrainingMix(_, _)),
-    "stream_curation" -> (streamCuration(_, _)),
-    "stream_ccingest" -> (streamCcIngest(_, _)),
-    "stream_dedup" -> (streamDedup(_, _)),
-    "stream_state_gate" -> (streamStateGate(_, _)),
-    "stream_index_append" -> (streamIndexAppend(_, _)),
-    "stream_drift_gate" -> (streamDriftGate(_, _)),
-    "stream_index_rebuild" -> (streamIndexRebuild(_, _)),
-    "stream_neardup" -> (streamNeardup(_, _)),
-    "stream_decontam" -> (streamDecontam(_, _)),
-    "stream_classify" -> (streamClassify(_, _)),
-    "stream_classify_lr" -> (streamClassifyLr(_, _)),
-    "pipe_truncated" -> (Pipelines.truncated(_, _)),
-    "q6_textrank" -> (q6TextRank(_, _)),
-    "q7_summarizer_compare" -> (q7SummarizerCompare(_, _)),
-    "q8_mmr_summaries" -> (q8MmrSummaries(_, _)),
-    "q8_gate" -> (q8Gate(_, _)),
-    "pipe_mapreduce" -> (Pipelines.mapReduce(_, _)),
-    "pipe_critique" -> (Pipelines.critique(_, _)),
-    "pipe_iterative" -> (Pipelines.iterative(_, _)),
-    "pipe_hierarchical" -> (Pipelines.hierarchical(_, _)),
-    "eval_rouge_ngram" -> (evalRougeNgram(_, _)),
-    "eval_judge_ngram" -> (evalJudgeNgram(_, _)),
-    "eval_stats_ngram" -> (evalStatsNgram(_, _)),
-    "eval_bert_ngram" -> (evalBertNgram(_, _)),
-    "eval_bleu_ngram" -> (evalBleuNgram(_, _)),
-    "eval_chrf" -> (evalChrf(_, _)),
-    "eval_pair_metrics" -> (Pipelines.pairMetrics(_, _)),
-    "eval_summary_stats" -> (Pipelines.evalStats(_, _)),
-    "eval_judge_scores" -> (Pipelines.judgeScores(_, _)),
-    "eval_judge_stats" -> (Pipelines.judgeStats(_, _)),
-    "eval_bertscore" -> (Pipelines.bertScores(_, _)),
-    "eval_bertscore_tx" -> (evalBertscoreTx(_, _)),
-    "m3t_semantic_tx" -> (m3tSemanticTx(_, _)),
-    "m3tb_semantic_tx_lsh" -> (m3tbSemanticTxLsh(_, _)),
-    "m3tb_recall" -> (m3tbRecall(_, _)),
-    "m3tb_gate" -> ((s: SparkSession, d: String) =>
-      recallGate(m3tbRecall(s, d), 90)),
-    "tx_gate" -> (txGate(_, _)),
-    "tx_trained_gate" -> (txTrainedGate(_, _)),
-    "ss14_rerank_cross" -> (ss14RerankCross(_, _)),
-    "ss14_gate" -> (ss14Gate(_, _)))
-
-  // --------------------------------------------------------------- oracles
-
-  /** gr1 oracle: `iters` PageRank power iterations over the trade graph,
-    * unrolled as CTE pairs (dangling mass d{i}, contributions c{i}, next
-    * ranks r{i}) — arithmetic, rounding grid, and literals (emitted from
-    * the Scala doubles, so both engines parse identical bit patterns)
-    * mirror Graph.pageRank exactly.
-    */
-  private def gr1PagerankSql(iters: Int, damping: Double): String = {
-    val setup =
-      """e AS (
-           SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-         outdeg AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS outdeg
-                    FROM e GROUP BY 1),
-         r0 AS (SELECT node, round(1.0 / n, 9) AS rank FROM nodes, nn)"""
-    val rounds = (1 to iters).map { i =>
-      s"""d$i AS (
-           SELECT COALESCE(${exactSumSql("rank")}, 0.0) AS dm
-           FROM r${i - 1} r LEFT JOIN outdeg o ON r.node = o.src
-           WHERE o.src IS NULL),
-         c$i AS (
-           SELECT e.dst AS node, ${exactSumSql("round(r.rank / o.outdeg, 9)")} AS s
-           FROM e JOIN r${i - 1} r ON e.src = r.node
-                JOIN outdeg o ON e.src = o.src
-           GROUP BY 1),
-         r$i AS (
-           SELECT nd.node,
-             round(${1.0 - damping} / nn.n + $damping *
-               (COALESCE(c.s, 0.0) + d$i.dm / nn.n), 9) AS rank
-           FROM nodes nd LEFT JOIN c$i c ON nd.node = c.node, nn, d$i)"""
-    }.mkString(",\n         ")
-    s"""WITH $setup,
-         $rounds
-         SELECT node, rank FROM r$iters ORDER BY node"""
-  }
-
-  /** f3_bpe_count oracle: replay the greedy BPE merge loop rank-for-rank
-    * as a recursive CTE over DISTINCT pretokens, then weight by per-doc
-    * pretoken counts. The merge table is emitted from Bpe.DemoMerges, so
-    * Scala and SQL can never drift. Each step merges the LEFTMOST
-    * occurrence of the lowest-rank pair (rank*10^12 + position keeps the
-    * tie-break total — see the multiplier note at `bi` below); a word
-    * leaves the recursion when no adjacent pair is in the table.
-    */
-  private def f3BpeSql: String = {
-    val ranked = graft.core.Bpe.DemoMerges.zipWithIndex
-    val keys = ranked.map { case ((a, b), _) => s"'$a $b'" }.mkString(", ")
-    val vals = ranked.map(_._2).mkString(", ")
-    val mm = s"MAP([$keys], [$vals])"
-    def rank(pair: String) = s"element_at($mm, $pair)"
-    val pair = "toks[i] || ' ' || toks[i+1]"
-    // (rank, position) tie-break packed as rank*10^12 + i on BIGINT: rank is
-    // bounded by the merge-table size (~10^5) so the product stays < 10^18,
-    // and 10^12 is safely above any pretoken symbol count (a pretoken is one
-    // \p{L}+/\p{N}+/punct run — nowhere near 10^12 chars), so the position
-    // can never overflow into the next rank bucket.
-    val bi = "CAST(best % 1000000000000 AS INT)"
-    raw"""WITH RECURSIVE
-pts AS (
-  SELECT doc_id, unnest(regexp_extract_all(text, '\p{L}+|\p{N}+|[^\s\p{L}\p{N}]+')) AS w
-  FROM documents),
-wcnt AS (SELECT doc_id, w, COUNT(*) AS c FROM pts GROUP BY 1, 2),
-words0 AS (SELECT DISTINCT w FROM pts),
-bpe_walk AS (
-  SELECT w, regexp_extract_all(w, '.') AS toks, 0 AS step FROM words0
-  UNION ALL
-  SELECT w,
-    toks[1:$bi - 1] || [toks[$bi] || toks[$bi + 1]] || toks[$bi + 2:],
-    step + 1
-  FROM (
-    SELECT w, toks, step,
-      list_min([
-        CASE WHEN len(${rank(pair)}) > 0
-          THEN ${rank(pair)}[1] * 1000000000000 + i END
-        FOR i IN range(1, len(toks))]) AS best
-    FROM bpe_walk) s
-  WHERE best IS NOT NULL),
-wtok AS (SELECT w, len(arg_max(toks, step)) AS n FROM bpe_walk GROUP BY w),
-agg AS (
-  SELECT wc.doc_id, SUM(wc.c * wt.n) AS n_bpe
-  FROM wcnt wc JOIN wtok wt ON wt.w = wc.w GROUP BY 1)
-SELECT d.doc_id, CAST(COALESCE(a.n_bpe, 0) AS BIGINT) AS n_bpe_tokens,
-  ${tok("text")} AS n_ws_tokens
-FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-ORDER BY d.doc_id"""
-  }
-
-
-  /** bt1_bpe_train oracle: re-LEARN the merge table in DuckDB — `n`
-    * unrolled rounds, each being (1) weighted adjacent-pair counts over
-    * the current word-state table, (2) argmax with the (count DESC, a, b)
-    * tie-break and the min-pair-count-2 stop, (3) a recursive
-    * leftmost-merge walk applying the winner (iterated leftmost-occurrence
-    * merging ≡ the single-pass skip-after-merge scan, since a merge can
-    * never create an earlier occurrence of the same pair). Rounds where
-    * b{r} is empty (training exhausted) contribute no output row and leave
-    * the state unchanged, matching trainMerges' early stop.
-    */
-  private def bpeTrainSql(numMerges: Int,
-      corpus: String = "documents"): String = {
-    val rounds = (1 to numMerges).map { r =>
-      val prev = s"w${r - 1}"
-      // MATERIALIZED: w{r-1} is referenced by both p$r and m$r — without
-      // the hint DuckDB inlines the whole prior-round chain into each
-      // reference and the plan doubles per round (2^rounds).
-      s"""p$r AS MATERIALIZED (
-       SELECT toks[i] AS a, toks[i + 1] AS b, CAST(SUM(c) AS BIGINT) AS cnt
-       FROM (SELECT c, toks, unnest(range(1, len(toks))) AS i FROM $prev)
-       GROUP BY 1, 2),
-     b$r AS MATERIALIZED (SELECT a, b, cnt FROM p$r WHERE cnt >= 2
-       ORDER BY cnt DESC, a, b LIMIT 1),
-     m$r AS (
-       SELECT w, c, toks, 0 AS step FROM $prev
-       UNION ALL
-       SELECT w, c,
-         toks[1:pos - 1] || [mab] || toks[pos + 2:],
-         step + 1
-       FROM (
-         SELECT w, c, toks, step, bb.a || bb.b AS mab,
-           list_position(list_transform(range(1, len(toks)),
-             i -> CASE WHEN toks[i] = bb.a AND toks[i + 1] = bb.b
-               THEN 1 ELSE 0 END), 1) AS pos
-         FROM m$r, b$r bb) s
-       WHERE pos > 0),
-     w$r AS MATERIALIZED (
-       SELECT w, c, arg_max(toks, step) AS toks FROM m$r GROUP BY w, c)"""
-    }.mkString(",\n")
-    val sel = (1 to numMerges)
-      .map(r => s"SELECT $r AS rank, a AS lhs, b AS rhs, cnt AS pair_count FROM b$r")
-      .mkString("\n UNION ALL ")
-    raw"""WITH RECURSIVE
-w0 AS MATERIALIZED (
-  SELECT w, CAST(COUNT(*) AS BIGINT) AS c,
-    list_transform(range(1, length(w) + 1), i -> w[i]) AS toks
-  FROM (SELECT unnest(regexp_extract_all(text, '[\p{L}\p{N}]+')) AS w
-        FROM $corpus)
-  GROUP BY w),
-$rounds
-$sel ORDER BY rank"""
-  }
-
-  /** bt2_bpe_encode oracle: DuckDB re-LEARNS the merge table (the
-    * bpeTrainSql rounds verbatim), builds the rank map from its own b{r}
-    * outputs, and re-ENCODES every pretoken with the f3-style
-    * lowest-rank-leftmost recursive walk — the full tokenizer lifecycle
-    * (train → encode) independently re-derived end to end.
-    */
-  private def bpeEncodeSql(numMerges: Int): String = {
-    val trainSql = bpeTrainSql(numMerges)
-    val ctes = trainSql
-      .stripPrefix("WITH RECURSIVE\n")
-      .split("\n(?=SELECT 1 AS rank)").head.trim.stripSuffix(",")
-    val mtUnion = (1 to numMerges)
-      .map(r => s"SELECT $r AS rnk, a, b FROM b$r").mkString(" UNION ALL ")
-    val pair = "toks[i] || ' ' || toks[i + 1]"
-    val bi = "CAST(best % 1000000000000 AS INT)"
-    raw"""WITH RECURSIVE
-$ctes,
-mt AS MATERIALIZED (
-  SELECT MAP(list(a || ' ' || b ORDER BY rnk), list(rnk ORDER BY rnk)) AS mm
-  FROM ($mtUnion)),
-pts AS (
-  SELECT doc_id, unnest(regexp_extract_all(text, '[\p{L}\p{N}]+')) AS w
-  FROM documents),
-wcnt AS (SELECT doc_id, w, COUNT(*) AS c FROM pts GROUP BY 1, 2),
-wenc AS (SELECT DISTINCT w FROM pts),
-enc_walk AS (
-  SELECT w, list_transform(range(1, length(w) + 1), i -> w[i]) AS toks,
-    0 AS step
-  FROM wenc
-  UNION ALL
-  SELECT w,
-    toks[1:$bi - 1] || [toks[$bi] || toks[$bi + 1]] || toks[$bi + 2:],
-    step + 1
-  FROM (
-    SELECT w, toks, step,
-      list_min([
-        CASE WHEN len(element_at(mm, $pair)) > 0
-          THEN element_at(mm, $pair)[1] * 1000000000000 + i END
-        FOR i IN range(1, len(toks))]) AS best
-    FROM enc_walk, mt) s
-  WHERE best IS NOT NULL),
-wtok AS (SELECT w, len(arg_max(toks, step)) AS n FROM enc_walk GROUP BY w),
-agg AS (
-  SELECT wc.doc_id, SUM(wc.c * wt.n) AS n
-  FROM wcnt wc JOIN wtok wt ON wt.w = wc.w GROUP BY 1)
-SELECT d.doc_id, CAST(COALESCE(a.n, 0) AS BIGINT) AS n_bpe_tokens
-FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-ORDER BY d.doc_id"""
-  }
-
-  /** bt3_bpe_vocab oracle: re-learn (bpeTrainSql rounds), then base ids
-    * from the ranked distinct corpus symbols, merge ids appended in rank
-    * order.
-    */
-  private def bpeVocabSql(numMerges: Int): String = {
-    val trainSql = bpeTrainSql(numMerges)
-    val ctes = trainSql
-      .stripPrefix("WITH RECURSIVE\n")
-      .split("\n(?=SELECT 1 AS rank)").head.trim.stripSuffix(",")
-    val mtUnion = (1 to numMerges)
-      .map(r => s"SELECT $r AS rnk, a, b FROM b$r").mkString(" UNION ALL ")
-    raw"""WITH RECURSIVE
-$ctes,
-vbase AS (
-  SELECT DISTINCT tok AS token FROM (SELECT unnest(toks) AS tok FROM w0)),
-vbi AS (
-  SELECT token, ROW_NUMBER() OVER (ORDER BY token) - 1 AS token_id
-  FROM vbase),
-vm AS (SELECT rnk, a || b AS token FROM ($mtUnion))
-SELECT CAST(token_id AS BIGINT) AS token_id, token, 'base' AS kind FROM vbi
-UNION ALL
-SELECT (SELECT COUNT(*) FROM vbase) + rnk - 1, token, 'merge' FROM vm
-ORDER BY token_id"""
-  }
-
-  /** pipe_training_mix oracle: the dd10 paragraph-removal CTEs feed the
-    * curation gate CTEs (gateCtes parameterized on the cleaned corpus),
-    * then the mx2 rate derivation over the GATED domain counts, then the
-    * sp1 keyed-hash split thresholds — the full five-stage replay.
-    */
-  private def trainingMixSql: String =
-    s"""WITH $boilerCleanCtes,
-     ${gateCtes("cleaned")},
-     dom AS (SELECT doc_id, $domainSql AS domain FROM cgated),
-     dc AS (SELECT domain, COUNT(*) AS nd FROM dom GROUP BY domain),
-     dt AS (
-       SELECT CAST(SUM(nd) AS DOUBLE) AS ntot,
-         CAST(SUM(CAST(round(pow(CAST(nd AS DOUBLE), 0.5), 9)
-           AS DECIMAL(38,10))) AS DOUBLE) AS z
-       FROM dc),
-     dr AS (
-       SELECT domain,
-         least(1.0, round(pow(CAST(nd AS DOUBLE), 0.5), 9) / z
-           * (0.5 * ntot) / CAST(nd AS DOUBLE)) AS rate
-       FROM dc, dt),
-     samp AS (
-       SELECT d.doc_id, d.domain FROM dom d JOIN dr USING (domain)
-       WHERE ${md5UnitSql("temp", "d.doc_id")} < dr.rate),
-     spl AS (
-       SELECT doc_id, domain, $splitCaseSql AS split
-       FROM (SELECT doc_id, domain, ${md5UnitSql("split")} AS u FROM samp))
-     SELECT domain, split, CAST(COUNT(*) AS BIGINT) AS n_docs
-     FROM spl GROUP BY 1, 2 ORDER BY 1, 2"""
-
-  /** pipe_ccnet oracle: dd10's hot-set removal CTEs → the ta2 lang-ID
-    * SELECT on the cleaned corpus (langIdSqlOn, reused verbatim) → the
-    * ta16 LM chain RE-TRAINED ON THE GATED SET → ta17's NTILE per
-    * language → drop the tail tercile.
-    */
-  private def ccnetSql: String =
-    s"""WITH $boilerCleanCtes,
-     lang AS (${langIdSqlOn("cleaned")}),
-     gated AS (
-       SELECT c.doc_id, c.text, l.lang_pred
-       FROM cleaned c JOIN lang l USING (doc_id)
-       WHERE l.lang_pred <> 'und'),
-     ${bigramLmCtes("gated")},
-     $lmMeanCte,
-     ranked AS (
-       SELECT lm2.doc_id, g.lang_pred AS lang, lm2.n_bigrams,
-         lm2.avg_logprob,
-         NTILE(3) OVER (PARTITION BY g.lang_pred
-           ORDER BY lm2.avg_logprob DESC, lm2.doc_id) AS tercile
-       FROM lm2 JOIN gated g ON lm2.doc_id = g.doc_id)
-     SELECT doc_id, lang, n_bigrams, avg_logprob,
-       CASE tercile WHEN 1 THEN 'head' ELSE 'middle' END AS bucket
-     FROM ranked WHERE tercile <> 3 ORDER BY doc_id"""
-
-  /** Shared CTE list + per-doc select of the rouge-ngram oracle (used by
-    * eval_rouge_ngram and the stats wrapper eval_stats_ngram).
-    */
-  /** The ROUGE-1/2 chain from a rel named `pairs` (doc_id, gen, ref) —
-    * shared by eval_rouge_ngram (token-slice pairing) and q7 (real
-    * summarizer outputs on a composite doc key).
-    */
-  private val rougeChainCtes: String =
-    """tok AS (
-           SELECT doc_id,
-             regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS gt,
-             regexp_extract_all(lower(ref), '[\p{L}\p{N}]+') AS rt
-           FROM pairs),
-         grams AS (
-           SELECT doc_id, gt, rt,
-             CASE WHEN len(gt) >= 2 THEN list_transform(generate_series(1, len(gt)-1),
-               k -> gt[k] || ' ' || gt[k+1]) ELSE [] END AS g2,
-             CASE WHEN len(rt) >= 2 THEN list_transform(generate_series(1, len(rt)-1),
-               k -> rt[k] || ' ' || rt[k+1]) ELSE [] END AS r2
-           FROM tok),
-         u1 AS (SELECT doc_id, tok, COUNT(*) AS c FROM (SELECT doc_id, unnest(gt) AS tok FROM grams) GROUP BY 1, 2),
-         v1 AS (SELECT doc_id, tok, COUNT(*) AS c FROM (SELECT doc_id, unnest(rt) AS tok FROM grams) GROUP BY 1, 2),
-         o1 AS (SELECT doc_id, SUM(least(u1.c, v1.c)) AS ov FROM u1 JOIN v1 USING (doc_id, tok) GROUP BY 1),
-         u2 AS (SELECT doc_id, tok, COUNT(*) AS c FROM (SELECT doc_id, unnest(g2) AS tok FROM grams) GROUP BY 1, 2),
-         v2 AS (SELECT doc_id, tok, COUNT(*) AS c FROM (SELECT doc_id, unnest(r2) AS tok FROM grams) GROUP BY 1, 2),
-         o2 AS (SELECT doc_id, SUM(least(u2.c, v2.c)) AS ov FROM u2 JOIN v2 USING (doc_id, tok) GROUP BY 1),
-         lens AS (SELECT doc_id, len(gt) AS gc1, len(rt) AS rc1, len(g2) AS gc2, len(r2) AS rc2 FROM grams)"""
-
-  /** ta18's full NB replay — shared verbatim by `ta18_nb_classifier`
-    * (batch aggregate) and `stream_classify` (collected-model per-row
-    * scorer): both must reproduce this SQL exactly.
-    */
-  private val ta18NbSql: String =
-    """WITH tok AS (
-           SELECT doc_id, source AS cls,
-             UNNEST(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
-           FROM documents),
-         vocab AS (
-           SELECT tok FROM (
-             SELECT tok, COUNT(*) AS c FROM tok GROUP BY 1
-             ORDER BY c DESC, tok LIMIT 512)),
-         vt AS (SELECT t.doc_id, t.cls, t.tok FROM tok t JOIN vocab USING (tok)),
-         cls AS (SELECT source AS cls, COUNT(*) AS dc FROM documents GROUP BY 1),
-         nd AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents),
-         v AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM vocab),
-         ctok AS (SELECT cls, tok, COUNT(*) AS n FROM vt GROUP BY 1, 2),
-         tc AS (SELECT cls, SUM(n) AS tc FROM ctok GROUP BY 1),
-         model AS (
-           SELECT g.cls, g.tok,
-             CAST(round(round(ln((COALESCE(ct.n, 0) + 1)
-               / CAST(t.tc + v.v AS DOUBLE)), 6) * 1000000) AS BIGINT) AS lpm
-           FROM (SELECT c.cls, vb.tok FROM cls c CROSS JOIN vocab vb) g
-           LEFT JOIN ctok ct ON g.cls = ct.cls AND g.tok = ct.tok
-           JOIN tc t ON g.cls = t.cls, v),
-         prior AS (
-           SELECT cls,
-             CAST(round(round(ln(dc / n), 6) * 1000000) AS BIGINT) AS pm
-           FROM cls, nd),
-         dtok AS (SELECT doc_id, tok, COUNT(*) AS dn FROM vt GROUP BY 1, 2),
-         contrib AS (
-           SELECT dt.doc_id, m.cls, SUM(dt.dn * m.lpm) AS s
-           FROM dtok dt JOIN model m USING (tok) GROUP BY 1, 2),
-         scored AS (
-           SELECT d.doc_id, d.source, p.cls, p.pm + COALESCE(c.s, 0) AS sm
-           FROM documents d CROSS JOIN prior p
-           LEFT JOIN contrib c ON c.doc_id = d.doc_id AND c.cls = p.cls),
-         best AS (
-           SELECT doc_id, source, cls, sm,
-             ROW_NUMBER() OVER (PARTITION BY doc_id
-               ORDER BY sm DESC, cls) AS rn
-           FROM scored)
-         SELECT doc_id, source, cls AS pred_source, sm / 1e6 AS score
-         FROM best WHERE rn = 1 ORDER BY doc_id"""
-
-  private val rougeNgramCtes: String =
-    s"${tokenSlicePairsCte()},\n$rougeChainCtes"
-
-  private val rougeNgramSelect: String =
-    """         SELECT l.doc_id,
-           round(CASE WHEN gc1 = 0 OR rc1 = 0 OR coalesce(o1.ov, 0) = 0 THEN 0.0
-             ELSE 2.0 * (o1.ov * 1.0 / gc1) * (o1.ov * 1.0 / rc1)
-                  / ((o1.ov * 1.0 / gc1) + (o1.ov * 1.0 / rc1)) END, 4) AS rouge1_f,
-           round(CASE WHEN gc2 = 0 OR rc2 = 0 OR coalesce(o2.ov, 0) = 0 THEN 0.0
-             ELSE 2.0 * (o2.ov * 1.0 / gc2) * (o2.ov * 1.0 / rc2)
-                  / ((o2.ov * 1.0 / gc2) + (o2.ov * 1.0 / rc2)) END, 4) AS rouge2_f
-         FROM lens l LEFT JOIN o1 ON l.doc_id = o1.doc_id
-                     LEFT JOIN o2 ON l.doc_id = o2.doc_id"""
-
-  /** G6/G9 stats formulas over the rouge-ngram rows (mirrors
-    * Metrics.summaryStats: decimal-exact mean, population std via
-    * sum/sumSq, r4 everywhere).
-    */
-  private def rougeStatsSql: String = {
-    def block(c: String) =
-      s"""SELECT '$c' AS metric,
-         round(${exactSumSql(c)} / COUNT(*), 4) AS mean,
-         round(sqrt(greatest(
-           (${exactSumSql(s"$c * $c")}
-            - ${exactSumSql(c)} * ${exactSumSql(c)} / CAST(COUNT(*) AS DOUBLE))
-           / CAST(COUNT(*) AS DOUBLE), 0.0)), 4) AS std,
-         round(MIN($c), 4) AS min, round(MAX($c), 4) AS max
-         FROM m"""
-    s"""WITH $rougeNgramCtes,
-       m AS ($rougeNgramSelect)
-       ${block("rouge1_f")}
-       UNION ALL
-       ${block("rouge2_f")}
-       ORDER BY metric"""
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    // The strategy pipelines + the Q2-fed eval family, end to end, as
-    // generated chained-CTE oracles (see OracleSqlGen): chunking, every
-    // extractive-summarizer call, the unrolled 10-round collapse loop, the
-    // critique cascade, the iterative fold, ROUGE-1/2/L, the md5-TF-count
-    // cosine and the judge rubric are all replicated bit-exactly in DuckDB.
-    "pipe_mapreduce" -> OracleSqlGen.pipeMapReduceSql,
-    "pipe_hierarchical" -> OracleSqlGen.pipeHierarchicalSql,
-    "pipe_critique" -> OracleSqlGen.pipeCritiqueSql,
-    "pipe_iterative" -> OracleSqlGen.pipeIterativeSql(),
-    "eval_pair_metrics" -> OracleSqlGen.evalPairMetricsSql,
-    "eval_summary_stats" -> OracleSqlGen.evalSummaryStatsSql,
-    "eval_judge_scores" -> OracleSqlGen.evalJudgeScoresSql,
-    "eval_judge_stats" -> OracleSqlGen.evalJudgeStatsSql,
-    // 60-bit md5 content hash of the normalized token stream — same
-    // tokenization as eval_rouge_ngram's, same hex-parse as the minhash
-    // family
-    "ta4_fingerprint" ->
+  private def multimodalEntries: Seq[(String, Entry)] = Seq(
+    "mm1_binary_meta" -> Entry(mm1BinaryMeta(_, _), Some(
+      """SELECT doc_id, octet_length(encode(text)) AS n_bytes, md5(text) AS payload_md5,
+         CAST(('0x' || substr(md5(text), 1, 4)) AS BIGINT) % 1920 AS width,
+         CAST(('0x' || substr(md5(text), 5, 4)) AS BIGINT) % 1080 AS height
+         FROM documents ORDER BY doc_id""")),
+    "mm2_decode_meta" -> Entry(mm2DecodeMeta(_, _), Some(
       """SELECT doc_id,
-         CAST(('0x' || substr(md5(array_to_string(
-           regexp_extract_all(lower(text), '[\p{L}\p{N}]+'), ' ')), 1, 15)) AS BIGINT)
-           AS fingerprint
-         FROM documents ORDER BY doc_id""",
-    // corpus vocabulary: same tokenization as the fingerprint family
-    "ta5_vocab" ->
-      """WITH t AS (
-           SELECT unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
-           FROM documents)
-         SELECT COUNT(DISTINCT tok) AS vocab_size, COUNT(*) AS n_tokens,
-           round(COUNT(DISTINCT tok) * 1.0 / COUNT(*), 4) AS type_token_ratio
-         FROM t""",
-    // ta15: exact heavy hitters — the SQL replay recomputes every token
-    // with count > n/50; a Misra-Gries candidate pass that dropped a true
-    // heavy would leave the Spark output short a row and break the hash
-    "ta15_heavy_hitters" ->
-      """WITH t AS (
-           SELECT unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
-           FROM documents),
-         n AS (SELECT COUNT(*) AS n_total FROM t),
-         c AS (SELECT tok, COUNT(*) AS cnt FROM t GROUP BY 1)
-         SELECT tok AS token, cnt, round(cnt * 1.0 / n_total, 4) AS freq
-         FROM c, n WHERE cnt * 50 > n_total ORDER BY cnt DESC, token""",
-    // ta5b: the exact stats reproduce in SQL; the HLL bound is asserted as
-    // a constant because a correct sketch at rsd=2% sits far inside the 5%
-    // tolerance — a broken estimator flips the flag and fails the hash
-    "ta5b_vocab_hll" ->
-      """WITH t AS (
-           SELECT unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
-           FROM documents)
-         SELECT COUNT(DISTINCT tok) AS vocab_size, COUNT(*) AS n_tokens,
-           TRUE AS hll_ok
-         FROM t""",
-    // ta7: the same RE2-compatible regex constants drive both engines (no
-    // drift possible); counts on the original text, replacement order
-    // email -> phone -> ip
-    "ta7_pii_redact" -> {
-      import graft.operators.TextAnalysis.{EmailRe, Ipv4Re, PhoneRe}
-      s"""WITH pii AS (
-           SELECT doc_id,
-             text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-             '@example.com or +84 90 123 45' || CAST(doc_id AS VARCHAR) ||
-             ' at 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7 now' AS t
-           FROM documents)
-         SELECT doc_id,
-           regexp_replace(regexp_replace(regexp_replace(t,
-             '$EmailRe', '<EMAIL>', 'g'),
-             '$PhoneRe', '<PHONE>', 'g'),
-             '$Ipv4Re', '<IP>', 'g') AS text_redacted,
-           CAST(len(regexp_extract_all(t, '$EmailRe')) AS INT) AS n_emails,
-           CAST(len(regexp_extract_all(t, '$PhoneRe')) AS INT) AS n_phones,
-           CAST(len(regexp_extract_all(t, '$Ipv4Re')) AS INT) AS n_ips
-         FROM pii ORDER BY doc_id"""
-    },
-    // ta19: the HTML template and every regex/replace stage replayed
-    // verbatim (the shared htmlExtractCtes fragment — also composed into
-    // the stream_ccingest oracle)
-    "ta19_html_extract" -> {
-      import graft.operators.TextAnalysis.{HtmlLinkRe, HtmlTagRe}
-      s"""WITH ${htmlExtractCtes()}
-         SELECT doc_id, t AS clean_text,
-           CAST(len(regexp_extract_all(h, '$HtmlTagRe')) AS INT) AS n_tags,
-           CAST(len(regexp_extract_all(h, '$HtmlLinkRe')) AS INT) AS n_links,
-           CASE WHEN length(h) = 0 THEN 0.0
-             ELSE round(length(t) * 1.0 / length(h), 4) END AS text_ratio
-         FROM xs4 ORDER BY doc_id"""
-    },
-    // ta8: dup-line fraction + top-bigram fraction on the derived
-    // multi-line corpus (first line repeated once per doc)
-    // ta12: Spark exact percentile and DuckDB quantile_cont share the
-    // (1-g)*a[k] + g*a[k+1] interpolation at rank p*(n-1)
-    "ta12_length_stats" ->
-      s"""WITH d AS (SELECT CAST(${tok("text")} AS BIGINT) AS n FROM documents)
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-           round(CAST(SUM(CAST(CAST(n AS DOUBLE) AS DECIMAL(38,10))) AS DOUBLE)
-             / COUNT(*), 4) AS mean_tokens,
-           round(quantile_cont(n, 0.5), 4) AS p50,
-           round(quantile_cont(n, 0.9), 4) AS p90,
-           round(quantile_cont(n, 0.99), 4) AS p99,
-           MAX(n) AS max_tokens
-         FROM d""",
-    // ta12b: the GK sketch's rank-error contract holds under any merge
-    // order — the flags are layout-independent even though the estimate
-    // itself is not
-    "ta12b_length_approx" ->
-      "SELECT 1 AS p50_ok, 1 AS p90_ok, 1 AS p99_ok",
-    // ta11: corpus-ML unigram logprob; ln rounded to 6dp on both engines
-    // BEFORE the order-independent decimal sum (1-ulp libm differences
-    // cannot survive the 6dp grid except exactly on a .0000005 boundary)
-    "ta11_logprob" ->
-      s"""WITH t AS (
-           SELECT doc_id,
-             UNNEST(regexp_extract_all(lower(text), '[\\p{L}\\p{N}]+')) AS tok
-           FROM documents),
-         f AS (SELECT tok, COUNT(*) AS c FROM t GROUP BY 1),
-         tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM t),
-         lp AS (
-           SELECT doc_id, round(ln(c / total), 6) AS lp
-           FROM t JOIN f USING (tok), tot),
-         lm AS (
-           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             SUM(CAST(round(lp * 1000000) AS BIGINT)) AS s,
-             CAST(COUNT(*) AS BIGINT) * 100 AS d
-           FROM lp GROUP BY 1)
-         SELECT doc_id, n_tokens, $lmAvgExpr AS avg_logprob
-         FROM lm ORDER BY doc_id""",
-    // ta16: both count tables re-trained in SQL (bigramLmCtes); the 4dp
-    // mean is integer HALF-UP on micro-units (lp is on the 6dp grid) —
-    // round(double) diverges between engines on exact 4dp halves.
-    "ta16_bigram_logprob" ->
-      s"""WITH ${bigramLmCtes("documents")}
-         SELECT doc_id, n_bigrams, $lmAvgExpr AS avg_logprob
-         FROM lm ORDER BY doc_id""",
-    // ta18: the whole NB training + scoring replayed — vocabulary by the
-    // (count desc, token asc) total order, Laplace-smoothed log-probs
-    // snapped to 6dp and micro-unit integers (the ta16 lmMicro
-    // convention), integer argmax with class-ascending tie-break.
-    // stream_classify (below) holds the serving-side per-row scorer to
-    // this same SQL VERBATIM — train-batch/score-stream must be invisible
-    "ta18_nb_classifier" -> ta18NbSql,
-    // cls1: the trained linear quality classifier with its TRAINING
-    // replayed — hashed-presence features, b = X'y/n, and eight unrolled
-    // conjugate-gradient steps on the decimal(38,10) grid (the exactSum
-    // contract makes every distributed sum order-free, and CG has no
-    // transcendentals, so the optimization loop itself hash-checks).
-    // ta15b: sketch build + probe replayed — salted md5 cells, integer
-    // counters, min over depth rows; est >= exact is visible per row.
-    "ta15b_heavy_hitters_cms" -> """
-WITH tk AS (
-  SELECT unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
-  FROM documents),
-pairs AS (
-  SELECT u.r,
-    CAST(('0x' || substr(md5('cms' || u.r || ':' || tok), 1, 15)) AS BIGINT)
-      % 256 AS cell
-  FROM tk, LATERAL UNNEST(generate_series(0, 3)) AS u(r)),
-sk AS (SELECT r, cell, CAST(COUNT(*) AS BIGINT) AS c FROM pairs GROUP BY 1, 2),
-ex AS (
-  SELECT tok, CAST(COUNT(*) AS BIGINT) AS exact FROM tk GROUP BY 1
-  HAVING COUNT(*) >= 100),
-pr AS (
-  SELECT ex.tok, ex.exact, u.r,
-    CAST(('0x' || substr(md5('cms' || u.r || ':' || ex.tok), 1, 15)) AS BIGINT)
-      % 256 AS cell
-  FROM ex, LATERAL UNNEST(generate_series(0, 3)) AS u(r)),
-est AS (
-  SELECT pr.tok, pr.exact, MIN(sk.c) AS est
-  FROM pr JOIN sk USING (r, cell) GROUP BY 1, 2)
-SELECT tok AS token, est, exact, est - exact AS overcount
-FROM est ORDER BY exact DESC, token""",
-    // ta20: the JS/TV shard-drift monitor replayed — md5 buckets,
-    // micro-nat-snapped logs, decimal-exact sums (all established
-    // parity conventions), so the whole report hash-checks.
-    "ta20_shard_drift" -> """
-WITH pl AS (
-  SELECT doc_id, source,
-    text || CASE WHEN source = 'src3'
-      THEN ' casino jackpot lotto winner bonus spins' ELSE '' END AS text
-  FROM documents),
-fx AS (
-  SELECT source AS shard,
-    CAST(('0x' || substr(md5('b:' || tok), 1, 15)) AS BIGINT) % 64 AS bucket
-  FROM (SELECT source,
-      unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
-    FROM pl)),
-sc AS (SELECT shard, bucket, CAST(COUNT(*) AS BIGINT) AS c FROM fx GROUP BY 1, 2),
-nd AS (SELECT source AS shard, CAST(COUNT(*) AS BIGINT) AS n_docs FROM pl GROUP BY 1),
-tt AS (SELECT shard, CAST(SUM(c) AS BIGINT) AS n_s FROM sc GROUP BY 1),
-cbk AS (SELECT bucket, CAST(SUM(c) AS BIGINT) AS cq FROM sc GROUP BY 1),
-nt AS (SELECT CAST(SUM(cq) AS BIGINT) AS n_t FROM cbk),
-grid AS (
-  SELECT t.shard, b.bucket, t.n_s, b.cq, (SELECT n_t FROM nt) AS n_t,
-    COALESCE(s.c, 0) AS c
-  FROM tt t CROSS JOIN cbk b
-  LEFT JOIN sc s ON s.shard = t.shard AND s.bucket = b.bucket),
-term AS (
-  SELECT shard, n_s, c, cq,
-    CAST(c AS DOUBLE) / CAST(n_s AS DOUBLE) AS p,
-    CAST(cq AS DOUBLE) / CAST(n_t AS DOUBLE) AS q
-  FROM grid),
-ctr AS (
-  SELECT shard, n_s,
-    (p * (CASE WHEN c > 0
-        THEN CAST(round(round(ln(p / ((p + q) / 2.0)), 6) * 1e6) AS BIGINT)
-        ELSE 0 END / 1e6)) * 0.5
-      + (q * (CAST(round(round(ln(q / ((p + q) / 2.0)), 6) * 1e6) AS BIGINT)
-        / 1e6)) * 0.5 AS contrib,
-    abs(p - q) * 0.5 AS tv
-  FROM term),
-agg AS (
-  SELECT shard, MIN(n_s) AS n_tokens,
-    round(CAST(SUM(CAST(contrib AS DECIMAL(38, 10))) AS DOUBLE), 6) AS js,
-    round(CAST(SUM(CAST(tv AS DECIMAL(38, 10))) AS DOUBLE), 6) AS tv
-  FROM ctr GROUP BY 1)
-SELECT nd.shard, nd.n_docs, COALESCE(a.n_tokens, 0) AS n_tokens, a.js, a.tv,
-  CAST(COALESCE(a.n_tokens, 0) = 0 OR a.js > 0.01 AS INT) AS drifted
-FROM nd LEFT JOIN agg a USING (shard) ORDER BY shard""",
-    // g11: one-pass grouping-sets rollup; sentinel 'ALL' for the
-    // subtotal/grand-total rows (grouping columns non-null here)
-    "g11_rollup" -> """
-SELECT COALESCE(l_returnflag, 'ALL') AS flag,
-  COALESCE(l_linestatus, 'ALL') AS status,
-  round(CAST(SUM(CAST(l_quantity AS DECIMAL(38, 10))) AS DOUBLE), 4) AS sum_qty,
-  CAST(COUNT(*) AS BIGINT) AS n
-FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-ORDER BY flag, status""",
-    // s15: MERGE INTO replayed — the changelog's last-write-wins window
-    // (seq DESC, op DESC), the anti-join of base against changed keys,
-    // and the upsert union
-    "s15_cdc_apply" -> """
-WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-ch AS (
-  SELECT doc_id, 'updated ' || doc_id AS text, 'update' AS op, 1 AS seq
-  FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id, '' AS text, 'delete' AS op, 2 AS seq
-  FROM documents WHERE doc_id % 14 = 0
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, 'inserted ' || doc_id AS text,
-    'insert' AS op, 1 AS seq
-  FROM documents WHERE doc_id % 2 = 1),
-lt AS (
-  SELECT doc_id, text, op FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-      ORDER BY seq DESC, op DESC) AS rn FROM ch) WHERE rn = 1),
-res AS (
-  SELECT b.doc_id, b.text FROM base b
-  LEFT JOIN lt ON b.doc_id = lt.doc_id WHERE lt.doc_id IS NULL
-  UNION ALL
-  SELECT doc_id, text FROM lt WHERE op <> 'delete')
-SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars
-FROM res ORDER BY doc_id""",
-    // s14: the snapshot lifecycle's emitted counts are pure functions of
-    // the source tables; v_latest = 1 is the torn-publish invariant
-    "s14_snapshot_publish" -> """
-SELECT CAST(1 AS BIGINT) AS v_latest,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS docs_latest,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents WHERE doc_id % 2 = 0) AS docs_v0,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings) AS emb_latest""",
-    // s13: the z-order layout key replayed — affine long-math bucket
-    // scaling (floor division, clamped) and the 16-bit Morton interleave
-    // as a flat shift/mask sum; pure integer arithmetic end to end.
-    "s13_zorder_stats" -> s"""
-WITH $keyRangeCte,
-sk AS (
-  SELECT l_orderkey AS a, l_partkey AS b,
-    ${zScaleSql("l_orderkey", "alo", "ahi", "sa")},
-    ${zScaleSql("l_partkey", "blo", "bhi", "sb")}
-  FROM lineitem),
-zt AS (SELECT a, b, ${mortonSql(Seq("sa", "sb"))} AS z FROM sk)
-SELECT z >> 26 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  MIN(a) AS min_a, MAX(a) AS max_a, MIN(b) AS min_b, MAX(b) AS max_b
-FROM zt GROUP BY 1 ORDER BY bucket""",
-    // s13b: the 3-way Morton key — the interleave sum is GENERATED (48
-    // terms at bits=16), exactly mirroring ZOrder.interleave3's bit
-    // placement (a->3i+2, b->3i+1, c->3i); 64 buckets = top 6 bits of
-    // the 48-bit key
-    "s13b_zorder3_stats" ->
-      s"""WITH rg AS (
-  SELECT MIN(l_orderkey) AS alo, MAX(l_orderkey) AS ahi,
-    MIN(l_partkey) AS blo, MAX(l_partkey) AS bhi,
-    MIN(l_suppkey) AS clo, MAX(l_suppkey) AS chi
-  FROM lineitem),
-sk AS (
-  SELECT l_orderkey AS a, l_partkey AS b, l_suppkey AS c,
-    ${zScaleSql("l_orderkey", "alo", "ahi", "sa")},
-    ${zScaleSql("l_partkey", "blo", "bhi", "sb")},
-    ${zScaleSql("l_suppkey", "clo", "chi", "sc")}
-  FROM lineitem),
-zt AS (SELECT a, b, c, ${mortonSql(Seq("sa", "sb", "sc"))} AS z FROM sk)
-SELECT z >> 42 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  MIN(a) AS min_a, MAX(a) AS max_a, MIN(b) AS min_b, MAX(b) AS max_b,
-  MIN(c) AS min_c, MAX(c) AS max_c
-FROM zt GROUP BY 1 ORDER BY bucket""",
-    // dq1: each rule's violation count recomputed independently; the
-    // Spark side treats a NULL predicate as a violation (coalesce false)
-    // and the SQL mirrors it with NOT COALESCE(pred, FALSE)
-    "dq1_expectations" -> """
-WITH li AS (SELECT * FROM lineitem),
-rules AS (
-  SELECT 'li_quantity_range' AS rule, CAST(COUNT(*) AS BIGINT) AS n_checked,
-    CAST(SUM(CASE WHEN NOT COALESCE(l_quantity >= 1.0 AND l_quantity <= 50.0,
-      FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS n_violations FROM li
-  UNION ALL
-  SELECT 'li_price_positive', CAST(COUNT(*) AS BIGINT),
-    CAST(SUM(CASE WHEN NOT COALESCE(l_extendedprice > 0.0, FALSE)
-      THEN 1 ELSE 0 END) AS BIGINT) FROM li
-  UNION ALL
-  SELECT 'li_discount_range', CAST(COUNT(*) AS BIGINT),
-    CAST(SUM(CASE WHEN NOT COALESCE(l_discount >= 0.0 AND l_discount <= 1.0,
-      FALSE) THEN 1 ELSE 0 END) AS BIGINT) FROM li
-  UNION ALL
-  SELECT 'li_shipdate_not_null', CAST(COUNT(*) AS BIGINT),
-    CAST(SUM(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-  FROM li
-  UNION ALL
-  SELECT 'li_orderkey_ref', CAST(COUNT(*) AS BIGINT),
-    CAST(SUM(CASE WHEN NOT EXISTS (SELECT 1 FROM orders o
-      WHERE o.o_orderkey = li.l_orderkey) THEN 1 ELSE 0 END) AS BIGINT)
-  FROM li
-  UNION ALL
-  SELECT 'li_unique_line', CAST(SUM(c) AS BIGINT),
-    CAST(SUM(c - 1) AS BIGINT)
-  FROM (SELECT COUNT(*) AS c FROM li GROUP BY l_orderkey, l_linenumber))
-SELECT rule, n_checked, n_violations,
-  CAST(n_violations = 0 AS INT) AS pass
-FROM rules ORDER BY rule""",
-    // dq2: the tag replays as the same filtered-array join; the
-    // __partition_total row pins clean + quarantined = table
-    "dq2_quarantine" -> """
-WITH tagged AS (
-  SELECT l_orderkey,
-    array_to_string(list_filter(
-      [CASE WHEN COALESCE(l_quantity <= 25.0, FALSE) THEN ''
-            ELSE 'q25' END,
-       CASE WHEN COALESCE(l_discount <= 0.05, FALSE) THEN ''
-            ELSE 'disc5' END], x -> x <> ''), ',') AS failed_rules
-  FROM lineitem),
-bad AS (
-  SELECT failed_rules, CAST(COUNT(*) AS BIGINT) AS n_rows,
-    MIN(l_orderkey) AS min_key, MAX(l_orderkey) AS max_key
-  FROM tagged WHERE failed_rules <> '' GROUP BY 1)
-SELECT * FROM bad
-UNION ALL
-SELECT '__partition_total', CAST(COUNT(*) AS BIGINT), -1, -1 FROM tagged
-ORDER BY failed_rules""",
-    // stream_dq: streamed quarantine rows held VERBATIM to the batch
-    // rulebook replay (train-nothing, stateless — the strongest
-    // batch/stream parity: same rows, same tags, any batching)
-    "stream_dq" -> """
-SELECT doc_id,
-  array_to_string(list_filter(
-    [CASE WHEN COALESCE(n_chars >= 200, FALSE) THEN '' ELSE 'len200' END,
-     CASE WHEN COALESCE(lang IN ('en','de','es','fr'), FALSE) THEN ''
-          ELSE 'west' END], x -> x <> ''), ',') AS failed_rules
-FROM documents
-WHERE NOT COALESCE(n_chars >= 200, FALSE)
-   OR NOT COALESCE(lang IN ('en','de','es','fr'), FALSE)
-ORDER BY doc_id""",
-    // s16b: the HLL-NDV ANALYZE path certified against the exact twin —
-    // per column: nulls/min/max verbatim-equal, ndv within 3*rsd
-    "s16b_stats_gate" -> ("SELECT column_name, 1 AS nulls_ok, 1 AS ndv_ok," +
-      " 1 AS minmax_ok FROM (VALUES ('l_orderkey'), ('l_partkey')," +
-      " ('l_returnflag'), ('l_shipdate'), ('l_suppkey')) t(column_name)" +
-      " ORDER BY column_name"),
-    // s16c: merge == recompute for the mergeable half of ANALYZE — the
-    // MERGED per-partition counts/nulls/min/max are held to a DuckDB
-    // from-scratch recompute (any merge drift hash-fails); the unioned
-    // HLL ndv is gated against the exact twin (literal 1)
-    "s16c_stats_incremental" ->
-      columnStatsSql("lineitem", StatsCols, _ => "1 AS ndv_ok"),
-    // dq3: schema drift is pure metadata over a fixed testdata schema —
-    // the planted three-axis drift (missing l_commitdate, uncontracted
-    // l_tax, retyped l_quantity) replays as literals
-    "dq3_schema_drift" -> """
-SELECT * FROM (VALUES
-  ('schema_extra_cols',   CAST(11 AS BIGINT), CAST(1 AS BIGINT), 0),
-  ('schema_missing_cols', CAST(11 AS BIGINT), CAST(1 AS BIGINT), 0),
-  ('schema_retyped_cols', CAST(10 AS BIGINT), CAST(1 AS BIGINT), 0))
-  t(rule, n_checked, n_violations, pass)
-ORDER BY rule""",
-    // s13d: the predicate bounds replay in pure long floor-arithmetic
-    // from the key ranges; the clustered scan's count + key fingerprint
-    // are anchored to the logical table, the cross-layout identity and
-    // the strictly-fewer-files (<= half) pruning wins are gate literals
-    "s13d_layout_skipping" -> s"""WITH $quarterBoxCtes
-${countXorSql("hit", LineitemKeySql, "key_xor",
-  "1 AS rows_identical, 1 AS clustered_reads_fewer, 1 AS clustered_le_half")}""",
-    // s13e: the stats-planned pruned scan returns exactly the logical
-    // predicate result (count + fingerprint anchored to the table); the
-    // opened-fewer and stats≡footers wins are gate literals
-    "s13e_stats_pruned_scan" -> s"""WITH $quarterBoxCtes
-${countXorSql("hit", LineitemKeySql, "key_xor",
-  "1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers")}""",
-    // s13f: the optimized table is the whole logical table (count +
-    // fingerprint anchored); detection-exactness and skipping-restored
-    // are gate literals
-    "s13f_optimize_recluster" -> countXorSql("lineitem", LineitemKeySql,
-      "key_xor", "1 AS detected_only_appends, 1 AS skipping_restored"),
-    // s13g: the string-equality and null-aware pruned reads both return
-    // exactly the logical predicate result (count + doc_id fingerprint
-    // anchored; target language data-derived as MIN(lang)); the
-    // opened-fewer and stats ≡ footer-rule wins are gate literals
-    "s13g_typed_pruning" -> s"""
-WITH t AS (SELECT MIN(lang) AS tgt FROM documents),
-hit AS (SELECT d.* FROM documents d, t WHERE d.lang = tgt)
-${countXorSql("hit", DocIdKeySql, "key_xor",
-  """1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers,
-  1 AS null_rows_identical, 1 AS null_opened_fewer,
-  1 AS null_stats_match_footers""")}""",
-    // s13h: the bloom-pruned point lookup returns exactly the logical
-    // equality result (count + doc_id fingerprint; the target key is
-    // data-derived as 'u' || max(doc_id)//2); the structural wins —
-    // opened-fewer/quarter-bound and min/max-keeps-all on the
-    // round-robin layout — are gate literals
-    "s13h_bloom_pruning" -> s"""
-WITH t AS (SELECT MAX(doc_id) // 2 AS h FROM documents),
-hit AS (SELECT d.* FROM documents d, t WHERE d.doc_id = h)
-${countXorSql("hit", DocIdKeySql, "key_xor",
-  """1 AS rows_identical, 1 AS opened_fewer, 1 AS opened_le_quarter,
-  1 AS minmax_keeps_all""")}""",
-    // s18: the snapshot-committed pruned read returns exactly the
-    // logical predicate result at version 0; the structural wins
-    // (opened-fewer, committed-stats ≡ footers) are gate literals
-    "s18_snapshot_pruned_read" -> s"""WITH $quarterBoxCtes
-${countXorSql("hit", LineitemKeySql, "key_xor",
-  """CAST(0 AS BIGINT) AS version,
-  1 AS rows_identical, 1 AS opened_fewer, 1 AS stats_match_footers""")}""",
-    // s19: the optimized v2 table is the whole logical lineitem (count +
-    // 4-column fingerprint anchored — v1 = base ∪ append = lineitem and
-    // the gate pins v2 ≡ v1); version numbers are deterministic (fresh
-    // root); the structural wins (stats replaced, merge ≡ recompute,
-    // pinned-reader isolation, race-loser loud, skipping restored) are
-    // gate literals
-    "s19_optimize_versioned" -> countXorSql("lineitem", LineitemKeySql, "key_xor",
-      """CAST(0 AS BIGINT) AS v0, CAST(1 AS BIGINT) AS v1, CAST(2 AS BIGINT) AS v2,
-  1 AS rows_identical, 1 AS stats_files_match, 1 AS merge_matches_recompute,
-  1 AS pinned_v1_isolated, 1 AS race_loser_loud, 1 AS skipping_restored"""),
-    // s20: FULL oracle — DuckDB recomputes the post-CDC table from
-    // scratch (base minus band deletes, band updates applied, 25 tail
-    // inserts) and its per-column stats; the Spark side must land there
-    // via the file-granular path (touched files only, stats rows
-    // replaced). table_xor anchors whole-row content; structural wins
-    // are gate literals
-    "s20_cdc_versioned_stats" -> s"""
-WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
-final AS (
-  SELECT doc_id, lang, n_chars FROM documents, mx
-  WHERE NOT (doc_id % 7 = 0 AND doc_id * 4 <= m)
-    AND NOT (doc_id % 7 = 3 AND doc_id * 4 <= m)
-  UNION ALL
-  SELECT doc_id, 'xx' AS lang, n_chars + 1000 AS n_chars
-  FROM documents, mx WHERE doc_id % 7 = 3 AND doc_id * 4 <= m
-  UNION ALL
-  SELECT m + g.i AS doc_id, 'zz' AS lang, m + g.i AS n_chars
-  FROM mx, generate_series(1, 25) g(i)),
-xor_all AS (SELECT ${md5XorSql(DocRowKeySql)} AS x FROM final)
-SELECT s.column_name, s.n_rows, s.n_nulls, s.min_value, s.max_value,
-  (SELECT x FROM xor_all) AS table_xor,
-  1 AS ndv_ok, 1 AS rows_match_apply, 1 AS untouched_stats_identical,
-  1 AS files_rewritten_subset
-FROM (
-  SELECT 'doc_id' AS column_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
-    CAST(SUM(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-      AS n_nulls,
-    CAST(MIN(doc_id) AS VARCHAR) AS min_value,
-    CAST(MAX(doc_id) AS VARCHAR) AS max_value
-  FROM final
-  UNION ALL
-  SELECT 'n_chars', CAST(COUNT(*) AS BIGINT),
-    CAST(SUM(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-    CAST(MIN(n_chars) AS VARCHAR), CAST(MAX(n_chars) AS VARCHAR)
-  FROM final) s
-ORDER BY s.column_name""",
-    // s21: the unified post-evolution read replays exactly — row count
-    // and doc_id fingerprint over ALL documents, the added column null
-    // exactly on the pre-evolution slice, its sum the replayed pure
-    // function over the new slice; acceptance/rejection and lazy-stats
-    // wins are gate literals
-    "s21_schema_evolution" -> countXorSql("documents", DocIdKeySql, "key_xor",
-      """CAST((SELECT COUNT(*) FROM documents WHERE doc_id % 5 <> 0) AS BIGINT)
-    AS n_quality_nulls,
-  CAST((SELECT SUM(n_chars % 100) FROM documents WHERE doc_id % 5 = 0)
-    AS BIGINT) AS quality_sum,
-  CAST(1 AS BIGINT) AS version,
-  1 AS contract_pass, 1 AS evolution_accepted,
-  1 AS bad_evolution_rejected, 1 AS stats_lazy_ok"""),
-    // stream_snapshot_ingest: the final streamed version is ALL of
-    // documents, whole-row fingerprinted; the transactional wins
-    // (4 versions, replay no-op, pinned isolation, stats ≡ recompute)
-    // are gate literals
-    "stream_snapshot_ingest" -> countXorSql("documents", DocRowKeySql, "row_xor",
-      """1 AS multi_batch, 1 AS exactly_once_replay,
-  1 AS pinned_isolated, 1 AS stats_current"""),
-    // s22: FULL oracle — the version diff's per-op rows are a pure
-    // function of `documents` (deletes carry the original payload,
-    // updates the new one, inserts the deterministic tail); the inverse
-    // property (applyChangelog(v0, diff) ≡ v1), file-granular skip and
-    // self-diff emptiness are gate literals
-    "s22_version_diff" -> s"""
-WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
-ops AS (
-  SELECT 'delete' AS op, doc_id, lang, n_chars
-  FROM documents, mx WHERE doc_id % 7 = 0 AND doc_id * 4 <= m
-  UNION ALL
-  SELECT 'update' AS op, doc_id, 'xx' AS lang, n_chars + 1000 AS n_chars
-  FROM documents, mx WHERE doc_id % 7 = 3 AND doc_id * 4 <= m
-  UNION ALL
-  SELECT 'insert' AS op, m + g.i AS doc_id, 'zz' AS lang,
-    m + g.i AS n_chars
-  FROM mx, generate_series(1, 25) g(i))
-SELECT op, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  ${md5XorSql(DocRowKeySql)}
-    AS payload_xor,
-  1 AS roundtrip_ok, 1 AS delta_files_skipped, 1 AS self_diff_empty
-FROM ops GROUP BY op ORDER BY op""",
-    // s26: the compacted current version is ALL of documents (count +
-    // whole-row fingerprint); the zero-re-sketch and manifest-merge
-    // wins are gate literals
-    "s26_compact_versioned" -> countXorSql("documents", DocRowKeySql, "row_xor",
-      """1 AS files_5_to_2, 1 AS rows_identical,
-  1 AS merged_row_matches_resketch, 1 AS carried_stats_identical,
-  1 AS pinned_intact, 1 AS second_compact_noop"""),
-    // s25: FULL oracle — the four-batch changelog stream lands on a
-    // pure function of documents: slices %4 in {0,1,2} inserted, the
-    // low-quarter %7=3 band updated, the top-quarter %11=0 band
-    // deleted; structural wins are gate literals
-    "s25_cdc_ingest" -> s"""
-WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
-final AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 7 = 3 AND doc_id * 4 <= m THEN 'xx'
-         ELSE lang END AS lang,
-    CASE WHEN doc_id % 7 = 3 AND doc_id * 4 <= m THEN n_chars + 1000
-         ELSE n_chars END AS n_chars
-  FROM documents, mx
-  WHERE doc_id % 4 <> 3
-    AND NOT (doc_id % 11 = 0 AND doc_id * 4 > 3 * m)
-  UNION ALL
-  SELECT m + g.i AS doc_id, 'zz' AS lang, m + g.i AS n_chars
-  FROM mx, generate_series(1, 25) g(i))
-${countXorSql("final", DocRowKeySql, "row_xor",
-  """1 AS four_versions, 1 AS matches_seq_apply,
-  1 AS untouched_stats_identical, 1 AS replay_noop, 1 AS stats_current""")}""",
-    // s24: FULL oracle — the serializable two-writer outcome is
-    // documents with A's band updates and B's band deletes, whatever
-    // order the commits landed; rebase/abort/chain wins are gate
-    // literals
-    "s24_optimistic_merge" -> s"""
-WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
-final AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 7 = 3 AND doc_id * 4 <= m THEN 'xx'
-         ELSE lang END AS lang,
-    CASE WHEN doc_id % 7 = 3 AND doc_id * 4 <= m THEN n_chars + 1000
-         ELSE n_chars END AS n_chars
-  FROM documents, mx
-  WHERE NOT (doc_id % 11 = 0 AND doc_id * 4 > 3 * m))
-${countXorSql("final", DocRowKeySql, "row_xor",
-  "1 AS rebase_merged_both, 1 AS conflict_aborts, 1 AS version_chain_exact")}""",
-    // s23: the post-expiry current read is the full three-band union =
-    // all of documents (count + doc_id fingerprint); every lifecycle
-    // win (exact expiry set, loud expired read, reclaimed dirs,
-    // surviving hard-linked pins, protected pointer) is a gate literal
-    "s23_retention" -> countXorSql("documents", DocIdKeySql, "key_xor",
-      """1 AS expired_exact, 1 AS expired_read_loud, 1 AS expired_dir_reclaimed,
-  1 AS pinned_survivor_intact, 1 AS pointer_never_expired"""),
-    // stream_stats: the streamed sketch rows' MERGE held verbatim to the
-    // batch ANALYZE recompute on the mergeable fields (any batching);
-    // union-sketch ndv gated against the exact twin (literal 1)
-    "stream_stats" ->
-      columnStatsSql("documents", Seq("lang", "n_chars"), _ => "1 AS ndv_ok"),
-    // s17: the compaction decision replays — batch sizes are a pure
-    // function of doc_id, small = under total//10; count + doc_id
-    // fingerprint anchor the rewritten table to the source
-    "s17_stats_compaction" -> s"""
-WITH t AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM documents),
-b AS (SELECT LEAST(doc_id % 32, 7) AS batch, CAST(COUNT(*) AS BIGINT) AS c
-  FROM documents GROUP BY 1)
-SELECT
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_rows,
-  (SELECT ${md5XorSql(DocIdKeySql)} FROM documents) AS key_xor,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM b, t WHERE c < total // 10)
-    AS n_small_batches,
-  1 AS rows_identical, 1 AS files_reduced""",
-    // s16: per-column stats recomputed independently per column; SUM
-    // cast (HUGEINT), min/max rendered as VARCHAR in both engines
-    "s16_table_stats" -> columnStatsSql("lineitem", StatsCols,
-      c => s"CAST(COUNT(DISTINCT $c) AS BIGINT) AS ndv"),
-    // s13c: the Hilbert key's 16 rotation steps replay as GENERATED
-    // chained CTEs — each step's (x, y, d) computed from the previous
-    // step's row exactly as the Spark per-step projections do; the
-    // quadrant digit (3*rx)^ry is the shared when-chain 0/1/3/2
-    "s13c_hilbert_stats" -> {
-      val nm1 = (1L << 16) - 1
-      val steps = (15 to 0 by -1).map { i =>
-        val s = 1L << i
-        val ss = s * s
-        val rx = s"((x & $s) > 0)"
-        val ry = s"((y & $s) > 0)"
-        s"""h$i AS (SELECT a, b,
-  CASE WHEN NOT $ry THEN (CASE WHEN $rx THEN $nm1 - y ELSE y END)
-       ELSE x END AS x,
-  CASE WHEN NOT $ry THEN (CASE WHEN $rx THEN $nm1 - x ELSE x END)
-       ELSE y END AS y,
-  d + CAST($ss AS BIGINT) * (CASE WHEN $rx AND $ry THEN 2 WHEN $rx THEN 3
-                  WHEN $ry THEN 1 ELSE 0 END) AS d
- FROM h${i + 1})"""
-      }.mkString(",\n")
-      s"""WITH $keyRangeCte,
-sk AS (
-  SELECT l_orderkey AS a, l_partkey AS b,
-    ${zScaleSql("l_orderkey", "alo", "ahi", "sa")},
-    ${zScaleSql("l_partkey", "blo", "bhi", "sb")}
-  FROM lineitem),
-h16 AS (SELECT a, b, sa AS x, sb AS y, CAST(0 AS BIGINT) AS d FROM sk),
-$steps
-SELECT d >> 26 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
-  MIN(a) AS min_a, MAX(a) AS max_a, MIN(b) AS min_b, MAX(b) AS max_b
-FROM h0 GROUP BY 1 ORDER BY bucket"""
-    },
-    "cls1_cg_weights" -> OracleSqlGen.cls1WeightsSql(),
-    // stream_classify_lr: sink rows held VERBATIM to the all-docs batch
-    // replay of the trained scorer (train-batch/score-stream invisibility)
-    "stream_classify_lr" -> OracleSqlGen.cls1ScoresStreamSql(),
-    "pipe_curation_trained" -> OracleSqlGen.pipeCurationTrainedSql(),
-    "cls1_cg_scores" -> OracleSqlGen.cls1ScoresSql(),
-    "cls1_cg_eval" -> OracleSqlGen.cls1EvalSql(),
-    "stream_classify" -> ta18NbSql,
-    // cur3: both self-trained LMs replayed (the ta16 bigram LM, and the
-    // ta11 unigram LM over its tok/uni/tot counts), exact-integer 4dp
-    // means, excess = lp_bi - lp_uni, and the k-th-tuple threshold
-    // expressed as its equivalent (excess DESC, doc_id ASC) rank
-    "cur3_excess_loss" ->
-      s"""WITH ${bigramLmCtes("documents")},
-         ulp AS (
-           SELECT doc_id, round(ln(cu / total), 6) AS lp
-           FROM tok JOIN uni USING (tok), tot),
-         ulm AS (
-           SELECT doc_id, SUM(CAST(round(lp * 1000000) AS BIGINT)) AS s,
-             CAST(COUNT(*) AS BIGINT) * 100 AS d
-           FROM ulp GROUP BY 1),
-         uavg AS (SELECT doc_id, $lmAvgExpr AS lp_uni FROM ulm),
-         bavg AS (SELECT doc_id, $lmAvgExpr AS lp_bi FROM lm),
-         x AS (
-           SELECT u.doc_id, u.lp_uni, b.lp_bi,
-             b.lp_bi - u.lp_uni AS excess
-           FROM uavg u JOIN bavg b USING (doc_id))
-         SELECT doc_id, lp_uni, lp_bi, excess,
-           CASE WHEN ROW_NUMBER() OVER (ORDER BY excess DESC, doc_id ASC)
-             <= 150 THEN 1 ELSE 0 END AS selected
-         FROM x ORDER BY doc_id""",
-    // cur2: the full DSIR replay — both hashed-bigram bucket models
-    // re-learned (md5 60-bit buckets, Laplace-smoothed, 6dp micro-nat
-    // log-ratios), per-doc weight sum, keyed-hash Gumbel, and the
-    // (key desc, doc_id asc) k-th-tuple selection threshold
-    "cur2_dsir" ->
-      """WITH rawd AS (SELECT doc_id, text FROM documents WHERE lang <> 'en'),
-         tgtd AS (SELECT doc_id, text FROM documents WHERE lang = 'en'),
-         rt AS (SELECT doc_id,
-           regexp_extract_all(lower(text), '[\p{L}\p{N}]+') AS t FROM rawd),
-         tt AS (SELECT doc_id,
-           regexp_extract_all(lower(text), '[\p{L}\p{N}]+') AS t FROM tgtd),
-         rb AS (
-           SELECT doc_id,
-             CAST(('0x' || substr(md5('b:' || gram), 1, 15)) AS BIGINT)
-               % 4096 AS bucket
-           FROM (SELECT doc_id, unnest(list_concat(t,
-             list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i + 1])))
-             AS gram FROM rt)),
-         tb AS (
-           SELECT doc_id,
-             CAST(('0x' || substr(md5('b:' || gram), 1, 15)) AS BIGINT)
-               % 4096 AS bucket
-           FROM (SELECT doc_id, unnest(list_concat(t,
-             list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i + 1])))
-             AS gram FROM tt)),
-         rc AS (SELECT bucket, COUNT(*) AS n FROM rb GROUP BY 1),
-         tc AS (SELECT bucket, COUNT(*) AS n FROM tb GROUP BY 1),
-         rtot AS (SELECT COUNT(*) AS tr FROM rb),
-         ttot AS (SELECT COUNT(*) AS tg FROM tb),
-         ratio AS (
-           SELECT COALESCE(tc.bucket, rc.bucket) AS bucket,
-             CAST(round(round(ln((COALESCE(tc.n, 0) + 1)
-               / CAST(tg + 4096 AS DOUBLE)), 6) * 1000000) AS BIGINT)
-             - CAST(round(round(ln((COALESCE(rc.n, 0) + 1)
-               / CAST(tr + 4096 AS DOUBLE)), 6) * 1000000) AS BIGINT) AS lrm
-           FROM tc FULL JOIN rc ON tc.bucket = rc.bucket, rtot, ttot),
-         dcnt AS (SELECT doc_id, bucket, COUNT(*) AS c FROM rb GROUP BY 1, 2),
-         dw AS (
-           SELECT d.doc_id, CAST(SUM(d.c * r.lrm) AS BIGINT) AS wm
-           FROM dcnt d JOIN ratio r USING (bucket) GROUP BY 1),
-         keyed AS (
-           SELECT rd.doc_id, COALESCE(dw.wm, 0) AS wm,
-             dw.doc_id IS NOT NULL AS hasf,
-             CAST(round(round(-ln(-ln(
-               (CAST(CAST(('0x' || substr(md5('dsir:'
-                  || CAST(rd.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-                 AS DOUBLE) + 0.5e0)
-               / 1152921504606846976.0e0)), 6) * 1000000) AS BIGINT) AS gm
-           FROM rawd rd LEFT JOIN dw ON dw.doc_id = rd.doc_id),
-         kth AS (
-           SELECT key, doc_id FROM (
-             SELECT wm + gm AS key, doc_id FROM keyed WHERE hasf
-             ORDER BY key DESC, doc_id ASC LIMIT 100)
-           ORDER BY key ASC, doc_id DESC LIMIT 1)
-         SELECT k.doc_id, k.wm / 1e6 AS log_weight, k.gm / 1e6 AS gumbel,
-           CAST(COALESCE(k.hasf AND ((k.wm + k.gm > kth.key)
-             OR (k.wm + k.gm = kth.key AND k.doc_id <= kth.doc_id)),
-             FALSE) AS INT) AS selected
-         FROM keyed k LEFT JOIN kth ON TRUE ORDER BY k.doc_id""",
-    // ta17: the ta16 LM replay + NTILE(3) per source over the identical
-    // (avg_logprob DESC, doc_id) total order — both engines implement
-    // SQL-standard ntile (first n mod 3 buckets take the extra row)
-    "ta17_ppl_buckets" ->
-      s"""WITH ${bigramLmCtes("documents")},
-         $lmMeanCte,
-         ranked AS (
-           SELECT lm2.doc_id, d.source AS domain, lm2.n_bigrams,
-             lm2.avg_logprob,
-             NTILE(3) OVER (PARTITION BY d.source
-               ORDER BY lm2.avg_logprob DESC, lm2.doc_id) AS tercile
-           FROM lm2 JOIN documents d ON lm2.doc_id = d.doc_id)
-         SELECT doc_id, domain, n_bigrams, avg_logprob, tercile,
-           CASE tercile WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
-             ELSE 'tail' END AS bucket
-         FROM ranked ORDER BY doc_id""",
-    // ta17b: the ta16 LM replay + cut scores learned on the keyed-hash
-    // half-sample (the sp2/mx1 md5-unit draw, seed "cuts") + the
-    // threshold CASE — selection, cut learning, and bucketing all
-    // re-derived
-    "ta17b_ppl_buckets_sampled" ->
-      s"""WITH ${bigramLmCtes("documents")},
-         $lmMeanCte,
-         scored AS (
-           SELECT lm2.doc_id, d.source AS domain, lm2.n_bigrams,
-             lm2.avg_logprob
-           FROM lm2 JOIN documents d ON lm2.doc_id = d.doc_id),
-         samp AS (
-           SELECT domain, avg_logprob,
-             NTILE(3) OVER (PARTITION BY domain
-               ORDER BY avg_logprob DESC, doc_id) AS t
-           FROM scored
-           WHERE ${md5UnitSql("cuts")} < 0.5),
-         cuts AS (
-           SELECT domain,
-             MIN(CASE WHEN t = 1 THEN avg_logprob END) AS cut_head,
-             MIN(CASE WHEN t = 2 THEN avg_logprob END) AS cut_mid
-           FROM samp GROUP BY 1)
-         SELECT s.doc_id, s.domain, s.n_bigrams, s.avg_logprob,
-           CASE WHEN c.cut_head IS NOT NULL AND s.avg_logprob >= c.cut_head
-                  THEN 'head'
-                WHEN c.cut_mid IS NOT NULL AND s.avg_logprob >= c.cut_mid
-                  THEN 'middle'
-                ELSE 'tail' END AS bucket
-         FROM scored s LEFT JOIN cuts c ON s.domain = c.domain
-         ORDER BY s.doc_id""",
-    "ta17b_gate" -> "SELECT 75 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    // ta10_gate: deflate ratio separates planted repetition from prose
-    // and stays bounded over the corpus (SQL has no deflate, so the gate
-    // carries the registry-level check for the rows-only ta10)
-    "ta10_gate" -> "SELECT 1 AS has_rows, 1 AS ordered, 1 AS bounded",
-    // stream_state_gate: the observability table's accounting equals
-    // exact ground truth (input rows == corpus count, final dedup state
-    // rows == distinct fingerprints)
-    "stream_state_gate" ->
-      "SELECT 1 AS has_batches, 1 AS input_match, 1 AS state_match",
-    // stream_index_append: the streamed inverted file is row-identical
-    // to the batch build with the same frozen centroid model
-    "stream_index_append" ->
-      "SELECT 1 AS rows_match, 1 AS assign_match",
-    // stream_drift_gate: the centroid-drift monitor flags the planted
-    // drifted batch and nothing else (exact per-batch flag parity)
-    "stream_drift_gate" ->
-      "SELECT 1 AS has_batches, 1 AS planted_ok, 1 AS flag_match",
-    // stream_index_rebuild: the drift-triggered rebuild + atomic swap —
-    // exactly one rebuild fired by the planted batch, the rebuilt index
-    // row/bit-identical to a from-scratch build over the covered
-    // corpus, v0 still served intact, and the post-swap base+delta
-    // index complete and able to retrieve the planted direction
-    "stream_index_rebuild" ->
-      """SELECT 1 AS has_batches, 1 AS planted_ok, 1 AS flag_match,
-           1 AS rebuilt_once, 1 AS rebuilt_identical, 1 AS preswap_ok,
-           1 AS served_complete, 1 AS served_ok""",
-    // tx_gate: the transformer-contract literal — self-BERTScore exact 1,
-    // order sensitivity, near-dup beats unrelated, bit-exact determinism
-    "tx_gate" ->
-      """SELECT 1 AS self_pass, 1 AS order_pass, 1 AS neardup_pass,
-           1 AS det_pass, 1 AS has_rows""",
-    // tx_trained_gate: the committed TRAINED checkpoint beats the seeded
-    // weights on the separation contract (margin lift >= 0.40, unrelated-
-    // doc cosine down >= 0.40, alignment held, bit-determinism) — the
-    // "quality proven" literal for the in-repo contrastive trainer
-    "tx_trained_gate" ->
-      """SELECT 1 AS lift_pass, 1 AS aniso_pass, 1 AS align_pass,
-           1 AS det_pass, 1 AS has_rows""",
-    // ss14_gate: retrieve-then-rerank invariants — top-5 contained in the
-    // shortlist, rerank mean cross-F1 >= the bi-encoder top-5's, and
-    // bit-determinism of the cross scores across model instances
-    "ss14_gate" ->
-      """SELECT 1 AS has_rows, 1 AS contained_pass, 1 AS improve_pass,
-           1 AS det_pass""",
-    // m3tb_gate: recall floor for the LSH-routed transformer retrieval
-    // (measured 1.0 at sf0.001/0.01/0.1 — ProbeTx notes the anisotropy
-    // that makes sign-LSH candidate-rich on pooled transformer vectors)
-    "m3tb_gate" -> "SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    // q8_gate: the MMR summarizer contract — budget, determinism,
-    // non-emptiness, and differs-from-lead on at least one doc
-    "q8_gate" ->
-      """SELECT 1 AS budget_pass, 1 AS det_pass, 1 AS nonempty_pass,
-           1 AS selects_pass, 1 AS has_rows""",
-    // ta9: normalizeTextSql over injected NFD, control and zero-width chars
-    "ta9_normalize" ->
-      s"""WITH inj AS (
-           SELECT doc_id,
-             substr(text, 1, 40) || ' cafe' || chr(769) || chr(7) || chr(8203)
-               || ' fin' AS text
-           FROM documents),
-         n AS (SELECT doc_id, text, $normalizeTextSql AS norm_text FROM inj)
-         SELECT doc_id, norm_text, norm_text <> text AS changed
-         FROM n ORDER BY doc_id""",
-    "ta8_repetition" ->
-      """WITH base AS (
-           SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
-           WHERE trim(text) <> ''),
-         pl AS (
-           SELECT doc_id, g,
-                  array_to_string(toks[CAST(g*8+1 AS INT):CAST(g*8+8 AS INT)], ' ') AS piece
-           FROM base, LATERAL UNNEST(generate_series(0, CAST(floor((len(toks)-1)/8.0) AS BIGINT))) AS u(g)),
-         rep AS (
-           SELECT doc_id,
-                  string_agg(piece, chr(10) ORDER BY g) || chr(10) ||
-                    MAX(CASE WHEN g = 0 THEN piece END) AS t
-           FROM pl GROUP BY 1),
-         lns AS (
-           SELECT doc_id,
-                  list_filter(list_transform(string_split(t, chr(10)), x -> trim(x)),
-                              x -> x <> '') AS ls
-           FROM rep),
-         dupf AS (
-           SELECT doc_id,
-                  CASE WHEN len(ls) > 0
-                    THEN round(1.0 - len(list_distinct(ls)) * 1.0 / len(ls), 4)
-                    ELSE 0.0 END AS dup_line_frac
-           FROM lns),
-         tk AS (SELECT doc_id, string_split_regex(trim(t), '\s+') AS toks FROM rep),
-         bg AS (
-           SELECT doc_id, toks[CAST(k AS INT)] || ' ' || toks[CAST(k+1 AS INT)] AS gram
-           FROM tk, LATERAL UNNEST(generate_series(1, len(toks)-1)) AS u(k)
-           WHERE len(toks) >= 2),
-         cnt AS (SELECT doc_id, gram, COUNT(*) AS c FROM bg GROUP BY 1, 2),
-         agg AS (SELECT doc_id, round(MAX(c) * 1.0 / SUM(c), 4) AS top2gram_frac
-                 FROM cnt GROUP BY 1)
-         SELECT d.doc_id AS doc_id, d.dup_line_frac,
-                COALESCE(a.top2gram_frac, 0.0) AS top2gram_frac
-         FROM dupf d LEFT JOIN agg a ON d.doc_id = a.doc_id
-         ORDER BY doc_id""",
-    // top-10 trigrams, deterministic (count desc, gram asc)
-    "ta6_top_ngrams" ->
-      """WITH toks AS (
-           SELECT doc_id, regexp_extract_all(lower(text), '[\p{L}\p{N}]+') AS t
-           FROM documents),
-         grams AS (
-           SELECT t[k] || ' ' || t[k+1] || ' ' || t[k+2] AS gram
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS u(k))
-         SELECT gram, COUNT(*) AS n FROM grams GROUP BY gram
-         ORDER BY n DESC, gram ASC LIMIT 10""",
+         ['jpeg','png','wav','mp4'][(CAST(('0x' || substr(md5(text), 1, 2)) AS INT) % 4) + 1] AS format,
+         16 + CAST(('0x' || substr(md5(text), 3, 4)) AS INT) % 1904 AS width,
+         16 + CAST(('0x' || substr(md5(text), 7, 4)) AS INT) % 1064 AS height,
+         1 + CAST(('0x' || substr(md5(text), 11, 2)) AS INT) % 120 AS n_frames,
+         octet_length(encode(text)) AS n_bytes
+         FROM documents ORDER BY doc_id""")),
+    "mm4_feature_norm" -> Entry(mm4FeatureNorm(_, _), Some {
+      // f_i = byte_i / 256 (exact in binary fp); norm accumulates
+      // left-to-right like the VecNorm loop
+      val fs = (0 until 8).map { i =>
+        s"(CAST(('0x' || substr(md5(text), ${2 * i + 1}, 2)) AS INT) / 256.0)"
+      }
+      val sumSq = fs.map(f => s"$f * $f").mkString(" + ")
+      s"""SELECT doc_id, 8 AS dim, round(sqrt($sumSq), 4) AS feat_norm
+         FROM documents ORDER BY doc_id"""
+    }),
     // stub resize = md5(payload ++ bigint-bytes(64) ++ bigint-bytes(48));
     // 64 and 48 are single ASCII bytes, so the digest input is exactly the
     // UTF-8 of text || chr(64) || chr(48)
-    "mm5_resize" ->
+    "mm5_resize" -> Entry(mm5Resize(_, _), Some(
       """SELECT doc_id, md5(text || chr(64) || chr(48)) AS resized_md5,
          CAST(16 AS BIGINT) AS n_bytes
-         FROM documents ORDER BY doc_id""",
-    "mm6_codec_roundtrip" -> mm6CodecSql,
-    "mm6b_codec_fused" -> mm6CodecSql,
-    // the invariants (rescale-invariant dHash per master, Hamming
-    // separation between masters) are verified in-query; the oracle
-    // derives the master count from the same doc_id arithmetic
-    "mm8_media_neardup" ->
-      """SELECT CAST(COUNT(DISTINCT doc_id % 16) AS BIGINT) AS n_masters,
-         1 AS intra_ok, 1 AS inter_ok FROM documents""",
-    "mm7_wav_roundtrip" ->
+         FROM documents ORDER BY doc_id""")),
+    // STUB decoder is md5-derived end to end, so even frame sampling has an
+    // exact oracle: every 10th frame index below n_frames, 16-byte frames.
+    "mm3_frame_sample" -> Entry(mm3FrameSample(_, _), Some(
+      """SELECT doc_id, CAST(k AS INT) AS frame_idx, 16 AS frame_bytes
+         FROM (SELECT doc_id,
+                 1 + CAST(('0x' || substr(md5(text), 11, 2)) AS INT) % 120 AS n_frames
+               FROM documents),
+         LATERAL UNNEST(generate_series(0, n_frames - 1, 10)) AS t(k)
+         ORDER BY doc_id, frame_idx""")),
+    "mm6_codec_roundtrip" -> Entry(mm6CodecRoundtrip(_, _), Some(mm6CodecSql)),
+    "mm6b_codec_fused" -> Entry(mm6bCodecFused(_, _), Some(mm6CodecSql)),
+    "mm7_wav_roundtrip" -> Entry(mm7WavRoundtrip(_, _), Some(
       """SELECT doc_id, 'wav' AS format,
          CAST(8000 AS INT) AS sample_rate,
          CAST(1 + (doc_id % 2) AS INT) AS channels,
          CAST(256 + (doc_id % 512) AS INT) AS n_frames
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id""")),
     // mm9: the square waveform regenerated sample-by-sample, then the
     // same RMS / strict-sign-product ZCR formulas (a zero sample crosses
     // nothing on both engines; the wave never emits zeros anyway)
-    "mm9_audio_features" ->
+    "mm9_audio_features" -> Entry(mm9AudioFeatures(_, _), Some(
       """WITH d AS (
            SELECT doc_id, CAST(256 + doc_id % 512 AS BIGINT) AS n,
              CAST(2 + doc_id % 7 AS BIGINT) AS p
@@ -7697,78 +9573,20 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
          SELECT doc_id, MAX(n) AS n_samples,
            round(sqrt(SUM(CAST(v AS DOUBLE) * v) / MAX(n)), 4) AS rms,
            round(SUM(c) * 1.0 / (MAX(n) - 1), 4) AS zcr
-         FROM z GROUP BY doc_id ORDER BY doc_id""",
-    // BERTScore greedy match with the md5-bucket embedder: a single-token
-    // embedding is exactly +/-e_(h % 64) (h = first 60 md5 bits, sign =
-    // bit 6), so cosine(tok_a, tok_b) = same bucket ? sign_a*sign_b : 0 —
-    // the greedy best-match max, the P/R means and the harmonic F1 follow
-    // in plain SQL with bit-identical doubles.
-    "eval_bert_ngram" ->
-      raw"""WITH ${tokenSlicePairsCte()},
-         tok AS (
-           SELECT doc_id,
-             regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS gt,
-             regexp_extract_all(lower(ref), '[\p{L}\p{N}]+') AS rt
-           FROM pairs),
-         g AS (
-           SELECT doc_id, i,
-             CAST(('0x' || substr(md5(gt[i]), 1, 15)) AS BIGINT) AS h
-           FROM tok, LATERAL UNNEST(generate_series(1, len(gt))) AS u(i)),
-         r AS (
-           SELECT doc_id, j,
-             CAST(('0x' || substr(md5(rt[j]), 1, 15)) AS BIGINT) AS h
-           FROM tok, LATERAL UNNEST(generate_series(1, len(rt))) AS u(j)),
-         gb AS (
-           SELECT g.doc_id, g.i,
-             MAX(CASE WHEN (g.h % 64) = (r.h % 64)
-               THEN CASE WHEN ((g.h >> 6) & 1) = ((r.h >> 6) & 1)
-                 THEN 1.0 ELSE -1.0 END
-               ELSE 0.0 END) AS best
-           FROM g JOIN r USING (doc_id) GROUP BY 1, 2),
-         rb AS (
-           SELECT r.doc_id, r.j,
-             MAX(CASE WHEN (g.h % 64) = (r.h % 64)
-               THEN CASE WHEN ((g.h >> 6) & 1) = ((r.h >> 6) & 1)
-                 THEN 1.0 ELSE -1.0 END
-               ELSE 0.0 END) AS best
-           FROM r JOIN g USING (doc_id) GROUP BY 1, 2),
-         pq AS (SELECT doc_id, SUM(best) / COUNT(*) AS p FROM gb GROUP BY 1),
-         rq AS (SELECT doc_id, SUM(best) / COUNT(*) AS r FROM rb GROUP BY 1),
-         m AS (
-           SELECT d.doc_id, coalesce(pq.p, 0.0) AS p, coalesce(rq.r, 0.0) AS r,
-             (pq.doc_id IS NULL OR rq.doc_id IS NULL) AS degenerate
-           FROM documents d
-             LEFT JOIN pq ON d.doc_id = pq.doc_id
-             LEFT JOIN rq ON d.doc_id = rq.doc_id)
-         SELECT doc_id,
-           round(CASE WHEN degenerate THEN 0.0 ELSE p END, 4) AS bert_p,
-           round(CASE WHEN degenerate THEN 0.0 ELSE r END, 4) AS bert_r,
-           round(CASE WHEN degenerate OR p + r = 0.0 THEN 0.0
-             ELSE 2.0 * p * r / (p + r) END, 4) AS bert_f
-         FROM m ORDER BY doc_id""",
-    // CoverageJudge rubric over the eval_rouge_ngram pairing: coverage =
-    // |distinct(ref toks) ∩ distinct(gen toks)| / |distinct(ref toks)|,
-    // coherence = distinct/total over gen toks, pass = coverage >= 0.25
-    "eval_judge_ngram" ->
-      raw"""WITH ${tokenSlicePairsCte()},
-         tok AS (
-           SELECT doc_id, gen,
-             regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS gt,
-             list_distinct(regexp_extract_all(lower(gen), '[\p{L}\p{N}]+')) AS gset,
-             list_distinct(regexp_extract_all(lower(ref), '[\p{L}\p{N}]+')) AS rset
-           FROM pairs),
-         m AS (
-           SELECT doc_id,
-             CASE WHEN len(rset) = 0 OR trim(gen) = '' THEN 0.0
-               ELSE len(list_filter(rset, x -> list_contains(gset, x))) * 1.0 / len(rset)
-             END AS cov,
-             CASE WHEN len(gt) = 0 THEN 0.0
-               ELSE len(list_distinct(gt)) * 1.0 / len(gt) END AS coh,
-             trim(gen) = '' AS is_empty
-           FROM tok)
-         SELECT doc_id, (NOT is_empty AND cov >= 0.25) AS passed,
-           round(cov, 4) AS correctness, round(coh, 4) AS coherence
-         FROM m ORDER BY doc_id""",
+         FROM z GROUP BY doc_id ORDER BY doc_id""")),
+    // the invariants (rescale-invariant dHash per master, Hamming
+    // separation between masters) are verified in-query; the oracle
+    // derives the master count from the same doc_id arithmetic
+    "mm8_media_neardup" -> Entry(mm8MediaNeardup(_, _), Some(
+      """SELECT CAST(COUNT(DISTINCT doc_id % 16) AS BIGINT) AS n_masters,
+         1 AS intra_ok, 1 AS inter_ok FROM documents""")),
+    "q8_mmr_summaries" -> Entry(q8MmrSummaries(_, _)),
+    // q8_gate: the MMR summarizer contract — budget, determinism,
+    // non-emptiness, and differs-from-lead on at least one doc
+    "q8_gate" -> Entry(q8Gate(_, _), Some(
+      """SELECT 1 AS budget_pass, 1 AS det_pass, 1 AS nonempty_pass,
+           1 AS selects_pass, 1 AS has_rows""")),
+    "q7_summarizer_compare" -> Entry(q7SummarizerCompare(_, _), Some(q7CompareSql)),
     // Q1 truncated strategy END-TO-END: cleanThinking (corpus-effective:
     // >=3-newline squeeze + trim) -> 16-token truncation -> the
     // ExtractiveSummarizer formula itself — sentence split (punctuation
@@ -7776,9 +9594,43 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
     // sentence scoring raw/sqrt(len), rank by (-score, idx), greedy
     // budget-8 selection as a recursive CTE (the same state walk as the
     // g3 greedy oracle), original-order concat, final 8-token truncation.
-    "q6_textrank" -> OracleSqlGen.q6TextRankSql(),
-    "q7_summarizer_compare" -> q7CompareSql,
-    "pipe_truncated" ->
+    "q6_textrank" -> Entry(q6TextRank(_, _), Some(OracleSqlGen.q6TextRankSql())))
+
+  // ------------------------------------------------------------- pipelines
+
+  /** Non-SQL-expressible ops (rows-only driver check + ScalaTest goldens). */
+  private def binpackGreedy(spark: SparkSession, dir: String): DataFrame = {
+    val chunks = tbl(spark, dir, "lineitem").select(
+      col("l_orderkey").as("doc_id"),
+      col("l_linenumber").as("chunk_idx"),
+      lit("x").as("text"),
+      floor(col("l_quantity")).cast("long").as("n_tokens"))
+    CorpusOps.binPack(chunks, 50L).toDF()
+      .select(col("doc_id"), col("chunk_idx"), col("bin"))
+      .orderBy(col("doc_id"), col("chunk_idx"))
+  }
+
+  private def pipelineEntries: Seq[(String, Entry)] = Seq(
+    // Exact greedy packing IS SQL-expressible via a recursive CTE: the
+    // running total resets at each bin boundary, which the recursion walks
+    // item-by-item per doc (depth = max chunks per doc, ~7 for lineitem).
+    "g3_binpack_greedy" -> Entry(binpackGreedy(_, _), Some(
+      """WITH RECURSIVE seq AS (
+           SELECT l_orderkey AS doc_id, l_linenumber AS chunk_idx,
+             CAST(floor(l_quantity) AS BIGINT) AS w,
+             ROW_NUMBER() OVER (PARTITION BY l_orderkey
+               ORDER BY l_linenumber, CAST(floor(l_quantity) AS BIGINT)) AS rn
+           FROM lineitem),
+         rec AS (
+           SELECT doc_id, rn, chunk_idx, w, 0 AS bin, w AS cur
+           FROM seq WHERE rn = 1
+           UNION ALL
+           SELECT s.doc_id, s.rn, s.chunk_idx, s.w,
+             CASE WHEN r.cur + s.w > 50 THEN r.bin + 1 ELSE r.bin END,
+             CASE WHEN r.cur + s.w > 50 THEN s.w ELSE r.cur + s.w END
+           FROM rec r JOIN seq s ON s.doc_id = r.doc_id AND s.rn = r.rn + 1)
+         SELECT doc_id, chunk_idx, bin FROM rec ORDER BY doc_id, chunk_idx""")),
+    "pipe_truncated" -> Entry(Pipelines.truncated(_, _), Some(
       """WITH RECURSIVE cleaned AS (
            SELECT doc_id,
              trim(regexp_replace(text, '\n{3,}', chr(10) || chr(10), 'g')) AS c
@@ -7839,2114 +9691,84 @@ FROM h0 GROUP BY 1 ORDER BY bucket"""
                string_split_regex(trim(coalesce(o, '')), '\s+')[1:8], ' '), '')
            END AS summary
          FROM documents d LEFT JOIN outp ON d.doc_id = outp.doc_id
-         ORDER BY d.doc_id""",
-    "q1_agg" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         round(${exactSumSql("l_quantity")}, 4) AS sum_qty,
-         round(${exactSumSql("l_extendedprice")}, 4) AS sum_base_price,
-         round(${exactSumSql("l_extendedprice * (1 - l_discount)")}, 4) AS sum_disc_price,
-         round(${exactSumSql("l_quantity")} / COUNT(*), 4) AS avg_qty,
-         COUNT(*) AS n
-         FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""",
-    "j1_join_revenue" ->
-      s"""SELECT r_name AS region_name, n_name AS nation_name,
-         round(${exactSumSql("o_totalprice")}, 4) AS revenue, COUNT(*) AS n_orders
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "j2_semi_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_customers FROM customer
-         WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-         GROUP BY 1 ORDER BY 1""",
-    "j3_anti_join" ->
-      """SELECT c_custkey, c_name, round(c_acctbal, 4) AS acctbal FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders
-                           WHERE o_custkey = c_custkey AND o_totalprice >= 150000.0)
-         ORDER BY c_custkey""",
-    "p5_top_orders" ->
-      """SELECT o_orderkey, round(o_totalprice, 4) AS total_price FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-    "o4_random_pick" ->
-      """SELECT doc_id, text, md5('seed42_' || CAST(doc_id AS VARCHAR)) AS pick_key
-         FROM documents ORDER BY pick_key LIMIT 1""",
-    "o3_window_running" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber,
-         ROW_NUMBER() OVER w AS rn,
-         round(CAST(SUM(CAST(l_quantity AS DECIMAL(38,10))) OVER w AS DOUBLE), 4) AS running_qty
-         FROM lineitem
-         WINDOW w AS (PARTITION BY l_suppkey
-                      ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         ORDER BY l_suppkey, rn""",
-    "g3_binpack_cumsum" ->
-      """SELECT l_orderkey AS doc_id, l_linenumber AS chunk_idx,
-         CAST(floor(l_quantity) AS BIGINT) AS n_tokens,
-         CAST(floor((SUM(CAST(floor(l_quantity) AS BIGINT)) OVER w - CAST(floor(l_quantity) AS BIGINT)) / 50.0) AS INT) AS bin
-         FROM lineitem
-         WINDOW w AS (PARTITION BY l_orderkey
-                      ORDER BY l_linenumber, CAST(floor(l_quantity) AS BIGINT)
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         ORDER BY doc_id, chunk_idx""",
-    "g1_collect_ordered" -> g1CollectSql,
-    "g1b_collect_salted" -> g1CollectSql,
-    // g1c: the hot-key corpus (doc 0 = every fifth order, ~20% of chunks)
-    // still held to the direct ordered string_agg — the salted path must be
-    // indistinguishable from the unsalted collect ON the skewed key
-    // s8: roundtrip integrity + the size-derived file count (1 at test SF)
-    "s8_compact_roundtrip" ->
-      """SELECT doc_id, n_chars, 1 AS n_files_after
-         FROM documents ORDER BY doc_id""",
-    "g1c_collect_hotkey" ->
-      """SELECT CASE WHEN l_orderkey % 5 = 0 THEN 0 ELSE l_orderkey END AS doc_id,
-         COUNT(*) AS n_lines,
-         string_agg(CAST(l_orderkey * 10 + l_linenumber AS VARCHAR), ','
-                    ORDER BY l_orderkey * 10 + l_linenumber) AS line_numbers
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-    "g6_metric_stats" ->
-      s"""SELECT l_returnflag,
-         round(${exactSumSql("l_extendedprice")} / COUNT(*), 4) AS mean_price,
-         round(sqrt(greatest(
-           (${exactSumSql("l_extendedprice * l_extendedprice")}
-            - ${exactSumSql("l_extendedprice")} * ${exactSumSql("l_extendedprice")} / CAST(COUNT(*) AS DOUBLE))
-           / CAST(COUNT(*) AS DOUBLE), 0.0)), 4) AS std_price,
-         round(MIN(l_extendedprice), 4) AS min_price,
-         round(MAX(l_extendedprice), 4) AS max_price,
-         COUNT(*) AS n
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-    "g7_histogram" ->
-      """SELECT bucket, n, round(n * 100.0 / SUM(n) OVER (), 4) AS pct FROM (
-           SELECT CASE WHEN o_totalprice >= 300000.0 THEN 'high'
-                       WHEN o_totalprice >= 150000.0 THEN 'moderate'
-                       ELSE 'low' END AS bucket, COUNT(*) AS n
-           FROM orders GROUP BY 1) ORDER BY bucket""",
-    "g8_argmax" ->
-      """SELECT c_mktsegment, c_custkey AS best_custkey, round(c_acctbal, 4) AS best_acctbal
-         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-                 ORDER BY c_acctbal DESC, c_custkey DESC) AS rn FROM customer)
-         WHERE rn = 1 ORDER BY c_mktsegment""",
-    "f1_clean_text" ->
-      """SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS clean_text
-         FROM documents ORDER BY doc_id""",
-    "f2_token_counts" ->
-      s"""SELECT doc_id, ${tok("text")} AS n_tokens, length(text) AS n_chars,
-         greatest(1, CAST(floor(${tok("text")} / 50.0) AS BIGINT)) AS est_chunks
-         FROM documents ORDER BY doc_id""",
-    "c3_truncate" ->
-      """SELECT doc_id, array_to_string(string_split_regex(trim(text), '\s+')[1:20], ' ') AS head20
-         FROM documents ORDER BY doc_id""",
-    // s4: the oracle recomputes the summary straight from documents — both
-    // read-back paths (parquet table, per-doc txt files for doc_id < 200)
-    // must reproduce it bit-for-bit or the hash check fails
-    "s4_sink_roundtrip" ->
-      s"""SELECT doc_id,
-         array_to_string(string_split_regex(trim(text), '\\s+')[1:15], ' ') AS summary,
-         ${tok("text")} AS n_tokens,
-         CASE WHEN doc_id < 200
-           THEN array_to_string(string_split_regex(trim(text), '\\s+')[1:15], ' ')
-         END AS file_summary
-         FROM documents ORDER BY doc_id""",
-    // s5: stats block + section cardinalities of the JSON report,
-    // recomputed independently (g6-style exact-decimal mean)
-    "s5_report_sink" ->
-      s"""WITH v AS (
-           SELECT 'n_tokens' AS metric, CAST(${tok("text")} AS DOUBLE) AS v FROM documents
-           UNION ALL
-           SELECT 'n_chars' AS metric, CAST(length(text) AS DOUBLE) AS v FROM documents),
-         st AS (
-           SELECT metric,
-             round(${exactSumSql("v")} / COUNT(*), 4) AS mean_v,
-             round(MIN(v), 4) AS min_v, round(MAX(v), 4) AS max_v,
-             COUNT(*) AS n
-           FROM v GROUP BY 1),
-         hb AS (
-           SELECT CAST(COUNT(DISTINCT CASE WHEN ${tok("text")} < 55 THEN 'short'
-                                           WHEN ${tok("text")} < 65 THEN 'mid'
-                                           ELSE 'long' END) AS INT) AS hist_buckets
-           FROM documents),
-         dn AS (SELECT CAST(least(100, COUNT(*)) AS INT) AS details_n FROM documents)
-         SELECT metric, mean_v, min_v, max_v, n, hist_buckets, details_n
-         FROM st, hb, dn ORDER BY metric""",
-    "f3_bpe_count" -> f3BpeSql,
-    // f7/f8/f9: corpus text has no ':', '.', '/', or fences, so every
-    // expected value is constructible directly (see the query scaladoc)
-    "f7_name_scalars" ->
-      """SELECT doc_id,
-         'model_' || substr(text, 1, 12) || '_q' AS safe_name,
-         'doc_' || CAST(doc_id AS VARCHAR) || '.v2' AS fname_stem,
-         trim(substr(text, 1, 40)) AS payload
-         FROM documents ORDER BY doc_id""",
-    "s1_textdir_scan" -> s1ScanSql,
-    "s1b_jsonl_scan" -> s1ScanSql,
-    "c1_chunk_fixed" ->
-      """SELECT doc_id, CAST(k AS INT) AS chunk_idx, substr(text, CAST(k*100+1 AS INT), 120) AS chunk
-         FROM documents, LATERAL UNNEST(generate_series(0, CAST(floor((length(text)-1)/100.0) AS BIGINT))) AS t(k)
-         WHERE length(text) > 0 ORDER BY doc_id, chunk_idx""",
-    // c2b: exact replay of the FULL recursion on the derived
-    // paragraph corpus — both separator levels ("\n\n" runs, sepLen 2;
-    // oversized paragraphs recursing to " ", sepLen 1) share one merge
-    // state machine keyed by (doc, anchor) with per-group sep_len; run
-    // segmentation = cumulative count of oversized pieces
-    "c2b_chunk_recursive_deep" ->
-      """WITH RECURSIVE
-         base AS (
-           SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
-           WHERE trim(text) <> ''),
-         paras AS (
-           SELECT doc_id, CAST(g AS INT) AS pidx,
-                  array_to_string(toks[CAST(g*32+1 AS INT):CAST(g*32+32 AS INT)], ' ') AS piece
-           FROM base, LATERAL UNNEST(generate_series(0, CAST(floor((len(toks)-1)/32.0) AS BIGINT))) AS u(g)),
-         marks AS (
-           SELECT doc_id, pidx, piece, length(piece) AS plen,
-                  CASE WHEN length(piece) >= 180 THEN 1 ELSE 0 END AS big,
-                  SUM(CASE WHEN length(piece) >= 180 THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY doc_id ORDER BY pidx ROWS UNBOUNDED PRECEDING) AS rid
-           FROM paras),
-         runs AS (
-           SELECT doc_id, rid, MIN(pidx) AS anchor FROM marks WHERE big = 0 GROUP BY 1, 2),
-         lvl1 AS (
-           SELECT m.doc_id, r.anchor, 2 AS sep_len,
-                  ROW_NUMBER() OVER (PARTITION BY m.doc_id, m.rid ORDER BY m.pidx) - 1 AS idx,
-                  m.piece, m.plen AS len
-           FROM marks m JOIN runs r ON m.doc_id = r.doc_id AND m.rid = r.rid
-           WHERE m.big = 0),
-         lvl2 AS (
-           SELECT m.doc_id, m.pidx AS anchor, 1 AS sep_len,
-                  CAST(w.k - 1 AS BIGINT) AS idx,
-                  string_split(m.piece, ' ')[CAST(w.k AS INT)] AS piece,
-                  length(string_split(m.piece, ' ')[CAST(w.k AS INT)]) AS len
-           FROM marks m, LATERAL UNNEST(generate_series(1, len(string_split(m.piece, ' ')))) AS w(k)
-           WHERE m.big = 1),
-         upieces AS (
-           SELECT * FROM lvl1 UNION ALL SELECT * FROM lvl2),
-         info0 AS (
-           SELECT doc_id, anchor, sep_len, idx, piece, len,
-                  SUM(len) OVER (PARTITION BY doc_id, anchor ORDER BY idx
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - len AS pfx,
-                  COUNT(*) OVER (PARTITION BY doc_id, anchor) AS n
-           FROM upieces),
-         info AS (
-           SELECT a.doc_id, a.anchor, a.sep_len, a.idx, a.len, a.pfx, a.n,
-                  COALESCE((SELECT MIN(b.idx) FROM info0 b
-                            WHERE b.doc_id = a.doc_id AND b.anchor = a.anchor AND b.idx < a.idx
-                              AND a.pfx - b.pfx + (a.idx - 1 - b.idx) * a.sep_len
-                                  <= least(40, 180 - a.len - a.sep_len)), a.idx) AS kmin
-           FROM info0 a),
-         st AS (
-           SELECT doc_id, anchor, sep_len, 0 AS i, 0 AS j,
-                  CAST(NULL AS BIGINT) AS ea, CAST(NULL AS BIGINT) AS eb, n
-           FROM info WHERE idx = 0
-           UNION ALL
-           SELECT s.doc_id, s.anchor, s.sep_len, s.i + 1,
-                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) * s.sep_len + p.len + s.sep_len > 180
-                       THEN greatest(s.j, p.kmin) ELSE s.j END,
-                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) * s.sep_len + p.len + s.sep_len > 180
-                       THEN s.j END,
-                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) * s.sep_len + p.len + s.sep_len > 180
-                       THEN s.i - 1 END,
-                  s.n
-           FROM st s
-           JOIN info p ON p.doc_id = s.doc_id AND p.anchor = s.anchor AND p.idx = s.i
-           JOIN info q ON q.doc_id = s.doc_id AND q.anchor = s.anchor AND q.idx = s.j
-           WHERE s.i < s.n),
-         bounds AS (
-           SELECT doc_id, anchor, sep_len, ea AS a, eb AS b FROM st WHERE ea IS NOT NULL
-           UNION ALL
-           SELECT doc_id, anchor, sep_len, j, n - 1 FROM st WHERE i = n),
-         parr AS (
-           SELECT doc_id, anchor, list(piece ORDER BY idx) AS ps FROM upieces GROUP BY 1, 2)
-         SELECT b.doc_id AS doc_id,
-                CAST(ROW_NUMBER() OVER (PARTITION BY b.doc_id ORDER BY b.anchor, b.a) - 1 AS INT) AS chunk_idx,
-                CASE WHEN b.sep_len = 2
-                  THEN trim(array_to_string(p.ps[CAST(b.a + 1 AS INT):CAST(b.b + 1 AS INT)], e'\n\n'))
-                  ELSE trim(array_to_string(p.ps[CAST(b.a + 1 AS INT):CAST(b.b + 1 AS INT)], ' '))
-                END AS chunk
-         FROM bounds b JOIN parr p ON b.doc_id = p.doc_id AND b.anchor = p.anchor
-         ORDER BY b.doc_id, chunk_idx""",
-    // c2: exact replay of Splitter.recursiveSplit(180, 40, CharLen) for a
-    // corpus whose first applicable separator is " ". The merge loop's
-    // queue state is (window start j); after a flush both pop conditions
-    // collapse to T(k,i-1) <= least(40, 180 - len_i - 1) with
-    // T(k,i-1) = pfx_i - pfx_k + (i-1-k), so j' = max(j, kmin_i) and the
-    // whole loop is a linear recursive CTE over piece indices.
-    "c2_chunk_recursive" ->
-      """WITH RECURSIVE
-         ws AS (
-           SELECT doc_id, string_split(text, ' ') AS parr FROM documents
-           WHERE trim(text) <> ''),
-         pieces AS (
-           SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY k) - 1 AS idx,
-                  parr[CAST(k AS INT)] AS piece, length(parr[CAST(k AS INT)]) AS len
-           FROM ws, LATERAL UNNEST(generate_series(1, len(parr))) AS u(k)
-           WHERE trim(parr[CAST(k AS INT)]) <> ''),
-         info0 AS (
-           SELECT doc_id, idx, len,
-                  SUM(len) OVER (PARTITION BY doc_id ORDER BY idx
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - len AS pfx,
-                  COUNT(*) OVER (PARTITION BY doc_id) AS n
-           FROM pieces),
-         info AS (
-           SELECT a.doc_id, a.idx, a.len, a.pfx, a.n,
-                  COALESCE((SELECT MIN(b.idx) FROM info0 b
-                            WHERE b.doc_id = a.doc_id AND b.idx < a.idx
-                              AND a.pfx - b.pfx + (a.idx - 1 - b.idx)
-                                  <= least(40, 180 - a.len - 1)), a.idx) AS kmin
-           FROM info0 a),
-         st AS (
-           SELECT doc_id, 0 AS i, 0 AS j,
-                  CAST(NULL AS BIGINT) AS ea, CAST(NULL AS BIGINT) AS eb, n
-           FROM info WHERE idx = 0
-           UNION ALL
-           SELECT s.doc_id, s.i + 1,
-                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) + p.len + 1 > 180
-                       THEN greatest(s.j, p.kmin) ELSE s.j END,
-                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) + p.len + 1 > 180
-                       THEN s.j END,
-                  CASE WHEN s.j < s.i AND p.pfx - q.pfx + (s.i - 1 - s.j) + p.len + 1 > 180
-                       THEN s.i - 1 END,
-                  s.n
-           FROM st s
-           JOIN info p ON p.doc_id = s.doc_id AND p.idx = s.i
-           JOIN info q ON q.doc_id = s.doc_id AND q.idx = s.j
-           WHERE s.i < s.n),
-         bounds AS (
-           SELECT doc_id, ea AS a, eb AS b FROM st WHERE ea IS NOT NULL
-           UNION ALL
-           SELECT doc_id, j, n - 1 FROM st WHERE i = n),
-         parr2 AS (SELECT doc_id, list(piece ORDER BY idx) AS ps FROM pieces GROUP BY 1)
-         SELECT b.doc_id,
-                CAST(ROW_NUMBER() OVER (PARTITION BY b.doc_id ORDER BY b.a) - 1 AS INT) AS chunk_idx,
-                trim(array_to_string(p.ps[CAST(b.a + 1 AS INT):CAST(b.b + 1 AS INT)], ' ')) AS chunk
-         FROM bounds b JOIN parr2 p USING (doc_id)
-         ORDER BY doc_id, chunk_idx""",
-    "dd1_exact_dups" ->
-      """SELECT md5(text) AS text_md5, MIN(doc_id) AS canonical_doc_id,
-         COUNT(*) AS dup_count,
-         string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS member_ids
-         FROM documents GROUP BY 1 HAVING COUNT(*) > 1 ORDER BY text_md5""",
-    "dd1b_prefix_dups" ->
-      """SELECT md5(substr(text, 1, 100)) AS text_md5, MIN(doc_id) AS canonical_doc_id,
-         COUNT(*) AS dup_count,
-         string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS member_ids
-         FROM documents GROUP BY 1 HAVING COUNT(*) > 1 ORDER BY text_md5""",
-    "dd2_minhash_sig" -> minhashSigSql,
-    "eval_rouge_ngram" ->
-      s"WITH $rougeNgramCtes\n$rougeNgramSelect\nORDER BY l.doc_id",
-    // M6: BLEU replay — gram tables for n=1..4, clipped-match sums,
-    // 6dp micro ln-precisions, quarter-micro combined log, 4dp exp
-    // eval_chrf: char-gram chrF2 replay — whitespace removed by joining
-    // the token slices with '' (equivalent to the Scala \s+ strip: split
-    // tokens carry no whitespace), per-order P/R micro-snapped before the
-    // exact integer averages (the Bleu micro6 convention)
-    "eval_chrf" ->
-      raw"""WITH ${tokenSlicePairsCte("")},
-         ns AS (SELECT UNNEST([1, 2, 3, 4]) AS n),
-         cg AS (
-           SELECT p.doc_id, ns.n,
-             UNNEST(list_transform(range(1, length(p.gen) - ns.n + 2),
-               i -> substr(p.gen, CAST(i AS INT), CAST(ns.n AS INT)))) AS gram
-           FROM pairs p CROSS JOIN ns),
-         rgr AS (
-           SELECT p.doc_id, ns.n,
-             UNNEST(list_transform(range(1, length(p.ref) - ns.n + 2),
-               i -> substr(p.ref, CAST(i AS INT), CAST(ns.n AS INT)))) AS gram
-           FROM pairs p CROSS JOIN ns),
-         cc AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM cg GROUP BY 1, 2, 3),
-         rcn AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM rgr GROUP BY 1, 2, 3),
-         mtc AS (
-           SELECT cc.doc_id, cc.n, SUM(LEAST(cc.c, COALESCE(rcn.c, 0))) AS m
-           FROM cc LEFT JOIN rcn ON cc.doc_id = rcn.doc_id
-             AND cc.n = rcn.n AND cc.gram = rcn.gram
-           GROUP BY 1, 2),
-         grid AS (
-           SELECT p.doc_id, ns.n,
-             greatest(length(p.gen) - ns.n + 1, 0) AS ct,
-             greatest(length(p.ref) - ns.n + 1, 0) AS rt
-           FROM pairs p CROSS JOIN ns),
-         pn AS (
-           SELECT g.doc_id, g.n, g.ct, g.rt, COALESCE(x.m, 0) AS m
-           FROM grid g LEFT JOIN mtc x ON g.doc_id = x.doc_id AND g.n = x.n),
-         mic AS (
-           SELECT doc_id,
-             SUM(CASE WHEN ct > 0 THEN CAST(round(round(
-               m / CAST(ct AS DOUBLE), 6) * 1000000) AS BIGINT) END) AS ps,
-             COUNT(*) FILTER (WHERE ct > 0) AS pk,
-             SUM(CASE WHEN rt > 0 THEN CAST(round(round(
-               m / CAST(rt AS DOUBLE), 6) * 1000000) AS BIGINT) END) AS rs,
-             COUNT(*) FILTER (WHERE rt > 0) AS rk
-           FROM pn GROUP BY 1),
-         fin AS (
-           SELECT doc_id, COALESCE(ps, 0) AS a, pk * 1000000 AS ba,
-             COALESCE(rs, 0) AS b, rk * 1000000 AS bb
-           FROM mic)
-         SELECT doc_id,
-           CASE WHEN ba = 0 OR bb = 0 OR (4*a*bb + b*ba) = 0 THEN 0.0
-             ELSE ((2*(5*a*b)*10000 + (4*a*bb + b*ba))
-               // (2*(4*a*bb + b*ba))) / 10000.0 END AS chrf,
-           CASE WHEN ba = 0 THEN 0.0
-             ELSE ((2*a*10000 + ba) // (2*ba)) / 10000.0 END AS chrf_p,
-           CASE WHEN bb = 0 THEN 0.0
-             ELSE ((2*b*10000 + bb) // (2*bb)) / 10000.0 END AS chrf_r
-         FROM fin ORDER BY doc_id""",
-    "eval_bleu_ngram" ->
-      raw"""WITH ${tokenSlicePairsCte()},
-         mt AS (
-           SELECT doc_id,
-             regexp_extract_all(lower(gen), '[\p{L}\p{N}]+') AS ct,
-             regexp_extract_all(lower(ref), '[\p{L}\p{N}]+') AS rt
-           FROM pairs),
-         ns AS (SELECT UNNEST([1, 2, 3, 4]) AS n),
-         cg AS (
-           SELECT m.doc_id, ns.n,
-             UNNEST(list_transform(range(1, len(m.ct) - ns.n + 2),
-               i -> array_to_string(m.ct[i:i+ns.n-1], ' '))) AS gram
-           FROM mt m CROSS JOIN ns),
-         rg AS (
-           SELECT m.doc_id, ns.n,
-             UNNEST(list_transform(range(1, len(m.rt) - ns.n + 2),
-               i -> array_to_string(m.rt[i:i+ns.n-1], ' '))) AS gram
-           FROM mt m CROSS JOIN ns),
-         cc AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM cg GROUP BY 1, 2, 3),
-         rcn AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM rg GROUP BY 1, 2, 3),
-         mtc AS (
-           SELECT cc.doc_id, cc.n,
-             SUM(LEAST(cc.c, COALESCE(rcn.c, 0))) AS m, SUM(cc.c) AS t
-           FROM cc LEFT JOIN rcn ON cc.doc_id = rcn.doc_id
-             AND cc.n = rcn.n AND cc.gram = rcn.gram
-           GROUP BY 1, 2),
-         grid AS (
-           SELECT m.doc_id, ns.n, len(m.ct) AS c, len(m.rt) AS r
-           FROM mt m CROSS JOIN ns),
-         lns AS (
-           SELECT g.doc_id, g.c, g.r,
-             CAST(round(round(ln((COALESCE(x.m, 0) + 1)
-               / CAST(COALESCE(x.t, 0) + 1 AS DOUBLE)), 6) * 1000000)
-               AS BIGINT) AS lnm
-           FROM grid g LEFT JOIN mtc x ON g.doc_id = x.doc_id AND g.n = x.n),
-         agg AS (
-           SELECT doc_id, MAX(c) AS c, MAX(r) AS r,
-             CAST(SUM(lnm) AS BIGINT) AS lnsum
-           FROM lns GROUP BY 1),
-         sc AS (
-           SELECT doc_id,
-             CASE WHEN c = 0 OR r = 0 THEN NULL
-               ELSE 4 * (CASE WHEN c >= r THEN 0
-                 ELSE CAST(round(round(1 - CAST(r AS DOUBLE) / c, 6)
-                   * 1000000) AS BIGINT) END) + lnsum
-             END AS q
-           FROM agg)
-         SELECT doc_id,
-           CASE WHEN q IS NULL THEN 0.0
-             ELSE round(exp(q / 4000000.0), 4) END AS bleu,
-           q AS log_bleu_qmicro
-         FROM sc ORDER BY doc_id""",
-    // G9 mean-of-list stats over the SAME rouge-ngram metric rows:
-    // exactAvg / population-std formulas (decimal-exact sums, the g6
-    // pattern) held to DuckDB parity on a real metric distribution
-    "eval_stats_ngram" -> rougeStatsSql,
-    "dd3_minhash_lsh" -> minhashLshSql,
-    "dd3b_minhash_lsh_capped" -> minhashLshCappedSql(4),
-    "dd14_lsh_dedup_greedy" -> lshGreedyDedupSql(),
-    // stream_neardup: one AvailableNow batch == the batch greedy rule —
-    // held to dd14's oracle verbatim
-    "stream_neardup" -> lshGreedyDedupSql(),
-    "dd4b_jaccard_lsh" -> jaccardLshVerifiedSql(),
-    "dd4c_jaccard_sharp" -> jaccardLshVerifiedSql(nBands = 6, rowsPerBand = 4),
-    // SimHash is md5-derived (60-bit token hashes), so the weighted bit-sum
-    // signature, the 4x15-bit pigeonhole blocking AND the Hamming verify
-    // all reproduce exactly in SQL.
-    "dd5_simhash_pairs" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS t
-           FROM documents),
-         cnt AS (
-           SELECT doc_id, t, COUNT(*) AS w,
-             CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT) AS h
-           FROM tok GROUP BY 1, 2),
-         bits AS (
-           SELECT doc_id, b, SUM(CASE WHEN (h >> b) & 1 = 1 THEN w ELSE -w END) AS s
-           FROM cnt, LATERAL UNNEST(generate_series(0, 59)) AS g(b) GROUP BY 1, 2),
-         sig0 AS (
-           SELECT doc_id, SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS simhash
-           FROM bits GROUP BY 1),
-         sig AS (
-           SELECT d.doc_id, COALESCE(sig0.simhash, 0) AS simhash
-           FROM documents d LEFT JOIN sig0 ON d.doc_id = sig0.doc_id),
-         blocks AS (
-           SELECT doc_id, simhash, blk, (simhash >> (blk * 15)) & 32767 AS key
-           FROM sig, LATERAL UNNEST([0, 1, 2, 3]) AS u(blk))
-         SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-           bit_count(xor(x.simhash, y.simhash)) AS hamming
-         FROM blocks x JOIN blocks y USING (blk, key)
-         WHERE x.doc_id < y.doc_id AND bit_count(xor(x.simhash, y.simhash)) <= 3
-         ORDER BY doc_a, doc_b""",
-    // STUB decoder is md5-derived end to end, so even frame sampling has an
-    // exact oracle: every 10th frame index below n_frames, 16-byte frames.
-    "mm3_frame_sample" ->
-      """SELECT doc_id, CAST(k AS INT) AS frame_idx, 16 AS frame_bytes
-         FROM (SELECT doc_id,
-                 1 + CAST(('0x' || substr(md5(text), 11, 2)) AS INT) % 120 AS n_frames
-               FROM documents),
-         LATERAL UNNEST(generate_series(0, n_frames - 1, 10)) AS t(k)
-         ORDER BY doc_id, frame_idx""",
-    "dd6_embedding_pairs" ->
-      s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           ${cos4("a.embedding", "b.embedding")} AS cosine
-         FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-         WHERE cosine >= 0.45 ORDER BY id_a, id_b""",
-    "dd4_jaccard_pairs" ->
-      s"""WITH ${jaccardCountCtes()}
-         SELECT doc_a, doc_b, jaccard FROM $jaccardNearDupSql
-         ORDER BY doc_a, doc_b""",
-    "dc1_decontam" -> dc1DecontamSql,
-    // dc4: positional grams (k 0-based, gram k covers tokens k..k+4),
-    // covered-index expansion capped at doc length, original-case tokens
-    // rejoined with single spaces — the whole rewrite replayed per doc
-    "dc4_span_decontam" ->
-      s"""WITH $spanGramCtes,
-         bench AS (SELECT DISTINCT g FROM g WHERE doc_id % 10 = 0),
-         corp AS (SELECT * FROM g WHERE doc_id % 10 <> 0),
-         hits AS (SELECT doc_id, k FROM corp JOIN bench USING (g)),
-         ${spanRewriteSql("WHERE doc_id % 10 <> 0")}""",
-    // dc5: the dd6 split-cosine replay, corpus-vs-benchmark, argmax per
-    // corpus vector over the snapped cosine with bench_id tie-break
-    "dc5_semantic_decontam" ->
-      s"""WITH bench AS (
-           SELECT vec_id AS bench_id, embedding FROM embeddings
-           WHERE vec_id % 17 = 0),
-         corp AS (
-           SELECT vec_id, embedding FROM embeddings WHERE vec_id % 17 <> 0),
-         p AS (
-           SELECT c.vec_id, b.bench_id,
-             ${cos4("c.embedding", "b.embedding")} AS cos
-           FROM corp c CROSS JOIN bench b),
-         best AS (
-           SELECT vec_id, bench_id, cos,
-             ROW_NUMBER() OVER (PARTITION BY vec_id
-               ORDER BY cos DESC, bench_id) AS rn
-           FROM p)
-         SELECT vec_id, bench_id, cos AS max_cosine,
-           CAST(cos >= 0.45 AS INT) AS contaminated
-         FROM best WHERE rn = 1 ORDER BY vec_id""",
-    // dd12: the dc4 gram/rewrite chains, corpus-vs-itself, with the
-    // min-doc_id keeper rule replayed
-    "dd12_span_self_dedup" ->
-      s"""WITH $spanGramCtes,
-         dup AS (
-           SELECT g, MIN(doc_id) AS keeper
-           FROM g GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
-         hits AS (
-           SELECT x.doc_id, x.k FROM g x JOIN dup d USING (g)
-           WHERE x.doc_id <> d.keeper),
-         ${spanRewriteSql("")}""",
-    "dc2_decontam_corpus" ->
-      s"""WITH ${benchShingleCtes()},
-         $flaggedCte
-         SELECT doc_id FROM documents
-         WHERE doc_id % 10 <> 0 AND doc_id NOT IN (SELECT doc_id FROM flagged)
-         ORDER BY doc_id""",
-    "dc3_decontam_bloom" -> dc1DecontamSql,
-    // dd9: same toks derivation as dd4 but windows keep MULTIPLICITY (no
-    // DISTINCT) — a span repeated inside one doc is duplicated text too.
-    "dd9_span_coverage" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-         win AS (
-           SELECT doc_id, array_to_string(t[k:k+4], ' ') AS g
-           FROM toks, LATERAL UNNEST(generate_series(1, greatest(len(t)-4, 1))) AS u(k)),
-         occ AS (SELECT g, COUNT(*) AS c FROM win GROUP BY 1)
-         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-           CAST(SUM(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans,
-           round(SUM(CASE WHEN c >= 2 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 4)
-             AS dup_fraction
-         FROM win JOIN occ USING (g) GROUP BY doc_id ORDER BY doc_id""",
-    // sp1/sp2/mx1: keyed-hash sampling family. u = first 60 bits of
-    // md5("<seed>:<id>") / 2^60 — the ta4/o4 md5-prefix-long idiom; all
-    // registered weights are binary-exact so thresholds match bit-for-bit.
-    "sp1_split" ->
-      s"""WITH u AS (SELECT doc_id, ${md5UnitSql("split")} AS u FROM documents)
-         SELECT doc_id, $splitCaseSql AS split
-         FROM u ORDER BY doc_id""",
-    // sp4: the dd7 closure verbatim + sp1's split CASE keyed on the
-    // component representative (singletons key on their own id)
-    "sp4_component_split" ->
-      s"""WITH RECURSIVE ${jaccardComponentCtes()},
-         k AS (
-           SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS split_key
-           FROM documents d LEFT JOIN comp c USING (doc_id)),
-         uu AS (
-           SELECT doc_id, split_key, ${md5UnitSql("split", "split_key")} AS u
-           FROM k)
-         SELECT doc_id, split_key, $splitCaseSql AS split
-         FROM uu ORDER BY doc_id""",
-    "sp2_stratified" ->
-      s"""SELECT doc_id FROM (
-           SELECT doc_id, ${md5UnitSql("strat")} AS u
-           FROM documents)
-         WHERE u < CASE WHEN doc_id % 2 = 0 THEN 0.75 ELSE 0.25 END
-         ORDER BY doc_id""",
-    // sp3: exact-size sample = first n rows in keyed-md5 order (the sh1
-    // collation argument: lowercase hex == identical order both engines)
-    "sp3_fixed_sample" ->
-      """SELECT doc_id, sample_rank FROM (
-           SELECT doc_id,
-             CAST(row_number() OVER (
-               ORDER BY md5('sample:' || CAST(doc_id AS VARCHAR)), doc_id)
-             AS INT) AS sample_rank
-           FROM documents)
-         WHERE sample_rank <= 100 ORDER BY sample_rank""",
-    "mx1_resample" ->
-      s"""WITH w AS (
-           SELECT doc_id,
-             CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 2.5 WHEN 1 THEN 0.25
-               WHEN 2 THEN 1.0 ELSE 0.0 END AS w,
-             ${md5UnitSql("mix")} AS u
-           FROM documents),
-         c AS (
-           SELECT doc_id,
-             CAST(floor(w) + CASE WHEN u < w - floor(w) THEN 1 ELSE 0 END AS INT) AS n
-           FROM w)
-         SELECT doc_id, CAST(g.k AS INT) AS copy
-         FROM c, LATERAL UNNEST(generate_series(1, n)) AS g(k)
-         ORDER BY doc_id, copy""",
-    // sh1: rank in keyed-md5 order; hex is lowercase ASCII, so DuckDB
-    // string order == Spark UTF8String binary order
-    "sh1_shuffle" ->
-      """SELECT doc_id,
-           ROW_NUMBER() OVER (
-             ORDER BY md5('epoch0:' || CAST(doc_id AS VARCHAR)), doc_id) - 1
-             AS shuffle_pos
-         FROM documents ORDER BY doc_id""",
-    // pk1: concat-and-cut layout = exclusive prefix sum over doc_id order;
-    // integer // division mirrors Spark's `div`. pk2: per-shard greedy
-    // reset — the g3 recursive-CTE shape partitioned by shard.
-    "pk1_pack" ->
-      s"""WITH d AS (
-           SELECT doc_id, CAST(${tok("text")} AS BIGINT) AS n_tokens FROM documents),
-         c AS (
-           SELECT doc_id, n_tokens,
-             CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-               AS start_offset
-           FROM d)
-         SELECT doc_id, n_tokens, start_offset,
-           start_offset // 256 AS seq_id,
-           (start_offset + greatest(n_tokens, 1) - 1) // 256 AS seq_last,
-           ((start_offset + greatest(n_tokens, 1) - 1) // 256)
-             > (start_offset // 256) AS crosses_boundary
-         FROM c ORDER BY doc_id""",
-    // pk1b: pk1's prefix-sum CTE + generate_series over each doc's
-    // spanned sequences; within-sequence span arithmetic is end-exclusive
-    // (span covers [max(start, base), min(start+n, base+budget)))
-    "pk1b_packed_spans" ->
-      s"""WITH d AS (
-           SELECT doc_id, CAST(${tok("text")} AS BIGINT) AS n_tokens FROM documents),
-         c AS (
-           SELECT doc_id, n_tokens,
-             CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-               AS start_offset
-           FROM d),
-         p AS (
-           SELECT doc_id, n_tokens, start_offset,
-             UNNEST(generate_series(start_offset // 256,
-               (start_offset + n_tokens - 1) // 256)) AS seq_id
-           FROM c WHERE n_tokens > 0)
-         SELECT seq_id, doc_id,
-           greatest(start_offset, seq_id * 256) - seq_id * 256 AS span_start,
-           least(start_offset + n_tokens, seq_id * 256 + 256)
-             - greatest(start_offset, seq_id * 256) AS span_len,
-           start_offset >= seq_id * 256 AS is_doc_start,
-           start_offset + n_tokens <= seq_id * 256 + 256 AS is_doc_end
-         FROM p ORDER BY seq_id, doc_id""",
-    "pk2_pack_greedy" ->
-      s"""WITH RECURSIVE d AS (
-           SELECT doc_id, CAST(${tok("text")} AS BIGINT) AS w,
-             CAST(doc_id % 8 AS BIGINT) AS shard
-           FROM documents),
-         sq AS (
-           SELECT doc_id, w, shard,
-             ROW_NUMBER() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-           FROM d),
-         rec AS (
-           SELECT shard, rn, doc_id, w, 0 AS seq, w AS cur
-           FROM sq WHERE rn = 1
-           UNION ALL
-           SELECT s.shard, s.rn, s.doc_id, s.w,
-             CASE WHEN r.cur + s.w > 1000 THEN r.seq + 1 ELSE r.seq END,
-             CASE WHEN r.cur + s.w > 1000 THEN s.w ELSE r.cur + s.w END
-           FROM rec r JOIN sq s ON s.shard = r.shard AND s.rn = r.rn + 1)
-         SELECT doc_id, w AS n_tokens, shard, seq FROM rec ORDER BY doc_id""",
-    // dd7: transitive closure (recursive CTE) over the SAME pair derivation
-    // as dd4; component = min reachable id. Mirrors min-label propagation's
-    // fixed point exactly.
-    "dd7_components" ->
-      s"""WITH RECURSIVE ${jaccardComponentCtes()}
-         SELECT doc_id, component FROM comp ORDER BY doc_id""",
-    // dd8b: the dd7 closure + per-component argmax keeper (length, -id)
-    "dd8b_dedup_best" ->
-      s"""WITH RECURSIVE ${jaccardComponentCtes()},
-         scored AS (
-           SELECT d.doc_id, length(d.text) AS n_chars, c.component
-           FROM documents d LEFT JOIN comp c USING (doc_id)),
-         keepers AS (
-           SELECT doc_id FROM (
-             SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY component
-               ORDER BY n_chars DESC, doc_id ASC) AS rn
-             FROM scored WHERE component IS NOT NULL)
-           WHERE rn = 1)
-         SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars FROM scored
-         WHERE component IS NULL
-            OR doc_id IN (SELECT doc_id FROM keepers)
-         ORDER BY doc_id""",
-    // dd8: keep the min doc_id per distinct text
-    "dd8_dedup_corpus" ->
-      """SELECT doc_id, length(text) AS n_chars FROM (
-           SELECT doc_id, text,
-             ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-           FROM documents)
-         WHERE rn = 1 ORDER BY doc_id""",
-    // ss11: the 5 greedy MMR rounds unrolled as generated CTEs over the
-    // r4-snapped cosine tables; λ / (1−λ) are the exact double literals
-    // the Scala walk uses (1−0.7 interpolated, never a DECIMAL literal)
-    "ss11_mmr_topk" -> {
-      val lam = "0.7e0"
-      val olam = s"${1.0 - 0.7}e0"
-      // zero-norm guard mirrors the Scala when(denom === 0.0, 0.0)
-      def cosExpr(x: String, y: String) = {
-        def nrm(v: String) =
-          s"sqrt(list_sum(list_transform($v, w -> CAST(w AS DOUBLE) * CAST(w AS DOUBLE))))"
-        s"""CASE WHEN ${nrm(x)} * ${nrm(y)} = 0 THEN 0.0 ELSE round(
-             list_sum(list_transform(list_zip($x, $y),
-               p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-             / (${nrm(x)} * ${nrm(y)}),
-           4) END"""
-      }
-      val rounds = (2 to 5).map { i =>
-        val joins = (1 until i).map(j =>
-          s"JOIN sel$j s$j ON c.query_id = s$j.query_id " +
-            s"LEFT JOIN prs p$j ON p$j.query_id = c.query_id " +
-            s"AND p$j.a = c.vec_id AND p$j.b = s$j.vec_id").mkString(" ")
-        val reds = (1 until i).map(j => s"COALESCE(p$j.cs, 0.0e0)").mkString(", ")
-        val notPicked = (1 until i).map(j => s"c.vec_id <> s$j.vec_id").mkString(" AND ")
-        s"""red$i AS (
-           SELECT c.query_id, c.vec_id, c.cosine, greatest($reds) AS red
-           FROM cand c $joins
-           WHERE $notPicked),
-         sel$i AS (
-           SELECT query_id, vec_id FROM (
-             SELECT query_id, vec_id, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY $lam * cosine - $olam * red DESC, vec_id ASC) AS rn
-             FROM red$i) WHERE rn = 1)"""
-      }.mkString(",\n         ")
-      val unions = (1 to 5).map(i =>
-        s"SELECT query_id, CAST($i AS INT) AS rank, vec_id FROM sel$i")
-        .mkString(" UNION ALL ")
-      s"""WITH ${queryCte("q")},
-         scored AS (
-           SELECT q.query_id, c.vec_id, c.embedding,
-             ${cosExpr("q.eq", "c.embedding")} AS cosine
-           FROM embeddings c, q WHERE c.vec_id <> q.query_id),
-         cand AS (
-           SELECT query_id, vec_id, embedding, cosine FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS rnk
-             FROM scored) WHERE rnk <= 20),
-         prs AS (
-           SELECT x.query_id, x.vec_id AS a, y.vec_id AS b,
-             ${cosExpr("x.embedding", "y.embedding")} AS cs
-           FROM cand x JOIN cand y
-             ON x.query_id = y.query_id AND x.vec_id <> y.vec_id),
-         sel1 AS (
-           SELECT query_id, vec_id FROM (
-             SELECT query_id, vec_id, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS rn
-             FROM cand) WHERE rn = 1),
-         $rounds
-         SELECT query_id, rank, vec_id FROM ($unions)
-         ORDER BY query_id, rank"""
-    },
-    // ss2: the sign-LSH top-5 REPLAYED end to end — hyperplanes are
-    // corpus-independent seeded constants interpolated as literals;
-    // bucket keys, the Hamming-1 multiprobe shell, candidate dedup and
-    // the 4dp rerank are all re-derived in SQL (OracleSqlGen.ss2TopkSql).
-    // The former "approximate by construction => rows-only" stance was
-    // too weak: approximate vs the EXACT scan, yes — but deterministic
-    // given the corpus, so fully oracle-able.
-    "ss2_lsh_topk" -> OracleSqlGen.ss2TopkSql,
-    "ss2_recall" -> OracleSqlGen.ss2RecallSql,
-    // ss3: the IVF top-5 with the coarse quantizer RE-TRAINED in SQL
-    // (lowest-vec_id seeds, two Lloyd rounds with double-cosine
-    // assignment and decimal-exact float means, empty cells keeping
-    // their centroid), then probe + rerank (OracleSqlGen.ss3TopkSql).
-    "ss3_ivf_topk" -> OracleSqlGen.ss3TopkSql,
-    "ss3_recall" -> OracleSqlGen.ss3RecallSql,
-    // ss13: the graph-ANN chain — LSH-pair graph build, per-node top-m
-    // window, symmetrize, three unrolled beam rounds — replayed whole
-    // (hyperplane literals; the ss2 machinery one level up)
-    "ss13_graph_topk" -> OracleSqlGen.ss13TopkSql,
-    "ss13_recall" -> OracleSqlGen.ss13RecallSql,
-    // qz4: the PQ shortlist+rerank REPLAYED end to end — per-subspace
-    // codebooks re-trained in SQL (lowest-vec_id seeds, two L2 Lloyd
-    // rounds, decimal-exact means), every row re-encoded, the ADC score
-    // accumulated in the UDF's exact order via order-pinned list sums,
-    // shortlist 150 and the 4dp rerank re-derived (OracleSqlGen.qz4*).
-    // Deterministic given the corpus, so fully oracle-able — the ss2/ss3
-    // conversion argument, extended to the compressed-scan family.
-    "qz4_pq_topk" -> OracleSqlGen.qz4TopkSql,
-    "qz4_recall" -> OracleSqlGen.qz4RecallSql,
-    // ss8: IVFADC composed — the ss3 coarse-quantizer replay + float-
-    // exact residuals + the qz4 PQ trainer on residual space + the
-    // (centroid-dot-first) ADC accumulation, shortlist 250, 4dp rerank.
-    "ss8_ivfpq_topk" -> OracleSqlGen.ss8TopkSql,
-    "ss8_recall" -> OracleSqlGen.ss8RecallSql,
-    // cl1: the k-means cluster-size profile with the model RE-TRAINED in
-    // SQL (the ss3 replay at nCells=8, trainMod=1) — the "centroid values
-    // ride a non-SQL model" stance fell with ss3's conversion.
-    "cl1_cluster_sizes" -> OracleSqlGen.cl1SizesSql,
-    // ss13_gate: recall floor for the graph index (floor set ~0.15 under
-    // the min measured across SFs - the recallGate convention)
-    "ss13_gate" -> "SELECT 80 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    "ss1_cosine_topk" ->
-      s"""WITH ${exactCosineCtes()}
-         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("scored")}
-         ORDER BY query_id, rank""",
-    // ss10: the centering transform + ss1's chain on the centered lists —
-    // decimal-exact per-dim means, double-subtract, float re-round
-    "ss10_centered_topk" ->
-      s"""WITH dm AS (
-           SELECT u.i AS i,
-             CAST(SUM(CAST(CAST(e.embedding[u.i] AS DOUBLE)
-               AS DECIMAL(38, 10))) AS DOUBLE) / COUNT(*) AS mu
-           FROM embeddings e
-           CROSS JOIN (SELECT UNNEST(range(1, 65)) AS i) u
-           GROUP BY 1),
-         mv AS (SELECT list(mu ORDER BY i) AS m FROM dm),
-         cent AS (
-           SELECT vec_id,
-             list_transform(list_zip(embedding, (SELECT m FROM mv)),
-               p -> CAST(CAST(p[1] AS DOUBLE) - p[2] AS REAL)) AS embedding
-           FROM embeddings),
-         ${queryCte("q", "cent")},
-         scored AS (
-           -- unlike the raw-fixture ss1 shape, CENTERING can produce an
-           -- exact-zero vector (an embedding equal to the mean), so the
-           -- Scala path's zero-denominator guard is replayed here
-           SELECT q.query_id, c.vec_id,
-             CASE WHEN
-               (sqrt(list_sum(list_transform(q.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) = 0
-             THEN 0.0 ELSE round(
-               list_sum(list_transform(list_zip(q.eq, c.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.eq, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             4) END AS cosine
-           FROM cent c, q WHERE c.vec_id <> q.query_id)
-         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("scored")}
-         ORDER BY query_id, rank""",
-    // dd13_gate: lexical near-dups must all surface in the semantic set
-    "dd13_gate" -> "SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    "dd13b_gate" -> "SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    // dd13c/dd13r: the ANN-assigned clustered form and the measured
-    // router both hold the identical lexical-recall contract
-    "dd13c_gate" -> "SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    "dd13r_gate" -> "SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    // ss9: ss1's cosine replay + label-mismatch filter + denoise cap +
-    // per-query rank — the full mined-negative set
-    "ss9_hard_negatives" ->
-      s"""WITH ${exactCosineCtes()},
-         neg AS (
-           SELECT s.query_id, s.vec_id, s.cosine FROM scored s
-           JOIN embeddings qe ON qe.vec_id = s.query_id
-           JOIN embeddings ce ON ce.vec_id = s.vec_id
-           WHERE ce.label <> qe.label AND s.cosine < 0.45)
-         SELECT query_id, neg_rank, vec_id, cosine FROM (
-           SELECT query_id, vec_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS neg_rank
-           FROM neg)
-         WHERE neg_rank <= 5 ORDER BY query_id, neg_rank""",
-    // qz5: ss1's cosine replay on the 32-dim list prefix
-    "qz5_matryoshka_topk" ->
-      s"""WITH $matryoshkaCte,
-         ${exactCosineCtes("m")}
-         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("scored")}
-         ORDER BY query_id, rank""",
-    // qz5_recall: truncated top-5 vs full-dim top-5, both re-derived —
-    // the qz3 recall-composition shape
-    "qz5_recall" ->
-      s"""WITH $matryoshkaCte,
-         ${exactCosineCtes("m")},
-         ${apCte("scored")},
-         $recallTail""",
-    // qz6: the sign packing replayed exactly — bit j of word w set iff
-    // embedding[w*32 + j + 1] >= 0 (POWER(2, j) is double-exact to 2^31);
-    // Hamming = popcount of per-word XOR. Integers end to end.
-    "qz6_sign_topk" ->
-      s"""WITH $signHammingCtes
-         SELECT query_id, vec_id, hamming, rank FROM ${hammingTopk(5, "rank")}
-         ORDER BY query_id, rank""",
-    // qz6b: the FULL two-stage replay — integer Hamming shortlist (<=100)
-    // then the exact cosine rerank on shortlist rows only
-    "qz6b_sign_rerank" ->
-      s"""WITH $signRerankCtes
-         SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("rr")}
-         ORDER BY query_id, rank""",
-    // qz6b_recall: two-stage top-5 vs the float exact top-5 — every stage
-    // of BOTH sides re-derived, so even the recall of a two-stage ANN is
-    // a hash-checked number here
-    "qz6b_recall" ->
-      s"""WITH $signRerankCtes,
-         ${apCte("rr")},
-         $recallTail""",
-    // qz6_recall: sign top-5 vs the float exact top-5, both re-derived
-    "qz6_recall" ->
-      s"""WITH $signHammingCtes,
-         ap AS (SELECT query_id, vec_id FROM ${hammingTopk(5, "rank")}),
-         $recallTail""",
-    // gr1: PageRank's three power iterations unrolled as CTEs — same 9dp
-    // grid, same decimal sums, same dangling/teleport arithmetic (all
-    // literals emitted from the Scala doubles), so the match is bit-exact.
-    "gr1_pagerank" -> gr1PagerankSql(3, 0.85),
-    // gr1b: the salted two-phase variant must produce bit-identical ranks,
-    // so it is held to gr1's oracle VERBATIM — any divergence introduced by
-    // the salt partials is a hash mismatch.
-    "gr1b_pagerank_salted" -> gr1PagerankSql(3, 0.85),
-    "gr2_degrees" ->
-      """WITH e AS (
-           SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         o AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS out_deg
-               FROM e GROUP BY 1),
-         i AS (SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS in_deg
-               FROM e GROUP BY 1)
-         SELECT COALESCE(o.node, i.node) AS node,
-           COALESCE(out_deg, CAST(0 AS BIGINT)) AS out_deg,
-           COALESCE(in_deg, CAST(0 AS BIGINT)) AS in_deg
-         FROM o FULL OUTER JOIN i ON o.node = i.node ORDER BY node""",
-    // ss4: TF-IDF cosine pairs. The idf is rounded to the 6dp grid before
-    // weighting (ta11 rule: 1-ulp ln differences cannot reach the result);
-    // dot products and norm-squares go through round-then-decimal-sum, so
-    // summation order cannot move the cosine in either engine.
-    "ss4_tfidf_pairs" ->
-      """WITH t AS (
-           SELECT doc_id,
-             UNNEST(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS tok
-           FROM documents WHERE doc_id < 200),
-         tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS DOUBLE) AS tf
-                FROM t GROUP BY 1, 2),
-         d AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
-         n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM tf),
-         w AS (
-           SELECT doc_id, tok, tf * round(ln(n_docs / df), 6) AS w
-           FROM tf JOIN d USING (tok), n
-           WHERE df <= 1.0 * n_docs),
-         nrm AS (
-           SELECT doc_id,
-             sqrt(CAST(SUM(CAST(round(w * w, 6) AS DECIMAL(38,10))) AS DOUBLE))
-               AS nrm
-           FROM w GROUP BY 1),
-         dot AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CAST(SUM(CAST(round(a.w * b.w, 6) AS DECIMAL(38,10))) AS DOUBLE)
-               AS dot
-           FROM w a JOIN w b USING (tok)
-           WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         cosed AS (
-           SELECT id_a, id_b,
-             round(CASE WHEN na.nrm * nb.nrm = 0 THEN 0.0
-               ELSE dot / (na.nrm * nb.nrm) END, 4) AS cosine
-           FROM dot JOIN nrm na ON dot.id_a = na.doc_id
-                    JOIN nrm nb ON dot.id_b = nb.doc_id)
-         SELECT id_a, id_b, cosine FROM cosed
-         WHERE cosine >= 0.8 ORDER BY id_a, id_b""",
-    // ss5: BM25 top-5 (bm25Ctes)
-    "ss5_bm25_topk" ->
-      s"""WITH ${bm25Ctes()}
-         SELECT query_id, doc_id, score, rank FROM (
-           SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY score DESC, doc_id ASC) AS INT) AS rank FROM scored)
-         WHERE rank <= 5 ORDER BY query_id, rank""",
-    // ss6: the ss1 (dense, k=10) and ss5 (BM25, k=10) oracles composed as
-    // CTEs, fused by RRF — one IEEE division per list (CAST AS DOUBLE:
-    // DuckDB would otherwise divide in DECIMAL) and one addition on a
-    // full-outer join, so exactness is inherited from the two inputs.
-    "ss6_hybrid_rrf" ->
-      s"""WITH ${bm25Ctes("bmscored")},
-         bm AS (
-           SELECT query_id, doc_id, rank FROM (
-             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY score DESC, doc_id ASC) AS rank FROM bmscored)
-           WHERE rank <= 10),
-         ${exactCosineCtes(scored = "dnscored")},
-         dn AS (
-           SELECT query_id, vec_id AS doc_id, rank FROM ${cosineTopk("dnscored", 10)}),
-         fused AS (
-           SELECT COALESCE(a.query_id, b.query_id) AS query_id,
-             COALESCE(a.doc_id, b.doc_id) AS doc_id,
-             CAST(COALESCE(a.rank, 0) AS INT) AS rank_a,
-             CAST(COALESCE(b.rank, 0) AS INT) AS rank_b,
-             round(COALESCE(CAST(1.0 AS DOUBLE) / (60 + a.rank), 0.0)
-                 + COALESCE(CAST(1.0 AS DOUBLE) / (60 + b.rank), 0.0), 9)
-               AS score
-           FROM dn a FULL OUTER JOIN bm b
-             ON a.query_id = b.query_id AND a.doc_id = b.doc_id)
-         SELECT query_id, doc_id, rank_a, rank_b, score,
-           CAST(rn AS INT) AS rank FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY score DESC, doc_id ASC) AS rn FROM fused)
-         WHERE rn <= 5 ORDER BY query_id, rank""",
-    "qz1_quantize" ->
-      s"""WITH $quantizeCte
-         SELECT vec_id, round(scale, 6) AS scale,
-           array_to_string(list_transform(qvec, x -> CAST(x AS VARCHAR)), ',')
-             AS qvec_csv,
-           round(list_max(list_transform(list_zip(qvec, embedding),
-             p -> abs(CAST(p[1] AS DOUBLE) * scale - CAST(p[2] AS DOUBLE)))), 6)
-             AS max_abs_err
-         FROM qz ORDER BY vec_id""",
-    "qz2_topk_quant" -> qz2TopkSql,
-    "cl2_containment" -> pairContainmentSql,
-    "dd6b_containment" -> pairContainmentSql,
-    "dd6c_containment" -> pairContainmentSql,
-    // cl4 removal precision: every removed doc has an exactly-verified
-    // near-dup partner (see cl4Containment scaladoc).
-    "cl4_containment" ->
-      """SELECT 1 AS has_removed, CAST(0 AS BIGINT) AS n_removed_unpaired""",
-    // Recall-floor gates (recallGate): pass/fail is deterministic (seeded
-    // approximate paths), so the driver hash-checks it even though the
-    // recall VALUE rides non-SQL models (planes / centroids / codebooks).
-    "ss2_gate" -> "SELECT 70 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    "ss3_gate" -> "SELECT 60 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    // ss7: the persisted IVF index serves bit-identical results to the
-    // freshly built one (floats round-trip parquet exactly)
-    "ss7_index_roundtrip" ->
-      "SELECT 1 AS has_rows, CAST(0 AS BIGINT) AS n_diff, 1 AS pass",
-    // ss7b: appended index ≡ one-shot index under the same frozen model
-    "ss7b_index_append" ->
-      "SELECT 1 AS has_rows, CAST(0 AS BIGINT) AS n_diff, 1 AS pass",
-    "qz4_gate" -> "SELECT 70 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    "ss8_gate" -> "SELECT 65 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    "dd6b_gate" -> "SELECT 95 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    "dd6c_gate" -> "SELECT 95 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    "cl3_gate" -> "SELECT 90 AS floor_x100, 1 AS has_rows, 1 AS pass",
-    // cl1 partition invariant: 8 non-empty cells covering every vector
-    "cl1_gate" -> "SELECT 8 AS n_cells, 1 AS coverage_ok",
-    "ta13_gopher" -> gopherSql,
-    "ta14_url_filter" -> urlFilterSql,
-    "bt1_bpe_train" -> bpeTrainSql(8),
-    // bt1b: re-learn from the SAME keyed-hash half-sample (selection
-    // predicate = the sp2/mx1 md5-unit draw, seed "bpe")
-    "bt1b_bpe_train_sampled" -> bpeTrainSql(8,
-      corpus = s"(SELECT * FROM documents WHERE ${md5UnitSql("bpe")} < 0.5)"),
-    "bt2_bpe_encode" -> bpeEncodeSql(8),
-    "bt3_bpe_vocab" -> bpeVocabSql(8),
-    "dd10_paragraph_dedup" ->
-      s"""WITH $plantedBoilerCte,
-         p AS (
-           SELECT doc_id, ps[k] AS para, k AS pos
-           FROM (SELECT doc_id, string_split(t, chr(10)) AS ps FROM planted),
-             LATERAL UNNEST(generate_series(1, len(ps))) AS u(k)),
-         hot AS (
-           SELECT md5(para) AS ph FROM p GROUP BY 1 HAVING COUNT(*) >= 10),
-         kept AS (
-           SELECT doc_id, para, pos FROM p
-           WHERE md5(para) NOT IN (SELECT ph FROM hot)),
-         agg AS (
-           SELECT doc_id, string_agg(para, chr(10) ORDER BY pos) AS clean_text,
-             CAST(COUNT(*) AS BIGINT) AS n_kept
-           FROM kept GROUP BY doc_id),
-         tot AS (
-           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_paras
-           FROM p GROUP BY doc_id)
-         SELECT t.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-           t.n_paras, t.n_paras - COALESCE(a.n_kept, 0) AS n_removed
-         FROM tot t LEFT JOIN agg a USING (doc_id)
-         ORDER BY t.doc_id""",
-    "mx2_temperature" ->
-      s"""WITH d AS (SELECT doc_id, $domainSql AS domain FROM documents),
-         c AS (
-           SELECT domain, COUNT(*) AS nd FROM d GROUP BY domain),
-         t AS (
-           SELECT CAST(SUM(nd) AS DOUBLE) AS ntot,
-             CAST(SUM(CAST(round(pow(CAST(nd AS DOUBLE), 0.5), 9)
-               AS DECIMAL(38,10))) AS DOUBLE) AS z
-           FROM c),
-         r AS (
-           SELECT domain,
-             least(1.0, round(pow(CAST(nd AS DOUBLE), 0.5), 9) / z
-               * (0.5 * ntot) / CAST(nd AS DOUBLE)) AS rate
-           FROM c, t)
-         SELECT d.doc_id, d.domain, round(r.rate, 4) AS keep_rate
-         FROM d JOIN r USING (domain)
-         WHERE ${md5UnitSql("temp", "d.doc_id")} < r.rate
-         ORDER BY d.doc_id""",
-    // mx3: the whole waterfall replayed — sorted-cap window with decimal
-    // prefix sums, water level = share at the FIRST uncapped index
-    // (arg-min by i, not min over shares), then mx1's floor+fraction
-    // keyed-hash copies. Same derived skewed domain as mx2.
-    "mx3_unimax" ->
-      s"""WITH d AS (SELECT doc_id, $domainSql AS domain FROM documents),
-         c AS (
-           SELECT domain, COUNT(*) AS nd,
-             round(CAST(COUNT(*) AS DOUBLE) * 2.0, 9) AS cap
-           FROM d GROUP BY domain),
-         t AS (SELECT CAST(COUNT(*) AS BIGINT) AS ndom FROM c),
-         ranked AS (
-           SELECT domain, nd, cap,
-             ROW_NUMBER() OVER (ORDER BY cap, domain NULLS FIRST) AS i,
-             COALESCE(SUM(CAST(cap AS DECIMAL(38,10))) OVER (
-               ORDER BY cap, domain NULLS FIRST
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               CAST(0 AS DECIMAL(38,10))) AS cumprev
-           FROM c),
-         shares AS (
-           SELECT domain, nd, cap, i,
-             (400.0 - CAST(cumprev AS DOUBLE)) /
-               CAST(t.ndom - i + 1 AS DOUBLE) AS share
-           FROM ranked, t),
-         sstar AS (
-           SELECT share AS s FROM shares WHERE cap >= share
-           ORDER BY i LIMIT 1),
-         r AS (
-           SELECT domain,
-             least(cap, COALESCE((SELECT s FROM sstar), cap))
-               / CAST(nd AS DOUBLE) AS w
-           FROM shares),
-         base AS (
-           SELECT d.doc_id, d.domain, r.w,
-             ${md5UnitSql("unimax", "d.doc_id")} AS u
-           FROM d JOIN r USING (domain)),
-         cp AS (
-           SELECT doc_id, domain, w,
-             CAST(floor(w) + CASE WHEN u < w - floor(w) THEN 1 ELSE 0 END AS INT) AS n
-           FROM base)
-         SELECT doc_id, domain, CAST(g.k AS INT) AS copy,
-           round(w, 6) AS target_epochs
-         FROM cp, LATERAL UNNEST(generate_series(1, n)) AS g(k)
-         ORDER BY doc_id, copy""",
-    "qz3_recall" ->
-      s"""WITH $quantizeCte,
-         $quantScoredCte,
-         ${apCte("qscored")},
-         $recallTail""",
-    "pipe_curation" -> curationSql,
-    // the LSH-prefiltered chain must curate identically here (banding
-    // recall 1.0 on this corpus) — same oracle verbatim
-    "pipe_curation_lsh" -> curationSql,
-    "pipe_curation_incr" -> curationIncrSql,
-    // the shingle-hash-LSH incremental form must curate identically
-    // (8x2 banding recall 1.0 on this corpus) — same oracles verbatim
-    "pipe_curation_incr_lsh" -> curationIncrSql,
-    "pipe_curation_snap" -> curationIncrSqlWith(
-      "doc_id * 2 > (SELECT MAX(doc_id) FROM documents)",
-      "doc_id * 2 <= (SELECT MAX(doc_id) FROM documents)"),
-    "pipe_curation_snap_lsh" -> curationIncrSqlWith(
-      "doc_id * 2 > (SELECT MAX(doc_id) FROM documents)",
-      "doc_id * 2 <= (SELECT MAX(doc_id) FROM documents)"),
-    "pipe_curation_funnel" -> curationFunnelSql,
-    // pipe_prep: normalize -> decontaminate -> split, each stage the
-    // standalone oracle's form, chained (normalized text feeds the shingles)
-    "pipe_prep" ->
-      s"""WITH norm AS (SELECT doc_id, $normalizeTextSql AS text FROM documents),
-         ${benchShingleCtes("norm")},
-         $flaggedCte,
-         clean AS (
-           SELECT doc_id FROM norm
-           WHERE doc_id % 10 <> 0 AND doc_id NOT IN (SELECT doc_id FROM flagged)),
-         u AS (SELECT doc_id, ${md5UnitSql("split")} AS u FROM clean)
-         SELECT doc_id, $splitCaseSql AS split
-         FROM u ORDER BY doc_id""",
-    "stream_curation" -> streamCurationSql,
-    // stream_ccingest: template → extraction (the shared ta19 CTEs) →
-    // gate → one survivor per distinct gated prefix fingerprint
-    "stream_ccingest" ->
-      s"""WITH ${htmlExtractCtes()},
-         xdocs AS (SELECT doc_id, t AS text FROM xs4),
-         ${gateCtes("xdocs")}
-         SELECT CAST(COUNT(DISTINCT md5(substr(text, 1, 100))) AS BIGINT)
-           AS n_curated
-         FROM cgated""",
-    "pipe_training_mix" -> trainingMixSql,
-    "pipe_ccnet" -> ccnetSql,
-    // dd11: cut after token i iff md5-grid hit on gram (i, i+1)
-    "dd11_cdc_chunks" ->
-      s"""WITH $cdcChunkCtes
-         SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-           CAST(CASE WHEN length(chunk) = 0 THEN 0
-             ELSE len(string_split(chunk, ' ')) END AS BIGINT) AS n_toks,
-           md5(chunk) AS chunk_md5
-         FROM x ORDER BY doc_id, chunk_idx""",
-    // dd11b: dd11's chunk derivation -> per-doc distinct chunk weights ->
-    // boilerplate cap -> shared-mass containment pairs -> component
-    // closure -> min-id survivors
-    "dd11b_cdc_dedup_corpus" ->
-      s"""WITH RECURSIVE $cdcChunkCtes,
-         xt AS (
-           SELECT doc_id, md5(chunk) AS h,
-             CASE WHEN length(chunk) = 0 THEN 0
-               ELSE len(string_split(chunk, ' ')) END AS nt
-           FROM x),
-         ch AS (
-           SELECT doc_id, h, MAX(nt) AS w FROM xt WHERE nt >= 4 GROUP BY 1, 2),
-         tot AS (SELECT doc_id, SUM(w) AS tot FROM ch GROUP BY 1),
-         hot AS (SELECT h FROM ch GROUP BY h HAVING COUNT(*) > 256),
-         pr AS (
-           SELECT ch.doc_id, ch.h, ch.w, tot.tot
-           FROM ch JOIN tot USING (doc_id)
-           WHERE ch.h NOT IN (SELECT h FROM hot)),
-         pairs AS (
-           SELECT doc_a, doc_b FROM (
-             SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               round(SUM(a.w) * 1.0 / LEAST(a.tot, b.tot), 4) AS containment
-             FROM pr a JOIN pr b ON a.h = b.h AND a.doc_id < b.doc_id
-             GROUP BY a.doc_id, a.tot, b.doc_id, b.tot)
-           WHERE containment >= 0.5),
-         edges AS (
-           SELECT doc_a AS a, doc_b AS b FROM pairs
-           UNION SELECT doc_b, doc_a FROM pairs),
-         reach AS (
-           SELECT DISTINCT a AS src, a AS dst FROM edges
-           UNION
-           SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
-         comp AS (SELECT src AS doc_id, MIN(dst) AS component
-           FROM reach GROUP BY src)
-         SELECT dd.doc_id, CAST(length(dd.text) AS INT) AS n_chars
-         FROM documents dd LEFT JOIN comp ON dd.doc_id = comp.doc_id
-         WHERE comp.component IS NULL OR comp.component = dd.doc_id
-         ORDER BY dd.doc_id""",
-    // s9: shard = rank-over-md5-order div 64; id_sum pins membership
-    "s9_sharded_export" ->
-      """WITH r AS (
-           SELECT doc_id,
-             ROW_NUMBER() OVER (
-               ORDER BY md5('shard:' || CAST(doc_id AS VARCHAR)), doc_id) - 1
-               AS pos
-           FROM documents)
-         SELECT CAST(pos // 64 AS BIGINT) AS shard,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(doc_id) AS BIGINT) AS id_sum
-         FROM r GROUP BY 1 ORDER BY 1""",
-    // s10: per-(domain, split) membership through the partitioned
-    // write→read-back roundtrip — domain and split re-derived exactly
-    "s10_partitioned_export" ->
-      s"""WITH d AS (
-           SELECT doc_id, $domainSql AS domain,
-             ${md5UnitSql("split")} AS u
-           FROM documents)
-         SELECT domain, $splitCaseSql AS split,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(doc_id) AS BIGINT) AS id_sum
-         FROM d GROUP BY 1, 2 ORDER BY 1, 2""",
-    // s12: the manifest aggregates replayed — count + bit_xor of the
-    // md5-prefix-long key fingerprint (order/partitioning-independent);
-    // manifest_ok = 1 is meaningful because readPublished THROWS on any
-    // data/manifest mismatch before this row can exist
-    "s12_manifest_publish" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           bit_xor(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-             AS BIGINT)) AS key_xor,
-           1 AS manifest_ok
-         FROM documents""",
-    // s11: record framing + byte offsets replayed in SQL (strlen = UTF-8
-    // octets = Spark's octet_length); the injected fake record is part of
-    // the expected payload — length-driven parsing returns it intact
-    "s11_warc_roundtrip" -> {
-      val crlf = "chr(13) || chr(10)"
-      val inj = s"$crlf || $crlf || 'WARC/1.0' || $crlf || " +
-        s"'WARC-Record-ID: 999999' || $crlf || 'Content-Length: 0' || " +
-        s"$crlf || $crlf || $crlf || $crlf"
-      s"""WITH d AS (
-           SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard,
-             CASE WHEN doc_id % 7 = 0 THEN coalesce(text, '') || $inj
-                  ELSE coalesce(text, '') END AS payload
-           FROM documents),
-         r AS (
-           SELECT doc_id, shard, payload,
-             'WARC/1.0' || $crlf ||
-             'WARC-Record-ID: ' || CAST(doc_id AS VARCHAR) || $crlf ||
-             'Content-Length: ' || CAST(strlen(payload) AS VARCHAR) ||
-             $crlf || $crlf || payload || $crlf || $crlf AS rec
-           FROM d)
-         SELECT shard,
-           CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY doc_id) - 1
-             AS BIGINT) AS rec_idx,
-           CAST(COALESCE(SUM(strlen(rec)) OVER (PARTITION BY shard
-             ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND
-             1 PRECEDING), 0) AS BIGINT) AS byte_offset,
-           doc_id, payload AS text
-         FROM r ORDER BY shard, rec_idx"""
-    },
-    // stream_dedup: first-arrival-wins over one replay == distinct prefix
-    // fingerprints (the dd1b derivation)
-    "stream_dedup" ->
-      """SELECT CAST(COUNT(DISTINCT md5(substr(text, 1, 100))) AS BIGINT)
-           AS n_unique FROM documents""",
-    // stream_decontam: the dc2 composition as a survivor count
-    "stream_decontam" ->
-      s"""WITH ${benchShingleCtes()},
-         $flaggedCte
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_clean FROM documents
-         WHERE doc_id % 10 <> 0
-           AND doc_id NOT IN (SELECT doc_id FROM flagged)""",
-    "ta1_quality" -> qualitySql,
-    "ta2_lang_id" -> langIdSql,
-    "ta3_token_stats" ->
-      s"""SELECT doc_id, ${tok("text")} AS ws_tokens,
-         len(regexp_extract_all(text, '[\\p{L}]+')) AS alpha_runs,
-         len(regexp_extract_all(text, '[0-9]+')) AS digit_runs,
-         len(regexp_extract_all(text, '[[:punct:]]')) AS punct_marks,
-         len(regexp_extract_all(text, '[\\p{L}]+')) + len(regexp_extract_all(text, '[0-9]+'))
-           + len(regexp_extract_all(text, '[[:punct:]]')) AS bpe_estimate
-         FROM documents ORDER BY doc_id""",
-    "ev1_event_window" ->
-      s"""SELECT date_trunc('hour', ts) AS hour, event_type, COUNT(*) AS n,
-         round(${exactSumSql("value")}, 4) AS total_value
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "aj1_asof_join" -> aj1AsofSql,
-    "aj1b_asof_salted" -> aj1AsofSql,
-    // aj2: the grid binning must be invisible — plain inequality join
-    "aj2_interval_join" ->
-      """WITH p AS (
-           SELECT event_id, user_id, epoch_us(ts) AS ts_us
-           FROM events WHERE event_type = 'purchase'),
-         s AS (
-           SELECT event_id AS window_id, user_id, epoch_us(ts) AS w_start,
-             epoch_us(ts) + 1800000000 AS w_end
-           FROM events WHERE event_type = 'signup')
-         SELECT p.event_id, p.user_id, p.ts_us, s.window_id, s.w_start
-         FROM p JOIN s ON p.user_id = s.user_id
-           AND p.ts_us BETWEEN s.w_start AND s.w_end
-         ORDER BY p.event_id, s.window_id""",
-    // ev10: distinct (user, day) activity, min-day cohorts, count per
-    // (cohort, age) — activity rows are distinct and a user has one
-    // cohort, so COUNT(*) is the distinct-user count
-    "ev10_retention" ->
-      """WITH act AS (
-           SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS period
-           FROM events WHERE ts IS NOT NULL),
-         frst AS (SELECT user_id, MIN(period) AS cohort FROM act GROUP BY 1),
-         sizes AS (
-           SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_cohort
-           FROM frst GROUP BY 1),
-         aa AS (
-           SELECT f.cohort, a.period - f.cohort AS age,
-             CAST(COUNT(*) AS BIGINT) AS n_active
-           FROM act a JOIN frst f USING (user_id) GROUP BY 1, 2)
-         SELECT cohort, age, n_active, n_cohort,
-           round(n_active * 1.0 / n_cohort, 4) AS retention
-         FROM aa JOIN sizes USING (cohort) ORDER BY cohort, age""",
-    // ev9: cascaded min-joins — strict step ordering (>), inclusive
-    // horizon (<=), prefix property by construction. stream_funnel (the
-    // O(steps)-state live form) is held to this SAME SQL verbatim.
-    "ev9_funnel" -> ev9FunnelSql,
-    "stream_funnel" -> ev9FunnelSql,
-    "ev2_sessionize" -> ev2SessionizeSql,
-    "ev2b_sessionize_salted" -> ev2SessionizeSql,
-    "ev3_sessionize_state" -> ev2SessionizeSql,
-    "ev7_session_window" -> ev7SessionWindowSql,
-    "ev7b_session_window_salted" -> ev7SessionWindowSql,
-    "ev7c_session_window_routed" -> ev7SessionWindowSql,
-    // ev5: ev2's session-assignment CTE + per-session grouping — the
-    // composed chain (assignment feeding aggregates) is what hashes
-    "ev5_session_stats" ->
-      s"""WITH e AS (
-           SELECT user_id, event_id, ts, event_type, value, $sessionPrevSql
-           FROM events),
-         s AS (
-           SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, value,
-             CAST($sessionIdSql AS BIGINT) AS session_id
-           FROM e)
-         SELECT user_id, session_id,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           MIN(ts_us) AS start_us,
-           MAX(ts_us) - MIN(ts_us) AS span_us,
-           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchases,
-           round(${exactSumSql("CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END")}, 4) AS purchase_value
-         FROM s GROUP BY 1, 2 ORDER BY 1, 2""",
-    "ev4_stream_window" ->
-      s"""SELECT date_trunc('hour', ts) AS window_start, event_type, COUNT(*) AS n,
-         round(${exactSumSql("value")}, 4) AS total_value
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    // ev6: the stream-stream join's output set == the batch equi+range
-    // join (watermarks only bound state, never drop in-window rows here:
-    // the whole replay fits one micro-batch per side)
-    "ev6_stream_join" ->
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
-           p.user_id AS user_id,
-           epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-         FROM events p JOIN events c ON p.user_id = c.user_id
-         WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-           AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
-         ORDER BY purchase_id, click_id""",
-    "ev8_attribution_outer" -> ev8AttributionSql,
-    "ev8b_attribution_binned" -> ev8AttributionSql,
-    "mm2_decode_meta" ->
-      """SELECT doc_id,
-         ['jpeg','png','wav','mp4'][(CAST(('0x' || substr(md5(text), 1, 2)) AS INT) % 4) + 1] AS format,
-         16 + CAST(('0x' || substr(md5(text), 3, 4)) AS INT) % 1904 AS width,
-         16 + CAST(('0x' || substr(md5(text), 7, 4)) AS INT) % 1064 AS height,
-         1 + CAST(('0x' || substr(md5(text), 11, 2)) AS INT) % 120 AS n_frames,
-         octet_length(encode(text)) AS n_bytes
-         FROM documents ORDER BY doc_id""",
-    "s2_paired_scan" ->
-      """SELECT d.doc_id, d.n_chars, e.label FROM documents d
-         JOIN embeddings e ON d.doc_id = e.vec_id ORDER BY d.doc_id""",
-    "s6_incremental" ->
-      """SELECT doc_id FROM documents
-         WHERE NOT EXISTS (SELECT 1 FROM embeddings
-                           WHERE vec_id = doc_id AND vec_id % 3 != 0)
-         ORDER BY doc_id""",
-    "s3_tree_ingest" -> OracleSqlGen.s3TreeIngestSql,
-    "s7_health" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_text,
-         CAST(SUM(CASE WHEN text IS NOT NULL AND trim(text) = '' THEN 1 ELSE 0 END) AS BIGINT) AS n_empty_text,
-         CAST(COUNT(doc_id) - COUNT(DISTINCT doc_id) AS BIGINT) AS n_dup_ids,
-         MIN(doc_id) AS min_doc_id, MAX(doc_id) AS max_doc_id
-         FROM documents""",
-    "mm1_binary_meta" ->
-      """SELECT doc_id, octet_length(encode(text)) AS n_bytes, md5(text) AS payload_md5,
-         CAST(('0x' || substr(md5(text), 1, 4)) AS BIGINT) % 1920 AS width,
-         CAST(('0x' || substr(md5(text), 5, 4)) AS BIGINT) % 1080 AS height
-         FROM documents ORDER BY doc_id""",
-    "mm4_feature_norm" -> {
-      // f_i = byte_i / 256 (exact in binary fp); norm accumulates
-      // left-to-right like the VecNorm loop
-      val fs = (0 until 8).map { i =>
-        s"(CAST(('0x' || substr(md5(text), ${2 * i + 1}, 2)) AS INT) / 256.0)"
-      }
-      val sumSq = fs.map(f => s"$f * $f").mkString(" + ")
-      s"""SELECT doc_id, 8 AS dim, round(sqrt($sumSq), 4) AS feat_norm
-         FROM documents ORDER BY doc_id"""
-    },
-    // Exact greedy packing IS SQL-expressible via a recursive CTE: the
-    // running total resets at each bin boundary, which the recursion walks
-    // item-by-item per doc (depth = max chunks per doc, ~7 for lineitem).
-    "g3_binpack_greedy" ->
-      """WITH RECURSIVE seq AS (
-           SELECT l_orderkey AS doc_id, l_linenumber AS chunk_idx,
-             CAST(floor(l_quantity) AS BIGINT) AS w,
-             ROW_NUMBER() OVER (PARTITION BY l_orderkey
-               ORDER BY l_linenumber, CAST(floor(l_quantity) AS BIGINT)) AS rn
-           FROM lineitem),
-         rec AS (
-           SELECT doc_id, rn, chunk_idx, w, 0 AS bin, w AS cur
-           FROM seq WHERE rn = 1
-           UNION ALL
-           SELECT s.doc_id, s.rn, s.chunk_idx, s.w,
-             CASE WHEN r.cur + s.w > 50 THEN r.bin + 1 ELSE r.bin END,
-             CASE WHEN r.cur + s.w > 50 THEN s.w ELSE r.cur + s.w END
-           FROM rec r JOIN seq s ON s.doc_id = r.doc_id AND s.rn = r.rn + 1)
-         SELECT doc_id, chunk_idx, bin FROM rec ORDER BY doc_id, chunk_idx""")
+         ORDER BY d.doc_id""")),
+    // The strategy pipelines + the Q2-fed eval family, end to end, as
+    // generated chained-CTE oracles (see OracleSqlGen): chunking, every
+    // extractive-summarizer call, the unrolled 10-round collapse loop, the
+    // critique cascade, the iterative fold, ROUGE-1/2/L, the md5-TF-count
+    // cosine and the judge rubric are all replicated bit-exactly in DuckDB.
+    "pipe_mapreduce" -> Entry(Pipelines.mapReduce(_, _),
+      Some(OracleSqlGen.pipeMapReduceSql)),
+    "pipe_critique" -> Entry(Pipelines.critique(_, _),
+      Some(OracleSqlGen.pipeCritiqueSql)),
+    "pipe_iterative" -> Entry(Pipelines.iterative(_, _),
+      Some(OracleSqlGen.pipeIterativeSql())),
+    "pipe_hierarchical" -> Entry(Pipelines.hierarchical(_, _),
+      Some(OracleSqlGen.pipeHierarchicalSql)),
+    "eval_pair_metrics" -> Entry(Pipelines.pairMetrics(_, _),
+      Some(OracleSqlGen.evalPairMetricsSql)),
+    "eval_summary_stats" -> Entry(Pipelines.evalStats(_, _),
+      Some(OracleSqlGen.evalSummaryStatsSql)),
+    "eval_judge_scores" -> Entry(Pipelines.judgeScores(_, _),
+      Some(OracleSqlGen.evalJudgeScoresSql)),
+    "eval_judge_stats" -> Entry(Pipelines.judgeStats(_, _),
+      Some(OracleSqlGen.evalJudgeStatsSql)),
+    "eval_bertscore" -> Entry(Pipelines.bertScores(_, _)))
 
-  /** Shared int8-quantization CTE mirroring [[graft.operators.Quantize]]:
-    * scale = max|x|/127 per vector, q = clamp(round(x/scale), ±127). All
-    * double arithmetic — bit-identical to the Spark Column expressions.
+  // -------------------------------------------------------------- registry
+
+  /** One registered query: its builder and, when its semantics are
+    * ANSI-SQL-expressible, the DuckDB SQL that must reproduce its output
+    * (column names and value rounding kept bit-compatible with the Spark
+    * plan).
     */
-  private val quantizeCte =
-    """qs0 AS (
-         SELECT vec_id, embedding,
-           list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0
-             AS scale
-         FROM embeddings),
-       qz AS (
-         SELECT vec_id, embedding, scale,
-           CASE WHEN scale > 0 THEN
-             list_transform(embedding, x ->
-               CAST(greatest(least(round(CAST(x AS DOUBLE) / scale), 127.0), -127.0)
-                 AS TINYINT))
-           ELSE list_transform(embedding, x -> CAST(0 AS TINYINT)) END AS qvec
-         FROM qs0)"""
+  final case class Entry(build: (SparkSession, String) => DataFrame,
+      oracle: Option[String] = None)
 
-  /** Quantized-search scoring CTE (needs [[quantizeCte]]): scales cancel
-    * out of the cosine, so score = int dot / sqrt(int norm product).
+  /** Every registered query, section by section; a repeated name fails
+    * here instead of silently replacing an entry. Lazy: a strict val would
+    * be built during object initialization and read every val declared
+    * after it (the SQL fragments) as null.
     */
-  private val quantScoredCte =
-    """qn AS (
-         SELECT vec_id, qvec,
-           list_sum(list_transform(qvec, x -> CAST(x AS BIGINT) * CAST(x AS BIGINT)))
-             AS inorm
-         FROM qz),
-       qnq AS (
-         SELECT vec_id AS query_id, qvec AS q_q, inorm AS in_q
-         FROM qn WHERE vec_id < 5 AND inorm > 0),
-       qscored AS (
-         SELECT qnq.query_id, c.vec_id,
-           round(list_sum(list_transform(list_zip(qnq.q_q, c.qvec),
-             p -> CAST(p[1] AS BIGINT) * CAST(p[2] AS BIGINT)))
-             / sqrt(CAST(qnq.in_q AS DOUBLE) * CAST(c.inorm AS DOUBLE)), 4) AS cosine
-         FROM qn c, qnq WHERE c.vec_id <> qnq.query_id AND c.inorm > 0)"""
-
-  private def qz2TopkSql: String =
-    s"""WITH $quantizeCte,
-       $quantScoredCte
-       SELECT query_id, vec_id, cosine, rank FROM ${cosineTopk("qscored")}
-       ORDER BY query_id, rank"""
-
-  /** Minhash mins (md5-derived so bit-identical to the Spark UDF): h_i =
-    * min over a doc's distinct 3-gram shingles `sh` of (first 15 md5 hex
-    * chars of "s<i>:<shingle>" as int).
-    */
-  private def minhashMinsN(numHashes: Int): String = (0 until numHashes).map { i =>
-    s"MIN(CAST(('0x' || substr(md5('s$i:' || shingle), 1, 15)) AS BIGINT)) AS mh_$i"
-  }.mkString(", ")
-
-  private def minhashSigSql: String =
-    s"WITH ${wordShingleCtes(3, "shingle")} SELECT doc_id, ${minhashMinsN(8)} FROM sh GROUP BY doc_id ORDER BY doc_id"
-
-  /** `Dedup.minhashLshPairs`' banding at `nBands` x `rowsPerBand`: `sig`
-    * = the minhash mins per doc over `sh`, `bands` (doc_id, band,
-    * band_key) with band b's key = md5 of its rows' '_'-joined mins.
-    */
-  private def minhashBandCtes(nBands: Int, rowsPerBand: Int): String =
-    s"""sig AS (SELECT doc_id, ${minhashMinsN(nBands * rowsPerBand)} FROM sh GROUP BY doc_id),
-       bands AS (
-         SELECT doc_id, band, ${bandKeySql(nBands, rowsPerBand)} AS band_key
-         FROM sig, (VALUES ${bandValsSql(nBands)}) AS b(band))"""
-
-  private def bandKeySql(nBands: Int, rowsPerBand: Int): String =
-    (0 until nBands).map { b =>
-      val parts = (0 until rowsPerBand)
-        .map(r => s"CAST(mh_${rowsPerBand * b + r} AS VARCHAR)")
-        .mkString(" || '_' || ")
-      s"WHEN ${b} THEN md5($parts)"
-    }.mkString("CASE band ", " ", " END")
-
-  private def bandValsSql(nBands: Int): String =
-    (0 until nBands).map(b => s"($b)").mkString(",")
-
-  /** dd3 oracle: band the signature exactly like `Dedup.minhashLshPairs`
-    * (band b = md5 of '_'-joined (mh_{2b}, mh_{2b+1})), self-join on
-    * (band, band_key), distinct ordered pairs.
-    */
-  private def minhashLshSql: String =
-    s"""WITH ${wordShingleCtes(3, "shingle")},
-       ${minhashBandCtes(4, 2)}
-       SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       FROM bands x JOIN bands y USING (band, band_key)
-       WHERE x.doc_id < y.doc_id
-       ORDER BY doc_a, doc_b"""
-
-  /** dd14/stream_neardup oracle: the shingle/minhash/band replay at the
-    * sharp 6x4 geometry, then the greedy keeper rule — a doc survives iff
-    * it is the MIN doc_id of every (band, band_key) bucket it occupies.
-    * Docs with no signature are always kept: the `trim(text) <> ''` guard
-    * both mirrors the Spark side's null-signature ban from banding and
-    * keeps DuckDB's ['']-token rows (its split of an empty string) out of
-    * the band space.
-    */
-  private def lshGreedyDedupSql(nBands: Int = 6, rowsPerBand: Int = 4): String =
-    s"""WITH ${wordShingleCtes(3, "shingle")},
-       sig AS (SELECT doc_id, ${minhashMinsN(nBands * rowsPerBand)} FROM sh GROUP BY doc_id),
-       bands AS (
-         SELECT s.doc_id, band, ${bandKeySql(nBands, rowsPerBand)} AS band_key
-         FROM sig s JOIN documents d USING (doc_id),
-           (VALUES ${bandValsSql(nBands)}) AS b(band)
-         WHERE trim(coalesce(d.text, '')) <> ''),
-       dropped AS (
-         SELECT DISTINCT b.doc_id
-         FROM bands b JOIN (
-           SELECT band, band_key, MIN(doc_id) AS keeper
-           FROM bands GROUP BY 1, 2) m USING (band, band_key)
-         WHERE b.doc_id <> m.keeper)
-       SELECT d.doc_id FROM documents d
-       LEFT JOIN dropped x USING (doc_id)
-       WHERE x.doc_id IS NULL
-       ORDER BY d.doc_id"""
-
-  /** dd4b/dd4c oracle: dd3's minhash/band replay produces the candidate
-    * set; dd4's intersection/size arithmetic is evaluated on candidate
-    * pairs only. Both stages reuse SQL proven on their standalone queries.
-    * Parameterized on the banding geometry so the sharp (6 bands x 4 rows)
-    * 100 TB operating point (SCALE.md §scale-probe-100x) is hash-checked
-    * with the same generator as the (4 x 2) small-SF anchor.
-    */
-  private def jaccardLshVerifiedSql(nBands: Int = 4, rowsPerBand: Int = 2): String =
-    s"""WITH ${wordShingleCtes(3, "shingle")},
-       ${minhashBandCtes(nBands, rowsPerBand)},
-       cand AS (
-         SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         FROM bands x JOIN bands y USING (band, band_key)
-         WHERE x.doc_id < y.doc_id),
-       sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-       inter AS (
-         SELECT c.doc_a, c.doc_b, COUNT(*) AS cnt
-         FROM cand c
-         JOIN sh x ON x.doc_id = c.doc_a
-         JOIN sh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
-         GROUP BY 1, 2)
-       SELECT doc_a, doc_b, jaccard FROM (
-         SELECT doc_a, doc_b,
-           round(cnt * 1.0 / (sa.n + sb.n - cnt), 4) AS jaccard
-         FROM inter JOIN sizes sa ON doc_a = sa.doc_id
-                    JOIN sizes sb ON doc_b = sb.doc_id)
-       WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b"""
-
-  /** dd3b oracle: same shingle/minhash/band replay as dd3 but over the
-    * boilerplate-skewed corpus, with the hot-bucket cap mirrored as a
-    * HAVING on bucket size — DuckDB independently decides which buckets
-    * are hot and which pairs the cap drops, so the cap semantics are
-    * hash-checked end to end.
-    */
-  private def minhashLshCappedSql(cap: Int): String =
-    s"""WITH sdocs AS (
-         SELECT doc_id,
-           CASE WHEN doc_id % 10 = 0 THEN '$BoilerText' ELSE text END AS text
-         FROM documents),
-       ${wordShingleCtes(3, "shingle", "sdocs")},
-       ${minhashBandCtes(4, 2)},
-       ok AS (
-         SELECT band, band_key FROM bands GROUP BY 1, 2
-         HAVING COUNT(*) > 1 AND COUNT(*) <= $cap)
-       SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       FROM bands x JOIN bands y USING (band, band_key)
-       JOIN ok USING (band, band_key)
-       WHERE x.doc_id < y.doc_id
-       ORDER BY doc_a, doc_b"""
-
-  /** pipe_curation oracle: the gate expressions are the ta1/ta2 oracle
-    * bodies as CTEs, the dedup stages are the dd1b keeper / dd7 closure
-    * shapes over the GATED relation — every stage reuses SQL already
-    * proven on its standalone query.
-    */
-  /** The curation gate stage (language + quality predicates) as shared
-    * CTEs — the single definition behind both the batch `pipe_curation`
-    * oracle and the `stream_curation` count oracle, mirroring how
-    * `Curation.gate` is the single Scala definition behind both paths.
-    */
-  /** ev9's cascaded min-join funnel oracle — strict step ordering (>),
-    * inclusive horizon (<=), null timestamps dropped, prefix property by
-    * construction. Shared VERBATIM by ev9_funnel (batch) and
-    * stream_funnel (the O(steps)-state live form).
-    */
-  private val ev9FunnelSql: String =
-    """WITH s1 AS (
-         SELECT user_id, MIN(epoch_us(ts)) AS t1
-         FROM events WHERE event_type = 'view' AND ts IS NOT NULL
-         GROUP BY 1),
-       s2 AS (
-         SELECT e.user_id, MIN(epoch_us(e.ts)) AS t2
-         FROM events e JOIN s1 ON e.user_id = s1.user_id
-         WHERE e.event_type = 'click' AND e.ts IS NOT NULL
-           AND epoch_us(e.ts) > s1.t1
-           AND epoch_us(e.ts) <= s1.t1 + 3600000000
-         GROUP BY 1),
-       s3 AS (
-         SELECT e.user_id, MIN(epoch_us(e.ts)) AS t3
-         FROM events e JOIN s1 ON e.user_id = s1.user_id
-           JOIN s2 ON e.user_id = s2.user_id
-         WHERE e.event_type = 'purchase' AND e.ts IS NOT NULL
-           AND epoch_us(e.ts) > s2.t2
-           AND epoch_us(e.ts) <= s1.t1 + 3600000000
-         GROUP BY 1)
-       SELECT s1.user_id, s1.t1, s2.t2, s3.t3,
-         CAST(1 + CASE WHEN s2.t2 IS NULL THEN 0 ELSE 1 END
-                + CASE WHEN s3.t3 IS NULL THEN 0 ELSE 1 END AS INT)
-           AS steps_completed
-       FROM s1
-       LEFT JOIN s2 ON s1.user_id = s2.user_id
-       LEFT JOIN s3 ON s1.user_id = s3.user_id
-       ORDER BY s1.user_id"""
-
-  /** The lineitem columns the stats oracles profile. */
-  private val StatsCols =
-    Seq("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag", "l_shipdate")
-
-  /** The per-column stats rows of ANALYZE over `rel`: row and null
-    * counts, min/max rendered as VARCHAR in both engines, then the
-    * `ndv(column)` column(s); one row per column, ordered by name.
-    */
-  private def columnStatsSql(rel: String, cols: Seq[String],
-      ndv: String => String): String =
-    cols.map(c =>
-      s"""SELECT '$c' AS column_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
-    CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-    CAST(MIN($c) AS VARCHAR) AS min_value,
-    CAST(MAX($c) AS VARCHAR) AS max_value,
-    ${ndv(c)}
-  FROM $rel""").mkString("", "\n  UNION ALL\n", "\n  ORDER BY column_name")
-
-  /** TextAnalysis.normalizeText over `text`: NFC, then the control and
-    * zero-width characters stripped (SQL string literals are raw, so the
-    * regex escapes reach RE2 verbatim).
-    */
-  private val normalizeTextSql: String =
-    """regexp_replace(regexp_replace(nfc_normalize(text),
-         '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-         '[\x{200B}\x{200C}\x{200D}\x{FEFF}]', '', 'g')"""
-
-  /** g1's direct ordered collect — g1b's salted two-phase concat must be
-    * indistinguishable from it, so both are held to this oracle.
-    */
-  private val g1CollectSql: String =
-    """SELECT l_orderkey, COUNT(*) AS n_lines,
-       string_agg(CAST(l_linenumber AS VARCHAR), ',' ORDER BY l_linenumber) AS line_numbers
-       FROM lineitem GROUP BY 1 ORDER BY 1"""
-
-  /** s1/s1b ingest round trip: the files written from documents
-    * (doc_id < 200) must read back byte-identical, keyed by stem, from
-    * the text dir (its non-txt decoy must not appear) and the JSONL file
-    * alike.
-    */
-  private val s1ScanSql: String =
-    """SELECT doc_id, text FROM documents WHERE doc_id < 200
-       ORDER BY doc_id"""
-
-  /** mm6's decoded dimensions, pure functions of doc_id (the oracle can
-    * only match if the JDK codec actually parsed the rendered
-    * containers); mm6b's fused one-pass plan must be invisible.
-    */
-  private val mm6CodecSql: String =
-    """SELECT doc_id, 'png' AS format,
-       CAST(16 + (doc_id % 13) * 4 AS INT) AS width,
-       CAST(16 + (doc_id % 7) * 4 AS INT) AS height,
-       CAST(1 AS INT) AS n_frames,
-       CAST(24 AS INT) AS r_width, CAST(18 AS INT) AS r_height
-       FROM documents ORDER BY doc_id"""
-
-  /** The near-dup pair listings' precision-1.0 literal (cl2, dd6b, dd6c):
-    * the Spark side recomputes the violation counters from the two pair
-    * sets (anti-join + cosine equality), so any false-positive pair or
-    * scoring drift lands a nonzero counter and breaks the hash; has_pairs
-    * guards vacuity (an empty approximation yields 0 rows). dd6c's routed
-    * listing is exact-scored whichever branch the pair-mass probe picks.
-    */
-  private val pairContainmentSql: String =
-    """SELECT 1 AS has_pairs, CAST(0 AS BIGINT) AS n_missing,
-         CAST(0 AS BIGINT) AS n_cosine_mismatch"""
-
-  /** dc1's benchmark-decontamination report: 5-token shingle collisions
-    * between the corpus (doc_id % 10 <> 0) and the benchmark slice
-    * (% 10 = 0). dc3's Bloom-prefiltered plan has no false negatives and
-    * an exact verify, so it is held to this oracle too.
-    */
-  private def dc1DecontamSql: String =
-    s"""WITH ${benchShingleCtes()},
-       corp AS (SELECT * FROM sh WHERE doc_id % 10 <> 0),
-       sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_ngrams FROM corp GROUP BY 1),
-       hits AS (
-         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits
-         FROM corp JOIN bench USING (g) GROUP BY 1)
-       SELECT doc_id, n_hits, n_ngrams,
-         round(n_hits * 1.0 / n_ngrams, 4) AS overlap
-       FROM hits JOIN sz USING (doc_id) ORDER BY doc_id"""
-
-  /** aj1's oracle: DuckDB's native ASOF LEFT JOIN over micro-precision ts
-    * — for the union+window form and aj1b's salted prefix scan alike.
-    */
-  private val aj1AsofSql: String =
-    """WITH p AS (
-         SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-         FROM events WHERE event_type = 'purchase'),
-       s AS (
-         SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-         FROM events WHERE event_type = 'signup')
-       SELECT p.event_id, p.user_id, p.ts_us, p.value,
-         s.event_id AS asof_event_id, s.value AS asof_value
-       FROM p ASOF LEFT JOIN s
-         ON p.user_id = s.user_id AND p.ts_us >= s.ts_us
-       ORDER BY p.event_id"""
-
-  /** The 30-minute session split ev2/ev5/ev7 share: `prev_us` = the
-    * user's previous event time, and the running count of gaps over 30
-    * minutes (an event EXACTLY 30 minutes after the previous one stays in
-    * the session: session_window extends the window end inclusively,
-    * pinned by StreamingSpec's boundary case).
-    */
-  private val sessionPrevSql: String =
-    "lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us"
-
-  private val sessionIdSql: String =
-    """SUM(CASE WHEN prev_us IS NULL OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
-             OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"""
-
-  /** ev2's per-event session id — also ev2b's salted prefix scan and ev3's
-    * stateful form, which must both be invisible.
-    */
-  private val ev2SessionizeSql: String =
-    s"""WITH e AS (
-         SELECT user_id, event_id, ts, $sessionPrevSql
-         FROM events)
-       SELECT user_id, event_id,
-         CAST($sessionIdSql AS BIGINT) AS session_id
-       FROM e ORDER BY user_id, event_id"""
-
-  /** ev7: the native session_window gap-merge re-derived from ev2's split
-    * — also ev7b's salted assignment and ev7c's router on whichever
-    * branch the measured key share picks.
-    */
-  private val ev7SessionWindowSql: String =
-    s"""WITH e AS (
-         SELECT user_id, event_id, ts, value, $sessionPrevSql
-         FROM events),
-       s AS (
-         SELECT user_id, event_id, ts, value,
-           $sessionIdSql AS sid
-         FROM e)
-       SELECT user_id, MIN(ts) AS session_start,
-         MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-         CAST(COUNT(*) AS BIGINT) AS n_events,
-         round(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS DOUBLE), 4) AS total_value
-       FROM s GROUP BY user_id, sid
-       ORDER BY user_id, session_start"""
-
-  /** ev8's left-outer attribution (unmatched purchases carry -1
-    * sentinels); ev8b's binning must be invisible.
-    */
-  private val ev8AttributionSql: String =
-    """SELECT p.event_id AS purchase_id, p.user_id AS user_id,
-         COALESCE(c.event_id, -1) AS click_id,
-         COALESCE(epoch_us(p.ts) - epoch_us(c.ts), -1) AS gap_us
-       FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-       LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-         ON p.user_id = c.user_id
-         AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
-       ORDER BY purchase_id, click_id"""
-
-  /** ta19's derived-page template + full extraction chain as CTEs ending
-    * in `xs4(doc_id, h, t)` — h = the raw page, t = the extracted text.
-    * Shared verbatim by the ta19 oracle and the stream_ccingest oracle
-    * (patterns interpolated from the TextAnalysis constants).
-    */
-  private def htmlExtractCtes(src: String = "documents"): String = {
-    import graft.operators.TextAnalysis.{HtmlBlockCloseRe, HtmlCommentRe,
-      HtmlNlRunRe, HtmlNlSpaceRe, HtmlOuterWsRe, HtmlScriptRe,
-      HtmlSpaceRunRe, HtmlStyleRe, HtmlTagRe, HtmlTitleRe}
-    s"""xhtml AS (
-       SELECT doc_id,
-         '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
-         '</title><style type="text/css">body { color: #fff; }' ||
-         '</style><script type="text/javascript">var x = 1; ' ||
-         'if (x < 2) { x = "a&b"; }</script></head><body><!-- nav ' ||
-         CAST(doc_id AS VARCHAR) ||
-         ' --><div id="nav"><ul><li><a href="/home">Home</a></li>' ||
-         '<li><a href="/about">About&nbsp;Us</a></li></ul></div>' ||
-         '<h1>Corpus</h1><p>' || coalesce(text, '') ||
-         '</p><p>Fish &amp; Chips say &quot;hi&quot; to ' ||
-         '&lt;b&gt;bold&lt;/b&gt;</p><br/></body></html>' AS h
-       FROM $src),
-     xs1 AS (
-       SELECT doc_id, h,
-         regexp_replace(regexp_replace(regexp_replace(regexp_replace(h,
-           '$HtmlCommentRe', '', 'g'),
-           '$HtmlScriptRe', '', 'g'),
-           '$HtmlStyleRe', '', 'g'),
-           '$HtmlTitleRe', '', 'g') AS t
-       FROM xhtml),
-     xs2 AS (
-       SELECT doc_id, h,
-         regexp_replace(regexp_replace(t,
-           '$HtmlBlockCloseRe', chr(10), 'g'),
-           '$HtmlTagRe', '', 'g') AS t
-       FROM xs1),
-     xs3 AS (
-       SELECT doc_id, h,
-         replace(replace(replace(replace(replace(t,
-           '&nbsp;', ' '), '&quot;', '"'), '&lt;', '<'), '&gt;', '>'),
-           '&amp;', '&') AS t
-       FROM xs2),
-     xs4 AS (
-       SELECT doc_id, h,
-         regexp_replace(regexp_replace(regexp_replace(regexp_replace(t,
-           '$HtmlSpaceRunRe', ' ', 'g'),
-           '$HtmlNlSpaceRe', chr(10), 'g'),
-           '$HtmlNlRunRe', chr(10) || chr(10), 'g'),
-           '$HtmlOuterWsRe', '', 'g') AS t
-       FROM xs3)"""
+  lazy val registry: Seq[(String, Entry)] = {
+    val all = relationalEntries ++ textEntries ++ dedupEntries ++
+      similarityEntries ++ annRecallEntries ++ graphEntries ++
+      clusteringEntries ++ textAnalysisEntries ++ eventEntries ++
+      corpusJoinEntries ++ multimodalEntries ++ pipelineEntries
+    val repeated = all.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+    require(repeated.isEmpty,
+      s"registered more than once: ${repeated.toSeq.sorted.mkString(", ")}")
+    all
   }
 
-  private def gateCtes(src: String = "documents"): String = {
-    val en = TextAnalysis.StopwordMarkers("en").map(s => s"'$s'").mkString(", ")
-    val langs = TextAnalysis.StopwordMarkers.keys.toSeq.sorted
-    def hits(l: String) = {
-      val words = TextAnalysis.StopwordMarkers(l).map(s => s"'$s'").mkString(", ")
-      s"len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$words], x)))"
+  /** The driver's view of the registry: every name and its builder. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, e) => n -> e.build }.toMap
+
+  /** The DuckDB oracle of every entry that has one. */
+  lazy val oracleSql: Map[String, String] =
+    registry.collect { case (n, Entry(_, Some(sql))) => n -> sql }.toMap
+
+  /** Registry names from a comma-separated list, in list order. Fails
+    * fast on any unregistered name — a typo would otherwise select
+    * nothing, write no artifact and exit 0; the error is `what` followed
+    * by the unknown names.
+    */
+  def namedQueries(csv: String, what: String): Seq[String] = {
+    val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = names.filterNot(queries.contains).distinct.sorted
+    require(unknown.isEmpty, s"$what: ${unknown.mkString(",")}")
+    names
+  }
+
+  /** The dev-loop subset `SPARK_GRAFT_ONLY=name1,name2` selects for
+    * Verify and Bench; unset (as the driver runs them), the full
+    * registry.
+    */
+  def selectedQueries(): Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY").fold(queries) { csv =>
+      val names =
+        namedQueries(csv, "unknown SPARK_GRAFT_ONLY names").toSet
+      queries.filter { case (n, _) => names(n) }
     }
-    val hitCols = langs.map(l => s"${hits(l)} AS hits_$l").mkString(", ")
-    val maxExpr = s"greatest(${langs.map(l => s"hits_$l").mkString(", ")})"
-    val caseExpr = langs.map(l => s"WHEN hits_$l = m THEN '$l'").mkString(" ")
-    s"""cq AS (
-  SELECT doc_id, ${tok("text")} AS n_tokens, length(text) AS n_chars,
-    round(CASE WHEN ${tok("text")} = 0 THEN 0.0
-      ELSE len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$en], x))) * 1.0 / ${tok("text")} END, 4) AS stopword_ratio,
-    round(CASE WHEN length(text) = 0 THEN 0.0
-      ELSE (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) * 1.0 / length(text) END, 4) AS punct_ratio
-  FROM $src),
-cl AS (
-  SELECT doc_id, CASE WHEN m <= 0 THEN 'und' $caseExpr END AS lang_pred
-  FROM (SELECT doc_id, $hitCols, $maxExpr AS m FROM $src)),
-cgated AS (
-  SELECT d.doc_id, d.text, cl.lang_pred, cq.n_tokens, cq.n_chars, cq.stopword_ratio
-  FROM $src d JOIN cq USING (doc_id) JOIN cl USING (doc_id)
-  WHERE cl.lang_pred = 'en' AND cq.stopword_ratio >= 0.01
-    AND cq.n_tokens >= 5 AND cq.punct_ratio <= 0.30)"""
-  }
-
-  /** stream_curation oracle: exactly one survivor per distinct prefix
-    * fingerprint among gated docs — the count the streaming path must
-    * reproduce regardless of which group member arrived first.
-    */
-  private def streamCurationSql: String =
-    s"""WITH ${gateCtes()}
-SELECT CAST(COUNT(DISTINCT md5(substr(text, 1, 100))) AS BIGINT) AS n_curated
-FROM cgated"""
-
-  /** pipe_curation_incr oracle: odd ids = new batch, even ids = existing.
-    * Survivor rule (matching Curation.curateIncremental): gated, first
-    * in-batch per prefix fingerprint, fingerprint unseen in existing, and
-    * not in a near-dup component touching existing (else min-of-pure-new
-    * component). Same gate / shingle-jaccard / transitive-closure CTE
-    * fragments as the batch oracle.
-    */
-  private def curationIncrSql: String =
-    curationIncrSqlWith("doc_id % 2 = 1", "doc_id % 2 = 0")
-
-  /** The incremental-curation oracle parameterized on the new/existing
-    * split predicates — `pipe_curation_incr` splits on parity,
-    * `pipe_curation_snap` on the doc_id midpoint (the range-prunable
-    * form its snapshot reads skip files by).
-    */
-  private def curationIncrSqlWith(newPred: String, existPred: String)
-      : String = {
-    s"""WITH RECURSIVE ${gateCtes()},
-ngated AS (SELECT * FROM cgated WHERE $newPred),
-exist AS (SELECT doc_id, text FROM documents WHERE $existPred),
-nkeep AS (
-  SELECT md5(substr(text, 1, 100)) AS fp, MIN(doc_id) AS doc_id
-  FROM ngated GROUP BY 1),
-nkeep2 AS (
-  SELECT doc_id FROM nkeep
-  WHERE fp NOT IN (SELECT md5(substr(text, 1, 100)) FROM exist)),
-nexact AS (SELECT g.* FROM ngated g JOIN nkeep2 USING (doc_id)),
-uni AS (SELECT doc_id, text FROM nexact UNION ALL SELECT doc_id, text FROM exist),
-${jaccardComponentCtes("uni")},
-contam AS (SELECT DISTINCT component FROM comp WHERE $existPred),
-ulosers AS (
-  SELECT doc_id FROM comp WHERE component IN (SELECT component FROM contam)
-  UNION
-  SELECT doc_id FROM comp WHERE component <> doc_id)
-SELECT doc_id, lang_pred, n_tokens, n_chars, stopword_ratio
-FROM nexact WHERE doc_id NOT IN (SELECT doc_id FROM ulosers)
-ORDER BY doc_id"""
-  }
-
-  /** The exact-dedup + near-dup-closure CTE chain over `cgated` (needs
-    * [[gateCtes]]; recursive) — shared by the curation, funnel, and any
-    * future composed-curation oracles.
-    */
-  private def curationChainCtes: String =
-    s"""ckeep AS (
-  SELECT MIN(doc_id) AS doc_id FROM cgated GROUP BY md5(substr(text, 1, 100))),
-cexact AS (SELECT g.* FROM cgated g JOIN ckeep USING (doc_id)),
-${jaccardComponentCtes("cexact")},
-closers AS (SELECT doc_id FROM comp WHERE component <> doc_id)"""
-
-  private def curationSql: String = {
-    s"""WITH RECURSIVE ${gateCtes()},
-$curationChainCtes
-SELECT doc_id, lang_pred, n_tokens, n_chars, stopword_ratio
-FROM cexact WHERE doc_id NOT IN (SELECT doc_id FROM closers)
-ORDER BY doc_id"""
-  }
-
-  /** Funnel oracle: one row of per-stage survivor counts off the same CTE
-    * chain the curation oracle uses (a funnel that disagrees with the
-    * pipeline it describes is worse than none).
-    */
-  private def curationFunnelSql: String = {
-    s"""WITH RECURSIVE ${gateCtes()},
-$curationChainCtes
-SELECT
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_total,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM cl WHERE lang_pred = 'en') AS n_lang_pass,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM cgated) AS n_gate_pass,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM cexact) AS n_exact_keep,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM cexact
-     WHERE doc_id NOT IN (SELECT doc_id FROM closers)) AS n_curated"""
-  }
-
-  private def qualitySql: String = {
-    val en = TextAnalysis.StopwordMarkers("en").map(s => s"'$s'").mkString(", ")
-    s"""SELECT doc_id,
-       ${tok("text")} AS n_tokens,
-       length(text) AS n_chars,
-       round(CASE WHEN ${tok("text")} = 0 THEN 0.0
-         ELSE length(regexp_replace(text, '\\s', '', 'g')) * 1.0 / ${tok("text")} END, 4) AS avg_word_len,
-       round(CASE WHEN length(text) = 0 THEN 0.0
-         ELSE (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) * 1.0 / length(text) END, 4) AS punct_ratio,
-       round(CASE WHEN ${tok("text")} = 0 THEN 0.0
-         ELSE len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$en], x))) * 1.0 / ${tok("text")} END, 4) AS stopword_ratio,
-       round(CASE WHEN length(text) = 0 THEN 0.0
-         ELSE (length(text) - length(regexp_replace(text, '[A-Z]', '', 'g'))) * 1.0 / length(text) END, 4) AS upper_ratio
-       FROM documents ORDER BY doc_id"""
-  }
-
-  /** DuckDB mirror of [[TextAnalysis.gopherRules]] — same token/line
-    * derivations, ratios on the same grid, same thresholds.
-    */
-  private def gopherSql: String = {
-    val stops = TextAnalysis.GopherStopwords
-      .map(w => s"CAST(list_contains(lt, '$w') AS INT)").mkString(" + ")
-    s"""WITH pl AS (
-       SELECT doc_id, text || CASE WHEN doc_id % 2 = 0
-           THEN ' the be to of and that have with' ELSE '' END AS text
-       FROM documents),
-     g AS (
-       SELECT doc_id,
-         ${tok("text")} AS n_words,
-         string_split_regex(trim(text), '\\s+') AS toks,
-         string_split_regex(lower(trim(text)), '\\s+') AS lt,
-         string_split(text, chr(10)) AS lines,
-         length(regexp_replace(text, '\\s', '', 'g')) AS nonspace,
-         (length(text) - length(regexp_replace(text, '#', '', 'g')))
-           + (length(text) - length(regexp_replace(text, '…', '', 'g')))
-           + CAST((length(text)
-               - length(regexp_replace(text, '\\.\\.\\.', '', 'g'))) / 3
-             AS BIGINT) AS nsym
-       FROM pl),
-     s AS (
-       SELECT doc_id, n_words,
-         CASE WHEN n_words = 0 THEN 0.0 ELSE nonspace * 1.0 / n_words END AS mean_word_len,
-         CASE WHEN n_words = 0 THEN 0.0 ELSE nsym * 1.0 / n_words END AS symbol_ratio,
-         CASE WHEN len(lines) = 0 THEN 0.0 ELSE
-           len(list_filter(lines, l -> ends_with(rtrim(l), '...')
-             OR ends_with(rtrim(l), '…'))) * 1.0 / len(lines) END AS ellipsis_line_ratio,
-         CASE WHEN len(lines) = 0 THEN 0.0 ELSE
-           len(list_filter(lines, l -> starts_with(ltrim(l), '-')
-             OR starts_with(ltrim(l), '*') OR starts_with(ltrim(l), '•')
-             OR starts_with(ltrim(l), '‣') OR starts_with(ltrim(l), '▪')))
-           * 1.0 / len(lines) END AS bullet_line_ratio,
-         CASE WHEN n_words = 0 THEN 0.0 ELSE
-           len(list_filter(toks, w -> regexp_matches(w, '[\\p{L}]')))
-           * 1.0 / n_words END AS alpha_word_ratio,
-         CAST($stops AS INT) AS stop_hits
-       FROM g)
-     SELECT doc_id, n_words,
-       round(mean_word_len, 4) AS mean_word_len,
-       round(symbol_ratio, 4) AS symbol_ratio,
-       round(ellipsis_line_ratio, 4) AS ellipsis_line_ratio,
-       round(bullet_line_ratio, 4) AS bullet_line_ratio,
-       round(alpha_word_ratio, 4) AS alpha_word_ratio,
-       stop_hits,
-       CAST(n_words >= 50 AND n_words <= 100000 AS INT) AS pass_words,
-       CAST(mean_word_len >= 3.0 AND mean_word_len <= 10.0 AS INT) AS pass_word_len,
-       CAST(symbol_ratio <= 0.1 AS INT) AS pass_symbol,
-       CAST(ellipsis_line_ratio <= 0.3 AS INT) AS pass_ellipsis,
-       CAST(bullet_line_ratio <= 0.9 AS INT) AS pass_bullet,
-       CAST(alpha_word_ratio >= 0.8 AS INT) AS pass_alpha,
-       CAST(stop_hits >= 2 AS INT) AS pass_stopwords,
-       CAST(n_words >= 50 AND n_words <= 100000
-         AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-         AND symbol_ratio <= 0.1 AND ellipsis_line_ratio <= 0.3
-         AND bullet_line_ratio <= 0.9 AND alpha_word_ratio >= 0.8
-         AND stop_hits >= 2 AS INT) AS gopher_pass
-     FROM s ORDER BY doc_id"""
-  }
-
-  /** DuckDB mirror of the ta14 planted-URL corpus + [[TextAnalysis
-    * .urlSignals]] extraction + blocklist gate.
-    */
-  private def urlFilterSql: String =
-    s"""WITH p AS (
-       SELECT doc_id, lower(text || ' see https://' || source || '.example.'
-           || (['com','org','net'])[CAST(doc_id % 3 AS INT) + 1]
-           || '/p/' || CAST(doc_id AS VARCHAR)
-           || CASE WHEN doc_id % 7 = 0
-                THEN ' http://tracker.spam.bad/x' || CAST(doc_id AS VARCHAR)
-                ELSE '' END) AS t
-       FROM documents),
-     u AS (
-       SELECT doc_id,
-         regexp_extract_all(t, 'https?://[a-z0-9.-]+[a-z0-9](/[^\\s]*)?', 0) AS urls
-       FROM p),
-     h AS (
-       SELECT doc_id, CAST(len(urls) AS BIGINT) AS n_urls,
-         list_sort(list_distinct(list_transform(urls,
-           x -> regexp_extract(x, 'https?://([a-z0-9.-]+[a-z0-9])', 1)))) AS hosts
-       FROM u)
-     SELECT doc_id, n_urls,
-       array_to_string(hosts, ',') AS hosts_csv,
-       CAST(len(list_filter(hosts, x -> x = 'spam.bad'
-         OR ends_with(x, '.spam.bad'))) > 0 AS INT) AS blocked
-     FROM h ORDER BY doc_id"""
-
-  private def langIdSql: String = s"${langIdSqlOn("documents")} ORDER BY doc_id"
-
-  /** Shared qz6 signature CTE: the 32-bit-word sign packing of the 64-dim
-    * embeddings, exactly [[graft.operators.Quantize.signBits]].
-    */
-  private val signSigCte: String =
-    """sig AS (
-       SELECT vec_id,
-         [CAST(list_sum(list_transform(range(0, 32),
-            i -> CASE WHEN embedding[CAST(i + 1 AS INT)] >= 0
-              THEN CAST(POWER(2, i) AS BIGINT) ELSE 0 END)) AS BIGINT),
-          CAST(list_sum(list_transform(range(0, 32),
-            i -> CASE WHEN embedding[CAST(i + 33 AS INT)] >= 0
-              THEN CAST(POWER(2, i) AS BIGINT) ELSE 0 END)) AS BIGINT)] AS sig
-       FROM embeddings)"""
-
-  /** qz6's sign scan: [[signSigCte]], `q` = the vec_id < 5 query
-    * signatures, `hscored` (query_id, vec_id, hamming) = the popcount of
-    * the per-word XOR — integers end to end.
-    */
-  private def signHammingCtes: String =
-    s"""$signSigCte,
-       q AS (SELECT vec_id AS query_id, sig AS sig_q FROM sig WHERE vec_id < 5),
-       hscored AS (
-         SELECT q.query_id, c.vec_id,
-           CAST(list_sum(list_transform(list_zip(c.sig, q.sig_q),
-             p -> bit_count(xor(p[1], p[2])))) AS BIGINT) AS hamming
-         FROM sig c, q WHERE c.vec_id <> q.query_id)"""
-
-  /** FROM-clause body: `hscored`'s first `k` per query by (hamming ASC,
-    * vec_id ASC), numbered as `rank`.
-    */
-  private def hammingTopk(k: Int, rank: String): String =
-    s"""(
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY hamming ASC, vec_id ASC) AS $rank FROM hscored)
-       WHERE $rank <= $k"""
-
-  /** qz6b's two-stage scan: the integer Hamming shortlist `sl` (<= 100)
-    * then the exact cosine rerank `rr` of the shortlist rows only.
-    */
-  private def signRerankCtes: String =
-    s"""$signHammingCtes,
-       sl AS (SELECT query_id, vec_id FROM ${hammingTopk(100, "srank")}),
-       ${queryCte("fq")},
-       rr AS (
-         SELECT sl.query_id, sl.vec_id,
-           ${cos4("fq.eq", "c.embedding")} AS cosine
-         FROM sl
-         JOIN embeddings c ON sl.vec_id = c.vec_id
-         JOIN fq ON sl.query_id = fq.query_id)"""
-
-  /** qz5's 32-dim Matryoshka prefix `m` (list_slice is Spark's
-    * slice(_, 1, 32) — both inclusive 1-based).
-    */
-  private val matryoshkaCte: String =
-    """m AS (SELECT vec_id, list_slice(embedding, 1, 32) AS embedding
-                    FROM embeddings)"""
-
-  /** The ta2 lang-ID SELECT (no ORDER BY) parameterized on the source
-    * relation — reused verbatim as a CTE inside the pipe_ccnet oracle.
-    */
-  private def langIdSqlOn(rel: String): String = {
-    val langs = TextAnalysis.StopwordMarkers.keys.toSeq.sorted
-    def hits(l: String) = {
-      val words = TextAnalysis.StopwordMarkers(l).map(s => s"'$s'").mkString(", ")
-      s"len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> list_contains([$words], x)))"
-    }
-    val hitCols = langs.map(l => s"${hits(l)} AS hits_$l").mkString(", ")
-    val maxExpr = s"greatest(${langs.map(l => s"hits_$l").mkString(", ")})"
-    val caseExpr = langs.map(l => s"WHEN hits_$l = m THEN '$l'").mkString(" ")
-    s"""SELECT doc_id,
-       CASE WHEN m <= 0 THEN 'und' $caseExpr END AS lang_pred,
-       ${langs.map(l => s"hits_$l").mkString(", ")}
-       FROM (SELECT doc_id, $hitCols, $maxExpr AS m FROM $rel)"""
-  }
 }

@@ -88,7 +88,6 @@ object Text {
   }
 
   def charCount(s: String): Int = s.length
-  def wordCount(s: String): Int = tokenCount(s)
 
   /** C3: token truncation — keep first k whitespace tokens (reference:
     * runners/run_summarization_ollama.py:9-13 uses tokenizer encode/decode;

@@ -30,16 +30,6 @@ object udfs {
     (c: Column) => f(c)
   }
 
-  /** C1: single-separator character split => ARRAY<STRING>. */
-  def characterSplitUdf(chunkSize: Int, overlap: Int, separator: String = "\n\n")
-      : Column => Column = {
-    val f = udf { (text: String) =>
-      if (text == null) Array.empty[String]
-      else Splitter.characterSplit(text, chunkSize, overlap, separator).toArray
-    }
-    (c: Column) => f(c)
-  }
-
   /** F7: model-name safe-encode (':' and '.' to '_'). */
   val safeNameUdf = udf { (s: String) => if (s == null) null else Text.safeName(s) }
 

@@ -25,24 +25,23 @@ package graft.llm
 final case class HttpJudge(
     endpoint: String,
     model: String,
-    critiqueTemplate: Prompts.Template = Prompts.critique,
     timeoutMillis: Long = 600000L,
     passMarkers: Seq[String] = Seq(Judge.NoIssues, "không có vấn đề"),
-    maxCritiqueTokens: Int = 512,
     maxRetries: Int = 3,
     backoffMillis: Long = 500L) extends Judge {
 
   @transient private lazy val call =
     HttpGenerate(endpoint, model, timeoutMillis, maxRetries, backoffMillis)
 
-  /** One generate call ([[HttpGenerate]]); None once retries are
-    * exhausted, the status is non-retryable, or the response is empty.
+  /** One generate call ([[HttpGenerate]]) capped at 512 output tokens;
+    * None once retries are exhausted, the status is non-retryable, or the
+    * response is empty.
     */
   private def generate(prompt: String): Option[String] =
-    call(prompt, maxCritiqueTokens).filter(_.nonEmpty)
+    call(prompt, 512).filter(_.nonEmpty)
 
   override def critique(summary: String, source: String): String =
-    generate(critiqueTemplate.fill(
+    generate(Prompts.critique.fill(
       "summary" -> summary, "original_chunks" -> source)) match {
       case Some(raw) =>
         val lower = raw.toLowerCase(java.util.Locale.ROOT)

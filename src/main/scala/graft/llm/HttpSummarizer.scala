@@ -27,9 +27,7 @@ import graft.core.Text
 final case class HttpSummarizer(
     endpoint: String,
     model: String,
-    template: Prompts.Template = Prompts.map,
     timeoutMillis: Long = 600000L, // the reference's 600 s ceiling
-    cleanOutput: Boolean = true,
     maxRetries: Int = 3,
     backoffMillis: Long = 500L) extends Summarizer {
 
@@ -37,7 +35,7 @@ final case class HttpSummarizer(
     HttpGenerate(endpoint, model, timeoutMillis, maxRetries, backoffMillis)
 
   override def summarize(text: String, maxTokens: Int): String =
-    generate(template.fill("content" -> text, "docs" -> text), maxTokens)
-      .map(out => if (cleanOutput) Text.cleanThinking(out) else out)
+    generate(Prompts.map.fill("content" -> text, "docs" -> text), maxTokens)
+      .map(Text.cleanThinking)
       .getOrElse("") // per-case failure isolation after retries
 }

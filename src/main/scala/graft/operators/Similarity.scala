@@ -676,15 +676,4 @@ object Similarity {
       .select(col("n_exact"), col("n_approx"),
         col("n_hit"), r4(col("n_hit") / col("n_exact")).as("recall"))
   }
-
-  /** All-pairs cosine above a threshold between two (small) labeled sets —
-    * the generated-vs-reference semantic-similarity join from the eval
-    * layer, exposed as a standalone operator.
-    */
-  def cosineJoin(left: DataFrame, right: DataFrame, threshold: Double): DataFrame =
-    left.select(col("vec_id").as("left_id"), col("embedding").as("emb_l"))
-      .join(right.select(col("vec_id").as("right_id"), col("embedding").as("emb_r")))
-      .select(col("left_id"), col("right_id"),
-        r4(cosineSimilarityF(col("emb_l"), col("emb_r"))).as("cosine"))
-      .filter(col("cosine") >= threshold)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -29,13 +29,6 @@ object EventStreams {
   final case class SessionState(lastSessionId: Long, lastEventUs: Long)
 
   final case class SessionedEvent(user_id: Long, event_id: Long, session_id: Long)
-
-  /** Open a parquet directory as a file stream with an explicit schema
-    * (streaming readers cannot infer).
-    */
-  def readEventStream(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
 
   /** EV1 (streaming form): watermarked tumbling-window counts/sums per
     * event type. In batch mode `withWatermark` is a no-op and this computes
