@@ -230,7 +230,7 @@ object Main {
           // scan, only they rewrite, the rest byte-copy untouched
           rejectPartitionedInput(in, "--recluster")
           val (cols, df, range) = twoLongCols(spec, "--recluster")
-          val files = df.inputFiles.map(u => new java.net.URI(u).getPath).toSeq
+          val files = Sinks.inputPaths(df)
           val outP = java.nio.file.Paths.get(out)
           java.nio.file.Files.createDirectories(outP)
           val tmp = java.nio.file.Files.createTempDirectory(
@@ -270,8 +270,7 @@ object Main {
             .filter(col("__n") < threshold)
             .select("__file").collect()
             .map(r => new java.net.URI(r.getString(0)).getPath).toSet
-          val bigs = df.inputFiles
-            .map(u => new java.net.URI(u).getPath).toSet -- smalls
+          val bigs = Sinks.inputPaths(df).toSet -- smalls
           val outP = java.nio.file.Paths.get(out)
           java.nio.file.Files.createDirectories(outP)
           bigs.toSeq.sorted.foreach { f =>
@@ -601,6 +600,23 @@ object Main {
         .withColumn("doc_id", xxhash64(col("doc_name")))
     else spark.read.parquet(path).select(col("doc_id").cast("long"), col("text"))
 
+  /** `docs` summarized by the named strategy (the `--approach` values)
+    * with `summarizer` at `cfg`; an unknown name fails loudly.
+    */
+  private def summarize(approach: String, summarizer: graft.llm.Summarizer,
+      cfg: PipelineConfig, docs: DataFrame): DataFrame = {
+    val strategies = new Strategies(summarizer, cfg = cfg)
+    approach match {
+      case "truncated" => strategies.truncated(docs)
+      case "mapreduce" => strategies.mapReduce(docs)
+      case "critique" => strategies.mapReduceCritique(docs)
+      case "iterative" => strategies.iterative(docs)
+      case "hierarchical" =>
+        new Hierarchical(summarizer, cfg).summarize(TreeOps.synthesize(docs))
+      case other => sys.error(s"unknown approach: $other")
+    }
+  }
+
   private[app] def runPipeline(opts: Map[String, String]): Unit = {
     val approach = opts.getOrElse("approach", "mapreduce")
     val out = opts.getOrElse("out", sys.error("--out required"))
@@ -651,7 +667,6 @@ object Main {
             case _ => ExtractiveSummarizer
           }
         }
-        val strategies = new Strategies(summarizer, cfg = cfg)
         val tag = model.map(m => s" [$m]").getOrElse("")
         val dest = model match {
           case Some(m) => s"$out/${graft.core.Text.safeName(m)}"
@@ -661,16 +676,8 @@ object Main {
         // collapse loops run jobs while the plan is built, the rest runs
         // inside the write
         timed(s"$approach$tag summarize + write summaries") {
-          val summaries = approach match {
-            case "truncated" => strategies.truncated(docs)
-            case "mapreduce" => strategies.mapReduce(docs)
-            case "critique" => strategies.mapReduceCritique(docs)
-            case "iterative" => strategies.iterative(docs)
-            case "hierarchical" =>
-              new Hierarchical(summarizer, cfg).summarize(TreeOps.synthesize(docs))
-            case other => sys.error(s"unknown approach: $other")
-          }
-          Sinks.writeSummaryTable(summaries, s"$dest/summaries")
+          Sinks.writeSummaryTable(summarize(approach, summarizer, cfg, docs),
+            s"$dest/summaries")
         }
         if (opts.contains("write-files"))
           timed(s"write per-doc files$tag")(Sinks.writeSummaryFiles(
@@ -696,17 +703,10 @@ object Main {
         case None => all.orderBy(col("doc_id")).limit(1)
       }
       require(one.count() == 1, "demo needs exactly one document")
-      val cfg = PipelineConfig()
-      val strategies = new Strategies(ExtractiveSummarizer, cfg = cfg)
       val ref = one.select(col("doc_id"), col("text").as("ref"))
-      val results = Seq(
-        "truncated" -> strategies.truncated(one),
-        "mapreduce" -> strategies.mapReduce(one),
-        "critique" -> strategies.mapReduceCritique(one),
-        "iterative" -> strategies.iterative(one),
-        "hierarchical" ->
-          new Hierarchical(ExtractiveSummarizer, cfg).summarize(TreeOps.synthesize(one)))
-      val table = results.map { case (name, df) =>
+      val table = Seq("truncated", "mapreduce", "critique", "iterative",
+          "hierarchical").map { name =>
+        val df = summarize(name, ExtractiveSummarizer, PipelineConfig(), one)
         Metrics.pairMetrics(
           df.withColumnRenamed("summary", "gen").join(ref, "doc_id"))
           .withColumn("approach", lit(name))

@@ -4,8 +4,8 @@ package graft.llm
   * runners/run_summarization_ollama_mapreduce.py:79-96, ..._iterative.py:106-147,
   * ..._critique.py:118-201, ..._hierarchical.py:83-115). Template text is
   * config data, not engine logic: these are neutral English equivalents
-  * with the same slot structure ({content}, {docs}, {existing_answer},
-  * {context}, {summary}, {original_chunks}, {critique}); deployments
+  * with the same slot structure ({content}, {summary}, {original_chunks},
+  * {current_summary}, {critique}, {reference_content}); deployments
   * substitute their own (e.g. Vietnamese) wording without code changes.
   */
 object Prompts {
@@ -24,11 +24,6 @@ object Prompts {
   val map: Template = Template(
     "Write a concise summary of the following content.\n\n{content}\n\nSummary:")
 
-  /** Q2 reduce stage: merge partial summaries. */
-  val reduce: Template = Template(
-    "The following are partial summaries of one document:\n\n{docs}\n\n" +
-      "Combine them into a single consolidated summary.")
-
   /** Q3 critique stage: judge a summary against its sources. */
   val critique: Template = Template(
     "Review this summary against its source sections. Answer 'no issues' " +
@@ -40,16 +35,4 @@ object Prompts {
     "Rewrite the summary to address the critique, using the sources.\n\n" +
       "Current summary:\n{current_summary}\n\nCritique:\n{critique}\n\n" +
       "Sources:\n{reference_content}")
-
-  /** Q4 initial / refine steps of iterative summarization. */
-  val initial: Template = Template(
-    "Write a concise summary of the following content.\n\n{content}\n\nSummary:")
-  val refineIterative: Template = Template(
-    "Refine the existing summary with the additional context. Keep it " +
-      "concise.\n\nExisting summary:\n{existing_answer}\n\nNew context:\n{context}")
-
-  /** Q5 polish pass: grammar/coherence review of the final text. */
-  val polish: Template = Template(
-    "Review the following summary for grammar and coherence and return an " +
-      "improved version.\n\n{content}")
 }

@@ -22,13 +22,11 @@ object Dedup {
   // compiled once — the shingle/window tokenizers run per row in UDFs
   private val wsSplitRe = java.util.regex.Pattern.compile("\\s+")
 
-  /** md5-hex prefix as a positive long (15 hex chars = 60 bits, fits). */
-  private def md5Long(c: Column, seed: Int): Column =
-    conv(substring(md5(concat(lit(s"s$seed:"), c)), 1, 15), 16, 10).cast("long")
-
   /** First 60 bits of md5("s<seed>:" ++ s) as a long — bit-identical to
-    * [[md5Long]] (15 hex nibbles == first 8 digest bytes >>> 4) but computed
-    * on raw digest bytes, skipping the hex-string render + base-16 reparse.
+    * the SQL form `CAST(conv(substring(md5('s<seed>:' || s), 1, 15), 16,
+    * 10) AS BIGINT)` (15 hex nibbles == first 8 digest bytes >>> 4) but
+    * computed on raw digest bytes, skipping the hex-string render + base-16
+    * reparse.
     */
   private def md5LongJvm(md: java.security.MessageDigest, seed: Int, s: String): Long = {
     md.reset()

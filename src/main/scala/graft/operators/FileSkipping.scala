@@ -289,6 +289,22 @@ object FileSkipping {
     (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
   }
 
+  /** The skipping gates' probe box inside a [[keyRange]] plane: the
+    * second quarter of each key's span, (a1, a2, b1, b2) in floor
+    * arithmetic — the Scala twin of `OracleSqlGen.quarterBoxCtes`.
+    */
+  def quarterBox(range: KeyBox): KeyBox = {
+    val (aLo, aHi, bLo, bHi) = range
+    (aLo + (aHi - aLo) / 4, aLo + (aHi - aLo) / 2,
+      bLo + (bHi - bLo) / 4, bLo + (bHi - bLo) / 2)
+  }
+
+  /** Rows whose (`aCol`, `bCol`) lies inside `box`, bounds inclusive. */
+  def inBox(aCol: String, bCol: String, box: KeyBox): Column = {
+    val (a1, a2, b1, b2) = box
+    col(aCol).between(a1, a2) && col(bCol).between(b1, b2)
+  }
+
   /** Files a min/max-pruning scan of `df` must open for `box`: the
     * files whose footer box over (`aCol`, `bCol`) — recomputed from the
     * rows, one grouped pass — intersects it. The independent measure the

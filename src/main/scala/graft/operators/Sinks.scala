@@ -271,6 +271,12 @@ object Sinks {
     */
   private[graft] def fileName(p: String): String = p.replaceAll(".*/", "")
 
+  /** The local paths of the files `df` reads: its `inputFiles` URIs,
+    * decoded.
+    */
+  private[graft] def inputPaths(df: DataFrame): Seq[String] =
+    df.inputFiles.toSeq.map(u => new java.net.URI(u).getPath)
+
   /** [[fileName]]'s rule as a column over the per-file stats key `__file`. */
   private[graft] def fileNameCol: Column =
     regexp_replace(col("__file"), ".*/", "")
@@ -485,8 +491,7 @@ object Sinks {
         val smallPaths = paths.filter(p => smallNames(fileName(p)))
         spark.read.parquet(smallPaths.sorted: _*)
           .coalesce(1).write.parquet(s"$scratch/c")
-        val newPath = spark.read.parquet(s"$scratch/c")
-          .inputFiles.map(u => new java.net.URI(u).getPath).head
+        val newPath = inputPaths(spark.read.parquet(s"$scratch/c")).head
         val mergedRow = TableQuality.mergeStatRows(
             stats.filter(col("__file").cast("string")
               .isin(smallNames.toSeq: _*)),
@@ -527,8 +532,7 @@ object Sinks {
         data.schema, aCol, bCol, range, s"$scratch/opt", numFiles)
       if (detected.isEmpty) None
       else {
-        val optPaths = spark.read.parquet(s"$scratch/opt")
-          .inputFiles.map(u => new java.net.URI(u).getPath).toSeq
+        val optPaths = inputPaths(spark.read.parquet(s"$scratch/opt"))
         val optRead = spark.read.schema(data.schema)
           .parquet(optPaths.sorted: _*)
         val statCols = statColsOf(stats)
@@ -679,7 +683,7 @@ object Sinks {
             // append manifest: carried files contribute their committed
             // (n, xor) without a rescan; only the new files are scanned
             val newFiles = parquetFilesIn(staging)
-              .filterNot(p => carriedNames(p.replaceAll(".*/", "")))
+              .filterNot(p => carriedNames(fileName(p)))
             val (nNew, xNew) = scanManifest(newFiles)
             (nPrev + nNew, xPrev ^ xNew)
         }

@@ -11,14 +11,11 @@ import graft.strategy.Strategies
   * incremental behavior is S6 skip-if-exists; with a file-source stream +
   * checkpoint, exactly-once per input file falls out of the engine).
   *
-  * Two shapes:
-  *  - [[summarizeStream]]: the stateless truncated strategy (Q1) applied
-  *    per row — a pure streaming projection, runs in any output mode.
-  *  - [[mapReducePerBatch]]: the full map-reduce strategy (driver
-  *    fixed-point collapse included) via `foreachBatch` — the idiomatic
-  *    Spark way to run a batch-defined pipeline incrementally: each
-  *    micro-batch of newly-arrived documents goes through the complete
-  *    chunk -> map -> collapse -> reduce plan and appends its summaries.
+  * [[mapReducePerBatch]] runs the full map-reduce strategy (driver
+  * fixed-point collapse included) via `foreachBatch` — the idiomatic Spark
+  * way to run a batch-defined pipeline incrementally: each micro-batch of
+  * newly-arrived documents goes through the complete chunk -> map ->
+  * collapse -> reduce plan and appends its summaries.
   */
 object CorpusStreams {
 
@@ -62,12 +59,6 @@ object CorpusStreams {
     val (base, glob) = tableStreamPath(spark, dir, table)
     readDocStream(spark, base, schema, maxFilesPerTrigger, glob)
   }
-
-  /** Q1 over a stream: stateless per-row summarize — no watermark, no
-    * state store; scales as a projection.
-    */
-  def summarizeStream(docs: DataFrame, strategies: Strategies): DataFrame =
-    strategies.truncated(docs)
 
   /** Idempotent batch write: each micro-batch lands in its own
     * `batch_id=<id>` partition directory with overwrite semantics. A batch

@@ -210,9 +210,8 @@ object SnapshotIngest {
   private def newFileStats(spark: SparkSession, stage: java.nio.file.Path,
       carriedNames: Set[String], schema: StructType, statCols: Seq[String],
       keyCol: String): DataFrame = {
-    val newPaths = spark.read.parquet(stage.toString).inputFiles
-      .map(u => new java.net.URI(u).getPath)
-      .filterNot(p => carriedNames(Sinks.fileName(p))).toSeq
+    val newPaths = Sinks.inputPaths(spark.read.parquet(stage.toString))
+      .filterNot(p => carriedNames(Sinks.fileName(p)))
     FileSkipping.fileStatsKeyed(
         spark.read.schema(schema).parquet(newPaths.sorted: _*),
         statCols, keyCol)
